@@ -821,14 +821,11 @@ final class TxTable private (spark: SparkSession, dir: String,
     val cdir = dataDir.resolve(commit)
     val conf = new org.apache.hadoop.conf.Configuration()
     val zcols = zoneMapColumns.filter(_.nonEmpty)
-    // One footer open per freshly-written file. A merge's task-parallel
-    // write leaves MANY small files per touched bucket (each shuffle
-    // task writes its slice — deliberately: forcing one-file-per-bucket
-    // here would add a shuffle to every write, which compactPartial
-    // exists to avoid), and a SERIAL driver loop at ~10 ms per open was
-    // the single largest term of a small merge's wall time (measured
-    // 2.2 s of a 4 s commit at sf0.1). The opens are independent
-    // metadata reads — fan them out like the connector's planning pass.
+    // One footer open per freshly-written file — one per touched
+    // (bucket × partition value) cell, since writeCommit's write is
+    // bucket-aligned. An open costs ~10 ms serially and the opens are
+    // independent metadata reads — fan them out like the connector's
+    // planning pass (a day-partitioned commit touches many cells).
     val files = bucketsIn(commit).flatMap { b =>
       val bdir = cdir.resolve(s"_b=$b")
       parquetFilesUnder(bdir).map(f => (b, bdir, f))
@@ -919,7 +916,15 @@ final class TxTable private (spark: SparkSession, dir: String,
     }
   }
 
-  private def writeCommit(df: DataFrame, buckets: Int): String = {
+  /** THE data-write path: every verb that writes rows (create, merge,
+    * mergeClauses, update, deleteWhere, delete, applyChanges,
+    * overwriteAll, every compaction) lays `df` out under a fresh commit
+    * dir, writes the bucket sidecars and returns the commit name — the
+    * caller publishes it. `sortKeys` are a compaction's clustering keys
+    * (sort, Z-order or Hilbert); every other commit sorts by the
+    * declared cluster-on-write columns. */
+  private def writeCommit(df: DataFrame, buckets: Int,
+                          sortKeys: Seq[org.apache.spark.sql.Column] = Nil): String = {
     // `_b` and `_p` are RESERVED physical-layout names (bucket and
     // hidden-partition dir columns). A logical column with either name
     // would be silently overwritten by withColumn below and then
@@ -935,33 +940,45 @@ final class TxTable private (spark: SparkSession, dir: String,
     // Partition-value tier: the declared transform adds a derived `_p`
     // dir level inside each bucket (hidden partitioning — `_p` is never
     // part of the logical schema; readers recover values from paths).
+    // OPTIMIZE migrates the whole table to the CURRENT transform in one
+    // rewrite; the other verbs migrate the buckets they touch.
     val pcol = partitionColumn(df)
     val laid = pcol.map { case (c, _) => laid0.withColumn("_p", c) }.getOrElse(laid0)
     val partCols = if (pcol.isDefined) Seq("_b", "_p") else Seq("_b")
-    // OPTIMIZED WRITE for partition-transformed commits (Delta's
-    // optimized-write move, applied only where the layout needs it):
-    // without it, every shuffle task writes one file per (bucket × day)
-    // combination it holds — O(tasks × buckets × days) small files per
-    // commit (measured: a full-table day-partitioned merge at sf0.1
-    // wrote ~15k files and the file creates dominated the commit wall
-    // time). One extra shuffle keyed by the layout dirs caps a commit at
-    // O(buckets × days) files; the parallel unit becomes the (bucket,
-    // day) cell, which IS the layout's read-side parallel unit. FLAT
-    // tables keep the shuffle-free task-parallel write — their
-    // amplification is only O(tasks × buckets), which compactPartial
-    // exists to fold (forcing a shuffle on every flat write would cost
-    // more than it saves; see the compactPartial rationale).
-    val laidOpt =
-      if (pcol.isDefined) laid.repartition(partCols.map(col): _*) else laid
-    // Cluster-on-write: sort this commit's rows within each task by
-    // (dir cols, cluster cols) so every written file's row groups carry
-    // tight footer stats on the cluster dimension — and the dynamic
-    // partition writer streams one open file at a time. Materialized
-    // column refs only (cheap comparator — see compactClustered's note).
-    val cluster = clusterColumns.filter(df.columns.contains)
+    // BUCKET-ALIGNED WRITE (Delta's optimized write, on every commit):
+    // one shuffle keyed by the layout dirs puts each (bucket × partition
+    // value) cell in exactly one task, so a commit writes exactly one
+    // file per touched cell. Without it every write task writes one file
+    // into every cell it holds — O(tasks × cells) files per commit
+    // (measured: a 500-row merge into 16 buckets wrote ~101 files, a
+    // full-table day-partitioned merge at sf0.1 ~15k), and every later
+    // sidecar footer read, scan-planning probe, lookup and `_b=` mkdir
+    // pays per file. The parallel unit becomes the cell, which IS the
+    // layout's read-side parallel unit.
+    val aligned = laid.repartition(partCols.map(col): _*)
+    // A hash partition can hold several cells, so the sort leads with
+    // the dir columns (cell-local ordering — the dynamic partition writer
+    // then streams one open file at a time); flat unclustered commits
+    // skip it. Sort keys are MATERIALIZED as temp columns before the sort
+    // and dropped before the write: SortExec's radix prefix covers only
+    // the FIRST key (_b — constant within a cell), so every comparison
+    // falls through to the full comparator, which re-evaluates ordering
+    // EXPRESSIONS per comparison — for the ~30-op Morton code that made
+    // the Z-order rewrite O(n log n · exprCost) (measured 10 s for a
+    // 600k-row bucket vs 1.5 s sorting a plain column). A materialized
+    // key is an attribute read in the comparator: evaluated once per ROW.
+    val keys =
+      if (sortKeys.nonEmpty) sortKeys
+      else clusterColumns.filter(df.columns.contains).map(col)
     val shaped =
-      if (cluster.isEmpty && pcol.isEmpty) laidOpt
-      else laidOpt.sortWithinPartitions((partCols.map(col) ++ cluster.map(col)): _*)
+      if (keys.isEmpty && pcol.isEmpty) aligned
+      else {
+        val keyNames = keys.indices.map(i => s"__graft_cluster_$i")
+        keyNames.zip(keys)
+          .foldLeft(aligned) { case (d, (nm, e)) => d.withColumn(nm, e) }
+          .sortWithinPartitions((partCols.map(col) ++ keyNames.map(col)): _*)
+          .drop(keyNames: _*)
+      }
     shaped.write.options(bloomOptions)
       .partitionBy(partCols: _*).parquet(dataDir.resolve(commit).toString)
     pcol.foreach { case (_, spec) =>
@@ -1864,13 +1881,14 @@ final class TxTable private (spark: SparkSession, dir: String,
     * holds exactly ONE file inside ONE commit directory, and publish the
     * result as a new version — a metadata-only change for readers (same
     * rows, so `diff(v, compact())` is empty by construction, which the
-    * property spec asserts). Why it exists: every merge writes its touched
-    * buckets through the task-parallel shuffle, so a long-lived table
-    * accumulates many part-files per bucket and scatters its manifest
-    * across many commit dirs — the small-file problem that degrades scan
-    * throughput at 100 TB (per-file open cost dominates). The repartition
-    * on the bucket column puts each bucket in exactly one task, so the
-    * partitionBy write emits one file per bucket. Runs through the same
+    * property spec asserts). Why it exists: every commit writes its
+    * touched buckets into a fresh commit dir, so a long-lived table
+    * scatters its manifest across many commit dirs (one per bucket at
+    * worst), and deletion vectors, SQL row-level writes and
+    * `maxRecordsPerFile` caps leave extra files and tombstones to fold.
+    * Compaction gathers every bucket behind one commit dir, one file
+    * per bucket (per partition value under a declared transform),
+    * through the same bucket-aligned [[writeCommit]]. Runs through the same
     * optimistic publish loop as merge: losing a race to a concurrent
     * writer rebases on the new snapshot (compacting stale data would
     * silently drop the winner's rows otherwise). Old versions stay
@@ -1944,7 +1962,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       // Round-robin interleave: bit j of cell i → position j·n + i. Each
       // term isolates one source bit and shifts it to its slot — plain
       // codegen'd bitwise ops, evaluated ONCE per row because the caller
-      // materializes the key before the sort (compactClustered's note).
+      // materializes the key before the sort (writeCommit's note).
       val z = zorderBy.zipWithIndex.map { case (cn, i) =>
         val ci = cell(rows(cn), mins(i), maxs(i))
         (0 until cellBits).map { j =>
@@ -2017,40 +2035,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       // DV-applied read: compaction FOLDS deletion vectors — the output
       // manifest is all-clean.
       val rows = readBuckets(m, m.keySet, cur, defaultsAt(v), aliasesAt(v))
-      val commit = s"t-${UUID.randomUUID().toString.take(12)}"
-      val pcol = partitionColumn(rows)
-      val laid0 = rows.withColumn("_b", bucketColFor(n)).repartition(col("_b"))
-      // OPTIMIZE migrates the whole table to the CURRENT partition
-      // transform in one rewrite (merge migrates incrementally).
-      val laid = pcol.map { case (c, _) => laid0.withColumn("_p", c) }.getOrElse(laid0)
-      val partCols = if (pcol.isDefined) Seq("_b", "_p") else Seq("_b")
-      // A hash partition can hold several buckets, so the cluster sort
-      // leads with the dir columns (bucket-local ordering); plain
-      // compaction skips the sort entirely. The cluster keys are
-      // MATERIALIZED as temp columns before the sort and dropped before
-      // the write: SortExec's radix prefix covers only the FIRST key
-      // (_b — constant within a partition), so every comparison falls
-      // through to the full comparator, which re-evaluates ordering
-      // EXPRESSIONS per comparison — for the ~30-op Morton code that
-      // made the Z-order rewrite O(n log n · exprCost) (measured 10 s
-      // for a 600k-row bucket vs 1.5 s sorting a plain column). A
-      // materialized key is an attribute read in the comparator:
-      // evaluated once per ROW.
-      val clusterExprs = clusterOf(rows)
-      val clustered =
-        if (clusterExprs.isEmpty && pcol.isEmpty) laid
-        else {
-          val keyNames = clusterExprs.indices.map(i => s"__graft_cluster_$i")
-          keyNames.zip(clusterExprs)
-            .foldLeft(laid) { case (df, (nm, e)) => df.withColumn(nm, e) }
-            .sortWithinPartitions((partCols.map(col) ++ keyNames.map(col)): _*)
-            .drop(keyNames: _*)
-        }
-      clustered.write.options(bloomOptions)
-        .partitionBy(partCols: _*).parquet(dataDir.resolve(commit).toString)
-      pcol.foreach { case (_, spec) =>
-        Files.writeString(dataDir.resolve(commit).resolve("_pspec.txt"), spec) }
-      writeBucketSidecars(commit)
+      val commit = writeCommit(rows, n, clusterOf(rows))
       val lines = bucketsIn(commit).sorted.map(b => s"$b\t$commit")
       val op = if (newBuckets > 0 && newBuckets != bucketCountAt(v)) "rebucket" else "compact"
       if (publish(v + 1, n, op, lines)) {
@@ -2300,16 +2285,18 @@ final class TxTable private (spark: SparkSession, dir: String,
   }
 
   /** INCREMENTAL compaction — `compact()` for tables too big to ever
-    * rewrite whole: only buckets that are actually degraded (carrying
-    * deletion vectors, or fragmented into ≥ `minFiles` part files) are
+    * rewrite whole: only buckets that are actually degraded are
     * rewritten; every healthy bucket's manifest pointer carries forward
-    * untouched. At 100 TB this is the only viable OPTIMIZE: cost is
-    * O(degraded buckets), the common case after a run of small merges
-    * and MoR deletes, and repeated invocations converge to a no-op
+    * untouched. Every data commit already writes one file per
+    * (bucket × partition value) cell, so what degrades a bucket is
+    * deletion vectors (merge-on-read deletes), or a cell fragmented into
+    * ≥ `minFiles` part files — by a SQL UPDATE/MERGE INTO (the row-level
+    * writer writes per task), a `spark.sql.files.maxRecordsPerFile`
+    * cap, or a commit older than bucket-aligned writes. Cost is
+    * O(degraded buckets), and repeated invocations converge to a no-op
     * (returns the current version unchanged when nothing qualifies).
-    * Rewritten buckets come back clean (DVs folded) and single-file
-    * (repartition on the bucket column). Same optimistic publish loop
-    * as every writer. */
+    * Rewritten buckets come back clean (DVs folded) and one file per
+    * cell. Same optimistic publish loop as every writer. */
   def compactPartial(minFiles: Int = 2): Long = {
     var committed = -1L
     while (committed < 0) {
@@ -2318,25 +2305,18 @@ final class TxTable private (spark: SparkSession, dir: String,
       val m = manifest(v)
       val n = bucketCountAt(v)
       val cur = schemaAt(v)
+      // Files are counted per cell (leaf dir): a partitioned bucket holds
+      // one file per partition value, which is not fragmentation.
       val degraded = m.filter { case (b, r) =>
         r.dvs.nonEmpty ||
-          parquetFilesUnder(Paths.get(bucketPath(r.data, b))).size >= minFiles
+          parquetFilesUnder(Paths.get(bucketPath(r.data, b)))
+            .groupBy(_.getParent).values.exists(_.size >= minFiles)
       }
       if (degraded.isEmpty) return v
-      val rows = readBuckets(m, degraded.keySet, cur, defaultsAt(v), aliasesAt(v))
-      val commit = s"t-${UUID.randomUUID().toString.take(12)}"
       // Same bucket count -> the rewrite reproduces exactly the degraded
-      // bucket ids; repartition puts each in one task = one file (one
-      // per partition value under a declared transform).
-      val pcol0 = partitionColumn(rows)
-      val laid0 = rows.withColumn("_b", bucketColFor(n)).repartition(col("_b"))
-      val laidP = pcol0.map { case (c, _) => laid0.withColumn("_p", c) }.getOrElse(laid0)
-      laidP.write.options(bloomOptions)
-        .partitionBy((if (pcol0.isDefined) Seq("_b", "_p") else Seq("_b")): _*)
-        .parquet(dataDir.resolve(commit).toString)
-      pcol0.foreach { case (_, spec) =>
-        Files.writeString(dataDir.resolve(commit).resolve("_pspec.txt"), spec) }
-      writeBucketSidecars(commit)
+      // bucket ids, one file per (bucket × partition value) cell.
+      val commit = writeCommit(
+        readBuckets(m, degraded.keySet, cur, defaultsAt(v), aliasesAt(v)), n)
       // Degraded buckets are REPLACED (a bucket whose DVs deleted every
       // row drops out of the manifest entirely, like a full-delete merge).
       val next = (m -- degraded.keySet) ++

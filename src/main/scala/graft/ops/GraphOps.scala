@@ -476,23 +476,25 @@ object GraphOps {
     } finally graft.core.TxTable.drop(dir)
   }
 
-  /** OPTIMIZE demo — the lakehouse small-file compaction pass end-to-end:
-    * create → three disjoint-key MERGEs (each scatters its touched
-    * buckets into a new commit dir through the task-parallel write) →
-    * `compact()` → read back. The merges key on the name's last digit, so
+  /** OPTIMIZE demo — the lakehouse compaction pass end-to-end: create →
+    * three disjoint-key MERGEs (each writes its touched buckets, one
+    * file per bucket, into a new commit dir, so the manifest ends up
+    * scattered across commit dirs) → `compact()` → read back. The
+    * merges key on the name's last digit, so
     * the final state is a pure function of the base table and the oracle
     * recomputes it relationally — a hash match certifies compaction
     * changed LAYOUT, never data. `compacted_single_commit` carries the
     * physical proof through the hash channel (every live bucket behind
     * one commit dir); the property spec additionally asserts file-count
-    * shrinkage, an empty CDC diff across the compaction version, and
+    * shrinkage (on merges fragmented by a file-size cap), an empty CDC
+    * diff across the compaction version, and
     * intact pre-compaction time travel. Measures the write path per
     * invocation by design (s12's class). */
   def txCompaction(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_s20").toString
     try {
       val base = Graph.nodes(spark, sfDir).select("name", "house", "acctbal")
-      // 8 buckets: the demo table is tiny; fewer buckets = fewer files per
+      // 4 buckets: the demo table is tiny; fewer buckets = fewer files per
       // commit across the 5 commits this write-path demo measures. The
       // layout proof (one commit dir after compact) is bucket-count-free.
       val t = graft.core.TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
@@ -525,7 +527,7 @@ object GraphOps {
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_s21").toString
     try {
       val base = Graph.nodes(spark, sfDir).select("name", "house", "acctbal")
-      // 8 buckets, same rationale as s20 (write-path demo on a tiny table).
+      // 4 buckets, same rationale as s20 (write-path demo on a tiny table).
       val t = graft.core.TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
       val v = t.deleteMergeOnRead(
         base.filter(substring(col("name"), -1, 1) === "7").select("name"))
@@ -3194,7 +3196,8 @@ object GraphOps {
   }
 
   /** Incremental-OPTIMIZE demo: after a MoR delete (DV'd buckets) and a
-    * merge, `compactPartial` rewrites ONLY the degraded buckets — three
+    * merge (whose bucket-aligned write leaves its buckets single-file),
+    * `compactPartial` rewrites ONLY the degraded buckets — three
     * certificates ride the hash: `healthy_untouched` (every bucket that
     * was clean and single-file keeps its exact manifest pointer),
     * `dvs_folded` (no deletion vector survives anywhere), and

@@ -185,9 +185,13 @@ private[graft] object GraftDataSource {
       java.nio.file.Paths.get(java.net.URI.create(p)).toString
     else p
 
+  /** TIMESTAMP_NTZ is INT64 micros like TIMESTAMP, but stays out of
+    * every statistics tier (row-group skipping, zone maps, MIN/MAX and
+    * partition pushdown): their value conversions are written for
+    * TIMESTAMP instants only, so NTZ predicates and aggregates scan. */
   def supported(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | DoubleType | StringType | BooleanType |
-         DateType | TimestampType => true
+         DateType | TimestampType | TimestampNTZType => true
     case _ => false
   }
 
@@ -2558,7 +2562,7 @@ private[graft] object GraftVectorReader {
   def vectorizable(code: Int, dt: DataType): Boolean = (code, dt) match {
     case (GraftDataSource.Absent, _) => true // constant vector via initBatch
     case (GraftDataSource.I32, IntegerType | DateType) => true
-    case (GraftDataSource.I64, LongType | TimestampType) => true
+    case (GraftDataSource.I64, LongType | TimestampType | TimestampNTZType) => true
     case (GraftDataSource.I64Ms, TimestampType) => true
     case (GraftDataSource.I96, TimestampType) => true
     case (GraftDataSource.F64, DoubleType) => true
@@ -2712,7 +2716,9 @@ final class GraftVectorRowReader(p: GraftInputPartition)
           val emit = new Array[Any](p.emitCount + meta)
           var i = 0
           while (i < p.emitCount) {
-            emit(i) = view.get(i, types(i)) match {
+            // A columnar row's typed get does not check nulls: a NULL
+            // long/int/timestamp slot would read back as 0.
+            emit(i) = if (view.isNullAt(i)) null else view.get(i, types(i)) match {
               case u: UTF8String => u.copy()
               case other => other
             }
@@ -2802,7 +2808,7 @@ final class GraftPartitionReader(p: GraftInputPartition)
       case (GraftDataSource.I32, LongType) => g.getInteger(idx, 0).toLong
       case (GraftDataSource.I32, IntegerType) => g.getInteger(idx, 0)
       case (GraftDataSource.I32, DateType) => g.getInteger(idx, 0)
-      case (GraftDataSource.I64, TimestampType) => g.getLong(idx, 0)
+      case (GraftDataSource.I64, TimestampType | TimestampNTZType) => g.getLong(idx, 0)
       case (GraftDataSource.I64Ms, TimestampType) =>
         // TIMESTAMP(MILLIS)-annotated INT64: Catalyst wants micros.
         java.lang.Math.multiplyExact(g.getLong(idx, 0), 1000L)

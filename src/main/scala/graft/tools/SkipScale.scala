@@ -136,9 +136,9 @@ object SkipScale {
           Seq("event_id"), numBuckets = 8)
         pt.setPartitioning("days(ts)")
         pt.merge(ev)
-        // The merge's task-parallel write leaves O(tasks × days) small
-        // files; a real table compacts — one task per bucket, one file
-        // per (bucket × day), CONSTANT file count across scale.
+        // The merge ran under the file-size cap set above, so its
+        // (bucket × day) cells hold several files; a real table compacts
+        // — one file per (bucket × day), CONSTANT file count across scale.
         spark.conf.unset("spark.sql.files.maxRecordsPerFile")
         pt.compact()
         println(s"[skipscale] $tag events day layout built")

@@ -946,9 +946,17 @@ class PropertySpec extends AnyFunSuite {
       val base = (0 until 40).map(i => f"K$i%02d" -> i.toLong)
       val t = graft.core.TxTable.create(spark, dir, base.toDF("k", "v"), Seq("k"), numBuckets = 8)
       // Fragment: three merges, each scattering touched buckets into a
-      // fresh commit dir through the task-parallel write.
-      (1 to 3).foreach(i => t.merge(
+      // fresh commit dir, written one row per file (a merge's write is
+      // bucket-aligned, so only a file-size cap splits a bucket).
+      val maxRec = "spark.sql.files.maxRecordsPerFile"
+      val maxRecBefore = spark.conf.getOption(maxRec)
+      spark.conf.set(maxRec, "1")
+      try (1 to 3).foreach(i => t.merge(
         base.filter(_._1.endsWith(i.toString)).map { case (k, v) => (k, v + 100L * i) }.toDF("k", "v")))
+      finally maxRecBefore match {
+        case Some(v) => spark.conf.set(maxRec, v)
+        case None => spark.conf.unset(maxRec)
+      }
       val preV = t.version
       val pre = t.snapshot().as[(String, Long)].collect().toMap
       val (preCommits, preFiles) = t.layoutStats()
@@ -964,6 +972,86 @@ class PropertySpec extends AnyFunSuite {
       assert(t.snapshotAt(preV).as[(String, Long)].collect().toMap == pre,
         "pre-compaction time travel intact")
     } finally graft.core.TxTable.drop(dir)
+  }
+
+  test("TxTable writes are bucket-aligned: every data verb leaves one file per live (bucket × day) cell") {
+    import spark.implicits._
+    type Model = Map[String, (Long, String)] // k -> (v, day)
+    def day(i: Int) = s"2024-01-0${i % 3 + 1}"
+    def rows(m: Seq[(String, (Long, String))]) =
+      m.map { case (k, (v, d)) => (k, v, d) }.toDF("k", "v", "ds")
+        .withColumn("d", to_date(col("ds"))).drop("ds")
+    def keys(ks: String*) = ks.toDF("k")
+    def run(partitioned: Boolean): Unit = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_tx_aligned").toString
+      try {
+        var model: Model =
+          (0 until 40).map(i => f"K$i%02d" -> (i.toLong, day(i))).toMap
+        val t =
+          if (!partitioned) graft.core.TxTable.create(spark, dir, rows(model.toSeq),
+            Seq("k"), numBuckets = 8)
+          else {
+            val e = graft.core.TxTable.create(spark, dir, rows(Nil), Seq("k"), numBuckets = 8)
+            e.setPartitioning("days(d)")
+            e
+          }
+        def check(verb: String): Unit = {
+          val snap = t.snapshot().select(col("k"), col("v"), col("d").cast("string"))
+            .as[(String, Long, String)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+          assert(snap == model, s"$verb: snapshot diverged from the model")
+          val cells = rows(model.toSeq)
+            .select(pmod(xxhash64(col("k")), lit(8)).as("b"), col("d"))
+          val liveBuckets = cells.select("b").distinct().count()
+          assert(t.dataPointers(t.version).size == liveBuckets,
+            s"$verb: manifest must hold exactly the live buckets")
+          val expected = if (partitioned) cells.distinct().count() else liveBuckets
+          assert(t.layoutStats()._2 == expected,
+            s"$verb: ${t.layoutStats()._2} files, expected one per live cell ($expected)")
+        }
+        if (partitioned) t.merge(rows(model.toSeq))
+        check("create")
+        // merge: ten updates that move their rows to another day, five inserts.
+        val mb = (0 until 10).map(i => f"K$i%02d" -> (i + 500L, day(i + 1))) ++
+          (40 until 45).map(i => f"K$i%02d" -> (i.toLong, day(i)))
+        t.merge(rows(mb)); model ++= mb
+        check("merge")
+        // mergeClauses: delete K13 (old v = 13), update where new_v > v,
+        // insert unmatched rows with even v.
+        val cb = (10 until 20).map(i =>
+          f"K$i%02d" -> ((if (i % 2 == 0) 2000L + i else i - 100L), day(i))) ++
+          (45 until 49).map(i => f"K$i%02d" -> (i.toLong, day(i)))
+        t.mergeClauses(rows(cb), "new_v > v", "v = 13", "v % 2 = 0")
+        cb.foreach { case (k, nv) =>
+          model.get(k) match {
+            case Some((13L, _)) => model -= k
+            case Some(old) => if (nv._1 > old._1) model += k -> nv
+            case None => if (nv._1 % 2 == 0) model += k -> nv
+          }
+        }
+        check("mergeClauses")
+        t.update("v > 1000", Map("v" -> "v + 1"))
+        model = model.map { case (k, (v, d)) => k -> ((if (v > 1000) v + 1 else v), d) }
+        check("update")
+        t.deleteWhere("v % 5 = 0")
+        model = model.filter(_._2._1 % 5 != 0)
+        check("deleteWhere")
+        val dk = (20 until 25).map(i => f"K$i%02d")
+        t.delete(keys(dk: _*)); model --= dk
+        check("delete")
+        val ups = Seq("K25" -> (3025L, day(0)), "K26" -> (3026L, day(1)), "K60" -> (60L, day(2)))
+        t.applyChanges(rows(ups), keys("K25", "K28", "K29"))
+        model = model -- Seq("K28", "K29") ++ ups
+        check("applyChanges")
+        t.deleteMergeOnRead(keys("K31", "K32", "K33")); model --= Seq("K31", "K32", "K33")
+        t.compactPartial()
+        check("compactPartial")
+        model = (100 until 130).map(i => s"K$i" -> (i.toLong, day(i))).toMap
+        t.overwriteAll(rows(model.toSeq))
+        check("overwriteAll")
+      } finally graft.core.TxTable.drop(dir)
+    }
+    run(partitioned = false)
+    run(partitioned = true)
   }
 
   test("TxTable restore: metadata-only rollback, schema reverts, history stays travelable") {

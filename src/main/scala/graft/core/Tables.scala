@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Lazy accessors for the driver's relational corpus (`TESTDATA.md`).
@@ -51,24 +53,7 @@ object Tables {
     footerRowCountAt(s"$sfDir/$name.parquet")
 
   /** Same, for an arbitrary parquet file or directory path. */
-  def footerRowCountAt(path: String): Long = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val p = java.nio.file.Paths.get(path)
-    val files: Seq[java.nio.file.Path] =
-      if (java.nio.file.Files.isDirectory(p)) {
-        val s = java.nio.file.Files.list(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
-        } finally s.close()
-      } else Seq(p)
-    files.map { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toString), conf))
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
+  def footerRowCountAt(path: String): Long = footers(path).map(FileMeta.rowCount).sum
 
   /** EXACT max of an INT64 column from parquet footer statistics, or None
     * when any row group lacks them (caller falls back to a scan). Integer
@@ -76,33 +61,31 @@ object Tables {
     * binary/string stats — so when present this is the same number a
     * max() job computes, minus the scan. */
   def footerMaxLong(sfDir: String, name: String, column: String): Option[Long] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val p = java.nio.file.Paths.get(s"$sfDir/$name.parquet")
-    val files: Seq[java.nio.file.Path] =
-      if (java.nio.file.Files.isDirectory(p)) {
-        val s = java.nio.file.Files.list(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
-        } finally s.close()
-      } else Seq(p)
-    import scala.jdk.CollectionConverters._
-    val maxes = files.flatMap { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toString), conf))
-      try r.getFooter.getBlocks.asScala.map { bl =>
-        bl.getColumns.asScala
-          .find(_.getPath.toDotString == column)
-          .map(_.getStatistics)
-          .filter(st => st != null && st.hasNonNullValue)
-          .flatMap(st => st.genericGetMax match {
-            case l: java.lang.Long => Some(l.longValue)
-            case _ => None
-          })
-      }.toList finally r.close()
-    }
+    val maxes = footers(s"$sfDir/$name.parquet").flatMap(_.getBlocks.asScala.map { bl =>
+      bl.getColumns.asScala
+        .find(_.getPath.toDotString == column)
+        .map(_.getStatistics)
+        .filter(st => st != null && st.hasNonNullValue)
+        .flatMap(st => st.genericGetMax match {
+          case l: java.lang.Long => Some(l.longValue)
+          case _ => None
+        })
+    })
     if (maxes.nonEmpty && maxes.forall(_.isDefined)) Some(maxes.flatten.max)
     else None
+  }
+
+  /** The footers of a parquet file, or of a directory's top-level
+    * `.parquet` files, through the per-JVM footer cache. */
+  private def footers(path: String): Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata] = {
+    val p = java.nio.file.Paths.get(path)
+    val files =
+      if (!java.nio.file.Files.isDirectory(p)) Seq(p)
+      else {
+        val s = java.nio.file.Files.list(p)
+        try s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+        finally s.close()
+      }
+    files.map(f => FileMeta.footer(f.toString))
   }
 }

@@ -166,15 +166,15 @@ final class TxTable private (spark: SparkSession, dir: String,
     // settles all its buckets. Commits are bounded by history length,
     // never data size.
     // Commit dirs are IMMUTABLE once published (copy-on-write: rewrites
-    // mint new dirs, vacuum deletes unreferenced ones) — their write-time
-    // schema can be cached process-wide instead of re-probed by a driver
-    // footer read on EVERY snapshot/merge of an evolved table (measured:
-    // ~50-100 ms per distinct commit dir per read on the defaults/widen
-    // path).
+    // mint new, randomly named dirs; vacuum deletes unreferenced ones) —
+    // their write-time schema lives in the per-JVM metadata cache instead
+    // of being re-probed by a driver footer read on EVERY snapshot/merge
+    // of an evolved table (measured: ~50-100 ms per distinct commit dir
+    // per read on the defaults/widen path).
     def commitSchema(path: String): org.apache.spark.sql.types.StructType =
-      TxTable.commitSchemaCache.computeIfAbsent(
-        Paths.get(path).getParent.toString,
-        _ => spark.read.parquet(path).schema)
+      FileMeta.cached[org.apache.spark.sql.types.StructType](
+        "s:" + Paths.get(path).getParent, s => 256L + 128L * s.length)(
+        Some(spark.read.parquet(path).schema)).get
     // Which defaulted columns a commit dir's files physically LACK. A
     // column counts as present if ANY of its physical names (current or
     // pre-rename alias) is in the footer.
@@ -819,29 +819,24 @@ final class TxTable private (spark: SparkSession, dir: String,
     * count; the scan path refuses metadata counts there anyway). */
   private def writeBucketRowCounts(commit: String): Unit = {
     val cdir = dataDir.resolve(commit)
-    val conf = new org.apache.hadoop.conf.Configuration()
     val zcols = zoneMapColumns.filter(_.nonEmpty)
     // One footer open per freshly-written file — one per touched
     // (bucket × partition value) cell, since writeCommit's write is
-    // bucket-aligned. An open costs ~10 ms serially and the opens are
-    // independent metadata reads — fan them out like the connector's
-    // planning pass (a day-partitioned commit touches many cells).
+    // bucket-aligned — fanned out like the connector's planning pass (a
+    // day-partitioned commit touches many cells). The reads go through
+    // the footer cache, so the first scan after this commit finds them.
     val files = bucketsIn(commit).flatMap { b =>
       val bdir = cdir.resolve(s"_b=$b")
       parquetFilesUnder(bdir).map(f => (b, bdir, f))
     }
     val stats = TxTable.parMap(files) { case (b, bdir, f) =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toString), conf))
-      try {
-        // Keyed by bucket-RELATIVE path: partitioned commits repeat the
-        // same part-file base name in every _p dir.
-        val rel = bdir.relativize(f).toString
-        val lines = if (zcols.isEmpty) Nil
-          else TxTable.zoneMapLines(rel, r.getFooter, zcols)
-        (b, bdir, rel, r.getRecordCount, lines)
-      } finally r.close()
+      val footer = FileMeta.footer(f.toString)
+      // Keyed by bucket-RELATIVE path: partitioned commits repeat the
+      // same part-file base name in every _p dir.
+      val rel = bdir.relativize(f).toString
+      val lines = if (zcols.isEmpty) Nil
+        else TxTable.zoneMapLines(rel, footer, zcols)
+      (b, bdir, rel, FileMeta.rowCount(footer), lines)
     }
     stats.groupBy(_._1).foreach { case (_, perBucket) =>
       val bdir = perBucket.head._2
@@ -1051,7 +1046,7 @@ final class TxTable private (spark: SparkSession, dir: String,
         bucketsIn(commit).map(_ -> BucketRef(commit, Nil))
       val lines = next.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
       if (publish(h + 1, n, op, lines)) {
-        Files.writeString(logDir.resolve(f"schema-v${h + 1}%08d.ddl"), outSchemaDdl)
+        writeSchemaRecord(h + 1, outSchemaDdl)
         resolved = h + 1
       } else publishRetries.incrementAndGet() // lost again: re-check vs new head
     }
@@ -1068,6 +1063,20 @@ final class TxTable private (spark: SparkSession, dir: String,
     present.nonEmpty &&
       readBuckets(m, present, schemaAt(v), defaultsAt(v), aliasesAt(v))
         .filter(coalesce(expr(where), lit(false))).limit(1).count() > 0
+  }
+
+  /** Record version `v`'s schema (`schema-v*.ddl`, read by [[schemaAt]]).
+    * Written after the version's publish, so it goes through a rename: a
+    * concurrent reader of the new head — a loser re-checking the schema
+    * in [[resolveDisjointPublish]] — finds either no record or the whole
+    * DDL, never the empty file a plain write exposes between its create
+    * and its write. A writer that dies in between leaves a `.tmp-` file
+    * for vacuum. */
+  private def writeSchemaRecord(v: Long, ddl: String): Unit = {
+    val tmp = logDir.resolve(s".tmp-${UUID.randomUUID()}")
+    Files.writeString(tmp, ddl)
+    Files.move(tmp, logDir.resolve(f"schema-v$v%08d.ddl"),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Publish `lines` as version `v` under layout `buckets` — atomic
@@ -1301,7 +1310,7 @@ final class TxTable private (spark: SparkSession, dir: String,
         bucketsIn(commit).map(_ -> BucketRef(commit, Nil))
       val lines = next.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
       if (publish(v + 1, n, "merge-clauses", lines)) {
-        Files.writeString(logDir.resolve(f"schema-v${v + 1}%08d.ddl"), cur.toDDL)
+        writeSchemaRecord(v + 1, cur.toDDL)
         committed = v + 1
       } else { // lost the race: try the disjoint-buckets metadata retry
         publishRetries.incrementAndGet()
@@ -1357,7 +1366,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       val lines = next.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
       updatePrePublishHook()
       if (publish(v + 1, n, "update", lines)) {
-        Files.writeString(logDir.resolve(f"schema-v${v + 1}%08d.ddl"), cur.toDDL)
+        writeSchemaRecord(v + 1, cur.toDDL)
         committed = v + 1
       } else { // lost the race: try the disjoint-buckets metadata retry —
         // WITH the read-set predicate: UPDATE read every bucket, so a
@@ -1466,7 +1475,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     require(publish(v + 1, n, "replace", lines),
       s"concurrent commit while publishing the row-level operation at v${v + 1} " +
         "— re-run the statement against the new snapshot")
-    Files.writeString(logDir.resolve(f"schema-v${v + 1}%08d.ddl"), cur.toDDL)
+    writeSchemaRecord(v + 1, cur.toDDL)
     v + 1
   }
 
@@ -1502,7 +1511,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       val lines = bucketsIn(commit).sorted
         .map(b => fmt(b, BucketRef(commit, Nil)))
       if (publish(v + 1, n, "overwrite", lines, newHwm)) {
-        Files.writeString(logDir.resolve(f"schema-v${v + 1}%08d.ddl"), cur.toDDL)
+        writeSchemaRecord(v + 1, cur.toDDL)
         committed = v + 1
       } else {
         // A full replacement conflicts with EVERY concurrent commit —
@@ -1534,7 +1543,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       val lines = next.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
       updatePrePublishHook()
       if (publish(v + 1, n, "delete-where", lines)) {
-        Files.writeString(logDir.resolve(f"schema-v${v + 1}%08d.ddl"), cur.toDDL)
+        writeSchemaRecord(v + 1, cur.toDDL)
         committed = v + 1
       } else { // lost the race: disjoint retry WITH the read-set predicate
         publishRetries.incrementAndGet()
@@ -1631,7 +1640,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       if (publish(v + 1, n, "delete-mor",
           next.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) })) {
         // A DV delete never changes the logical schema.
-        Files.writeString(logDir.resolve(f"schema-v${v + 1}%08d.ddl"), schemaAt(v).toDDL)
+        writeSchemaRecord(v + 1, schemaAt(v).toDDL)
         committed = v + 1
       } else {
         // Lost the commit race: drop the losing DV dir, rebase, retry.
@@ -1726,7 +1735,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       if (publish(v + 1, n, op, lines, newHwm)) {
         // Record this version's logical schema (evolution is widening-only;
         // a delete carries the current schema forward unchanged).
-        Files.writeString(logDir.resolve(f"schema-v${v + 1}%08d.ddl"), out.schema.toDDL)
+        writeSchemaRecord(v + 1, out.schema.toDDL)
         committed = v + 1
       } else {
         // Lost the commit race: if every winner touched only DISJOINT
@@ -2039,7 +2048,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       val lines = bucketsIn(commit).sorted.map(b => s"$b\t$commit")
       val op = if (newBuckets > 0 && newBuckets != bucketCountAt(v)) "rebucket" else "compact"
       if (publish(v + 1, n, op, lines)) {
-        Files.writeString(logDir.resolve(f"schema-v${v + 1}%08d.ddl"), cur.toDDL)
+        writeSchemaRecord(v + 1, cur.toDDL)
         committed = v + 1
       } else { // lost the race
         publishRetries.incrementAndGet()
@@ -2081,7 +2090,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       if (publish(v + 1, bucketCountAt(v), s"drop-$colName", lines)) {
         val narrowed = org.apache.spark.sql.types.StructType(
           cur.fields.filterNot(_.name == colName))
-        Files.writeString(logDir.resolve(f"schema-v${v + 1}%08d.ddl"), narrowed.toDDL)
+        writeSchemaRecord(v + 1, narrowed.toDDL)
         committed = v + 1
       }
     }
@@ -2127,7 +2136,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       val lines = m.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
       if (publish(v + 1, bucketCountAt(v), s"add-$colName", lines)) {
         val widened = org.apache.spark.sql.types.StructType(cur.fields :+ field)
-        Files.writeString(logDir.resolve(f"schema-v${v + 1}%08d.ddl"), widened.toDDL)
+        writeSchemaRecord(v + 1, widened.toDDL)
         val next = defaultsAt(v) + (colName -> defaultSql)
         Files.writeString(logDir.resolve(f"defaults-v${v + 1}%08d.txt"),
           next.toSeq.sorted.map { case (c, e) => s"$c\t$e" }.mkString("\n"))
@@ -2204,7 +2213,7 @@ final class TxTable private (spark: SparkSession, dir: String,
         val widenedSchema = org.apache.spark.sql.types.StructType(
           cur.fields.map(f =>
             if (f.name == colName) f.copy(dataType = to) else f))
-        Files.writeString(logDir.resolve(f"schema-v${v + 1}%08d.ddl"),
+        writeSchemaRecord(v + 1,
           widenedSchema.toDDL)
         val next = widenedAt(v) + (colName ->
           (from +: widenedAt(v).getOrElse(colName, Nil)).distinct)
@@ -2257,7 +2266,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       if (publish(v + 1, bucketCountAt(v), s"rename-$oldName-$newName", lines)) {
         val renamed = org.apache.spark.sql.types.StructType(
           cur.fields.map(f => if (f.name == oldName) f.copy(name = newName) else f))
-        Files.writeString(logDir.resolve(f"schema-v${v + 1}%08d.ddl"), renamed.toDDL)
+        writeSchemaRecord(v + 1, renamed.toDDL)
         // The alias chain follows the logical column: rename a→b then b→c
         // leaves c resolving through [b, a], in recency order.
         val moved = (aliases - oldName) +
@@ -2323,7 +2332,7 @@ final class TxTable private (spark: SparkSession, dir: String,
         bucketsIn(commit).map(_ -> BucketRef(commit, Nil))
       val lines = next.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
       if (publish(v + 1, n, "compact-partial", lines)) {
-        Files.writeString(logDir.resolve(f"schema-v${v + 1}%08d.ddl"), cur.toDDL)
+        writeSchemaRecord(v + 1, cur.toDDL)
         committed = v + 1
       } else { // lost the race
         publishRetries.incrementAndGet()
@@ -2356,7 +2365,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       val head = version
       // The restored version's LAYOUT travels with its manifest too.
       if (publish(head + 1, bucketCountAt(v), s"restore-v$v", lines)) {
-        Files.writeString(logDir.resolve(f"schema-v${head + 1}%08d.ddl"), ddl)
+        writeSchemaRecord(head + 1, ddl)
         committed = head + 1
       }
     }
@@ -2457,7 +2466,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       require(head == base,
         s"non-fast-forward: main advanced $base -> $head since branch '$name' forked")
       if (publish(head + 1, n, s"publish-$name", lines)) {
-        Files.writeString(logDir.resolve(f"schema-v${head + 1}%08d.ddl"), ddl)
+        writeSchemaRecord(head + 1, ddl)
         // DDL staged on the branch (addColumn/renameColumn) publishes
         // with it: the branch head's column metadata becomes main's.
         val d = b.defaultsAt(bv)
@@ -2598,13 +2607,6 @@ final class TxTable private (spark: SparkSession, dir: String,
 }
 
 object TxTable {
-
-  /** Write-time schema per (immutable) commit dir — see readBuckets'
-    * commitSchema. Bounded: one StructType per commit dir ever probed
-    * through the defaults/widen read path in this process. */
-  private[core] val commitSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, org.apache.spark.sql.types.StructType]()
 
   /** Default bucket-tier bloom sidecar size: 2^20 bits = 128 KiB per
     * (bucket × column) — ~1% FPP at 100k distinct values per bucket.
@@ -2837,8 +2839,12 @@ object TxTable {
                                   bits: Int): org.apache.spark.sql.Column =
     graft.functions.HilbertIndex(x0.cast("long"), y0.cast("long"), bits)
 
-  /** Driver-side metadata fan-out (the connector's parMap, shared shape):
-    * independent footer opens cost ~10 ms each serially. */
+  /** Driver-side metadata fan-out: independent footer opens run in
+    * parallel on the global pool (one task per item, at most one per
+    * core). Callers hand it ALL of a pass's files at once — the scan's
+    * planning, the commit's sidecar pass, the COUNT/MIN/MAX pushdown —
+    * so a many-file pass costs one footer's latency × files / cores,
+    * not one fan-out per bucket. */
   private[graft] def parMap[A, B](items: Seq[A])(f: A => B): Seq[B] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global

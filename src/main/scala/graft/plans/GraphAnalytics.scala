@@ -422,8 +422,12 @@ object GraphAnalytics {
     * the peeling shape GraphX analytics pipelines use for core/shell
     * filtering of web and citation graphs. Edges are pure arithmetic on
     * contiguous nids; the only shuffles are the full-block semi-join and
-    * the peel's own degree passes. */
+    * the peel's own degree passes. The census (≤ FamilyMod × 5 rows)
+    * returns as a local relation, and every RDD the call persisted is
+    * released before it returns. */
   def corpusKCore(spark: SparkSession, sfDir: String): DataFrame = {
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet.toSet
     val mod = Graph.FamilyMod.toLong
     val B = 4L
     val base = Graph.nodes(spark, sfDir)
@@ -451,7 +455,6 @@ object GraphAnalytics {
         .rdd.coalesce(8).map(r => Edge(r.getLong(0), r.getLong(1), 1)), 0,
       edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
       vertexStorageLevel = StorageLevel.MEMORY_AND_DISK).cache()
-    val sc = spark.sparkContext
     // Coreness = the peel level that dropped the vertex, minus one: peel
     // at k ascending, diff the survivor sets. 4 levels suffice (max
     // coreness 3 by construction; the guard labels any 4-core remnant).
@@ -471,13 +474,25 @@ object GraphAnalytics {
       g = peeled
     }
     val all = acc.union(g.vertices.keys.map(v => (v, 4)))
-    val out = spark.createDataFrame(all.map { case (v, c) => (v % mod, c) })
+    val census = spark.createDataFrame(all.map { case (v, c) => (v % mod, c) })
       .toDF("residue", "coreness")
       .groupBy("residue", "coreness")
       .agg(count(lit(1)).as("n_nodes"))
       .orderBy("residue", "coreness")
-      .localCheckpoint()
-    g.unpersist(blocking = false)
+    val out = spark.createDataFrame(census.collectAsList(), census.schema)
+    // The peel's graphs, GraphX's shipped-vertex views and the per-level
+    // dropped sets all sit in the census' lineage; release the ones this
+    // call persisted (a caller's own persisted inputs stay).
+    val seen = scala.collection.mutable.Set.empty[Int]
+    val stack = scala.collection.mutable.Stack[org.apache.spark.rdd.RDD[_]](all, g.edges)
+    while (stack.nonEmpty) {
+      val r = stack.pop()
+      if (seen.add(r.id)) {
+        if (!persistedBefore(r.id) && r.getStorageLevel != StorageLevel.NONE)
+          r.unpersist(blocking = false)
+        r.dependencies.foreach(d => stack.push(d.rdd))
+      }
+    }
     out
   }
 

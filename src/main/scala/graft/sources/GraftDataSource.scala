@@ -4,12 +4,10 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
 import org.apache.spark.sql.SparkSession
@@ -98,10 +96,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * which remains the exact-fallback row path for DV'd buckets (the
   * anti-join drops individual rows), change-feed partitions (synthesized
   * metadata columns), empty projections, and any file/type pairing the
-  * vectorized reader can't serve. Planning probes all footers in
-  * PARALLEL and ships each file's projected parquet schema with its
-  * partition, so executors never re-read footers; planned partitions are
-  * cached per runtime-filter state (AQE re-asks several times). The scan
+  * vectorized reader can't serve. Planning resolves every chosen file's
+  * footer in ONE parallel fan-out over the whole scan, through the
+  * per-JVM footer cache ([[graft.core.FileMeta]], keyed by file identity:
+  * files are immutable, so a re-plan of a pinned layout reads no footer),
+  * and ships each file's projected parquet schema with its partition, so
+  * executors never re-read footers; planned partitions are cached per
+  * runtime-filter state (AQE re-asks several times). Each scan reports
+  * `footers read` and `footer cache hits` as SQL plan metrics. The scan
   * parallelism unit is the BUCKET, by design — size bucket counts to the
   * cluster, as the write path's layout intends.
   *
@@ -276,22 +278,6 @@ private[graft] object GraftDataSource {
     }
   }
 
-  /** Driver-side metadata fan-out: parquet footer opens cost ~20 ms each
-    * (measured), so planning a many-file snapshot probes them in
-    * parallel — a 1000-file table's footers resolve in one footer's
-    * latency x depth/32, not serially. */
-  def parMap[A, B](items: Seq[A])(f: A => B): Seq[B] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    Await.result(Future.traverse(items)(a => Future(f(a))), Duration.Inf)
-  }
-
-  def footerSchema(file: String, conf: Configuration): MessageType = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), conf))
-    try r.getFileMetaData.getSchema finally r.close()
-  }
-
   /** The physical-type code an INT64 column serves under, honoring the
     * parquet logical-type annotation: un-annotated and TIMESTAMP(MICROS)
     * read natively; TIMESTAMP(MILLIS) converts at the reader; NANOS has
@@ -309,11 +295,10 @@ private[graft] object GraftDataSource {
     }
 
   /** Per file, per fetch field: the physical column serving it (current
-    * name first, then rename aliases) and its primitive-type code. */
-  def resolveFile(file: String, fetch: StructType,
-                  aliases: Map[String, Seq[String]],
-                  conf: Configuration): (Array[String], Array[Int], String) = {
-    val m = footerSchema(file, conf)
+    * name first, then rename aliases) and its primitive-type code, from
+    * the file's footer schema `m`. */
+  def resolveFile(file: String, m: MessageType, fetch: StructType,
+                  aliases: Map[String, Seq[String]]): (Array[String], Array[Int], String) = {
     val phys = m.getFields.asScala.map(f => f.getName -> f).toMap
     val names = new Array[String](fetch.length)
     val codes = new Array[Int](fetch.length)
@@ -392,51 +377,30 @@ private[graft] object GraftDataSource {
         new java.io.ByteArrayInputStream(bytes, nl + 1, bytes.length - nl - 1))))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Parsed-bloom PLANNING cache: deserializing a bucket bloom is
+  /** Parsed blooms live in the per-JVM metadata cache
+    * ([[graft.core.FileMeta.cached]]): deserializing a bucket bloom is
     * O(filter bytes) — up to 2²⁷ bits per bucket × column — and an
     * interactive workload re-plans the same pinned layout constantly,
     * so without a cache every plan re-reads and re-parses
     * O(table-bloom-bytes) of metadata (SkipScale measured exactly this:
     * plan_bloom_point growing with data size while every other planning
-    * probe stayed flat). Keys are staleness-proof by construction: a
-    * manifest blob caches under its CONTENT HASH (immutable by
-    * definition), a sidecar file under (path, size, mtime-nanos) inside
-    * an immutable commit dir. Only successful parses cache (failures
-    * re-try their fallbacks); `mightContain*` on a cached sketch is
-    * read-only. Bounded by payload bytes — overflow clears the whole
-    * map (advisory: the next plan reloads). */
-  private val bloomCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Option[(String, org.apache.spark.util.sketch.BloomFilter)])]()
-  private val bloomCacheBytes = new java.util.concurrent.atomic.AtomicLong(0)
-  private val BloomCacheCapBytes = 256L * 1024 * 1024
-
-  private[sources] def cachedBloom(key: String, byteLen: Long)(
+    * probe stayed flat). A manifest blob caches under its content hash,
+    * a sidecar file under its (path, size, mtime-nanos) identity;
+    * `mightContain*` on a cached sketch is read-only; a sketch weighs
+    * its bit array. */
+  private[sources] def cachedBloom(key: String)(
       load: => Option[(String, org.apache.spark.util.sketch.BloomFilter)])
-      : Option[(String, org.apache.spark.util.sketch.BloomFilter)] = {
-    val hit = bloomCache.get(key)
-    if (hit != null) hit._2
-    else {
-      val v = load
-      if (v.isDefined) {
-        if (bloomCacheBytes.addAndGet(byteLen) > BloomCacheCapBytes) {
-          bloomCache.clear(); bloomCacheBytes.set(byteLen)
-        }
-        bloomCache.put(key, (byteLen, v))
-      }
-      v
-    }
-  }
+      : Option[(String, org.apache.spark.util.sketch.BloomFilter)] =
+    graft.core.FileMeta.cached[(String, org.apache.spark.util.sketch.BloomFilter)](
+      key, _._2.bitSize / 8)(load)
 
   /** The bucket-tier bloom sidecar file for (bucket dir, column). */
   def readBloomSidecar(bucketDir: String, colName: String)
       : Option[(String, org.apache.spark.util.sketch.BloomFilter)] = {
     val p = java.nio.file.Paths.get(bucketDir, s"_bloomidx.$colName.bin")
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val stamp = scala.util.Try((java.nio.file.Files.size(p),
-        java.nio.file.Files.getLastModifiedTime(p)
-          .to(java.util.concurrent.TimeUnit.NANOSECONDS))).getOrElse((-1L, -1L))
-      cachedBloom(s"f:$p:${stamp._1}:${stamp._2}", stamp._1) {
+    // An unstatable (vanished) sidecar reads as "no index", never a refutation.
+    scala.util.Try(graft.core.FileMeta.stamp(p)).toOption.flatMap { id =>
+      cachedBloom(s"f:$id") {
         graft.core.TxTable.metaReadProbe(p.toString)
         scala.util.Try(java.nio.file.Files.readAllBytes(p)).toOption
           .flatMap(parseBloomBytes(colName, _))
@@ -971,7 +935,6 @@ final class GraftScanBuilder(dir: String, keyCols: Seq[String],
     val specs = classify(aggregation).getOrElse(return None)
     val cols = specs.flatten.map(_._1).distinct.toSeq
     val aliases = t.aliasesAt(pinnedVersion)
-    val conf = new Configuration()
     var count = 0L
     // Running extrema per column, as CATALYST values (Long/Int/Double).
     val lo = scala.collection.mutable.Map.empty[String, Any]
@@ -1034,58 +997,55 @@ final class GraftScanBuilder(dir: String, keyCols: Seq[String],
     val files = if (sidecar.isDefined) Nil
       else layout.values.toSeq.sortBy(_._1)
         .flatMap { case (dataDir, _) => GraftDataSource.parquetFiles(dataDir) }
-    // One footer per file, probed in PARALLEL (the parMap note): each
-    // yields (rowCount, per-column extrema) or None = refuse the pushdown.
+    // One (cached) footer per file, probed in parallel: each yields
+    // (rowCount, per-column extrema) or None = refuse the pushdown.
     def fileStats(f: String): Option[(Long, Map[String, Any], Map[String, Any])] = {
       val flo = scala.collection.mutable.Map.empty[String, Any]
       val fhi = scala.collection.mutable.Map.empty[String, Any]
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f), conf))
-      try {
-        val fcount = r.getRecordCount
-        val footer = r.getFooter
-        val phys = footer.getFileMetaData.getSchema.getFields.asScala
-          .map(fl => fl.getName -> fl).toMap
-        cols.foreach { c =>
-          val physName = (c +: aliases.getOrElse(c, Nil)).find(phys.contains)
-            .getOrElse(return None) // absent column: default semantics → scan
-          val field = phys(physName)
-          val pt = field.asPrimitiveType().getPrimitiveTypeName
-          val tdt = tableSchema(c).dataType
-          // Physical value → Catalyst value for this (file, column), or
-          // refuse: the combination the footer stats can answer exactly.
-          val conv: Any => Any = (pt, tdt) match {
-            case (PrimitiveType.PrimitiveTypeName.INT64, LongType) => identity
-            case (PrimitiveType.PrimitiveTypeName.INT64, TimestampType)
-              if (field.getLogicalTypeAnnotation match {
-                case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                  ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
-                case _ => false
-              }) => identity
-            case (PrimitiveType.PrimitiveTypeName.INT32, IntegerType) => identity
-            case (PrimitiveType.PrimitiveTypeName.INT32, DateType) => identity
-            case (PrimitiveType.PrimitiveTypeName.INT32, LongType) =>
-              v => v.asInstanceOf[Integer].longValue()
-            case (PrimitiveType.PrimitiveTypeName.DOUBLE, DoubleType) => identity
-            case _ => return None
-          }
-          footer.getBlocks.asScala.foreach { block =>
-            val chunk = block.getColumns.asScala
-              .find(_.getPath.toDotString == physName).getOrElse(return None)
-            val stats: org.apache.parquet.column.statistics.Statistics[_] =
-              chunk.getStatistics
-            if (stats == null || stats.isEmpty) return None // stats disabled
-            if (stats.hasNonNullValue) {
-              val mn = conv(stats.genericGetMin); val mx = conv(stats.genericGetMax)
-              if (!flo.contains(c) || cmp(mn, flo(c)) < 0) flo(c) = mn
-              if (!fhi.contains(c) || cmp(mx, fhi(c)) > 0) fhi(c) = mx
-            } else if (!(stats.isNumNullsSet && stats.getNumNulls == chunk.getValueCount))
-              return None // can't distinguish all-null from missing stats
-          }
+      val footer = graft.core.FileMeta.footer(f)
+      val fcount = graft.core.FileMeta.rowCount(footer)
+      val phys = footer.getFileMetaData.getSchema.getFields.asScala
+        .map(fl => fl.getName -> fl).toMap
+      cols.foreach { c =>
+        val physName = (c +: aliases.getOrElse(c, Nil)).find(phys.contains)
+          .getOrElse(return None) // absent column: default semantics → scan
+        val field = phys(physName)
+        val pt = field.asPrimitiveType().getPrimitiveTypeName
+        val tdt = tableSchema(c).dataType
+        // Physical value → Catalyst value for this (file, column), or
+        // refuse: the combination the footer stats can answer exactly.
+        val conv: Any => Any = (pt, tdt) match {
+          case (PrimitiveType.PrimitiveTypeName.INT64, LongType) => identity
+          case (PrimitiveType.PrimitiveTypeName.INT64, TimestampType)
+            if (field.getLogicalTypeAnnotation match {
+              case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+                ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
+              case _ => false
+            }) => identity
+          case (PrimitiveType.PrimitiveTypeName.INT32, IntegerType) => identity
+          case (PrimitiveType.PrimitiveTypeName.INT32, DateType) => identity
+          case (PrimitiveType.PrimitiveTypeName.INT32, LongType) =>
+            v => v.asInstanceOf[Integer].longValue()
+          case (PrimitiveType.PrimitiveTypeName.DOUBLE, DoubleType) => identity
+          case _ => return None
         }
-        Some((fcount, flo.toMap, fhi.toMap))
-      } finally r.close()
+        footer.getBlocks.asScala.foreach { block =>
+          val chunk = block.getColumns.asScala
+            .find(_.getPath.toDotString == physName).getOrElse(return None)
+          val stats: org.apache.parquet.column.statistics.Statistics[_] =
+            chunk.getStatistics
+          if (stats == null || stats.isEmpty) return None // stats disabled
+          if (stats.hasNonNullValue) {
+            val mn = conv(stats.genericGetMin); val mx = conv(stats.genericGetMax)
+            if (!flo.contains(c) || cmp(mn, flo(c)) < 0) flo(c) = mn
+            if (!fhi.contains(c) || cmp(mx, fhi(c)) > 0) fhi(c) = mx
+          } else if (!(stats.isNumNullsSet && stats.getNumNulls == chunk.getValueCount))
+            return None // can't distinguish all-null from missing stats
+        }
+      }
+      Some((fcount, flo.toMap, fhi.toMap))
     }
-    val perFile = GraftDataSource.parMap(files)(fileStats)
+    val perFile = graft.core.TxTable.parMap(files)(fileStats)
     if (perFile.exists(_.isEmpty)) return None
     perFile.flatten.foreach { case (fcount, flo, fhi) =>
       count += fcount
@@ -1433,8 +1393,8 @@ private[sources] final class StatsView(tableDir: String, pinnedVersion: Long,
           if (bs.isEmpty) None else GraftDataSource.parseBloomBytes(colName, bs)
         }
         (blob match {
-          case TxTable.StoredBlob(_, hash, len) =>
-            GraftDataSource.cachedBloom(s"b:$hash", len.toLong)(loadParse)
+          case TxTable.StoredBlob(_, hash, _) =>
+            GraftDataSource.cachedBloom(s"b:$hash")(loadParse)
           case _ => loadParse
         }).orElse(GraftDataSource.readBloomSidecar(dataDir, colName))
       }
@@ -1474,16 +1434,14 @@ final class GraftCountScan(dir: String, keyCols: Seq[String],
 
   override def planInputPartitions(): Array[InputPartition] = {
     val t = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
-    val conf = new Configuration()
     val total = t.layoutAt(pinnedVersion).values.toSeq.map { case (dataDir, dvs) =>
       require(dvs.isEmpty, "metadata count planned over a DV'd bucket")
       // The sidecar is ADVISORY (the documented contract): a corrupt or
       // empty record falls back to the per-file footer counts exactly
       // like a missing one — same Try discipline as the numRows path.
       statsView.rowsTotal(dataDir).getOrElse(
-        GraftDataSource.parMap(GraftDataSource.parquetFiles(dataDir)) { f =>
-          val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f), conf))
-          try r.getRecordCount finally r.close()
+        graft.core.TxTable.parMap(GraftDataSource.parquetFiles(dataDir)) { f =>
+          graft.core.FileMeta.rowCount(graft.core.FileMeta.footer(f))
         }.sum)
     }.sum
     Array(GraftCountPartition(total))
@@ -2288,6 +2246,26 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
   // so a join-derived prune still re-plans.
   @volatile private var plannedCache: (Seq[String], Array[InputPartition]) = null
 
+  /** Planning's footer work, summed over this scan's plans (a runtime
+    * filter re-plans), reported as SQL plan metrics. */
+  private val footersRead = new java.util.concurrent.atomic.LongAdder
+  private val footerCacheHits = new java.util.concurrent.atomic.LongAdder
+
+  override def supportedCustomMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    Array(new GraftFootersReadMetric, new GraftFooterCacheHitsMetric)
+
+  override def reportDriverMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
+    def metric(n: String, v: Long) =
+      new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+        override def name(): String = n
+        override def value(): Long = v
+      }
+    Array(metric(GraftFootersReadMetric.Name, footersRead.sum),
+      metric(GraftFooterCacheHitsMetric.Name, footerCacheHits.sum))
+  }
+
   override def planInputPartitions(): Array[InputPartition] = {
     val cacheKey = runtimeFilters.toSeq.map(_.toString)
     val hit = plannedCache
@@ -2333,7 +2311,6 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
       c -> spark.sql(s"SELECT CAST(($sql) AS ${dt.sql})").head().get(0)
     }
 
-    val conf = new Configuration()
     import GraftDataSource.{parquetFiles, resolveFile}
 
     // DV key sets are bounded (equality deletes); load them at planning,
@@ -2360,15 +2337,20 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
     // pruning and parquet row-group skip filters — would silently drop
     // carryover rows, so they are disabled here and only here.
     val groupGranular = rowLevelOp != null
-    val parts = chosen.toSeq.sortBy(_._1).map { case (b, (dataDir, dvDirs)) =>
-      // Zone-map FILE pruning: refuted files never reach the footer
-      // probe below — the planning-tier range-skipping tier (whole
-      // buckets were already dropped in chosenLayout when every file
-      // refuted).
-      val files =
-        if (groupGranular) parquetFiles(dataDir) else zoneFiles(dataDir)
-      val resolved = GraftDataSource.parMap(files)(f =>
-        resolveFile(f, fetch, aliases, conf))
+    // Zone-map FILE pruning: refuted files never reach the footer probe
+    // below — the planning-tier range-skipping tier (whole buckets were
+    // already dropped in chosenLayout when every file refuted).
+    val buckets = chosen.toSeq.sortBy(_._1).map { case (b, (dataDir, dvDirs)) =>
+      (b, dvDirs, if (groupGranular) parquetFiles(dataDir) else zoneFiles(dataDir))
+    }
+    // ONE footer fan-out over every chosen file of the scan, through the
+    // per-JVM footer cache: a re-plan of the same files reads no footer.
+    val footers = graft.core.TxTable.parMap(buckets.flatMap(_._3))(graft.core.FileMeta.footerOf)
+    footersRead.add(footers.count(!_._2)); footerCacheHits.add(footers.count(_._2))
+    val byFile = buckets.flatMap(_._3).zip(footers.map(_._1)).toMap
+    val parts = buckets.map { case (b, dvDirs, files) =>
+      val resolved = files.map(f =>
+        resolveFile(f, byFile(f).getFileMetaData.getSchema, fetch, aliases))
       GraftInputPartition(b, files.toArray,
         resolved.map(_._1).toArray, resolved.map(_._2).toArray,
         resolved.map(_._3).toArray,
@@ -2399,6 +2381,22 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
 
   override def createReaderFactory(): PartitionReaderFactory = new GraftReaderFactory
 }
+
+/** Parquet footers a [[GraftScan]]'s planning read from storage. */
+final class GraftFootersReadMetric
+  extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = GraftFootersReadMetric.Name
+  override def description(): String = "footers read"
+}
+object GraftFootersReadMetric { val Name = "footersRead" }
+
+/** Parquet footers a [[GraftScan]]'s planning took from the footer cache. */
+final class GraftFooterCacheHitsMetric
+  extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = GraftFooterCacheHitsMetric.Name
+  override def description(): String = "footer cache hits"
+}
+object GraftFooterCacheHitsMetric { val Name = "footerCacheHits" }
 
 /** Everything a reader needs, resolved at planning: files, the per-file
   * logical→physical mapping, the fetch schema (required + key columns when
@@ -2470,15 +2468,15 @@ final class GraftMicroBatchStream(dir: String, keyCols: Seq[String],
     val e = end.asInstanceOf[GraftOffset].version
     val t = table
     val aliases = t.aliasesAt(math.max(e, 0L))
-    val conf = new Configuration()
     import GraftDataSource.{parquetFiles, resolveFile}
     val noDefaults = dataSchema.fields.map(_ => null: Any)
 
     def partition(files: Seq[String], v: Long, change: String): Option[InputPartition] =
       if (files.isEmpty) None
       else {
-        val resolved = GraftDataSource.parMap(files)(f =>
-          resolveFile(f, dataSchema, aliases, conf))
+        val resolved = graft.core.TxTable.parMap(files)(f =>
+          resolveFile(f, graft.core.FileMeta.footer(f).getFileMetaData.getSchema,
+            dataSchema, aliases))
         Some(GraftInputPartition(-1L, files.toArray,
           resolved.map(_._1).toArray, resolved.map(_._2).toArray,
           resolved.map(_._3).toArray,
@@ -2608,7 +2606,7 @@ final class GraftVectorReader(p: GraftInputPartition)
       val requested = StructType(present.map { case (n, i) =>
         fetch.fields(i).copy(name = n)
       })
-      val conf = new Configuration()
+      val conf = graft.core.FileMeta.hadoopConf()
       conf.set("org.apache.spark.sql.parquet.row.requested_schema", requested.json)
       conf.set("parquet.read.support.class",
         "org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport")
@@ -2771,7 +2769,7 @@ final class GraftPartitionReader(p: GraftInputPartition)
     if (fileIdx >= p.files.length) false
     else {
       val wanted = p.physNames(fileIdx).filter(_ != null)
-      val conf = new Configuration()
+      val conf = graft.core.FileMeta.hadoopConf()
       // The per-file PROJECTED parquet schema was resolved (and the footer
       // read) once at planning; executors parse the shipped string — no
       // footer re-read, and only the physical columns this file actually
@@ -2789,9 +2787,14 @@ final class GraftPartitionReader(p: GraftInputPartition)
       // record-level filtering, which only drops rows the engine residual
       // would drop anyway — the translated predicate is the one Spark's
       // own record-level filter mode uses).
-      val builder = ParquetReader
-        .builder(new GroupReadSupport(), new HPath(p.files(fileIdx)))
-        .withConf(conf)
+      // Built over a HadoopInputFile so the reader takes `conf`:
+      // `ParquetReader.builder(support, path)` constructs (and parses) a
+      // Configuration of its own per file.
+      val builder = new ParquetReader.Builder[Group](
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new HPath(p.files(fileIdx)), conf)) {
+        override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
+      }
       reader = GraftDataSource.filePredicate(p, fileIdx, fetch)
         .map(pred => builder.withFilter(
           org.apache.parquet.filter2.compat.FilterCompat.get(pred)))

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util.UUID
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
@@ -180,7 +179,7 @@ final class GraftBucketDataWriter(commitDir: String, keyCols: Array[String],
 
   private def writerFor(b: Long): ParquetOutputWriter =
     writers.getOrElseUpdate(b, {
-      val conf = new Configuration()
+      val conf = graft.core.FileMeta.hadoopConf()
       ParquetWriteSupport.setSchema(outSchema, conf)
       conf.set("parquet.write.support.class", classOf[ParquetWriteSupport].getName)
       conf.set("parquet.compression", "snappy")

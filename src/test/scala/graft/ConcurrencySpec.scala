@@ -14,6 +14,14 @@ import org.scalatest.funsuite.AnyFunSuite
 class ConcurrencySpec extends AnyFunSuite {
   import TestSpark._
 
+  /** Interrupt and wait out a writer pool before the table is dropped:
+    * a drop racing live writers fails with DirectoryNotEmptyException,
+    * which would replace the failed writer's own exception. */
+  private def stopWriters(pool: java.util.concurrent.ExecutorService): Unit = {
+    pool.shutdownNow()
+    pool.awaitTermination(2, MINUTES)
+  }
+
   test("concurrent identical interactive queries return identical results") {
     val names = Seq("j1_winder_topk", "j2_expand_1hop", "p3_search_ci")
     def run(name: String): Seq[String] =
@@ -79,7 +87,10 @@ class ConcurrencySpec extends AnyFunSuite {
         }
       }
       val retries = try Await.result(Future.sequence(futs), 10.minutes).sum
-      finally { stop.set(true); readerPool.shutdown(); pool.shutdown() }
+      finally {
+        stop.set(true); readerPool.shutdown()
+        stopWriters(pool)
+      }
       reader.get()
 
       val t = graft.core.TxTable.open(spark, dir, Seq("name"))
@@ -205,7 +216,7 @@ class ConcurrencySpec extends AnyFunSuite {
         }
       }
       val retries = try Await.result(Future.sequence(futs), 10.minutes).sum
-      finally pool.shutdown()
+      finally stopWriters(pool)
 
       val t = graft.core.TxTable.open(spark, dir, Seq("name"))
       assert(t.version == writers * merges,

@@ -2124,4 +2124,107 @@ class Dsv2Spec extends AnyFunSuite {
       assert(t.dropColumn("event_date") > 0, "drop after clearing must work")
     } finally TxTable.drop(dir)
   }
+
+  /** One planning pass of an unfiltered scan over `dir`, and the scan's
+    * reported driver metrics (footers read, footer cache hits). */
+  private def planFooterMetrics(dir: String): Map[String, Long] = {
+    val provider = new graft.sources.GraftTableProvider
+    val opts = new java.util.HashMap[String, String]()
+    opts.put("path", dir); opts.put("keys", "name")
+    val cmap = new CaseInsensitiveStringMap(opts)
+    val table = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
+    val scan = table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
+      .newScanBuilder(cmap).build()
+    scan.toBatch.planInputPartitions()
+    scan.reportDriverMetrics().map(m => m.name -> m.value).toMap
+  }
+
+  test("footer cache: a re-plan reads no footer; a commit caches the files it wrote") {
+    val (dir, t) = freshTable("graft_dsv2_footcache")
+    try {
+      def live = t.layoutAt(t.version).values.toSeq
+        .flatMap { case (d, _) => graft.sources.GraftDataSource.parquetFiles(d) }
+      val files = live
+      assert(files.nonEmpty)
+      // New identities for every data file (as if another process wrote
+      // them): the cache keys on (path, size, mtime), so nothing is cached.
+      files.foreach { f =>
+        val p = java.nio.file.Paths.get(f)
+        java.nio.file.Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime
+          .fromMillis(java.nio.file.Files.getLastModifiedTime(p).toMillis + 1000))
+      }
+      assert(planFooterMetrics(dir) ==
+        Map("footersRead" -> files.size.toLong, "footerCacheHits" -> 0L),
+        "the first plan reads one footer per file")
+      assert(planFooterMetrics(dir) ==
+        Map("footersRead" -> 0L, "footerCacheHits" -> files.size.toLong),
+        "an identical second plan reads no footer")
+      // A merge rewrites some buckets; its sidecar pass reads the footers
+      // of exactly the files it wrote, through the cache.
+      t.merge(t.snapshot().filter(col("name").endsWith("7"))
+        .withColumn("house", lit("PROMOTED")))
+      val after = live
+      assert(after.diff(files).nonEmpty, "the merge wrote no file")
+      assert(planFooterMetrics(dir) ==
+        Map("footersRead" -> 0L, "footerCacheHits" -> after.size.toLong),
+        "the first plan after a commit must find its files cached")
+      // The same counts reach Spark's SQL plan metrics.
+      val df = connRead(dir)
+      assert(asSet(df) == asSet(t.snapshot()))
+      val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(df.queryExecution.executedPlan) {
+          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
+      assert(scans.size == 1)
+      assert(scans.head.metrics("footersRead").value == 0)
+      assert(scans.head.metrics("footerCacheHits").value == after.size)
+    } finally TxTable.drop(dir)
+  }
+
+  test("footer cache: a dropped and re-created table serves its new schema and rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_recreate").toString
+    import spark.implicits._
+    def read = spark.read.format("graft").option("keys", "k").load(dir)
+    try {
+      TxTable.create(spark, dir, Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), Seq("k"),
+        numBuckets = 4)
+      assert(asSet(read) == Set("a|1", "b|2"))
+      assert(read.agg(max("v")).head().getLong(0) == 2L)
+      TxTable.drop(dir)
+      TxTable.create(spark, dir,
+        Seq(("a", "x", 10.5), ("c", "y", 3.0), ("d", "z", -1.0)).toDF("k", "s", "d"),
+        Seq("k"), numBuckets = 4)
+      assert(read.schema.fieldNames.toSeq == Seq("k", "s", "d"))
+      assert(asSet(read) == Set("a|x|10.5", "c|y|3.0", "d|z|-1.0"))
+      // The metadata-answered aggregates see the new files too.
+      assert(read.groupBy().count().head().getLong(0) == 3L)
+      assert(read.agg(max("d")).head().getDouble(0) == 10.5)
+    } finally TxTable.drop(dir)
+  }
+
+  test("hadoop configurations copied from the base are independent") {
+    val a = graft.core.FileMeta.hadoopConf()
+    val b = graft.core.FileMeta.hadoopConf()
+    // Copies carry the parsed default resources.
+    assert(a.get("fs.defaultFS") == "file:///")
+    a.set("graft.spec.probe", "a")
+    b.set("fs.defaultFS", "file:///b")
+    assert(b.get("graft.spec.probe") == null, "a set on one copy leaked into another")
+    assert(a.get("fs.defaultFS") == "file:///")
+    val fromBase = graft.core.FileMeta.hadoopConf()
+    assert(fromBase.get("graft.spec.probe") == null && fromBase.get("fs.defaultFS") == "file:///",
+      "a set on a copy leaked into the base")
+  }
+
+  test("metadata cache: an overflow past the cap clears it, and it caches again") {
+    import graft.core.FileMeta
+    // Two entries weighed at 60% of the cap each cannot both stay.
+    val weight = FileMeta.CapBytes * 3 / 5
+    def get(key: String) = FileMeta.cached[AnyRef](key, _ => weight)(None)
+    val (a, b) = (new Object, new Object)
+    assert(FileMeta.cached[AnyRef]("spec:a", _ => weight)(Some(a)).contains(a))
+    assert(get("spec:a").contains(a), "a loaded value is cached")
+    assert(FileMeta.cached[AnyRef]("spec:b", _ => weight)(Some(b)).contains(b))
+    assert(get("spec:a").isEmpty, "the overflow did not clear the cache")
+    assert(get("spec:b").contains(b), "the entry whose put overflowed is kept")
+  }
 }

@@ -600,28 +600,46 @@ class ExtOpsSpec extends AnyFunSuite {
     assert(engine.nonEmpty && engine.forall { case (_, (c, rj, m)) => c != rj && m >= 50 })
   }
 
-  test("corpus k-core: the full peel's coreness spectrum equals the banded closed form") {
-    // The banded block construction fixes coreness by residue mod 3 —
-    // chain → 1, ring → 2, chord-completed K4 → 3 — for every member of
-    // a FULL 4-block; a peel bug (wrong degree after removal, a missed
-    // fixpoint, a leaked partial block) shifts a residue's census row.
+  /** The k-core census by closed form: the banded block construction
+    * fixes coreness by residue mod 3 — chain → 1, ring → 2,
+    * chord-completed K4 → 3 — for every member of a FULL 4-block. */
+  private def kCoreClosedForm: Map[(Long, Int), Long] = {
     val mod = graft.core.Graph.FamilyMod.toLong
     val nids = graft.core.Graph.nodes(spark, sf).select("nid").collect()
       .map(_.getLong(0))
-    val closed = nids.groupBy(n => (n % mod, (n / mod) / 4))
+    nids.groupBy(n => (n % mod, (n / mod) / 4))
       .filter(_._2.length == 4) // full blocks only, derived from the data
       .toSeq.flatMap(_._2)
       .groupBy { n =>
         val band = (n % mod) % 3
         (n % mod, if (band == 0) 1 else if (band == 1) 2 else 3)
       }.map { case (k, xs) => k -> xs.length.toLong }
-    val engine = GraphAnalytics.corpusKCore(spark, sf).collect()
+  }
+
+  private def kCoreCensus: Map[(Long, Int), Long] =
+    GraphAnalytics.corpusKCore(spark, sf).collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-    assert(engine == closed, "coreness census diverges from the banded closed form")
+
+  test("corpus k-core: the full peel's coreness spectrum equals the banded closed form") {
+    // A peel bug (wrong degree after removal, a missed fixpoint, a
+    // leaked partial block) shifts a residue's census row.
+    val engine = kCoreCensus
+    assert(engine == kCoreClosedForm, "coreness census diverges from the banded closed form")
     // Every residue must land on exactly ONE coreness value (the bands
     // are uniform within a residue) and all three bands must appear.
     assert(engine.keys.groupBy(_._1).values.forall(_.size == 1))
     assert(engine.keys.map(_._2).toSet == Set(1, 2, 3))
+  }
+
+  test("corpus k-core releases every RDD it persisted") {
+    // Compared by id: the registry holds RDDs weakly, so an unrelated
+    // one can vanish mid-call and a bare size check would miscount.
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val engine = kCoreCensus
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(left.isEmpty, s"corpusKCore left ${left.size} RDDs persisted")
+    assert(engine == kCoreClosedForm, "coreness census changed")
   }
 
   test("corpus pagerank: masses dyadic-exact and anchor-dominant; census covers every node") {

@@ -6,14 +6,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Lazy accessors for the driver's relational corpus (`TESTDATA.md`).
   *
-  * Each table is a plain parquet scan — no caching, no eager IO — so that
+  * Each table is a plain parquet scan — no caching, no data read — so that
   * Catalyst can push filters and prune columns all the way into the scan.
+  * Opening one reads one footer on the driver, through the per-JVM cache
+  * ([[FileMeta.parquet]]): no Spark job, and none at all once warm.
   * At 100 TB the same access path holds: the scan is the unit the optimizer
   * works with, and every operator in `graft.ops` composes on top of it.
   */
 object Tables {
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    FileMeta.parquet(spark, s"$sfDir/$name.parquet")
 
   def region(spark: SparkSession, sfDir: String): DataFrame    = read(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame    = read(spark, sfDir, "nation")

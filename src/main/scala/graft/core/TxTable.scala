@@ -174,7 +174,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     def commitSchema(path: String): org.apache.spark.sql.types.StructType =
       FileMeta.cached[org.apache.spark.sql.types.StructType](
         "s:" + Paths.get(path).getParent, s => 256L + 128L * s.length)(
-        Some(spark.read.parquet(path).schema)).get
+        Some(FileMeta.parquetSchema(spark, path))).get
     // Which defaulted columns a commit dir's files physically LACK. A
     // column counts as present if ANY of its physical names (current or
     // pre-rename alias) is in the footer.
@@ -217,11 +217,11 @@ final class TxTable private (spark: SparkSession, dir: String,
         // widening): every file resolves by name against the version's
         // recorded logical schema — columns a pre-evolution file lacks
         // read as typed NULLs, extra (dropped) physical columns are
-        // ignored, exactly what mergeSchema+conform produced. Passing the
-        // schema EXPLICITLY skips the footer-inference job Spark runs per
-        // read (measured: ~0.1-0.2 s of every snapshot/merge read at any
-        // scale — planning cost, so it multiplies across the lifecycle
-        // entries' many small reads).
+        // ignored, exactly what mergeSchema+conform produced. The
+        // version's recorded schema is passed EXPLICITLY, so no footer is
+        // read at all — not even the cached one `FileMeta.parquet` takes
+        // its schema from for every other plain parquet read. The merging
+        // reads below cannot take either: they need every file's schema.
         spark.read.schema(schema).parquet(paths: _*)
       else if (defaults.isEmpty && !sigGrouped)
         conform(spark.read.option("mergeSchema", "true").parquet(paths: _*),
@@ -251,7 +251,7 @@ final class TxTable private (spark: SparkSession, dir: String,
         schema.fields.filter(f => keyCols.contains(f.name)))
       val dvKeys =
         (if (!sigGrouped) spark.read.schema(dvSchema).parquet(dvPaths: _*)
-         else spark.read.parquet(dvPaths: _*))
+         else FileMeta.parquet(spark, dvPaths: _*))
           .select(keyCols.map(col): _*)
       val dirtyDf = read(dirty.toSeq.sortBy(_._1).map { case (b, r) => bucketPath(r.data, b) })
         .join(dvKeys, keyCols, "left_anti")
@@ -869,7 +869,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     val cols = bloomColumns
     if (cols.isEmpty || bucketsIn(commit).isEmpty) return
     val cdir = dataDir.resolve(commit)
-    val df = spark.read.parquet(cdir.toString)
+    val df = FileMeta.parquet(spark, cdir.toString)
     // Sidecar file names embed the column name — index only names that
     // are filename-safe (a column named "a/b" must not escape the bucket
     // dir; skipping it just means no bucket-tier pruning for it).
@@ -1427,7 +1427,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     // Post-image CHECK constraints over exactly the new rows (carryover
     // below re-serves rows that already passed their write's checks).
     validate(conform(
-      spark.read.parquet(dataDir.resolve(commit).toString).drop("_b"),
+      FileMeta.parquet(spark, dataDir.resolve(commit).toString).drop("_b"),
       cur, defaultsAt(v)))
     // A bucket the write produced WITHOUT the scan having planned it
     // holds only NOT-MATCHED insert rows (a matched bucket is always

@@ -36,7 +36,7 @@ object Artifacts {
       val w = build.write.mode("overwrite")
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(p)
     }
-    spark.read.parquet(p)
+    graft.core.FileMeta.parquet(spark, p)
   }
 
   /** Graft-TxTable artifact: data written once as a transactional graft
@@ -80,7 +80,7 @@ object Artifacts {
       // Fresh session, files already on disk: re-attach the bucket spec
       // (bucket ids live in the file names; the catalog entry makes the
       // reader trust them).
-      val ddl = spark.read.parquet(p).schema.toDDL
+      val ddl = graft.core.FileMeta.parquetSchema(spark, p).toDDL
       spark.sql(
         s"""CREATE TABLE $table ($ddl) USING PARQUET
            |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) INTO $buckets BUCKETS

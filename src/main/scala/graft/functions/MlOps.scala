@@ -112,7 +112,7 @@ object MlOps {
         m
       } else org.apache.spark.ml.PipelineModel.load(modelPath)
     })
-    (model, spark.read.parquet(featPath))
+    (model, graft.core.FileMeta.parquet(spark, featPath))
   }
 
   /** ETL entry: train + persist both models (idempotent; driver/bench

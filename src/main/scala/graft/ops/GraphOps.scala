@@ -1477,7 +1477,7 @@ object GraphOps {
           .write.mode("overwrite").parquet(baseDir)
         java.nio.file.Files.createFile(baseReady)
       }
-      val base = spark.read.parquet(baseDir)
+      val base = graft.core.FileMeta.parquet(spark, baseDir)
       // Row-count-adaptive group size (s51's rule): tiny groups only where
       // skip granularity needs them; the artifact's footer serves the
       // count without a scan.

@@ -2240,7 +2240,7 @@ object RelOps {
       val p = graft.etl.Artifacts.path(sfDir, s"rescache_$key")
       val hit = new java.io.File(p, "_SUCCESS").exists()
       if (!hit) df.write.mode("overwrite").parquet(p)
-      (spark.read.parquet(p), hit)
+      (graft.core.FileMeta.parquet(spark, p), hit)
     }
     cachedRun(q) // first pass: populates (or reuses a prior invocation's)
     val (served, secondHit) = cachedRun(q)

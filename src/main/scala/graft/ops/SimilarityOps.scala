@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.Tables
+import graft.core.{FileMeta, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -334,7 +334,7 @@ object SimilarityOps {
       model.transform(e).drop("fv").write.mode("overwrite")
         .partitionBy("cell").parquet(aPath)
     }
-    (spark.read.parquet(cPath), spark.read.parquet(aPath))
+    (FileMeta.parquet(spark, cPath), FileMeta.parquet(spark, aPath))
   }
 
   /** ANN top-k via IVF (inverted-file index): the query probes only the
@@ -559,7 +559,7 @@ object SimilarityOps {
         .write.mode("overwrite").parquet(cdPath)
       u.unpersist()
     }
-    (spark.read.parquet(cbPath), spark.read.parquet(cdPath))
+    (FileMeta.parquet(spark, cbPath), FileMeta.parquet(spark, cdPath))
   }
 
   /** Driver-side ADC lookup tables for a unit query vector: adc(m)(c) =

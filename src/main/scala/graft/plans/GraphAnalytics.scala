@@ -22,6 +22,31 @@ import org.apache.spark.storage.StorageLevel
   */
 object GraphAnalytics {
 
+  /** A bounded result (a census, a cluster table) collected into a local
+    * relation, then every RDD in `roots`' lineage that was persisted
+    * since `persistedBefore` (ids from `sc.getPersistentRDDs`) released:
+    * the graphs, GraphX's shipped-vertex views and any per-round sets a
+    * call cached. A caller's own persisted inputs stay. */
+  private def localReleasing(spark: SparkSession, persistedBefore: Set[Int],
+                             result: DataFrame,
+                             roots: org.apache.spark.rdd.RDD[_]*): DataFrame = {
+    val out = spark.createDataFrame(result.collectAsList(), result.schema)
+    val seen = scala.collection.mutable.Set.empty[Int]
+    val stack = scala.collection.mutable.Stack[org.apache.spark.rdd.RDD[_]](roots: _*)
+    while (stack.nonEmpty) {
+      val r = stack.pop()
+      if (seen.add(r.id)) {
+        if (!persistedBefore(r.id) && r.getStorageLevel != StorageLevel.NONE)
+          r.unpersist(blocking = false)
+        r.dependencies.foreach(d => stack.push(d.rdd))
+      }
+    }
+    out
+  }
+
+  private def persistedIds(spark: SparkSession): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   /** FRIEND_OF edges as GraphX Edge[String] with nid endpoints, canonical
     * direction (nid src < dst by construction in Graph.friendOf). */
   private def friendEdges(spark: SparkSession, sfDir: String, maxNid: Long): XGraph[Int, Int] = {
@@ -121,6 +146,7 @@ object GraphAnalytics {
   }
 
   def corpusFamilyCc(spark: SparkSession, sfDir: String): DataFrame = {
+    val before = persistedIds(spark)
     val edges = sparsifierEdges(spark, sfDir)
     // Locally ~n·log n rows; on a real cluster this coalesce would be
     // sized to edges/128MB like the header note for friendEdges.
@@ -128,12 +154,14 @@ object GraphAnalytics {
       edges.rdd.coalesce(8).map(r => Edge(r.getLong(0), r.getLong(1), 1)), 0,
       edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
       vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-    val cc = g.connectedComponents().vertices
-    spark.createDataFrame(cc.map { case (v, c) => (v, c) })
-      .toDF("nid", "component")
-      .groupBy("component")
-      .agg(count(lit(1)).as("n_members"), max("nid").as("max_nid"))
-      .orderBy("component")
+    val cc = g.connectedComponents()
+    localReleasing(spark, before,
+      spark.createDataFrame(cc.vertices.map { case (v, c) => (v, c) })
+        .toDF("nid", "component")
+        .groupBy("component")
+        .agg(count(lit(1)).as("n_members"), max("nid").as("max_nid"))
+        .orderBy("component"),
+      cc.vertices, cc.edges)
   }
 
   /** CORPUS-SCALE multi-source BFS (gx_corpus_bfs) — raw Pregel over the
@@ -346,6 +374,7 @@ object GraphAnalytics {
     * (counts grow with sf) certifies every vertex. Constant supersteps ×
     * linear input: 16 rounds at sf0.1 and 16 rounds at 10⁹ nodes. */
   def corpusPageRank(spark: SparkSession, sfDir: String, iters: Int = 16): DataFrame = {
+    val before = persistedIds(spark)
     val mod = Graph.FamilyMod.toLong
     val B = 8L
     val n = Graph.nodes(spark, sfDir).select(col("nid").cast("long").as("nid"))
@@ -385,13 +414,12 @@ object GraphAnalytics {
       g.edges.unpersist(blocking = false)
       g = next
     }
-    val out = spark.createDataFrame(g.vertices.map { case (_, m) => Tuple1(m) })
-      .toDF("mass")
-      .groupBy("mass").agg(count(lit(1)).as("n_nodes"))
-      .orderBy("mass")
-      .localCheckpoint()
-    g.unpersist(blocking = false)
-    out
+    localReleasing(spark, before,
+      spark.createDataFrame(g.vertices.map { case (_, m) => Tuple1(m) })
+        .toDF("mass")
+        .groupBy("mass").agg(count(lit(1)).as("n_nodes"))
+        .orderBy("mass"),
+      g.vertices, g.edges)
   }
 
   /** CORPUS-SCALE coreness decomposition (gx_corpus_kcore) — the FULL
@@ -427,7 +455,7 @@ object GraphAnalytics {
     * released before it returns. */
   def corpusKCore(spark: SparkSession, sfDir: String): DataFrame = {
     val sc = spark.sparkContext
-    val persistedBefore = sc.getPersistentRDDs.keySet.toSet
+    val before = persistedIds(spark)
     val mod = Graph.FamilyMod.toLong
     val B = 4L
     val base = Graph.nodes(spark, sfDir)
@@ -474,26 +502,15 @@ object GraphAnalytics {
       g = peeled
     }
     val all = acc.union(g.vertices.keys.map(v => (v, 4)))
-    val census = spark.createDataFrame(all.map { case (v, c) => (v % mod, c) })
-      .toDF("residue", "coreness")
-      .groupBy("residue", "coreness")
-      .agg(count(lit(1)).as("n_nodes"))
-      .orderBy("residue", "coreness")
-    val out = spark.createDataFrame(census.collectAsList(), census.schema)
-    // The peel's graphs, GraphX's shipped-vertex views and the per-level
-    // dropped sets all sit in the census' lineage; release the ones this
-    // call persisted (a caller's own persisted inputs stay).
-    val seen = scala.collection.mutable.Set.empty[Int]
-    val stack = scala.collection.mutable.Stack[org.apache.spark.rdd.RDD[_]](all, g.edges)
-    while (stack.nonEmpty) {
-      val r = stack.pop()
-      if (seen.add(r.id)) {
-        if (!persistedBefore(r.id) && r.getStorageLevel != StorageLevel.NONE)
-          r.unpersist(blocking = false)
-        r.dependencies.foreach(d => stack.push(d.rdd))
-      }
-    }
-    out
+    // The peel's graphs and the per-level dropped sets all sit in the
+    // census' lineage.
+    localReleasing(spark, before,
+      spark.createDataFrame(all.map { case (v, c) => (v % mod, c) })
+        .toDF("residue", "coreness")
+        .groupBy("residue", "coreness")
+        .agg(count(lit(1)).as("n_nodes"))
+        .orderBy("residue", "coreness"),
+      all, g.edges)
   }
 
   /** Per-vertex triangle count on a bounded FRIEND_OF subgraph. Same-house
@@ -570,17 +587,21 @@ object GraphAnalytics {
 
   /** GraphX CC over any canonical (src_id < dst_id) pair set; component
     * label = min member id = the survivor (GraphX labels components by min
-    * vertex id, so the label IS the keep id). */
+    * vertex id, so the label IS the keep id). The cluster table (one row
+    * per paired id) returns as a local relation. */
   private def clustersOverPairs(spark: SparkSession, pairs: DataFrame,
                                 idName: String): DataFrame = {
+    val before = persistedIds(spark)
     val e = pairs.select(col("src_id").cast("long"), col("dst_id").cast("long"))
     val g = XGraph.fromEdges(
       e.rdd.coalesce(8).map(r => Edge(r.getLong(0), r.getLong(1), 1)), 0)
-    val cc = g.connectedComponents().vertices
-    spark.createDataFrame(cc.map { case (v, c) => (v, c) })
-      .toDF(idName, "keep_id")
-      .withColumn("is_kept", col(idName) === col("keep_id"))
-      .orderBy(idName)
+    val cc = g.connectedComponents()
+    localReleasing(spark, before,
+      spark.createDataFrame(cc.vertices.map { case (v, c) => (v, c) })
+        .toDF(idName, "keep_id")
+        .withColumn("is_kept", col(idName) === col("keep_id"))
+        .orderBy(idName),
+      cc.vertices, cc.edges)
   }
 
   /** Single-source BFS hop distances via Pregel over the FRIEND_OF ∪

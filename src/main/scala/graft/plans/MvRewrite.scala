@@ -194,7 +194,7 @@ object MvRewrite {
       // would collide if the MV lands twice in one query tree).
       val mvPlan = mvPlans.computeIfAbsent(sfDir, _ => {
         building = true
-        try spark.read.parquet(mvPath).queryExecution.analyzed
+        try graft.core.FileMeta.parquet(spark, mvPath).queryExecution.analyzed
         finally building = false
       }) match {
         case m: org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation =>

@@ -200,7 +200,7 @@ object FileFormats {
     }
     // Partition-column type inference turns 'yyyy-MM-dd' dirs into DATE;
     // cast back so the schema matches the oracle's VARCHAR day.
-    spark.read.parquet(p)
+    graft.core.FileMeta.parquet(spark, p)
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("n"), col("sum_micro"))
       .orderBy("day", "event_type")

@@ -2321,7 +2321,7 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
       CatalystTypeConverters.createToCatalystConverter(tableSchema(k).dataType))
     def dvKeys(dvDirs: Seq[String]): Array[Array[Any]] =
       if (dvDirs.isEmpty) Array.empty
-      else spark.read.parquet(dvDirs.flatMap(parquetFiles): _*)
+      else graft.core.FileMeta.parquet(spark, dvDirs.flatMap(parquetFiles): _*)
         .select(keyCols.map(org.apache.spark.sql.functions.col): _*)
         .collect().map(r => Array.tabulate[Any](keyCols.length)(i =>
           keyConverters(i)(r.get(i))))

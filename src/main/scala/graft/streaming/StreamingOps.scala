@@ -34,14 +34,11 @@ object StreamingOps {
 
   /** Streaming read of the events parquet (ts normalized to microsecond
     * session-zone timestamps, same arithmetic as graft.core.Tables.events). */
-  private val tsTypeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.DataType]()
-
   def readEventsStream(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // One footer probe per sf dir per JVM — 12 streaming entries share it.
-    val tsType = tsTypeCache.computeIfAbsent(sfDir,
-      d => spark.read.parquet(s"$d/events.parquet").schema("ts").dataType)
+    // The footer is cached per file identity; the 12 streaming entries share it.
+    val tsType = graft.core.FileMeta.parquetSchema(spark, s"$sfDir/events.parquet")("ts")
+      .dataType
     // The file source requires a directory: list the sf dir, glob-filtered
     // to the events file.
     val raw = spark.readStream.schema(rawSchema(tsType))
@@ -511,7 +508,7 @@ object StreamingOps {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      spark.read.parquet(s"$root/out")
+      graft.core.FileMeta.parquet(spark, s"$root/out")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_windows"),
           sum("n").cast("long").as("n_events"),

@@ -84,4 +84,21 @@ object Bridge {
     filters.flatMap(f => pf.createFilter(f))
       .reduceOption(org.apache.parquet.filter2.predicate.FilterApi.and)
   }
+
+  /** A parquet footer's Spark schema, converted the way Spark's own
+    * schema inference converts it (`readSchemaFromFooter`: the writer's
+    * stored Spark row schema when present, else the parquet schema) by a
+    * converter built from the session's conf NOW — binary-as-string,
+    * INT96, TIMESTAMP_NTZ inference and `nanosAsLong` are read per call
+    * — and made nullable throughout, as a file relation serves its data
+    * schema (the session conf and `asNullable` are Spark-private, hence
+    * this bridge). */
+  def parquetSchema(spark: SparkSession, file: String,
+                    footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(new org.apache.hadoop.fs.Path(file), footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)).asNullable
+  }
 }

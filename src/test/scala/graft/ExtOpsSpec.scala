@@ -631,15 +631,82 @@ class ExtOpsSpec extends AnyFunSuite {
     assert(engine.keys.map(_._2).toSet == Set(1, 2, 3))
   }
 
-  test("corpus k-core releases every RDD it persisted") {
-    // Compared by id: the registry holds RDDs weakly, so an unrelated
-    // one can vanish mid-call and a bare size check would miscount.
+
+  /** The result of `run` and the ids of the RDDs it left persisted
+    * (compared by id: the registry holds RDDs weakly, so an unrelated one
+    * can vanish mid-call and a bare size check would miscount). */
+  private def persistedLeft[T](run: => T): (T, Set[Int]) = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet.toSet
-    val engine = kCoreCensus
-    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    val out = run
+    (out, sc.getPersistentRDDs.keySet.toSet -- before)
+  }
+
+  /** Driver-side connected components: vertex → min member. */
+  private def minLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
+  test("corpus k-core releases every RDD it persisted") {
+    val (engine, left) = persistedLeft(kCoreCensus)
     assert(left.isEmpty, s"corpusKCore left ${left.size} RDDs persisted")
     assert(engine == kCoreClosedForm, "coreness census changed")
+  }
+
+  test("corpus pagerank releases every RDD it persisted; census equals a driver power iteration") {
+    val (rows, left) = persistedLeft(GraphAnalytics.corpusPageRank(spark, sf).collect())
+    assert(left.isEmpty, s"corpusPageRank left ${left.size} RDDs persisted")
+    // The same ring relation and 16 rounds of mass / 2, on the driver.
+    val mod = graft.core.Graph.FamilyMod.toLong
+    val (b, hold) = (8L, 1L << 39)
+    val nids = graft.core.Graph.nodes(spark, sf).select(col("nid").cast("long"))
+      .collect().map(_.getLong(0))
+    val maxNid = nids.max
+    val dst = nids.map { v =>
+      val k = v / mod
+      v -> (if (k % b == b - 1 || v + mod > maxNid) v - mod * (k % b) else v + mod)
+    }
+    val vertices = (nids ++ dst.map(_._2)).distinct
+    var mass = vertices.map(_ -> (1L << 40)).toMap
+    for (_ <- 1 to 16) {
+      val in = dst.groupMapReduce(_._2)(e => mass(e._1) / 2)(_ + _)
+      mass = vertices.map(v =>
+        v -> ((if ((v / mod) % b == 0L) hold else 0L) + in.getOrElse(v, 0L))).toMap
+    }
+    val want = mass.values.groupBy(identity).toSeq.sortBy(_._1).map { case (m, xs) => (m, xs.size.toLong) }
+    assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq == want, "pagerank census changed")
+  }
+
+  test("corpus family CC releases every RDD it persisted; components equal a driver union-find") {
+    val (rows, left) = persistedLeft(GraphAnalytics.corpusFamilyCc(spark, sf).collect())
+    assert(left.isEmpty, s"corpusFamilyCc left ${left.size} RDDs persisted")
+    val labels = minLabels(GraphAnalytics.sparsifierEdges(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq)
+    val want = labels.toSeq.groupBy(_._2).toSeq.sortBy(_._1)
+      .map { case (c, ms) => (c, ms.size.toLong, ms.map(_._1).max) }
+    assert(rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq == want,
+      "family CC census changed")
+  }
+
+  test("dedup clusters release every RDD they persisted; clusters equal a driver union-find") {
+    val (rows, left) = persistedLeft(GraphAnalytics.dedupClusters(spark, sf).collect())
+    assert(left.isEmpty, s"dedupClusters left ${left.size} RDDs persisted")
+    val labels = minLabels(TextOps.dedupMinHashLsh(spark, sf)
+      .select(col("src_id").cast("long"), col("dst_id").cast("long")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq)
+    assert(labels.nonEmpty, "no near-dup pairs: the check would be vacuous")
+    val want = labels.toSeq.sortBy(_._1).map { case (d, k) => (d, k, d == k) }
+    assert(rows.map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq == want,
+      "dedup clusters changed")
   }
 
   test("corpus pagerank: masses dyadic-exact and anchor-dominant; census covers every node") {

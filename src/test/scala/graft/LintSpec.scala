@@ -1,0 +1,62 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source rules over `src/main/scala` that no compiler enforces. The
+  * one-off probes under `graft/tools` are exempt. Comment lines are
+  * skipped, so prose may name the patterns. */
+class LintSpec extends AnyFunSuite {
+
+  /** (path relative to src/main/scala, source with comment lines blanked). */
+  private lazy val sources: Seq[(String, String)] = {
+    val root = Paths.get("src/main/scala")
+    val s = Files.walk(root)
+    val files = try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+                finally s.close()
+    files.map(f => root.relativize(f).toString -> code(f))
+      .filterNot(_._1.startsWith("graft/tools/")).sortBy(_._1)
+  }
+
+  private def code(f: Path): String =
+    Files.readAllLines(f).asScala.map { l =>
+      val t = l.trim
+      if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) "" else l
+    }.mkString("\n")
+
+  /** `read` then option/format/schema calls then `.parquet(`, across
+    * lines; group 1 is the chain between them. */
+  private val parquetRead =
+    """\bread((?:\s*\.\s*(?:option|options|format|schema)\s*\((?:[^()]|\([^()]*\))*\))*)\s*\.\s*parquet\s*\(""".r
+
+  test("plain parquet reads go through FileMeta.parquet") {
+    // A read without an explicit schema makes Spark run a job to infer
+    // one from a footer; FileMeta.parquet takes it from the footer cache.
+    // A mergeSchema read needs every file's footer, so it stays Spark's.
+    val reads = sources.flatMap { case (f, src) =>
+      parquetRead.findAllMatchIn(src).map(m => (f, m.group(1))).toSeq
+    }
+    val plain = reads.filterNot { case (_, chain) => chain.contains(".schema") }
+    val offending = plain.filterNot { case (f, chain) =>
+      f == "graft/core/FileMeta.scala" || chain.contains("\"mergeSchema\"")
+    }
+    assert(offending.isEmpty,
+      s"plain spark.read.parquet outside FileMeta: ${offending.map(_._1).distinct.mkString(", ")}")
+    // The pattern must still see the reads it allows, or it checks nothing.
+    assert(plain.exists(_._1 == "graft/core/FileMeta.scala"))
+    assert(plain.exists { case (f, c) => f == "graft/core/TxTable.scala" && c.contains("mergeSchema") })
+    assert(reads.exists(_._2.contains(".schema")))
+  }
+
+  test("only FileMeta builds a Hadoop Configuration from the defaults") {
+    // `new Configuration()` re-parses core-default.xml and friends; every
+    // other site copies FileMeta's parsed base with FileMeta.hadoopConf().
+    val fresh = """new\s+(?:org\.apache\.hadoop\.conf\.)?Configuration\s*\(\s*\)""".r
+    val sites = sources.filter { case (_, src) => fresh.findFirstIn(src).isDefined }.map(_._1)
+    assert(sites == Seq("graft/core/FileMeta.scala"),
+      s"new Configuration() outside FileMeta: ${sites.mkString(", ")}")
+  }
+}

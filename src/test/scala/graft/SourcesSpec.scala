@@ -231,4 +231,109 @@ class SourcesSpec extends AnyFunSuite {
         "unprobed cell directories were not pruned from the listing")
     }
   }
+
+  // ------------------------------------------- schema from the footer cache
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs started while `body` runs. Listener events post
+    * asynchronously: drain earlier work first, and give a job started in
+    * `body` time to surface. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    Thread.sleep(500)
+    spark.sparkContext.addSparkListener(l)
+    try { body; Thread.sleep(1000); n.get() }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** The footer-cache read's schema equals Spark's inferred one; the
+    * schema-only probe equals its data part (`partitionCols` excluded). */
+  private def sameSchemaAsSpark(paths: Seq[String],
+                                partitionCols: Set[String] = Set.empty): Unit = {
+    val want = spark.read.parquet(paths: _*).schema
+    assert(graft.core.FileMeta.parquet(spark, paths: _*).schema == want,
+      s"FileMeta.parquet schema differs at ${paths.mkString(",")}")
+    assert(graft.core.FileMeta.parquetSchema(spark, paths: _*) ==
+      org.apache.spark.sql.types.StructType(want.filterNot(f => partitionCols(f.name))),
+      s"FileMeta.parquetSchema differs at ${paths.mkString(",")}")
+  }
+
+  test("footer-cache schemas equal Spark's inferred ones: corpus, _SUCCESS dir, partitionBy, single file") {
+    // Every corpus table (pyarrow-written: no Spark row-schema metadata),
+    // events.ts under both nanosAsLong settings.
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getOption(key)
+    try {
+      for (nanos <- Seq("false", "true"); t <- Seq("region", "nation", "customer",
+             "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings")) {
+        spark.conf.set(key, nanos)
+        sameSchemaAsSpark(Seq(s"$sf/$t.parquet"))
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    // A Spark-written dir: _SUCCESS and .crc siblings, Spark's schema key.
+    val dir = tempDir("graft_fm_spark") + "/t"
+    spark.range(5).selectExpr("id", "cast(id as string) s", "array(id) a",
+      "named_struct('x', id) st", "current_date() d").write.parquet(dir)
+    assert(new java.io.File(s"$dir/_SUCCESS").exists())
+    sameSchemaAsSpark(Seq(dir))
+    // A partitionBy dir: the IVF assignments' `cell` column comes from
+    // the paths, typed by Spark's partition inference.
+    graft.ops.SimilarityOps.ivfIndex(spark, sf)
+    val assigned = graft.etl.Artifacts.path(sf, "ann_ivf_assigned")
+    sameSchemaAsSpark(Seq(assigned), Set("cell"))
+    assert(graft.core.FileMeta.parquet(spark, assigned).schema("cell").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    // A single part file, and several paths at once.
+    val parts = new java.io.File(dir).listFiles().map(_.toString)
+      .filter(_.endsWith(".parquet")).sorted
+    sameSchemaAsSpark(parts.take(1).toSeq)
+    sameSchemaAsSpark(parts.toSeq)
+  }
+
+  test("footer-cache reads start no Spark job, cold or warm") {
+    val dir = tempDir("graft_fm_jobs") + "/t"
+    spark.range(100).selectExpr("id", "id * 2 AS v").write.parquet(dir)
+    // The listener sees the inference job a plain read schedules…
+    assert(jobsDuring(spark.read.parquet(dir)) >= 1, "listener saw no inference job")
+    // …and none for the footer-cache read: the first reads the footer on
+    // the driver, the second finds it cached.
+    assert(jobsDuring(graft.core.FileMeta.parquet(spark, dir)) == 0, "cold read ran a job")
+    assert(jobsDuring(graft.core.FileMeta.parquet(spark, dir)) == 0, "warm read ran a job")
+    assert(graft.core.FileMeta.parquet(spark, dir).count() == 100)
+  }
+
+  test("footer-cache reads follow an overwrite to its new schema") {
+    val dir = tempDir("graft_fm_over") + "/t"
+    spark.range(3).selectExpr("id AS a").write.parquet(dir)
+    assert(graft.core.FileMeta.parquet(spark, dir).columns.toSeq == Seq("a"))
+    spark.range(3).selectExpr("cast(id AS string) AS b", "id AS c")
+      .write.mode("overwrite").parquet(dir)
+    val back = graft.core.FileMeta.parquet(spark, dir)
+    assert(back.schema == spark.read.parquet(dir).schema)
+    assert(back.columns.toSeq == Seq("b", "c"))
+    assert(back.orderBy("c").collect().map(_.getString(0)).toSeq == Seq("0", "1", "2"))
+  }
+
+  test("footer-cache reads of an empty dir fail as Spark's own read fails") {
+    val empty = tempDir("graft_fm_empty")
+    val onlyMarker = tempDir("graft_fm_marker")
+    new java.io.File(s"$onlyMarker/_SUCCESS").createNewFile()
+    for (d <- Seq(empty, onlyMarker)) {
+      val want = intercept[org.apache.spark.sql.AnalysisException](spark.read.parquet(d))
+      val got = intercept[org.apache.spark.sql.AnalysisException](
+        graft.core.FileMeta.parquet(spark, d))
+      assert(got.getCondition == want.getCondition)
+      assert(intercept[org.apache.spark.sql.AnalysisException](
+        graft.core.FileMeta.parquetSchema(spark, d)).getCondition == want.getCondition)
+    }
+  }
 }

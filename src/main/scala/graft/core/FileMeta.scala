@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.StructType
   *    once; every site takes an independent copy ([[hadoopConf]]), which
   *    clones the parsed properties instead of re-parsing them.
   *  - ONE metadata cache ([[cached]]) holding parsed parquet footers,
-  *    parsed bloom sketches and commit dirs' write-time schemas. Every
+  *    parsed bloom sketches, commit dirs' write-time schemas and small
+  *    driver values derived from input files ([[derived]]). Every
   *    driver-side footer read goes through [[footer]]: scan planning,
   *    COUNT/MIN/MAX pushdown, the commit's sidecar pass (so the first
   *    scan after a commit hits) and [[Tables]]' sizing probes.
@@ -71,6 +72,32 @@ private[graft] object FileMeta {
       v.foreach(x => put(key, x, weigh(x)))
       v
     }
+
+  /** A small driver value derived from the files under `inputs` (files
+    * or dirs, walked), cached by input identity: the key is `key` plus
+    * the [[stamp]] of every regular file under `inputs`, so rebuilding,
+    * rewriting or touching an input misses and recomputes. Only values
+    * that are functions of the input files belong here (an artifact's
+    * centroids, a corpus table's sorted keys) — never a request's
+    * result. Shares [[cached]]'s cap: an overflow clears it too. */
+  def derived[V <: AnyRef](key: String, inputs: Seq[String], weigh: V => Long)(compute: => V): V = {
+    import java.nio.file.{Files, Paths}
+    val stamps = inputs.flatMap { in =>
+      val p = Paths.get(in)
+      if (!Files.exists(p)) Seq(s"$p:absent")
+      else {
+        val s = Files.walk(p)
+        try s.iterator().asScala.filter(Files.isRegularFile(_)).map(stamp).toList.sorted
+        finally s.close()
+      }
+    }
+    val k = ("d:" +: key +: stamps).mkString("\u0000")
+    lookup[V](k).getOrElse {
+      val v = compute
+      put(k, v, weigh(v) + 2L * k.length)
+      v
+    }
+  }
 
   /** The identity part of a file's cache key: (path, size, mtime-nanos). */
   def stamp(file: java.nio.file.Path): String = {

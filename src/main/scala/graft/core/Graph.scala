@@ -25,13 +25,19 @@ import org.apache.spark.sql.functions._
   *
   * The derivations here are *lazy plans*: filters on downstream queries
   * push through the unions into the self-joins, so a one-person expansion
-  * never builds the full clique. Restricted expansions (`*Among`) stay on
-  * that path. Wholesale consumers — full-scan aggregations and
-  * single-person lookups over the complete edge set — instead read
-  * `personEdgesU`: the undirected closure written ONCE per scale factor as
-  * a bucketed-by-src table (the 100 TB layout this header always promised),
-  * so no repeated query pays the clique expansion, src-equality lookups
-  * prune to one bucket, and src-keyed aggregations shuffle nothing.
+  * never builds the full clique. Person↔person edge READS — single-person
+  * lookups, the house subgraph (`src ∈ prefix`, `dst ∈ house set`),
+  * full-scan aggregations — go to `personEdgesU`: the undirected closure
+  * written ONCE per scale factor as a bucketed-by-src table (the 100 TB
+  * layout this header always promised), so no repeated query pays the
+  * clique expansion, src lookups prune the bucket listing, and src-keyed
+  * aggregations shuffle nothing. The consumers that still derive edges
+  * live: the artifact's own build; node-predicate restricted rules the
+  * artifact cannot prune on (the nid-bounded FRIEND_OF / SAME_FAMILY
+  * graphs of the GraphX analytics, the one-family sample); single-rule
+  * reads (`romancePairs`, `upsertEdges`); the canonical-graph writers
+  * (`GraphBuilder`, `Typed.personEdges`); and BELONGS_TO (linear, one
+  * node scan).
   */
 object Graph {
   /** The two houses whose members are mutual enemies (≅ Gryffindor ×
@@ -190,8 +196,8 @@ object Graph {
     *    clique expansion per run (the round-3 driver-bench spike class).
     * The build itself is the lazy derivation below — executed exactly
     * once, repartitioned to align tasks with buckets (same murmur hash →
-    * 32 files). Restricted expansions keep using `personEdgesAmong`: a
-    * pre-filtered derivation reads less than the full artifact. */
+    * 32 files). Its only live consumer is that build; node-predicate
+    * restricted derivations (module doc) use the `*Among` rules directly. */
   def personEdgesU(spark: SparkSession, sfDir: String): DataFrame = {
     // Keep bucketed scans ON even for filter-only plans: the auto-disable
     // heuristic only looks for joins/aggregations, and turning the bucketed
@@ -256,28 +262,7 @@ object Graph {
     * (explode of a 2-struct array, one pass) ran 2-3× SLOWER: GenerateExec's
     * per-row materialization costs more than a second tight codegen'd
     * broadcast-join pass, and the generator also blocks the selective
-    * literal `src` filters that DO push through this union into the scans.
-    * For full-scan consumers, `undirectedShared` below trades one shuffle
-    * for single evaluation via exchange reuse. */
+    * literal `src` filters that DO push through this union into the scans. */
   def undirectedOne(edges: DataFrame): DataFrame =
     edges.unionByName(edges.select(col("dst").as("src"), col("src").as("dst"), col("relType")))
-
-  /** Undirected closure for FULL-SCAN consumers, evaluating the underlying
-    * derivation ONCE: a repartition inserts an Exchange whose subtree is
-    * identical in both union branches, so ReuseExchange computes the
-    * expansion once and replays the shuffle files for the reversed copy.
-    * Costs one shuffle of the canonical edges — measured worthwhile only
-    * when the downstream consumes edges wholesale (house subgraph read);
-    * for degree-count aggregations the partial agg directly on the cheap
-    * broadcast-join output beats shuffling the expansion, and selective
-    * lookups need `undirected` (literal filters push into its branches'
-    * scans, but not below this exchange). */
-  def undirectedShared(edges: DataFrame): DataFrame = {
-    val sym = edges.filter(col("relType").isin(SymmetricTypes: _*))
-    val canon = edges.filter(!col("relType").isin(SymmetricTypes: _*))
-      .repartition(col("src"))
-    canon
-      .unionByName(canon.select(col("dst").as("src"), col("src").as("dst"), col("relType")))
-      .unionByName(sym)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.Graph
+import graft.core.{FileMeta, Graph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -265,59 +265,69 @@ object GraphOps {
 
   /** J4+T3 — per-house subgraph: persons in the house list LEFT OUTER
     * joined to intra-house-set edges (app.py:375-382). Null edge/neighbor
-    * preserved for isolated members (app.py:399 checks `if r and m`). */
+    * preserved for isolated members (app.py:399 checks `if r and m`).
+    *
+    * LIMIT PUSHDOWN THROUGH THE JOIN. The output is ordered by person
+    * name, and person p contributes at least max(|house(p)|−1, 1) rows
+    * (their in-set FRIEND_OF clique, or the single null row of the left
+    * join) — so the shortest name-prefix P whose summed lower bound
+    * reaches `limit` fully covers the top-`limit` rows, and only P's edges
+    * are read. P is computed on the DRIVER from [[houseIndex]] (every
+    * house's size and sorted members, cached by `customer.parquet`'s
+    * identity), so a warm call runs no Spark job before execution. P
+    * then reaches the plan as LITERALS: the node scan prunes to P's row
+    * groups, and the edges come from the build-once `edges_und` artifact
+    * ([[Graph.personEdgesU]]) with `src ∈ P` pruning its bucket listing
+    * and `dst ∈ members of the house set` keeping both endpoints in the
+    * set (app.py:375-382's two house filters). Each edge rule is a
+    * predicate on node pairs, so that is exactly the multiset the live
+    * derivation among the house set gives — no per-request clique
+    * expansion. (r7 measured the no-literal alternative, a broadcast
+    * semi-join restriction: Catalyst infers no scan filter from a join
+    * side, j4 0.3→4.4 s at sf0.1.) */
   def houseSubgraph(spark: SparkSession, sfDir: String, houses: Seq[String], limit: Int = 5000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val inHouses = Graph.nodes(spark, sfDir).filter(col("house").isin(houses: _*))
-    // LIMIT PUSHDOWN THROUGH THE JOIN. The output is ordered by person
-    // name, and person p contributes at least max(|house(p)|−1, 1) rows
-    // (their in-set FRIEND_OF clique, or the single null row of the left
-    // join) — so the shortest name-prefix P whose summed lower bound
-    // reaches `limit` fully covers the top-`limit` rows, and only P needs
-    // expanding. Work becomes |P|·|house| ≈ `limit` instead of the full
-    // Σ|house|² clique — the difference between a plan that survives a
-    // 100× scale-up and one that does not. The prefix is computed as ONE
-    // bounded job (a top-`limit` slice joined to the 5-row house sizes,
-    // running-sum window, ≤ `limit` rows collected) — and then pushed as
-    // LITERALS, deliberately: a no-collect variant restricting the
-    // expansion via a broadcast semi-join was built and measured in r7 —
-    // j4 0.3→4.4 s, j13 1.1→5.1 s at sf0.1 — because Catalyst does not
-    // infer scan filters from a join side, so the full clique expansion
-    // ran before the prefix filter. The literal isin reaches the parquet
-    // scans on both self-join sides (PlanSpec pins this); the one
-    // ≤`limit`-row collect is the price of that pruning and is bounded at
-    // any corpus size.
-    val sizes = inHouses.groupBy("house").agg(count(lit(1)).as("hsize"))
-    val wAcc = Window.orderBy("name").rowsBetween(Window.unboundedPreceding, -1)
-    val pNames = inHouses.select("name", "house")
-      .orderBy("name").limit(limit)
-      .join(broadcast(sizes), "house")
-      .withColumn("acc",
-        coalesce(sum(greatest(col("hsize") - 1, lit(1L))).over(wAcc), lit(0L)))
-      .filter(col("acc") < limit)
-      .select("name")
-      .collect().map(_.getString(0)).toSeq
-    val p = inHouses.select("name", "house")
-    // Both endpoints must lie in the house set (app.py:375-382's two house
-    // filters), so derive the edges AMONG the restricted node set: the
-    // house literal reaches the scans on both self-join sides instead of
-    // first building every house's clique and filtering it away. The
-    // prefix restriction is a literal isin → it pushes through the
-    // undirected union into the scans too (unless P is degenerate-large,
-    // where the full-set plan is used).
-    val (pSel, eBase) =
-      if (pNames.size <= 512) {
-        (p.filter(col("name").isin(pNames: _*)),
-         Graph.undirected(Graph.personEdgesAmong(spark, inHouses))
-           .filter(col("src").isin(pNames: _*)))
-      } else
-        (p, Graph.undirectedShared(Graph.personEdgesAmong(spark, inHouses)))
-    val e = eBase.select(col("src"), col("relType"), col("dst").as("m_name"))
-    pSel.join(e, col("name") === col("src"), "left_outer")
+    val (pNames, members) = housePrefix(spark, sfDir, houses, limit)
+    val e = Graph.personEdgesU(spark, sfDir)
+      .filter(col("src").isin(pNames: _*) && col("dst").isin(members: _*))
+      .select(col("src"), col("relType"), col("dst").as("m_name"))
+    Graph.nodes(spark, sfDir).select("name").filter(col("name").isin(pNames: _*))
+      .join(e, col("name") === col("src"), "left_outer")
       .select(col("name"), col("relType"), col("m_name").as("neighbor"))
       .orderBy(asc_nulls_first("name"), asc_nulls_first("relType"), asc_nulls_first("neighbor"))
       .limit(limit)
   }
+
+  /** [[houseSubgraph]]'s name prefix P and the house set's members, both
+    * in Spark's string order: member i is in P while the sum of the
+    * earlier members' max(|house|−1, 1) is below `limit`. */
+  private[graft] def housePrefix(spark: SparkSession, sfDir: String, houses: Seq[String],
+                                 limit: Int): (Seq[String], Seq[String]) = {
+    val idx = houseIndex(spark, sfDir)
+    val set = houses.toSet
+    val inSet = idx.names.indices.filter(i => set(idx.houses(i)))
+    val members = inSet.map(idx.names)
+    val acc = inSet.scanLeft(0L)((a, i) => a + math.max(idx.sizes(idx.houses(i)) - 1, 1))
+    (members.indices.takeWhile(acc(_) < limit).map(members), members)
+  }
+
+  /** Every person name in Spark's (binary) string order with its house,
+    * and each house's size: the driver-side input of [[houseSubgraph]]'s
+    * prefix rule. */
+  private final class HouseIndex(val names: Array[String], val houses: Array[String]) {
+    val sizes: Map[String, Int] = houses.groupMapReduce(identity)(_ => 1)(_ + _)
+  }
+
+  /** [[HouseIndex]] of the corpus, derived once per `customer.parquet`
+    * identity ([[FileMeta.derived]]): one collect on a miss, none after. */
+  private def houseIndex(spark: SparkSession, sfDir: String): HouseIndex =
+    FileMeta.derived[HouseIndex]("houseIndex", Seq(s"$sfDir/customer.parquet"),
+      i => 64L + i.names.iterator.map(n => 96L + 2L * n.length).sum) {
+      val rows = Graph.nodes(spark, sfDir).filter(col("house").isNotNull)
+        .select("name", "house").collect()
+        .map(r => (r.getString(0), r.getString(1)))
+        .sortBy(r => org.apache.spark.unsafe.types.UTF8String.fromString(r._1))
+      new HouseIndex(rows.map(_._1), rows.map(_._2))
+    }
 
   /** J5 — houses LEFT JOIN members, preserving empty houses
     * (app.py:411-416); a synthetic empty house exercises null preservation. */
@@ -3625,14 +3635,13 @@ object GraphOps {
                          houses: Seq[String], limit: Int = 5000): DataFrame = {
     // The bounded direct slice feeds four branches (person nodes via both
     // endpoints, person edges, BELONGS_TO edges); without reuse, each
-    // branch re-runs the whole house-clique expansion + top-5000 — measured
-    // 25.7 s vs 6.5 s at sf0.1. localCheckpoint, not cache(): the slice is
-    // ≤ `limit` rows, materializing it eagerly truncates the lineage so
-    // all four branches plan against the tiny materialized relation — and
-    // unlike a cache() entry it cannot be partially evicted under memory
-    // pressure into silently re-running the expansion per branch (the
-    // round-3/4 driver-bench spike class).
-    val direct = houseSubgraph(spark, sfDir, houses, limit).localCheckpoint()
+    // branch re-runs the subgraph read + top-`limit` (measured 25.7 s vs
+    // 6.5 s at sf0.1 when each re-ran the clique expansion). The slice is
+    // ≤ `limit` rows: collected once and returned as a local relation, all
+    // four branches plan against it — and unlike a cache() or a
+    // localCheckpoint() it leaves no RDD persisted after the call.
+    val slice = houseSubgraph(spark, sfDir, houses, limit)
+    val direct = spark.createDataFrame(slice.collectAsList(), slice.schema)
     val n = Graph.nodes(spark, sfDir).select(col("name"), col("house"))
     val personNames = direct.select(col("name"))
       .union(direct.filter(col("relType").isNotNull).select(col("neighbor").as("name")))

@@ -341,35 +341,55 @@ object SimilarityOps {
     * `IvfProbes` cells nearest its vector → exact cosine within those
     * cells. The quantizer + assignment table are build-once ETL artifacts
     * (`ivfIndex`, partitioned by cell → probe = partition pruning); the
-    * query path is centroid arithmetic over IvfCells rows plus a pruned
-    * scan. Seeded k-means → deterministic; approximate by design →
-    * recall is spec-verified against brute force, no SQL oracle. */
+    * query path is [[ivfProbe]] (driver arithmetic over cached centroids,
+    * one single-cell read for the query vector) plus a pruned scan whose
+    * query operands are literals. Seeded k-means → deterministic;
+    * approximate by design → recall is spec-verified against brute
+    * force, no SQL oracle. */
   def ivfTopK(spark: SparkSession, sfDir: String, queryId: Long = 0L, k: Int = 10,
               nProbes: Int = IvfProbes): DataFrame = {
     val (centroids, assigned) = ivfIndex(spark, sfDir)
-    // Probe set: the IvfProbes cells nearest the query vector (driver-side
-    // arithmetic over IvfCells centroid rows — constant work at any scale).
-    val Array(qRow) = assigned.filter(col("vec_id") === queryId)
+    val (qv, qn, probes) = ivfProbe(sfDir, centroids, assigned, queryId, nProbes)
+    assigned.filter(col("cell").isin(probes.map(Int.box): _*) && col("vec_id") =!= queryId)
+      .select(col("vec_id"), col("label"),
+        round(dot(col("v"), typedlit(qv.toSeq)) / (col("nrm") * lit(qn)), 6).as("cosine"))
+      .orderBy(desc("cosine"), asc("vec_id"))
+      .limit(k)
+  }
+
+  /** The query's vector, its norm and the `nProbes` cells whose centroids
+    * are nearest it by cosine. Centroids and the vec_id → cell map are
+    * functions of the index files, cached by their identity
+    * ([[FileMeta.derived]]), so a warm probe runs one job: the read of
+    * the query's row from its own cell dir. */
+  private def ivfProbe(sfDir: String, centroids: DataFrame, assigned: DataFrame,
+                       queryId: Long, nProbes: Int): (Array[Double], Double, Array[Int]) = {
+    import graft.etl.Artifacts
+    val centers = FileMeta.derived[Array[(Int, Array[Double])]]("ivfCentroids",
+      Seq(Artifacts.path(sfDir, "ann_ivf_centroids")), cs => cs.map(c => 64L + 8L * c._2.length).sum) {
+      centroids.select(col("cell"), col("center")).collect()
+        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+    }
+    val cells = FileMeta.derived[(Array[Long], Array[Int])]("ivfCells",
+      Seq(Artifacts.path(sfDir, "ann_ivf_assigned")),
+      c => 64L + 12L * c._1.length) {
+      val byId = assigned.select(col("vec_id"), col("cell")).collect()
+        .map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1)
+      (byId.map(_._1), byId.map(_._2))
+    }
+    val at = java.util.Arrays.binarySearch(cells._1, queryId)
+    require(at >= 0, s"vec_id $queryId is not in the IVF index")
+    val Array(qRow) = assigned.filter(col("cell") === cells._2(at) && col("vec_id") === queryId)
       .select(col("v"), col("nrm")).collect()
     val qv = qRow.getSeq[Double](0).toArray
     val qn = qRow.getDouble(1)
-    val probes = centroids.select(col("cell"), col("center")).collect()
-      .map { r =>
-        val ca = r.getSeq[Double](1).toArray
-        var dot = 0.0; var nc = 0.0
-        var j = 0
-        while (j < ca.length) { dot += ca(j) * qv(j); nc += ca(j) * ca(j); j += 1 }
-        (r.getInt(0), dot / (math.sqrt(nc) * qn))
-      }
-      .sortBy(-_._2).take(nProbes).map(_._1)
-    val q = assigned.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("nrm").as("qn"))
-    assigned.filter(col("cell").isin(probes.map(Int.box): _*) && col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("label"),
-        round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 6).as("cosine"))
-      .orderBy(desc("cosine"), asc("vec_id"))
-      .limit(k)
+    val probes = centers.map { case (cell, ca) =>
+      var d = 0.0; var nc = 0.0
+      var j = 0
+      while (j < ca.length) { d += ca(j) * qv(j); nc += ca(j) * ca(j); j += 1 }
+      (cell, d / (math.sqrt(nc) * qn))
+    }.sortBy(-_._2).take(nProbes).map(_._1)
+    (qv, qn, probes)
   }
 
   /** Per-label centroid similarity: mean vector per label (element-wise via
@@ -562,25 +582,33 @@ object SimilarityOps {
     (FileMeta.parquet(spark, cbPath), FileMeta.parquet(spark, cdPath))
   }
 
+  /** The codebook rows `cb` of [[pqIndex]] as centers(m)(code), cached
+    * by the codebook files' identity ([[FileMeta.derived]]): one collect
+    * per index build, none per query. */
+  private def pqCodebooks(sfDir: String, cb: DataFrame): Array[Array[Array[Double]]] =
+    FileMeta.derived[Array[Array[Array[Double]]]]("pqCodebooks",
+      Seq(graft.etl.Artifacts.path(sfDir, "ann_pq_codebooks")),
+      _ => 64L + PqM * PqK * (32L + 8L * PqSubDim)) {
+      val centers = Array.ofDim[Array[Double]](PqM, PqK)
+      cb.collect().foreach(r => centers(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
+      centers
+    }
+
   /** Driver-side ADC lookup tables for a unit query vector: adc(m)(c) =
     * dot(q_m, centroid_mc) — PqM × PqK eight-dim dots, constant work at
     * any corpus size. */
-  private def adcTables(cb: DataFrame, qu: Array[Double]): Array[Array[Double]] = {
-    val adc = Array.ofDim[Double](PqM, PqK)
-    cb.collect().foreach { r =>
-      val m = r.getInt(0); val c = r.getInt(1)
-      val cent = r.getSeq[Double](2)
+  private def adcTables(centers: Array[Array[Array[Double]]], qu: Array[Double]): Array[Array[Double]] =
+    Array.tabulate(PqM, PqK) { (m, c) =>
+      val cent = centers(m)(c)
       var d = 0.0
       var i = 0
       while (i < PqSubDim) { d += qu(m * PqSubDim + i) * cent(i); i += 1 }
-      adc(m)(c) = d
+      d
     }
-    adc
-  }
 
   /** Corpus-side approximate score over a `codes` column: 8 literal-array
     * lookups + 7 adds per row, entirely inside whole-stage codegen. */
-  private def adcScore(adc: Array[Array[Double]]): Column =
+  private[graft] def adcScore(adc: Array[Array[Double]]): Column =
     (0 until PqM).map { m =>
       element_at(typedlit(adc(m).toSeq), element_at(col("codes"), m + 1) + 1)
     }.reduce(_ + _)
@@ -597,7 +625,7 @@ object SimilarityOps {
       .select(col("v"), col("nrm")).collect()
     val qv = qRow.getSeq[Double](0).toArray
     val qn = qRow.getDouble(1)
-    val approx = adcScore(adcTables(cb, qv.map(_ / qn)))
+    val approx = adcScore(adcTables(pqCodebooks(sfDir, cb), qv.map(_ / qn)))
     // Shortlist stays distributed: TakeOrderedAndProject over the ADC
     // scores, then a BROADCAST semi-join onto the base table for the exact
     // re-rank — no driver round-trip, and unlike the selective-expansion
@@ -612,7 +640,7 @@ object SimilarityOps {
 
   /** Exact cosine re-rank of a distributed shortlist (≤ PqCandidates ids):
     * broadcast semi-join onto the base vectors, exact dot, top-k. */
-  private def rerankExact(spark: SparkSession, sfDir: String, shortlist: DataFrame,
+  private[graft] def rerankExact(spark: SparkSession, sfDir: String, shortlist: DataFrame,
                           qv: Array[Double], qn: Double, k: Int): DataFrame = {
     val q = spark.range(1)
       .select(typedlit(qv.toSeq).as("qv"), lit(qn).as("qn"))
@@ -660,20 +688,8 @@ object SimilarityOps {
   def ivfPqTopK(spark: SparkSession, sfDir: String, queryId: Long = 0L, k: Int = 10): DataFrame = {
     val (centroids, assigned) = ivfIndex(spark, sfDir)
     val (cb, _) = pqIndex(spark, sfDir)
-    val Array(qRow) = assigned.filter(col("vec_id") === queryId)
-      .select(col("v"), col("nrm")).collect()
-    val qv = qRow.getSeq[Double](0).toArray
-    val qn = qRow.getDouble(1)
-    val probes = centroids.select(col("cell"), col("center")).collect()
-      .map { r =>
-        val ca = r.getSeq[Double](1).toArray
-        var d = 0.0; var nc = 0.0
-        var j = 0
-        while (j < ca.length) { d += ca(j) * qv(j); nc += ca(j) * ca(j); j += 1 }
-        (r.getInt(0), d / (math.sqrt(nc) * qn))
-      }
-      .sortBy(-_._2).take(IvfProbes).map(_._1)
-    val approx = adcScore(adcTables(cb, qv.map(_ / qn)))
+    val (qv, qn, probes) = ivfProbe(sfDir, centroids, assigned, queryId, IvfProbes)
+    val approx = adcScore(adcTables(pqCodebooks(sfDir, cb), qv.map(_ / qn)))
     val short = ivfPqIndex(spark, sfDir)
       .filter(col("cell").isin(probes.map(Int.box): _*) && col("vec_id") =!= queryId)
       .select(col("vec_id"), approx.as("approx"))

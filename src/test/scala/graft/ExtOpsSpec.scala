@@ -233,6 +233,99 @@ class ExtOpsSpec extends AnyFunSuite {
     assert(got.keySet.subsetOf(ivfReach))
   }
 
+  /** The IVF probe as each query derived it before the cached path: the
+    * query row from a scan over every cell dir, the centroids collected
+    * per call. Returns (qv, qn, probes). */
+  private def perCallIvfProbe(sfDir: String, q: Long): (Array[Double], Double, Array[Int]) = {
+    val (centroids, assigned) = SimilarityOps.ivfIndex(spark, sfDir)
+    val Array(qRow) = assigned.filter(col("vec_id") === q).select(col("v"), col("nrm")).collect()
+    val qv = qRow.getSeq[Double](0).toArray
+    val qn = qRow.getDouble(1)
+    val probes = centroids.select(col("cell"), col("center")).collect().map { r =>
+      val ca = r.getSeq[Double](1).toArray
+      val d = ca.indices.foldLeft(0.0)((a, j) => a + ca(j) * qv(j))
+      val nc = ca.indices.foldLeft(0.0)((a, j) => a + ca(j) * ca(j))
+      (r.getInt(0), d / (math.sqrt(nc) * qn))
+    }.sortBy(-_._2).take(SimilarityOps.IvfProbes).map(_._1)
+    (qv, qn, probes)
+  }
+
+  /** `ivfTopK` in its per-call shape: the query row scanned again and
+    * cross-joined as a broadcast relation. */
+  private def perCallIvfTopK(sfDir: String, q: Long): Seq[org.apache.spark.sql.Row] = {
+    val (_, assigned) = SimilarityOps.ivfIndex(spark, sfDir)
+    val (_, _, probes) = perCallIvfProbe(sfDir, q)
+    val qdf = assigned.filter(col("vec_id") === q).select(col("v").as("qv"), col("nrm").as("qn"))
+    assigned.filter(col("cell").isin(probes.map(Int.box): _*) && col("vec_id") =!= q)
+      .crossJoin(broadcast(qdf))
+      .select(col("vec_id"), col("label"),
+        round(SimilarityOps.dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 6).as("cosine"))
+      .orderBy(desc("cosine"), asc("vec_id")).limit(10)
+      .collect().toSeq
+  }
+
+  /** `ivfPqTopK` in its per-call shape: the per-call probe, and the ADC
+    * tables from the codebook rows collected per call. */
+  private def perCallIvfPqTopK(sfDir: String, q: Long): Seq[org.apache.spark.sql.Row] = {
+    import SimilarityOps.{PqK, PqM, PqSubDim}
+    val (qv, qn, probes) = perCallIvfProbe(sfDir, q)
+    val (cb, _) = SimilarityOps.pqIndex(spark, sfDir)
+    val adc = Array.ofDim[Double](PqM, PqK)
+    cb.collect().foreach { r =>
+      val cent = r.getSeq[Double](2)
+      adc(r.getInt(0))(r.getInt(1)) = (0 until PqSubDim).foldLeft(0.0)((a, i) =>
+        a + qv(r.getInt(0) * PqSubDim + i) / qn * cent(i))
+    }
+    val short = SimilarityOps.ivfPqIndex(spark, sfDir)
+      .filter(col("cell").isin(probes.map(Int.box): _*) && col("vec_id") =!= q)
+      .select(col("vec_id"), SimilarityOps.adcScore(adc).as("approx"))
+      .orderBy(desc("approx"), asc("vec_id")).limit(SimilarityOps.PqCandidates)
+      .select("vec_id")
+    SimilarityOps.rerankExact(spark, sfDir, short, qv, qn, 10).collect().toSeq
+  }
+
+  /** Five query ids spread over the corpus: the first, the last, three between. */
+  private def queryIds(sfDir: String): Seq[Long] = {
+    val ids = graft.core.Tables.embeddings(spark, sfDir).select("vec_id").collect()
+      .map(_.getLong(0)).sorted
+    Seq(0, ids.length / 4, ids.length / 2, 3 * ids.length / 4, ids.length - 1).map(ids)
+  }
+
+  test("IVF and IVF-PQ top-k from cached index values equal their per-call shapes; a warm build runs <= 1 job") {
+    for (q <- queryIds(sf)) {
+      assert(SimilarityOps.ivfTopK(spark, sf, q).collect().toSeq == perCallIvfTopK(sf, q), s"ivf q=$q")
+      assert(SimilarityOps.ivfPqTopK(spark, sf, q).collect().toSeq == perCallIvfPqTopK(sf, q),
+        s"ivfpq q=$q")
+    }
+    val q = queryIds(sf)(2)
+    assert(jobsDuring(SimilarityOps.ivfTopK(spark, sf, q)) <= 1, "warm ivfTopK build ran > 1 job")
+    assert(jobsDuring(SimilarityOps.ivfPqTopK(spark, sf, q)) <= 1, "warm ivfPqTopK build ran > 1 job")
+  }
+
+  test("IVF index values miss after the index dirs are deleted and rebuilt") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_ivf_rebuild").toString
+    val sfd = s"$root/ivf_rebuild_${System.nanoTime}"
+    Files.createDirectories(Paths.get(sfd))
+    Files.copy(Paths.get(s"$sf/embeddings.parquet"), Paths.get(s"$sfd/embeddings.parquet"))
+    try {
+      val q = queryIds(sfd)(1)
+      assert(SimilarityOps.ivfTopK(spark, sfd, q).collect().toSeq == perCallIvfTopK(sfd, q))
+      assert(jobsDuring(SimilarityOps.ivfTopK(spark, sfd, q)) <= 1, "warm build ran > 1 job")
+      for (a <- Seq("ann_ivf_centroids", "ann_ivf_assigned"))
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(graft.etl.Artifacts.path(sfd, a)))
+      SimilarityOps.ivfIndex(spark, sfd)
+      // A miss collects the centroids and the cell map again, then reads
+      // the query row: three jobs at least.
+      assert(jobsDuring(SimilarityOps.ivfTopK(spark, sfd, q)) >= 3, "rebuilt index served from the cache")
+      assert(jobsDuring(SimilarityOps.ivfTopK(spark, sfd, q)) <= 1, "rebuilt index values not cached")
+      assert(SimilarityOps.ivfTopK(spark, sfd, q).collect().toSeq == perCallIvfTopK(sfd, q))
+    } finally {
+      for (d <- Seq(root, graft.etl.Artifacts.path(sfd, "")))
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))
+    }
+  }
+
   test("PQ codes: 8 codes per vector, every code within [0, PqK)") {
     val (cb, codes) = SimilarityOps.pqIndex(spark, sf)
     assert(cb.count() == SimilarityOps.PqM.toLong * SimilarityOps.PqK)
@@ -722,6 +815,27 @@ class ExtOpsSpec extends AnyFunSuite {
       "non-dyadic mass: integer iteration lost exactness")
     val masses = rows.map(_.getAs[Long]("mass"))
     assert(masses.max > (1L << 39), "anchor mass must exceed its own hold")
+  }
+
+  test("houses graph payload leaves no RDD persisted; its rows follow from the subgraph slice") {
+    val houses = Seq("BUILDING", "AUTOMOBILE")
+    val (rows, left) = persistedLeft(
+      graft.ops.GraphOps.housesGraphPayload(spark, sf, houses).collect())
+    assert(left.isEmpty, s"housesGraphPayload left ${left.size} RDDs persisted")
+    // The payload assembled on the driver from the same 5000-row slice.
+    val slice = graft.ops.GraphOps.houseSubgraph(spark, sf, houses).collect()
+      .map(r => (r.getString(0), Option(r.getString(1)), Option(r.getString(2))))
+    val houseOf = graft.core.Graph.nodes(spark, sf).select("name", "house").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val persons = (slice.map(_._1) ++ slice.flatMap(_._3)).distinct
+    val want = (
+      persons.map(p => ("node", s"""{"data":{"id":"$p","group":"person","house":"${houseOf(p)}"}}""")) ++
+      houses.map(h => ("node", s"""{"data":{"id":"$h","group":"house"}}""")) ++
+      slice.collect { case (p, Some(t), Some(m)) =>
+        ("edge", s"""{"data":{"source":"$p","target":"$m","label":"$t"}}""") } ++
+      persons.map(p => ("edge", s"""{"data":{"source":"$p","target":"${houseOf(p)}","label":"BELONGS_TO"}}"""))
+    ).distinct.sorted.toSeq
+    assert(rows.map(r => (r.getString(0), r.getString(1))).toSeq == want, "payload rows changed")
   }
 
   test("hof suite: the fold is genuinely ordered (reversal changes the hash)") {

@@ -18,6 +18,21 @@ object TestSpark {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `body` runs. Listener events post
+    * asynchronously: drain earlier work first, and give a job started in
+    * `body` time to surface. */
+  def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    Thread.sleep(500)
+    spark.sparkContext.addSparkListener(l)
+    try { body; Thread.sleep(1000); n.get() }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 class GraphSpec extends AnyFunSuite {
@@ -62,26 +77,87 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
+  /** The naive plan: the whole clique derived live among the house set,
+    * left-joined to every member, top `limit` rows (as sorted strings). */
+  private def naiveSubgraph(sfDir: String, houses: Seq[String], limit: Int): Seq[String] = {
+    val inHouses = Graph.nodes(spark, sfDir).filter(col("house").isin(houses: _*))
+    inHouses.select("name", "house")
+      .join(
+        Graph.undirected(Graph.personEdgesAmong(spark, inHouses))
+          .select(col("src"), col("relType"), col("dst").as("m_name")),
+        col("name") === col("src"), "left_outer")
+      .select(col("name"), col("relType"), col("m_name").as("neighbor"))
+      .orderBy(asc_nulls_first("name"), asc_nulls_first("relType"), asc_nulls_first("neighbor"))
+      .limit(limit)
+      .collect().map(_.toString).sorted.toSeq
+  }
+
+  /** The name prefix as the window job of the live-derivation plan
+    * computed it: the first `limit` names joined to their house sizes,
+    * kept while the running sum of earlier rows' max(hsize−1, 1) is below
+    * `limit`. */
+  private def windowPrefix(sfDir: String, houses: Seq[String], limit: Int): Seq[String] = {
+    import org.apache.spark.sql.expressions.Window
+    val inHouses = Graph.nodes(spark, sfDir).filter(col("house").isin(houses: _*))
+    val sizes = inHouses.groupBy("house").agg(count(lit(1)).as("hsize"))
+    val wAcc = Window.orderBy("name").rowsBetween(Window.unboundedPreceding, -1)
+    inHouses.select("name", "house")
+      .orderBy("name").limit(limit)
+      .join(broadcast(sizes), "house")
+      .withColumn("acc", coalesce(sum(greatest(col("hsize") - 1, lit(1L))).over(wAcc), lit(0L)))
+      .filter(col("acc") < limit)
+      .select("name").collect().map(_.getString(0)).sorted.toSeq
+  }
+
+  private val houseSets = Seq(Seq("FURNITURE"), Seq("BUILDING", "AUTOMOBILE"), Seq("NO_SUCH_HOUSE"),
+    Seq("MACHINERY", "NO_SUCH_HOUSE"))
+
   test("house subgraph: prefix limit-pushdown plan equals the naive full expansion (J4)") {
-    // The optimized plan expands only the name prefix whose summed
+    // The optimized plan reads only the name prefix whose summed
     // lower-bound row count covers the limit; the naive plan expands the
     // whole restricted clique. Both must produce the identical top-limit
     // row set for any limit — including limits that land mid-person.
-    val houses = Seq("BUILDING", "AUTOMOBILE")
-    val inHouses = Graph.nodes(spark, sf).filter(col("house").isin(houses: _*))
-    for (limit <- Seq(7, 500, 5000)) {
-      val naive = inHouses.select("name", "house")
-        .join(
-          Graph.undirectedShared(Graph.personEdgesAmong(spark, inHouses))
-            .select(col("src"), col("relType"), col("dst").as("m_name")),
-          col("name") === col("src"), "left_outer")
-        .select(col("name"), col("relType"), col("m_name").as("neighbor"))
-        .orderBy(asc_nulls_first("name"), asc_nulls_first("relType"), asc_nulls_first("neighbor"))
-        .limit(limit)
-        .collect().map(_.toString).sorted
+    for (houses <- houseSets; limit <- Seq(1, 7, 500, 5000)) {
       val optimized = GraphOps.houseSubgraph(spark, sf, houses, limit)
-        .collect().map(_.toString).sorted
-      assert(optimized.sameElements(naive), s"limit=$limit")
+        .collect().map(_.toString).sorted.toSeq
+      assert(optimized == naiveSubgraph(sf, houses, limit), s"houses=$houses limit=$limit")
+    }
+  }
+
+  test("house subgraph: the driver prefix equals the window-job prefix") {
+    for (houses <- houseSets; limit <- Seq(1, 7, 500, 5000)) {
+      val (p, _) = GraphOps.housePrefix(spark, sf, houses, limit)
+      assert(p.sorted == windowPrefix(sf, houses, limit), s"houses=$houses limit=$limit")
+      if (houses == Seq("NO_SUCH_HOUSE")) assert(p.isEmpty)
+    }
+  }
+
+  test("house subgraph: a prefix of more than 512 names (houses of 2-3 persons) reads the same rows") {
+    // A corpus whose every house is tiny: each person then contributes
+    // about one row, so P covers every member, far past any literal-list
+    // size a plan might special-case.
+    val root = java.nio.file.Files.createTempDirectory("graft_tiny_houses").toString
+    val sfd = s"$root/tiny_houses_${System.nanoTime}"
+    // Ten key-shifted copies of the spec corpus's customers: 1,500 persons.
+    val base = graft.core.Tables.customer(spark, sf)
+    val (n, keyType) = (base.count(), base.schema("c_custkey").dataType)
+    (0 until 10).map(i => base.withColumn("c_custkey", (col("c_custkey") + i * n).cast(keyType)))
+      .reduce(_ unionByName _)
+      .withColumn("c_name", format_string("Customer#%09d", col("c_custkey")))
+      .withColumn("c_mktsegment", concat(lit("H"), (col("c_custkey") % 600).cast("string")))
+      .write.parquet(s"$sfd/customer.parquet")
+    try {
+      val houses = (0 until 600).map(h => s"H$h")
+      val (p, members) = GraphOps.housePrefix(spark, sfd, houses, 5000)
+      assert(p.size > 512 && p.size == members.size, s"|P| = ${p.size}")
+      assert(p.sorted == windowPrefix(sfd, houses, 5000))
+      val got = GraphOps.houseSubgraph(spark, sfd, houses).collect().map(_.toString).sorted.toSeq
+      assert(got.size == 5000)
+      assert(got == naiveSubgraph(sfd, houses, 5000))
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS graft_edges_und_${new java.io.File(sfd).getName}")
+      for (d <- Seq(root, graft.etl.Artifacts.path(sfd, "")))
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))
     }
   }
 

@@ -38,8 +38,10 @@ class PlanSpec extends AnyFunSuite {
       s"bucketed sides re-shuffled:\n$p")
   }
 
-  test("j4 house subgraph: prefix literals reach the scans; construction = one bounded probe") {
+  test("j4 house subgraph: warm build runs no job; prefix prunes node scan and edge buckets") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val houses = Seq("BUILDING", "AUTOMOBILE")
+    graft.ops.GraphOps.houseSubgraph(spark, sf, houses) // warm: artifact + driver index
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val l = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
@@ -49,7 +51,7 @@ class PlanSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(l)
     try {
-      val df = graft.ops.GraphOps.houseSubgraph(spark, sf, Seq("BUILDING", "AUTOMOBILE"))
+      val df = graft.ops.GraphOps.houseSubgraph(spark, sf, houses)
       // Listener events are async: poll until the job count is stable for
       // 500 ms (bounded at 5 s) instead of hoping one fixed sleep drains
       // the bus on a loaded machine.
@@ -60,19 +62,24 @@ class PlanSpec extends AnyFunSuite {
         Thread.sleep(250); waited += 250
         if (jobs.size == last) stableMs += 250 else { stableMs = 0; last = jobs.size }
       }
-      // Construction may run ONLY the single bounded prefix probe (plus
-      // constant-cost parquet footer/schema reads). The r6 shape ran two
-      // probes; a no-collect broadcast-restriction variant ran zero but
-      // lost scan pushdown entirely (j4 0.3→4.4 s at sf0.1) — this pins
-      // the measured optimum: one probe, literals pushed.
-      val queryJobs = jobs.toArray(Array.empty[String]).filterNot(_.startsWith("parquet at"))
-      assert(queryJobs.size <= 6, // one probe; AQE runs it as a few sub-jobs
-        s"houseSubgraph ran ${queryJobs.size} query jobs during construction: ${queryJobs.toSeq}")
-      // The property the probe buys: the prefix-name literals are pushed
-      // into the node scans feeding the clique self-join.
+      // The prefix comes from the cached driver index and the edges from
+      // the build-once artifact: nothing runs before execution.
+      assert(jobs.isEmpty,
+        s"houseSubgraph ran ${jobs.size} jobs during a warm construction: ${jobs.toArray.toSeq}")
+      // The prefix-name literals are pushed into the node scan…
       val p = plan(df)
       assert(p.contains("PushedFilters: [In(c_name") || p.contains("In(c_name,"),
         s"prefix literals not pushed into the scan:\n$p")
+      // …and into the bucketed edges_und scan, whose listing they prune.
+      val edgeScans = df.queryExecution.sparkPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.tableIdentifier.exists(_.table.contains("edges_und")) => f
+      }
+      assert(edgeScans.size == 1, s"expected one edges_und scan:\n$p")
+      val scan = edgeScans.head
+      assert(scan.metadata("PushedFilters").contains("In(src,"), s"src not pushed: ${scan.metadata}")
+      val selected = scan.optionalBucketSet.map(_.cardinality()).getOrElse(32)
+      assert(selected < 32, s"edges_und scan selected $selected of 32 buckets")
     } finally spark.sparkContext.removeSparkListener(l)
   }
 

@@ -237,21 +237,6 @@ class SourcesSpec extends AnyFunSuite {
   private def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Spark jobs started while `body` runs. Listener events post
-    * asynchronously: drain earlier work first, and give a job started in
-    * `body` time to surface. */
-  private def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    Thread.sleep(500)
-    spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(1000); n.get() }
-    finally spark.sparkContext.removeSparkListener(l)
-  }
-
   /** The footer-cache read's schema equals Spark's inferred one; the
     * schema-only probe equals its data part (`partitionCols` excluded). */
   private def sameSchemaAsSpark(paths: Seq[String],
@@ -335,5 +320,35 @@ class SourcesSpec extends AnyFunSuite {
       assert(intercept[org.apache.spark.sql.AnalysisException](
         graft.core.FileMeta.parquetSchema(spark, d)).getCondition == want.getCondition)
     }
+  }
+
+  // ------------------------------------------- input-keyed driver values
+
+  test("derived values cache by input identity: an unchanged input hits, a touched or rewritten one misses") {
+    import graft.core.FileMeta
+    val dir = tempDir("graft_fm_derived") + "/t"
+    spark.range(10).write.parquet(dir)
+    val runs = new java.util.concurrent.atomic.AtomicInteger(0)
+    def sum(): java.lang.Long = FileMeta.derived[java.lang.Long]("spec.sum", Seq(dir), _ => 16L) {
+      runs.incrementAndGet()
+      FileMeta.parquet(spark, dir).agg(org.apache.spark.sql.functions.sum("id")).head().getLong(0)
+    }
+    assert(sum() == 45L && runs.get == 1)
+    assert(sum() == 45L && runs.get == 1, "unchanged inputs recomputed")
+    // A touched input file (same bytes, new mtime) misses.
+    val part = new java.io.File(dir).listFiles().map(_.toPath)
+      .filter(_.toString.endsWith(".parquet")).head
+    val t0 = java.nio.file.Files.getLastModifiedTime(part).toMillis
+    java.nio.file.Files.setLastModifiedTime(part, java.nio.file.attribute.FileTime.fromMillis(t0 + 5000))
+    assert(sum() == 45L && runs.get == 2, "a touched input was served from the cache")
+    assert(sum() == 45L && runs.get == 2)
+    // A deleted and rewritten dir misses and serves the new contents.
+    spark.range(5).write.mode("overwrite").parquet(dir)
+    assert(sum() == 10L && runs.get == 3, "a rewritten input was served from the cache")
+    assert(sum() == 10L && runs.get == 3)
+    // An overflow past the cap clears the value; it then caches again.
+    FileMeta.derived[java.lang.Long]("spec.overflow", Seq(dir), _ => FileMeta.CapBytes)(0L)
+    assert(sum() == 10L && runs.get == 4, "the value survived an overflow")
+    assert(sum() == 10L && runs.get == 4)
   }
 }

@@ -1,35 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      // The generated-class cache (static conf, default 100 entries) is
-      // sized for a handful of hot queries; a service surface of 322
-      // distinct plans evicts it completely between two runs of the same
-      // query, so EVERY execution re-pays Janino compilation of every
-      // codegen unit on the driver. Scale-independent (plan-count-driven,
-      // not data- or core-count-driven); env override for A/B runs.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Queries that cache intermediates (ML feature frames, GraphX vertex/
-    // edge RDDs) must not bleed memory pressure into later queries: drop
-    // all cached state between runs.
-    def clearCaches(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      // (Measured: an explicit System.gc() here costs ~30s across the run
-      // and does not improve the high-variance outliers — don't add one.)
-    }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session.local(cpus)
     // Unmeasured warmup pass (SPARK_GRAFT_WARMUP=0 disables): each query's
     // generated code is unique, so first execution pays catalyst analysis +
     // codegen + C2 compilation (measured 3-8× the steady state). A service
@@ -48,7 +23,7 @@ object Bench {
     if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0")
       selected.foreach { case (_, fn) =>
         try fn(spark, sfDir).count() catch { case _: Throwable => () }
-        clearCaches()
+        Session.clearCaches(spark)
       }
     val warmupSec = (System.nanoTime() - warmupT0) / 1e9
     // Min of 2 measured runs per query: the driver environment shows
@@ -99,7 +74,10 @@ object Bench {
           case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        clearCaches()
+        // Cached state must not bleed memory pressure into the next run.
+        // (Measured: an explicit System.gc() here costs ~30s across the
+        // run and does not improve the high-variance outliers.)
+        Session.clearCaches(spark)
         // A failed query reports -1, never a normal-looking elapsed time.
         if (ok) dt else -1.0
       }

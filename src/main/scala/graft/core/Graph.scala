@@ -203,7 +203,9 @@ object Graph {
     // heuristic only looks for joins/aggregations, and turning the bucketed
     // layout off forfeits bucket PRUNING — the whole point of this table
     // for `src = literal` lookups (measured: Bucketed: false reads all 32
-    // buckets; with pruning, 1 of 32).
+    // buckets; with pruning, 1 of 32). Session.local sets this already;
+    // the set stays for sessions built elsewhere (perfbench's graph_serve
+    // serves from its own), and it is the one entry-side session write.
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     val table = graft.etl.Artifacts.ensureBucketed(spark, sfDir, "edges_und", "src", 32) {
       undirected(personEdgesAmong(spark, nodes(spark, sfDir)))

@@ -29,11 +29,11 @@ object Tables {
     * reads raw nanos as long, truncated to micros with integer arithmetic,
     * since a double division would lose precision above 2^53 ns) and
     * TIMESTAMP(MICROS) (current fixtures — read as TIMESTAMP_NTZ).
-    * Dispatch on the observed type; either way the output is a session-
+    * Dispatch on the observed type (the escape hatch is on in every
+    * [[Session.local]] session); either way the output is a session-
     * zone (UTC) microsecond TIMESTAMP, matching the oracle's
     * `CAST(ts AS TIMESTAMP)` (DuckDB ns→µs cast floors — verified). */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = read(spark, sfDir, "events")
     import org.apache.spark.sql.functions.{col, expr}
     df.schema("ts").dataType match {

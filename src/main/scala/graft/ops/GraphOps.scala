@@ -1305,12 +1305,7 @@ object GraphOps {
   def txCatalogSpj(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = java.nio.file.Files.createTempDirectory("graft_tx_s44").toString
     val cat = s"gcat_s44_${CatalogSeq.incrementAndGet()}" // session caches catalogs by name
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    val before = (
-      spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false"),
-      spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    try {
+    try graft.core.Session.withConf(spark, catalogConf(cat, wh): _*) {
       val base = Graph.nodes(spark, sfDir)
         .filter(col("name") <= "Customer#000000199")
         .select("name", "house", "acctbal")
@@ -1324,32 +1319,47 @@ object GraphOps {
             .select(col("name"), (col("acctbal") * 2).as("score")),
           Seq("name"), numBuckets = 4))
 
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.sql(
-        s"""SELECT f.name, f.house, f.acctbal, s.score
-           |FROM $cat.facts f JOIN $cat.scores s ON f.name = s.name""".stripMargin)
-      val spjPlan =
-        !joined.queryExecution.executedPlan.toString.contains("Exchange")
-      val readOnly =
-        try { spark.sql(s"DROP TABLE $cat.facts"); false }
-        catch { case e: Exception => e.getMessage.contains("read-only") }
+      graft.core.Session.withConf(spark,
+          "spark.sql.sources.v2.bucketing.enabled" -> true,
+          "spark.sql.autoBroadcastJoinThreshold" -> -1) {
+        val joined = spark.sql(
+          s"""SELECT f.name, f.house, f.acctbal, s.score
+             |FROM $cat.facts f JOIN $cat.scores s ON f.name = s.name""".stripMargin)
+        val spjPlan =
+          !joined.queryExecution.executedPlan.toString.contains("Exchange")
+        val readOnly =
+          try { spark.sql(s"DROP TABLE $cat.facts"); false }
+          catch { case e: Exception => e.getMessage.contains("read-only") }
 
-      joined
-        .filter(col("name") <= "Customer#000000079")
-        .select(col("name"), col("house"),
-          round(col("acctbal") * 100).cast("long").as("acctbal_x100"),
-          round(col("score") * 100).cast("long").as("score_x100"),
-          lit(spjPlan).as("spj_plan"), lit(readOnly).as("read_only"))
-        .orderBy("name")
-        .localCheckpoint()
-    } finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", before._1)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before._2)
-      graft.core.TxTable.drop(wh)
-    }
+        joined
+          .filter(col("name") <= "Customer#000000079")
+          .select(col("name"), col("house"),
+            round(col("acctbal") * 100).cast("long").as("acctbal_x100"),
+            round(col("score") * 100).cast("long").as("score_x100"),
+            lit(spjPlan).as("spj_plan"), lit(readOnly).as("read_only"))
+          .orderBy("name")
+          .localCheckpoint()
+      }
+    } finally graft.core.TxTable.drop(wh)
   }
   private val CatalogSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** The settings that register GraftCatalog as `cat` over warehouse `wh`.
+    * The session keeps a loaded catalog by name, so they are needed only
+    * until the catalog's first use. */
+  private def catalogConf(cat: String, wh: String): Seq[(String, Any)] = Seq(
+    s"spark.sql.catalog.$cat" -> "graft.sources.GraftCatalog",
+    s"spark.sql.catalog.$cat.warehouse" -> wh)
+
+  /** Parquet writer settings for `block`-byte row groups (pages a quarter
+    * of that), as session settings: Spark copies them into each write's
+    * Hadoop configuration. */
+  private def parquetGroups(block: Int): Seq[(String, Any)] = Seq(
+    "parquet.block.size" -> block, "parquet.page.size" -> block / 4)
+
+  /** At most `n` rows (at least one) per written file. */
+  private def maxRecords(n: Long): (String, Any) =
+    "spark.sql.files.maxRecordsPerFile" -> math.max(1L, n)
 
   /** Sorted-compaction demo (s49_sorted_compact) — OPTIMIZE with data
     * CLUSTERING, the layout half of round 13's row-group skipping
@@ -1369,25 +1379,21 @@ object GraphOps {
     * numOutputRows shrinks ≥2× after sorting (scan-level: residual
     * filters run above it, only footer skipping can shrink it). */
   def txSortedCompact(spark: SparkSession, sfDir: String): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val before = (hconf.get("parquet.block.size"), hconf.get("parquet.page.size"))
+    val base = graft.core.Tables.lineitem(spark, sfDir).select(
+      (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
+      round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
+      col("l_returnflag").as("flag"))
+    // Row-count-adaptive group size (s51's measured rule, applied here
+    // too): tiny groups only where skip granularity needs them — at
+    // sf0.1 the fixed 32 KB groups meant ~1.5k per-group flush/decode
+    // cycles across the two rewrites while ~45 groups of 256 KB prove
+    // the same ≥2× certificate at a fraction of the cost. The count is
+    // one row per lineitem line, so the sizing reads the input's footer
+    // record count (exact) instead of paying a full count() scan.
+    val block = if (graft.core.Tables.footerRowCount(sfDir, "lineitem")
+      < 100000) 32 * 1024 else 256 * 1024
     var dir: String = null
-    try {
-      val base = graft.core.Tables.lineitem(spark, sfDir).select(
-        (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
-        round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
-        col("l_returnflag").as("flag"))
-      // Row-count-adaptive group size (s51's measured rule, applied here
-      // too): tiny groups only where skip granularity needs them — at
-      // sf0.1 the fixed 32 KB groups meant ~1.5k per-group flush/decode
-      // cycles across the two rewrites while ~45 groups of 256 KB prove
-      // the same ≥2× certificate at a fraction of the cost. The count is
-      // one row per lineitem line, so the sizing reads the input's footer
-      // record count (exact) instead of paying a full count() scan.
-      val block = if (graft.core.Tables.footerRowCount(sfDir, "lineitem")
-        < 100000) 32 * 1024 else 256 * 1024
-      hconf.setInt("parquet.block.size", block)
-      hconf.setInt("parquet.page.size", block / 4)
+    try graft.core.Session.withConf(spark, parquetGroups(block): _*) {
       // BUILD-ONCE pass 1 + shallow clone (the s51 treatment): the
       // pre-compact table is a deterministic projection of lineitem —
       // protocol floor — frozen as an artifact; the SORTED REWRITE this
@@ -1432,10 +1438,6 @@ object GraphOps {
         .orderBy("flag")
         .localCheckpoint()
     } finally {
-      if (before._1 == null) hconf.unset("parquet.block.size")
-      else hconf.set("parquet.block.size", before._1)
-      if (before._2 == null) hconf.unset("parquet.page.size")
-      else hconf.set("parquet.page.size", before._2)
       if (dir != null) graft.core.TxTable.drop(dir)
     }
   }
@@ -1461,8 +1463,6 @@ object GraphOps {
   def txClusteredWrite(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_s54").toString
     val dir2 = java.nio.file.Files.createTempDirectory("graft_tx_s54n").toString
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val before = (hconf.get("parquet.block.size"), hconf.get("parquet.page.size"))
     try {
       // The synthetic lineitem repeats (orderkey, linenumber) pairs, so a
       // keyed MERGE over the raw rows would collapse duplicates — fold to
@@ -1494,50 +1494,46 @@ object GraphOps {
       val block =
         if (graft.core.Tables.footerRowCountAt(baseDir) < 100000) 32 * 1024
         else 256 * 1024
-      hconf.setInt("parquet.block.size", block)
-      hconf.setInt("parquet.page.size", block / 4)
-      // Two independent tables: creates (and the two merges below) are
-      // independent jobs — overlap them (guide §2.6) so the pair costs
-      // ~max, not ~sum, of two short write jobs.
-      val (t, twin) = par2(
-        graft.core.TxTable.create(spark, dir, base, Seq("k"),
-          numBuckets = 1, clusterCols = Seq("price_cents")),
-        graft.core.TxTable.create(spark, dir2, base, Seq("k"),
-          numBuckets = 1))
-      // The same real update lands on both: every k ≡ 0 (mod 7) flips its
-      // flag. One bucket ⇒ the merge rewrites the WHOLE table through the
-      // write path — the clustered side comes back fully sorted, the twin
-      // in whatever order the rewrite produced.
-      val upd = base.filter(col("k") % 7 === 0).withColumn("flag", lit("U"))
-        .localCheckpoint()
-      par2(t.merge(upd), twin.merge(upd))
+      graft.core.Session.withConf(spark, parquetGroups(block): _*) {
+        // Two independent tables: creates (and the two merges below) are
+        // independent jobs — overlap them (guide §2.6) so the pair costs
+        // ~max, not ~sum, of two short write jobs.
+        val (t, twin) = par2(
+          graft.core.TxTable.create(spark, dir, base, Seq("k"),
+            numBuckets = 1, clusterCols = Seq("price_cents")),
+          graft.core.TxTable.create(spark, dir2, base, Seq("k"),
+            numBuckets = 1))
+        // The same real update lands on both: every k ≡ 0 (mod 7) flips its
+        // flag. One bucket ⇒ the merge rewrites the WHOLE table through the
+        // write path — the clustered side comes back fully sorted, the twin
+        // in whatever order the rewrite produced.
+        val upd = base.filter(col("k") % 7 === 0).withColumn("flag", lit("U"))
+          .localCheckpoint()
+        par2(t.merge(upd), twin.merge(upd))
 
-      def conn(d: String) = spark.read.format("graft").load(d)
-      val pred = col("price_cents").between(2000000L, 2100000L)
-      def emitted(d: String): Long = {
-        val q = conn(d).filter(pred)
-        q.collect()
-        q.queryExecution.executedPlan.collectLeaves()
-          .flatMap(_.metrics.get("numOutputRows").map(_.value)).sum
+        def conn(d: String) = spark.read.format("graft").load(d)
+        val pred = col("price_cents").between(2000000L, 2100000L)
+        def emitted(d: String): Long = {
+          val q = conn(d).filter(pred)
+          q.collect()
+          q.queryExecution.executedPlan.collectLeaves()
+            .flatMap(_.metrics.get("numOutputRows").map(_.value)).sum
+        }
+        val contentMatch = sameRows(t.snapshot(), twin.snapshot())
+        val ops = t.history().orderBy("version").collect().map(_.getString(1)).toSeq
+        val (clustered, unclustered) = par2(emitted(dir), emitted(dir2))
+        val certNoOptimize = ops == Seq("create", "merge") &&
+          clustered * 2 <= unclustered
+
+        conn(dir).filter(pred)
+          .groupBy("flag")
+          .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
+          .withColumn("content_match", lit(contentMatch))
+          .withColumn("clustered_no_optimize", lit(certNoOptimize))
+          .orderBy("flag")
+          .localCheckpoint()
       }
-      val contentMatch = sameRows(t.snapshot(), twin.snapshot())
-      val ops = t.history().orderBy("version").collect().map(_.getString(1)).toSeq
-      val (clustered, unclustered) = par2(emitted(dir), emitted(dir2))
-      val certNoOptimize = ops == Seq("create", "merge") &&
-        clustered * 2 <= unclustered
-
-      conn(dir).filter(pred)
-        .groupBy("flag")
-        .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
-        .withColumn("content_match", lit(contentMatch))
-        .withColumn("clustered_no_optimize", lit(certNoOptimize))
-        .orderBy("flag")
-        .localCheckpoint()
     } finally {
-      if (before._1 == null) hconf.unset("parquet.block.size")
-      else hconf.set("parquet.block.size", before._1)
-      if (before._2 == null) hconf.unset("parquet.page.size")
-      else hconf.set("parquet.page.size", before._2)
       graft.core.TxTable.drop(dir); graft.core.TxTable.drop(dir2)
     }
   }
@@ -1558,8 +1554,6 @@ object GraphOps {
     * only footer skipping can shrink it). Small parquet row groups give
     * test-scale granularity, as in s49. */
   def txZorderCompact(spark: SparkSession, sfDir: String): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val before = (hconf.get("parquet.block.size"), hconf.get("parquet.page.size"))
     val base0 = graft.core.Tables.lineitem(spark, sfDir).select(
       (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
       round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
@@ -1585,8 +1579,6 @@ object GraphOps {
       }
     }
     val block = if (nRows < 100000) 16 * 1024 else 256 * 1024
-    hconf.setInt("parquet.block.size", block)
-    hconf.setInt("parquet.page.size", block / 4)
     // BUILD-ONCE pass 1 (the s52/s57 treatment, extended with a SHALLOW
     // CLONE): the pre-compact table is a deterministic projection of
     // lineitem — pure protocol floor — so it freezes as an artifact.
@@ -1598,7 +1590,7 @@ object GraphOps {
     // cost is the rewrite itself, not the rebuild of its input.
     val art = graft.etl.Artifacts.path(sfDir, "tx_demo_s51")
     var dir: String = null
-    try {
+    try graft.core.Session.withConf(spark, parquetGroups(block): _*) {
       val artReady = java.nio.file.Paths.get(art, "_GRAFT_READY")
       if (!java.nio.file.Files.exists(artReady)) {
         graft.core.TxTable.drop(art)
@@ -1639,10 +1631,6 @@ object GraphOps {
         .orderBy("flag")
         .localCheckpoint()
     } finally {
-      if (before._1 == null) hconf.unset("parquet.block.size")
-      else hconf.set("parquet.block.size", before._1)
-      if (before._2 == null) hconf.unset("parquet.page.size")
-      else hconf.set("parquet.page.size", before._2)
       if (dir != null) graft.core.TxTable.drop(dir)
     }
   }
@@ -1931,27 +1919,22 @@ object GraphOps {
     val readyMark = java.nio.file.Paths.get(dir, "_GRAFT_READY")
     if (!java.nio.file.Files.exists(readyMark)) {
       graft.core.TxTable.drop(dir)
-      val maxRecBefore = spark.conf.getOption("spark.sql.files.maxRecordsPerFile")
-      try {
-        val base = graft.core.Tables.lineitem(spark, sfDir).select(
-          (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
-          round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
-          col("l_returnflag").as("flag"))
-        val nRows = base.count()
-        val tb = graft.core.TxTable.create(spark, dir, base, Seq("k"),
-          numBuckets = 8, zoneMapCols = Seq("price_cents"))
-        // Sorted rewrite split into ~6 range-disjoint files per bucket:
-        // the layout a 100 TB table maintains continuously via
-        // cluster-on-write + size-targeted compaction.
-        spark.conf.set("spark.sql.files.maxRecordsPerFile", math.max(1L, nRows / 48))
+      val base = graft.core.Tables.lineitem(spark, sfDir).select(
+        (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
+        round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
+        col("l_returnflag").as("flag"))
+      val nRows = base.count()
+      val tb = graft.core.TxTable.create(spark, dir, base, Seq("k"),
+        numBuckets = 8, zoneMapCols = Seq("price_cents"))
+      // Sorted rewrite split into ~6 range-disjoint files per bucket:
+      // the layout a 100 TB table maintains continuously via
+      // cluster-on-write + size-targeted compaction.
+      graft.core.Session.withConf(spark, maxRecords(nRows / 48)) {
         tb.compact(0, Seq("price_cents"))
-        // Below-domain probe bound, frozen beside the layout.
-        java.nio.file.Files.writeString(readyMark.resolveSibling("_GRAFT_BOUNDS"),
-          base.agg(min("price_cents")).head.getLong(0).toString)
-      } finally maxRecBefore match {
-        case Some(v) => spark.conf.set("spark.sql.files.maxRecordsPerFile", v)
-        case None => spark.conf.unset("spark.sql.files.maxRecordsPerFile")
       }
+      // Below-domain probe bound, frozen beside the layout.
+      java.nio.file.Files.writeString(readyMark.resolveSibling("_GRAFT_BOUNDS"),
+        base.agg(min("price_cents")).head.getLong(0).toString)
       java.nio.file.Files.createFile(readyMark)
     }
     {
@@ -2029,22 +2012,17 @@ object GraphOps {
     val readyMark = java.nio.file.Paths.get(dir, "_GRAFT_READY")
     if (!java.nio.file.Files.exists(readyMark)) {
       graft.core.TxTable.drop(dir)
-      val maxRecBefore = spark.conf.getOption("spark.sql.files.maxRecordsPerFile")
-      try {
-        val base = graft.core.Tables.lineitem(spark, sfDir).select(
-          (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
-          round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
-          col("l_returnflag").as("flag"))
-          .withColumn("token", md5(col("k").cast("string")))
-        val nRows = base.count()
-        val tb = graft.core.TxTable.create(spark, dir, base, Seq("k"),
-          numBuckets = 8, zoneMapCols = Seq("price_cents"),
-          bloomCols = Seq("token"))
-        spark.conf.set("spark.sql.files.maxRecordsPerFile", math.max(1L, nRows / 48))
+      val base = graft.core.Tables.lineitem(spark, sfDir).select(
+        (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
+        round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
+        col("l_returnflag").as("flag"))
+        .withColumn("token", md5(col("k").cast("string")))
+      val nRows = base.count()
+      val tb = graft.core.TxTable.create(spark, dir, base, Seq("k"),
+        numBuckets = 8, zoneMapCols = Seq("price_cents"),
+        bloomCols = Seq("token"))
+      graft.core.Session.withConf(spark, maxRecords(nRows / 48)) {
         tb.compact(0, Seq("price_cents"))
-      } finally maxRecBefore match {
-        case Some(v) => spark.conf.set("spark.sql.files.maxRecordsPerFile", v)
-        case None => spark.conf.unset("spark.sql.files.maxRecordsPerFile")
       }
       java.nio.file.Files.createFile(readyMark)
     }
@@ -2124,21 +2102,16 @@ object GraphOps {
     val readyMark = java.nio.file.Paths.get(dir, "_GRAFT_READY")
     if (!java.nio.file.Files.exists(readyMark)) {
       graft.core.TxTable.drop(dir)
-      val maxRecBefore = spark.conf.getOption("spark.sql.files.maxRecordsPerFile")
-      try {
-        val base = graft.core.Tables.part(spark, sfDir).select(
-          col("p_partkey").as("k"), col("p_name").as("name"),
-          round(col("p_retailprice") * 100).cast("long").as("price_cents"))
-        val nRows = base.count()
-        val tb = graft.core.TxTable.create(spark, dir, base, Seq("k"),
-          numBuckets = 8, zoneMapCols = Seq("name"))
-        // Sorted rewrite into ~6 range-disjoint files per bucket — the
-        // continuously-clustered layout of s55, on a STRING dimension.
-        spark.conf.set("spark.sql.files.maxRecordsPerFile", math.max(1L, nRows / 48))
+      val base = graft.core.Tables.part(spark, sfDir).select(
+        col("p_partkey").as("k"), col("p_name").as("name"),
+        round(col("p_retailprice") * 100).cast("long").as("price_cents"))
+      val nRows = base.count()
+      val tb = graft.core.TxTable.create(spark, dir, base, Seq("k"),
+        numBuckets = 8, zoneMapCols = Seq("name"))
+      // Sorted rewrite into ~6 range-disjoint files per bucket — the
+      // continuously-clustered layout of s55, on a STRING dimension.
+      graft.core.Session.withConf(spark, maxRecords(nRows / 48)) {
         tb.compact(0, Seq("name"))
-      } finally maxRecBefore match {
-        case Some(v) => spark.conf.set("spark.sql.files.maxRecordsPerFile", v)
-        case None => spark.conf.unset("spark.sql.files.maxRecordsPerFile")
       }
       java.nio.file.Files.createFile(readyMark)
     }
@@ -2223,19 +2196,10 @@ object GraphOps {
         if (nRows < 10000) 4 * 1024
         else if (nRows < 100000) 16 * 1024
         else 192 * 1024
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val before = (hconf.get("parquet.block.size"), hconf.get("parquet.page.size"))
-      hconf.setInt("parquet.block.size", block)
-      hconf.setInt("parquet.page.size", block / 4)
-      try {
+      graft.core.Session.withConf(spark, parquetGroups(block): _*) {
         graft.core.TxTable.create(spark, flatDir, base, Seq("k"), numBuckets = 1)
         val t = graft.core.TxTable.create(spark, zDir, base, Seq("k"), numBuckets = 1)
         t.compactZOrder(Seq("price_cents", "part", "sup"))
-      } finally {
-        if (before._1 == null) hconf.unset("parquet.block.size")
-        else hconf.set("parquet.block.size", before._1)
-        if (before._2 == null) hconf.unset("parquet.page.size")
-        else hconf.set("parquet.page.size", before._2)
       }
       // Probe bounds frozen beside the layouts (deterministic over base).
       val Array(b) = graft.core.Tables.lineitem(spark, sfDir)
@@ -2310,19 +2274,10 @@ object GraphOps {
         col("l_returnflag").as("flag"))
       val nRows = base.count()
       val block = if (nRows < 100000) 16 * 1024 else 256 * 1024
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val before = (hconf.get("parquet.block.size"), hconf.get("parquet.page.size"))
-      hconf.setInt("parquet.block.size", block)
-      hconf.setInt("parquet.page.size", block / 4)
-      try {
+      graft.core.Session.withConf(spark, parquetGroups(block): _*) {
         graft.core.TxTable.create(spark, flatDir, base, Seq("k"), numBuckets = 1)
         val t = graft.core.TxTable.create(spark, hDir, base, Seq("k"), numBuckets = 1)
         t.compactHilbert(Seq("price_cents", "part"))
-      } finally {
-        if (before._1 == null) hconf.unset("parquet.block.size")
-        else hconf.set("parquet.block.size", before._1)
-        if (before._2 == null) hconf.unset("parquet.page.size")
-        else hconf.set("parquet.page.size", before._2)
       }
       // Probe bound frozen beside the layouts (deterministic over base).
       java.nio.file.Files.writeString(readyMark.resolveSibling("_GRAFT_BOUNDS"),
@@ -2567,13 +2522,7 @@ object GraphOps {
   def txCompositeSpj(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = java.nio.file.Files.createTempDirectory("graft_tx_s47").toString
     val cat = s"gcat_s47_${CatalogSeq.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    val before = (
-      spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false"),
-      spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
-      spark.conf.get("spark.sql.requireAllClusterKeysForCoPartition"))
-    try {
+    try graft.core.Session.withConf(spark, catalogConf(cat, wh): _*) {
       val base = Graph.nodes(spark, sfDir)
         .filter(col("name") <= "Customer#000000199")
         .select("name", "house", "acctbal")
@@ -2588,53 +2537,50 @@ object GraphOps {
             .select(col("name"), col("house"), (col("acctbal") * 2).as("score")),
           Seq("name", "house"), numBuckets = 4))
 
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // The bucket-equality term is only sound when both sides share one
-      // bucket count (see the precondition above) — verify, don't assume.
-      val keys = Seq("name", "house")
-      val nF = graft.core.TxTable.open(spark, s"$wh/facts", keys).bucketCount
-      val nS = graft.core.TxTable.open(spark, s"$wh/scores", keys).bucketCount
-      require(nF == nS,
-        s"composite-SPJ bucket term needs equal bucket counts, got $nF vs $nS")
-      val joined = spark.sql(
-        s"""SELECT f.name, f.house, f.acctbal, s.score
-           |FROM $cat.facts f JOIN $cat.scores s
-           |ON f.name = s.name AND f.house = s.house
-           |AND f._graft_bucket = s._graft_bucket""".stripMargin)
-      val spjPlan =
-        !joined.queryExecution.executedPlan.toString.contains("Exchange")
+      graft.core.Session.withConf(spark,
+          "spark.sql.sources.v2.bucketing.enabled" -> true,
+          "spark.sql.autoBroadcastJoinThreshold" -> -1,
+          "spark.sql.requireAllClusterKeysForCoPartition" -> false) {
+        // The bucket-equality term is only sound when both sides share one
+        // bucket count (see the precondition above) — verify, don't assume.
+        val keys = Seq("name", "house")
+        val nF = graft.core.TxTable.open(spark, s"$wh/facts", keys).bucketCount
+        val nS = graft.core.TxTable.open(spark, s"$wh/scores", keys).bucketCount
+        require(nF == nS,
+          s"composite-SPJ bucket term needs equal bucket counts, got $nF vs $nS")
+        val joined = spark.sql(
+          s"""SELECT f.name, f.house, f.acctbal, s.score
+             |FROM $cat.facts f JOIN $cat.scores s
+             |ON f.name = s.name AND f.house = s.house
+             |AND f._graft_bucket = s._graft_bucket""".stripMargin)
+        val spjPlan =
+          !joined.queryExecution.executedPlan.toString.contains("Exchange")
 
-      val bucketColOk = spark.sql(
-        s"SELECT name, house, _graft_bucket FROM $cat.facts")
-        .filter(col("_graft_bucket") =!=
-          pmod(xxhash64(col("name"), col("house")), lit(4)).cast("int"))
-        .count() == 0L
+        val bucketColOk = spark.sql(
+          s"SELECT name, house, _graft_bucket FROM $cat.facts")
+          .filter(col("_graft_bucket") =!=
+            pmod(xxhash64(col("name"), col("house")), lit(4)).cast("int"))
+          .count() == 0L
 
-      val pruned = spark.sql(s"SELECT name FROM $cat.facts WHERE _graft_bucket = 3")
-      pruned.collect()
-      val scanned = pruned.queryExecution.executedPlan.collectLeaves()
-        .flatMap(_.metrics.get("numOutputRows").map(_.value)).sum
-      val inBucket = base
-        .filter(pmod(xxhash64(col("name"), col("house")), lit(4)) === 3).count()
-      val bucketPruned = scanned == inBucket && scanned < base.count()
+        val pruned = spark.sql(s"SELECT name FROM $cat.facts WHERE _graft_bucket = 3")
+        pruned.collect()
+        val scanned = pruned.queryExecution.executedPlan.collectLeaves()
+          .flatMap(_.metrics.get("numOutputRows").map(_.value)).sum
+        val inBucket = base
+          .filter(pmod(xxhash64(col("name"), col("house")), lit(4)) === 3).count()
+        val bucketPruned = scanned == inBucket && scanned < base.count()
 
-      joined
-        .filter(col("name") <= "Customer#000000149")
-        .select(col("name"), col("house"),
-          round(col("acctbal") * 100).cast("long").as("acctbal_x100"),
-          round(col("score") * 100).cast("long").as("score_x100"),
-          lit(spjPlan).as("spj_plan"), lit(bucketColOk).as("bucket_col_ok"),
-          lit(bucketPruned).as("bucket_pruned"))
-        .orderBy("name")
-        .localCheckpoint()
-    } finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", before._1)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before._2)
-      spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", before._3)
-      graft.core.TxTable.drop(wh)
-    }
+        joined
+          .filter(col("name") <= "Customer#000000149")
+          .select(col("name"), col("house"),
+            round(col("acctbal") * 100).cast("long").as("acctbal_x100"),
+            round(col("score") * 100).cast("long").as("score_x100"),
+            lit(spjPlan).as("spj_plan"), lit(bucketColOk).as("bucket_col_ok"),
+            lit(bucketPruned).as("bucket_pruned"))
+          .orderBy("name")
+          .localCheckpoint()
+      }
+    } finally graft.core.TxTable.drop(wh)
   }
 
   /** Write-audit-publish demo — the WAP pattern on TxTable branches: the
@@ -2783,9 +2729,7 @@ object GraphOps {
   def txSqlDelete(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = java.nio.file.Files.createTempDirectory("graft_tx_s64").toString
     val cat = s"gcat_s64_${CatalogSeq.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    try graft.core.Session.withConf(spark, catalogConf(cat, wh): _*) {
       val base = Graph.nodes(spark, sfDir)
         .filter(col("name") <= "Customer#000000199")
         .select("name", "house", "acctbal")
@@ -2854,9 +2798,7 @@ object GraphOps {
     import spark.implicits._
     val wh = java.nio.file.Files.createTempDirectory("graft_tx_s67").toString
     val cat = s"gcat_s67_${CatalogSeq.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    try graft.core.Session.withConf(spark, catalogConf(cat, wh): _*) {
       val base = Graph.nodes(spark, sfDir)
         .filter(col("name") <= "Customer#000000199")
         .select("name", "house", "acctbal")
@@ -2929,9 +2871,7 @@ object GraphOps {
     import spark.implicits._
     val wh = java.nio.file.Files.createTempDirectory("graft_tx_s68").toString
     val cat = s"gcat_s68_${CatalogSeq.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    try graft.core.Session.withConf(spark, catalogConf(cat, wh): _*) {
       val base = Graph.nodes(spark, sfDir)
         .filter(col("name") <= "Customer#000000199")
         .select("name", "house", "acctbal")

@@ -248,11 +248,12 @@ object SimilarityOps {
     * `true`, so an index/probe regression flips the boolean and fails the
     * driver compare, while the approximate result itself (which no SQL
     * oracle can reproduce) never enters the hash. Both inputs are ≤ k rows;
-    * the exact side is locally checkpointed so its corpus scan runs once
-    * for the hit count and the output. */
+    * the exact side is collected into a local relation so its corpus scan
+    * runs once for the hit count and the output, and nothing stays
+    * persisted. */
   private def withRecallCertificate(exact: DataFrame, ann: DataFrame,
                                     k: Int, floor: Double): DataFrame = {
-    val e = exact.localCheckpoint()
+    val e = graft.plans.GraphAnalytics.localReleasing(exact.sparkSession, Set.empty, exact)
     val hits = e.select("vec_id").join(ann.select("vec_id"), "vec_id").count()
     e.withColumn("recall_ge_floor", lit(hits >= math.ceil(k * floor).toLong))
   }

@@ -369,7 +369,6 @@ object SqlSurface {
     * 2·coverage ≥ total over the replayed histogram). */
   def sqlScript(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.orders(spark, sfDir).createOrReplaceTempView("graft_orders")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     // Materialize the coverage table BEFORE the loop: a temp view is
     // lazy, so probing it from every WHILE iteration would re-run the
     // full corpus aggregation per round (~log₂(max price) corpus scans —

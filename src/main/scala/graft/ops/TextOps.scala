@@ -1621,23 +1621,25 @@ object TextOps {
       java.nio.file.Files.createFile(ready)
     }
     val t = graft.core.TxTable.open(spark, dir, Seq("doc_id"))
-    val idx0 = postingsOf(t.snapshotAt(0L)).localCheckpoint()
-    val d = t.diff(0L, t.version).localCheckpoint()
-    val maintained = idx0
+    // Every intermediate is bounded by the 200-doc demo table: held as
+    // local relations, so the call leaves nothing persisted.
+    def local(df: DataFrame): DataFrame =
+      graft.plans.GraphAnalytics.localReleasing(spark, Set.empty, df)
+    val idx0 = local(postingsOf(t.snapshotAt(0L)))
+    val d = local(t.diff(0L, t.version))
+    val maintained = local(idx0
       .join(d.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
       .unionByName(postingsOf(
         d.filter(col("change_type") =!= "delete")
-          .select(col("doc_id"), col("new_text").as("text"))))
-      .localCheckpoint()
+          .select(col("doc_id"), col("new_text").as("text")))))
     val full = postingsOf(t.snapshot())
     val matches = maintained.exceptAll(full).isEmpty && full.exceptAll(maintained).isEmpty
-    maintained.groupBy("term")
+    local(maintained.groupBy("term")
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum("tf").cast("long").as("sum_tf"))
       .select(col("term"), col("n_docs"), col("sum_tf"),
         lit(matches).as("incremental_matches_full"))
-      .orderBy("term")
-      .localCheckpoint()
+      .orderBy("term"))
   }
 
   /** Weighted sampling without replacement (Efraimidis–Spirakis A-ES):

@@ -26,8 +26,10 @@ object GraphAnalytics {
     * relation, then every RDD in `roots`' lineage that was persisted
     * since `persistedBefore` (ids from `sc.getPersistentRDDs`) released:
     * the graphs, GraphX's shipped-vertex views and any per-round sets a
-    * call cached. A caller's own persisted inputs stay. */
-  private def localReleasing(spark: SparkSession, persistedBefore: Set[Int],
+    * call cached. A caller's own persisted inputs stay. With no roots it
+    * only collects: a bounded result that persists nothing, where a
+    * `localCheckpoint` would stay in `getPersistentRDDs` after the call. */
+  private[graft] def localReleasing(spark: SparkSession, persistedBefore: Set[Int],
                              result: DataFrame,
                              roots: org.apache.spark.rdd.RDD[_]*): DataFrame = {
     val out = spark.createDataFrame(result.collectAsList(), result.schema)

@@ -188,15 +188,10 @@ object FileFormats {
     if (!Artifacts.exists(p))
       dailyAgg(Tables.events(spark, sfDir).filter(col("event_id") % 10 < 8))
         .write.partitionBy("day").mode("overwrite").parquet(p)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
+    graft.core.Session.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       dailyAgg(Tables.events(spark, sfDir)
           .filter(to_date(col("ts")) === lit(BackfillDay)))
         .write.partitionBy("day").mode("overwrite").parquet(p)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
     // Partition-column type inference turns 'yyyy-MM-dd' dirs into DATE;
     // cast back so the schema matches the oracle's VARCHAR day.

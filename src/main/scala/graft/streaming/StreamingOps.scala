@@ -35,7 +35,6 @@ object StreamingOps {
   /** Streaming read of the events parquet (ts normalized to microsecond
     * session-zone timestamps, same arithmetic as graft.core.Tables.events). */
   def readEventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The footer is cached per file identity; the 12 streaming entries share it.
     val tsType = graft.core.FileMeta.parquetSchema(spark, s"$sfDir/events.parquet")("ts")
       .dataType
@@ -205,20 +204,17 @@ object StreamingOps {
   }
 
   /** Driver entry: userStatsTws on the RocksDB state store (required by
-    * transformWithState), provider restored afterwards so the sibling
-    * streaming entries keep their default HDFS-backed store. */
-  def streamedUserStatsTws(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runToMemory(spark,
+    * transformWithState), for this query only, so the sibling streaming
+    * entries keep their default HDFS-backed store. */
+  def streamedUserStatsTws(spark: SparkSession, sfDir: String): DataFrame =
+    graft.core.Session.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      runToMemory(spark,
         userStatsTws(readEventsStream(spark, sfDir).filter(col("user_id") < 50)),
         "append")
         .orderBy("user_id")
         .localCheckpoint()
-    finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
-  }
+    }
 
   /** Stream-stream interval join — the attribution shape: each purchase
     * joined to the same user's clicks in the 10 minutes before it. Both
@@ -288,6 +284,10 @@ object StreamingOps {
 
   private val runId = new AtomicInteger(0)
 
+  /** The shuffle partitions, hence state stores, a streaming entry's
+    * query starts with (runToMemory says why 8). */
+  private val StreamStores = "spark.sql.shuffle.partitions" -> 8
+
   /** Run a streaming DataFrame to completion (AvailableNow) into a memory
     * sink; return the materialized table. */
   def runToMemory(spark: SparkSession, sdf: DataFrame, outputMode: String): DataFrame = {
@@ -298,13 +298,11 @@ object StreamingOps {
     // (Measured r6: dropping to 4 does NOT help — st_click_attrib stays
     // ~2.7 s either way; the cost is micro-batch planning + the four
     // join-state stores' commit cycle, not the store count.)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = sdf.writeStream.format("memory").queryName(name)
+    graft.core.Session.withConf(spark, StreamStores) {
+      sdf.writeStream.format("memory").queryName(name)
         .outputMode(outputMode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+        .awaitTermination()
+    }
     spark.table(name)
   }
 
@@ -497,9 +495,7 @@ object StreamingOps {
     * st_closed_windows before the consumer aggregation. */
   def streamedFileSink(spark: SparkSession, sfDir: String): DataFrame = {
     val root = java.nio.file.Files.createTempDirectory("graft_s14_sink").toString
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    try graft.core.Session.withConf(spark, StreamStores) {
       val q = windowedTypeCounts(readEventsStream(spark, sfDir))
         .writeStream.format("parquet")
         .option("path", s"$root/out")
@@ -515,10 +511,7 @@ object StreamingOps {
           sum("sum_value").cast("long").as("sum_value_micros"))
         .orderBy("event_type")
         .localCheckpoint()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      graft.core.TxTable.drop(root)
-    }
+    } finally graft.core.TxTable.drop(root)
   }
 
   /** The reference's user-MERGE path (app.py:100-132) as a streaming

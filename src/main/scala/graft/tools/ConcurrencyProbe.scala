@@ -3,8 +3,6 @@ package graft.tools
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch: SERVICE-SHAPE latency measurement. The reference is an
   * interactive web app (reference app.py — Flask routes answering point
   * lookups and 1-hop expansions per request), but every bench number in
@@ -22,12 +20,7 @@ import org.apache.spark.sql.SparkSession
 object ConcurrencyProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(32)
 
     val names = Seq("j1_winder_topk", "j2_expand_1hop", "p3_search_ci")
     def run(name: String): Seq[String] =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch: measure the DSv2 connector's row-materialized data plane
@@ -12,12 +11,7 @@ import org.apache.spark.sql.functions._
 object ConnScanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(32)
     val dir = java.nio.file.Files.createTempDirectory("graft_connprobe").toString
     try {
       // lineitem is the biggest table at any sf; composite key keeps the

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Generic per-entry profiler: run named registry entries (comma-separated)
   * `reps` times each under the bench session config, printing per-run wall
@@ -16,18 +15,8 @@ object EntryProbe {
     val names = args(0).split(',').toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.Session.local(cpus)
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, String)]()
     val live = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -47,8 +36,7 @@ object EntryProbe {
       // Unmeasured warmup (artifact builds, codegen)
       try fn(spark, sfDir).count() catch { case e: Throwable =>
         System.err.println(s"[entry] $name warmup failed: ${e.getMessage}") }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      graft.core.Session.clearCaches(spark)
       (1 to reps).foreach { rep =>
         done.clear()
         val t0 = System.nanoTime()
@@ -60,8 +48,7 @@ object EntryProbe {
         println(f"[entry] $name rep$rep: wall $wall%.3f s, jobs ${evs.length}, on-job $jobSec%.3f s, gap ${wall - jobSec}%.3f s")
         if (rep == reps) evs.sortBy(e => -(e._2 - e._1)).take(12).foreach { case (s, e, d) =>
           println(f"[entry]    job ${(e - s) / 1e3}%.3f s  ${d.take(110)}") }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        graft.core.Session.clearCaches(spark)
       }
     }
     spark.stop()

@@ -1,19 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch plan inspector: print the formatted physical plan of SparkEntry
   * queries. Usage: runMain graft.tools.Explain <q1,q2,...> [sfDir] */
 object Explain {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(32)
     names.foreach { name =>
       println(s"===== $name =====")
       graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scratch phase profiler for the s54-style lifecycle entries: time each
@@ -15,14 +15,8 @@ object PhaseProbe {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 2
     val mode = if (args.length > 2) args(2) else "s54"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.Session.local(cpus)
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()
       val r = f
@@ -110,8 +104,7 @@ object PhaseProbe {
           t("history collect")(tt.history().orderBy("version").collect())
         } finally {
           graft.core.TxTable.drop(dir)
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+          graft.core.Session.clearCaches(spark)
         }
       }
       spark.stop(); return
@@ -171,8 +164,7 @@ object PhaseProbe {
       } finally {
         hconf.unset("parquet.block.size"); hconf.unset("parquet.page.size")
         graft.core.TxTable.drop(dir); graft.core.TxTable.drop(dir2)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        graft.core.Session.clearCaches(spark)
       }
     }
     spark.stop()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch: time the j4 prefix-probe variants in one warmed session —
@@ -9,12 +8,7 @@ import org.apache.spark.sql.functions._
 object ProbeTime {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(32)
     val houses = Seq("BUILDING", "AUTOMOBILE")
     val limit = 5000
     def inHouses = graft.core.Graph.nodes(spark, sfDir)

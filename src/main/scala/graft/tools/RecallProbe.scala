@@ -11,12 +11,7 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(32)
     val queryIds = Seq(0L, 7L, 23L, 42L, 99L)
     for (sf <- sfs) {
       def recallsOf(probe: (SparkSession, String, Long, Int) => org.apache.spark.sql.DataFrame) =

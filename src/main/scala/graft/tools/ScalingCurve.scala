@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Empirical scaling-curve harness — the measurement that converts the
   * library's "designed for 100×" claims into a regression-guarded number.
   *
@@ -84,20 +82,8 @@ object ScalingCurve {
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
     require(sfDirs.size >= 2, "scaling needs at least two scale factors")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def clearCaches(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.Session.local(cpus)
     val only: Set[String] = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(_.split(',').toSet).getOrElse(Set.empty)
     val entries = DefaultEntries.filter(n => only.isEmpty || only.contains(n))
@@ -111,7 +97,7 @@ object ScalingCurve {
     val measured: Seq[Map[String, Double]] = sfDirs.map { dir =>
       entries.foreach { n =>
         try qs(n)(spark, dir).count() catch { case _: Throwable => () }
-        clearCaches()
+        graft.core.Session.clearCaches(spark)
       }
       entries.flatMap { n =>
         val ts = (1 to 2).flatMap { _ =>
@@ -120,7 +106,7 @@ object ScalingCurve {
             case e: Throwable => failed ::= (n, s"$dir: ${e.getMessage}"); false
           }
           val dt = (System.nanoTime() - t0) / 1e9
-          clearCaches()
+          graft.core.Session.clearCaches(spark)
           if (ok) Some(dt) else None
         }
         if (ts.isEmpty) None else Some(n -> ts.min)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch inspector: print a SparkEntry query's result as JSON lines.
   * Usage: runMain graft.tools.Show <queryName> [sfDir] [maxRows] */
 object Show {
@@ -9,12 +7,7 @@ object Show {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val maxRows = if (args.length > 2) args(2).toInt else 50
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(32)
     graft.SparkEntry.queries(name)(spark, sfDir)
       .limit(maxRows).toJSON.collect().foreach(j => println(s"[show] $j"))
     spark.stop()

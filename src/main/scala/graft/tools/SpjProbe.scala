@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch: measure the storage-partitioned join against the shuffled
@@ -11,13 +10,8 @@ import org.apache.spark.sql.functions._
 object SpjProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force the join shape
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(32)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the join shape
     val wh = java.nio.file.Files.createTempDirectory("graft_spjprobe").toString
     spark.conf.set("spark.sql.catalog.gspj", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gspj.warehouse", wh)

@@ -838,6 +838,45 @@ class ExtOpsSpec extends AnyFunSuite {
     assert(rows.map(r => (r.getString(0), r.getString(1))).toSeq == want, "payload rows changed")
   }
 
+  /** A checked ANN entry's answer composed here: the exact top-k rows
+    * plus whether the probe's ids hold ceil(k · floor) of them. */
+  private def certified(k: Int, floor: Double,
+                        probe: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] = {
+    val exact = SimilarityOps.cosineTopK(spark, sf, 0L, k).collect().toSeq
+    val ids = probe.select("vec_id").collect().map(_.getLong(0)).toSet
+    val ok = exact.count(r => ids(r.getAs[Long]("vec_id"))) >= math.ceil(k * floor).toLong
+    exact.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ ok))
+  }
+
+  test("checked LSH top-k leaves no RDD persisted; its answer is the exact top-k with the recall certificate") {
+    val (rows, left) = persistedLeft(SimilarityOps.annTopKChecked(spark, sf).collect().toSeq)
+    assert(left.isEmpty, s"annTopKChecked left ${left.size} RDDs persisted")
+    assert(rows == certified(10, SimilarityOps.LshRecallFloor, SimilarityOps.annTopK(spark, sf, 0L, 10)))
+  }
+
+  test("checked IVF top-k leaves no RDD persisted; its answer is the exact top-k with the recall certificate") {
+    val (rows, left) = persistedLeft(SimilarityOps.ivfTopKChecked(spark, sf).collect().toSeq)
+    assert(left.isEmpty, s"ivfTopKChecked left ${left.size} RDDs persisted")
+    assert(rows == certified(10, SimilarityOps.RecallFloor, SimilarityOps.ivfTopK(spark, sf, 0L, 10)))
+  }
+
+  test("index maintenance leaves no RDD persisted; its answer is the final snapshot's postings per term") {
+    val (rows, left) = persistedLeft(TextOps.indexMaintenance(spark, sf).collect().toSeq)
+    assert(left.isEmpty, s"indexMaintenance left ${left.size} RDDs persisted")
+    // A from-scratch index of the demo table's final snapshot (the
+    // entry's tokenizer: lower-case, split on whitespace, drop empties).
+    val docs = graft.core.TxTable.open(spark, graft.etl.Artifacts.path(sf, "tx_demo_s23"), Seq("doc_id"))
+      .snapshot().select("doc_id", "text").collect().map(r => r.getLong(0) -> r.getString(1))
+    val postings = docs.toSeq.flatMap { case (id, text) =>
+      Option(text).toSeq.flatMap(_.toLowerCase(java.util.Locale.ROOT).split("\\s+"))
+        .filter(_.nonEmpty).map(id -> _)
+    }.groupBy(identity).map { case ((id, term), occ) => (id, term, occ.size.toLong) }
+    val want = postings.groupBy(_._2).toSeq.sortBy(_._1).map { case (term, ps) =>
+      (term, ps.size.toLong, ps.map(_._3).sum, true)
+    }
+    assert(rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).sortBy(_._1) == want)
+  }
+
   test("hof suite: the fold is genuinely ordered (reversal changes the hash)") {
     // fold_hash = ((7·31 + x₁)·31 + x₂)… is order-sensitive; if the
     // implementation ever degenerated into a commutative combine (the

@@ -7,13 +7,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
+  /** The engine's session at 4 cores: specs run the plans the bench and
+    * the gate run. */
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.Session.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

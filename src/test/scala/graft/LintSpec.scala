@@ -7,19 +7,23 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source rules over `src/main/scala` that no compiler enforces. The
-  * one-off probes under `graft/tools` are exempt. Comment lines are
-  * skipped, so prose may name the patterns. */
+  * one-off probes under `graft/tools` are exempt unless a rule says
+  * otherwise. Comment lines are skipped, so prose may name the patterns. */
 class LintSpec extends AnyFunSuite {
 
-  /** (path relative to src/main/scala, source with comment lines blanked). */
-  private lazy val sources: Seq[(String, String)] = {
+  /** (path relative to src/main/scala, source with comment lines blanked),
+    * `graft/tools` included. */
+  private lazy val allSources: Seq[(String, String)] = {
     val root = Paths.get("src/main/scala")
     val s = Files.walk(root)
     val files = try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
                 finally s.close()
-    files.map(f => root.relativize(f).toString -> code(f))
-      .filterNot(_._1.startsWith("graft/tools/")).sortBy(_._1)
+    files.map(f => root.relativize(f).toString -> code(f)).sortBy(_._1)
   }
+
+  private def isTool(f: String): Boolean = f.startsWith("graft/tools/")
+
+  private lazy val sources: Seq[(String, String)] = allSources.filterNot(s => isTool(s._1))
 
   private def code(f: Path): String =
     Files.readAllLines(f).asScala.map { l =>
@@ -58,5 +62,42 @@ class LintSpec extends AnyFunSuite {
     val sites = sources.filter { case (_, src) => fresh.findFirstIn(src).isDefined }.map(_._1)
     assert(sites == Seq("graft/core/FileMeta.scala"),
       s"new Configuration() outside FileMeta: ${sites.mkString(", ")}")
+  }
+
+  test("only Session builds a Spark session") {
+    // One definition, so the bench, the gate, the tools and the specs
+    // run the same settings.
+    val builder = """SparkSession\s*\.\s*builder\b""".r
+    val sites = allSources.filter { case (_, src) => builder.findFirstIn(src).isDefined }.map(_._1)
+    assert(sites == Seq("graft/core/Session.scala"),
+      s"SparkSession.builder outside Session: ${sites.mkString(", ")}")
+  }
+
+  test("outside the tools, only Session changes session or Hadoop settings") {
+    // An entry that sets a key and does not restore it changes every
+    // later plan in the session; Session.withConf scopes a change to one
+    // call. Any use of the shared Hadoop configuration counts, since a
+    // local alias of it can be set under any name. Graph.personEdgesU
+    // keeps one set for sessions built outside Session (its comment
+    // says why).
+    val write = """\.conf\s*\.\s*(?:set|unset)\w*\s*\(|\bhadoopConfiguration\b""".r
+    val def_ = """\bdef\s+(\w+)""".r
+    val sites = allSources.flatMap { case (f, src) =>
+      write.findAllMatchIn(src).map { m =>
+        (f, def_.findAllMatchIn(src.substring(0, m.start)).toSeq.lastOption.map(_.group(1)))
+      }
+    }
+    def allowed(site: (String, Option[String])): Boolean = site match {
+      case ("graft/core/Session.scala", _) => true
+      case ("graft/core/Graph.scala", Some("personEdgesU")) => true
+      case (f, _) => isTool(f)
+    }
+    val offending = sites.filterNot(allowed)
+    assert(offending.isEmpty,
+      s"session or Hadoop settings changed outside Session: ${offending.distinct.mkString(", ")}")
+    // The pattern must still see the sites it allows, or it checks nothing.
+    assert(sites.contains(("graft/core/Session.scala", Some("withConf"))))
+    assert(sites.contains(("graft/core/Graph.scala", Some("personEdgesU"))))
+    assert(write.findFirstIn("val hconf = spark.sparkContext.hadoopConfiguration").isDefined)
   }
 }

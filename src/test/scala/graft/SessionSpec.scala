@@ -1,0 +1,64 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.Row
+import org.scalatest.funsuite.AnyFunSuite
+
+/** No registry entry leaves the session changed, and the order entries
+  * run in changes neither an answer nor a plan. */
+class SessionSpec extends AnyFunSuite {
+  import TestSpark._
+
+  /** Entries that change a session or Hadoop setting while they run. */
+  private val changing = Seq(
+    "s24_backfill", "s44_catalog_spj", "s47_composite_spj", "s49_sorted_compact",
+    "s51_zorder_compact", "s54_clustered_write", "s55_zonemap_range", "s57_zorder_nway",
+    "s59_hilbert_compact", "s60_stats_manifest", "s63_string_zonemap", "s64_sql_delete",
+    "s67_sql_insert", "s68_sql_update_merge", "s14_stream_file_sink", "st_user_stats_tws",
+    "st_window_counts", "rq100_sql_script", "rq9_event_window")
+
+  /** Build-once entries that change a setting only while they build their
+    * artifact, with the artifact's ready mark: removing it makes the
+    * entry build again. */
+  private val buildMarks = Map(
+    "s55_zonemap_range" -> "tx_demo_s55", "s57_zorder_nway" -> "tx_s57_zorder",
+    "s59_hilbert_compact" -> "tx_s59_hilbert", "s60_stats_manifest" -> "tx_demo_s60",
+    "s63_string_zonemap" -> "tx_demo_s63")
+
+  /** Every explicit session setting, and the shared Hadoop configuration's
+    * parquet writer sizes. */
+  private def settings(): Map[String, String] = {
+    val h = spark.sparkContext.hadoopConfiguration
+    spark.conf.getAll ++
+      Seq("parquet.block.size", "parquet.page.size")
+        .flatMap(k => Option(h.get(k)).map(v => s"hadoop:$k" -> v))
+  }
+
+  for (name <- changing) test(s"$name leaves the session settings as it found them") {
+    buildMarks.get(name).foreach { a =>
+      Files.deleteIfExists(Paths.get(graft.etl.Artifacts.path(sf, a), "_GRAFT_READY"))
+    }
+    val before = settings()
+    assert(SparkEntry.queries(name)(spark, sf).collect().nonEmpty, s"$name returned no rows")
+    val after = settings()
+    val changed = (before.keySet ++ after.keySet).toSeq.sorted
+      .filter(k => before.get(k) != after.get(k))
+      .map(k => s"$k: ${before.getOrElse(k, "<unset>")} -> ${after.getOrElse(k, "<unset>")}")
+    assert(changed.isEmpty, s"$name changed: ${changed.mkString("; ")}")
+  }
+
+  test("rq100 and an events entry give the same answers and plans in either order") {
+    def run(name: String): (Seq[Row], String) = {
+      val df = SparkEntry.queries(name)(spark, sf)
+      val plan = df.queryExecution.executedPlan.toString
+        .replaceAll("#\\d+L?", "#_").replaceAll("plan_id=\\d+", "plan_id=_")
+      (df.collect().toSeq, plan)
+    }
+    val pair = Seq("rq100_sql_script", "rq9_event_window")
+    val forward = pair.map(run)
+    val backward = pair.reverse.map(run).reverse
+    assert(forward.map(_._1) == backward.map(_._1), "answers depend on the order")
+    assert(forward.map(_._2) == backward.map(_._2), "plans depend on the order")
+  }
+}

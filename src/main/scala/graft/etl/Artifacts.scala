@@ -1,5 +1,7 @@
 package graft.etl
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Build-once ETL artifacts (ML models, ANN indexes, degree tables) keyed
@@ -8,6 +10,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * path (probe/load only). Local filesystem here; at 100 TB the same
   * layout lands on object storage behind a catalog entry, and `exists`
   * becomes a catalog lookup.
+  *
+  * One publish rule: an artifact built in more than one step goes
+  * through [[frozen]], so a dir at its path is complete and is never
+  * written again. The exception is an artifact written by ONE Spark job
+  * ([[ensureParquet]], the `FileFormats` round-trip writers, the ANN
+  * indexes, and [[ensureBucketed]], whose files sit under a catalog
+  * table's `LOCATION`): its job commit writes Spark's own `_SUCCESS`
+  * after every file, and [[exists]] checks that.
   */
 object Artifacts {
 
@@ -44,21 +54,67 @@ object Artifacts {
     * pruning, RUNTIME join-derived pruning, row-group skipping, and
     * reported statistics — the index-complete read stack), optionally
     * sorted-compacted for effective row-group skipping on `sortBy`.
-    * Build-once: a ready-marker gates readers from a half-built table
-    * (create and the clustering compact are two commits). Returns the
-    * table directory for `spark.read.format("graft").load(dir)`. */
+    * Returns the table directory for `spark.read.format("graft").load(dir)`. */
   def ensureTx(spark: SparkSession, sfDir: String, name: String,
                keys: Seq[String], buckets: Int, sortBy: Seq[String] = Nil)
-              (build: => DataFrame): String = {
-    val p = path(sfDir, s"tx_$name")
-    val ready = new java.io.File(s"$p/_ARTIFACT_READY")
-    if (!ready.exists()) {
-      graft.core.TxTable.drop(p) // clear any half-built attempt
-      val t = graft.core.TxTable.create(spark, p, build, keys, buckets)
+              (build: => DataFrame): String =
+    frozen(sfDir, s"tx_$name") { d =>
+      val t = graft.core.TxTable.create(spark, d, build, keys, buckets)
       if (sortBy.nonEmpty) t.compact(0, sortBy)
-      ready.createNewFile()
     }
-    p
+
+  /** The ready mark of a [[frozen]] artifact; it holds the build's value. */
+  private val Mark = "_GRAFT_FROZEN"
+
+  /** Whether a complete [[frozen]] artifact is published at `p`. */
+  def isFrozen(p: String): Boolean = Files.exists(Paths.get(p, Mark))
+
+  /** Build once, publish atomically: `build` writes the artifact into a
+    * private temp dir beside `path(sfDir, name)`, the ready mark is
+    * written there, and one rename publishes the dir. A build that throws
+    * leaves nothing at the path; of two racing builders the loser drops
+    * its copy; a dir without the mark (a crashed in-place build) is
+    * replaced. Returns the published dir. */
+  def frozen(sfDir: String, name: String)(build: String => Unit): String =
+    publish(sfDir, name) { d => build(d); "" }.toString
+
+  /** [[frozen]] for a build that also derives a small value the entry
+    * needs later (a probe bound, a certificate): the value is frozen in
+    * the mark with the artifact. Returns the dir and the value. */
+  def frozenValue(sfDir: String, name: String)(build: String => String): (String, String) = {
+    val dir = publish(sfDir, name)(build)
+    (dir.toString, Files.readString(dir.resolve(Mark)))
+  }
+
+  private def publish(sfDir: String, name: String)(build: String => String): Path = {
+    val dst = Paths.get(path(sfDir, name))
+    if (!isFrozen(dst.toString)) {
+      Files.createDirectories(dst.getParent)
+      // No leading '.' or '_': Spark's file listing skips such names.
+      val tmp = Files.createTempDirectory(dst.getParent, s"$name.tmp-")
+      try {
+        Files.writeString(tmp.resolve(Mark), build(tmp.toString))
+        if (Files.exists(dst) && !isFrozen(dst.toString)) graft.core.TxTable.drop(dst.toString)
+        try Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
+        catch { case _: java.io.IOException if isFrozen(dst.toString) => () } // a rival won
+      } finally graft.core.TxTable.drop(tmp.toString)
+    }
+    dst
+  }
+
+  /** Copy the tree under `from` to `to` (a private working copy of a
+    * published artifact), except the files `keep` rejects; returns where
+    * those would have gone under `to`. */
+  def copyTree(from: String, to: String, keep: Path => Boolean = _ => true): Seq[Path] = {
+    import scala.jdk.CollectionConverters._
+    val src = Paths.get(from)
+    val s = Files.walk(src)
+    try s.iterator().asScala.toList.flatMap { p =>
+      val q = Paths.get(to).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) { Files.createDirectories(q); None }
+      else if (keep(p)) { Files.copy(p, q, StandardCopyOption.REPLACE_EXISTING); None }
+      else Some(q)
+    } finally s.close()
   }
 
   /** Bucketed-table artifact: data written once hash-bucketed (+ sorted)

@@ -846,7 +846,7 @@ object GraphOps {
     // stream): the upstream table, the downstream after the first hop,
     // and the hop's CHECKPOINT freeze as an artifact — pass 1's
     // certificate (versions {0,1} applied, downstream converged) is
-    // verified once at build and recorded in a marker. Every invocation
+    // verified once at build and frozen with it. Every invocation
     // then COPIES the frozen trio to temp dirs and re-executes the part
     // that certifies what the entry is really about: commits landing
     // WHILE THE STREAM IS DOWN, and a checkpoint RESUME that applies
@@ -855,46 +855,31 @@ object GraphOps {
     // equivalence end-to-end on every run; only the (identical) first
     // pass stops being re-executed per invocation — it was protocol
     // floor, not signal.
-    val art = graft.etl.Artifacts.path(sfDir, "tx_demo_s52")
-    val ready = java.nio.file.Paths.get(art, "_GRAFT_READY")
-    if (!java.nio.file.Files.exists(ready)) {
-      graft.core.TxTable.drop(art)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(art))
+    val (art, pass1) = graft.etl.Artifacts.frozenValue(sfDir, "tx_demo_s52") { d =>
       val base = Graph.nodes(spark, sfDir)
         .filter(col("name") <= "Customer#000000199")
         .select("name", "house", "acctbal")
-      val u = graft.core.TxTable.create(spark, s"$art/up", base,
+      val u = graft.core.TxTable.create(spark, s"$d/up", base,
         Seq("name"), numBuckets = 4)
-      graft.core.TxTable.create(spark, s"$art/dn", base.limit(0),
+      graft.core.TxTable.create(spark, s"$d/dn", base.limit(0),
         Seq("name"), numBuckets = 4)
       u.merge(base.filter(col("name").endsWith("7"))
         .withColumn("house", lit("PROMOTED"))
         .withColumn("acctbal", col("acctbal") + 1000))
       val applied1 = graft.streaming.StreamingOps.medallionHop(
-        spark, s"$art/up", s"$art/dn", s"$art/ck")
-      val converged1 = graft.core.TxTable.open(spark, s"$art/dn", Seq("name"))
+        spark, s"$d/up", s"$d/dn", s"$d/ck")
+      val converged1 = graft.core.TxTable.open(spark, s"$d/dn", Seq("name"))
         .snapshot().collect().map(_.mkString("|")).sorted.toSeq ==
-        graft.core.TxTable.open(spark, s"$art/up", Seq("name"))
+        graft.core.TxTable.open(spark, s"$d/up", Seq("name"))
           .snapshot().collect().map(_.mkString("|")).sorted.toSeq
-      java.nio.file.Files.writeString(ready,
-        (converged1 && applied1 == Set(0L, 1L)).toString)
+      (converged1 && applied1 == Set(0L, 1L)).toString
     }
-    val pass1Ok = java.nio.file.Files.readString(ready).trim == "true"
+    val pass1Ok = pass1 == "true"
 
-    def copyTree(from: String, to: String): Unit = {
-      import scala.jdk.CollectionConverters._
-      val src = java.nio.file.Paths.get(from)
-      val s = java.nio.file.Files.walk(src)
-      try s.iterator().asScala.foreach { p =>
-        val q = java.nio.file.Paths.get(to).resolve(src.relativize(p))
-        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(q)
-        else java.nio.file.Files.copy(p, q,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      } finally s.close()
-    }
     val work = java.nio.file.Files.createTempDirectory("graft_tx_s52").toString
     try {
-      Seq("up", "dn", "ck").foreach(d => copyTree(s"$art/$d", s"$work/$d"))
+      Seq("up", "dn", "ck").foreach(d =>
+        graft.etl.Artifacts.copyTree(s"$art/$d", s"$work/$d"))
       val up = s"$work/up"; val dn = s"$work/dn"; val ck = s"$work/ck"
       val u = graft.core.TxTable.open(spark, up, Seq("name"))
       val base = Graph.nodes(spark, sfDir)
@@ -1399,12 +1384,8 @@ object GraphOps {
       // protocol floor — frozen as an artifact; the SORTED REWRITE this
       // entry certifies re-executes per invocation on a zero-copy clone
       // (copy-on-write into the clone's own data dir, artifact untouched).
-      val art = graft.etl.Artifacts.path(sfDir, "tx_demo_s49")
-      val artReady = java.nio.file.Paths.get(art, "_GRAFT_READY")
-      if (!java.nio.file.Files.exists(artReady)) {
-        graft.core.TxTable.drop(art)
-        graft.core.TxTable.create(spark, art, base, Seq("k"), numBuckets = 1)
-        java.nio.file.Files.createFile(artReady)
+      val art = graft.etl.Artifacts.frozen(sfDir, "tx_demo_s49") { d =>
+        graft.core.TxTable.create(spark, d, base, Seq("k"), numBuckets = 1)
       }
       dir = java.nio.file.Files.createTempDirectory("graft_tx_s49").toString
       val t = graft.core.TxTable.open(spark, art, Seq("k")).shallowClone(dir)
@@ -1474,25 +1455,20 @@ object GraphOps {
       // across a real create + merge, content parity with a twin — is
       // re-executed and re-proven per invocation; the grouped base frame
       // was ~1.2 s of identical per-run prep, not signal.
-      val baseDir = graft.etl.Artifacts.path(sfDir, "s54_base")
-      val baseReady = java.nio.file.Paths.get(baseDir, "_GRAFT_READY")
-      if (!java.nio.file.Files.exists(baseReady)) {
-        graft.core.TxTable.drop(baseDir)
+      val base = graft.etl.Artifacts.ensureParquet(spark, sfDir, "s54_base") {
         graft.core.Tables.lineitem(spark, sfDir).select(
             (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
             round(col("l_extendedprice") * 100).cast("long").as("pc"),
             col("l_returnflag").as("fl"))
           .groupBy("k")
           .agg(max("pc").as("price_cents"), max("fl").as("flag"))
-          .write.mode("overwrite").parquet(baseDir)
-        java.nio.file.Files.createFile(baseReady)
       }
-      val base = graft.core.FileMeta.parquet(spark, baseDir)
       // Row-count-adaptive group size (s51's rule): tiny groups only where
       // skip granularity needs them; the artifact's footer serves the
       // count without a scan.
       val block =
-        if (graft.core.Tables.footerRowCountAt(baseDir) < 100000) 32 * 1024
+        if (graft.core.Tables.footerRowCountAt(
+          graft.etl.Artifacts.path(sfDir, "s54_base")) < 100000) 32 * 1024
         else 256 * 1024
       graft.core.Session.withConf(spark, parquetGroups(block): _*) {
         // Two independent tables: creates (and the two merges below) are
@@ -1588,14 +1564,10 @@ object GraphOps {
     // clone's absolute pointers and copy-on-writes into the clone's own
     // data dir, so the frozen artifact is never mutated and the measured
     // cost is the rewrite itself, not the rebuild of its input.
-    val art = graft.etl.Artifacts.path(sfDir, "tx_demo_s51")
     var dir: String = null
     try graft.core.Session.withConf(spark, parquetGroups(block): _*) {
-      val artReady = java.nio.file.Paths.get(art, "_GRAFT_READY")
-      if (!java.nio.file.Files.exists(artReady)) {
-        graft.core.TxTable.drop(art)
-        graft.core.TxTable.create(spark, art, base0, Seq("k"), numBuckets = 1)
-        java.nio.file.Files.createFile(artReady)
+      val art = graft.etl.Artifacts.frozen(sfDir, "tx_demo_s51") { d =>
+        graft.core.TxTable.create(spark, d, base0, Seq("k"), numBuckets = 1)
       }
       dir = java.nio.file.Files.createTempDirectory("graft_tx_s51").toString
       val t = graft.core.TxTable.open(spark, art, Seq("k")).shallowClone(dir)
@@ -1662,14 +1634,11 @@ object GraphOps {
     // READING against the frozen eras, which is the behavior the entry
     // exists for. Partition-declared WRITES stay covered per-invocation
     // by s62 (same setPartitioning→merge path).
-    val dir = graft.etl.Artifacts.path(sfDir, "tx_demo_s58")
-    val ready = java.nio.file.Paths.get(dir, "_GRAFT_READY")
-    if (!java.nio.file.Files.exists(ready)) {
-      graft.core.TxTable.drop(dir)
+    val dir = graft.etl.Artifacts.frozen(sfDir, "tx_demo_s58") { d =>
       val events0 = graft.core.Tables.events(spark, sfDir)
         .select("event_id", "ts", "event_type", "value")
       val era1 = events0.filter(col("event_id") % 3 === 0)
-      val tb = graft.core.TxTable.create(spark, dir, era1, Seq("event_id"),
+      val tb = graft.core.TxTable.create(spark, d, era1, Seq("event_id"),
         numBuckets = 16) // created FLAT — the pre-partitioning era
       tb.setPartitioning("days(ts)")
       // Three literal keys (present at every SF) — the merge rewrites
@@ -1677,55 +1646,52 @@ object GraphOps {
       // the table keeps its flat-era commit.
       tb.merge(events0.filter(col("event_id").isin(1L, 4L, 7L))
         .withColumn("value", col("value") + 1000.0))
-      java.nio.file.Files.createFile(ready)
     }
-    {
-      val t = graft.core.TxTable.open(spark, dir, Seq("event_id"))
-      val commits = t.dataPointers(t.version).values.toSet
-      val (dayEra, flatEra) = commits.partition(c => java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, "data", c, "_pspec.txt")))
-      def conn = spark.read.format("graft").load(dir)
-      val native = t.snapshot()
-      val evolutionOk = dayEra.nonEmpty && flatEra.nonEmpty &&
-        sameRows(conn, native)
+    val t = graft.core.TxTable.open(spark, dir, Seq("event_id"))
+    val commits = t.dataPointers(t.version).values.toSet
+    val (dayEra, flatEra) = commits.partition(c => java.nio.file.Files.exists(
+      java.nio.file.Paths.get(dir, "data", c, "_pspec.txt")))
+    def conn = spark.read.format("graft").load(dir)
+    val native = t.snapshot()
+    val evolutionOk = dayEra.nonEmpty && flatEra.nonEmpty &&
+      sameRows(conn, native)
 
-      def plannedFiles(preds: Array[org.apache.spark.sql.sources.Filter]): Int = {
-        val provider = new graft.sources.GraftTableProvider
-        val opts = new java.util.HashMap[String, String]()
-        opts.put("path", dir)
-        val cmap = new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts)
-        val sb = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-          .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap)
-        if (preds.nonEmpty) sb
-          .asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-          .pushFilters(preds)
-        sb.build().toBatch.planInputPartitions()
-          .collect { case p: graft.sources.GraftInputPartition => p.files.length }.sum
-      }
-      val bandLo = java.time.Instant.parse("2024-01-10T00:00:00Z")
-      val bandHi = java.time.Instant.parse("2024-01-13T00:00:00Z")
-      import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
-      val allFiles = plannedFiles(Array.empty)
-      val bandFiles = plannedFiles(Array(
-        GreaterThanOrEqual("ts", bandLo), LessThan("ts", bandHi)))
-      val pruneEffective = bandFiles >= 1 && bandFiles * 2 <= allFiles
-
-      val pred = col("ts") >= lit("2024-01-10 00:00:00").cast("timestamp") &&
-        col("ts") < lit("2024-01-13 00:00:00").cast("timestamp")
-      val hashMatch = sameRows(conn.filter(pred), native.filter(pred))
-
-      conn.filter(pred)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum((col("value").cast("decimal(18,6)") * 1000000)
-            .cast("decimal(38,0)")).cast("long").as("sum_micro"))
-        .withColumn("dp_hash_match", lit(hashMatch))
-        .withColumn("dp_prune_effective", lit(pruneEffective))
-        .withColumn("dp_evolution_ok", lit(evolutionOk))
-        .orderBy("event_type")
-        .localCheckpoint()
+    def plannedFiles(preds: Array[org.apache.spark.sql.sources.Filter]): Int = {
+      val provider = new graft.sources.GraftTableProvider
+      val opts = new java.util.HashMap[String, String]()
+      opts.put("path", dir)
+      val cmap = new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts)
+      val sb = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
+        .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
+        .newScanBuilder(cmap)
+      if (preds.nonEmpty) sb
+        .asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
+        .pushFilters(preds)
+      sb.build().toBatch.planInputPartitions()
+        .collect { case p: graft.sources.GraftInputPartition => p.files.length }.sum
     }
+    val bandLo = java.time.Instant.parse("2024-01-10T00:00:00Z")
+    val bandHi = java.time.Instant.parse("2024-01-13T00:00:00Z")
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
+    val allFiles = plannedFiles(Array.empty)
+    val bandFiles = plannedFiles(Array(
+      GreaterThanOrEqual("ts", bandLo), LessThan("ts", bandHi)))
+    val pruneEffective = bandFiles >= 1 && bandFiles * 2 <= allFiles
+
+    val pred = col("ts") >= lit("2024-01-10 00:00:00").cast("timestamp") &&
+      col("ts") < lit("2024-01-13 00:00:00").cast("timestamp")
+    val hashMatch = sameRows(conn.filter(pred), native.filter(pred))
+
+    conn.filter(pred)
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n"),
+        sum((col("value").cast("decimal(18,6)") * 1000000)
+          .cast("decimal(38,0)")).cast("long").as("sum_micro"))
+      .withColumn("dp_hash_match", lit(hashMatch))
+      .withColumn("dp_prune_effective", lit(pruneEffective))
+      .withColumn("dp_evolution_ok", lit(evolutionOk))
+      .orderBy("event_type")
+      .localCheckpoint()
   }
 
   /** Partition-covered ranged COUNT demo (s62_ranged_count) — the
@@ -1752,79 +1718,65 @@ object GraphOps {
     * freezes as a build-once artifact (the s57/s58/s60 treatment);
     * every invocation re-proves all three certificates by PLANNING,
     * READING and POISONING against the frozen layout. The poison pass
-    * MUTATES the artifact's data files in place, so the ready-mark
-    * drops before the first poison write and returns after the restore:
-    * a crash mid-poison leaves no mark and the next invocation rebuilds
-    * instead of serving poisoned bytes. The days(ts) merge write path
-    * stays covered per-invocation by s58's date-partition entry. */
+    * runs on a private copy whose data files are poison (its log and
+    * sidecars copied), so the published artifact is never written. The
+    * days(ts) merge write path stays covered per-invocation by s58's
+    * date-partition entry. */
   def txRangedCount(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = graft.etl.Artifacts.path(sfDir, "tx_demo_s62")
-    val readyMark = java.nio.file.Paths.get(dir, "_GRAFT_READY")
-    if (!java.nio.file.Files.exists(readyMark)) {
-      graft.core.TxTable.drop(dir)
+    val dir = graft.etl.Artifacts.frozen(sfDir, "tx_demo_s62") { d =>
       val events = graft.core.Tables.events(spark, sfDir)
         .select("event_id", "ts", "event_type", "value")
       // 4 buckets: a day-partitioned table's file floor is buckets × days
       // (the optimized write caps it there at ANY data size), and this
       // entry's cost is that floor — wider bucketing buys the demo
       // nothing but file creates.
-      val t = graft.core.TxTable.create(spark, dir, events.limit(0),
+      val t = graft.core.TxTable.create(spark, d, events.limit(0),
         Seq("event_id"), numBuckets = 4)
       t.setPartitioning("days(ts)")
       t.merge(events)
-      java.nio.file.Files.createFile(readyMark)
     }
-    {
-      val t = graft.core.TxTable.open(spark, dir, Seq("event_id"))
-      def conn = spark.read.format("graft").load(dir)
-      val lo = lit("2024-01-10 00:00:00").cast("timestamp")
-      val hi = lit("2024-01-13 00:00:00").cast("timestamp")
-      val mid = lit("2024-01-10 12:00:00").cast("timestamp")
-      def covered = conn.filter(col("ts") >= lo && col("ts") < hi)
-        .groupBy().count()
-      def straddle = conn.filter(col("ts") >= mid && col("ts") < hi)
-        .groupBy().count()
-      val sidecarServed = covered.queryExecution.executedPlan.toString
-        .contains("partition-covered")
-      val straddleFellBack = !straddle.queryExecution.executedPlan.toString
-        .contains("partition-covered")
-      val native = t.snapshot()
-      // Two independent pre-poison reads of the same frozen layout —
-      // overlap them (guide §2.6).
-      val (nativeCovered, straddleN) = par2(
-        native.filter(col("ts") >= lo && col("ts") < hi).count(),
-        straddle.head().getLong(0)) // needs real data: pre-poison
-      // Zero-data-I/O proof: poison EVERY parquet file; the covered count
-      // must still answer (paths + sidecars only), byte-identically.
-      import scala.jdk.CollectionConverters._
-      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "data"))
-        .iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
-      // The poison/restore pass touches every data file (buckets × days of
-      // them) — independent byte I/O, fanned out like the connector's
-      // planning pass instead of a serial driver loop. The ready-mark
-      // drops first: a crash between poison and restore must force a
-      // rebuild, never serve poisoned bytes to a later invocation.
-      java.nio.file.Files.deleteIfExists(readyMark)
-      val backups = graft.core.TxTable.parMap(files) { p =>
-        val orig = java.nio.file.Files.readAllBytes(p)
-        java.nio.file.Files.write(p, "POISON".getBytes("UTF-8"))
-        (p, orig)
-      }
-      val coveredN =
-        try covered.head().getLong(0)
-        finally {
-          graft.core.TxTable.parMap(backups) { case (p, o) =>
-            java.nio.file.Files.write(p, o) }
-          java.nio.file.Files.createFile(readyMark)
-        }
-      spark.range(1).select(
-        lit(coveredN).as("covered_n"),
-        lit(straddleN).as("straddle_n"),
-        lit(sidecarServed).as("rc_sidecar_served"),
-        lit(coveredN == nativeCovered).as("rc_zero_data_io"),
-        lit(straddleFellBack).as("rc_straddle_fallback"))
-        .localCheckpoint()
-    }
+    val t = graft.core.TxTable.open(spark, dir, Seq("event_id"))
+    def conn(d: String) = spark.read.format("graft").load(d)
+    val lo = lit("2024-01-10 00:00:00").cast("timestamp")
+    val hi = lit("2024-01-13 00:00:00").cast("timestamp")
+    val mid = lit("2024-01-10 12:00:00").cast("timestamp")
+    def covered(d: String) = conn(d).filter(col("ts") >= lo && col("ts") < hi)
+      .groupBy().count()
+    def straddle = conn(dir).filter(col("ts") >= mid && col("ts") < hi)
+      .groupBy().count()
+    val sidecarServed = covered(dir).queryExecution.executedPlan.toString
+      .contains("partition-covered")
+    val straddleFellBack = !straddle.queryExecution.executedPlan.toString
+      .contains("partition-covered")
+    val native = t.snapshot()
+    // Two independent pre-poison reads of the same frozen layout —
+    // overlap them (guide §2.6).
+    val (nativeCovered, straddleN) = par2(
+      native.filter(col("ts") >= lo && col("ts") < hi).count(),
+      straddle.head().getLong(0)) // needs real data: pre-poison
+    // Zero-data-I/O proof: on a private copy of the table whose EVERY
+    // parquet file is poison (log and sidecars copied), the covered
+    // count must still answer (paths + sidecars only), byte-identically.
+    val work = java.nio.file.Files.createTempDirectory("graft_tx_s62").toString
+    val coveredN = try {
+      // Checksum files are left out too: nothing reads a poisoned file.
+      def isData(p: java.nio.file.Path) = p.toString.endsWith(".parquet")
+      val dataFiles = graft.etl.Artifacts.copyTree(dir, work,
+        p => !isData(p) && !p.toString.endsWith(".crc")).filter(isData)
+      // One poison write per data file (buckets × days of them) —
+      // independent byte I/O, fanned out like the connector's planning
+      // pass instead of a serial driver loop.
+      graft.core.TxTable.parMap(dataFiles)(
+        java.nio.file.Files.write(_, "POISON".getBytes("UTF-8")))
+      covered(work).head().getLong(0)
+    } finally graft.core.TxTable.drop(work)
+    spark.range(1).select(
+      lit(coveredN).as("covered_n"),
+      lit(straddleN).as("straddle_n"),
+      lit(sidecarServed).as("rc_sidecar_served"),
+      lit(coveredN == nativeCovered).as("rc_zero_data_io"),
+      lit(straddleFellBack).as("rc_straddle_fallback"))
+      .localCheckpoint()
   }
 
   /** Type-widening evolution demo (s56_widen_column) — the remaining
@@ -1915,16 +1867,58 @@ object GraphOps {
     * the zone-map harvest-at-commit write path stays covered
     * per-invocation by s54's clustered write. */
   def txZonemapRange(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = graft.etl.Artifacts.path(sfDir, "tx_demo_s55")
-    val readyMark = java.nio.file.Paths.get(dir, "_GRAFT_READY")
-    if (!java.nio.file.Files.exists(readyMark)) {
-      graft.core.TxTable.drop(dir)
+    val (dir, globalMin) = zonemapLayout(spark, sfDir)
+    val t = graft.core.TxTable.open(spark, dir, Seq("k"))
+    def conn = spark.read.format("graft").load(dir)
+    // Filters arrive as TOP-LEVEL conjuncts (Spark splits And before
+    // pushdown), so the helper passes them the same way.
+    def plannedFiles(preds: Array[org.apache.spark.sql.sources.Filter]): (Int, Int) = {
+      val provider = new graft.sources.GraftTableProvider
+      val opts = new java.util.HashMap[String, String]()
+      opts.put("path", dir)
+      val cmap = new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts)
+      val table = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
+      val sb = table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
+        .newScanBuilder(cmap)
+      if (preds.nonEmpty) sb
+        .asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
+        .pushFilters(preds)
+      val parts = sb.build().toBatch.planInputPartitions()
+      (parts.length,
+        parts.collect { case p: graft.sources.GraftInputPartition => p.files.length }.sum)
+    }
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual, LessThan}
+    val lo = 2000000L; val hi = 2100000L
+    val (_, allFiles) = plannedFiles(Array.empty)
+    val (_, bandFiles) = plannedFiles(Array(
+      GreaterThanOrEqual("price_cents", lo), LessThanOrEqual("price_cents", hi)))
+    val (noneParts, _) = plannedFiles(Array(LessThan("price_cents", globalMin)))
+    val filePrune = bandFiles * 2 <= allFiles && bandFiles >= 1
+    val bucketPrune = noneParts == 0
+
+    val pred = col("price_cents").between(lo, hi)
+    val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
+
+    conn.filter(pred)
+      .groupBy("flag")
+      .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
+      .withColumn("zm_hash_match", lit(hashMatch))
+      .withColumn("zm_file_prune", lit(filePrune))
+      .withColumn("zm_bucket_prune", lit(bucketPrune))
+      .orderBy("flag")
+      .localCheckpoint()
+  }
+
+  /** s55's range-clustered, zone-mapped layout (read by s55 and s66) and
+    * its below-domain probe bound (the minimum `price_cents`). */
+  private def zonemapLayout(spark: SparkSession, sfDir: String): (String, Long) = {
+    val (dir, globalMin) = graft.etl.Artifacts.frozenValue(sfDir, "tx_demo_s55") { d =>
       val base = graft.core.Tables.lineitem(spark, sfDir).select(
         (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
         round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
         col("l_returnflag").as("flag"))
       val nRows = base.count()
-      val tb = graft.core.TxTable.create(spark, dir, base, Seq("k"),
+      val tb = graft.core.TxTable.create(spark, d, base, Seq("k"),
         numBuckets = 8, zoneMapCols = Seq("price_cents"))
       // Sorted rewrite split into ~6 range-disjoint files per bucket:
       // the layout a 100 TB table maintains continuously via
@@ -1932,54 +1926,9 @@ object GraphOps {
       graft.core.Session.withConf(spark, maxRecords(nRows / 48)) {
         tb.compact(0, Seq("price_cents"))
       }
-      // Below-domain probe bound, frozen beside the layout.
-      java.nio.file.Files.writeString(readyMark.resolveSibling("_GRAFT_BOUNDS"),
-        base.agg(min("price_cents")).head.getLong(0).toString)
-      java.nio.file.Files.createFile(readyMark)
+      base.agg(min("price_cents")).head.getLong(0).toString
     }
-    {
-      val t = graft.core.TxTable.open(spark, dir, Seq("k"))
-      val globalMin = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(dir, "_GRAFT_BOUNDS")).trim.toLong
-      def conn = spark.read.format("graft").load(dir)
-      // Filters arrive as TOP-LEVEL conjuncts (Spark splits And before
-      // pushdown), so the helper passes them the same way.
-      def plannedFiles(preds: Array[org.apache.spark.sql.sources.Filter]): (Int, Int) = {
-        val provider = new graft.sources.GraftTableProvider
-        val opts = new java.util.HashMap[String, String]()
-        opts.put("path", dir)
-        val cmap = new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts)
-        val table = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-        val sb = table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap)
-        if (preds.nonEmpty) sb
-          .asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-          .pushFilters(preds)
-        val parts = sb.build().toBatch.planInputPartitions()
-        (parts.length,
-          parts.collect { case p: graft.sources.GraftInputPartition => p.files.length }.sum)
-      }
-      import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual, LessThan}
-      val lo = 2000000L; val hi = 2100000L
-      val (_, allFiles) = plannedFiles(Array.empty)
-      val (_, bandFiles) = plannedFiles(Array(
-        GreaterThanOrEqual("price_cents", lo), LessThanOrEqual("price_cents", hi)))
-      val (noneParts, _) = plannedFiles(Array(LessThan("price_cents", globalMin)))
-      val filePrune = bandFiles * 2 <= allFiles && bandFiles >= 1
-      val bucketPrune = noneParts == 0
-
-      val pred = col("price_cents").between(lo, hi)
-      val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
-
-      conn.filter(pred)
-        .groupBy("flag")
-        .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
-        .withColumn("zm_hash_match", lit(hashMatch))
-        .withColumn("zm_file_prune", lit(filePrune))
-        .withColumn("zm_bucket_prune", lit(bucketPrune))
-        .orderBy("flag")
-        .localCheckpoint()
-    }
+    (dir, globalMin.toLong)
   }
 
   /** Consolidated stats-manifest demo (s60_stats_manifest) — the
@@ -2008,72 +1957,66 @@ object GraphOps {
     // certificates by PLANNING both paths and READING against the
     // frozen layout. The harvest-at-publish write path stays covered
     // per-invocation by s54's clustered write.
-    val dir = graft.etl.Artifacts.path(sfDir, "tx_demo_s60")
-    val readyMark = java.nio.file.Paths.get(dir, "_GRAFT_READY")
-    if (!java.nio.file.Files.exists(readyMark)) {
-      graft.core.TxTable.drop(dir)
+    val dir = graft.etl.Artifacts.frozen(sfDir, "tx_demo_s60") { d =>
       val base = graft.core.Tables.lineitem(spark, sfDir).select(
         (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
         round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
         col("l_returnflag").as("flag"))
         .withColumn("token", md5(col("k").cast("string")))
       val nRows = base.count()
-      val tb = graft.core.TxTable.create(spark, dir, base, Seq("k"),
+      val tb = graft.core.TxTable.create(spark, d, base, Seq("k"),
         numBuckets = 8, zoneMapCols = Seq("price_cents"),
         bloomCols = Seq("token"))
       graft.core.Session.withConf(spark, maxRecords(nRows / 48)) {
         tb.compact(0, Seq("price_cents"))
       }
-      java.nio.file.Files.createFile(readyMark)
     }
-    {
-      val t = graft.core.TxTable.open(spark, dir, Seq("k"))
-      import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
-      val band: Array[org.apache.spark.sql.sources.Filter] = Array(
-        GreaterThanOrEqual("price_cents", 2000000L),
-        LessThanOrEqual("price_cents", 2100000L))
-      def plannedFiles(ignore: Boolean): Set[String] = {
-        val provider = new graft.sources.GraftTableProvider
-        val opts = new java.util.HashMap[String, String]()
-        opts.put("path", dir)
-        if (ignore) opts.put("ignoreStatsManifest", "true")
-        val cmap = new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts)
-        val sb = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-          .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap)
-        sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-          .pushFilters(band)
-        sb.build().toBatch.planInputPartitions()
-          .collect { case p: graft.sources.GraftInputPartition => p }
-          .flatMap(_.files).toSet
-      }
-      val reads = new java.util.concurrent.atomic.AtomicInteger(0)
-      graft.core.TxTable.metaReadProbe = _ => { reads.incrementAndGet(); () }
-      val (viaManifest, oneRead, viaBuckets, fallbackReads) =
-        try {
-          val a = plannedFiles(ignore = false)
-          val ar = reads.getAndSet(0)
-          val b = plannedFiles(ignore = true)
-          (a, ar == 1, b, reads.get())
-        } finally graft.core.TxTable.metaReadProbe = _ => ()
-      val sameDecisions = viaManifest == viaBuckets && viaManifest.nonEmpty
-
-      def conn = spark.read.format("graft").load(dir)
-      val pred = col("price_cents").between(2000000L, 2100000L)
-      val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
-
-      conn.filter(pred)
-        .groupBy("flag")
-        .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
-        .withColumn("sm_one_read", lit(oneRead))
-        // O(buckets): the per-bucket path reads at least one sidecar per
-        // bucket (8 zone maps here) where the manifest path read ONE.
-        .withColumn("sm_fallback_obuckets", lit(fallbackReads >= 8))
-        .withColumn("sm_same_decisions", lit(sameDecisions))
-        .withColumn("sm_hash_match", lit(hashMatch))
-        .orderBy("flag")
-        .localCheckpoint()
+    val t = graft.core.TxTable.open(spark, dir, Seq("k"))
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
+    val band: Array[org.apache.spark.sql.sources.Filter] = Array(
+      GreaterThanOrEqual("price_cents", 2000000L),
+      LessThanOrEqual("price_cents", 2100000L))
+    def plannedFiles(ignore: Boolean): Set[String] = {
+      val provider = new graft.sources.GraftTableProvider
+      val opts = new java.util.HashMap[String, String]()
+      opts.put("path", dir)
+      if (ignore) opts.put("ignoreStatsManifest", "true")
+      val cmap = new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts)
+      val sb = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
+        .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
+        .newScanBuilder(cmap)
+      sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
+        .pushFilters(band)
+      sb.build().toBatch.planInputPartitions()
+        .collect { case p: graft.sources.GraftInputPartition => p }
+        .flatMap(_.files).toSet
     }
+    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    graft.core.TxTable.metaReadProbe = _ => { reads.incrementAndGet(); () }
+    val (viaManifest, oneRead, viaBuckets, fallbackReads) =
+      try {
+        val a = plannedFiles(ignore = false)
+        val ar = reads.getAndSet(0)
+        val b = plannedFiles(ignore = true)
+        (a, ar == 1, b, reads.get())
+      } finally graft.core.TxTable.metaReadProbe = _ => ()
+    val sameDecisions = viaManifest == viaBuckets && viaManifest.nonEmpty
+
+    def conn = spark.read.format("graft").load(dir)
+    val pred = col("price_cents").between(2000000L, 2100000L)
+    val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
+
+    conn.filter(pred)
+      .groupBy("flag")
+      .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
+      .withColumn("sm_one_read", lit(oneRead))
+      // O(buckets): the per-bucket path reads at least one sidecar per
+      // bucket (8 zone maps here) where the manifest path read ONE.
+      .withColumn("sm_fallback_obuckets", lit(fallbackReads >= 8))
+      .withColumn("sm_same_decisions", lit(sameDecisions))
+      .withColumn("sm_hash_match", lit(hashMatch))
+      .orderBy("flag")
+      .localCheckpoint()
   }
 
   /** String zone-map demo (s63_string_zonemap) — closing the s55 gap
@@ -2098,61 +2041,55 @@ object GraphOps {
     * harvest-at-commit write path stays covered per-invocation by
     * s54's clustered write. */
   def txStringZonemap(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = graft.etl.Artifacts.path(sfDir, "tx_demo_s63")
-    val readyMark = java.nio.file.Paths.get(dir, "_GRAFT_READY")
-    if (!java.nio.file.Files.exists(readyMark)) {
-      graft.core.TxTable.drop(dir)
+    val dir = graft.etl.Artifacts.frozen(sfDir, "tx_demo_s63") { d =>
       val base = graft.core.Tables.part(spark, sfDir).select(
         col("p_partkey").as("k"), col("p_name").as("name"),
         round(col("p_retailprice") * 100).cast("long").as("price_cents"))
       val nRows = base.count()
-      val tb = graft.core.TxTable.create(spark, dir, base, Seq("k"),
+      val tb = graft.core.TxTable.create(spark, d, base, Seq("k"),
         numBuckets = 8, zoneMapCols = Seq("name"))
       // Sorted rewrite into ~6 range-disjoint files per bucket — the
       // continuously-clustered layout of s55, on a STRING dimension.
       graft.core.Session.withConf(spark, maxRecords(nRows / 48)) {
         tb.compact(0, Seq("name"))
       }
-      java.nio.file.Files.createFile(readyMark)
     }
-    {
-      val t = graft.core.TxTable.open(spark, dir, Seq("k"))
-      def conn = spark.read.format("graft").load(dir)
-      def plannedFiles(preds: Array[org.apache.spark.sql.sources.Filter]): (Int, Int) = {
-        val provider = new graft.sources.GraftTableProvider
-        val opts = new java.util.HashMap[String, String]()
-        opts.put("path", dir)
-        val cmap = new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts)
-        val table = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-        val sb = table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap)
-        if (preds.nonEmpty) sb
-          .asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-          .pushFilters(preds)
-        val parts = sb.build().toBatch.planInputPartitions()
-        (parts.length,
-          parts.collect { case p: graft.sources.GraftInputPartition => p.files.length }.sum)
-      }
-      import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
-      val (_, allFiles) = plannedFiles(Array.empty)
-      val (_, bandFiles) = plannedFiles(Array(
-        GreaterThanOrEqual("name", "c"), LessThan("name", "h")))
-      val (noneParts, _) = plannedFiles(Array(LessThan("name", "a")))
-      val filePrune = bandFiles >= 1 && bandFiles * 2 <= allFiles
-      val bucketPrune = noneParts == 0
-
-      val pred = col("name") >= "c" && col("name") < "h"
-      val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
-
-      conn.filter(pred)
-        .groupBy("name")
-        .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
-        .withColumn("sz_hash_match", lit(hashMatch))
-        .withColumn("sz_file_prune", lit(filePrune))
-        .withColumn("sz_bucket_prune", lit(bucketPrune))
-        .orderBy("name")
-        .localCheckpoint()
+    val t = graft.core.TxTable.open(spark, dir, Seq("k"))
+    def conn = spark.read.format("graft").load(dir)
+    def plannedFiles(preds: Array[org.apache.spark.sql.sources.Filter]): (Int, Int) = {
+      val provider = new graft.sources.GraftTableProvider
+      val opts = new java.util.HashMap[String, String]()
+      opts.put("path", dir)
+      val cmap = new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts)
+      val table = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
+      val sb = table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
+        .newScanBuilder(cmap)
+      if (preds.nonEmpty) sb
+        .asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
+        .pushFilters(preds)
+      val parts = sb.build().toBatch.planInputPartitions()
+      (parts.length,
+        parts.collect { case p: graft.sources.GraftInputPartition => p.files.length }.sum)
     }
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
+    val (_, allFiles) = plannedFiles(Array.empty)
+    val (_, bandFiles) = plannedFiles(Array(
+      GreaterThanOrEqual("name", "c"), LessThan("name", "h")))
+    val (noneParts, _) = plannedFiles(Array(LessThan("name", "a")))
+    val filePrune = bandFiles >= 1 && bandFiles * 2 <= allFiles
+    val bucketPrune = noneParts == 0
+
+    val pred = col("name") >= "c" && col("name") < "h"
+    val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
+
+    conn.filter(pred)
+      .groupBy("name")
+      .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
+      .withColumn("sz_hash_match", lit(hashMatch))
+      .withColumn("sz_file_prune", lit(filePrune))
+      .withColumn("sz_bucket_prune", lit(bucketPrune))
+      .orderBy("name")
+      .localCheckpoint()
   }
 
   /** N-way Z-order demo (s57_zorder_nway) — closing s51's 2-column limit:
@@ -2180,11 +2117,7 @@ object GraphOps {
     * (the compactZOrder WRITE path stays covered per-invocation by
     * s51, whose 2-D rewrite is the same code path). */
   def txZorderNway(spark: SparkSession, sfDir: String): DataFrame = {
-    val flatDir = graft.etl.Artifacts.path(sfDir, "tx_s57_flat")
-    val zDir = graft.etl.Artifacts.path(sfDir, "tx_s57_zorder")
-    val ready = java.nio.file.Paths.get(zDir, "_GRAFT_READY")
-    if (!java.nio.file.Files.exists(ready)) {
-      graft.core.TxTable.drop(flatDir); graft.core.TxTable.drop(zDir)
+    val (art, bounds) = graft.etl.Artifacts.frozenValue(sfDir, "tx_demo_s57") { d =>
       val base = graft.core.Tables.lineitem(spark, sfDir).select(
         (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
         round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
@@ -2197,19 +2130,17 @@ object GraphOps {
         else if (nRows < 100000) 16 * 1024
         else 192 * 1024
       graft.core.Session.withConf(spark, parquetGroups(block): _*) {
-        graft.core.TxTable.create(spark, flatDir, base, Seq("k"), numBuckets = 1)
-        val t = graft.core.TxTable.create(spark, zDir, base, Seq("k"), numBuckets = 1)
+        graft.core.TxTable.create(spark, s"$d/flat", base, Seq("k"), numBuckets = 1)
+        val t = graft.core.TxTable.create(spark, s"$d/zorder", base, Seq("k"), numBuckets = 1)
         t.compactZOrder(Seq("price_cents", "part", "sup"))
       }
-      // Probe bounds frozen beside the layouts (deterministic over base).
+      // Probe bounds, frozen with the layouts (deterministic over base).
       val Array(b) = graft.core.Tables.lineitem(spark, sfDir)
         .agg(max("l_partkey"), max("l_suppkey")).collect()
-      java.nio.file.Files.writeString(ready.resolveSibling("_GRAFT_BOUNDS"),
-        s"${b.getLong(0)}\t${b.getLong(1)}")
-      java.nio.file.Files.createFile(ready)
+      s"${b.getLong(0)}\t${b.getLong(1)}"
     }
-    val Array(maxPart, maxSup) = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(zDir, "_GRAFT_BOUNDS")).trim.split('\t').map(_.toLong)
+    val flatDir = s"$art/flat"; val zDir = s"$art/zorder"
+    val Array(maxPart, maxSup) = bounds.split('\t').map(_.toLong)
     def conn(d: String) = spark.read.format("graft").load(d)
     val predX = col("price_cents").between(2000000L, 2060000L)
     val predY = col("part") <= maxPart / 30
@@ -2262,11 +2193,7 @@ object GraphOps {
     * rewrite WRITE path stays covered per-invocation by s51 (the same
     * one-stats-pass clustered rewrite, Morton key). */
   def txHilbertCompact(spark: SparkSession, sfDir: String): DataFrame = {
-    val flatDir = graft.etl.Artifacts.path(sfDir, "tx_s59_flat")
-    val hDir = graft.etl.Artifacts.path(sfDir, "tx_s59_hilbert")
-    val readyMark = java.nio.file.Paths.get(hDir, "_GRAFT_READY")
-    if (!java.nio.file.Files.exists(readyMark)) {
-      graft.core.TxTable.drop(flatDir); graft.core.TxTable.drop(hDir)
+    val (art, bound) = graft.etl.Artifacts.frozenValue(sfDir, "tx_demo_s59") { d =>
       val base = graft.core.Tables.lineitem(spark, sfDir).select(
         (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
         round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
@@ -2275,17 +2202,15 @@ object GraphOps {
       val nRows = base.count()
       val block = if (nRows < 100000) 16 * 1024 else 256 * 1024
       graft.core.Session.withConf(spark, parquetGroups(block): _*) {
-        graft.core.TxTable.create(spark, flatDir, base, Seq("k"), numBuckets = 1)
-        val t = graft.core.TxTable.create(spark, hDir, base, Seq("k"), numBuckets = 1)
+        graft.core.TxTable.create(spark, s"$d/flat", base, Seq("k"), numBuckets = 1)
+        val t = graft.core.TxTable.create(spark, s"$d/hilbert", base, Seq("k"), numBuckets = 1)
         t.compactHilbert(Seq("price_cents", "part"))
       }
-      // Probe bound frozen beside the layouts (deterministic over base).
-      java.nio.file.Files.writeString(readyMark.resolveSibling("_GRAFT_BOUNDS"),
-        base.agg(max("part")).head.getLong(0).toString)
-      java.nio.file.Files.createFile(readyMark)
+      // Probe bound, frozen with the layouts (deterministic over base).
+      base.agg(max("part")).head.getLong(0).toString
     }
-    val maxPart = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(hDir, "_GRAFT_BOUNDS")).trim.toLong
+    val flatDir = s"$art/flat"; val hDir = s"$art/hilbert"
+    val maxPart = bound.toLong
     def conn(d: String) = spark.read.format("graft").load(d)
     val predX = col("price_cents").between(2000000L, 2100000L)
     val predY = col("part") <= maxPart / 20
@@ -2334,10 +2259,7 @@ object GraphOps {
     * pruned scan, not the table). Reads the s55 build-once artifact —
     * this entry measures PLANNING metadata, not a table build. */
   def txColumnStats(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = graft.etl.Artifacts.path(sfDir, "tx_demo_s55")
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, "_GRAFT_READY")))
-      txZonemapRange(spark, sfDir) // builds + freezes the layout
+    val (dir, _) = zonemapLayout(spark, sfDir)
     val t = graft.core.TxTable.open(spark, dir, Seq("k"))
     val Array(truth) = t.snapshot()
       .agg(count(lit(1)), min("price_cents"), max("price_cents")).collect()
@@ -2991,10 +2913,7 @@ object GraphOps {
     // actually costs — one log listing plus five manifest-pruned version
     // counts — not the write path (s12 and the property specs keep the
     // full create→commit lifecycle covered end-to-end).
-    val dir = graft.etl.Artifacts.path(sfDir, "tx_demo_s30")
-    val ready = java.nio.file.Paths.get(dir, "_GRAFT_READY")
-    if (!java.nio.file.Files.exists(ready)) {
-      graft.core.TxTable.drop(dir) // clear any partial build
+    val dir = graft.etl.Artifacts.frozen(sfDir, "tx_demo_s30") { d =>
       // Governance-demo slice: these entries certify metadata protocols
       // (layout/branch/catalog/history), which are size-independent — the
       // bounded base keeps the lifecycle real and the bench honest about
@@ -3002,35 +2921,32 @@ object GraphOps {
       val base = Graph.nodes(spark, sfDir)
         .filter(col("name") <= "Customer#000000199")
         .select("name", "house", "acctbal")
-      val t = graft.core.TxTable.create(spark, dir, base, Seq("name"), numBuckets = 8)
+      val t = graft.core.TxTable.create(spark, d, base, Seq("name"), numBuckets = 8)
       t.merge(base.filter(substring(col("name"), -1, 1) === "1")
         .withColumn("house", lit("MERGED1")))
       t.deleteMergeOnRead(base.filter(substring(col("name"), -1, 1) === "2"))
       t.compact()
       t.restore(1L)
-      java.nio.file.Files.createFile(ready)
     }
-    {
-      val t = graft.core.TxTable.open(spark, dir, Seq("name"), numBuckets = 8)
-      val hist = t.history()
-        .select("version", "op", "n_buckets", "n_cols")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getInt(3)))
-      // ONE job counts every version: union the tagged snapshots and
-      // aggregate, instead of a count job per version (the per-job
-      // scheduling floor dominates these metadata demos, not data size).
-      val counts = hist.map { case (v, _, _, _) =>
-        t.snapshotAt(v).select(lit(v).as("version")) }
-        .reduce(_ unionByName _)
-        .groupBy("version").agg(count(lit(1)).as("n_rows"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val rows = hist.toSeq.map { case (v, op, nb, nc) =>
-        (v, op, nb, nc, counts.getOrElse(v, 0L))
-      }
-      spark.createDataFrame(rows)
-        .toDF("version", "op", "n_buckets", "n_cols", "n_rows")
-        .orderBy("version")
-        .localCheckpoint()
+    val t = graft.core.TxTable.open(spark, dir, Seq("name"), numBuckets = 8)
+    val hist = t.history()
+      .select("version", "op", "n_buckets", "n_cols")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getInt(3)))
+    // ONE job counts every version: union the tagged snapshots and
+    // aggregate, instead of a count job per version (the per-job
+    // scheduling floor dominates these metadata demos, not data size).
+    val counts = hist.map { case (v, _, _, _) =>
+      t.snapshotAt(v).select(lit(v).as("version")) }
+      .reduce(_ unionByName _)
+      .groupBy("version").agg(count(lit(1)).as("n_rows"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val rows = hist.toSeq.map { case (v, op, nb, nc) =>
+      (v, op, nb, nc, counts.getOrElse(v, 0L))
     }
+    spark.createDataFrame(rows)
+      .toDF("version", "op", "n_buckets", "n_cols", "n_rows")
+      .orderBy("version")
+      .localCheckpoint()
   }
 
   /** Multi-table atomic transaction demo — a "transfer" that must touch
@@ -3325,24 +3241,37 @@ object GraphOps {
     } finally graft.core.TxTable.drop(dir)
   }
 
-  /** The frozen three-version demo history s15/s17 read from. Unlike s12
-    * (which measures the WRITE path and must mutate per invocation), the
-    * time-travel and CDC reads probe an immutable committed history — so
-    * construction is build-once ETL (`Artifacts`-keyed directory with a
-    * ready marker), exactly like the ANN indexes, and the registered
-    * queries measure only the read path: a bucket listing + pruned scan
-    * per snapshot. `history` distinguishes the two demo logs (s15: two
-    * merges; s17: merge then delete). */
-  private def demoTxTable(spark: SparkSession, sfDir: String, history: String)
-      (build: graft.core.TxTable => Unit): graft.core.TxTable = {
-    val dir = graft.etl.Artifacts.path(sfDir, s"tx_demo_$history")
-    val ready = java.nio.file.Paths.get(dir, "_GRAFT_READY")
-    if (!java.nio.file.Files.exists(ready)) {
-      graft.core.TxTable.drop(dir) // clear any partial build
+  /** The frozen demo histories s15, s17 and s19 read from (s33 and s18
+    * read s15's and s17's). Unlike s12 (which measures the WRITE path and
+    * must mutate per invocation), the time-travel and CDC reads probe an
+    * immutable committed history — so construction is build-once ETL
+    * (an `Artifacts.frozen` directory), exactly like the ANN indexes, and
+    * the registered queries measure only the read path: a bucket listing
+    * + pruned scan per snapshot. `history` names the demo log: s15 two
+    * merges, s17 a merge then a delete, s19 a widening merge. */
+  private def demoTxTable(spark: SparkSession, sfDir: String,
+                          history: String): graft.core.TxTable = {
+    def batch(rows: (String, String, Double)*) =
+      spark.createDataFrame(rows).toDF("name", "house", "acctbal")
+    val dir = graft.etl.Artifacts.frozen(sfDir, s"tx_demo_$history") { d =>
       val base = Graph.nodes(spark, sfDir).select("name", "house", "acctbal")
-      val t = graft.core.TxTable.create(spark, dir, base, Seq("name"))
-      build(t)
-      java.nio.file.Files.createFile(ready)
+      val t = graft.core.TxTable.create(spark, d, base, Seq("name"))
+      history match {
+        case "s15" =>
+          t.merge(batch(("Customer#000000003", "BUILDING", 0.0),
+            ("User#000000001", "BUILDING", 10.0)))
+          t.merge(batch(("Customer#000000003", "MACHINERY", 99.5),
+            ("User#000000002", "AUTOMOBILE", 20.0)))
+        case "s17" =>
+          t.merge(batch(("Customer#000000003", "BUILDING", 0.0),
+            ("User#000000001", "BUILDING", 10.0)))
+          t.delete(spark.createDataFrame(Seq(Tuple1("Customer#000000005"))).toDF("name"))
+        case "s19" =>
+          t.merge(spark.createDataFrame(Seq(
+            ("Customer#000000003", "BUILDING", 0.0, "gold"),
+            ("User#000000001", "BUILDING", 10.0, "silver")))
+            .toDF("name", "house", "acctbal", "tier"))
+      }
     }
     graft.core.TxTable.open(spark, dir, Seq("name"))
   }
@@ -3357,15 +3286,7 @@ object GraphOps {
     * the build-once artifact — measures two pruned snapshot reads plus
     * one small join. */
   def sqlTimeTravel(spark: SparkSession, sfDir: String): DataFrame = {
-    val t = demoTxTable(spark, sfDir, "s15") { t =>
-      t.merge(spark.createDataFrame(Seq(
-        ("Customer#000000003", "BUILDING", 0.0),
-        ("User#000000001", "BUILDING", 10.0))).toDF("name", "house", "acctbal"))
-      t.merge(spark.createDataFrame(Seq(
-        ("Customer#000000003", "MACHINERY", 99.5),
-        ("User#000000002", "AUTOMOBILE", 20.0))).toDF("name", "house", "acctbal"))
-      ()
-    }
+    val t = demoTxTable(spark, sfDir, "s15")
     t.snapshotAt(0L).createOrReplaceTempView("tt_v0")
     t.snapshotAt(2L).createOrReplaceTempView("tt_head")
     spark.sql(
@@ -3393,15 +3314,7 @@ object GraphOps {
     * measures (the create→merge→commit write path stays covered end-to-end
     * by s12 and the TxTable property spec). */
   def timeTravel(spark: SparkSession, sfDir: String): DataFrame = {
-    val t = demoTxTable(spark, sfDir, "s15") { t =>
-      t.merge(spark.createDataFrame(Seq(
-        ("Customer#000000003", "BUILDING", 0.0),
-        ("User#000000001", "BUILDING", 10.0))).toDF("name", "house", "acctbal"))
-      t.merge(spark.createDataFrame(Seq(
-        ("Customer#000000003", "MACHINERY", 99.5),
-        ("User#000000002", "AUTOMOBILE", 20.0))).toDF("name", "house", "acctbal"))
-      ()
-    }
+    val t = demoTxTable(spark, sfDir, "s15")
     val probe = Seq("Customer#000000003", "User#000000001", "User#000000002")
     (0L to 2L).map { v =>
       t.snapshotAt(v).filter(col("name").isin(probe: _*))
@@ -3418,13 +3331,7 @@ object GraphOps {
     * incremental consumer (sync, index refresh, cache invalidation)
     * needs, at O(changed buckets) cost. */
   def cdcDiff(spark: SparkSession, sfDir: String): DataFrame = {
-    val t = demoTxTable(spark, sfDir, "s17") { t =>
-      t.merge(spark.createDataFrame(Seq(
-        ("Customer#000000003", "BUILDING", 0.0),
-        ("User#000000001", "BUILDING", 10.0))).toDF("name", "house", "acctbal"))
-      t.delete(spark.createDataFrame(Seq(Tuple1("Customer#000000005"))).toDF("name"))
-      ()
-    }
+    val t = demoTxTable(spark, sfDir, "s17")
     t.diff(0L, 2L)
       .select(col("change_type"), col("name"),
         col("old_house"), col("new_house"),
@@ -3441,13 +3348,7 @@ object GraphOps {
     * so both the new column's values and the NULL-backed old rows are
     * hash-checked. */
   def txSchemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
-    val t = demoTxTable(spark, sfDir, "s19") { t =>
-      t.merge(spark.createDataFrame(Seq(
-        ("Customer#000000003", "BUILDING", 0.0, "gold"),
-        ("User#000000001", "BUILDING", 10.0, "silver")))
-        .toDF("name", "house", "acctbal", "tier"))
-      ()
-    }
+    val t = demoTxTable(spark, sfDir, "s19")
     t.snapshot()
       .filter(col("name").isin("Customer#000000002", "Customer#000000003",
         "Customer#000000004", "User#000000001"))
@@ -3467,13 +3368,7 @@ object GraphOps {
     * certificate (`fold_matches_direct` must read true). Sums in BIGINT
     * cents — no float accumulation channel. */
   def cdcIncrementalAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    val t = demoTxTable(spark, sfDir, "s17") { t =>
-      t.merge(spark.createDataFrame(Seq(
-        ("Customer#000000003", "BUILDING", 0.0),
-        ("User#000000001", "BUILDING", 10.0))).toDF("name", "house", "acctbal"))
-      t.delete(spark.createDataFrame(Seq(Tuple1("Customer#000000005"))).toDF("name"))
-      ()
-    }
+    val t = demoTxTable(spark, sfDir, "s17")
     def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
     def agg(df: DataFrame) = df.groupBy("house")
       .agg(count(lit(1)).as("n"), sum(cents(col("acctbal"))).as("bal"))

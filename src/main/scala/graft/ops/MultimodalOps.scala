@@ -117,17 +117,13 @@ object MultimodalOps {
     * against the source rows, certifying the whole write→list→read→
     * decode-key chain. */
   def binaryIngest(spark: SparkSession, sfDir: String, maxId: Int = 50): DataFrame = {
-    val dir = graft.etl.Artifacts.path(sfDir, "binfiles")
-    val ready = java.nio.file.Paths.get(dir, "_GRAFT_READY")
-    if (!java.nio.file.Files.exists(ready)) {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    val dir = graft.etl.Artifacts.frozen(sfDir, "binfiles") { d =>
       Tables.documents(spark, sfDir).filter(col("doc_id") < maxId)
         .select("doc_id", "text").collect().foreach { r =>
           java.nio.file.Files.write(
-            java.nio.file.Paths.get(dir, f"${r.getLong(0)}%05d.bin"),
+            java.nio.file.Paths.get(d, f"${r.getLong(0)}%05d.bin"),
             r.getString(1).getBytes("UTF-8"))
         }
-      java.nio.file.Files.createFile(ready)
     }
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.bin").load(dir)

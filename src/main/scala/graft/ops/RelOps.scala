@@ -2238,7 +2238,7 @@ object RelOps {
       val key = java.security.MessageDigest.getInstance("MD5")
         .digest(canon.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
       val p = graft.etl.Artifacts.path(sfDir, s"rescache_$key")
-      val hit = new java.io.File(p, "_SUCCESS").exists()
+      val hit = graft.etl.Artifacts.exists(p)
       if (!hit) df.write.mode("overwrite").parquet(p)
       (graft.core.FileMeta.parquet(spark, p), hit)
     }

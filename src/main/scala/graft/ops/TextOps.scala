@@ -1607,18 +1607,14 @@ object TextOps {
       .select(col("doc_id"), explode(toks(col("text"))).as("term"))
       .filter(col("term") =!= "")
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val dir = graft.etl.Artifacts.path(sfDir, "tx_demo_s23")
-    val ready = java.nio.file.Paths.get(dir, "_GRAFT_READY")
-    if (!java.nio.file.Files.exists(ready)) {
-      graft.core.TxTable.drop(dir)
+    val dir = graft.etl.Artifacts.frozen(sfDir, "tx_demo_s23") { d =>
       val docs = Tables.documents(spark, sfDir)
         .filter(col("doc_id") < 200).select("doc_id", "text")
       // 8 buckets: 200-doc demo table; halves the files each of the three
       // commits writes without touching the maintenance semantics.
-      val tb = graft.core.TxTable.create(spark, dir, docs, Seq("doc_id"), numBuckets = 8)
+      val tb = graft.core.TxTable.create(spark, d, docs, Seq("doc_id"), numBuckets = 8)
       tb.merge(Seq((5L, "alpha beta beta"), (9999L, "alpha gamma")).toDF("doc_id", "text"))
       tb.deleteMergeOnRead(Seq(7L).toDF("doc_id"))
-      java.nio.file.Files.createFile(ready)
     }
     val t = graft.core.TxTable.open(spark, dir, Seq("doc_id"))
     // Every intermediate is bounded by the 200-doc demo table: held as

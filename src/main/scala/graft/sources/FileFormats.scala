@@ -130,19 +130,15 @@ object FileFormats {
     * the merged view from the original parquet with a CASE. */
   def schemaEvolutionRead(spark: SparkSession, sfDir: String,
                           maxKey: Long = 4000): DataFrame = {
-    val p = Artifacts.path(sfDir, "orders_evolved")
-    if (!Artifacts.exists(p)) {
+    val p = Artifacts.frozen(sfDir, "orders_evolved") { d =>
       val o = Tables.orders(spark, sfDir).filter(col("o_orderkey") < maxKey)
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
-        .write.mode("overwrite").parquet(s"$p/batch=0")
+        .write.parquet(s"$d/batch=0")
       o.filter(col("o_orderkey") % 2 === 1)
         .select(col("o_orderkey"), col("o_totalprice"),
           col("o_orderstatus").as("o_status"))
-        .write.mode("append").parquet(s"$p/batch=1")
-      // _SUCCESS markers land inside the batch dirs; Artifacts.exists
-      // checks the root, so publish one there (atomic create-on-close).
-      new java.io.File(s"$p/_SUCCESS").createNewFile()
+        .write.parquet(s"$d/batch=1")
     }
     spark.read.option("mergeSchema", "true").parquet(p)
       .groupBy(col("batch").cast("long").as("batch"),

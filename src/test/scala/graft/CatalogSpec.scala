@@ -18,9 +18,9 @@ class CatalogSpec extends AnyFunSuite {
     val wh = java.nio.file.Files.createTempDirectory("graft_cat_wh").toString
     seq += 1
     val cat = s"gcat$seq"
-    spark.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try f(cat, wh)
+    try graft.core.Session.withConf(spark,
+      s"spark.sql.catalog.$cat" -> classOf[graft.sources.GraftCatalog].getName,
+      s"spark.sql.catalog.$cat.warehouse" -> wh)(f(cat, wh))
     finally TxTable.drop(wh)
   }
 
@@ -186,18 +186,15 @@ class CatalogSpec extends AnyFunSuite {
       // row-group skip) would fire on the pushed UPDATE condition — and
       // each one would silently DROP carryover rows if the row-level
       // scan used it (caught live: a 130-row bucket rewrote to 22).
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val before = (hconf.get("parquet.block.size"), hconf.get("parquet.page.size"))
-      val maxRecBefore = spark.conf.getOption("spark.sql.files.maxRecordsPerFile")
-      hconf.setInt("parquet.block.size", 8 * 1024)
-      hconf.setInt("parquet.page.size", 2 * 1024)
-      try {
+      graft.core.Session.withConf(spark,
+          "parquet.block.size" -> 8 * 1024, "parquet.page.size" -> 2 * 1024) {
         val base = (0 until 4000)
           .map(i => (f"K$i%04d", i.toLong)).toDF("k", "v")
         val t = TxTable.create(spark, s"$wh/g", base, Seq("k"),
           numBuckets = 4, zoneMapCols = Seq("v"))
-        spark.conf.set("spark.sql.files.maxRecordsPerFile", 250)
-        t.compact(0, Seq("v"))
+        graft.core.Session.withConf(spark, "spark.sql.files.maxRecordsPerFile" -> 250) {
+          t.compact(0, Seq("v"))
+        }
         val v0 = t.version
         spark.sql(s"UPDATE $cat.g SET v = v + 1000000 WHERE v = 77")
         assert(t.snapshot().count() == 4000,
@@ -243,15 +240,6 @@ class CatalogSpec extends AnyFunSuite {
         val row = rt.snapshot().select(col("v"), col(TxTable.RidCol)).head
         assert(row.getLong(0) == 9L && row.getLong(1) == ridBefore,
           "SQL UPDATE on a row-tracked table must preserve the row id")
-      } finally {
-        if (before._1 == null) hconf.unset("parquet.block.size")
-        else hconf.set("parquet.block.size", before._1)
-        if (before._2 == null) hconf.unset("parquet.page.size")
-        else hconf.set("parquet.page.size", before._2)
-        maxRecBefore match {
-          case Some(v) => spark.conf.set("spark.sql.files.maxRecordsPerFile", v)
-          case None => spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-        }
       }
     }
   }
@@ -260,12 +248,9 @@ class CatalogSpec extends AnyFunSuite {
     withCatalog { (cat, wh) =>
       val ta = makeTable(wh, "a", even = false)
       val tb = makeTable(wh, "b", even = true)
-      val before = (
-        spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false"),
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      graft.core.Session.withConf(spark,
+          "spark.sql.sources.v2.bucketing.enabled" -> true,
+          "spark.sql.autoBroadcastJoinThreshold" -> -1) {
         val joined = spark.sql(
           s"""SELECT a.name, a.acctbal AS ba, b.acctbal AS bb
             |FROM $cat.a a JOIN $cat.b b ON a.name = b.name""".stripMargin)
@@ -276,9 +261,6 @@ class CatalogSpec extends AnyFunSuite {
         val expected = ta.snapshot().select("name").intersect(
           tb.snapshot().select("name")).count()
         assert(joined.count() == expected, "storage-partitioned join lost rows")
-      } finally {
-        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", before._1)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before._2)
       }
     }
   }
@@ -304,14 +286,10 @@ class CatalogSpec extends AnyFunSuite {
       }
       val ta = make("ca", even = false)
       val tb = make("cb", even = true)
-      val before = (
-        spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false"),
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
-        spark.conf.get("spark.sql.requireAllClusterKeysForCoPartition"))
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      try {
+      graft.core.Session.withConf(spark,
+          "spark.sql.sources.v2.bucketing.enabled" -> true,
+          "spark.sql.autoBroadcastJoinThreshold" -> -1,
+          "spark.sql.requireAllClusterKeysForCoPartition" -> false) {
         // The metadata column: hidden from SELECT *, explicitly
         // selectable, bit-exact with the write path's bucket hash.
         assert(!spark.sql(s"SELECT * FROM $cat.ca").columns.contains("_graft_bucket"),
@@ -355,10 +333,6 @@ class CatalogSpec extends AnyFunSuite {
           .filter(pmod(xxhash64(col("name"), col("house")), lit(8)) === 3).count()
         assert(scanned == inBucket,
           s"bucket-filter scan read $scanned rows, expected the one bucket's $inBucket")
-      } finally {
-        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", before._1)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before._2)
-        spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", before._3)
       }
     }
   }
@@ -366,9 +340,7 @@ class CatalogSpec extends AnyFunSuite {
   test("group-by merge key over a catalog table aggregates with ZERO shuffle") {
     withCatalog { (cat, wh) =>
       val t = makeTable(wh, "t", even = false)
-      val before = spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false")
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      try {
+      graft.core.Session.withConf(spark, "spark.sql.sources.v2.bucketing.enabled" -> true) {
         // KeyGroupedPartitioning(bucket(n, name)) clusters every key into
         // one partition, so the partial and final aggregate fuse with no
         // exchange — the 100 TB GROUP BY merge-key is map-side only.
@@ -378,7 +350,7 @@ class CatalogSpec extends AnyFunSuite {
           "group-by merge key must not shuffle a bucket-partitioned scan")
         assert(agg.count() == t.snapshot().count(),
           "shuffle-free aggregate lost groups")
-      } finally spark.conf.set("spark.sql.sources.v2.bucketing.enabled", before)
+      }
     }
   }
 

@@ -1355,13 +1355,10 @@ class Dsv2Spec extends AnyFunSuite {
 
   test("sorted compaction makes row-group skipping effective for range predicates") {
     val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_sortcompact").toString
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val before = (hconf.get("parquet.block.size"), hconf.get("parquet.page.size"))
     // Small row groups so one bucket file holds MANY of them — the unit
     // the footer-stats skipping operates on.
-    hconf.setInt("parquet.block.size", 64 * 1024)
-    hconf.setInt("parquet.page.size", 16 * 1024)
-    try {
+    try graft.core.Session.withConf(spark,
+        "parquet.block.size" -> 64 * 1024, "parquet.page.size" -> 16 * 1024) {
       import spark.implicits._
       // Values in pseudo-random order: on the unsorted layout every row
       // group's min/max spans nearly the full domain, so a narrow range
@@ -1392,22 +1389,13 @@ class Dsv2Spec extends AnyFunSuite {
       assert(sorted < unsorted / 10,
         s"sorted layout must skip most row groups: emitted $sorted vs unsorted $unsorted")
       assert(sorted >= expected, "scan emitted fewer rows than the predicate matches")
-    } finally {
-      TxTable.drop(dir)
-      if (before._1 == null) hconf.unset("parquet.block.size")
-      else hconf.set("parquet.block.size", before._1)
-      if (before._2 == null) hconf.unset("parquet.page.size")
-      else hconf.set("parquet.page.size", before._2)
-    }
+    } finally TxTable.drop(dir)
   }
 
   test("z-order compaction: range predicates on BOTH dimensions skip in one layout") {
     val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_zorder").toString
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val before = (hconf.get("parquet.block.size"), hconf.get("parquet.page.size"))
-    hconf.setInt("parquet.block.size", 64 * 1024)
-    hconf.setInt("parquet.page.size", 16 * 1024)
-    try {
+    try graft.core.Session.withConf(spark,
+        "parquet.block.size" -> 64 * 1024, "parquet.page.size" -> 16 * 1024) {
       import spark.implicits._
       // Two independent pseudo-random dimensions: unsorted, every row
       // group spans both domains; a 1-D sort would serve only its leading
@@ -1436,22 +1424,13 @@ class Dsv2Spec extends AnyFunSuite {
       assert(zx * 2 <= ux, s"x dimension must skip >=2x: emitted $zx vs unsorted $ux")
       assert(zy * 2 <= uy, s"y dimension must skip >=2x: emitted $zy vs unsorted $uy")
       assert(zx >= ex && zy >= ey, "scan emitted fewer rows than the predicates match")
-    } finally {
-      TxTable.drop(dir)
-      if (before._1 == null) hconf.unset("parquet.block.size")
-      else hconf.set("parquet.block.size", before._1)
-      if (before._2 == null) hconf.unset("parquet.page.size")
-      else hconf.set("parquet.page.size", before._2)
-    }
+    } finally TxTable.drop(dir)
   }
 
   test("string predicates skip row groups via binary footer statistics on a sorted layout") {
     val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_strskip").toString
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val before = (hconf.get("parquet.block.size"), hconf.get("parquet.page.size"))
-    hconf.setInt("parquet.block.size", 32 * 1024)
-    hconf.setInt("parquet.page.size", 8 * 1024)
-    try {
+    try graft.core.Session.withConf(spark,
+        "parquet.block.size" -> 32 * 1024, "parquet.page.size" -> 8 * 1024) {
       import spark.implicits._
       // Zero-padded tokens: lexical order == numeric order, so a sorted
       // layout gives each row group a narrow token slice. Values are
@@ -1484,24 +1463,15 @@ class Dsv2Spec extends AnyFunSuite {
         .flatMap(_.metrics.get("numOutputRows").map(_.value)).sum
       assert(eqRows * 4 <= n,
         s"string equality read $eqRows of $n rows — footer stats not consulted")
-    } finally {
-      if (before._1 == null) hconf.unset("parquet.block.size")
-      else hconf.set("parquet.block.size", before._1)
-      if (before._2 == null) hconf.unset("parquet.page.size")
-      else hconf.set("parquet.page.size", before._2)
-      TxTable.drop(dir)
-    }
+    } finally TxTable.drop(dir)
   }
 
   test("column indexes skip PAGES inside admitted row groups on a sorted layout") {
     val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_colindex").toString
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val before = (hconf.get("parquet.block.size"), hconf.get("parquet.page.size"))
     // FEW big row groups, MANY small pages each: row-group stats are the
     // coarse unit, the column index is the fine one.
-    hconf.setInt("parquet.block.size", 512 * 1024)
-    hconf.setInt("parquet.page.size", 4 * 1024)
-    try {
+    try graft.core.Session.withConf(spark,
+        "parquet.block.size" -> 512 * 1024, "parquet.page.size" -> 4 * 1024) {
       import spark.implicits._
       val nRows = 400000
       val base = (0 until nRows)
@@ -1545,23 +1515,14 @@ class Dsv2Spec extends AnyFunSuite {
         s"scan emitted $emitted rows — not finer than the smallest row group " +
           s"($minGroupRows): page-level skipping is not engaging")
       assert(emitted >= got, "scan emitted fewer rows than the predicate matches")
-    } finally {
-      TxTable.drop(dir)
-      if (before._1 == null) hconf.unset("parquet.block.size")
-      else hconf.set("parquet.block.size", before._1)
-      if (before._2 == null) hconf.unset("parquet.page.size")
-      else hconf.set("parquet.page.size", before._2)
-    }
+    } finally TxTable.drop(dir)
   }
 
   test("bloom filters skip row groups for point lookups on an UNSORTED column") {
     val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_bloom").toString
     val dir2 = java.nio.file.Files.createTempDirectory("graft_dsv2_nobloom").toString
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val before = (hconf.get("parquet.block.size"), hconf.get("parquet.page.size"))
-    hconf.setInt("parquet.block.size", 64 * 1024)
-    hconf.setInt("parquet.page.size", 16 * 1024)
-    try {
+    try graft.core.Session.withConf(spark,
+        "parquet.block.size" -> 64 * 1024, "parquet.page.size" -> 16 * 1024) {
       import spark.implicits._
       // High-cardinality values in pseudo-random order: every row group's
       // min/max spans nearly the full domain, so footer STATS admit all of
@@ -1592,13 +1553,7 @@ class Dsv2Spec extends AnyFunSuite {
       assert(withBloom < without / 10,
         s"bloom must refute most row groups: emitted $withBloom vs $without without")
       assert(withBloom >= 1, "scan emitted fewer rows than the probe matches")
-    } finally {
-      TxTable.drop(dir); TxTable.drop(dir2)
-      if (before._1 == null) hconf.unset("parquet.block.size")
-      else hconf.set("parquet.block.size", before._1)
-      if (before._2 == null) hconf.unset("parquet.page.size")
-      else hconf.set("parquet.page.size", before._2)
-    }
+    } finally { TxTable.drop(dir); TxTable.drop(dir2) }
   }
 
   test("bucket blooms auto-size up from written row counts — no silent saturation") {

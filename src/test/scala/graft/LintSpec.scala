@@ -6,15 +6,24 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source rules over `src/main/scala` that no compiler enforces. The
-  * one-off probes under `graft/tools` are exempt unless a rule says
-  * otherwise. Comment lines are skipped, so prose may name the patterns. */
+/** Source rules over `src/main/scala`, and where a rule says so over the
+  * specs, that no compiler enforces. The one-off probes under
+  * `graft/tools` are exempt unless a rule says otherwise. Comment lines
+  * are skipped, so prose may name the patterns. */
 class LintSpec extends AnyFunSuite {
 
   /** (path relative to src/main/scala, source with comment lines blanked),
     * `graft/tools` included. */
-  private lazy val allSources: Seq[(String, String)] = {
-    val root = Paths.get("src/main/scala")
+  private lazy val allSources: Seq[(String, String)] = under("src/main/scala")
+
+  /** The specs but this one (its patterns name what they look for), keyed
+    * `test/` + path relative to src/test/scala. */
+  private lazy val specSources: Seq[(String, String)] =
+    under("src/test/scala").map { case (f, src) => s"test/$f" -> src }
+      .filterNot(_._1 == "test/graft/LintSpec.scala")
+
+  private def under(dir: String): Seq[(String, String)] = {
+    val root = Paths.get(dir)
     val s = Files.walk(root)
     val files = try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
                 finally s.close()
@@ -74,15 +83,16 @@ class LintSpec extends AnyFunSuite {
   }
 
   test("outside the tools, only Session changes session or Hadoop settings") {
-    // An entry that sets a key and does not restore it changes every
-    // later plan in the session; Session.withConf scopes a change to one
-    // call. Any use of the shared Hadoop configuration counts, since a
+    // An entry or spec that sets a key and does not restore it changes
+    // every later plan in the session; Session.withConf scopes a change to
+    // one call. Any use of the shared Hadoop configuration counts, since a
     // local alias of it can be set under any name. Graph.personEdgesU
-    // keeps one set for sessions built outside Session (its comment
-    // says why).
+    // keeps one set for sessions built outside Session (its comment says
+    // why); SessionSpec reads the shared configuration to check that
+    // nothing wrote it.
     val write = """\.conf\s*\.\s*(?:set|unset)\w*\s*\(|\bhadoopConfiguration\b""".r
     val def_ = """\bdef\s+(\w+)""".r
-    val sites = allSources.flatMap { case (f, src) =>
+    val sites = (allSources ++ specSources).flatMap { case (f, src) =>
       write.findAllMatchIn(src).map { m =>
         (f, def_.findAllMatchIn(src.substring(0, m.start)).toSeq.lastOption.map(_.group(1)))
       }
@@ -90,6 +100,7 @@ class LintSpec extends AnyFunSuite {
     def allowed(site: (String, Option[String])): Boolean = site match {
       case ("graft/core/Session.scala", _) => true
       case ("graft/core/Graph.scala", Some("personEdgesU")) => true
+      case ("test/graft/SessionSpec.scala", Some("settings")) => true
       case (f, _) => isTool(f)
     }
     val offending = sites.filterNot(allowed)
@@ -98,6 +109,21 @@ class LintSpec extends AnyFunSuite {
     // The pattern must still see the sites it allows, or it checks nothing.
     assert(sites.contains(("graft/core/Session.scala", Some("withConf"))))
     assert(sites.contains(("graft/core/Graph.scala", Some("personEdgesU"))))
+    assert(sites.contains(("test/graft/SessionSpec.scala", Some("settings"))))
     assert(write.findFirstIn("val hconf = spark.sparkContext.hadoopConfiguration").isDefined)
+    assert(write.findFirstIn("spark.conf.set(key, v)").isDefined)
+  }
+
+  test("only Artifacts names a build-once ready mark") {
+    // Artifacts.frozen writes the one ready mark and publishes an artifact
+    // by renaming its dir, so no entry or spec writes, deletes or reads a
+    // marker file (and none can leave a half-built or rewritten artifact
+    // behind one). The old mark and side-file names count too.
+    val mark = """_GRAFT_FROZEN|_GRAFT_READY|_ARTIFACT_READY|_GRAFT_BOUNDS""".r
+    val sites = (allSources ++ specSources)
+      .filter { case (_, src) => mark.findFirstIn(src).isDefined }.map(_._1)
+    // The pattern must still see the site it allows, or it checks nothing.
+    assert(sites == Seq("graft/etl/Artifacts.scala"),
+      s"ready-mark names outside Artifacts: ${sites.filterNot(_ == "graft/etl/Artifacts.scala").mkString(", ")}")
   }
 }

@@ -443,7 +443,6 @@ class PropertySpec extends AnyFunSuite {
   test("string zone bounds: shared-prefix battery never loses rows (randomized)") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_strzone").toString
-    val maxRecBefore = spark.conf.getOption("spark.sql.files.maxRecordsPerFile")
     try {
       // The truncation hazard by construction: families sharing a 16-byte
       // (or longer) prefix, a multibyte family whose 16-byte cut lands
@@ -456,10 +455,11 @@ class PropertySpec extends AnyFunSuite {
       val values = (for { p <- prefixes; s <- suffixes } yield p + s).distinct
       val base = values.zipWithIndex.map { case (v, i) => (f"k$i%03d", v) }
         .toDF("k", "name")
-      spark.conf.set("spark.sql.files.maxRecordsPerFile", 8)
-      val t = graft.core.TxTable.create(spark, dir, base, Seq("k"),
-        numBuckets = 4, zoneMapCols = Seq("name"))
-      t.compact(0, Seq("name")) // many range-disjoint files per bucket
+      graft.core.Session.withConf(spark, "spark.sql.files.maxRecordsPerFile" -> 8) {
+        val t = graft.core.TxTable.create(spark, dir, base, Seq("k"),
+          numBuckets = 4, zoneMapCols = Seq("name"))
+        t.compact(0, Seq("name")) // many range-disjoint files per bucket
+      }
       // The sidecar really recorded truncated string bounds.
       import scala.jdk.CollectionConverters._
       val zm = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "data"))
@@ -478,13 +478,7 @@ class PropertySpec extends AnyFunSuite {
           assert(got == want, s"probe name $op '$p' lost or invented rows")
         }
       }
-    } finally {
-      maxRecBefore match {
-        case Some(v) => spark.conf.set("spark.sql.files.maxRecordsPerFile", v)
-        case None => spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-      }
-      graft.core.TxTable.drop(dir)
-    }
+    } finally graft.core.TxTable.drop(dir)
   }
 
   test("TxTable deleteWhere: predicate semantics, NULL no-fire, no-op, bucket drop, time travel") {
@@ -841,10 +835,12 @@ class PropertySpec extends AnyFunSuite {
       F.delete(sidecar)
       try {
         val wh = P.get(dir).getParent.toString
-        spark.conf.set("spark.sql.catalog.gfault", classOf[graft.sources.GraftCatalog].getName)
-        spark.conf.set("spark.sql.catalog.gfault.warehouse", dir)
         val err = intercept[Exception] {
-          spark.sql(s"SELECT * FROM gfault.`$dir`").collect()
+          graft.core.Session.withConf(spark,
+              "spark.sql.catalog.gfault" -> classOf[graft.sources.GraftCatalog].getName,
+              "spark.sql.catalog.gfault.warehouse" -> dir) {
+            spark.sql(s"SELECT * FROM gfault.`$dir`").collect()
+          }
         }
         assert(!err.getMessage.contains("NullPointer"),
           s"sidecar-less table must refuse with a clear message, got: ${err.getMessage}")
@@ -948,14 +944,9 @@ class PropertySpec extends AnyFunSuite {
       // Fragment: three merges, each scattering touched buckets into a
       // fresh commit dir, written one row per file (a merge's write is
       // bucket-aligned, so only a file-size cap splits a bucket).
-      val maxRec = "spark.sql.files.maxRecordsPerFile"
-      val maxRecBefore = spark.conf.getOption(maxRec)
-      spark.conf.set(maxRec, "1")
-      try (1 to 3).foreach(i => t.merge(
-        base.filter(_._1.endsWith(i.toString)).map { case (k, v) => (k, v + 100L * i) }.toDF("k", "v")))
-      finally maxRecBefore match {
-        case Some(v) => spark.conf.set(maxRec, v)
-        case None => spark.conf.unset(maxRec)
+      graft.core.Session.withConf(spark, "spark.sql.files.maxRecordsPerFile" -> 1) {
+        (1 to 3).foreach(i => t.merge(
+          base.filter(_._1.endsWith(i.toString)).map { case (k, v) => (k, v + 100L * i) }.toDF("k", "v")))
       }
       val preV = t.version
       val pre = t.snapshot().as[(String, Long)].collect().toMap

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,11 +17,11 @@ class SessionSpec extends AnyFunSuite {
     "st_window_counts", "rq100_sql_script", "rq9_event_window")
 
   /** Build-once entries that change a setting only while they build their
-    * artifact, with the artifact's ready mark: removing it makes the
-    * entry build again. */
+    * artifact, with the artifact's name: deleting it makes the entry build
+    * again. */
   private val buildMarks = Map(
-    "s55_zonemap_range" -> "tx_demo_s55", "s57_zorder_nway" -> "tx_s57_zorder",
-    "s59_hilbert_compact" -> "tx_s59_hilbert", "s60_stats_manifest" -> "tx_demo_s60",
+    "s55_zonemap_range" -> "tx_demo_s55", "s57_zorder_nway" -> "tx_demo_s57",
+    "s59_hilbert_compact" -> "tx_demo_s59", "s60_stats_manifest" -> "tx_demo_s60",
     "s63_string_zonemap" -> "tx_demo_s63")
 
   /** Every explicit session setting, and the shared Hadoop configuration's
@@ -36,9 +34,7 @@ class SessionSpec extends AnyFunSuite {
   }
 
   for (name <- changing) test(s"$name leaves the session settings as it found them") {
-    buildMarks.get(name).foreach { a =>
-      Files.deleteIfExists(Paths.get(graft.etl.Artifacts.path(sf, a), "_GRAFT_READY"))
-    }
+    buildMarks.get(name).foreach(a => graft.core.TxTable.drop(graft.etl.Artifacts.path(sf, a)))
     val before = settings()
     assert(SparkEntry.queries(name)(spark, sf).collect().nonEmpty, s"$name returned no rows")
     val after = settings()

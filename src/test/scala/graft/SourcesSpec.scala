@@ -103,22 +103,17 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("runtime bloom filter from a selective dim prunes the fact scan's shuffle") {
-    val keys = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val prev = keys.map(k => k -> spark.conf.get(k)).toMap
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the shuffle join the filter exists for
-    try {
+    graft.core.Session.withConf(spark,
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> true,
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> 0,
+        "spark.sql.autoBroadcastJoinThreshold" -> -1) { // force the shuffle join the filter exists for
       val li = graft.core.Tables.lineitem(spark, sf)
       val part = graft.core.Tables.part(spark, sf).filter(col("p_size") === 1)
       val q = li.join(part, col("l_partkey") === col("p_partkey")).agg(count(lit(1)).as("n"))
       q.collect()
       val p = q.queryExecution.executedPlan.toString
       assert(p.contains("bloom"), s"no runtime bloom filter in plan:\n$p")
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("AQE splits a skewed join partition at runtime (the automatic twin of rq27's salting)") {
@@ -130,19 +125,12 @@ class SourcesSpec extends AnyFunSuite {
       .select(when(col("id") % 10 =!= 0, lit(777L)).otherwise(col("id")).as("k"),
         concat_ws("", Seq.fill(8)(md5(col("id").cast("string"))): _*).as("pad"))
     val dim = spark.range(0, 1000).select(col("id").as("k"), md5(col("id").cast("string")).as("d"))
-    val keys = Seq(
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val prev = keys.map(k => k -> spark.conf.get(k)).toMap
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16KB")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force a shuffle join
-    try {
+    graft.core.Session.withConf(spark,
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> 1,
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> false,
+        "spark.sql.autoBroadcastJoinThreshold" -> -1) { // force a shuffle join
       // Global (keyless) aggregate only: any keyed aggregate after the join
       // would REQUIRE hash-partitioning on k and legally veto the skew
       // split (splitting breaks key-clustering) — the constraint that makes
@@ -158,7 +146,7 @@ class SourcesSpec extends AnyFunSuite {
       // AQE marks the split sort-merge join with skew=true
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"), s"no skew-split in plan:\n$plan")
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("partitioned scan prunes to the one event_type directory") {
@@ -252,18 +240,11 @@ class SourcesSpec extends AnyFunSuite {
   test("footer-cache schemas equal Spark's inferred ones: corpus, _SUCCESS dir, partitionBy, single file") {
     // Every corpus table (pyarrow-written: no Spark row-schema metadata),
     // events.ts under both nanosAsLong settings.
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    try {
-      for (nanos <- Seq("false", "true"); t <- Seq("region", "nation", "customer",
-             "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings")) {
-        spark.conf.set(key, nanos)
+    for (nanos <- Seq(false, true); t <- Seq("region", "nation", "customer",
+           "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings"))
+      graft.core.Session.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> nanos) {
         sameSchemaAsSpark(Seq(s"$sf/$t.parquet"))
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
     // A Spark-written dir: _SUCCESS and .crc siblings, Spark's schema key.
     val dir = tempDir("graft_fm_spark") + "/t"
     spark.range(5).selectExpr("id", "cast(id as string) s", "array(id) a",

@@ -1,6 +1,7 @@
 package graft
 
 import graft.etl.GraphBuilder
+import graft.lifecycle.Demos
 import graft.ops.{GraphOps, MultimodalOps, RelOps, SimilarityOps, TextOps}
 import graft.plans.GraphAnalytics
 import graft.functions.MlOps
@@ -36,16 +37,16 @@ object SparkEntry {
     "s5_upsert_person" -> ((s, d) => GraphOps.upsertPersons(s, d)),
     // Transactional MERGE (copy-on-write TxTable): create → merge → read
     // back in-session; proves read-your-writes, not just merge dataflow.
-    "s12_merge_visible" -> ((s, d) => GraphOps.mergeVisible(s, d)),
+    "s12_merge_visible" -> ((s, d) => Demos.mergeVisible(s, d)),
     // The streaming twin: stream → foreachBatch MERGE into the TxTable →
     // read back in-session (the reference's user write path as a stream).
     "s13_stream_merge" -> ((s, d) => StreamingOps.streamedTxMerge(s, d)),
-    "s15_time_travel" -> ((s, d) => GraphOps.timeTravel(s, d)),
+    "s15_time_travel" -> ((s, d) => Demos.timeTravel(s, d)),
     // OPTIMIZE: small-file compaction over the TxTable — layout-only
     // rewrite published as a new version; oracle certifies data identity.
-    "s20_tx_compaction" -> ((s, d) => GraphOps.txCompaction(s, d)),
+    "s20_tx_compaction" -> ((s, d) => Demos.txCompaction(s, d)),
     // Merge-on-read equality-delete: DV commit only, base pointers pinned.
-    "s21_mor_delete" -> ((s, d) => GraphOps.morDelete(s, d)),
+    "s21_mor_delete" -> ((s, d) => Demos.morDelete(s, d)),
     // Bloom sidecar data skipping: point probe reads only candidate dirs.
     "s22_bloom_skip" -> ((s, d) => graft.sources.BloomSkipIndex.pointLookup(s, d)),
     // CDC-maintained postings index == from-scratch rebuild (certified).
@@ -53,73 +54,73 @@ object SparkEntry {
     // Dynamic partition overwrite: backfill one corrected day in place.
     "s24_backfill" -> ((s, d) => graft.sources.FileFormats.backfillOverwrite(s, d)),
     // CHECK constraints: conforming merge lands, violator rejected atomically.
-    "s25_tx_constraints" -> ((s, d) => GraphOps.txConstraints(s, d)),
+    "s25_tx_constraints" -> ((s, d) => Demos.txConstraints(s, d)),
     // RESTORE: metadata-only rollback to v0; bad version stays travelable.
-    "s26_restore" -> ((s, d) => GraphOps.txRestore(s, d)),
+    "s26_restore" -> ((s, d) => Demos.txRestore(s, d)),
     // Layout evolution: rebucket 4→16 via compact, then merge on the new layout.
-    "s27_rebucket" -> ((s, d) => GraphOps.txRebucket(s, d)),
+    "s27_rebucket" -> ((s, d) => Demos.txRebucket(s, d)),
     // Keyed point read: k keys open at most k buckets, never the table.
-    "s28_point_lookup" -> ((s, d) => GraphOps.txPointLookup(s, d)),
+    "s28_point_lookup" -> ((s, d) => Demos.txPointLookup(s, d)),
     // Write-audit-publish: stage on a branch, audit, fast-forward to main.
-    "s29_wap" -> ((s, d) => GraphOps.txWap(s, d)),
+    "s29_wap" -> ((s, d) => Demos.txWap(s, d)),
     // DESCRIBE HISTORY: per-version op labels + row counts over 5 commits.
-    "s30_history" -> ((s, d) => GraphOps.txHistory(s, d)),
+    "s30_history" -> ((s, d) => Demos.txHistory(s, d)),
     // Catalog-level multi-table atomic commit: no torn cross-table reads.
-    "s31_catalog_txn" -> ((s, d) => GraphOps.catalogTxn(s, d)),
+    "s31_catalog_txn" -> ((s, d) => Demos.catalogTxn(s, d)),
     // Incremental OPTIMIZE: only degraded buckets rewritten, converges.
-    "s32_partial_compact" -> ((s, d) => GraphOps.txPartialCompact(s, d)),
+    "s32_partial_compact" -> ((s, d) => Demos.txPartialCompact(s, d)),
     // Time-travel snapshots diffed in plain SQL over temp views.
-    "s33_sql_time_travel" -> ((s, d) => GraphOps.sqlTimeTravel(s, d)),
+    "s33_sql_time_travel" -> ((s, d) => Demos.sqlTimeTravel(s, d)),
     // Metadata-only DROP COLUMN: narrowing evolution, old versions keep it.
-    "s34_drop_column" -> ((s, d) => GraphOps.txDropColumn(s, d)),
+    "s34_drop_column" -> ((s, d) => Demos.txDropColumn(s, d)),
     // Full MERGE grammar: conditional update/delete/insert in one commit.
-    "s35_merge_clauses" -> ((s, d) => GraphOps.txMergeClauses(s, d)),
+    "s35_merge_clauses" -> ((s, d) => Demos.txMergeClauses(s, d)),
     // Zero-copy shallow clone: independent table over shared data files.
-    "s36_clone" -> ((s, d) => GraphOps.txClone(s, d)),
+    "s36_clone" -> ((s, d) => Demos.txClone(s, d)),
     // Predicate UPDATE ... SET ... WHERE: partial rewrite, no-op no-publish.
-    "s37_update_where" -> ((s, d) => GraphOps.txUpdateWhere(s, d)),
+    "s37_update_where" -> ((s, d) => Demos.txUpdateWhere(s, d)),
     // ADD COLUMN ... DEFAULT: metadata-only widening, default served at read.
-    "s38_add_column" -> ((s, d) => GraphOps.txAddColumn(s, d)),
+    "s38_add_column" -> ((s, d) => Demos.txAddColumn(s, d)),
     // RENAME COLUMN: metadata-only column-mapping rename on TxTable.
-    "s39_rename_column" -> ((s, d) => GraphOps.txRenameColumn(s, d)),
+    "s39_rename_column" -> ((s, d) => Demos.txRenameColumn(s, d)),
     // DSv2 connector read: format("graft") with bucket + column pushdown.
-    "s40_dsv2_read" -> ((s, d) => GraphOps.txDsv2Read(s, d)),
+    "s40_dsv2_read" -> ((s, d) => Demos.txDsv2Read(s, d)),
     // Streaming change feed: readStream over the commit log, fold == snapshot.
-    "s41_change_feed" -> ((s, d) => GraphOps.txChangeFeed(s, d)),
+    "s41_change_feed" -> ((s, d) => Demos.txChangeFeed(s, d)),
     // COUNT(*) from parquet footers on clean snapshots; DVs fall back.
-    "s42_count_pushdown" -> ((s, d) => GraphOps.txCountPushdown(s, d)),
+    "s42_count_pushdown" -> ((s, d) => Demos.txCountPushdown(s, d)),
     // MIN/MAX from parquet footer statistics; DVs and strings fall back.
-    "s43_minmax_pushdown" -> ((s, d) => GraphOps.txMinMaxPushdown(s, d)),
+    "s43_minmax_pushdown" -> ((s, d) => Demos.txMinMaxPushdown(s, d)),
     // Catalog plugin + storage-partitioned join: zero-shuffle co-bucketed
     // merge-key join through KeyGroupedPartitioning + FunctionCatalog.
-    "s44_catalog_spj" -> ((s, d) => GraphOps.txCatalogSpj(s, d)),
+    "s44_catalog_spj" -> ((s, d) => Demos.txCatalogSpj(s, d)),
     // Reported statistics pick a hint-free broadcast; runtime IN filters
     // prune buckets at execution (the DSv2 DPP shape).
-    "s45_stats_runtime" -> ((s, d) => GraphOps.txStatsRuntime(s, d)),
+    "s45_stats_runtime" -> ((s, d) => Demos.txStatsRuntime(s, d)),
     // Parquet row-group skipping: pushed non-key predicates prune row
     // groups via footer statistics in both connector read paths.
-    "s46_rowgroup_skip" -> ((s, d) => GraphOps.txRowGroupSkip(s, d)),
+    "s46_rowgroup_skip" -> ((s, d) => Demos.txRowGroupSkip(s, d)),
     // Composite-key storage-partitioned join via the _graft_bucket
     // metadata column: zero-shuffle 2-key merge joins + bucket pruning.
-    "s47_composite_spj" -> ((s, d) => GraphOps.txCompositeSpj(s, d)),
+    "s47_composite_spj" -> ((s, d) => Demos.txCompositeSpj(s, d)),
     // Parquet bloom filters on declared point-lookup columns: EqualTo/In
     // refutes row groups on a RANDOM layout where min/max stats cannot.
-    "s50_bloom_point" -> ((s, d) => GraphOps.txBloomPoint(s, d)),
+    "s50_bloom_point" -> ((s, d) => Demos.txBloomPoint(s, d)),
     // Bucket-tier bloom index: per-bucket sidecars refute whole buckets
     // at planning for non-key point lookups, before any footer I/O.
-    "s53_bucket_bloom" -> ((s, d) => GraphOps.txBucketBloomIndex(s, d)),
+    "s53_bucket_bloom" -> ((s, d) => Demos.txBucketBloomIndex(s, d)),
     // End-to-end medallion hop: change-feed stream -> foreachBatch fold ->
     // MERGE into a downstream TxTable, kill-and-resume exactly-once.
-    "s52_medallion_stream" -> ((s, d) => GraphOps.txMedallionStream(s, d)),
+    "s52_medallion_stream" -> ((s, d) => Demos.txMedallionStream(s, d)),
     // CDC read over the TxTable: row-level insert/update/delete between
     // two versions, scan pruned to manifest-repointed buckets only.
-    "s17_cdc_diff" -> ((s, d) => GraphOps.cdcDiff(s, d)),
+    "s17_cdc_diff" -> ((s, d) => Demos.cdcDiff(s, d)),
     // CDC folded into a downstream aggregate + certified against the
     // direct head-snapshot recompute — incremental view maintenance.
-    "s18_cdc_incremental" -> ((s, d) => GraphOps.cdcIncrementalAgg(s, d)),
+    "s18_cdc_incremental" -> ((s, d) => Demos.cdcIncrementalAgg(s, d)),
     // Widening MERGE on the transactional table: schema evolves in place,
     // pre-evolution rows serve typed NULL for the new column.
-    "s19_tx_schema_evolution" -> ((s, d) => GraphOps.txSchemaEvolution(s, d)),
+    "s19_tx_schema_evolution" -> ((s, d) => Demos.txSchemaEvolution(s, d)),
     "s14_stream_file_sink" -> ((s, d) => StreamingOps.streamedFileSink(s, d)),
     "s7_graph_json" -> ((s, d) => GraphOps.graphJson(s, d, 3)),
     "s8_csv_roundtrip" -> ((s, d) => graft.sources.FileFormats.csvRoundTrip(s, d)),
@@ -142,56 +143,56 @@ object SparkEntry {
     "j1_winder_depth2" -> ((s, d) => GraphOps.winderDepth2(s, d, WinderFriends)),
     // Concurrency certificate: the interactive class re-run on 9
     // concurrent threads, every response bit-identical to serial.
-    "s48_concurrent_stability" -> ((s, d) => GraphOps.txConcurrentStability(s, d)),
+    "s48_concurrent_stability" -> ((s, d) => Demos.txConcurrentStability(s, d)),
     // OPTIMIZE with clustering: sortBy compaction makes row-group
     // skipping effective for range predicates (layout-only rewrite).
-    "s49_sorted_compact" -> ((s, d) => GraphOps.txSortedCompact(s, d)),
+    "s49_sorted_compact" -> ((s, d) => Demos.txSortedCompact(s, d)),
     // Cluster-on-write: declared cluster columns keep every copy-on-write
     // rewrite sorted - row-group skipping stays effective with NO OPTIMIZE.
-    "s54_clustered_write" -> ((s, d) => GraphOps.txClusteredWrite(s, d)),
+    "s54_clustered_write" -> ((s, d) => Demos.txClusteredWrite(s, d)),
     // OPTIMIZE with Z-ORDER: bit-interleaved 2-D clustering in the same
     // per-bucket rewrite; range predicates on EITHER dimension skip.
-    "s51_zorder_compact" -> ((s, d) => GraphOps.txZorderCompact(s, d)),
+    "s51_zorder_compact" -> ((s, d) => Demos.txZorderCompact(s, d)),
     // N-way Z-ORDER: round-robin bit interleave of 3+ columns — one
     // layout serves range predicates on every clustered dimension.
-    "s57_zorder_nway" -> ((s, d) => GraphOps.txZorderNway(s, d)),
+    "s57_zorder_nway" -> ((s, d) => Demos.txZorderNway(s, d)),
     // ZONE-MAP sidecars: per-file min/max recorded at write time — range
     // predicates refute files (and whole buckets) before any footer I/O.
-    "s55_zonemap_range" -> ((s, d) => GraphOps.txZonemapRange(s, d)),
+    "s55_zonemap_range" -> ((s, d) => Demos.txZonemapRange(s, d)),
     // TYPE WIDENING: int->bigint metadata-only evolution; mixed-physical
     // commits read grouped + cast, skipping tiers refuse conservatively.
-    "s56_widen_column" -> ((s, d) => GraphOps.txWidenColumn(s, d)),
+    "s56_widen_column" -> ((s, d) => Demos.txWidenColumn(s, d)),
     // DATE PARTITIONING: hidden days(ts) transform — day dirs inside
     // buckets, path-derived planning prune, per-commit evolution.
-    "s58_date_partition" -> ((s, d) => GraphOps.txDatePartition(s, d)),
+    "s58_date_partition" -> ((s, d) => Demos.txDatePartition(s, d)),
     // HILBERT clustering: the locality-better 2-D alternative to Morton,
     // via the native codegen'd HilbertIndex expression; curve spec-pinned.
-    "s59_hilbert_compact" -> ((s, d) => GraphOps.txHilbertCompact(s, d)),
+    "s59_hilbert_compact" -> ((s, d) => Demos.txHilbertCompact(s, d)),
     // Consolidated per-version stats manifest: planning = ONE metadata
     // read (listing+rows+zones+blooms+pspec), identical decisions.
-    "s60_stats_manifest" -> ((s, d) => GraphOps.txStatsManifest(s, d)),
+    "s60_stats_manifest" -> ((s, d) => Demos.txStatsManifest(s, d)),
     // Predicate DELETE ... WHERE: partial rewrite, CDC-exact, no-op no-publish.
-    "s61_delete_where" -> ((s, d) => GraphOps.txDeleteWhere(s, d)),
-    "s64_sql_delete" -> ((s, d) => GraphOps.txSqlDelete(s, d)),
+    "s61_delete_where" -> ((s, d) => Demos.txDeleteWhere(s, d)),
+    "s64_sql_delete" -> ((s, d) => Demos.txSqlDelete(s, d)),
     // Row tracking: stable per-row ids assigned at insert, preserved by
     // every copy-on-write rewrite; freed ids never reused.
-    "s65_row_lineage" -> ((s, d) => GraphOps.txRowLineage(s, d)),
+    "s65_row_lineage" -> ((s, d) => Demos.txRowLineage(s, d)),
     // DSv2 column statistics: exact key NDV + true zone-map min/max
     // reported to the optimizer from resident planning metadata.
-    "s66_column_stats" -> ((s, d) => GraphOps.txColumnStats(s, d)),
+    "s66_column_stats" -> ((s, d) => Demos.txColumnStats(s, d)),
     // SQL INSERT INTO / INSERT OVERWRITE through the catalog: keyed
     // upsert appends, atomic one-commit full replacement.
-    "s67_sql_insert" -> ((s, d) => GraphOps.txSqlInsert(s, d)),
+    "s67_sql_insert" -> ((s, d) => Demos.txSqlInsert(s, d)),
     // SQL UPDATE / MERGE INTO via group-based row-level operations:
     // bucket = replacement group, runtime group filter, distributed
     // per-bucket replacement write, one-publish pointer swap.
-    "s68_sql_update_merge" -> ((s, d) => GraphOps.txSqlUpdateMerge(s, d)),
+    "s68_sql_update_merge" -> ((s, d) => Demos.txSqlUpdateMerge(s, d)),
     // Partition-covered COUNT(*): day-aligned range counts served from
     // per-file row-count sidecars with zero data I/O; straddles fall back.
-    "s62_ranged_count" -> ((s, d) => GraphOps.txRangedCount(s, d)),
+    "s62_ranged_count" -> ((s, d) => Demos.txRangedCount(s, d)),
     // String zone maps: truncated 16-byte bounds give string range probes
     // file-tier skipping; bounds-not-extrema keeps them sound.
-    "s63_string_zonemap" -> ((s, d) => GraphOps.txStringZonemap(s, d)),
+    "s63_string_zonemap" -> ((s, d) => Demos.txStringZonemap(s, d)),
     "j2_expand_1hop" -> ((s, d) => GraphOps.expand1HopAny(s, d, 7)),
     "j3_housemates_2hop" -> ((s, d) => GraphOps.housemates2Hop(s, d, 7)),
     "j4_house_subgraph" -> ((s, d) => GraphOps.houseSubgraph(s, d, Seq("BUILDING", "AUTOMOBILE"))),

@@ -994,12 +994,11 @@ final class TxTable private (spark: SparkSession, dir: String,
     * falls back to the rebase loop and drops the stale dir). At 100 TB
     * this is the difference between N writers to disjoint key ranges
     * scaling near-linearly and every loser re-reading gigabytes: the
-    * serial section shrinks to manifest I/O. WriteProbe measures both
-    * regimes; ConcurrencySpec pins that resolved histories stay
-    * linearizable and lose no updates. The BASE manifest/schema come in
-    * from the caller's already-loaded state — never re-read from the
-    * log, where a concurrent zero-retention vacuum could have reclaimed
-    * the base version.
+    * serial section shrinks to manifest I/O. ConcurrencySpec pins that
+    * resolved histories stay linearizable and lose no updates. The BASE
+    * manifest/schema come in from the caller's already-loaded state —
+    * never re-read from the log, where a concurrent zero-retention
+    * vacuum could have reclaimed the base version.
     *
     * READ-SET discipline: the disjoint-buckets test covers only writers
     * whose read-set EQUALS their touched buckets — the keyed paths

@@ -1,0 +1,2644 @@
+package graft.lifecycle
+
+import graft.core.{Graph, Session, Tables, TxCatalog, TxTable}
+import graft.etl.Artifacts
+import graft.sources.GraftDataSource
+import graft.lifecycle.Lifecycle.{par2, protocolSlice, sameRows, scanRowsEmitted}
+import graft.ops.GraphOps.{expand1HopAny, searchCi, winderTopK}
+import graft.streaming.StreamingOps
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, Filter, In}
+
+/** The storage-lifecycle demos: registry entries that certify the
+  * TxTable protocol (MERGE, DML and DDL verbs, compaction and clustering,
+  * skipping tiers, the DSv2 connector and catalog, change feed, history)
+  * rather than answer a reference endpoint. Each demo that builds a
+  * table, reads a frozen artifact through a probe or pins an
+  * intermediate runs through [[Lifecycle.demo]], which owns its temp
+  * dirs, materializes its bounded result and releases what it
+  * persisted. The plain reads of the frozen s15/s17/s19 histories (s15,
+  * s17, s18, s19, s33) and s48 persist nothing and return their plan.
+  * Certificates ride the hash channel as boolean columns. */
+object Demos {
+
+  /** S12 — the S5 MERGE executed through the TRANSACTIONAL table
+    * (graft.core.TxTable): create the persons table, MERGE the same update
+    * batch the reference's write path issues (app.py:100-132), then read
+    * the table back IN THE SAME SESSION. The returned rows prove
+    * read-your-writes: the updated/inserted rows are visible alongside
+    * untouched neighbors, and `v` carries the committed version (create=0,
+    * merge=1). The relational s5 entry expresses what MERGE computes; this
+    * entry proves the durable copy-on-write + atomic-commit path computes
+    * the same thing. The table is built in a fresh temp dir per invocation
+    * (a MUTATED table cannot be a shared artifact); [[Lifecycle.demo]]
+    * collects the bounded output before it drops the dir. */
+  def mergeVisible(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s12") { case Seq(dir) =>
+      val base = Graph.nodes(spark, sfDir).select("name", "house", "acctbal")
+      val t = TxTable.create(spark, dir, base, Seq("name"))
+      val updates = spark.createDataFrame(Seq(
+        ("Customer#000000003", "BUILDING", 0.0),
+        ("User#000000001", "BUILDING", 10.0)
+      )).toDF("name", "house", "acctbal")
+      val v = t.merge(updates)
+      t.snapshot()
+        .filter(col("name").isin("Customer#000000002", "Customer#000000003",
+          "Customer#000000004", "User#000000001"))
+        .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"),
+          lit(v).as("v"))
+        .orderBy("name")
+    }
+
+  /** OPTIMIZE demo — the lakehouse compaction pass end-to-end: create →
+    * three disjoint-key MERGEs (each writes its touched buckets, one
+    * file per bucket, into a new commit dir, so the manifest ends up
+    * scattered across commit dirs) → `compact()` → read back. The
+    * merges key on the name's last digit, so
+    * the final state is a pure function of the base table and the oracle
+    * recomputes it relationally — a hash match certifies compaction
+    * changed LAYOUT, never data. `compacted_single_commit` carries the
+    * physical proof through the hash channel (every live bucket behind
+    * one commit dir); the property spec additionally asserts file-count
+    * shrinkage (on merges fragmented by a file-size cap), an empty CDC
+    * diff across the compaction version, and
+    * intact pre-compaction time travel. Measures the write path per
+    * invocation by design (s12's class). */
+  def txCompaction(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s20") { case Seq(dir) =>
+      val base = Graph.nodes(spark, sfDir).select("name", "house", "acctbal")
+      // 4 buckets: the demo table is tiny; fewer buckets = fewer files per
+      // commit across the 5 commits this write-path demo measures. The
+      // layout proof (one commit dir after compact) is bucket-count-free.
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      (1 to 3).foreach { i =>
+        t.merge(base.filter(substring(col("name"), -1, 1) === i.toString)
+          .withColumn("house", lit(s"MERGED$i")))
+      }
+      val v = t.compact()
+      val (commits, _) = t.layoutStats()
+      t.snapshot()
+        .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"),
+          lit(v).as("v"), lit(commits == 1).as("compacted_single_commit"))
+        .orderBy("name")
+    }
+
+  /** Merge-on-read DELETE demo (Iceberg-style equality deletes) — the
+    * GDPR-delete path at 100 TB: dropping every name ending in '7' writes
+    * ONLY the key rows as a deletion-vector commit; no base bucket is
+    * rewritten (copy-on-write would re-copy every touched bucket —
+    * gigabytes of IO for kilobytes of tombstones). Readers anti-join the
+    * DV keys per touched bucket at scan time. `mor_no_rewrite` carries
+    * the physical proof through the hash channel: every bucket's base
+    * data pointer is IDENTICAL across the delete version. The property
+    * spec additionally pins CoW-equivalence, folding on merge/compact,
+    * time travel, and vacuum retention. Measures the write path per
+    * invocation by design (s12's class). */
+  def morDelete(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s21") { case Seq(dir) =>
+      val base = Graph.nodes(spark, sfDir).select("name", "house", "acctbal")
+      // 4 buckets, same rationale as s20 (write-path demo on a tiny table).
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      val v = t.deleteMergeOnRead(
+        base.filter(substring(col("name"), -1, 1) === "7").select("name"))
+      val noRewrite = t.dataPointers(0L) == t.dataPointers(v)
+      t.snapshot()
+        .filter(col("name") <= "Customer#000000030")
+        .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"),
+          lit(v).as("v"), lit(noRewrite).as("mor_no_rewrite"))
+        .orderBy("name")
+    }
+
+  /** CHECK-constraint demo — the lakehouse write gate end-to-end: two
+    * constraints registered (existing rows validated as the induction
+    * base), a conforming MERGE lands, a violating MERGE throws BEFORE any
+    * write publishes. The hash carries three certificates: the conforming
+    * update visible, `bad_merge_rejected` (the violation raised), and
+    * `no_partial_commit` (the version is still the conforming merge's —
+    * atomic rejection left no half-state). Write-path class like s12. */
+  def txConstraints(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s25") { case Seq(dir) =>
+      val base = Graph.nodes(spark, sfDir).select("name", "house", "acctbal")
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      t.addCheck("house_known", "house IS NOT NULL")
+      t.addCheck("balance_floor", "acctbal >= -1000.0")
+      val vOk = t.merge(spark.createDataFrame(
+        Seq(("Customer#000000003", "BUILDING", 123.45)))
+        .toDF("name", "house", "acctbal"))
+      val rejected =
+        try {
+          t.merge(spark.createDataFrame(
+            Seq(("Customer#000000004", "BUILDING", -99999.0)))
+            .toDF("name", "house", "acctbal"))
+          false
+        } catch { case _: IllegalArgumentException => true }
+      t.snapshot()
+        .filter(col("name").isin("Customer#000000002", "Customer#000000003",
+          "Customer#000000004"))
+        .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"),
+          lit(vOk).as("v"), lit(rejected).as("bad_merge_rejected"),
+          lit(t.version == vOk).as("no_partial_commit"))
+        .orderBy("name")
+    }
+
+  /** RESTORE demo — the rollback path end-to-end: create → a bad MERGE
+    * corrupts every name ending in '3' → `restore(0)` publishes v0's
+    * manifest as the new head. The snapshot slice hash-certifies the
+    * rollback semantically (the restored head equals the base table, so
+    * the oracle recomputes it straight from `customer`); two boolean
+    * certificates ride the hash channel: `restore_metadata_only` (every
+    * bucket's base pointer after restore is IDENTICAL to v0's — no data
+    * copied, the 100 TB property) and `bad_version_travelable` (the
+    * corrupted v1 still reconstructs for forensics — restore preserves
+    * history, unlike an overwrite). Write-path class like s12. */
+  def txRestore(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s26") { case Seq(dir) =>
+      val base = Graph.nodes(spark, sfDir).select("name", "house", "acctbal")
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      t.merge(base.filter(substring(col("name"), -1, 1) === "3")
+        .withColumn("house", lit("CORRUPT")))
+      val v = t.restore(0L)
+      val metadataOnly = t.dataPointers(v) == t.dataPointers(0L)
+      val badReadable = t.snapshotAt(1L)
+        .filter(col("house") === "CORRUPT").count() > 0
+      t.snapshot()
+        .filter(col("name") <= "Customer#000000030")
+        .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"),
+          lit(v).as("v"), lit(metadataOnly).as("restore_metadata_only"),
+          lit(badReadable).as("bad_version_travelable"))
+        .orderBy("name")
+    }
+
+  /** Bucket-layout evolution demo (Iceberg partition-spec evolution, for
+    * the hash-bucket layout): a table created 4-wide outgrows its layout,
+    * `compact(newBuckets = 16)` re-hashes every row under the new count
+    * and publishes it in the manifest header, and a SUBSEQUENT merge
+    * hashes with the evolved count — landing in the right buckets, which
+    * the final snapshot hash proves (a stale-layout write would strand
+    * rows in buckets reads would still find, but the property spec's
+    * pointer checks would catch; here the semantic state is the
+    * certificate). `rebucketed_16` rides the hash channel: the head
+    * manifest's recorded layout is the evolved one. Write-path class
+    * like s12. */
+  def txRebucket(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s27") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      t.merge(base.filter(substring(col("name"), -1, 1) === "1")
+        .withColumn("house", lit("MERGED1")))
+      t.compact(newBuckets = 16)
+      val v = t.merge(base.filter(substring(col("name"), -1, 1) === "2")
+        .withColumn("house", lit("MERGED2")))
+      t.snapshot()
+        .filter(col("name") <= "Customer#000000030")
+        .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"),
+          lit(v).as("v"), lit(t.bucketCount == 16).as("rebucketed_16"))
+        .orderBy("name")
+    }
+
+  /** Point-lookup demo — the keyed serving path: three primary keys
+    * probed against the table read ONLY the buckets those keys hash into
+    * (`lookupBuckets` is the exact prune set; `pruned_read` certifies it
+    * stayed within 3 of the 16 buckets). The rows themselves hash-match
+    * the oracle's direct selection, so the pruned path provably returns
+    * the same answer as a full scan would. Write-path class like s12
+    * (the table is created per invocation; the LOOKUP itself is the
+    * measured O(k) read). */
+  def txPointLookup(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s28") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      // 4 buckets (s64's measured rule for ≤203-row protocol demos); the
+      // prune certificate needs |keys| < bucketCount, which 3 < 4 keeps.
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      val keys = spark.createDataFrame(Seq(
+        Tuple1("Customer#000000002"), Tuple1("Customer#000000007"),
+        Tuple1("Customer#000000013"))).toDF("name")
+      // Certify against the TABLE, not the probe: 3 keys can never name
+      // more than 3 buckets (size <= 3 holds by construction), so the
+      // falsifiable claim is that the prune set is a strict subset of the
+      // manifest's buckets — a scan-everything regression flips this.
+      val pruned = t.lookupBuckets(keys).size < t.bucketCount
+      t.lookup(keys)
+        .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"),
+          lit(pruned).as("pruned_read"))
+        .orderBy("name")
+    }
+
+  /** DataSource V2 connector demo (s40_dsv2_read) — the TxTable read
+    * through `spark.read.format("graft")` (graft.sources.GraftDataSource):
+    * the connector packaging that lets ANY Spark consumer read the
+    * transactional table without linking this library. The lifecycle
+    * exercises the contract end-to-end: copy-on-write merge (v1) then a
+    * merge-on-read delete (v2, DV'd bucket), read back through the
+    * connector. Three certificates ride the hash channel:
+    * `conn_full_match` — the connector's full-table read equals the
+    * native snapshot row-for-row (including the DV anti-join, applied
+    * reader-side from planning-shipped key sets); `pruned_plan` — a key
+    * equality pushed through SupportsPushDownFilters plans exactly ONE
+    * input partition out of the manifest's buckets (the connector
+    * re-derives the bucket with Catalyst's own XxHash64, so hash
+    * agreement with the write path is by construction); `dv_applied` —
+    * the deleted key is absent from the connector read. Write-path
+    * governance-demo class like s28 (bounded base; the protocol is the
+    * product). Reference anchor: the durable MERGE target any external
+    * reader of app.py:100-132's store would need. */
+  def txDsv2Read(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s40") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      // 4 buckets: ≤203-row demo, per-file commit cost dominates (s64's
+      // measured rule); the prune certificate needs layout > 1, which 4
+      // buckets keeps true.
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      t.merge(t.snapshot().filter(col("name").endsWith("7"))
+        .withColumn("house", lit("PROMOTED"))
+        .withColumn("acctbal", col("acctbal") + 1000))
+      t.deleteMergeOnRead(spark.createDataFrame(
+        Seq(Tuple1("Customer#000000013"))).toDF("name"))
+
+      def conn = spark.read.format("graft").option("keys", "name").load(dir)
+      val fullMatch = sameRows(conn, t.snapshot())
+      // Plan-level probe: the pushed key equality must prune the batch to
+      // one bucket of the manifest's eight.
+      val planned = GraftDataSource.plannedPartitions(dir,
+        Array(EqualTo("name", "Customer#000000007")), Map("keys" -> "name")).length
+      val pruned = planned == 1 && t.layoutAt(t.version).size > 1
+      val dvApplied =
+        conn.filter(col("name") === "Customer#000000013").count() == 0
+
+      conn.filter(col("name").isin(
+          "Customer#000000002", "Customer#000000007", "Customer#000000013"))
+        .select(col("name"), col("house"),
+          round(col("acctbal") * 100).cast("long").as("acctbal_x100"),
+          lit(fullMatch).as("conn_full_match"),
+          lit(pruned).as("pruned_plan"),
+          lit(dvApplied).as("dv_applied"))
+        .orderBy("name")
+    }
+
+  /** Streaming change-feed demo (s41_change_feed) — the SOURCE half of the
+    * lakehouse streaming loop (s13's foreachBatch MERGE is the sink half):
+    * `spark.readStream.format("graft").option("changeFeed", "true")`
+    * streams the TxTable's commit log as micro-batches — offsets are
+    * table VERSIONS (immutable, atomically published manifests — the
+    * natural exactly-once unit), each version contributing its freshly
+    * written bucket files as `insert` post-images (copy-on-write means a
+    * commit's files ARE its delta — no diff computation anywhere) and its
+    * new deletion-vector dirs as `delete` key rows. The entry runs the
+    * real stream (AvailableNow → memory sink) over a create→merge→
+    * MOR-delete lifecycle, then FOLDS the feed (latest post-image per
+    * key, later-or-equal delete retires) and certifies the fold
+    * reconstructs the live snapshot exactly — the upsert-consumer
+    * contract any downstream materializer relies on. At 100 TB each
+    * micro-batch reads only the new commit's files: feed cost is
+    * O(changed buckets), never O(table). */
+  def txChangeFeed(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s41") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      // 4 buckets: ≤203-row demo, per-file commit cost dominates (s64's
+      // measured rule); the feed's contents are commit-level post-images,
+      // independent of the bucket layout.
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      t.merge(t.snapshot().filter(col("name").endsWith("7"))
+        .withColumn("house", lit("PROMOTED"))
+        .withColumn("acctbal", col("acctbal") + 1000))
+      t.deleteMergeOnRead(spark.createDataFrame(
+        Seq(Tuple1("Customer#000000013"))).toDF("name"))
+
+      val stream = spark.readStream.format("graft")
+        .option("keys", "name").option("changeFeed", "true").load(dir)
+      val feed = StreamingOps.runToMemory(spark, stream, "append").localCheckpoint()
+
+      // Fold: latest event per key via one struct-extrema aggregate
+      // (version, then delete-beats-insert at the same version).
+      val replay = feed.groupBy("name")
+        .agg(max(struct(col("_commit_version").as("v"),
+          (col("_change_type") === "delete").cast("int").as("d"),
+          col("house").as("h"), col("acctbal").as("a"))).as("top"))
+        .filter(col("top.d") === 0)
+        .select(col("name"), col("top.h").as("house"), col("top.a").as("acctbal"))
+
+      val replayMatches = sameRows(replay,
+        t.snapshot().select("name", "house", "acctbal"))
+      val versionsOk = feed.select("_commit_version").distinct().collect()
+        .map(_.getLong(0)).toSet == Set(0L, 1L, 2L)
+      val deleteExact = feed.filter(col("_change_type") === "delete")
+        .select("name").collect().map(_.getString(0)).toSeq ==
+        Seq("Customer#000000013")
+
+      replay.filter(col("name").isin(
+          "Customer#000000002", "Customer#000000007", "Customer#000000013"))
+        .select(col("name"), col("house"),
+          round(col("acctbal") * 100).cast("long").as("acctbal_x100"),
+          lit(replayMatches).as("replay_matches"),
+          lit(versionsOk).as("versions_ok"),
+          lit(deleteExact).as("delete_exact"))
+        .orderBy("name")
+    }
+
+  /** Streaming-lakehouse pipeline demo (s52_medallion_stream) — the
+    * END-TO-END composition of the shipped halves (the medallion hop
+    * every 100 TB pipeline runs): upstream TxTable → change-feed stream →
+    * foreachBatch fold → MERGE/delete into a DOWNSTREAM TxTable, with the
+    * streaming checkpoint owning which upstream versions were consumed
+    * and the TxTable's atomic manifest publish owning the sink commit
+    * (the per-batch fold is idempotent, so a replayed batch re-converges
+    * — the exactly-once shape; see [[graft.streaming.StreamingOps
+    * .medallionHop]]). The entry runs TWO real passes with the process
+    * shape a crash-resume has: pass 1 consumes the create+merge history,
+    * the stream STOPS, more upstream commits land (a MOR delete and a
+    * second merge), pass 2 RESUMES from the same checkpoint. Certificates
+    * on the hash channel: `replay_equivalent` — after each pass the
+    * downstream snapshot equals the upstream snapshot row-for-row (CDC
+    * replay ≡ direct recompute); `resume_no_reprocess` — pass 2 applied
+    * exactly the new versions and none of pass 1's (the checkpoint, not
+    * luck, decides). StreamingSpec runs the kill-and-resume case with a
+    * row-level no-dup/no-loss assertion. */
+  def txMedallionStream(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s52") { case Seq(work) =>
+      // BUILD-ONCE pass 1 (the s15/s17/s30 treatment, applied to the
+      // stream): the upstream table, the downstream after the first hop,
+      // and the hop's CHECKPOINT freeze as an artifact — pass 1's
+      // certificate (versions {0,1} applied, downstream converged) is
+      // verified once at build and frozen with it. Every invocation
+      // then COPIES the frozen trio to temp dirs and re-executes the part
+      // that certifies what the entry is really about: commits landing
+      // WHILE THE STREAM IS DOWN, and a checkpoint RESUME that applies
+      // exactly the new versions with one atomic commit per batch. The
+      // convergence check after the resumed pass re-proves replay
+      // equivalence end-to-end on every run; only the (identical) first
+      // pass stops being re-executed per invocation — it was protocol
+      // floor, not signal.
+      val (art, pass1) = Artifacts.frozenValue(sfDir, "tx_demo_s52") { d =>
+        val base = protocolSlice(spark, sfDir)
+        val u = TxTable.create(spark, s"$d/up", base, Seq("name"), numBuckets = 4)
+        TxTable.create(spark, s"$d/dn", base.limit(0), Seq("name"), numBuckets = 4)
+        u.merge(base.filter(col("name").endsWith("7"))
+          .withColumn("house", lit("PROMOTED"))
+          .withColumn("acctbal", col("acctbal") + 1000))
+        val applied1 = StreamingOps.medallionHop(
+          spark, s"$d/up", s"$d/dn", s"$d/ck")
+        val converged1 = TxTable.open(spark, s"$d/dn", Seq("name"))
+          .snapshot().collect().map(_.mkString("|")).sorted.toSeq ==
+          TxTable.open(spark, s"$d/up", Seq("name"))
+            .snapshot().collect().map(_.mkString("|")).sorted.toSeq
+        (converged1 && applied1 == Set(0L, 1L)).toString
+      }
+      val pass1Ok = pass1 == "true"
+
+      Seq("up", "dn", "ck").foreach(d =>
+        Artifacts.copyTree(s"$art/$d", s"$work/$d"))
+      val up = s"$work/up"; val dn = s"$work/dn"; val ck = s"$work/ck"
+      val u = TxTable.open(spark, up, Seq("name"))
+      val base = protocolSlice(spark, sfDir)
+      def upSnap = TxTable.open(spark, up, Seq("name")).snapshot()
+      def dnSnap = TxTable.open(spark, dn, Seq("name")).snapshot()
+
+      // Stream is DOWN; more upstream commits land (a merge-on-read
+      // delete and a merge). The resumed pass must apply ONLY the new
+      // versions {2, 3}, each micro-batch as ONE atomic commit.
+      u.deleteMergeOnRead(spark.createDataFrame(
+        Seq(Tuple1("Customer#000000013"))).toDF("name"))
+      // ('4'-keys were untouched by pass 1 and the '13' delete, so the
+      // base-derived rows equal the snapshot-derived ones.)
+      u.merge(base.filter(col("name").endsWith("4"))
+        .withColumn("house", lit("RESETTLED"))
+        .withColumn("acctbal", col("acctbal") + 500))
+      val applied2 = StreamingOps.medallionHop(spark, up, dn, ck)
+      val converged = sameRows(dnSnap, upSnap)
+      val replayEquivalent = pass1Ok && converged
+      val noReprocess = applied2 == Set(2L, 3L)
+
+      dnSnap.filter(col("name") <= "Customer#000000059")
+        .select(col("name"), col("house"),
+          round(col("acctbal") * 100).cast("long").as("acctbal_x100"),
+          lit(replayEquivalent).as("replay_equivalent"),
+          lit(noReprocess).as("resume_no_reprocess"))
+        .orderBy("name")
+    }
+
+  /** Aggregate-pushdown demo (s42_count_pushdown) — COUNT(*) through the
+    * connector on a clean snapshot is answered from parquet FOOTER record
+    * counts (SupportsPushDownAggregates → GraftCountScan: one footer read
+    * per file, zero data pages — the O(files) count a 100 TB table
+    * wants), while the same count after a merge-on-read delete REFUSES
+    * the shortcut (an equality delete only retires keys that exist;
+    * footers cannot know) and scans — both counts certified against the
+    * native snapshot, both PLANS certified from executedPlan. Lifecycle
+    * class like s40. */
+  def txCountPushdown(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s42") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      def conn = spark.read.format("graft").option("keys", "name").load(dir)
+
+      val clean = conn.groupBy().count()
+      val cleanMeta = clean.queryExecution.executedPlan.toString
+        .contains("GraftCountScan")
+      // Sidecar tier (round 14): a clean count is answered from the
+      // write-time `_rows.txt` manifests — O(buckets) one-line reads,
+      // ZERO footer I/O (the description records which tier served it;
+      // Dsv2Spec proves usage by poisoning a sidecar).
+      val manifestCounted = clean.queryExecution.executedPlan.toString
+        .contains("manifest row counts")
+      val cleanCount = clean.head().getLong(0)
+
+      t.deleteMergeOnRead(spark.createDataFrame(
+        Seq(Tuple1("Customer#000000013"))).toDF("name"))
+      val dvd = conn.groupBy().count()
+      val dvdScans = !dvd.queryExecution.executedPlan.toString
+        .contains("GraftCountScan")
+      val dvdCount = dvd.head().getLong(0)
+
+      spark.createDataFrame(Seq(
+          ("clean", cleanCount, cleanMeta && cleanCount == base.count(),
+            manifestCounted),
+          ("after_mor_delete", dvdCount,
+            dvdScans && dvdCount == t.snapshot().count(), manifestCounted)))
+        .toDF("phase", "n_rows", "plan_and_count_ok", "manifest_counted")
+        .orderBy("phase")
+    }
+
+  /** MIN/MAX-pushdown demo (s43_minmax_pushdown) — MIN/MAX of a numeric
+    * column through the connector on a clean snapshot is answered from
+    * parquet FOOTER column statistics (SupportsPushDownAggregates →
+    * GraftStatsScan: one footer read per file, zero data pages — the
+    * O(files) extrema a 100 TB table wants), while the same aggregate
+    * REFUSES the shortcut after a merge-on-read delete (a retired row may
+    * have held the extremum — footers cannot know) and for STRING columns
+    * always (writers may truncate binary footer stats; a truncated min is
+    * silently wrong). Both values certified bit-exactly against the
+    * scanning path, both PLANS certified from executedPlan — correctness
+    * never rides the optimization. Lifecycle class like s42. */
+  def txMinMaxPushdown(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s43") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      def conn = spark.read.format("graft").option("keys", "name").load(dir)
+      def scanned(df: org.apache.spark.sql.DataFrame) = {
+        val r = df.agg(min("acctbal"), max("acctbal")).head()
+        (r.getDouble(0), r.getDouble(1))
+      }
+
+      val clean = conn.agg(min("acctbal").as("lo"), max("acctbal").as("hi"))
+      val cleanStats = clean.queryExecution.executedPlan.toString
+        .contains("GraftStatsScan")
+      val cleanRow = clean.head()
+      val cleanOk = cleanStats &&
+        (cleanRow.getDouble(0), cleanRow.getDouble(1)) == scanned(t.snapshot())
+      // Strings must always scan: binary footer stats may be truncated.
+      val strRefused = !conn.agg(min("name")).queryExecution.executedPlan
+        .toString.contains("GraftStatsScan")
+
+      t.deleteMergeOnRead(spark.createDataFrame(
+        Seq(Tuple1("Customer#000000013"))).toDF("name"))
+      val dvd = conn.agg(min("acctbal").as("lo"), max("acctbal").as("hi"))
+      val dvdScans = !dvd.queryExecution.executedPlan.toString
+        .contains("GraftStatsScan")
+      val dvdRow = dvd.head()
+      val dvdOk = dvdScans &&
+        (dvdRow.getDouble(0), dvdRow.getDouble(1)) == scanned(t.snapshot())
+
+      spark.createDataFrame(Seq(
+          ("clean",
+            math.round(cleanRow.getDouble(0) * 100),
+            math.round(cleanRow.getDouble(1) * 100), cleanOk, strRefused),
+          ("after_mor_delete",
+            math.round(dvdRow.getDouble(0) * 100),
+            math.round(dvdRow.getDouble(1) * 100), dvdOk, strRefused)))
+        .toDF("phase", "lo_x100", "hi_x100", "plan_and_value_ok", "string_refused")
+        .orderBy("phase")
+    }
+
+  /** Statistics + runtime-filtering demo (s45_stats_runtime) — the two
+    * optimizer-facing connector hooks, driver-visible: the scan reports
+    * PRUNE-AWARE size statistics from the pinned manifest's file lengths
+    * (SupportsReportStatistics), so joining a fact frame deliberately
+    * sized past the auto-broadcast threshold against the graft table
+    * picks a BroadcastHashJoin with NO hint — the optimizer read and
+    * believed the reported bytes (`stats_broadcast` certificate; without
+    * stats a DSv2 relation defaults to "huge" and the join would
+    * sort-merge); and a runtime (join-derived) IN filter handed to the
+    * scan (SupportsRuntimeFiltering — the DSv2 dynamic-partition-pruning
+    * shape) prunes the planned partitions to at most |keys| of the
+    * manifest's buckets (`runtime_pruned`). At 100 TB these two hooks are
+    * what turn "join a dim to the table" from a full-table sort-merge
+    * into a broadcast probe of exactly the buckets the keys hash into.
+    * Lifecycle class like s40. */
+  def txStatsRuntime(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s45") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      def conn = spark.read.format("graft").option("keys", "name").load(dir)
+
+      // Fact side past the broadcast threshold: only the graft side can
+      // broadcast, so the join shape proves the reported statistics.
+      val fact = spark.range(2000000).selectExpr(
+        "concat('Customer#', lpad(CAST(id AS STRING), 9, '0')) AS name",
+        "id % 7 AS grp")
+      val joined = fact.join(conn, "name")
+      val statsBroadcast = joined.queryExecution.executedPlan.toString
+        .contains("BroadcastHashJoin")
+
+      // Runtime prune: the broadcast-join shape hands the build side's
+      // keys to the scan before partitions are planned.
+      val scan = GraftDataSource.scanOf(dir, options = Map("keys" -> "name"))
+      scan.asInstanceOf[org.apache.spark.sql.connector.read.SupportsRuntimeFiltering]
+        .filter(Array[Filter](In("name", Array[Any]("Customer#000000002", "Customer#000000007"))))
+      val planned = scan.toBatch.planInputPartitions().length
+      val runtimePruned = planned <= 2 && planned < t.layoutAt(t.version).size
+
+      joined
+        .filter(col("name") <= "Customer#000000079")
+        .select(col("name"), col("house"),
+          round(col("acctbal") * 100).cast("long").as("acctbal_x100"),
+          col("grp"),
+          lit(statsBroadcast).as("stats_broadcast"),
+          lit(runtimePruned).as("runtime_pruned"))
+        .orderBy("name")
+    }
+
+  /** Row-group-skipping demo (s46_rowgroup_skip) — pushed NON-KEY
+    * predicates reach the parquet reader as a FilterPredicate, so row
+    * groups whose footer statistics refute the predicate are never
+    * decoded (the lakehouse data-skipping layer below bucket pruning: on
+    * a 100 TB table a selective predicate reads the few row groups whose
+    * min/max admit it, not every page of every surviving bucket). Two
+    * engine-side certificates ride the hash channel:
+    * `skip_hash_match` — the same predicate evaluated through the
+    * skipping connector and through the native snapshot returns identical
+    * rows (skipping never changes results); `rowgroups_skipped` — a point
+    * predicate on a column that is constant per bucket by construction
+    * (`pmod(xxhash64(name), 8)` = the write path's own bucket id, so
+    * every file's min == max == its bucket) shrinks the SCAN's measured
+    * output to exactly the matching rows — residual filters evaluate
+    * above the scan, so only footer-level skipping can shrink it. The
+    * returned rows are the oracle-able slice (plain acctbal predicate);
+    * the xxhash-derived column never reaches the hashed output. */
+  def txRowGroupSkip(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s46") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+        .withColumn("vb", pmod(xxhash64(col("name")), lit(8)))
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 8)
+      def conn = spark.read.format("graft").load(dir)
+
+      // Certificate 1: with-skipping == without-skipping, row for row.
+      val pred = col("acctbal") > 1000.0
+      val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
+
+      // Certificate 2: scan-level output shrinks to the one bucket whose
+      // footer stats admit the point predicate (vb == bucket id).
+      val matching = t.snapshot().filter(col("vb") === 3).count()
+      val total = t.snapshot().count()
+      val emitted = scanRowsEmitted(conn.filter(col("vb") === 3))
+      val skipped = emitted == matching && emitted < total
+
+      conn.filter(pred).filter(col("name") <= "Customer#000000059")
+        .select(col("name"), col("house"),
+          round(col("acctbal") * 100).cast("long").as("acctbal_x100"),
+          lit(hashMatch).as("skip_hash_match"),
+          lit(skipped).as("rowgroups_skipped"))
+        .orderBy("name")
+    }
+
+  /** Bloom-filter point-lookup demo (s50_bloom_point) — the data-skipping
+    * layer s46/s49 cannot reach: min/max footer stats only skip row
+    * groups when the predicate column is CLUSTERED (s49 sorts ONE
+    * dimension), so a point lookup on any other high-cardinality column
+    * decodes every surviving row group. Parquet BLOOM FILTERS close that:
+    * the table declares bloom columns (TxTable `bloomCols`, the
+    * `_log/bloom.txt` sidecar), every data file carries a bloom per
+    * declared column, and the s46 skipping path's pushed EqualTo/In
+    * FilterPredicate lets the parquet reader refute "value definitely
+    * absent" row groups WITHOUT decoding them — on a RANDOM layout where
+    * stats admit everything. Two certificates ride the hash channel:
+    * `bloom_hash_match` — the bloom-skipping connector returns exactly
+    * the native snapshot's rows (skipping never changes results; bloom
+    * false positives only admit extra row groups, the residual filter
+    * still applies); `bloom_skip_effective` — the same 3-value In probe
+    * emits strictly fewer scan rows through the bloom'd table than
+    * through a bloom-less twin of identical layout (which admits every
+    * row group — random md5 tokens give min/max stats nothing to
+    * refute), and at most the 3 admitted buckets' worth. At 100 TB this
+    * is the secondary-index story for point lookups: sorted clustering
+    * serves ONE dimension, blooms serve every other equality column at
+    * ~1% file-size cost. */
+  def txBloomPoint(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s50", "s50n") { case Seq(dir, dir2) =>
+      val base = protocolSlice(spark, sfDir)
+        .withColumn("token", md5(col("name")))   // high-card, unsorted vs layout
+      // Independent twin creates, overlapped (guide §2.6); 4 buckets
+      // (s64's measured rule) — every certificate below derives its
+      // bounds from the actual layout, not the count.
+      val (t, _) = par2(
+        TxTable.create(spark, dir, base, Seq("name"),
+          numBuckets = 4, bloomCols = Seq("token")),
+        TxTable.create(spark, dir2, base, Seq("name"), numBuckets = 4))
+      def conn = spark.read.format("graft").load(dir)
+      def twin = spark.read.format("graft").load(dir2)
+
+      def hex(s: String): String = java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      val targets = Seq(7, 34, 121).map(k => hex(Graph.fullName(k)))
+      def pred = col("token").isin(targets: _*)
+
+      val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
+
+      val withBloom = scanRowsEmitted(conn.filter(pred))
+      val without = scanRowsEmitted(twin.filter(pred))
+      // Exact admissibility bound, sf-agnostic: blooms can admit at most
+      // the rows of the buckets that CONTAIN a target (one row group per
+      // small bucket file; larger files shrink further as groups split).
+      // A share-of-total cap (3/8·total) is wrong under uneven bucket
+      // sizes — three target buckets can legitimately hold more than 3/8
+      // of the rows at small scale factors.
+      val tgtBuckets = t.lookupBuckets(spark.createDataFrame(
+        Seq(7, 34, 121).map(k => Tuple1(Graph.fullName(k)))).toDF("name"))
+      val admitCap = conn.select(col("_graft_bucket"))
+        .filter(col("_graft_bucket").isin(tgtBuckets.toSeq: _*)).count()
+      val effective = withBloom < without && withBloom <= admitCap
+
+      conn.filter(pred)
+        .select(col("name"), col("house"),
+          round(col("acctbal") * 100).cast("long").as("acctbal_x100"),
+          lit(hashMatch).as("bloom_hash_match"),
+          lit(effective).as("bloom_skip_effective"))
+        .orderBy("name")
+    }
+
+  /** Bucket-tier bloom-index demo (s53_bucket_bloom) — the skipping tier
+    * ABOVE s50's parquet row-group blooms: every data write also builds
+    * one bloom per (rewritten bucket × declared column) — Spark's own
+    * BloomFilterAggregate over xxhash64, one extra aggregate pass over
+    * the touched buckets, never the table — stored as `_bloomidx` sidecar
+    * files INSIDE each bucket dir (they travel with the copy-on-write
+    * commit, vacuum with it, resolve through shallow clones). At
+    * PLANNING, a pushed EqualTo/In on the indexed NON-key column refutes
+    * whole buckets before ANY file I/O. That is the missing tier for the
+    * 100 TB point lookup on a non-key column: hash pruning can't apply
+    * (the predicate isn't on the key), and row-group blooms (s50) only
+    * refute AFTER a footer read per file — with 4096 buckets the sidecar
+    * plans ~1 bucket instead of opening 4096 footers. Certificates on the
+    * hash channel: `idx_hash_match` — the pruned connector returns
+    * exactly the native snapshot's rows (bloom membership has no false
+    * negatives under the identical hash, and the write-time-type header
+    * refuses a widened column rather than mis-hash); `idx_prune_effective`
+    * — the 3-value In probe plans ≤6 of 16 buckets (3 + false positives)
+    * while an unfiltered scan plans all 16, and a value absent from the
+    * table refutes EVERY bucket (planned = 0). Dsv2Spec adds the alias,
+    * type-guard, and copy-on-write-consistency cases. */
+  def txBucketBloomIndex(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s53") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+        .withColumn("token", md5(col("name")))   // high-card, non-key
+      val t = TxTable.create(spark, dir, base, Seq("name"),
+        numBuckets = 16, bloomCols = Seq("token"))
+
+      def hex(s: String): String = java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      val targets = Seq(7, 34, 121).map(k => hex(Graph.fullName(k)))
+
+      def planned(filters: Array[Filter]): Int =
+        GraftDataSource.plannedPartitions(dir, filters, Map("keys" -> "name")).length
+      val full = planned(Array.empty)
+      val probe3 = planned(Array(
+        In("token", targets.toArray[Any])))
+      val absent = planned(Array(
+        EqualTo("token", hex("no-such-token"))))
+      val pruneEffective = full == 16 && probe3 >= 1 && probe3 <= 6 && absent == 0
+
+      def conn = spark.read.format("graft").option("keys", "name").load(dir)
+      def pred = col("token").isin(targets: _*)
+      val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
+
+      conn.filter(pred)
+        .select(col("name"), col("house"),
+          round(col("acctbal") * 100).cast("long").as("acctbal_x100"),
+          lit(hashMatch).as("idx_hash_match"),
+          lit(pruneEffective).as("idx_prune_effective"))
+        .orderBy("name")
+    }
+
+  /** Catalog + storage-partitioned-join demo (s44_catalog_spj) — the
+    * GraftCatalog plugin end-to-end: two co-bucketed TxTables under a
+    * warehouse resolve as multi-part SQL identifiers (keys from the
+    * sidecar, snapshot pinned at loadTable), and their merge-key join
+    * plans with ZERO shuffle — GraftScan reports
+    * KeyGroupedPartitioning(bucket(n, keys)), each partition carries its
+    * bucket id, and the catalog's FunctionCatalog resolves the bucket
+    * function, so Spark zips the bucket partitions pairwise instead of
+    * exchanging both sides. At 100 TB that turns the fact-to-fact
+    * merge-key join from the biggest shuffle in the plan into a local
+    * zip. Certificates: `spj_plan` — the executed join plan contains NO
+    * Exchange; `read_only` — catalog DDL refuses (writes stay with the
+    * transactional protocol). Lifecycle class like s40. */
+  def txCatalogSpj(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.catalogDemo(spark, "s44") { (cat, wh) =>
+      val base = protocolSlice(spark, sfDir)
+      // Independent twin creates, overlapped (guide §2.6); 4 buckets
+      // (s64's measured rule for ≤203-row protocol demos).
+      par2(
+        TxTable.create(spark, s"$wh/facts", base, Seq("name"),
+          numBuckets = 4),
+        TxTable.create(spark, s"$wh/scores",
+          base.filter(col("name").endsWith("7"))
+            .select(col("name"), (col("acctbal") * 2).as("score")),
+          Seq("name"), numBuckets = 4))
+
+      Session.withConf(spark,
+          "spark.sql.sources.v2.bucketing.enabled" -> true,
+          "spark.sql.autoBroadcastJoinThreshold" -> -1) {
+        val joined = spark.sql(
+          s"""SELECT f.name, f.house, f.acctbal, s.score
+             |FROM $cat.facts f JOIN $cat.scores s ON f.name = s.name""".stripMargin)
+        val spjPlan =
+          !joined.queryExecution.executedPlan.toString.contains("Exchange")
+        val readOnly =
+          try { spark.sql(s"DROP TABLE $cat.facts"); false }
+          catch { case e: Exception => e.getMessage.contains("read-only") }
+
+        joined
+          .filter(col("name") <= "Customer#000000079")
+          .select(col("name"), col("house"),
+            round(col("acctbal") * 100).cast("long").as("acctbal_x100"),
+            round(col("score") * 100).cast("long").as("score_x100"),
+            lit(spjPlan).as("spj_plan"), lit(readOnly).as("read_only"))
+          .orderBy("name")
+      }
+    }
+
+  /** Parquet writer settings for `block`-byte row groups (pages a quarter
+    * of that), as session settings: Spark copies them into each write's
+    * Hadoop configuration. */
+  private def parquetGroups(block: Int): Seq[(String, Any)] = Seq(
+    "parquet.block.size" -> block, "parquet.page.size" -> block / 4)
+
+  /** At most `n` rows (at least one) per written file. */
+  private def maxRecords(n: Long): (String, Any) =
+    "spark.sql.files.maxRecordsPerFile" -> math.max(1L, n)
+
+  /** Sorted-compaction demo (s49_sorted_compact) — OPTIMIZE with data
+    * CLUSTERING, the layout half of round 13's row-group skipping
+    * (s46): `compact(sortBy = price)` rewrites each bucket with rows
+    * sorted by the query dimension, so every parquet row group's footer
+    * min/max covers a narrow value slice and a selective range
+    * predicate decodes only the admitting groups — on the unsorted
+    * layout the same footer stats span everything and skip NOTHING.
+    * This is the Delta `OPTIMIZE … ZORDER BY` / Iceberg sort-order
+    * mechanism in one dimension, and at 100 TB it is what turns the
+    * skipping machinery from "consulted" into "effective". Small
+    * parquet row groups (32 KB blocks) make one bucket file hold many
+    * groups at test scale — granularity, not semantics. Certificates on
+    * the hash channel: `snapshot_unchanged` — count and sum are
+    * bit-identical across the sorted rewrite (clustering is layout
+    * only); `skip_effective` — the same range scan's measured
+    * numOutputRows shrinks ≥2× after sorting (scan-level: residual
+    * filters run above it, only footer skipping can shrink it). */
+  def txSortedCompact(spark: SparkSession, sfDir: String): DataFrame = {
+    val base = Tables.lineitem(spark, sfDir).select(
+      (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
+      round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
+      col("l_returnflag").as("flag"))
+    // Row-count-adaptive group size (s51's measured rule, applied here
+    // too): tiny groups only where skip granularity needs them — at
+    // sf0.1 the fixed 32 KB groups meant ~1.5k per-group flush/decode
+    // cycles across the two rewrites while ~45 groups of 256 KB prove
+    // the same ≥2× certificate at a fraction of the cost. The count is
+    // one row per lineitem line, so the sizing reads the input's footer
+    // record count (exact) instead of paying a full count() scan.
+    val block = if (Tables.footerRowCount(sfDir, "lineitem")
+      < 100000) 32 * 1024 else 256 * 1024
+    Lifecycle.demo(spark, "s49") { case Seq(dir) =>
+      Session.withConf(spark, parquetGroups(block): _*) {
+        // BUILD-ONCE pass 1 + shallow clone (the s51 treatment): the
+        // pre-compact table is a deterministic projection of lineitem —
+        // protocol floor — frozen as an artifact; the SORTED REWRITE this
+        // entry certifies re-executes per invocation on a zero-copy clone
+        // (copy-on-write into the clone's own data dir, artifact untouched).
+        val art = Artifacts.frozen(sfDir, "tx_demo_s49") { d =>
+          TxTable.create(spark, d, base, Seq("k"), numBuckets = 1)
+        }
+        val t = TxTable.open(spark, art, Seq("k")).shallowClone(dir)
+        def conn = spark.read.format("graft").load(dir)
+        val pred = col("price_cents").between(2000000L, 2100000L)
+        def emitted(): Long = scanRowsEmitted(conn.filter(pred))
+        // Snapshot band and probe scan are independent reads of the same
+        // frozen layout — overlap each pre/post pair (guide §2.6).
+        val (b0r, unsorted) = par2(
+          t.snapshot().agg(count(lit(1)), sum("price_cents")).collect(),
+          emitted())
+        val Array(b0) = b0r
+        t.compact(0, Seq("price_cents"))
+        val (b1r, sorted) = par2(
+          t.snapshot().agg(count(lit(1)), sum("price_cents")).collect(),
+          emitted())
+        val Array(b1) = b1r
+        val unchanged = b0.getLong(0) == b1.getLong(0) && b0.getLong(1) == b1.getLong(1)
+        val effective = sorted * 2 <= unsorted
+
+        conn.filter(pred)
+          .groupBy("flag")
+          .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
+          .withColumn("snapshot_unchanged", lit(unchanged))
+          .withColumn("skip_effective", lit(effective))
+          .orderBy("flag")
+      }
+    }
+  }
+
+  /** Cluster-on-write demo (s54_clustered_write) — the CONTINUOUS
+    * counterpart of s49's OPTIMIZE-time clustering: the table declares
+    * cluster columns (`clusterCols` / `_log/cluster.txt`) and every data
+    * commit sorts its rows within each written bucket by them before
+    * the parquet write (one sortWithinPartitions on rows the commit was
+    * writing anyway — no extra shuffle, no extra pass). Copy-on-write
+    * makes the guarantee total: a MERGE rewrites every touched bucket
+    * in FULL, so a touched bucket is always entirely sorted — row-group
+    * footer stats stay selective at all times, with no periodic
+    * OPTIMIZE window where skipping degrades (the Delta
+    * liquid-clustering direction; at 100 TB, "run OPTIMIZE nightly" is
+    * a real operational tax and a real skew window). Certificates on
+    * the hash channel: `content_match` — the clustered table and an
+    * undeclared twin that received the IDENTICAL merge hold identical
+    * rows (clustering is layout only); `clustered_no_optimize` — after
+    * create + merge and NO compact (the version history is literally
+    * [create, merge]), the same range scan emits ≥2× fewer rows through
+    * the clustered table than the twin. */
+  def txClusteredWrite(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s54", "s54n") { case Seq(dir, dir2) =>
+      // The synthetic lineitem repeats (orderkey, linenumber) pairs, so a
+      // keyed MERGE over the raw rows would collapse duplicates — fold to
+      // one row per k FIRST, deterministically (independent max per
+      // column), so the oracle can reproduce the exact same table. The
+      // fold is a pure function of the input, so it freezes as a
+      // build-once INPUT artifact (the s52/s55 treatment, applied to
+      // input prep only): what this entry certifies — cluster-on-WRITE
+      // across a real create + merge, content parity with a twin — is
+      // re-executed and re-proven per invocation; the grouped base frame
+      // was ~1.2 s of identical per-run prep, not signal.
+      val base = Artifacts.ensureParquet(spark, sfDir, "s54_base") {
+        Tables.lineitem(spark, sfDir).select(
+            (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
+            round(col("l_extendedprice") * 100).cast("long").as("pc"),
+            col("l_returnflag").as("fl"))
+          .groupBy("k")
+          .agg(max("pc").as("price_cents"), max("fl").as("flag"))
+      }
+      // Row-count-adaptive group size (s51's rule): tiny groups only where
+      // skip granularity needs them; the artifact's footer serves the
+      // count without a scan.
+      val block =
+        if (Tables.footerRowCountAt(
+          Artifacts.path(sfDir, "s54_base")) < 100000) 32 * 1024
+        else 256 * 1024
+      Session.withConf(spark, parquetGroups(block): _*) {
+        // Two independent tables: creates (and the two merges below) are
+        // independent jobs — overlap them (guide §2.6) so the pair costs
+        // ~max, not ~sum, of two short write jobs.
+        val (t, twin) = par2(
+          TxTable.create(spark, dir, base, Seq("k"),
+            numBuckets = 1, clusterCols = Seq("price_cents")),
+          TxTable.create(spark, dir2, base, Seq("k"),
+            numBuckets = 1))
+        // The same real update lands on both: every k ≡ 0 (mod 7) flips its
+        // flag. One bucket ⇒ the merge rewrites the WHOLE table through the
+        // write path — the clustered side comes back fully sorted, the twin
+        // in whatever order the rewrite produced.
+        val upd = base.filter(col("k") % 7 === 0).withColumn("flag", lit("U")).localCheckpoint()
+        par2(t.merge(upd), twin.merge(upd))
+
+        def conn(d: String) = spark.read.format("graft").load(d)
+        val pred = col("price_cents").between(2000000L, 2100000L)
+        def emitted(d: String): Long = scanRowsEmitted(conn(d).filter(pred))
+        val contentMatch = sameRows(t.snapshot(), twin.snapshot())
+        val ops = t.history().orderBy("version").collect().map(_.getString(1)).toSeq
+        val (clustered, unclustered) = par2(emitted(dir), emitted(dir2))
+        val certNoOptimize = ops == Seq("create", "merge") &&
+          clustered * 2 <= unclustered
+
+        conn(dir).filter(pred)
+          .groupBy("flag")
+          .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
+          .withColumn("content_match", lit(contentMatch))
+          .withColumn("clustered_no_optimize", lit(certNoOptimize))
+          .orderBy("flag")
+      }
+    }
+
+  /** Z-order-compaction demo (s51_zorder_compact) — MULTI-dimensional
+    * clustering, closing s49's 1-D limit: `compact(sortBy = x)` makes
+    * row-group stats selective on x but leaves every group's y-span
+    * covering the full domain, so y-predicates still decode everything.
+    * `compactZOrder(x, y)` sorts each rewritten bucket by the
+    * bit-interleaved Morton code of the two columns (16-bit cells over
+    * each column's min-max span — one stats pass, no extra shuffle, the
+    * Z-value never written), so every row group covers a tight CELL in
+    * the (x, y) plane and range predicates on EITHER dimension skip —
+    * the Delta OPTIMIZE…ZORDER BY mechanism. Certificates on the hash
+    * channel: `snapshot_unchanged` (clustering is layout only) and
+    * `skip_both_effective` — the same two range scans' measured
+    * numOutputRows BOTH shrink ≥2× across the one rewrite (scan-level;
+    * only footer skipping can shrink it). Small parquet row groups give
+    * test-scale granularity, as in s49. */
+  def txZorderCompact(spark: SparkSession, sfDir: String): DataFrame = {
+    val base0 = Tables.lineitem(spark, sfDir).select(
+      (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
+      round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
+      col("l_partkey").as("part"),
+      col("l_returnflag").as("flag"))
+    // Row-count-adaptive group size: small SFs need tiny groups for any
+    // skip granularity at all, but keeping 16 KB groups at sf0.1 means
+    // ~2300 groups whose per-group flush/decode overhead dominates the
+    // entry (~12 s) while ~50 groups of 256 KB prove the same ≥2×-both-
+    // dimensions certificate at a fraction of the cost.
+    // Both pre-create probes (count for the group-size rule, max(part)
+    // for the SF-relative Y bound) are served from the input's parquet
+    // FOOTER metadata — exact for the record count and for INT64 stats —
+    // so the pre-create lineitem scan disappears entirely; a footer
+    // without stats falls back to the one fused scan.
+    val (nRows, maxPart) = {
+      val n = Tables.footerRowCount(sfDir, "lineitem")
+      Tables.footerMaxLong(sfDir, "lineitem", "l_partkey") match {
+        case Some(m) => (n, m)
+        case None =>
+          val pre = base0.agg(count(lit(1)), max("part")).head()
+          (pre.getLong(0), pre.getLong(1))
+      }
+    }
+    val block = if (nRows < 100000) 16 * 1024 else 256 * 1024
+    // BUILD-ONCE pass 1 (the s52/s57 treatment, extended with a SHALLOW
+    // CLONE): the pre-compact table is a deterministic projection of
+    // lineitem — pure protocol floor — so it freezes as an artifact.
+    // What this entry certifies (the Z-ORDER REWRITE preserving content
+    // while making BOTH dimensions skip ≥2×) is re-EXECUTED per
+    // invocation on a zero-copy clone: compactZOrder reads through the
+    // clone's absolute pointers and copy-on-writes into the clone's own
+    // data dir, so the frozen artifact is never mutated and the measured
+    // cost is the rewrite itself, not the rebuild of its input.
+    Lifecycle.demo(spark, "s51") { case Seq(dir) =>
+      Session.withConf(spark, parquetGroups(block): _*) {
+        val art = Artifacts.frozen(sfDir, "tx_demo_s51") { d =>
+          TxTable.create(spark, d, base0, Seq("k"), numBuckets = 1)
+        }
+        val t = TxTable.open(spark, art, Seq("k")).shallowClone(dir)
+        def conn = spark.read.format("graft").load(dir)
+        val predX = col("price_cents").between(2000000L, 2100000L)
+        // SF-relative second dimension: a fixed partkey bound would cover
+        // the whole domain at small SFs (part count scales with SF);
+        // maxPart comes from the fused pre-create scan above.
+        val predY = col("part") <= maxPart / 20
+        def emitted(pred: org.apache.spark.sql.Column): Long = scanRowsEmitted(conn.filter(pred))
+        // The X and Y probes are independent scans of the same frozen
+        // layout — overlap each pair (guide §2.6).
+        val Array(b0) = t.snapshot()
+          .agg(count(lit(1)), sum("price_cents")).collect()
+        val (ux, uy) = par2(emitted(predX), emitted(predY))
+        t.compactZOrder(Seq("price_cents", "part"))
+        val (zx, zy) = par2(emitted(predX), emitted(predY))
+        val Array(b1) = t.snapshot()
+          .agg(count(lit(1)), sum("price_cents")).collect()
+        val unchanged = b0.getLong(0) == b1.getLong(0) && b0.getLong(1) == b1.getLong(1)
+        val effective = zx * 2 <= ux && zy * 2 <= uy
+
+        conn.filter(predX)
+          .groupBy("flag")
+          .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
+          .withColumn("snapshot_unchanged", lit(unchanged))
+          .withColumn("skip_both_effective", lit(effective))
+          .orderBy("flag")
+      }
+    }
+  }
+
+  /** Date-partitioning demo (s58_date_partition) — the partition-VALUE
+    * tier above hash bucketing, the layout every real 100 TB fact table
+    * leads with: a declared `days(ts)` transform makes every data
+    * commit lay rows out as `_b=K/_p=<epochday>/` (hidden partitioning
+    * — queries filter on `ts`, never on `_p`; the UTC epoch-day mapping
+    * is session-timezone-proof), records itself in a per-commit
+    * `_pspec.txt`, and the DSv2 scan derives each file's covered time
+    * interval from its path at PLANNING — a date-range probe reads only
+    * matching day dirs, zero footer I/O on the rest. PARTITION
+    * EVOLUTION is per-commit: this entry creates the table FLAT,
+    * declares the transform afterwards, and merges — the touched
+    * buckets migrate to day layout while untouched buckets keep their
+    * flat era, both eras readable in one scan and each pruned by
+    * exactly its own recorded transform (the s27 rebucket discipline
+    * applied to partitioning). Certificates on the hash channel:
+    * `dp_hash_match` (pruned band == native snapshot band),
+    * `dp_prune_effective` (the 3-of-30-day probe plans ≤ half the
+    * files), `dp_evolution_ok` (flat-era and day-era commits BOTH
+    * present in the final manifest, and the full unpruned read equals
+    * the native snapshot row-for-row). */
+  def txDatePartition(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark) { _ =>
+      // The two-era layout (flat create, declared days(ts), one migrating
+      // merge) is deterministic — build-once artifact (s52/s15 treatment);
+      // every invocation re-proves all three certificates by PLANNING and
+      // READING against the frozen eras, which is the behavior the entry
+      // exists for. Partition-declared WRITES stay covered per-invocation
+      // by s62 (same setPartitioning→merge path).
+      val dir = Artifacts.frozen(sfDir, "tx_demo_s58") { d =>
+        val events0 = Tables.events(spark, sfDir)
+          .select("event_id", "ts", "event_type", "value")
+        val era1 = events0.filter(col("event_id") % 3 === 0)
+        val tb = TxTable.create(spark, d, era1, Seq("event_id"),
+          numBuckets = 16) // created FLAT — the pre-partitioning era
+        tb.setPartitioning("days(ts)")
+        // Three literal keys (present at every SF) — the merge rewrites
+        // only their buckets, migrating those to day layout; the rest of
+        // the table keeps its flat-era commit.
+        tb.merge(events0.filter(col("event_id").isin(1L, 4L, 7L))
+          .withColumn("value", col("value") + 1000.0))
+      }
+      val t = TxTable.open(spark, dir, Seq("event_id"))
+      val commits = t.dataPointers(t.version).values.toSet
+      val (dayEra, flatEra) = commits.partition(c => java.nio.file.Files.exists(
+        java.nio.file.Paths.get(dir, "data", c, "_pspec.txt")))
+      def conn = spark.read.format("graft").load(dir)
+      val native = t.snapshot()
+      val evolutionOk = dayEra.nonEmpty && flatEra.nonEmpty &&
+        sameRows(conn, native)
+
+      def plannedFiles(preds: Array[Filter]): Int =
+        GraftDataSource.plannedPartitions(dir, preds).map(_.files.length).sum
+      val bandLo = java.time.Instant.parse("2024-01-10T00:00:00Z")
+      val bandHi = java.time.Instant.parse("2024-01-13T00:00:00Z")
+      import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
+      val allFiles = plannedFiles(Array.empty)
+      val bandFiles = plannedFiles(Array(
+        GreaterThanOrEqual("ts", bandLo), LessThan("ts", bandHi)))
+      val pruneEffective = bandFiles >= 1 && bandFiles * 2 <= allFiles
+
+      val pred = col("ts") >= lit("2024-01-10 00:00:00").cast("timestamp") &&
+        col("ts") < lit("2024-01-13 00:00:00").cast("timestamp")
+      val hashMatch = sameRows(conn.filter(pred), native.filter(pred))
+
+      conn.filter(pred)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          sum((col("value").cast("decimal(18,6)") * 1000000)
+            .cast("decimal(38,0)")).cast("long").as("sum_micro"))
+        .withColumn("dp_hash_match", lit(hashMatch))
+        .withColumn("dp_prune_effective", lit(pruneEffective))
+        .withColumn("dp_evolution_ok", lit(evolutionOk))
+        .orderBy("event_type")
+    }
+
+  /** Partition-covered ranged COUNT demo (s62_ranged_count) — the
+    * dashboard query every fact table serves constantly: `SELECT
+    * count(*) WHERE ts in [day range]`. When the range is exactly
+    * covered by the hidden-partition tier (every file's path-derived
+    * interval lies entirely inside or outside it), the pushed filters
+    * are accepted as EXACT (Iceberg's residual-evaluation move — no
+    * residual, so Spark can push the aggregate at all) and the COUNT
+    * answers from the v2 per-file `_rows.txt` sidecars with ZERO data or
+    * footer I/O. Certificates on the hash channel: `rc_sidecar_served`
+    * (the plan names the sidecar tier), `rc_zero_data_io` (the covered
+    * count stays right with EVERY data file poisoned — the only way
+    * that holds is if no data file was opened), `rc_straddle_fallback`
+    * (a mid-day boundary provably falls back: no stats scan in the
+    * plan, answer computed by the exactly-pruned data scan). At 100 TB:
+    * a 3-day count on a 3000-day table is O(admitted-day sidecar lines)
+    * of driver metadata, not a scan. Dsv2Spec adds the DV-refusal and
+    * exact-row-read cases.
+    *
+    * The day-partitioned layout (create → setPartitioning → merge, 4
+    * buckets × 30 days of files) is a deterministic projection of
+    * `events` — protocol floor, not the certified behavior — so it
+    * freezes as a build-once artifact (the s57/s58/s60 treatment);
+    * every invocation re-proves all three certificates by PLANNING,
+    * READING and POISONING against the frozen layout. The poison pass
+    * runs on a private copy whose data files are poison (its log and
+    * sidecars copied), so the published artifact is never written. The
+    * days(ts) merge write path stays covered per-invocation by s58's
+    * date-partition entry. */
+  def txRangedCount(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s62") { case Seq(work) =>
+      val dir = Artifacts.frozen(sfDir, "tx_demo_s62") { d =>
+        val events = Tables.events(spark, sfDir)
+          .select("event_id", "ts", "event_type", "value")
+        // 4 buckets: a day-partitioned table's file floor is buckets × days
+        // (the optimized write caps it there at ANY data size), and this
+        // entry's cost is that floor — wider bucketing buys the demo
+        // nothing but file creates.
+        val t = TxTable.create(spark, d, events.limit(0), Seq("event_id"), numBuckets = 4)
+        t.setPartitioning("days(ts)")
+        t.merge(events)
+      }
+      val t = TxTable.open(spark, dir, Seq("event_id"))
+      def conn(d: String) = spark.read.format("graft").load(d)
+      val lo = lit("2024-01-10 00:00:00").cast("timestamp")
+      val hi = lit("2024-01-13 00:00:00").cast("timestamp")
+      val mid = lit("2024-01-10 12:00:00").cast("timestamp")
+      def covered(d: String) = conn(d).filter(col("ts") >= lo && col("ts") < hi)
+        .groupBy().count()
+      def straddle = conn(dir).filter(col("ts") >= mid && col("ts") < hi)
+        .groupBy().count()
+      val sidecarServed = covered(dir).queryExecution.executedPlan.toString
+        .contains("partition-covered")
+      val straddleFellBack = !straddle.queryExecution.executedPlan.toString
+        .contains("partition-covered")
+      val native = t.snapshot()
+      // Two independent pre-poison reads of the same frozen layout —
+      // overlap them (guide §2.6).
+      val (nativeCovered, straddleN) = par2(
+        native.filter(col("ts") >= lo && col("ts") < hi).count(),
+        straddle.head().getLong(0)) // needs real data: pre-poison
+      // Zero-data-I/O proof: on a private copy of the table whose EVERY
+      // parquet file is poison (log and sidecars copied), the covered
+      // count must still answer (paths + sidecars only), byte-identically.
+      val coveredN = {
+        // Checksum files are left out too: nothing reads a poisoned file.
+        def isData(p: java.nio.file.Path) = p.toString.endsWith(".parquet")
+        val dataFiles = Artifacts.copyTree(dir, work,
+          p => !isData(p) && !p.toString.endsWith(".crc")).filter(isData)
+        // One poison write per data file (buckets × days of them) —
+        // independent byte I/O, fanned out like the connector's planning
+        // pass instead of a serial driver loop.
+        TxTable.parMap(dataFiles)(
+          java.nio.file.Files.write(_, "POISON".getBytes("UTF-8")))
+        covered(work).head().getLong(0)
+      }
+      spark.range(1).select(
+        lit(coveredN).as("covered_n"),
+        lit(straddleN).as("straddle_n"),
+        lit(sidecarServed).as("rc_sidecar_served"),
+        lit(coveredN == nativeCovered).as("rc_zero_data_io"),
+        lit(straddleFellBack).as("rc_straddle_fallback"))
+    }
+
+  /** Type-widening evolution demo (s56_widen_column) — the remaining
+    * Delta/Iceberg schema-evolution verb after add/drop/rename/default:
+    * `widenColumn("qty", "BIGINT")` republishes the manifest with the
+    * column's type widened and ZERO data rewritten (`dataPointers`
+    * unchanged — on a 100 TB table the DDL costs two small log files).
+    * Pre-widen files keep serving int32 pages cast at read; post-widen
+    * commits store int64 physically; the read path groups commits by
+    * physical-type signature (Spark's mergeSchema refuses int/long
+    * merges) and the DSv2 connector serves the mixed layout through its
+    * per-file type codes. Every skipping tier refuses the widened
+    * column by its write-time-type guard (conservative no-skip, never
+    * wrong — Dsv2Spec pins it). Certificates on the hash channel:
+    * `widen_metadata_only` (the widen commit re-points nothing),
+    * `widen_conn_match` (connector == native over the mixed-type
+    * layout), `widen_range_real` (post-widen values exceed Int.MaxValue
+    * — the wide path carries real wide values, not just a type label). */
+  def txWidenColumn(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s56") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir).select(col("name"), col("house"),
+        round(col("acctbal") * 100).cast("int").as("qty"))
+      // 4 buckets (s64's measured rule); the widen certificates compare
+      // pointer sets and row content, never the bucket count.
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      // A real pre-widen merge: the table holds int32 commits.
+      t.merge(t.snapshot().filter(col("name").endsWith("7"))
+        .withColumn("house", lit("PROMOTED")))
+      val preV = t.version
+      val prePointers = t.dataPointers(preV)
+      t.widenColumn("qty", "BIGINT")
+      val metaOnly = t.version == preV + 1 &&
+        t.dataPointers(t.version) == prePointers
+      // Post-widen merge with values an int CANNOT hold — lands int64
+      // files next to the untouched int32 commits.
+      t.merge(t.snapshot().filter(col("name").endsWith("3"))
+        .withColumn("qty", col("qty") + lit(3000000000L)))
+
+      val native = t.snapshot()
+      def conn = spark.read.format("graft").load(dir)
+      // Independent reads of the same frozen head: hash-fold compare
+      // (sameRows overlaps the two sides) and the range probe.
+      val (connMatch, rangeReal) = par2(
+        sameRows(conn, native),
+        native.agg(max("qty")).head.getLong(0) > Int.MaxValue.toLong)
+
+      conn.filter(col("name") <= "Customer#000000059")
+        .select(col("name"), col("house"), col("qty"))
+        .withColumn("widen_metadata_only", lit(metaOnly))
+        .withColumn("widen_conn_match", lit(connMatch))
+        .withColumn("widen_range_real", lit(rangeReal))
+        .orderBy("name")
+    }
+
+  /** Zone-map range-skipping demo (s55_zonemap_range) — the missing TOP
+    * tier for RANGE predicates, completing the equality-only tier s53
+    * shipped: declared zone-map columns (`zoneMapCols` /
+    * `_log/zonemap.txt`) make every data commit record each written
+    * file's min/max in a `_zonemap.txt` sidecar per bucket dir —
+    * harvested from the footers the `_rows.txt` pass already opens, zero
+    * extra I/O — and the DSv2 scan consults it at PLANNING: a pushed
+    * range predicate refutes whole FILES (and, when every file refutes,
+    * whole BUCKETS) before ANY footer is opened. Without it a range
+    * probe on a 100 TB table paid one footer open per file (4096
+    * buckets × k files) before row-group stats could refuse anything;
+    * with it, footer I/O is proportional to ADMITTED files. Honest
+    * scale note, measured not hand-waved: per-BUCKET min/max under pure
+    * hash bucketing is provably non-selective on uncorrelated columns
+    * (every bucket is a uniform sample), so the sidecar records
+    * per-FILE bounds — a cluster-sorted rewrite under
+    * `maxRecordsPerFile` emits range-DISJOINT files within each bucket,
+    * which is what this entry builds (Dsv2Spec adds the
+    * bucket-correlated case where whole buckets refute, plus the
+    * poisoned-file proof that refuted files see zero I/O). Certificates
+    * on the hash channel: `zm_hash_match` (pruned connector result ==
+    * native snapshot), `zm_file_prune` (the band probe plans ≤ half the
+    * files), `zm_bucket_prune` (a below-domain probe refutes EVERY
+    * bucket at planning — 0 partitions). The clustered layout is
+    * deterministic, so it freezes as a build-once artifact (the
+    * s57/s58 treatment) — every invocation re-proves all three
+    * certificates by PLANNING and READING against the frozen layout;
+    * the zone-map harvest-at-commit write path stays covered
+    * per-invocation by s54's clustered write. */
+  def txZonemapRange(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark) { _ =>
+      val (dir, globalMin) = zonemapLayout(spark, sfDir)
+      val t = TxTable.open(spark, dir, Seq("k"))
+      def conn = spark.read.format("graft").load(dir)
+      // Filters arrive as TOP-LEVEL conjuncts (Spark splits And before
+      // pushdown), so the helper passes them the same way.
+      def plannedFiles(preds: Array[Filter]): (Int, Int) = {
+        val parts = GraftDataSource.plannedPartitions(dir, preds)
+        (parts.length, parts.map(_.files.length).sum)
+      }
+      import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual, LessThan}
+      val lo = 2000000L; val hi = 2100000L
+      val (_, allFiles) = plannedFiles(Array.empty)
+      val (_, bandFiles) = plannedFiles(Array(
+        GreaterThanOrEqual("price_cents", lo), LessThanOrEqual("price_cents", hi)))
+      val (noneParts, _) = plannedFiles(Array(LessThan("price_cents", globalMin)))
+      val filePrune = bandFiles * 2 <= allFiles && bandFiles >= 1
+      val bucketPrune = noneParts == 0
+
+      val pred = col("price_cents").between(lo, hi)
+      val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
+
+      conn.filter(pred)
+        .groupBy("flag")
+        .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
+        .withColumn("zm_hash_match", lit(hashMatch))
+        .withColumn("zm_file_prune", lit(filePrune))
+        .withColumn("zm_bucket_prune", lit(bucketPrune))
+        .orderBy("flag")
+    }
+
+  /** s55's range-clustered, zone-mapped layout (read by s55 and s66) and
+    * its below-domain probe bound (the minimum `price_cents`). */
+  private def zonemapLayout(spark: SparkSession, sfDir: String): (String, Long) = {
+    val (dir, globalMin) = Artifacts.frozenValue(sfDir, "tx_demo_s55") { d =>
+      val base = Tables.lineitem(spark, sfDir).select(
+        (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
+        round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
+        col("l_returnflag").as("flag"))
+      val nRows = base.count()
+      val tb = TxTable.create(spark, d, base, Seq("k"),
+        numBuckets = 8, zoneMapCols = Seq("price_cents"))
+      // Sorted rewrite split into ~6 range-disjoint files per bucket:
+      // the layout a 100 TB table maintains continuously via
+      // cluster-on-write + size-targeted compaction.
+      Session.withConf(spark, maxRecords(nRows / 48)) {
+        tb.compact(0, Seq("price_cents"))
+      }
+      base.agg(min("price_cents")).head.getLong(0).toString
+    }
+    (dir, globalMin.toLong)
+  }
+
+  /** Consolidated stats-manifest demo (s60_stats_manifest) — the
+    * Delta-checkpoint / Iceberg-manifest-list analogue: every publish
+    * folds the version's planning metadata (per-file LISTING with rows
+    * and bytes, partition specs, zone maps, bucket blooms) into ONE
+    * `_log/stats-v*.bin`, incrementally (unchanged buckets reuse their
+    * prior serialized entry — sidecars are immutable per commit dir).
+    * Planning a snapshot then costs ONE metadata read instead of
+    * O(buckets) sidecar opens and O(files) directory walking — at 100 TB
+    * with 4096 buckets × thousands of day dirs, the walk itself was the
+    * planning cost. Certificates on the hash channel: `sm_one_read` (a
+    * fresh band plan fires the metadata-read probe exactly once),
+    * `sm_fallback_obuckets` (the same plan through the per-bucket path
+    * — `ignoreStatsManifest` — costs >8 reads, so the contrast is real),
+    * `sm_same_decisions` (both paths plan the IDENTICAL file set — the
+    * manifest changes WHERE metadata is read, never what is decided),
+    * `sm_hash_match` (pruned band == native). Advisory end to end: a
+    * version without the file (pre-manifest, crash before the stats
+    * write) falls back per bucket, mixed per bucket. */
+  def txStatsManifest(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark) { _ =>
+      // The two-commit layout (create, clustered compact — the second
+      // publish exercising the incremental per-bucket stats reuse) is
+      // deterministic, so it freezes as a build-once artifact (the
+      // s57/s58 treatment); every invocation re-proves all four
+      // certificates by PLANNING both paths and READING against the
+      // frozen layout. The harvest-at-publish write path stays covered
+      // per-invocation by s54's clustered write.
+      val dir = Artifacts.frozen(sfDir, "tx_demo_s60") { d =>
+        val base = Tables.lineitem(spark, sfDir).select(
+          (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
+          round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
+          col("l_returnflag").as("flag"))
+          .withColumn("token", md5(col("k").cast("string")))
+        val nRows = base.count()
+        val tb = TxTable.create(spark, d, base, Seq("k"),
+          numBuckets = 8, zoneMapCols = Seq("price_cents"),
+          bloomCols = Seq("token"))
+        Session.withConf(spark, maxRecords(nRows / 48)) {
+          tb.compact(0, Seq("price_cents"))
+        }
+      }
+      val t = TxTable.open(spark, dir, Seq("k"))
+      import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
+      val band: Array[Filter] = Array(
+        GreaterThanOrEqual("price_cents", 2000000L),
+        LessThanOrEqual("price_cents", 2100000L))
+      def plannedFiles(ignore: Boolean): Set[String] =
+        GraftDataSource.plannedPartitions(dir, band,
+          if (ignore) Map("ignoreStatsManifest" -> "true") else Map.empty)
+          .flatMap(_.files).toSet
+      val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+      TxTable.metaReadProbe = _ => { reads.incrementAndGet(); () }
+      val (viaManifest, oneRead, viaBuckets, fallbackReads) =
+        try {
+          val a = plannedFiles(ignore = false)
+          val ar = reads.getAndSet(0)
+          val b = plannedFiles(ignore = true)
+          (a, ar == 1, b, reads.get())
+        } finally TxTable.metaReadProbe = _ => ()
+      val sameDecisions = viaManifest == viaBuckets && viaManifest.nonEmpty
+
+      def conn = spark.read.format("graft").load(dir)
+      val pred = col("price_cents").between(2000000L, 2100000L)
+      val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
+
+      conn.filter(pred)
+        .groupBy("flag")
+        .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
+        .withColumn("sm_one_read", lit(oneRead))
+        // O(buckets): the per-bucket path reads at least one sidecar per
+        // bucket (8 zone maps here) where the manifest path read ONE.
+        .withColumn("sm_fallback_obuckets", lit(fallbackReads >= 8))
+        .withColumn("sm_same_decisions", lit(sameDecisions))
+        .withColumn("sm_hash_match", lit(hashMatch))
+        .orderBy("flag")
+    }
+
+  /** String zone-map demo (s63_string_zonemap) — closing the s55 gap
+    * where strings got NO file-tier skipping: declared string zone-map
+    * columns record explicitly TRUNCATED 16-byte bounds (Iceberg
+    * `truncate(col, 16)` semantics — lower = prefix of min, upper =
+    * prefix of max with the last byte incremented) in the `_zonemap.txt`
+    * sidecar, and a pushed string range/equality probe refutes whole
+    * files (and buckets) at planning in the same unsigned byte order
+    * Spark compares strings by. Bounds, not extrema — sound under any
+    * writer-side statistics truncation, which is why MIN/MAX pushdown
+    * still refuses strings. Certificates on the hash channel:
+    * `sz_hash_match` (pruned band == native band), `sz_file_prune` (the
+    * one-adjective band plans ≤ half the files of the sorted layout),
+    * `sz_bucket_prune` (a below-domain probe plans ZERO partitions).
+    * PropertySpec adds the no-misrefute battery: values sharing a
+    * 16-byte prefix must always admit each other's files. The sorted
+    * string layout is deterministic, so it freezes as a build-once
+    * artifact (the s57/s58 treatment) — every invocation re-proves all
+    * three certificates by PLANNING and READING against the frozen
+    * layout, which is the behavior the entry exists for; the zone-map
+    * harvest-at-commit write path stays covered per-invocation by
+    * s54's clustered write. */
+  def txStringZonemap(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark) { _ =>
+      val dir = Artifacts.frozen(sfDir, "tx_demo_s63") { d =>
+        val base = Tables.part(spark, sfDir).select(
+          col("p_partkey").as("k"), col("p_name").as("name"),
+          round(col("p_retailprice") * 100).cast("long").as("price_cents"))
+        val nRows = base.count()
+        val tb = TxTable.create(spark, d, base, Seq("k"), numBuckets = 8, zoneMapCols = Seq("name"))
+        // Sorted rewrite into ~6 range-disjoint files per bucket — the
+        // continuously-clustered layout of s55, on a STRING dimension.
+        Session.withConf(spark, maxRecords(nRows / 48)) {
+          tb.compact(0, Seq("name"))
+        }
+      }
+      val t = TxTable.open(spark, dir, Seq("k"))
+      def conn = spark.read.format("graft").load(dir)
+      def plannedFiles(preds: Array[Filter]): (Int, Int) = {
+        val parts = GraftDataSource.plannedPartitions(dir, preds)
+        (parts.length, parts.map(_.files.length).sum)
+      }
+      import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
+      val (_, allFiles) = plannedFiles(Array.empty)
+      val (_, bandFiles) = plannedFiles(Array(
+        GreaterThanOrEqual("name", "c"), LessThan("name", "h")))
+      val (noneParts, _) = plannedFiles(Array(LessThan("name", "a")))
+      val filePrune = bandFiles >= 1 && bandFiles * 2 <= allFiles
+      val bucketPrune = noneParts == 0
+
+      val pred = col("name") >= "c" && col("name") < "h"
+      val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
+
+      conn.filter(pred)
+        .groupBy("name")
+        .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
+        .withColumn("sz_hash_match", lit(hashMatch))
+        .withColumn("sz_file_prune", lit(filePrune))
+        .withColumn("sz_bucket_prune", lit(bucketPrune))
+        .orderBy("name")
+    }
+
+  /** N-way Z-order demo (s57_zorder_nway) — closing s51's 2-column limit:
+    * `compactZOrder(a, b, c)` interleaves THREE dimensions round-robin
+    * (bit j of column i at position j·n + i, cells of min(16, 63/n)
+    * bits over each column's min-max span — one stats pass, no extra
+    * shuffle, the Z-value never written), so ONE layout serves range
+    * predicates on ALL THREE columns, where a 1-D sort serves one and a
+    * 2-D Morton two. The inherent trade: per-dimension resolution falls
+    * as dimensions join (the same reason Delta caps ZORDER BY columns),
+    * so the per-dimension shrink here is g^(1/3)-ish against g row
+    * groups rather than s49's g — still ≥2× on every dimension, which
+    * is the certificate. Certificates on the hash channel:
+    * `snapshot_unchanged` (clustering is layout only) and
+    * `skip_all3_effective` — the same three range scans' measured
+    * numOutputRows EACH shrink ≥2× across the one rewrite (scan-level;
+    * only footer skipping can shrink it). Row-group size is row-count-
+    * adaptive like s51: three dimensions need more groups than two for
+    * the same per-dimension granularity. The UNSORTED and Z-ORDERED
+    * layouts are deterministic, so both freeze as build-once artifacts
+    * (the s52/s15 treatment): every invocation re-proves BOTH
+    * certificates by measuring the six scans and both snapshot
+    * aggregates against the frozen pair — the entry measures the
+    * probes the layout exists for, not the demo table's construction
+    * (the compactZOrder WRITE path stays covered per-invocation by
+    * s51, whose 2-D rewrite is the same code path). */
+  def txZorderNway(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark) { _ =>
+      val (art, bounds) = Artifacts.frozenValue(sfDir, "tx_demo_s57") { d =>
+        val base = Tables.lineitem(spark, sfDir).select(
+          (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
+          round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
+          col("l_partkey").as("part"),
+          col("l_suppkey").as("sup"),
+          col("l_returnflag").as("flag"))
+        val nRows = base.count()
+        val block =
+          if (nRows < 10000) 4 * 1024
+          else if (nRows < 100000) 16 * 1024
+          else 192 * 1024
+        Session.withConf(spark, parquetGroups(block): _*) {
+          TxTable.create(spark, s"$d/flat", base, Seq("k"), numBuckets = 1)
+          val t = TxTable.create(spark, s"$d/zorder", base, Seq("k"), numBuckets = 1)
+          t.compactZOrder(Seq("price_cents", "part", "sup"))
+        }
+        // Probe bounds, frozen with the layouts (deterministic over base).
+        val Array(b) = Tables.lineitem(spark, sfDir)
+          .agg(max("l_partkey"), max("l_suppkey")).collect()
+        s"${b.getLong(0)}\t${b.getLong(1)}"
+      }
+      val flatDir = s"$art/flat"; val zDir = s"$art/zorder"
+      val Array(maxPart, maxSup) = bounds.split('\t').map(_.toLong)
+      def conn(d: String) = spark.read.format("graft").load(d)
+      val predX = col("price_cents").between(2000000L, 2060000L)
+      val predY = col("part") <= maxPart / 30
+      val predZ = col("sup") <= maxSup / 30
+      def emitted(d: String, pred: org.apache.spark.sql.Column): Long =
+        scanRowsEmitted(conn(d).filter(pred))
+      val (ux, uy, uz) =
+        (emitted(flatDir, predX), emitted(flatDir, predY), emitted(flatDir, predZ))
+      val (zx, zy, zz) =
+        (emitted(zDir, predX), emitted(zDir, predY), emitted(zDir, predZ))
+      // Layout-only certificate re-proven per run: count and sum agree
+      // across the unsorted and Z-ordered tables.
+      val Array(b0) = conn(flatDir).agg(count(lit(1)), sum("price_cents")).collect()
+      val Array(b1) = conn(zDir).agg(count(lit(1)), sum("price_cents")).collect()
+      val unchanged = b0.getLong(0) == b1.getLong(0) && b0.getLong(1) == b1.getLong(1)
+      val effective = zx * 2 <= ux && zy * 2 <= uy && zz * 2 <= uz
+
+      conn(zDir).filter(predX)
+        .groupBy("flag")
+        .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
+        .withColumn("snapshot_unchanged", lit(unchanged))
+        .withColumn("skip_all3_effective", lit(effective))
+        .orderBy("flag")
+    }
+
+  /** Hilbert-clustering demo (s59_hilbert_compact) — the locality-better
+    * alternative to s51's Morton interleave: `compactHilbert(a, b)`
+    * sorts each rewritten bucket by the 2-D Hilbert index of the same
+    * 16-bit min-max cells, computed by the native Catalyst expression
+    * `graft.functions.HilbertIndex` (the classic flip-and-rotate
+    * recurrence emitted by `doGenCode` as one whole-stage-codegen'd
+    * Java loop — no UDF, no HOF). Consecutive Hilbert indexes are always
+    * Manhattan-distance-1 neighbors, so sorted runs cut into row groups
+    * cover tighter rectangles than Morton's power-of-two jumps — same
+    * one-stats-pass, no-extra-shuffle, layout-only contract.
+    * Certificates on the hash channel: `snapshot_unchanged` and
+    * `hskip_both_effective` (the same two range scans' measured
+    * numOutputRows BOTH shrink ≥2× across the one rewrite).
+    * PropertySpec pins the curve itself by its DEFINING properties —
+    * full-grid bijection and unit-step adjacency. The UNSORTED and
+    * Hilbert-clustered layouts are deterministic, so both freeze as
+    * build-once artifacts (the s57 treatment): every invocation
+    * re-proves BOTH certificates by measuring the four scans and both
+    * snapshot aggregates against the frozen pair; the compaction
+    * rewrite WRITE path stays covered per-invocation by s51 (the same
+    * one-stats-pass clustered rewrite, Morton key). */
+  def txHilbertCompact(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark) { _ =>
+      val (art, bound) = Artifacts.frozenValue(sfDir, "tx_demo_s59") { d =>
+        val base = Tables.lineitem(spark, sfDir).select(
+          (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
+          round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
+          col("l_partkey").as("part"),
+          col("l_returnflag").as("flag"))
+        val nRows = base.count()
+        val block = if (nRows < 100000) 16 * 1024 else 256 * 1024
+        Session.withConf(spark, parquetGroups(block): _*) {
+          TxTable.create(spark, s"$d/flat", base, Seq("k"), numBuckets = 1)
+          val t = TxTable.create(spark, s"$d/hilbert", base, Seq("k"), numBuckets = 1)
+          t.compactHilbert(Seq("price_cents", "part"))
+        }
+        // Probe bound, frozen with the layouts (deterministic over base).
+        base.agg(max("part")).head.getLong(0).toString
+      }
+      val flatDir = s"$art/flat"; val hDir = s"$art/hilbert"
+      val maxPart = bound.toLong
+      def conn(d: String) = spark.read.format("graft").load(d)
+      val predX = col("price_cents").between(2000000L, 2100000L)
+      val predY = col("part") <= maxPart / 20
+      def emitted(d: String, pred: org.apache.spark.sql.Column): Long =
+        scanRowsEmitted(conn(d).filter(pred))
+      val (ux, uy) = (emitted(flatDir, predX), emitted(flatDir, predY))
+      val (hx, hy) = (emitted(hDir, predX), emitted(hDir, predY))
+      // Layout-only certificate re-proven per run: count and sum agree
+      // across the unsorted and Hilbert-clustered tables.
+      val Array(b0) = conn(flatDir).agg(count(lit(1)), sum("price_cents")).collect()
+      val Array(b1) = conn(hDir).agg(count(lit(1)), sum("price_cents")).collect()
+      val unchanged = b0.getLong(0) == b1.getLong(0) && b0.getLong(1) == b1.getLong(1)
+      val effective = hx * 2 <= ux && hy * 2 <= uy
+
+      conn(hDir).filter(predX)
+        .groupBy("flag")
+        .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
+        .withColumn("snapshot_unchanged", lit(unchanged))
+        .withColumn("hskip_both_effective", lit(effective))
+        .orderBy("flag")
+    }
+
+  /** DSv2 column-statistics demo (s66_column_stats) — the optimizer-
+    * facing stats surface above s45's size/row reporting: the scan's
+    * `estimateStatistics` now also reports PER-COLUMN statistics
+    * (Spark's `Statistics.columnStats`, folded into the relation's
+    * `attributeStats` by `transformV2Stats` — the join-cardinality and
+    * CBO inputs). Two sources, both free from resident metadata: the
+    * merge key's distinct count is EXACTLY the row count by the
+    * one-row-per-key invariant (an NDV no sampling ANALYZE can state
+    * exactly), and long zone-mapped columns report true min/max folded
+    * from the same sidecars planning already holds — O(admitted files)
+    * driver work inside the byte-summing loop, zero extra I/O. String
+    * zones stay unreported (truncated bounds are sound for refutation
+    * but are not extrema). Certificates on the hash channel:
+    * `cs_rowcount_exact` (relation stats carry the exact row count),
+    * `cs_key_ndv_exact` (key NDV == row count), `cs_minmax_true`
+    * (reported bounds equal the data's true extrema), `cs_pruned_
+    * tighter` (a range-filtered scan's reported bounds tighten to the
+    * admitted files' span on the clustered layout — stats follow the
+    * pruned scan, not the table). Reads the s55 build-once artifact —
+    * this entry measures PLANNING metadata, not a table build. */
+  def txColumnStats(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark) { _ =>
+      val (dir, _) = zonemapLayout(spark, sfDir)
+      val t = TxTable.open(spark, dir, Seq("k"))
+      val Array(truth) = t.snapshot()
+        .agg(count(lit(1)), min("price_cents"), max("price_cents")).collect()
+      val (n, pMin, pMax) = (truth.getLong(0), truth.getLong(1), truth.getLong(2))
+
+      def relStats(df: DataFrame) = df.queryExecution.optimizedPlan
+        .collectFirst {
+          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+            r.stats
+        }.get
+      def colStat(st: org.apache.spark.sql.catalyst.plans.logical.Statistics,
+                  name: String) =
+        st.attributeStats.find(_._1.name == name).map(_._2)
+
+      val full = relStats(spark.read.format("graft").load(dir))
+      val rowcountExact = full.rowCount.contains(BigInt(n))
+      val ndvExact = colStat(full, "k").exists(_.distinctCount.contains(BigInt(n)))
+      val minmaxTrue = colStat(full, "price_cents").exists(s =>
+        s.min.contains(pMin) && s.max.contains(pMax))
+      // Mid-domain band on the range-clustered layout: admitted files span
+      // a strict subset of the domain, and the reported bounds follow.
+      val lo = (pMin * 3 + pMax) / 4
+      val hi = (pMin + pMax * 3) / 4
+      val pruned = relStats(spark.read.format("graft").load(dir)
+        .filter(col("price_cents").between(lo, hi)))
+      val prunedTighter = colStat(pruned, "price_cents").exists(s =>
+        s.min.exists(_.asInstanceOf[Long] > pMin) &&
+          s.max.exists(_.asInstanceOf[Long] < pMax))
+
+      spark.read.format("graft").load(dir)
+        .groupBy("flag")
+        .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
+        .withColumn("cs_rowcount_exact", lit(rowcountExact))
+        .withColumn("cs_key_ndv_exact", lit(ndvExact))
+        .withColumn("cs_minmax_true", lit(minmaxTrue))
+        .withColumn("cs_pruned_tighter", lit(prunedTighter))
+        .orderBy("flag")
+    }
+
+  /** Row-tracking lineage demo (s65_row_lineage) — the Delta
+    * row-tracking analogue: a table created with `rowTracking = true`
+    * assigns every logical row a stable 64-bit `_rid` at insert, and
+    * every copy-on-write rewrite PRESERVES it — merge updates, layout
+    * compaction, predicate UPDATE — so an incremental consumer can
+    * follow a row across rewrites without diffing business keys. Freed
+    * ids are never reused (a `#ridhwm=` high-water mark rides each
+    * manifest, atomic with the commit claim); a key deleted and
+    * re-inserted is a NEW logical row and draws a NEW id. Assignment is
+    * scale-honest: fresh ids are contiguous per bucket (bucket-local
+    * rank + one bounded driver pass over bucket counts — no global
+    * sort), and preservation is one key join over the TOUCHED buckets
+    * only, the same bound as the rewrite itself. Certificates on the
+    * hash channel: `rid_unique` (head ids are distinct), `rid_keep_on_
+    * update` (every key present at v0 and v1 kept its id through the
+    * merge), `rid_stable_rewrites` (every surviving key's id is
+    * IDENTICAL before and after compact + predicate update),
+    * `rid_fresh_monotone` (the merge's inserted keys drew ids at or
+    * above the pre-merge high-water mark — disjoint from every earlier
+    * id by construction), `rid_reinsert_new` (the deleted-then-
+    * re-inserted key's head id differs from its original id).
+    * RowTrackingSpec adds the model-based random-sequence battery. */
+  def txRowLineage(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s65") { case Seq(dir) =>
+      import spark.implicits._
+      val base = protocolSlice(spark, sfDir)
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4, rowTracking = true)
+      val rid = col(TxTable.RidCol)
+      val hwm0 = t.ridHwmAt(t.version)
+      // The demo table is bounded (≤203 rows), so each version's
+      // (key → id) map collects to the driver and the five certificates
+      // evaluate as plain Scala — three actions instead of six
+      // join-shaped jobs; the write PROTOCOL is the measured cost.
+      def ridsOf(df: DataFrame): Map[String, Long] = df
+        .select(col("name"), rid).as[(String, Long)].collect().toMap
+      val v0 = ridsOf(t.snapshot())
+      t.merge(Seq(
+        ("Customer#000000003", "BUILDING", 1.0),
+        ("Customer#000000007", "BUILDING", 2.0),
+        ("User#000000001", "BUILDING", 10.0),
+        ("User#000000002", "MACHINERY", 20.0)).toDF("name", "house", "acctbal"))
+      val v1 = ridsOf(t.snapshot())
+      t.compact(0)
+      t.update("house = 'BUILDING'", Map("acctbal" -> "acctbal + 1.0"))
+      t.delete(Seq(Tuple1("Customer#000000003")).toDF("name"))
+      t.merge(Seq(("Customer#000000003", "FURNITURE", 5.0))
+        .toDF("name", "house", "acctbal"))
+      val headRows = t.snapshot()
+        .select(col("name"), col("house"),
+          round(col("acctbal"), 2).as("acctbal"), rid)
+        .as[(String, String, Double, Long)].collect()
+      val hd = headRows.map { case (n, _, _, r) => n -> r }.toMap
+
+      val unique = hd.values.toSeq.distinct.size == headRows.length
+      val keepOnUpdate = v0.forall { case (k, r) => v1.get(k).forall(_ == r) }
+      val stable = v1.forall { case (k, r) =>
+        k == "Customer#000000003" || hd.get(k).forall(_ == r) }
+      val inserted = v1.view.filterKeys(!v0.contains(_)).toMap
+      val freshMono = inserted.size == 2 && inserted.values.forall(_ >= hwm0)
+      val reinsertNew = hd("Customer#000000003") != v1("Customer#000000003")
+
+      headRows.toSeq
+        .map { case (n, h, a, _) => (n, h, a) }
+        .toDF("name", "house", "acctbal")
+        .filter(col("name") <= "Customer#000000020" ||
+          col("name").startsWith("User#"))
+        .withColumn("rid_unique", lit(unique))
+        .withColumn("rid_keep_on_update", lit(keepOnUpdate))
+        .withColumn("rid_stable_rewrites", lit(stable))
+        .withColumn("rid_fresh_monotone", lit(freshMono))
+        .withColumn("rid_reinsert_new", lit(reinsertNew))
+        .orderBy("name")
+    }
+
+  /** Service-shape concurrency certificate (s48_concurrent_stability) —
+    * the reference is an interactive web app (Flask, app.py:449): a query
+    * service multiplexes many requests over one session, so "same query,
+    * same answer, under load" is a CORRECTNESS property, not a latency
+    * one. This entry runs the interactive class (flagship j1 scoring, j2
+    * 1-hop expansion, p3 ci-search) 3× each on 9 CONCURRENT driver
+    * threads against this session — Spark schedules the 9 jobs over the
+    * shared executor pool, the deployment shape whose latency
+    * BASELINE note 74 records — and certifies every
+    * concurrent response bit-identical to its serial reference on the
+    * hash channel (`all_stable`). The oracle-able rows are p3's own
+    * result replayed from the base relation. */
+  def txConcurrentStability(spark: SparkSession, sfDir: String): DataFrame = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val runs: Seq[() => DataFrame] = Seq(
+      () => winderTopK(spark, sfDir, graft.SparkEntry.WinderFriends),
+      () => expand1HopAny(spark, sfDir, 7),
+      () => searchCi(spark, sfDir, "#00000014"))
+    def fingerprint(df: DataFrame): Seq[String] =
+      df.collect().map(_.mkString("|")).sorted.toSeq
+    val serial = runs.map(r => fingerprint(r()))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(9)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val stable = try {
+      val futs = (0 until 9).map(i => Future(fingerprint(runs(i % 3)()) == serial(i % 3)))
+      Await.result(Future.sequence(futs), 5.minutes).forall(identity)
+    } finally pool.shutdown()
+    searchCi(spark, sfDir, "#00000014")
+      .withColumn("all_stable", lit(stable))
+      .orderBy("name")
+  }
+
+  /** Composite-key storage-partitioned join demo (s47_composite_spj) —
+    * the round-13 close of the SPJ caveat: Spark's SPJ machinery accepts
+    * only single-reference transforms, so 2-key TxTables serve their
+    * bucket id as the `_graft_bucket` METADATA column (a per-partition
+    * constant — each scan partition IS one bucket) and report
+    * identity(_graft_bucket) partitioning. A merge-key join that adds the
+    * implied `a._graft_bucket = b._graft_bucket` term plans
+    * with ZERO shuffle under v2 bucketing +
+    * requireAllClusterKeysForCoPartition=false (safe: the bucket column
+    * alone fully determines the partition). Three certificates ride the
+    * hash channel: `spj_plan` — the executed composite-key join holds no
+    * Exchange; `bucket_col_ok` — the metadata column is bit-exact with
+    * the write path's pmod(xxhash64(keys), n) on every row; and
+    * `bucket_pruned` — a pushed `_graft_bucket = 3` predicate shrinks the
+    * scan to exactly that bucket's rows (pruning without hashing: the
+    * column IS the partition id). At 100 TB this turns the composite
+    * merge-key fact-to-fact join from the plan's biggest exchange into a
+    * local zip, the same win s44 certifies for single keys.
+    *
+    * PRECONDITION for the added bucket-equality term: BOTH tables must
+    * have the SAME bucket count. Bucket is pmod(xxhash64(keys), n) — a
+    * pure function of the merge keys only for a fixed n; after a
+    * compact(newBuckets) rebuckets one side, equal merge keys land in
+    * DIFFERENT bucket ids and the term would silently drop matching
+    * rows. (The single-key path is immune: its transform's canonicalName
+    * carries n, so mismatched counts fall back to a shuffled plan.) The
+    * recipe below verifies `bucketCountAt` equality before adding the
+    * term, and any caller composing it by hand must do the same. */
+  def txCompositeSpj(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.catalogDemo(spark, "s47") { (cat, wh) =>
+      val base = protocolSlice(spark, sfDir)
+      // Independent twin creates, overlapped (guide §2.6); 4 buckets —
+      // the ≤203-row demo pays per-file commit cost (s64's measured
+      // rule), and every certificate below parameterizes on the count.
+      par2(
+        TxTable.create(spark, s"$wh/facts", base,
+          Seq("name", "house"), numBuckets = 4),
+        TxTable.create(spark, s"$wh/scores",
+          base.filter(col("name").endsWith("7"))
+            .select(col("name"), col("house"), (col("acctbal") * 2).as("score")),
+          Seq("name", "house"), numBuckets = 4))
+
+      Session.withConf(spark,
+          "spark.sql.sources.v2.bucketing.enabled" -> true,
+          "spark.sql.autoBroadcastJoinThreshold" -> -1,
+          "spark.sql.requireAllClusterKeysForCoPartition" -> false) {
+        // The bucket-equality term is only sound when both sides share one
+        // bucket count (see the precondition above) — verify, don't assume.
+        val keys = Seq("name", "house")
+        val nF = TxTable.open(spark, s"$wh/facts", keys).bucketCount
+        val nS = TxTable.open(spark, s"$wh/scores", keys).bucketCount
+        require(nF == nS,
+          s"composite-SPJ bucket term needs equal bucket counts, got $nF vs $nS")
+        val joined = spark.sql(
+          s"""SELECT f.name, f.house, f.acctbal, s.score
+             |FROM $cat.facts f JOIN $cat.scores s
+             |ON f.name = s.name AND f.house = s.house
+             |AND f._graft_bucket = s._graft_bucket""".stripMargin)
+        val spjPlan =
+          !joined.queryExecution.executedPlan.toString.contains("Exchange")
+
+        val bucketColOk = spark.sql(
+          s"SELECT name, house, _graft_bucket FROM $cat.facts")
+          .filter(col("_graft_bucket") =!=
+            pmod(xxhash64(col("name"), col("house")), lit(4)).cast("int"))
+          .count() == 0L
+
+        val scanned = scanRowsEmitted(
+          spark.sql(s"SELECT name FROM $cat.facts WHERE _graft_bucket = 3"))
+        val inBucket = base
+          .filter(pmod(xxhash64(col("name"), col("house")), lit(4)) === 3).count()
+        val bucketPruned = scanned == inBucket && scanned < base.count()
+
+        joined
+          .filter(col("name") <= "Customer#000000149")
+          .select(col("name"), col("house"),
+            round(col("acctbal") * 100).cast("long").as("acctbal_x100"),
+            round(col("score") * 100).cast("long").as("score_x100"),
+            lit(spjPlan).as("spj_plan"), lit(bucketColOk).as("bucket_col_ok"),
+            lit(bucketPruned).as("bucket_pruned"))
+          .orderBy("name")
+      }
+    }
+
+  /** Write-audit-publish demo — the WAP pattern on TxTable branches: the
+    * batch (last-digit-3 names flipped to 'STAGED') is MERGED ON A BRANCH,
+    * audited there, and only then fast-forwarded to main. Two certificates
+    * ride the hash channel: `staged_invisible` — main's snapshot had ZERO
+    * staged rows while the branch held them all (isolation), and
+    * `audited` — the branch-side audit query (no NULL houses, staged
+    * count == batch size) passed before publish. Branch creation and
+    * fast-forward are metadata-only (manifest re-points, shared data
+    * dirs), so at 100 TB the WAP cycle costs one copy-on-write batch
+    * write plus two small manifest files. Write-path class like s12. */
+  def txWap(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s29") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      val batch = base.filter(substring(col("name"), -1, 1) === "3")
+        .withColumn("house", lit("STAGED"))
+      val b = t.branch("audit")
+      b.merge(batch)
+      // Audit: staged rows visible on the branch, invisible on main.
+      val nBatch = batch.count()
+      val stagedInvisible =
+        t.snapshot().filter(col("house") === "STAGED").count() == 0L &&
+          b.snapshot().filter(col("house") === "STAGED").count() == nBatch
+      val audited =
+        b.snapshot().filter(col("house").isNull).count() == 0L && nBatch > 0L
+      val v = if (audited) t.fastForward("audit") else sys.error("audit failed")
+      t.snapshot()
+        .filter(col("name") <= "Customer#000000030")
+        .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"),
+          lit(v).as("v"), lit(stagedInvisible).as("staged_invisible"),
+          lit(audited).as("audited"))
+        .orderBy("name")
+    }
+
+  /** Predicate-UPDATE demo (s37) — the UPDATE ... SET ... WHERE verb on
+    * TxTable: a broad update (+100 to every BUILDING balance) rewrites
+    * the buckets holding matches; a POINT-predicate update (one name
+    * flagged) rewrites exactly ONE bucket — `untouched_ptrs` counts the
+    * bucket pointers that survived it byte-identically (7 of 8, the
+    * partial-rewrite proof); and a no-match update must publish NOTHING
+    * (asserted loudly — version unchanged). Write-path class like s12. */
+  def txUpdateWhere(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s37") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 8)
+      val v1 = t.update("house = 'BUILDING'", Map("acctbal" -> "acctbal + 100"))
+      val v2 = t.update("name = 'Customer#000000007'", Map("house" -> "'FLAGGED'"))
+      // Bounded metadata probe (8 manifest entries): how many bucket
+      // pointers the point update left untouched.
+      val preserved = t.dataPointers(v1).toSet
+        .intersect(t.dataPointers(v2).toSet).size
+      val v3 = t.update("house = 'NO_SUCH_HOUSE'", Map("acctbal" -> "0"))
+      require(v3 == v2, s"s37: no-match update must not publish ($v2 -> $v3)")
+      t.snapshot()
+        .filter(col("name") <= "Customer#000000030")
+        .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"),
+          lit(preserved.toLong).as("untouched_ptrs"),
+          lit(v3 == v2).as("noop_unpublished"))
+        .orderBy("name")
+    }
+
+  /** Predicate-DELETE demo (s61_delete_where) — the remaining DML verb
+    * after s37's UPDATE: `deleteWhere(predicate)` removes every matching
+    * row via the same scan-then-rewrite-touched-buckets-only shape. The
+    * entry certifies the protocol, all on the hash channel:
+    * `untouched_ptrs` (a point delete rewrites ONE bucket — 7 of 8
+    * pointers carry forward), `cdc_delete_exact` (the CDC diff across
+    * the class delete is ONLY deletes and its count equals the snapshot
+    * delta — a delete can never surface as an update or insert),
+    * `noop_unpublished` (a no-match predicate publishes nothing), and
+    * `check_active` (CHECK constraints survive the deletes untouched —
+    * a violating merge is still refused afterward; the deletes
+    * themselves never re-validate, since they introduce no rows).
+    * Write-path class like s37; the lost-publish retry carries the same
+    * read-set predicate guard (write-skew — ConcurrencySpec). */
+  def txDeleteWhere(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s61") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 8)
+      t.addCheck("house_known", "house IS NOT NULL")
+      // POINT delete: one key, one bucket rewritten — bounded metadata
+      // probe (8 manifest entries) counts the carried-forward pointers.
+      val v1 = t.deleteWhere("name = 'Customer#000000019'")
+      val preserved = t.dataPointers(0L).toSet
+        .intersect(t.dataPointers(v1).toSet).size
+      // CLASS delete: every BUILDING row in one copy-on-write commit.
+      val v2 = t.deleteWhere("house = 'BUILDING'")
+      val d = t.diff(v1, v2).localCheckpoint()
+      val cdcExact =
+        d.filter(col("change_type") =!= "delete").isEmpty &&
+          d.count() == t.snapshotAt(v1).count() - t.snapshotAt(v2).count()
+      // No-match predicate: metadata no-op, version unchanged.
+      val v3 = t.deleteWhere("house = 'NO_SUCH_HOUSE'")
+      // Constraints still enforced after the deletes: a violating merge
+      // (NULL house) is refused before anything publishes.
+      val checkActive = scala.util.Try(t.merge(
+        t.snapshot().limit(1).withColumn("house", lit(null: String)))).isFailure
+      t.snapshot()
+        .filter(col("name") <= "Customer#000000030")
+        .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"),
+          lit(preserved.toLong).as("untouched_ptrs"),
+          lit(cdcExact).as("cdc_delete_exact"),
+          lit(v3 == v2).as("noop_unpublished"),
+          lit(checkActive).as("check_active"))
+        .orderBy("name")
+    }
+
+  /** SQL-DML DELETE demo (s64_sql_delete) — `DELETE FROM <cat>.<t>
+    * WHERE …` issued as SQL through the GraftCatalog reaches the same
+    * predicate-DML verb s61 certifies: [[graft.sources.GraftTable]]
+    * implements `SupportsDelete`, translating the analyzer's pushed
+    * source filters back to a predicate ([[graft.sources
+    * .GraftDataSource.filterToSql]] — lossless literal rendering only)
+    * and committing through `TxTable.deleteWhere`'s copy-on-write
+    * write-skew-guarded protocol. Certificates on the hash channel:
+    * `native_parity` (the SQL delete's snapshot is row-identical to the
+    * native verb's on a twin table), `cdc_delete_exact` (the SQL-issued
+    * commit's CDC diff is ONLY deletes and matches the snapshot delta),
+    * `untranslatable_refused` (a predicate that cannot render to source
+    * filters — `length(name) > 3` — raises Spark's analysis error and
+    * publishes NOTHING), `truncate_empty` (`DELETE FROM t` with no
+    * WHERE arrives as AlwaysTrue and empties the table). Lifecycle
+    * class like s44 (catalog) + s61 (delete). */
+  def txSqlDelete(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.catalogDemo(spark, "s64") { (cat, wh) =>
+      val base = protocolSlice(spark, sfDir)
+      // 4 buckets: a ≤203-row demo pays per-file create cost, not scan
+      // cost — halving the files halves the three commits' wall time
+      // without touching what the certificates prove. The twin tables are
+      // independent: overlap their creates, and the SQL-vs-native delete
+      // pair, from two driver threads (guide §2.6).
+      val (t, twin) = par2(
+        TxTable.create(spark, s"$wh/facts", base,
+          Seq("name"), numBuckets = 4),
+        TxTable.create(spark, s"$wh/twin", base,
+          Seq("name"), numBuckets = 4))
+      val v0 = t.version
+      val predSql = "house = 'BUILDING' OR name = 'Customer#000000019'"
+      par2(
+        spark.sql(s"DELETE FROM $cat.facts WHERE $predSql"),
+        twin.deleteWhere(predSql))
+      val v1 = t.version
+      // Distributed order-independent parity (sameRows): one narrow
+      // aggregate per side, overlapped — replaces two serial exceptAll
+      // shuffle jobs.
+      val parity = sameRows(t.snapshot(), twin.snapshot())
+      val d = t.diff(v0, v1).localCheckpoint()
+      val cdcExact =
+        d.filter(col("change_type") =!= "delete").isEmpty &&
+          d.count() == t.snapshotAt(v0).count() - t.snapshotAt(v1).count()
+      // Untranslatable predicate: SupportsDelete.canDeleteWhere refuses
+      // (no source-filter rendering for length()), Spark raises its
+      // standard analysis error, and no version publishes.
+      val refused = scala.util.Try(
+        spark.sql(s"DELETE FROM $cat.facts WHERE length(name) > 3")).isFailure &&
+        t.version == v1
+      // Truncation: WHERE-less DELETE arrives as AlwaysTrue.
+      spark.sql(s"DELETE FROM $cat.twin")
+      val truncated = twin.snapshot().count() == 0
+      t.snapshot()
+        .filter(col("name") <= "Customer#000000030")
+        .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"),
+          lit(parity).as("native_parity"),
+          lit(cdcExact).as("cdc_delete_exact"),
+          lit(refused).as("untranslatable_refused"),
+          lit(truncated).as("truncate_empty"))
+        .orderBy("name")
+    }
+
+  /** SQL-DML WRITE demo (s67_sql_insert) — the write half of the SQL
+    * surface s64's DELETE opened: `INSERT INTO <cat>.<t>` (and
+    * `DataFrameWriterV2.append`) reaches the keyed MERGE through the
+    * DSv2 V1 write bridge — on a keyed table an append IS an upsert:
+    * matched keys replace, new keys insert, read-your-writes — and
+    * `INSERT OVERWRITE` replaces the entire content in ONE atomic
+    * commit ([[TxTable.overwriteAll]]; no delete+append
+    * two-version window) with time travel to pre-overwrite versions
+    * intact. Certificates on the hash channel: `ins_upsert_parity`
+    * (SQL-inserted state row-identical to the native merge on a twin,
+    * through BOTH the SQL and DataFrameWriterV2 hops), `ins_one_version
+    * _no_dup` (each append publishes exactly one version and a
+    * re-inserted key never duplicates), `ov_atomic_replace` (the
+    * overwrite is one commit and the snapshot is exactly the
+    * replacement), `ov_time_travel_intact` (the pre-overwrite version
+    * still reads complete). Lifecycle class like s64. */
+  def txSqlInsert(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.catalogDemo(spark, "s67") { (cat, wh) =>
+      import spark.implicits._
+      val base = protocolSlice(spark, sfDir)
+      // Twin tables are independent: overlap the creates and each
+      // SQL-vs-native commit pair from two driver threads (guide §2.6).
+      val (t, twin) = par2(
+        TxTable.create(spark, s"$wh/facts", base,
+          Seq("name"), numBuckets = 4),
+        TxTable.create(spark, s"$wh/twin", base,
+          Seq("name"), numBuckets = 4))
+      val v0 = t.version
+      // SQL hop: one matched key (updates in place) + one new key.
+      val sqlBatch = Seq(
+        ("Customer#000000003", "SQLHOUSE", 1.5),
+        ("User#000000001", "SQLHOUSE", 9.0)).toDF("name", "house", "acctbal")
+      par2(
+        spark.sql(s"INSERT INTO $cat.facts VALUES " +
+          "('Customer#000000003', 'SQLHOUSE', 1.5), " +
+          "('User#000000001', 'SQLHOUSE', 9.0)"),
+        twin.merge(sqlBatch))
+      val vSql = t.version
+      // DataFrameWriterV2 hop: the programmatic append, same verb.
+      val dfv2Batch = Seq(("User#000000002", "DFV2", 7.0))
+        .toDF("name", "house", "acctbal")
+      par2(
+        dfv2Batch.writeTo(s"$cat.facts").append(),
+        twin.merge(dfv2Batch))
+      val upsertParity = sameRows(t.snapshot(), twin.snapshot())
+      val names = t.snapshot().select("name").as[String].collect()
+      val oneVersionNoDup = vSql == v0 + 1 && t.version == v0 + 2 &&
+        names.length == names.distinct.length
+      // Atomic full replacement, history intact.
+      val preCount = t.snapshot().count()
+      spark.sql(s"INSERT OVERWRITE $cat.facts VALUES " +
+        "('Customer#000000003', 'KEPT', 2.0), " +
+        "('User#000000009', 'FRESH', 4.0), " +
+        "('User#000000010', 'FRESH', 6.0)")
+      val ovAtomic = t.version == vSql + 2 && t.snapshot().count() == 3
+      val ttIntact = t.snapshotAt(vSql + 1).count() == preCount
+
+      t.snapshot()
+        .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"),
+          lit(upsertParity).as("ins_upsert_parity"),
+          lit(oneVersionNoDup).as("ins_one_version_no_dup"),
+          lit(ovAtomic).as("ov_atomic_replace"),
+          lit(ttIntact).as("ov_time_travel_intact"))
+        .orderBy("name")
+    }
+
+  /** SQL UPDATE / MERGE INTO demo (s68_sql_update_merge) — the last two
+    * SQL-DML verbs, through Spark's GROUP-based row-level-operation
+    * contract with the storage BUCKET as the replacement group (see
+    * [[graft.sources.GraftRowLevelOperation]]): Spark's runtime group
+    * filter narrows the rewrite to the buckets holding matched rows
+    * (the same `_graft_bucket` runtime-filter channel join pruning
+    * uses), the replacement content writes DISTRIBUTED per-bucket
+    * parquet through the engine's own bucket hash, and commit is one
+    * manifest swap with every untouched bucket's pointer carried
+    * forward. Certificates on the hash channel: `upd_parity` (the SQL
+    * UPDATE's state is row-identical to the native `update` verb on a
+    * twin), `upd_untouched_ptrs` (a point UPDATE re-points exactly ONE
+    * of 4 buckets — the group filter is real), `merge_parity` (a
+    * three-clause SQL MERGE — conditional DELETE, UPDATE SET *, INSERT
+    * * — is row-identical to the native `mergeClauses` verb on the
+    * twin), `tt_intact` (every pre-DML version still reads complete).
+    * Lifecycle class like s64/s67. */
+  def txSqlUpdateMerge(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.catalogDemo(spark, "s68") { (cat, wh) =>
+      import spark.implicits._
+      val base = protocolSlice(spark, sfDir)
+      // Twin tables are independent: overlap the creates and each
+      // SQL-vs-native commit pair from two driver threads (guide §2.6).
+      val (t, twin) = par2(
+        TxTable.create(spark, s"$wh/facts", base,
+          Seq("name"), numBuckets = 4),
+        TxTable.create(spark, s"$wh/twin", base,
+          Seq("name"), numBuckets = 4))
+      val v0 = t.version
+      // Point UPDATE: the group filter must confine the rewrite to the
+      // one bucket the key hashes into.
+      par2(
+        spark.sql(s"UPDATE $cat.facts SET acctbal = acctbal + 100 " +
+          "WHERE name = 'Customer#000000019'"),
+        twin.update("name = 'Customer#000000019'",
+          Map("acctbal" -> "acctbal + 100")))
+      val updParity = sameRows(t.snapshot(), twin.snapshot())
+      val untouched = t.dataPointers(v0).toSet
+        .intersect(t.dataPointers(t.version).toSet).size
+      val vUpd = t.version
+      // Three-clause MERGE: conditional DELETE, UPDATE SET *, INSERT *.
+      val src = Seq(
+        ("Customer#000000005", "DELETE_ME", 0.0),
+        ("Customer#000000003", "MERGED", 50.0),
+        ("User#000000042", "MERGED", 60.0)).toDF("name", "house", "acctbal")
+      src.createOrReplaceTempView(s"src_$cat")
+      par2(
+        spark.sql(
+          s"""MERGE INTO $cat.facts t USING src_$cat s ON t.name = s.name
+             |WHEN MATCHED AND s.house = 'DELETE_ME' THEN DELETE
+             |WHEN MATCHED THEN UPDATE SET *
+             |WHEN NOT MATCHED THEN INSERT *""".stripMargin),
+        twin.mergeClauses(src, updateWhen = "true",
+          deleteWhen = "new_house = 'DELETE_ME'", insertWhen = "true"))
+      val mergeParity = sameRows(t.snapshot(), twin.snapshot())
+      val ttIntact = t.snapshotAt(v0).count() == base.count() &&
+        t.snapshotAt(vUpd)
+          .filter(col("name") === "Customer#000000005").count() == 1
+
+      t.snapshot()
+        .filter(col("name") <= "Customer#000000030" ||
+          col("name").startsWith("User#"))
+        .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"),
+          lit(updParity).as("upd_parity"),
+          lit(untouched == 3).as("upd_untouched_ptrs"),
+          lit(mergeParity).as("merge_parity"),
+          lit(ttIntact).as("tt_intact"))
+        .orderBy("name")
+    }
+
+  /** Shallow-clone demo (s36) — Delta's zero-copy CLONE on TxTable: the
+    * clone's v0 manifest points at the SOURCE's data files via absolute
+    * pointers (zero bytes copied — its data dir is verifiably empty at
+    * clone time), yet it is a fully independent table: a merge flips
+    * digit-5 names to CLONED inside the clone's OWN data dir, and the
+    * in-plan `src_drift` count certifies the source still equals its base
+    * exactly (any copied-on-write leak into the source flips it, and the
+    * dumped parquet shows by how many rows). The dev/test-against-
+    * production-data primitive: at 100 TB the clone costs one manifest
+    * file. Write-path class like s12. */
+  def txClone(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s36") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      val src = TxTable.create(spark, dir + "/src", base, Seq("name"), numBuckets = 4)
+      val clone = src.shallowClone(dir + "/clone")
+      // FS-metadata probe, not a data job: the zero-copy claim IS that
+      // this directory has no children at clone time.
+      val zeroCopied = {
+        val s = java.nio.file.Files.list(
+          java.nio.file.Paths.get(dir, "clone", "data"))
+        try !s.iterator().hasNext finally s.close()
+      }
+      clone.merge(base.filter(substring(col("name"), -1, 1) === "5")
+        .withColumn("house", lit("CLONED")))
+      // In-plan source-intact certificate: symmetric difference between
+      // the source head and its base, counted once, broadcast onto the
+      // output rows (the s31 pattern).
+      val srcDrift = broadcast(
+        src.snapshot().exceptAll(base)
+          .unionByName(base.exceptAll(src.snapshot()))
+          .agg(count(lit(1)).as("src_drift")))
+      clone.snapshot()
+        .filter(col("name") <= "Customer#000000030")
+        .crossJoin(srcDrift)
+        .select(col("name"), col("house"),
+          round(col("acctbal"), 2).as("acctbal"),
+          (col("src_drift") === 0L).as("source_intact"),
+          lit(zeroCopied).as("zero_copied"), col("src_drift"))
+        .orderBy("name")
+    }
+
+  /** DESCRIBE HISTORY demo — the audit surface over a five-commit life:
+    * create → merge → merge-on-read delete → compact → restore. Each
+    * version's row reports the `#op=` label its manifest recorded, the
+    * layout in effect, the schema width, and the version's visible row
+    * count (a `snapshotAt` per version — bounded by history length, and
+    * each is a manifest-pruned read). The oracle derives every row count
+    * from the base table, so the hash certifies the whole lifecycle:
+    * the MoR delete really removed the keys, compact preserved state
+    * exactly, and restore brought the pre-delete rows back. The history
+    * is a build-once frozen artifact (s15/s17 treatment) — the entry
+    * measures the audit READ, not the write path. */
+  def txHistory(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark) { _ =>
+      // BUILD-ONCE demo history (the s15/s17 treatment): the five-commit
+      // lifecycle runs exactly once per sf and freezes under an Artifacts
+      // key; every subsequent invocation measures what DESCRIBE HISTORY
+      // actually costs — one log listing plus five manifest-pruned version
+      // counts — not the write path (s12 and the property specs keep the
+      // full create→commit lifecycle covered end-to-end).
+      val dir = Artifacts.frozen(sfDir, "tx_demo_s30") { d =>
+        val base = protocolSlice(spark, sfDir)
+        val t = TxTable.create(spark, d, base, Seq("name"), numBuckets = 8)
+        t.merge(base.filter(substring(col("name"), -1, 1) === "1")
+          .withColumn("house", lit("MERGED1")))
+        t.deleteMergeOnRead(base.filter(substring(col("name"), -1, 1) === "2"))
+        t.compact()
+        t.restore(1L)
+      }
+      val t = TxTable.open(spark, dir, Seq("name"), numBuckets = 8)
+      val hist = t.history()
+        .select("version", "op", "n_buckets", "n_cols")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getInt(3)))
+      // ONE job counts every version: union the tagged snapshots and
+      // aggregate, instead of a count job per version (the per-job
+      // scheduling floor dominates these metadata demos, not data size).
+      val counts = hist.map { case (v, _, _, _) =>
+        t.snapshotAt(v).select(lit(v).as("version")) }
+        .reduce(_ unionByName _)
+        .groupBy("version").agg(count(lit(1)).as("n_rows"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val rows = hist.toSeq.map { case (v, op, nb, nc) =>
+        (v, op, nb, nc, counts.getOrElse(v, 0L))
+      }
+      spark.createDataFrame(rows)
+        .toDF("version", "op", "n_buckets", "n_cols", "n_rows")
+        .orderBy("version")
+    }
+
+  /** Multi-table atomic transaction demo — a "transfer" that must touch
+    * two tables (balances += 1000, audit marks TRANSFERRED) lands as ONE
+    * catalog commit. Certificates riding the hash channel: `no_torn_read`
+    * — after BOTH table logs had already committed their new versions, a
+    * reader resolving through the still-current catalog version saw the
+    * OLD state of BOTH tables (the interleaving where single-table
+    * atomicity shows a torn half-transfer is exactly what the catalog
+    * closes); `consistent_new` — through the new catalog version, the set
+    * of credited names equals the set of audited names. Write-path class
+    * like s12. */
+  def catalogTxn(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s31") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      // Two INDEPENDENT tables: overlap their creates, and then their
+      // merges, from two driver threads (guide §2.6) — each pair costs
+      // ~max instead of ~sum of two short commit jobs. 4 buckets: the
+      // ≤203-row demo pays per-file create cost, not scan cost (s64's
+      // measured rule).
+      val (bal, aud) = par2(
+        TxTable.create(spark, dir + "/bal",
+          base.select("name", "acctbal"), Seq("name"), numBuckets = 4),
+        TxTable.create(spark, dir + "/aud",
+          base.select("name", "house"), Seq("name"), numBuckets = 4))
+      val cat = TxCatalog.create(spark, dir,
+        Map("bal" -> 0L, "aud" -> 0L))
+      val who = base.filter(substring(col("name"), -1, 1) === "4")
+      // The transaction: both tables commit locally first...
+      val (vA, vB) = par2(
+        bal.merge(who.select(col("name"),
+          (col("acctbal") + lit(1000)).as("acctbal"))),
+        aud.merge(who.select(col("name"),
+          lit("TRANSFERRED").as("house"))))
+      // ...and the catalog still serves the OLD world of both.
+      val pre = cat.refsHead
+      val cv = cat.commit(Map("bal" -> vA, "aud" -> vB))
+      // Single-writer lifecycle: the catalog starts at v0 and this is its
+      // only commit, so any other version number means the protocol
+      // retried/drifted — fail LOUDLY (a driver `err` cell names the
+      // cause) instead of letting a drifted cat_v surface as an opaque
+      // hash mismatch.
+      require(cv == 1L, s"s31: catalog version drifted (expected 1, got $cv)")
+      val post = cat.refs(cv)
+      val b = bal.snapshotAt(post("bal"))
+      val a = aud.snapshotAt(post("aud"))
+      // Torn-read violations: old-bal rows not in the base unioned with
+      // old-aud TRANSFERRED rows — any surviving name falsifies the
+      // certificate. Derived IN-PLAN below (not a driver-side .isEmpty
+      // job), so the certificate is evaluated once, inside the same job
+      // that produces the output rows.
+      val tornViolations =
+        bal.snapshotAt(pre("bal"))
+          .exceptAll(base.select("name", "acctbal")).select(col("name"))
+          .unionByName(aud.snapshotAt(pre("aud"))
+            .filter(col("house") === "TRANSFERRED").select(col("name")))
+      // New-world consistency violations: tagged union grouped by name —
+      // a name missing from either the credited set or the audited set
+      // sums to the wrong tag total.
+      val consViolations = a.filter(col("house") === "TRANSFERRED")
+        .select(col("name"), lit(1).as("t"))
+        .unionByName(who.select(col("name"), lit(2).as("t")))
+        .groupBy("name").agg(sum(col("t")).as("ts"))
+        .filter(col("ts") =!= 3).select(col("name"))
+      // 1-row global violation counts, broadcast onto every output row:
+      // the booleans derive from them IN-PLAN, and the counts themselves
+      // ride along as columns — a future driver miss shows in the dumped
+      // parquet exactly WHICH certificate diverged and by how many rows,
+      // instead of an opaque lit(boolean) flip.
+      val tornCnt = broadcast(
+        tornViolations.agg(count(lit(1)).as("torn_hits")))
+      val consCnt = broadcast(
+        consViolations.agg(count(lit(1)).as("incons_hits")))
+      // Money rides the hash channel as BIGINT cents (the s22/s24 idiom):
+      // acctbal here is ARITHMETIC-DERIVED (+1000 on a physical double),
+      // and the round-4 lesson (BASELINE.md note 7) is that derived
+      // DECIMAL casts are driver-hash-hostile even when bit-identical.
+      val rows = b.join(a, "name")
+        .filter(col("name") <= "Customer#000000030")
+        .crossJoin(tornCnt).crossJoin(consCnt)
+        .select(col("name"),
+          round(col("acctbal") * 100).cast("long").as("acctbal_x100"),
+          col("house"), lit(cv).as("cat_v"),
+          (col("torn_hits") === 0L).as("no_torn_read"),
+          (col("incons_hits") === 0L).as("consistent_new"),
+          col("torn_hits"), col("incons_hits"))
+        .orderBy("name")
+      val out = rows.localCheckpoint()
+      requireCleanCerts(out, "s31")
+    }
+
+  /** Belt-and-braces certificate gate: a genuine protocol divergence must
+    * surface as driver-visible `err` TEXT naming the counts, never an
+    * opaque hash miss nobody can read the dumped parquet for. Input is
+    * already materialized (pinned) — this probe is a bounded local
+    * read. Factored out so the forced-violation path is spec-testable. */
+  private[graft] def requireCleanCerts(out: DataFrame, tag: String): DataFrame = {
+    val probe = out.agg(
+      coalesce(max(col("torn_hits")), lit(0L)),
+      coalesce(max(col("incons_hits")), lit(0L))).head()
+    require(probe.getLong(0) == 0L && probe.getLong(1) == 0L,
+      s"$tag: certificate violation torn=${probe.getLong(0)} incons=${probe.getLong(1)}")
+    out
+  }
+
+  /** Incremental-OPTIMIZE demo: after a MoR delete (DV'd buckets) and a
+    * merge (whose bucket-aligned write leaves its buckets single-file),
+    * `compactPartial` rewrites ONLY the degraded buckets — three
+    * certificates ride the hash: `healthy_untouched` (every bucket that
+    * was clean and single-file keeps its exact manifest pointer),
+    * `dvs_folded` (no deletion vector survives anywhere), and
+    * `converged` (a second compactPartial is a version-preserving
+    * no-op). The final rows prove the selective rewrite lost nothing.
+    * Write-path class like s12. */
+  def txPartialCompact(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s32") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      t.compact() // baseline: every bucket clean and single-file
+      val v1 = t.deleteMergeOnRead(
+        base.filter(substring(col("name"), -1, 1) === "5"))
+      val v2 = t.merge(base.filter(substring(col("name"), -1, 1) === "6")
+        .withColumn("house", lit("MERGED6")))
+      val p2 = t.dataPointers(v2)
+      val degraded = t.dvPointers(v2).filter(_._2.nonEmpty).keySet ++
+        p2.keySet.filter(b => t.dataPointers(v1).get(b) != p2.get(b))
+      val v3 = t.compactPartial()
+      val p3 = t.dataPointers(v3)
+      val healthyUntouched = p2.keySet.filterNot(degraded.contains)
+        .forall(b => p3.get(b) == p2.get(b))
+      val dvsFolded = t.dvPointers(v3).forall(_._2.isEmpty)
+      val converged = t.compactPartial() == v3
+      t.snapshot()
+        .filter(col("name") <= "Customer#000000030")
+        .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"),
+          lit(healthyUntouched).as("healthy_untouched"),
+          lit(dvsFolded).as("dvs_folded"), lit(converged).as("converged"))
+        .orderBy("name")
+    }
+
+  /** DROP COLUMN demo (s34): create → drop acctbal (metadata-only —
+    * `pointers_unchanged` certifies zero data movement) → merge on the
+    * narrowed schema still works → time travel to v0 still serves the
+    * dropped column from the untouched files (`v0_has_acctbal`). The
+    * head output simply has no acctbal column, which the hash enforces
+    * structurally (schema is part of the compare). Write-path class. */
+  def txDropColumn(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s34") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      val vd = t.dropColumn("acctbal")
+      val pointersUnchanged = t.dataPointers(0L) == t.dataPointers(vd)
+      t.merge(base.filter(substring(col("name"), -1, 1) === "7")
+        .select(col("name"), lit("MERGED7").as("house")))
+      val v0HasAcctbal = t.snapshotAt(0L).columns.contains("acctbal") &&
+        !t.snapshot().columns.contains("acctbal")
+      t.snapshot()
+        .filter(col("name") <= "Customer#000000030")
+        .select(col("name"), col("house"),
+          lit(pointersUnchanged).as("pointers_unchanged"),
+          lit(v0HasAcctbal).as("v0_has_acctbal"))
+        .orderBy("name")
+    }
+
+  /** ADD COLUMN ... DEFAULT demo (s38): the widening DDL counterpart of
+    * s34 — `addColumn("tier", ..., "'standard'")` publishes a manifest
+    * that re-points NOTHING (`pointers_unchanged` certifies zero data
+    * movement on what would be a 100 TB rewrite elsewhere), pre-add rows
+    * serve the default at read time, one merge batch CARRIES the column
+    * (explicit value wins: %9 → premium), one OMITS it (the write-default
+    * fills: %4 rows get 'standard' alongside their new house), and time
+    * travel to v0 still has no tier column (`v0_no_tier`; the head schema
+    * carrying it is hash-enforced structurally). Write-path class. */
+  def txAddColumn(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s38") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      val va = t.addColumn("tier", "STRING", "'standard'")
+      val pointersUnchanged = t.dataPointers(0L) == t.dataPointers(va)
+      t.merge(base.filter(substring(col("name"), -1, 1) === "9")
+        .withColumn("tier", lit("premium")))
+      t.merge(base.filter(substring(col("name"), -1, 1) === "4")
+        .withColumn("house", lit("MERGED4")))
+      val v0NoTier = !t.snapshotAt(0L).columns.contains("tier") &&
+        t.snapshot().columns.contains("tier")
+      t.snapshot()
+        .filter(col("name") <= "Customer#000000030")
+        .select(col("name"), col("house"), col("tier"),
+          round(col("acctbal"), 2).as("acctbal"),
+          lit(pointersUnchanged).as("pointers_unchanged"),
+          lit(v0NoTier).as("v0_no_tier"))
+        .orderBy("name")
+    }
+
+  /** RENAME COLUMN demo (s39): the third metadata-only DDL verb,
+    * completing the s34/s38 triad. `renameColumn("house", "segment")`
+    * publishes a manifest that re-points NOTHING (`pointers_unchanged` —
+    * on 100 TB the rename is two small log files), pre-rename files serve
+    * their stored values under the NEW name through the recorded alias
+    * (column-mapping read), one post-rename merge batch writes the new
+    * name physically (rows %7 → RENAMED7), an explicit NULL written
+    * post-rename STAYS NULL (`null_stays_null` — the coalesce across
+    * name variants must not resurrect pre-rename values), and time travel
+    * to v0 still serves the OLD name (`v0_has_house`). Write-path class. */
+  def txRenameColumn(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s39") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      val vr = t.renameColumn("house", "segment")
+      val pointersUnchanged = t.dataPointers(0L) == t.dataPointers(vr)
+      t.merge(base.filter(substring(col("name"), -1, 1) === "7")
+        .withColumnRenamed("house", "segment")
+        .withColumn("segment", lit("RENAMED7")))
+      t.merge(base.filter(col("name") === "Customer#000000013")
+        .withColumnRenamed("house", "segment")
+        .withColumn("segment", lit(null).cast("string")))
+      val head = t.snapshot().localCheckpoint()
+      val nullStaysNull = head
+        .filter(col("name") === "Customer#000000013" && col("segment").isNull)
+        .count() == 1L
+      val v0 = t.snapshotAt(0L)
+      val v0HasHouse = v0.columns.contains("house") && !v0.columns.contains("segment")
+      head
+        .filter(col("name") <= "Customer#000000030")
+        .select(col("name"), col("segment"),
+          round(col("acctbal"), 2).as("acctbal"),
+          lit(pointersUnchanged).as("pointers_unchanged"),
+          lit(nullStaysNull).as("null_stays_null"),
+          lit(v0HasHouse).as("v0_has_house"))
+        .orderBy("name")
+    }
+
+  /** Full-grammar MERGE demo (s35): one `mergeClauses` call exercises all
+    * three conditional clauses — matched rows with negative balance are
+    * DELETED, the rest of the matched set UPDATED (house := M8), and of
+    * the two unmatched User rows only the positive-balance one clears
+    * the INSERT condition. The final snapshot is a pure function of the
+    * base, so the hash certifies the whole clause algebra at once.
+    * Write-path class like s12. */
+  def txMergeClauses(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s35") { case Seq(dir) =>
+      val base = protocolSlice(spark, sfDir)
+      val t = TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
+      val abType = base.schema("acctbal").dataType
+      val users = spark.createDataFrame(Seq(
+          ("User#000000001", "NEW", 50.0), ("User#000000002", "NEW", -5.0)))
+        .toDF("name", "house", "acctbal")
+        .select(col("name"), col("house"), col("acctbal").cast(abType))
+      val batch = base.filter(substring(col("name"), -1, 1) === "8")
+        .withColumn("house", lit("M8"))
+        .unionByName(users)
+      t.mergeClauses(batch,
+        updateWhen = "acctbal >= 0", deleteWhen = "acctbal < 0",
+        insertWhen = "acctbal > 0")
+      t.snapshot()
+        .filter(col("name") <= "Customer#000000030" || col("name").startsWith("User#"))
+        .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"))
+        .orderBy("name")
+    }
+
+  /** The frozen demo histories s15, s17 and s19 read from (s33 and s18
+    * read s15's and s17's). Unlike s12 (which measures the WRITE path and
+    * must mutate per invocation), the time-travel and CDC reads probe an
+    * immutable committed history — so construction is build-once ETL
+    * (an `Artifacts.frozen` directory), exactly like the ANN indexes, and
+    * the registered queries measure only the read path: a bucket listing
+    * + pruned scan per snapshot. `history` names the demo log: s15 two
+    * merges, s17 a merge then a delete, s19 a widening merge. */
+  private def demoTxTable(spark: SparkSession, sfDir: String,
+                          history: String): graft.core.TxTable = {
+    def batch(rows: (String, String, Double)*) =
+      spark.createDataFrame(rows).toDF("name", "house", "acctbal")
+    val dir = Artifacts.frozen(sfDir, s"tx_demo_$history") { d =>
+      val base = Graph.nodes(spark, sfDir).select("name", "house", "acctbal")
+      val t = TxTable.create(spark, d, base, Seq("name"))
+      history match {
+        case "s15" =>
+          t.merge(batch(("Customer#000000003", "BUILDING", 0.0),
+            ("User#000000001", "BUILDING", 10.0)))
+          t.merge(batch(("Customer#000000003", "MACHINERY", 99.5),
+            ("User#000000002", "AUTOMOBILE", 20.0)))
+        case "s17" =>
+          t.merge(batch(("Customer#000000003", "BUILDING", 0.0),
+            ("User#000000001", "BUILDING", 10.0)))
+          t.delete(spark.createDataFrame(Seq(Tuple1("Customer#000000005"))).toDF("name"))
+        case "s19" =>
+          t.merge(spark.createDataFrame(Seq(
+            ("Customer#000000003", "BUILDING", 0.0, "gold"),
+            ("User#000000001", "BUILDING", 10.0, "silver")))
+            .toDF("name", "house", "acctbal", "tier"))
+      }
+    }
+    TxTable.open(spark, dir, Seq("name"))
+  }
+
+  /** SQL surface over time travel (s33): the frozen s15 history's v0 and
+    * head snapshots registered as TEMP VIEWS and diffed in PLAIN SQL — a
+    * full-outer join classifying insert/update/unchanged per key. The
+    * point: the lakehouse layer composes with the SQL entry point (any
+    * BI tool speaking SQL can diff versions); the classification logic
+    * lives in the query, not the engine, and the oracle derives the
+    * same states from the base table and the known demo batches. Reads
+    * the build-once artifact — measures two pruned snapshot reads plus
+    * one small join. */
+  def sqlTimeTravel(spark: SparkSession, sfDir: String): DataFrame = {
+    val t = demoTxTable(spark, sfDir, "s15")
+    t.snapshotAt(0L).createOrReplaceTempView("tt_v0")
+    t.snapshotAt(2L).createOrReplaceTempView("tt_head")
+    spark.sql(
+      """SELECT coalesce(o.name, h.name) AS name,
+        |  o.house AS house_v0, h.house AS house_head,
+        |  CASE WHEN o.name IS NULL THEN 'insert'
+        |       WHEN o.house <> h.house OR o.acctbal <> h.acctbal THEN 'update'
+        |       ELSE 'unchanged' END AS change
+        |FROM tt_v0 o FULL OUTER JOIN tt_head h ON o.name = h.name
+        |WHERE coalesce(o.name, h.name) <= 'Customer#000000030'
+        |   OR coalesce(o.name, h.name) LIKE 'User#%'
+        |ORDER BY name""".stripMargin)
+  }
+
+  /** Time travel over the transactional table: the same MERGE path as s12,
+    * but the probe reads EVERY committed version (`snapshotAt`) — create
+    * (v0), first merge (v1), second merge overwriting the first (v2) — and
+    * returns the union tagged by version. Proves the copy-on-write log
+    * reconstructs historical states exactly: v0 has no User rows, v1 shows
+    * the first upsert, v2 shows the second winning (Delta/Iceberg
+    * `VERSION AS OF` semantics; retention is `vacuum`'s trade, tested in
+    * PropertySpec). Snapshots differ only in pruned bucket DIRECTORIES, so
+    * each read costs one bucket listing, not a log replay — and the demo
+    * history is a build-once artifact, so that listing is what this entry
+    * measures (the create→merge→commit write path stays covered end-to-end
+    * by s12 and the TxTable property spec). */
+  def timeTravel(spark: SparkSession, sfDir: String): DataFrame = {
+    val t = demoTxTable(spark, sfDir, "s15")
+    val probe = Seq("Customer#000000003", "User#000000001", "User#000000002")
+    (0L to 2L).map { v =>
+      t.snapshotAt(v).filter(col("name").isin(probe: _*))
+        .select(lit(v).as("v"), col("name"), col("house"),
+          round(col("acctbal"), 2).as("acctbal"))
+    }.reduce(_ unionAll _).orderBy("v", "name")
+  }
+
+  /** CDC diff over the transactional table (s17): create → merge (one
+    * update + one insert) → delete, then read the ROW-LEVEL changes
+    * between version 0 and the head as insert/update/delete with old and
+    * new values. The scan is manifest-pruned to re-pointed buckets only
+    * (TxTable.diff) — the change-data-capture read every downstream
+    * incremental consumer (sync, index refresh, cache invalidation)
+    * needs, at O(changed buckets) cost. */
+  def cdcDiff(spark: SparkSession, sfDir: String): DataFrame = {
+    val t = demoTxTable(spark, sfDir, "s17")
+    t.diff(0L, 2L)
+      .select(col("change_type"), col("name"),
+        col("old_house"), col("new_house"),
+        round(col("old_acctbal"), 2).as("old_acctbal"),
+        round(col("new_acctbal"), 2).as("new_acctbal"))
+      .orderBy("name")
+  }
+
+  /** Transactional widening MERGE (s19): the schema-drift reality s16
+    * demonstrates for plain parquet, on the TRANSACTIONAL table — a merge
+    * whose source carries a column the table lacks widens the schema
+    * in place (no bucket rewrite; pre-evolution rows read typed NULL),
+    * and the probe returns touched and untouched neighbors side by side
+    * so both the new column's values and the NULL-backed old rows are
+    * hash-checked. */
+  def txSchemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
+    val t = demoTxTable(spark, sfDir, "s19")
+    t.snapshot()
+      .filter(col("name").isin("Customer#000000002", "Customer#000000003",
+        "Customer#000000004", "User#000000001"))
+      .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"),
+        coalesce(col("tier"), lit("none")).as("tier"))
+      .orderBy("name")
+  }
+
+  /** CDC-driven incremental view maintenance (s18): the reason a CDC read
+    * exists at all — a downstream aggregate (house counts + balance sums)
+    * maintained WITHOUT rescanning the table: fold diff(0, head) into the
+    * v0 aggregate (update = delete(old)+insert(new), so a row that moves
+    * house moves its contribution), and certify the folded state equals
+    * the direct head-snapshot aggregate. At 100 TB the fold costs
+    * O(changed rows) where the recompute costs O(table) — this entry IS
+    * the incremental-materialized-view contract, stated as a hash-checked
+    * certificate (`fold_matches_direct` must read true). Sums in BIGINT
+    * cents — no float accumulation channel. */
+  def cdcIncrementalAgg(spark: SparkSession, sfDir: String): DataFrame = {
+    val t = demoTxTable(spark, sfDir, "s17")
+    def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
+    def agg(df: DataFrame) = df.groupBy("house")
+      .agg(count(lit(1)).as("n"), sum(cents(col("acctbal"))).as("bal"))
+    val v0 = agg(t.snapshotAt(0L))
+    val delta = t.diff(0L, 2L)
+      .select(explode(array(
+        struct(col("old_house").as("house"),
+          when(col("change_type") =!= "insert", -1L).otherwise(0L).as("dn"),
+          when(col("change_type") =!= "insert", -cents(col("old_acctbal")))
+            .otherwise(0L).as("db")),
+        struct(col("new_house").as("house"),
+          when(col("change_type") =!= "delete", 1L).otherwise(0L).as("dn"),
+          when(col("change_type") =!= "delete", cents(col("new_acctbal")))
+            .otherwise(0L).as("db")))).as("c"))
+      .select(col("c.house").as("house"), col("c.dn").as("dn"), col("c.db").as("db"))
+      .filter(col("dn") =!= 0L)
+      .groupBy("house").agg(sum("dn").as("dn"), sum("db").as("db"))
+    val folded = v0.join(delta, Seq("house"), "full_outer")
+      .select(col("house"),
+        (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),
+        (coalesce(col("bal"), lit(0L)) + coalesce(col("db"), lit(0L))).as("bal_x100"))
+      .filter(col("n") > 0)
+    val direct = agg(t.snapshot())
+      .select(col("house"), col("n").as("n_d"), col("bal").as("bal_d"))
+    folded.join(direct, Seq("house"), "full_outer")
+      .select(col("house"), col("n"), col("bal_x100"),
+        (col("n") <=> col("n_d") && col("bal_x100") <=> col("bal_d"))
+          .as("fold_matches_direct"))
+      .orderBy("house")
+  }
+}

@@ -231,7 +231,7 @@ object SimilarityOps {
   }
 
   /** Recall floors asserted by the checked ANN entries. Measured recall@10
-    * (tools.RecallProbe, 5 query points × 3 scale factors):
+    * (5 query points × 3 scale factors):
     * LSH (12 tables, radius-2 multiprobe) min 0.9 / mean 0.98–1.0 → floor
     * 0.9; IVF min 0.8 / mean 0.92–0.96 (13-of-16 cells probed — on these
     * near-uniform embeddings the cell/probe ratio is inherently
@@ -653,7 +653,7 @@ object SimilarityOps {
       .limit(k)
   }
 
-  /** Measured recall@10 (tools.RecallProbe, 5 query points × 3 sf):
+  /** Measured recall@10 (5 query points × 3 sf):
     * min 1.00 / mean 1.00 at the 1024-deep shortlist — floor 0.9 keeps one
     * hit of margin while real index breakage (wrong codebook, broken ADC
     * table) still craters it (64-deep measured down to 0.5). */

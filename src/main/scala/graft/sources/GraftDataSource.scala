@@ -88,7 +88,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    identical state with O(changed buckets) instead of O(table) per
   *    OPTIMIZE.
   *
-  * Data plane (measured — tools.ConnScanProbe, BASELINE.md notes 64/68):
+  * Data plane (measured — BASELINE.md notes 64/68):
   * bulk scans read COLUMNAR through Spark's own vectorized parquet
   * reader (ColumnarBatch straight into whole-stage codegen) — 1.30× the
   * native `TxTable.snapshot()` path on a data-dominated 4.8M-row scan at
@@ -171,6 +171,28 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister {
 }
 
 private[graft] object GraftDataSource {
+  /** A scan of the graft table at `dir`, built the way Spark's DSv2
+    * planner builds one: resolve the table (pinning its version), push
+    * `filters`, build. `options` pass through as source options (`keys`,
+    * `ignoreStatsManifest`, …). The only provider src/main constructs;
+    * Spark finds its own through [[DataSourceRegister]]. */
+  def scanOf(dir: String, filters: Array[Filter] = Array.empty,
+             options: Map[String, String] = Map.empty): Scan = {
+    val provider = new GraftTableProvider
+    val opts = new java.util.HashMap[String, String]((options + ("path" -> dir)).asJava)
+    val cmap = new CaseInsensitiveStringMap(opts)
+    val sb = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
+      .asInstanceOf[SupportsRead].newScanBuilder(cmap)
+    sb.asInstanceOf[SupportsPushDownFilters].pushFilters(filters)
+    sb.build()
+  }
+
+  /** The input partitions a [[scanOf]] scan plans. */
+  def plannedPartitions(dir: String, filters: Array[Filter] = Array.empty,
+                        options: Map[String, String] = Map.empty): Array[GraftInputPartition] =
+    scanOf(dir, filters, options).toBatch.planInputPartitions()
+      .collect { case p: GraftInputPartition => p }
+
   /** Merge keys for a table: the explicit `keys` option wins; tables
     * created with the keys sidecar are self-describing and need none. */
   def keysFor(dir: String, options: CaseInsensitiveStringMap): Seq[String] =
@@ -2057,7 +2079,7 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
     * spark.sql.sources.v2.bucketing.enabled; other resolution routes
     * (session catalog, plain format reads) report unknown partitioning —
     * their function lookup would THROW rather than fall back. Measured
-    * (tools.SpjProbe, BASELINE note 70): the SPJ plan drops both
+    * (BASELINE note 70): the SPJ plan drops both
     * join-input exchanges (1 vs 3 Exchange nodes) and runs 1.22× faster
     * even locally where the scan dominates — on a real cluster the
     * eliminated exchange is the network shuffle of both fact tables.

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import graft.lifecycle.Lifecycle
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -207,13 +208,14 @@ object StreamingOps {
     * transformWithState), for this query only, so the sibling streaming
     * entries keep their default HDFS-backed store. */
   def streamedUserStatsTws(spark: SparkSession, sfDir: String): DataFrame =
-    graft.core.Session.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      runToMemory(spark,
-        userStatsTws(readEventsStream(spark, sfDir).filter(col("user_id") < 50)),
-        "append")
-        .orderBy("user_id")
-        .localCheckpoint()
+    Lifecycle.demo(spark) { _ =>
+      graft.core.Session.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+        runToMemory(spark,
+          userStatsTws(readEventsStream(spark, sfDir).filter(col("user_id") < 50)),
+          "append")
+          .orderBy("user_id")
+      }
     }
 
   /** Stream-stream interval join — the attribution shape: each purchase
@@ -383,21 +385,19 @@ object StreamingOps {
     * path, arriving as a stream). The probe output shows updated,
     * inserted, and untouched rows side by side; the oracle states the
     * post-MERGE table. Table + checkpoint live in fresh temp dirs per
-    * invocation (a mutated table cannot be a shared artifact); the
-    * bounded output is checkpointed so the dirs can be dropped. */
+    * invocation (a mutated table cannot be a shared artifact);
+    * [[graft.lifecycle.Lifecycle.demo]] collects the bounded output before
+    * it drops them. */
   def streamedTxMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.core.{Graph, TxTable}
-    val root = java.nio.file.Files.createTempDirectory("graft_tx_s13").toString
-    try {
+    import graft.core.TxTable
+    Lifecycle.demo(spark, "s13") { case Seq(root) =>
       // A 200-key base slice: the protocol under test (stream →
       // foreachBatch → transactional MERGE → read-your-writes) is
       // IDENTICAL at any base size, and the full-table variant spent
       // most of its wall time writing 150k unrelated customer rows
       // through create+merge at sf0.1 — cost without coverage. The
       // probe still exercises updated, inserted AND unmodified rows.
-      val base = Graph.nodes(spark, sfDir)
-        .filter(col("name") <= "Customer#000000199")
-        .select("name", "house", "acctbal")
+      val base = Lifecycle.protocolSlice(spark, sfDir)
       // 4 buckets (s64's measured rule): a ≤203-row demo pays per-file
       // create cost, not scan cost — the default 16 buckets meant 4× the
       // files per commit for the same protocol coverage.
@@ -435,8 +435,7 @@ object StreamingOps {
         .join(probe, Seq("name"))
         .select(col("name"), col("house"), round(col("acctbal"), 2).as("acctbal"))
         .orderBy("name")
-        .localCheckpoint()
-    } finally graft.core.TxTable.drop(root)
+    }
   }
 
   /** Schema of documents.parquet for the streaming ingest probe. */
@@ -493,26 +492,25 @@ object StreamingOps {
     * verified). Only closed windows are emitted in append mode, so the
     * oracle applies the same `window end <= max ts - watermark` rule as
     * st_closed_windows before the consumer aggregation. */
-  def streamedFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_s14_sink").toString
-    try graft.core.Session.withConf(spark, StreamStores) {
-      val q = windowedTypeCounts(readEventsStream(spark, sfDir))
-        .writeStream.format("parquet")
-        .option("path", s"$root/out")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.core.FileMeta.parquet(spark, s"$root/out")
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_windows"),
-          sum("n").cast("long").as("n_events"),
-          sum("sum_value").cast("long").as("sum_value_micros"))
-        .orderBy("event_type")
-        .localCheckpoint()
-    } finally graft.core.TxTable.drop(root)
-  }
+  def streamedFileSink(spark: SparkSession, sfDir: String): DataFrame =
+    Lifecycle.demo(spark, "s14") { case Seq(root) =>
+      graft.core.Session.withConf(spark, StreamStores) {
+        val q = windowedTypeCounts(readEventsStream(spark, sfDir))
+          .writeStream.format("parquet")
+          .option("path", s"$root/out")
+          .option("checkpointLocation", s"$root/ckpt")
+          .outputMode("append")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        graft.core.FileMeta.parquet(spark, s"$root/out")
+          .groupBy("event_type")
+          .agg(count(lit(1)).as("n_windows"),
+            sum("n").cast("long").as("n_events"),
+            sum("sum_value").cast("long").as("sum_value_micros"))
+          .orderBy("event_type")
+      }
+    }
 
   /** The reference's user-MERGE path (app.py:100-132) as a streaming
     * foreachBatch upsert: each micro-batch of (name, house) rows is MERGEd

@@ -44,12 +44,8 @@ object PhaseProbe {
           def conn = spark.read.format("graft").load(dir)
           val predX = col("price_cents").between(2000000L, 2100000L)
           val predY = col("part") <= maxPart / 20
-          def emitted(pred: org.apache.spark.sql.Column): Long = {
-            val q = conn.filter(pred)
-            q.collect()
-            q.queryExecution.executedPlan.collectLeaves()
-              .flatMap(_.metrics.get("numOutputRows").map(_.value)).sum
-          }
+          def emitted(pred: org.apache.spark.sql.Column): Long =
+            graft.lifecycle.Lifecycle.scanRowsEmitted(conn.filter(pred))
           t("b0 agg")(t0.snapshot().agg(count(lit(1)), sum("price_cents")).collect())
           t("emitted X pre")(emitted(predX))
           t("emitted Y pre")(emitted(predY))
@@ -77,9 +73,7 @@ object PhaseProbe {
         val dir = java.nio.file.Files.createTempDirectory("graft_pp_s").toString
         try {
           val base = t("base build (nodes filter)") {
-            graft.core.Graph.nodes(spark, sfDir)
-              .filter(col("name") <= "Customer#000000199")
-              .select("name", "house", "acctbal")
+            graft.lifecycle.Lifecycle.protocolSlice(spark, sfDir)
           }
           val tt = t("create 4-bucket") {
             graft.core.TxTable.create(spark, dir, base, Seq("name"), numBuckets = 4)
@@ -138,12 +132,8 @@ object PhaseProbe {
         t("merge clustered")(tt.merge(upd))
         t("merge twin")(twin.merge(upd))
         val pred = col("price_cents").between(2000000L, 2100000L)
-        def emitted(d: String): Long = {
-          val q = spark.read.format("graft").load(d).filter(pred)
-          q.collect()
-          q.queryExecution.executedPlan.collectLeaves()
-            .flatMap(_.metrics.get("numOutputRows").map(_.value)).sum
-        }
+        def emitted(d: String): Long =
+          graft.lifecycle.Lifecycle.scanRowsEmitted(spark.read.format("graft").load(d).filter(pred))
         t("contentMatch collect-style") {
           tt.snapshot().collect().map(_.mkString("|")).sorted.toSeq ==
             twin.snapshot().collect().map(_.mkString("|")).sorted.toSeq

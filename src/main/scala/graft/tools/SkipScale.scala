@@ -61,20 +61,8 @@ object SkipScale {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.core.Session.local(cpus)
 
-    def planOnly(dir: String,
-                 filters: Array[org.apache.spark.sql.sources.Filter]): Int = {
-      val provider = new graft.sources.GraftTableProvider
-      val opts = new java.util.HashMap[String, String]()
-      opts.put("path", dir)
-      val cmap = new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts)
-      val sb = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-        .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-        .newScanBuilder(cmap)
-      if (filters.nonEmpty) sb
-        .asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-        .pushFilters(filters)
-      sb.build().toBatch.planInputPartitions().length
-    }
+    def planOnly(dir: String, filters: Array[org.apache.spark.sql.sources.Filter]): Int =
+      graft.sources.GraftDataSource.plannedPartitions(dir, filters).length
 
     val rows = scala.collection.mutable.ArrayBuffer.empty[(String, String, Double)]
     var dayCountJson = ""

@@ -6,8 +6,8 @@ import scala.concurrent.duration._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Result stability under CONCURRENT identical queries on one session —
-  * the correctness half of the service-shape claim (tools.ConcurrencyProbe
-  * measures the latency half; BASELINE.md records it). The reference is an
+  * the correctness half of the service-shape claim (BASELINE.md note 74
+  * records the latency half). The reference is an
   * interactive web app: a query service multiplexes many requests over one
   * SparkSession, so a scan, join, or top-k whose result depended on
   * scheduling order would be a correctness bug only visible under load. */

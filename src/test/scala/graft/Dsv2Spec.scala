@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.{Graph, TxTable}
+import graft.sources.GraftDataSource
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.EqualTo
 import org.apache.spark.sql.types.StructType
@@ -70,18 +71,8 @@ class Dsv2Spec extends AnyFunSuite {
   test("key-equality filter prunes the plan to ONE bucket; unfiltered plans all") {
     val (dir, t) = freshTable("graft_dsv2_prune")
     try {
-      val provider = new graft.sources.GraftTableProvider
-      val opts = new java.util.HashMap[String, String]()
-      opts.put("path", dir); opts.put("keys", "name")
-      val cmap = new CaseInsensitiveStringMap(opts)
-      val table = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-      def partitions(filters: Array[org.apache.spark.sql.sources.Filter]): Int = {
-        val sb = table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap)
-        sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-          .pushFilters(filters)
-        sb.build().toBatch.planInputPartitions().length
-      }
+      def partitions(filters: Array[org.apache.spark.sql.sources.Filter]): Int =
+        GraftDataSource.plannedPartitions(dir, filters, Map("keys" -> "name")).length
       val full = partitions(Array.empty)
       assert(full == t.layoutAt(t.version).size, "unfiltered scan must plan every bucket")
       assert(partitions(Array(EqualTo("name", "Customer#000000002"))) == 1,
@@ -399,14 +390,8 @@ class Dsv2Spec extends AnyFunSuite {
   test("runtime (join-derived) filters prune buckets at execution time") {
     val (dir, t) = freshTable("graft_dsv2_runtime")
     try {
-      val provider = new graft.sources.GraftTableProvider
-      val opts = new java.util.HashMap[String, String]()
-      opts.put("path", dir); opts.put("keys", "name")
-      val cmap = new CaseInsensitiveStringMap(opts)
-      val table = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
       def scan(runtime: Option[Array[org.apache.spark.sql.sources.Filter]]) = {
-        val s = table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap).build()
+        val s = GraftDataSource.scanOf(dir, options = Map("keys" -> "name"))
         runtime.foreach(fs =>
           s.asInstanceOf[org.apache.spark.sql.connector.read.SupportsRuntimeFiltering]
             .filter(fs))
@@ -421,8 +406,7 @@ class Dsv2Spec extends AnyFunSuite {
       assert(pruned <= 2 && pruned < full,
         s"runtime IN must prune to <= |list| buckets, planned $pruned of $full")
       // The scan advertises exactly the single key as filterable.
-      val attrs = table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-        .newScanBuilder(cmap).build()
+      val attrs = GraftDataSource.scanOf(dir, options = Map("keys" -> "name"))
         .asInstanceOf[org.apache.spark.sql.connector.read.SupportsRuntimeFiltering]
         .filterAttributes()
       assert(attrs.map(_.fieldNames().mkString).toSeq == Seq("name"))
@@ -438,19 +422,10 @@ class Dsv2Spec extends AnyFunSuite {
   test("reported statistics: real bytes, prune-aware, and small tables auto-broadcast") {
     val (dir, t) = freshTable("graft_dsv2_stats")
     try {
-      val provider = new graft.sources.GraftTableProvider
-      val opts = new java.util.HashMap[String, String]()
-      opts.put("path", dir); opts.put("keys", "name")
-      val cmap = new CaseInsensitiveStringMap(opts)
-      val table = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-      def stats(filters: Array[org.apache.spark.sql.sources.Filter]): Long = {
-        val sb = table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap)
-        sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-          .pushFilters(filters)
-        sb.build().asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
+      def stats(filters: Array[org.apache.spark.sql.sources.Filter]): Long =
+        GraftDataSource.scanOf(dir, filters, Map("keys" -> "name"))
+          .asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
           .estimateStatistics().sizeInBytes().getAsLong
-      }
       val full = stats(Array.empty)
       assert(full > 0, "unpruned scan must report real bytes")
       val pruned = stats(Array(EqualTo("name", "Customer#000000002")))
@@ -751,21 +726,8 @@ class Dsv2Spec extends AnyFunSuite {
       // Pins the per-bucket sidecar-FILE path (the type-guard section
       // below pokes the _zonemap.txt files; the consolidated manifest
       // path is certified by its own spec).
-      def planned(filters: Array[org.apache.spark.sql.sources.Filter]) = {
-        val provider = new graft.sources.GraftTableProvider
-        val opts = new java.util.HashMap[String, String]()
-        opts.put("path", dir)
-        opts.put("ignoreStatsManifest", "true")
-        val cmap = new CaseInsensitiveStringMap(opts)
-        val sb = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-          .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap)
-        if (filters.nonEmpty)
-          sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-            .pushFilters(filters)
-        sb.build().toBatch.planInputPartitions()
-          .collect { case p: graft.sources.GraftInputPartition => p }
-      }
+      def planned(filters: Array[org.apache.spark.sql.sources.Filter]) =
+        GraftDataSource.plannedPartitions(dir, filters, Map("ignoreStatsManifest" -> "true"))
       import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
       val all = planned(Array.empty)
       assert(all.length == 8, s"expected 8 buckets, planned ${all.length}")
@@ -819,21 +781,10 @@ class Dsv2Spec extends AnyFunSuite {
       // The optimizer-facing size statistic follows the prune: a
       // band-probed scan reports its ADMITTED bytes (broadcastable),
       // not the table's.
-      def statBytes(filters: Array[org.apache.spark.sql.sources.Filter]): Long = {
-        val provider = new graft.sources.GraftTableProvider
-        val opts = new java.util.HashMap[String, String]()
-        opts.put("path", dir)
-        opts.put("ignoreStatsManifest", "true")
-        val cmap = new CaseInsensitiveStringMap(opts)
-        val sb = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-          .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap)
-        if (filters.nonEmpty)
-          sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-            .pushFilters(filters)
-        sb.build().asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
+      def statBytes(filters: Array[org.apache.spark.sql.sources.Filter]): Long =
+        GraftDataSource.scanOf(dir, filters, Map("ignoreStatsManifest" -> "true"))
+          .asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
           .estimateStatistics().sizeInBytes().getAsLong
-      }
       val fullBytes = statBytes(Array.empty)
       val bandBytes = statBytes(Array(
         GreaterThanOrEqual("v", 2100L), LessThanOrEqual("v", 2200L)))
@@ -870,20 +821,8 @@ class Dsv2Spec extends AnyFunSuite {
       t.setPartitioning("days(ts)")
       t.merge(base)
 
-      def planned(filters: Array[org.apache.spark.sql.sources.Filter]) = {
-        val provider = new graft.sources.GraftTableProvider
-        val opts = new java.util.HashMap[String, String]()
-        opts.put("path", dir)
-        val cmap = new CaseInsensitiveStringMap(opts)
-        val sb = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-          .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap)
-        if (filters.nonEmpty)
-          sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-            .pushFilters(filters)
-        sb.build().toBatch.planInputPartitions()
-          .collect { case p: graft.sources.GraftInputPartition => p }
-      }
+      def planned(filters: Array[org.apache.spark.sql.sources.Filter]) =
+        GraftDataSource.plannedPartitions(dir, filters)
       import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
       val allFiles = planned(Array.empty).flatMap(_.files)
       val lo = java.time.Instant.parse("2024-03-05T00:00:00Z")
@@ -977,20 +916,8 @@ class Dsv2Spec extends AnyFunSuite {
       // The walk only happens on the stats-manifest FALLBACK path (the
       // manifest serves the listing with no directory I/O at all), so
       // this test pins the walk explicitly.
-      def planned(filters: Array[org.apache.spark.sql.sources.Filter]) = {
-        val provider = new graft.sources.GraftTableProvider
-        val opts = new java.util.HashMap[String, String]()
-        opts.put("path", dir)
-        opts.put("ignoreStatsManifest", "true")
-        val cmap = new CaseInsensitiveStringMap(opts)
-        val sb = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-          .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap)
-        if (filters.nonEmpty)
-          sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-            .pushFilters(filters)
-        sb.build().toBatch.planInputPartitions()
-      }
+      def planned(filters: Array[org.apache.spark.sql.sources.Filter]) =
+        GraftDataSource.plannedPartitions(dir, filters, Map("ignoreStatsManifest" -> "true"))
       import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
       val lo = java.time.Instant.parse("2024-03-10T00:00:00Z")
       val hi = java.time.Instant.parse("2024-03-13T00:00:00Z")
@@ -1193,20 +1120,8 @@ class Dsv2Spec extends AnyFunSuite {
           .drop("b")
         TxTable.create(spark, zdir, zbase, Seq("k"), numBuckets = 8,
           zoneMapCols = Seq("v"))
-        def planned(f: Array[org.apache.spark.sql.sources.Filter], d: String) = {
-          val provider = new graft.sources.GraftTableProvider
-          val opts = new java.util.HashMap[String, String]()
-          opts.put("path", d)
-          val cmap = new CaseInsensitiveStringMap(opts)
-          val sb = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-            .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-            .newScanBuilder(cmap)
-          if (f.nonEmpty)
-            sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-              .pushFilters(f)
-          sb.build().toBatch.planInputPartitions()
-            .collect { case p: graft.sources.GraftInputPartition => p }
-        }
+        def planned(f: Array[org.apache.spark.sql.sources.Filter], d: String) =
+          GraftDataSource.plannedPartitions(d, f)
         assert(planned(Array.empty, zdir).length == 8)
         val zin = planned(Array(org.apache.spark.sql.sources.In(
           "v", Array[Any](2100L, 2150L))), zdir)
@@ -1255,20 +1170,8 @@ class Dsv2Spec extends AnyFunSuite {
       t.setPartitioning("months(d)")
       t.merge(base)
 
-      def planned(filters: Array[org.apache.spark.sql.sources.Filter]) = {
-        val provider = new graft.sources.GraftTableProvider
-        val opts = new java.util.HashMap[String, String]()
-        opts.put("path", dir)
-        val cmap = new CaseInsensitiveStringMap(opts)
-        val sb = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-          .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap)
-        if (filters.nonEmpty)
-          sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-            .pushFilters(filters)
-        sb.build().toBatch.planInputPartitions()
-          .collect { case p: graft.sources.GraftInputPartition => p }
-      }
+      def planned(filters: Array[org.apache.spark.sql.sources.Filter]) =
+        GraftDataSource.plannedPartitions(dir, filters)
       import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
       val all = planned(Array.empty).flatMap(_.files)
       // One month of 24: planned files must shrink accordingly.
@@ -1313,19 +1216,8 @@ class Dsv2Spec extends AnyFunSuite {
         bloomCols = Seq("v"), zoneMapCols = Seq("v"))
       t.widenColumn("v", "BIGINT")
 
-      def planned(filters: Array[org.apache.spark.sql.sources.Filter]): Int = {
-        val provider = new graft.sources.GraftTableProvider
-        val opts = new java.util.HashMap[String, String]()
-        opts.put("path", dir)
-        val cmap = new CaseInsensitiveStringMap(opts)
-        val sb = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-          .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap)
-        if (filters.nonEmpty)
-          sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-            .pushFilters(filters)
-        sb.build().toBatch.planInputPartitions().length
-      }
+      def planned(filters: Array[org.apache.spark.sql.sources.Filter]): Int =
+        GraftDataSource.plannedPartitions(dir, filters).length
       import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
       // Both planning tiers must REFUSE the widened column (its sidecars
       // record the int32 write-time type; the probe value is a long) —
@@ -1571,18 +1463,8 @@ class Dsv2Spec extends AnyFunSuite {
       val t = TxTable.create(spark, dir, base.limit(0), Seq("k"), numBuckets = 1)
       t.setBloomColumns(Seq("token"), indexBits = 1024)
       t.merge(base)
-      def partitions(filters: Array[org.apache.spark.sql.sources.Filter]): Int = {
-        val provider = new graft.sources.GraftTableProvider
-        val opts = new java.util.HashMap[String, String]()
-        opts.put("path", dir)
-        val cmap = new CaseInsensitiveStringMap(opts)
-        val sb = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-          .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap)
-        sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-          .pushFilters(filters)
-        sb.build().toBatch.planInputPartitions().length
-      }
+      def partitions(filters: Array[org.apache.spark.sql.sources.Filter]): Int =
+        GraftDataSource.plannedPartitions(dir, filters).length
       assert(partitions(Array(EqualTo("token", hex("nope")))) == 0,
         "auto-sized bloom must still refute an absent value at 20k rows " +
           "(a saturated 1024-bit build would admit the bucket)")
@@ -1610,19 +1492,9 @@ class Dsv2Spec extends AnyFunSuite {
       // This test POKES the _bloomidx files, so it pins the per-bucket
       // sidecar-FILE path explicitly (ignoreStatsManifest) — the
       // consolidated manifest path is certified by its own spec.
-      def partitions(filters: Array[org.apache.spark.sql.sources.Filter]): Int = {
-        val provider = new graft.sources.GraftTableProvider
-        val opts = new java.util.HashMap[String, String]()
-        opts.put("path", dir); opts.put("keys", "k")
-        opts.put("ignoreStatsManifest", "true")
-        val cmap = new CaseInsensitiveStringMap(opts)
-        val table = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-        val sb = table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap)
-        sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-          .pushFilters(filters)
-        sb.build().toBatch.planInputPartitions().length
-      }
+      def partitions(filters: Array[org.apache.spark.sql.sources.Filter]): Int =
+        GraftDataSource.plannedPartitions(dir, filters,
+          Map("keys" -> "k", "ignoreStatsManifest" -> "true")).length
       def rowsFor(c: String, vs: String*): Seq[String] =
         spark.read.format("graft").option("keys", "k")
           .option("ignoreStatsManifest", "true").load(dir)
@@ -1767,13 +1639,7 @@ class Dsv2Spec extends AnyFunSuite {
       assert(connNoStats.groupBy().count().head().getLong(0) == native)
 
       // The optimizer-facing statistic: exact numRows from the sidecars.
-      val provider = new graft.sources.GraftTableProvider
-      val opts = new java.util.HashMap[String, String]()
-      opts.put("path", dir); opts.put("keys", "name")
-      val cmap = new CaseInsensitiveStringMap(opts)
-      val scan = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-        .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-        .newScanBuilder(cmap).build()
+      val scan = GraftDataSource.scanOf(dir, options = Map("keys" -> "name"))
       val stats = scan.asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
         .estimateStatistics()
       assert(stats.numRows().isPresent && stats.numRows().getAsLong == native,
@@ -1783,9 +1649,7 @@ class Dsv2Spec extends AnyFunSuite {
       // must go silent rather than overcount.
       import spark.implicits._
       t.deleteMergeOnRead(Seq("Customer#000000013").toDF("name"))
-      val scan2 = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-        .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-        .newScanBuilder(cmap).build()
+      val scan2 = GraftDataSource.scanOf(dir, options = Map("keys" -> "name"))
       val stats2 = scan2.asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
         .estimateStatistics()
       assert(!stats2.numRows().isPresent,
@@ -1851,22 +1715,10 @@ class Dsv2Spec extends AnyFunSuite {
         Array(EqualTo("token", hex("k7"))),
         Array.empty)
       def plannedFiles(ignore: Boolean,
-                       fs: Array[org.apache.spark.sql.sources.Filter]): Set[String] = {
-        val provider = new graft.sources.GraftTableProvider
-        val opts = new java.util.HashMap[String, String]()
-        opts.put("path", dir)
-        if (ignore) opts.put("ignoreStatsManifest", "true")
-        val cmap = new CaseInsensitiveStringMap(opts)
-        val sb = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-          .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap)
-        if (fs.nonEmpty)
-          sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-            .pushFilters(fs)
-        sb.build().toBatch.planInputPartitions()
-          .collect { case p: graft.sources.GraftInputPartition => p }
+                       fs: Array[org.apache.spark.sql.sources.Filter]): Set[String] =
+        GraftDataSource.plannedPartitions(dir, fs,
+          if (ignore) Map("ignoreStatsManifest" -> "true") else Map.empty)
           .flatMap(_.files).toSet
-      }
       // IDENTICAL pruning decisions from the consolidated file and the
       // per-bucket sidecars, for every tier's probe.
       probes.foreach { fs =>
@@ -1946,21 +1798,10 @@ class Dsv2Spec extends AnyFunSuite {
 
       // Decisions parity: a bloom point probe plans the same files via
       // blob-backed manifest and via per-bucket sidecars, and answers right.
-      def plannedFiles(ignore: Boolean): Set[String] = {
-        val provider = new graft.sources.GraftTableProvider
-        val opts = new java.util.HashMap[String, String]()
-        opts.put("path", dir)
-        if (ignore) opts.put("ignoreStatsManifest", "true")
-        val cmap = new CaseInsensitiveStringMap(opts)
-        val sb = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-          .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(cmap)
-        sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
-          .pushFilters(Array(EqualTo("token", hex("k7777"))))
-        sb.build().toBatch.planInputPartitions()
-          .collect { case p: graft.sources.GraftInputPartition => p }
+      def plannedFiles(ignore: Boolean): Set[String] =
+        GraftDataSource.plannedPartitions(dir, Array(EqualTo("token", hex("k7777"))),
+          if (ignore) Map("ignoreStatsManifest" -> "true") else Map.empty)
           .flatMap(_.files).toSet
-      }
       val viaBlob = plannedFiles(ignore = false)
       assert(viaBlob == plannedFiles(ignore = true),
         "blob-backed bloom decisions diverged from the sidecar path")
@@ -2083,13 +1924,7 @@ class Dsv2Spec extends AnyFunSuite {
   /** One planning pass of an unfiltered scan over `dir`, and the scan's
     * reported driver metrics (footers read, footer cache hits). */
   private def planFooterMetrics(dir: String): Map[String, Long] = {
-    val provider = new graft.sources.GraftTableProvider
-    val opts = new java.util.HashMap[String, String]()
-    opts.put("path", dir); opts.put("keys", "name")
-    val cmap = new CaseInsensitiveStringMap(opts)
-    val table = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-    val scan = table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-      .newScanBuilder(cmap).build()
+    val scan = GraftDataSource.scanOf(dir, options = Map("keys" -> "name"))
     scan.toBatch.planInputPartitions()
     scan.reportDriverMetrics().map(m => m.name -> m.value).toMap
   }

@@ -219,13 +219,13 @@ class EtlSpec extends AnyFunSuite {
     import spark.implicits._
     // Clean certs pass through untouched…
     val clean = Seq(("a", 0L, 0L)).toDF("name", "torn_hits", "incons_hits")
-    assert(GraphOps.requireCleanCerts(clean, "t").count() == 1)
+    assert(graft.lifecycle.Demos.requireCleanCerts(clean, "t").count() == 1)
     // …and an empty frame is vacuously clean (coalesce over max-of-none).
-    assert(GraphOps.requireCleanCerts(clean.limit(0), "t").count() == 0)
+    assert(graft.lifecycle.Demos.requireCleanCerts(clean.limit(0), "t").count() == 0)
     // A violation must surface as err TEXT naming the counts — the channel
     // the driver reports — never an opaque hash mismatch.
     val torn = Seq(("a", 2L, 0L), ("b", 0L, 3L)).toDF("name", "torn_hits", "incons_hits")
-    val e = intercept[IllegalArgumentException](GraphOps.requireCleanCerts(torn, "s31"))
+    val e = intercept[IllegalArgumentException](graft.lifecycle.Demos.requireCleanCerts(torn, "s31"))
     assert(e.getMessage.contains("s31") && e.getMessage.contains("torn=2") &&
       e.getMessage.contains("incons=3"), e.getMessage)
   }

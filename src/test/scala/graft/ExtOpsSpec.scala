@@ -172,7 +172,7 @@ class ExtOpsSpec extends AnyFunSuite {
     ann.foreach { case (id, c) =>
       assert(full.contains(id) && math.abs(full(id) - c) < 1e-9, s"vec $id")
     }
-    // 12-table LSH + radius-2 multiprobe recall (tools.RecallProbe: min
+    // 12-table LSH + radius-2 multiprobe recall (a recall probe measured min
     // 0.9 / mean ≥0.98 over 5 query points × 3 sfs; a single table
     // measured 0.0-0.2 — this assert pins the LshRecallFloor contract).
     val top10 = SimilarityOps.cosineTopK(spark, sf, k = 10).collect()
@@ -203,7 +203,7 @@ class ExtOpsSpec extends AnyFunSuite {
     pq.foreach { case (id, c) =>
       assert(full.contains(id) && math.abs(full(id) - c) < 1e-9, s"vec $id")
     }
-    // 1024-deep ADC shortlist (tools.RecallProbe: min/mean 1.00 over 5
+    // 1024-deep ADC shortlist (a recall probe measured min/mean 1.00 over 5
     // query points × 3 sfs; 64-deep measured down to 0.5 — this assert
     // pins the PqRecallFloor contract).
     val top10 = SimilarityOps.cosineTopK(spark, sf, k = 10).collect()

@@ -126,4 +126,49 @@ class LintSpec extends AnyFunSuite {
     assert(sites == Seq("graft/etl/Artifacts.scala"),
       s"ready-mark names outside Artifacts: ${sites.filterNot(_ == "graft/etl/Artifacts.scala").mkString(", ")}")
   }
+
+  test("GraphOps holds the reference surface: no table lifecycle, no pinned result") {
+    // The storage-lifecycle demos live in graft.lifecycle, where
+    // Lifecycle.demo owns the temp dirs and the result.
+    val lifecycle = """TxTable\s*\.\s*(?:create|drop)\b|createTempDirectory|\.localCheckpoint\s*\(""".r
+    val sites = allSources.flatMap { case (f, src) => lifecycle.findAllIn(src).map(f -> _) }
+    val inGraphOps = sites.filter(_._1 == "graft/ops/GraphOps.scala")
+    assert(inGraphOps.isEmpty, s"GraphOps calls: ${inGraphOps.map(_._2).distinct.mkString(", ")}")
+    // The pattern must still see each call where it is allowed.
+    Seq("TxTable.create", "TxTable.drop", "createTempDirectory", ".localCheckpoint(")
+      .foreach(c => assert(sites.exists(_._2.replaceAll("\\s", "").startsWith(c)), c))
+  }
+
+  test("in graft.lifecycle and StreamingOps only Lifecycle makes an entry's dirs and result") {
+    // Lifecycle.demo makes the temp dirs and collects the result into a
+    // local relation; a demo may still pin an intermediate, on one
+    // `val x = … .localCheckpoint()` line, which the demo releases.
+    val scoped = allSources.filter { case (f, _) =>
+      f.startsWith("graft/lifecycle/") || f == "graft/streaming/StreamingOps.scala"
+    }
+    val owner = "graft/lifecycle/Lifecycle.scala"
+    val makes = """createTempDirectory|localReleasing""".r
+    val makers = scoped.filter { case (_, src) => makes.findFirstIn(src).isDefined }.map(_._1)
+    assert(makers == Seq(owner), s"temp dirs or results made outside Lifecycle: ${makers.mkString(", ")}")
+    val pin = """(?m)^\s*val \w+ = [^\n]*\.localCheckpoint\(\)\s*$""".r
+    val checkpoints = scoped.flatMap { case (f, src) =>
+      src.split("\n").toSeq.filter(_.contains(".localCheckpoint(")).map(f -> _)
+    }
+    val unpinned = checkpoints.filterNot { case (_, l) => pin.findFirstIn(l).isDefined }
+    assert(unpinned.isEmpty, s"localCheckpoint outside a one-line pin: ${unpinned.mkString("; ")}")
+    // The patterns must still see what they allow.
+    assert(checkpoints.exists { case (f, l) =>
+      f == "graft/streaming/StreamingOps.scala" && l.contains("val batch = batch0.localCheckpoint()") })
+    assert(checkpoints.exists(_._1 == "graft/lifecycle/Demos.scala"))
+    assert(pin.findFirstIn("        .localCheckpoint()").isEmpty)
+  }
+
+  test("src/main constructs GraftTableProvider in one place") {
+    // GraftDataSource.scanOf plans a scan the way Spark's DSv2 planner
+    // does; every other caller goes through it.
+    val provider = """new\s+(?:graft\.sources\.)?GraftTableProvider\b""".r
+    val sites = allSources.flatMap { case (f, src) => provider.findAllIn(src).map(_ => f) }
+    assert(sites == Seq("graft/sources/GraftDataSource.scala"),
+      s"GraftTableProvider constructed at: ${sites.mkString(", ")}")
+  }
 }

@@ -110,13 +110,7 @@ class PlanSpec extends AnyFunSuite {
     // mechanism with a frontier that hashes into few buckets: handing a
     // 2-id IN to the scan plans ≤2 of the manifest's 32 partitions.
     val dir = graft.core.Graph.personEdgeIds(spark, sf)
-    val provider = new graft.sources.GraftTableProvider
-    val opts = new java.util.HashMap[String, String]()
-    opts.put("path", dir)
-    val cmap = new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts)
-    val scan = provider.getTable(provider.inferSchema(cmap), Array.empty, opts)
-      .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-      .newScanBuilder(cmap).build()
+    val scan = graft.sources.GraftDataSource.scanOf(dir)
     val all = scan.toBatch.planInputPartitions().length
     scan.asInstanceOf[org.apache.spark.sql.connector.read.SupportsRuntimeFiltering]
       .filter(Array[org.apache.spark.sql.sources.Filter](

@@ -16,6 +16,24 @@ class SessionSpec extends AnyFunSuite {
     "s67_sql_insert", "s68_sql_update_merge", "s14_stream_file_sink", "st_user_stats_tws",
     "st_window_counts", "rq100_sql_script", "rq9_event_window")
 
+  /** The storage-lifecycle demos: every `graft.lifecycle.Demos` entry and
+    * the three streaming entries that run through `Lifecycle.demo`. */
+  private val lifecycle = Seq(
+    "s12_merge_visible", "s13_stream_merge", "s14_stream_file_sink", "s15_time_travel",
+    "s17_cdc_diff", "s18_cdc_incremental", "s19_tx_schema_evolution", "s20_tx_compaction",
+    "s21_mor_delete", "s25_tx_constraints", "s26_restore", "s27_rebucket",
+    "s28_point_lookup", "s29_wap", "s30_history", "s31_catalog_txn", "s32_partial_compact",
+    "s33_sql_time_travel", "s34_drop_column", "s35_merge_clauses", "s36_clone",
+    "s37_update_where", "s38_add_column", "s39_rename_column", "s40_dsv2_read",
+    "s41_change_feed", "s42_count_pushdown", "s43_minmax_pushdown", "s44_catalog_spj",
+    "s45_stats_runtime", "s46_rowgroup_skip", "s47_composite_spj", "s48_concurrent_stability",
+    "s49_sorted_compact", "s50_bloom_point", "s51_zorder_compact", "s52_medallion_stream",
+    "s53_bucket_bloom", "s54_clustered_write", "s55_zonemap_range", "s56_widen_column",
+    "s57_zorder_nway", "s58_date_partition", "s59_hilbert_compact", "s60_stats_manifest",
+    "s61_delete_where", "s62_ranged_count", "s63_string_zonemap", "s64_sql_delete",
+    "s65_row_lineage", "s66_column_stats", "s67_sql_insert", "s68_sql_update_merge",
+    "st_user_stats_tws")
+
   /** Build-once entries that change a setting only while they build their
     * artifact, with the artifact's name: deleting it makes the entry build
     * again. */
@@ -33,6 +51,13 @@ class SessionSpec extends AnyFunSuite {
         .flatMap(k => Option(h.get(k)).map(v => s"hadoop:$k" -> v))
   }
 
+  /** Ids of the RDDs the session holds persisted. */
+  private def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** The catalogs the session has loaded. */
+  private def catalogs(): Seq[String] =
+    spark.sql("SHOW CATALOGS").collect().map(_.getString(0)).sorted.toSeq
+
   for (name <- changing) test(s"$name leaves the session settings as it found them") {
     buildMarks.get(name).foreach(a => graft.core.TxTable.drop(graft.etl.Artifacts.path(sf, a)))
     val before = settings()
@@ -42,6 +67,22 @@ class SessionSpec extends AnyFunSuite {
       .filter(k => before.get(k) != after.get(k))
       .map(k => s"$k: ${before.getOrElse(k, "<unset>")} -> ${after.getOrElse(k, "<unset>")}")
     assert(changed.isEmpty, s"$name changed: ${changed.mkString("; ")}")
+  }
+
+  for (name <- lifecycle) test(s"$name leaves settings, persisted RDDs and catalogs as it found them") {
+    def run(): Unit =
+      assert(SparkEntry.queries(name)(spark, sf).collect().nonEmpty, s"$name returned no rows")
+    val (conf, rdds) = (settings(), persisted())
+    run()
+    assert(settings() == conf, s"$name changed a setting")
+    val left = persisted() -- rdds
+    assert(left.isEmpty, s"$name left ${left.size} RDDs persisted")
+    // The first call may load a catalog under its fixed name; a second
+    // call must not add one.
+    val cats = catalogs()
+    run()
+    assert(catalogs() == cats, s"$name added catalogs: ${catalogs().diff(cats).mkString(", ")}")
+    assert(persisted() == rdds, s"$name changed the persisted RDDs on its second call")
   }
 
   test("rq100 and an events entry give the same answers and plans in either order") {

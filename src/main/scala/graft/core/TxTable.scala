@@ -20,7 +20,8 @@ import scala.jdk.CollectionConverters._
   * Shape (a deliberately small Delta/Iceberg-style log over parquet):
   *
   *   dir/_log/v00000000.txt     one manifest per committed version:
-  *                              lines "bucketId<TAB>commitDirName"
+  *                              the version record in `#` headers,
+  *                              then lines "bucketId<TAB>commitDirName"
   *   dir/data/<commit>/_b=K/    the data, hash-bucketed by key
   *
   * - **Copy-on-write at bucket granularity.** Rows are hash-bucketed on the
@@ -66,8 +67,8 @@ import scala.jdk.CollectionConverters._
   *   after any vacuum.
   */
 final class TxTable private (spark: SparkSession, dir: String,
-                             keyCols: Seq[String], numBuckets: Int,
-                             logOverride: Path = null) {
+                             keyCols: Seq[String], logOverride: Path = null) {
+  import TxTable.{Attempt, BucketRef, Pin}
 
   private val logDir = if (logOverride != null) logOverride else Paths.get(dir, "_log")
   private val dataDir = Paths.get(dir, "data")
@@ -77,20 +78,23 @@ final class TxTable private (spark: SparkSession, dir: String,
   private def bucketColFor(n: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(keyCols.map(col): _*), lit(n))
 
-  /** The bucket count IN EFFECT at version `v` — the first manifest line
-    * (`#buckets=N`) records it per version, so the layout can EVOLVE (an
-    * Iceberg partition-spec-evolution analog: rebucket a table that
-    * outgrew its write-time count via `compact(newBuckets)`). Writers
-    * hash keys with the count of the version they rebase on — a writer
-    * racing a rebucket loses the publish, re-reads the head, and re-hashes
-    * under the NEW count, so no row can land in a stale layout. Manifests
-    * from before this header existed fall back to the open-time count. */
-  def bucketCountAt(v: Long): Int = {
-    val first = Files.readAllLines(logDir.resolve(f"v$v%08d.txt"),
-      StandardCharsets.UTF_8).asScala.headOption.getOrElse("")
-    if (first.startsWith("#buckets=")) first.stripPrefix("#buckets=").toInt
-    else numBuckets
+  /** Version `v`, parsed once from its manifest `v*.txt`: the bucket
+    * entries and the whole version record (see [[TxTable.Pin]]). A
+    * manifest is immutable once claimed, so a pin never goes stale; a
+    * vacuumed version fails to read. */
+  private[graft] def pin(v: Long): Pin = {
+    require(v >= 0, s"no committed version at $dir")
+    TxTable.readPin(logDir.resolve(f"v$v%08d.txt"), v, dataDir)
   }
+
+  /** The bucket count IN EFFECT at version `v` — every manifest records
+    * it (`#buckets=N`), so the layout can EVOLVE (an Iceberg
+    * partition-spec-evolution analog: rebucket a table that outgrew its
+    * write-time count via `compact(newBuckets)`). Writers hash keys with
+    * the count of the version they rebase on — a writer racing a
+    * rebucket loses the publish, re-pins the head, and re-hashes under
+    * the NEW count, so no row can land in a stale layout. */
+  def bucketCountAt(v: Long): Int = pin(v).buckets
 
   /** Current-layout bucket count. */
   def bucketCount: Int = bucketCountAt(version)
@@ -104,61 +108,38 @@ final class TxTable private (spark: SparkSession, dir: String,
     finally s.close()
   }
 
+  /** The versions whose manifests are in `log`. */
+  private def versionsIn(log: Path): Seq[Long] =
+    listNames(log).collect { case s if s.startsWith("v") && s.endsWith(".txt") =>
+      s.stripPrefix("v").stripSuffix(".txt").toLong }
+
   /** Highest published version, or -1 for an empty log. */
   def version: Long =
     if (!Files.isDirectory(logDir)) -1L
-    else listNames(logDir)
-      .collect { case s if s.startsWith("v") && s.endsWith(".txt") =>
-        s.stripPrefix("v").stripSuffix(".txt").toLong }
-      .foldLeft(-1L)(math.max)
+    else versionsIn(logDir).foldLeft(-1L)(math.max)
 
-  /** A bucket's physical state in a manifest: its base data commit dir
-    * plus zero or more merge-on-read deletion-vector dirs (equality
-    * deletes — key rows anti-joined at read). `data` and `dvs` hold
-    * commit-dir NAMES; resolve with `bucketPath`. */
-  private case class BucketRef(data: String, dvs: Seq[String])
-
-  /** Commit names are normally dir-relative; a SHALLOW CLONE's manifest
-    * carries absolute pointers back into its source's data directory
-    * (`shallowClone`), so path resolution branches on the leading '/'. */
   private def bucketPath(commit: String, b: Long): String =
-    (if (commit.startsWith("/")) Paths.get(commit)
-     else dataDir.resolve(commit)).resolve(s"_b=$b").toString
-
-  /** bucketId → BucketRef, as of version `v`. Line format:
-    * `b<TAB>commit` (clean) or `b<TAB>commit<TAB>dv1,dv2` (DV'd). */
-  private def manifest(v: Long): Map[Long, BucketRef] =
-    Files.readAllLines(logDir.resolve(f"v$v%08d.txt"), StandardCharsets.UTF_8)
-      .asScala.filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map { line =>
-        val parts = line.split('\t')
-        val dvs = if (parts.length > 2 && parts(2).nonEmpty)
-          parts(2).split(',').toSeq else Nil
-        parts(0).toLong -> BucketRef(parts(1), dvs)
-      }.toMap
-
-  private def fmt(b: Long, r: BucketRef): String =
-    if (r.dvs.isEmpty) s"$b\t${r.data}" else s"$b\t${r.data}\t${r.dvs.mkString(",")}"
+    TxTable.bucketPath(dataDir, commit, b)
 
   /** bucket → base data commit name as of `v` — the physical proof surface
     * for merge-on-read: a DV delete changes dv lists, never these. */
   def dataPointers(v: Long): Map[Long, String] =
-    manifest(v).view.mapValues(_.data).toMap
+    pin(v).entries.view.mapValues(_.data).toMap
 
   /** bucket → deletion-vector commit names as of `v`. */
   def dvPointers(v: Long): Map[Long, Seq[String]] =
-    manifest(v).view.mapValues(_.dvs).toMap
+    pin(v).entries.view.mapValues(_.dvs).toMap
 
-  /** The rows of `buckets` as of manifest `m`, with each bucket's deletion
-    * vectors applied. Buckets WITHOUT DVs stream straight from their base
-    * files; only DV'd buckets pay the anti-join — at 100 TB the
-    * merge-on-read tax is proportional to deleted-against buckets, never
-    * the table. */
-  private def readBuckets(m: Map[Long, BucketRef], buckets: Set[Long],
-                          schema: org.apache.spark.sql.types.StructType,
-                          defaults: Map[String, String] = Map.empty,
-                          aliases: Map[String, Seq[String]] = Map.empty): DataFrame = {
-    val refs = m.filter { case (b, _) => buckets.contains(b) }
+  /** The rows of `buckets` as of pin `p` under its record (schema,
+    * defaults, aliases, widen), with each bucket's deletion vectors
+    * applied. Buckets WITHOUT DVs stream straight from their base files;
+    * only DV'd buckets pay the anti-join — at 100 TB the merge-on-read
+    * tax is proportional to deleted-against buckets, never the table. */
+  private def readBuckets(p: Pin, buckets: Set[Long]): DataFrame = {
+    val schema = p.schema
+    val defaults = p.defaults
+    val aliases = p.aliases
+    val refs = p.entries.filter { case (b, _) => buckets.contains(b) }
     // Per-commit-dir WRITE-TIME schema — the Iceberg initial-default rule
     // (absent vs explicit-NULL) and the type-widening evolution both need
     // per-FILE schema knowledge, and since every file in one commit
@@ -187,8 +168,8 @@ final class TxTable private (spark: SparkSession, dir: String,
     // before a widen next to int64 files after) — Spark's mergeSchema
     // refuses to merge those, so reads group by the commit's full
     // physical-type signature and each group casts to the logical schema
-    // before unionByName. Only consulted when a widen was ever recorded:
-    // the common table keeps its single-read path.
+    // before unionByName. Only consulted when the version's record
+    // carries a widen: the common table keeps its single-read path.
     def typeSig(path: String): String =
       commitSchema(path).fields
         .map(f => s"${f.name}:${f.dataType.catalogString}").sorted.mkString(";")
@@ -207,7 +188,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       if (everPartitioned) _.flatMap(leafDirs) else identity
     // Widened tables hold mixed physical types — group by the commit's
     // schema signature so each mergeSchema read is type-homogeneous.
-    val sigGrouped = everWidened
+    val sigGrouped = p.widened.nonEmpty
     def read(paths0: Seq[String]): DataFrame = {
       val paths = expand(paths0)
       if (paths.isEmpty)
@@ -264,15 +245,11 @@ final class TxTable private (spark: SparkSession, dir: String,
     * into the schema. */
   def snapshot(): DataFrame = snapshotAt(version)
 
-  /** The table schema AS OF version `v` — per-version `schema-v*.ddl`
-    * files track widening MERGE evolution (Delta keeps the same per-
-    * version record in its log); tables created before evolution landed
-    * fall back to the create-time `schema.ddl`. */
-  def schemaAt(v: Long): org.apache.spark.sql.types.StructType = {
-    val versioned = logDir.resolve(f"schema-v$v%08d.ddl")
-    val p = if (Files.exists(versioned)) versioned else logDir.resolve("schema.ddl")
-    org.apache.spark.sql.types.StructType.fromDDL(Files.readString(p))
-  }
+  /** The table schema AS OF version `v` — recorded in every manifest
+    * (`#schema=`), so widening MERGE evolution and the DDL verbs publish
+    * it in the same claim as the version (Delta keeps the same
+    * per-version record in its log). */
+  def schemaAt(v: Long): org.apache.spark.sql.types.StructType = pin(v).schema
 
   /** Project `df` onto `schema`: absent columns (rows written before a
     * widening evolution) surface as typed NULLs — or, when the column
@@ -301,60 +278,21 @@ final class TxTable private (spark: SparkSession, dir: String,
         .getOrElse(lit(null).cast(f.dataType).as(f.name))
     }: _*)
 
-  /** Column DEFAULT expressions AS OF version `v`: the most recent
-    * `defaults-v*.txt` at or before `v` (tables that never ran
-    * `addColumn` have none), restricted to columns the version's schema
-    * actually carries — a later DROP makes a default inert, and a
-    * re-ADD writes a fresh defaults record that supersedes it. */
-  def defaultsAt(v: Long): Map[String, String] = {
-    val recorded = listNames(logDir)
-      .filter(n => n.startsWith("defaults-v") && n.endsWith(".txt"))
-      .map(_.stripPrefix("defaults-v").stripSuffix(".txt").toLong)
-      .filter(_ <= v)
-    if (recorded.isEmpty) Map.empty
-    else {
-      val fields = schemaAt(v).fieldNames.toSet
-      Files.readAllLines(
-          logDir.resolve(f"defaults-v${recorded.max}%08d.txt"),
-          StandardCharsets.UTF_8)
-        .asScala.filter(_.nonEmpty)
-        .map { l => val p = l.split('\t'); p(0) -> p(1) }
-        .toMap.filter { case (c, _) => fields.contains(c) }
-    }
-  }
+  /** Column DEFAULT expressions AS OF version `v` (`#defaults=`; empty
+    * for tables that never ran `addColumn`). Only columns the version's
+    * schema carries have one: DROP removes a column's default, and a
+    * re-ADD records a fresh one. */
+  def defaultsAt(v: Long): Map[String, String] = pin(v).defaults
 
-  /** Column-name ALIASES as of version `v`: logical name → the physical
-    * names earlier commits may have stored it under, most recent rename
-    * first (the Delta/Iceberg column-mapping record, kept as per-version
-    * cumulative `renames-v*.txt` snapshots like the defaults). Read-side
-    * only — writers always store the current logical name. */
-  def aliasesAt(v: Long): Map[String, Seq[String]] = {
-    val recorded = listNames(logDir)
-      .filter(n => n.startsWith("renames-v") && n.endsWith(".txt"))
-      .map(_.stripPrefix("renames-v").stripSuffix(".txt").toLong)
-      .filter(_ <= v)
-    if (recorded.isEmpty) Map.empty
-    else Files.readAllLines(
-        logDir.resolve(f"renames-v${recorded.max}%08d.txt"),
-        StandardCharsets.UTF_8)
-      .asScala.filter(_.nonEmpty)
-      .map { l => val p = l.split('\t'); p(0) -> p(1).split(',').toSeq }
-      .toMap
-  }
-
-  private def writeAliases(v: Long, a: Map[String, Seq[String]]): Unit =
-    Files.writeString(logDir.resolve(f"renames-v$v%08d.txt"),
-      a.toSeq.sortBy(_._1)
-        .map { case (c, as) => s"$c\t${as.mkString(",")}" }.mkString("\n"))
+  /** Column-name ALIASES as of version `v` (`#renames=`): logical name →
+    * the physical names earlier commits may have stored it under, most
+    * recent rename first (the Delta/Iceberg column-mapping record).
+    * Read-side only — writers always store the current logical name. */
+  def aliasesAt(v: Long): Map[String, Seq[String]] = pin(v).aliases
 
   /** Resolved physical layout of version `v` for external readers (the
-    * DSv2 connector): bucketId → (data bucket dir, DV bucket dirs).
-    * Paths come through `bucketPath`, so shallow-clone absolute pointers
-    * resolve exactly as the native read path resolves them. */
-  private[graft] def layoutAt(v: Long): Map[Long, (String, Seq[String])] =
-    manifest(v).map { case (b, r) =>
-      b -> (bucketPath(r.data, b), r.dvs.map(d => bucketPath(d, b)))
-    }
+    * DSv2 connector): see [[TxTable.Pin.layout]]. */
+  private[graft] def layoutAt(v: Long): Map[Long, (String, Seq[String])] = pin(v).layout
 
   /** Time travel: the table exactly as of committed version `v`. Every
     * manifest is immutable and copy-on-write never rewrites a referenced
@@ -367,29 +305,25 @@ final class TxTable private (spark: SparkSession, dir: String,
     require(v >= 0 && v <= version, s"version $v not in [0, $version]")
     require(Files.exists(logDir.resolve(f"v$v%08d.txt")),
       s"version $v has been vacuumed")
-    val m = manifest(v)
+    val p = pin(v)
     // mergeSchema inside readBuckets: buckets written before a widening
     // evolution lack the new columns; the merged footer schema carries
     // them as NULL and `conform` pins the column set to the version's
     // recorded schema. Deletion vectors are applied per DV'd bucket.
-    readBuckets(m, m.keySet, schemaAt(v), defaultsAt(v), aliasesAt(v))
+    readBuckets(p, p.entries.keySet)
   }
 
   /** The bucket ids of the HEAD manifest a `lookup(keys)` must read —
     * exact (hash, not min/max ranges), and the prune certificate the
     * point-lookup entry carries through its hash channel. */
-  def lookupBuckets(keys: DataFrame): Set[Long] = {
-    val v = version
-    lookupBuckets(keys, manifest(v), bucketCountAt(v))
-  }
+  def lookupBuckets(keys: DataFrame): Set[Long] = lookupBuckets(keys, pin(version))
 
   /** Prune under an already-pinned snapshot: both the hash (layout count)
     * and the membership filter (manifest) come from ONE version, so a
     * concurrent commit — in particular a `compact(newBuckets)` rebucket —
     * landing mid-lookup cannot make the prune set and the read disagree. */
-  private def lookupBuckets(keys: DataFrame, m: Map[Long, BucketRef],
-                            n: Int): Set[Long] =
-    distinctBuckets(keys, n).filter(m.contains)
+  private def lookupBuckets(keys: DataFrame, p: Pin): Set[Long] =
+    distinctBuckets(keys, p.buckets).filter(p.entries.contains)
 
   /** Rows of `df` when its optimized plan collapses to a driver-local
     * relation (every `Seq(...).toDF` protocol batch, and anything
@@ -462,12 +396,9 @@ final class TxTable private (spark: SparkSession, dir: String,
     * their hashed bucket. The same pruning serves every layout the table
     * has evolved through, because the count is read from the manifest. */
   def lookup(keys: DataFrame): DataFrame = {
-    val v = version
+    val p = pin(version)
     val probe = keys.select(keyCols.map(col): _*).dropDuplicates(keyCols)
-    val m = manifest(v)
-    readBuckets(m, lookupBuckets(probe, m, bucketCountAt(v)), schemaAt(v),
-        defaultsAt(v), aliasesAt(v))
-      .join(probe, keyCols, "left_semi")
+    readBuckets(p, lookupBuckets(probe, p)).join(probe, keyCols, "left_semi")
   }
 
   /** CHECK constraints (Delta's `ALTER TABLE ADD CONSTRAINT` shape):
@@ -982,23 +913,64 @@ final class TxTable private (spark: SparkSession, dir: String,
     commit
   }
 
-  /** LOGICAL CONFLICT RESOLUTION for a lost publish (the Delta/Iceberg
+  /** THE optimistic commit loop — every writer verb but the single-claim
+    * ones (`create`, `branch`, `shallowClone`, `replaceBuckets`) runs
+    * here. Each round pins the head, runs the verb's `attempt` on it
+    * (None = nothing to publish: the head version is the answer) and
+    * publishes the attempt's entries and version record in ONE
+    * create-exclusive claim of the next version. A lost claim counts in
+    * [[publishRetries]], then tries the disjoint re-point against the new
+    * head (see [[repoint]]); a real conflict drops the attempt's data dir
+    * and re-pins — the Delta/Iceberg optimistic-retry protocol. The row-
+    * tracking high-water mark only ever rises: a version that allocated
+    * nothing (restore, fastForward, DDL) inherits the head's. `op` names
+    * the version unless the attempt set its own. */
+  @annotation.tailrec
+  private def commitLoop(op: String)(attempt: Pin => Option[Attempt]): Long = {
+    val base = pin(version)
+    attempt(base) match {
+      case None => base.v
+      case Some(a0) =>
+        val a = a0.copy(next = a0.next.copy(v = base.v + 1,
+          op = if (a0.next.op.nonEmpty) a0.next.op else op,
+          ridHwm = math.max(a0.next.ridHwm, base.ridHwm)))
+        prePublishHook()
+        @annotation.tailrec
+        def claim(p: Pin): Option[Long] =
+          if (publish(p)) Some(p.v)
+          else {
+            publishRetries.incrementAndGet()
+            repoint(base, a, pin(version)) match {
+              case Some(q) => claim(q)
+              case None => None
+            }
+          }
+        claim(a.next) match {
+          case Some(v) => v
+          case None =>
+            a.dir.foreach(d => TxTable.drop(dataDir.resolve(d).toString))
+            commitLoop(op)(attempt)
+        }
+    }
+  }
+
+  /** LOGICAL CONFLICT RESOLUTION for a lost claim (the Delta/Iceberg
     * commit-retry optimization): the loser's already-written commit dir
     * stays EXACTLY RIGHT as long as every commit that beat it (a) kept
-    * the same bucket count, (b) kept the same schema, and (c) touched
-    * only buckets DISJOINT from the loser's — its keep-rows came from
-    * buckets no winner changed, so the expensive data pass need not
-    * rerun. This re-points the head manifest at the existing dir and
-    * re-publishes: a metadata-only retry instead of a full re-merge.
-    * Returns the committed version, or -1 on a REAL conflict (caller
-    * falls back to the rebase loop and drops the stale dir). At 100 TB
-    * this is the difference between N writers to disjoint key ranges
-    * scaling near-linearly and every loser re-reading gigabytes: the
-    * serial section shrinks to manifest I/O. ConcurrencySpec pins that
-    * resolved histories stay linearizable and lose no updates. The BASE
-    * manifest/schema come in from the caller's already-loaded state —
-    * never re-read from the log, where a concurrent zero-retention
-    * vacuum could have reclaimed the base version.
+    * the same bucket count, (b) kept the same version record (schema,
+    * defaults, renames, widen), and (c) touched only buckets DISJOINT
+    * from the loser's — its keep-rows came from buckets no winner
+    * changed, so the expensive data pass need not rerun. The re-point
+    * is the head's entries with the loser's `touched` buckets swapped
+    * in, under the loser's record: a metadata-only retry instead of a
+    * full re-merge. None on a REAL conflict, or for a verb whose attempt
+    * offers no `touched` set. At 100 TB this is the difference between
+    * N writers to disjoint key ranges scaling near-linearly and every
+    * loser re-reading gigabytes: the serial section shrinks to manifest
+    * I/O. ConcurrencySpec pins that resolved histories stay
+    * linearizable and lose no updates. The BASE pin is the loop's
+    * already-loaded one — never re-read from the log, where a concurrent
+    * zero-retention vacuum could have reclaimed the base version.
     *
     * READ-SET discipline: the disjoint-buckets test covers only writers
     * whose read-set EQUALS their touched buckets — the keyed paths
@@ -1010,95 +982,55 @@ final class TxTable private (spark: SparkSession, dir: String,
     * re-pointing would publish a version that silently misses those rows
     * (write-skew — the same reason Delta's conflict checker flags
     * concurrently-added files matching the read predicate). `readWhere`
-    * carries that predicate; the resolve re-evaluates it over the
-    * winners' changed buckets AT THE HEAD VERSION and returns -1 on any
-    * match, falling back to the rebase loop which recomputes the update
-    * from fresh state. Rows the winners REMOVED from changed buckets
-    * need no check: serialized after the winners, the update owes them
-    * nothing. */
-  private def resolveDisjointPublish(n: Int, touched: Set[Long],
-                                     commit: String, op: String,
-                                     outSchemaDdl: String,
-                                     base: Map[Long, BucketRef],
-                                     baseSchemaDdl: String,
-                                     readWhere: Option[String] = None): Long = {
-    var resolved = -1L
-    while (resolved < 0) {
-      val h = version
-      if (bucketCountAt(h) != n) return -1L
-      if (schemaAt(h).toDDL != baseSchemaDdl) return -1L
-      val head = manifest(h)
-      val changed = (base.keySet ++ head.keySet)
-        .filter(b => base.get(b) != head.get(b))
-      if (changed.exists(touched.contains)) return -1L
-      if (readWhere.isDefined && changed.nonEmpty &&
-          predicateMatchesIn(readWhere.get, head, changed, h)) return -1L
-      // The loser's commit dir has been unreferenced since its publish
+    * carries that predicate; it is re-evaluated over the winners'
+    * changed buckets AT THE HEAD VERSION, and any match is a conflict,
+    * so the loop recomputes the update from fresh state. Rows the
+    * winners REMOVED from changed buckets need no check: serialized
+    * after the winners, the update owes them nothing. */
+  private def repoint(base: Pin, a: Attempt, head: Pin): Option[Pin] =
+    a.touched.flatMap { touched =>
+      val changed = (base.entries.keySet ++ head.entries.keySet)
+        .filter(b => base.entries.get(b) != head.entries.get(b))
+      // The loser's commit dir has been unreferenced since its claim
       // failed; a concurrent vacuum whose retainMs is shorter than this
-      // resolve loop's duration may have reclaimed it. Re-verify right
-      // before the publish link so a re-pointed manifest can never
-      // reference a deleted dir — the remaining check-to-link window is
-      // the same bounded writeCommit→publish gap every writer has (and
-      // vacuum's retainMs contract covers it). Vanished ⇒ rebase.
-      if (!Files.isDirectory(dataDir.resolve(commit))) return -1L
-      val next = (head -- touched) ++
-        bucketsIn(commit).map(_ -> BucketRef(commit, Nil))
-      val lines = next.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
-      if (publish(h + 1, n, op, lines)) {
-        writeSchemaRecord(h + 1, outSchemaDdl)
-        resolved = h + 1
-      } else publishRetries.incrementAndGet() // lost again: re-check vs new head
+      // retry may have reclaimed it. Re-verify right before the claim so
+      // a re-pointed manifest can never reference a deleted dir — the
+      // remaining check-to-link window is the same bounded
+      // writeCommit→publish gap every writer has (and vacuum's retainMs
+      // contract covers it). Vanished ⇒ rebase.
+      val ok = head.buckets == base.buckets && head.record == base.record &&
+        !changed.exists(touched.contains) &&
+        !(a.readWhere.isDefined && changed.nonEmpty &&
+          predicateMatchesIn(a.readWhere.get, head, changed)) &&
+        a.dir.forall(d => Files.isDirectory(dataDir.resolve(d)))
+      if (!ok) None
+      else Some(a.next.copy(v = head.v + 1,
+        entries = (head.entries -- touched) ++ a.next.entries.filter(e => touched(e._1)),
+        ridHwm = math.max(a.next.ridHwm, head.ridHwm)))
     }
-    resolved
-  }
 
-  /** True when any row of `buckets` under manifest `m` (at version `v`)
-    * satisfies `where` — the update-retry read-set conflict probe. NULL
-    * predicate evaluations don't fire (the update's own contract), and
-    * the LIMIT 1 under the count keeps the probe O(first match). */
-  private def predicateMatchesIn(where: String, m: Map[Long, BucketRef],
-                                 buckets: Set[Long], v: Long): Boolean = {
-    val present = buckets.filter(m.contains)
+  /** True when any row of `buckets` under pin `p` satisfies `where` — the
+    * update-retry read-set conflict probe. NULL predicate evaluations
+    * don't fire (the update's own contract), and the LIMIT 1 under the
+    * count keeps the probe O(first match). */
+  private def predicateMatchesIn(where: String, p: Pin, buckets: Set[Long]): Boolean = {
+    val present = buckets.filter(p.entries.contains)
     present.nonEmpty &&
-      readBuckets(m, present, schemaAt(v), defaultsAt(v), aliasesAt(v))
-        .filter(coalesce(expr(where), lit(false))).limit(1).count() > 0
+      readBuckets(p, present).filter(coalesce(expr(where), lit(false))).limit(1).count() > 0
   }
 
-  /** Record version `v`'s schema (`schema-v*.ddl`, read by [[schemaAt]]).
-    * Written after the version's publish, so it goes through a rename: a
-    * concurrent reader of the new head — a loser re-checking the schema
-    * in [[resolveDisjointPublish]] — finds either no record or the whole
-    * DDL, never the empty file a plain write exposes between its create
-    * and its write. A writer that dies in between leaves a `.tmp-` file
-    * for vacuum. */
-  private def writeSchemaRecord(v: Long, ddl: String): Unit = {
-    val tmp = logDir.resolve(s".tmp-${UUID.randomUUID()}")
-    Files.writeString(tmp, ddl)
-    Files.move(tmp, logDir.resolve(f"schema-v$v%08d.ddl"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Publish `lines` as version `v` under layout `buckets` — atomic
-    * create-exclusive through [[TxTable.commitPrimitive]], so exactly
-    * one writer can own a version number. The `#buckets=` header
-    * travels with every manifest (see `bucketCountAt`). */
-  /** A numeric `#key=value` header from manifest `v` (None when the
-    * version predates the header or never carried it). */
-  private def manifestHeader(v: Long, key: String): Option[Long] = {
-    val p = logDir.resolve(f"v$v%08d.txt")
-    if (!Files.exists(p)) None
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .takeWhile(_.startsWith("#"))
-      .collectFirst { case l if l.startsWith(s"#$key=") =>
-        l.stripPrefix(s"#$key=").trim.toLong }
-  }
+  /** `p` with the buckets in `replaced` re-pointed at `commit`'s freshly
+    * written buckets — the copy-on-write step every rewrite shares. A
+    * replaced bucket the commit left empty drops out of the manifest. */
+  private def rewritten(p: Pin, replaced: Set[Long], commit: String): Pin =
+    p.next((p.entries -- replaced) ++ bucketsIn(commit).map(_ -> BucketRef(commit, Nil)))
 
   /** Row-tracking high-water mark AS OF version `v`: every `_rid` ever
     * assigned at or before `v` is strictly below it. Rides the manifest
     * (`#ridhwm=`) so it is atomic with the commit claim — a lost publish
-    * race can never leave a stale mark, and `publish` carries it forward
-    * through verbs that allocate nothing (delete, compact, DDL). */
-  def ridHwmAt(v: Long): Long = manifestHeader(v, "ridhwm").getOrElse(0L)
+    * race can never leave a stale mark, and the commit loop carries it
+    * forward through verbs that allocate nothing (delete, compact, DDL). */
+  def ridHwmAt(v: Long): Long = pin(v).ridHwm
 
   /** True when the table carries the hidden-by-convention `_rid` row-
     * tracking column as of `v` (opt-in at create; presence in the
@@ -1106,26 +1038,20 @@ final class TxTable private (spark: SparkSession, dir: String,
   def rowTrackedAt(v: Long): Boolean =
     v >= 0 && schemaAt(v).fieldNames.contains(TxTable.RidCol)
 
-  private def publish(v: Long, buckets: Int, op: String,
-                      lines: Seq[String], ridHwm: Option[Long] = None): Boolean = {
+  /** Claim version `p.v` with `p`'s entries and record — atomic
+    * create-exclusive through [[TxTable.commitPrimitive]], so exactly
+    * one writer can own a version number, and a reader that sees the
+    * version sees all of it. */
+  private def publish(p: Pin): Boolean = {
     Files.createDirectories(logDir)
     val tmp = logDir.resolve(s".tmp-${UUID.randomUUID()}")
-    // Carry the row-tracking high-water mark forward monotonically: a
-    // verb that allocated ids passes its new mark, every other verb
-    // inherits the previous version's. max() keeps a replayed/raced
-    // writer from ever LOWERING the mark.
-    val hwm = (ridHwm.toSeq ++ (if (v > 0) manifestHeader(v - 1, "ridhwm") else None))
-      .reduceOption(_ max _)
-    val headers = Seq(s"#buckets=$buckets", s"#op=$op") ++
-      hwm.map(h => s"#ridhwm=$h")
-    Files.write(tmp, (headers ++ lines).mkString("\n")
-      .getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, TxTable.render(p).getBytes(StandardCharsets.UTF_8))
     val won = TxTable.commitPrimitive.putIfAbsent(
-      logDir.resolve(f"v$v%08d.txt"), tmp)
+      logDir.resolve(f"v${p.v}%08d.txt"), tmp)
     // The winner also publishes the version's CONSOLIDATED stats
     // manifest (after the claim — the manifest is the atomicity point;
     // readers that arrive before the stats file fall back per bucket).
-    if (won) writeStatsManifest(v, lines)
+    if (won) writeStatsManifest(p.v, p.entries)
     won
   }
 
@@ -1145,16 +1071,9 @@ final class TxTable private (spark: SparkSession, dir: String,
     * driver byte-array of all-table metadata). Advisory end to end: any
     * failure leaves readers on the per-bucket fallback, never a broken
     * commit — which is why the Try swallows. */
-  private def writeStatsManifest(v: Long, lines: Seq[String]): Unit =
+  private def writeStatsManifest(v: Long, refs: Map[Long, BucketRef]): Unit =
     scala.util.Try {
-      val next: Seq[(Long, BucketRef)] = lines
-        .filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map { line =>
-          val parts = line.split('\t')
-          val dvs = if (parts.length > 2 && parts(2).nonEmpty)
-            parts(2).split(',').toSeq else Nil
-          parts(0).toLong -> BucketRef(parts(1), dvs)
-        }.sortBy(_._1)
+      val next = refs.toSeq.sortBy(_._1)
       val prev: Map[Long, TxTable.BucketStats] =
         if (v == 0) Map.empty
         else TxTable.readStatsManifestAt(logDir, v - 1).getOrElse(Map.empty)
@@ -1237,17 +1156,18 @@ final class TxTable private (spark: SparkSession, dir: String,
   def merge(updates: DataFrame): Long = {
     val upd = pinBatch(updates)
     validate(upd) // CHECK constraints: reject BEFORE any write or publish.
-    rewriteTouched(upd, "merge") { (keep, cur) =>
+    rewriteTouched(upd, "merge") { (keep, p) =>
       // Widening schema evolution: columns the updates carry that the
       // table lacks join the schema (existing rows read them as NULL);
       // a replaced row's absent columns become NULL — the whole-row
       // MERGE contract. Order: current schema first, new columns appended.
+      val cur = p.schema
       val newFields = upd.schema.fields.filterNot(f => cur.fieldNames.contains(f.name))
       val widened = org.apache.spark.sql.types.StructType(cur.fields ++ newFields)
-      // A batch that omits a defaulted column gets the CURRENT default on
-      // its inserted/replaced rows (Delta's write-default contract).
-      val dflt = defaultsAt(version)
-      conform(upd, widened, dflt).unionByName(conform(keep, widened, dflt))
+      // A batch that omits a defaulted column gets the base version's
+      // default on its inserted/replaced rows (Delta's write-default
+      // contract).
+      conform(upd, widened, p.defaults).unionByName(conform(keep, widened, p.defaults))
     }
   }
 
@@ -1264,23 +1184,19 @@ final class TxTable private (spark: SparkSession, dir: String,
   def mergeClauses(updates: DataFrame, updateWhen: String,
                    deleteWhen: String, insertWhen: String): Long = {
     val upd = pinBatch(updates)
-    var committed = -1L
-    while (committed < 0) {
-      val v = version
-      val m = manifest(v)
-      val n = bucketCountAt(v)
-      val cur = schemaAt(v)
+    commitLoop("merge-clauses") { p =>
+      val cur = p.schema
       require(!cur.fieldNames.contains(TxTable.RidCol),
         "mergeClauses does not compose with row tracking (its batch must " +
           "carry the full table schema, and ids are engine-assigned) — " +
           "use merge/applyChanges on a row-tracked table")
       require(upd.columns.sorted.sameElements(cur.fieldNames.sorted),
         s"mergeClauses batch schema must match table schema ${cur.toDDL}")
-      val touched = distinctBuckets(upd, n)
-      val present = touched.filter(m.contains)
+      val touched = distinctBuckets(upd, p.buckets)
+      val present = touched.filter(p.entries.contains)
       val existing =
         if (present.isEmpty) conform(upd.limit(0), cur)
-        else readBuckets(m, present, cur, defaultsAt(v), aliasesAt(v))
+        else readBuckets(p, present)
       val keep = existing.join(upd.select(keyCols.map(col): _*), keyCols, "left_anti")
       val valCols = cur.fieldNames.toSeq.filterNot(keyCols.contains)
       val matched = existing.join(
@@ -1304,21 +1220,9 @@ final class TxTable private (spark: SparkSession, dir: String,
       val introduced = conform(survivors, cur).unionByName(conform(inserts, cur))
       validate(introduced)
       val out = conform(keep, cur).unionByName(introduced)
-      val commit = writeCommit(out, n)
-      val next = (m -- touched) ++
-        bucketsIn(commit).map(_ -> BucketRef(commit, Nil))
-      val lines = next.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
-      if (publish(v + 1, n, "merge-clauses", lines)) {
-        writeSchemaRecord(v + 1, cur.toDDL)
-        committed = v + 1
-      } else { // lost the race: try the disjoint-buckets metadata retry
-        publishRetries.incrementAndGet()
-        committed = resolveDisjointPublish(n, touched, commit,
-          "merge-clauses", cur.toDDL, m, cur.toDDL)
-        if (committed < 0) TxTable.drop(dataDir.resolve(commit).toString)
-      }
+      val commit = writeCommit(out, p.buckets)
+      Some(Attempt(rewritten(p, touched, commit), Some(commit), Some(touched)))
     }
-    committed
   }
 
   /** UPDATE ... SET ... WHERE — the predicate-DML verb (Delta's UPDATE):
@@ -1338,66 +1242,32 @@ final class TxTable private (spark: SparkSession, dir: String,
     require(set.nonEmpty, "UPDATE needs at least one SET column")
     require(set.keys.forall(c => !keyCols.contains(c)),
       s"cannot SET key column(s) ${set.keys.filter(keyCols.contains).mkString(",")}")
-    var committed = -1L
-    while (committed < 0) {
-      val v = version
-      val m = manifest(v)
-      val n = bucketCountAt(v)
-      val cur = schemaAt(v)
+    commitLoop("update") { p =>
+      val cur = p.schema
       require(set.keys.forall(cur.fieldNames.contains),
         s"SET column absent from schema ${cur.toDDL}")
-      val touched = distinctBuckets(
-        readBuckets(m, m.keySet, cur, defaultsAt(v), aliasesAt(v)).filter(where), n)
-        .filter(m.contains)
-      if (touched.isEmpty) return v // no matching rows: metadata no-op
-      val hit = coalesce(expr(where), lit(false))
-      val out = conform(readBuckets(m, touched, cur, defaultsAt(v), aliasesAt(v))
-        .select(cur.fieldNames.toSeq.map { c =>
-          set.get(c) match {
-            case Some(e) => when(hit, expr(e)).otherwise(col(c)).as(c)
-            case None => col(c)
-          }
-        }: _*), cur)
-      validate(out)
-      val commit = writeCommit(out, n)
-      val next = (m -- touched) ++
-        bucketsIn(commit).map(_ -> BucketRef(commit, Nil))
-      val lines = next.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
-      updatePrePublishHook()
-      if (publish(v + 1, n, "update", lines)) {
-        writeSchemaRecord(v + 1, cur.toDDL)
-        committed = v + 1
-      } else { // lost the race: try the disjoint-buckets metadata retry —
-        // WITH the read-set predicate: UPDATE read every bucket, so a
-        // winner's matching rows in an untouched bucket are a real
-        // conflict (write-skew otherwise; see resolveDisjointPublish).
-        // A real conflict drops the losing attempt's commit dir
-        // (compact's idiom) instead of leaving orphans for vacuum to find.
-        publishRetries.incrementAndGet()
-        committed = resolveDisjointPublish(n, touched, commit,
-          "update", cur.toDDL, m, cur.toDDL, readWhere = Some(where))
-        if (committed < 0) TxTable.drop(dataDir.resolve(commit).toString)
+      val touched = distinctBuckets(readBuckets(p, p.entries.keySet).filter(where), p.buckets)
+        .filter(p.entries.contains)
+      if (touched.isEmpty) None // no matching rows: metadata no-op
+      else {
+        val hit = coalesce(expr(where), lit(false))
+        val out = conform(readBuckets(p, touched)
+          .select(cur.fieldNames.toSeq.map { c =>
+            set.get(c) match {
+              case Some(e) => when(hit, expr(e)).otherwise(col(c)).as(c)
+              case None => col(c)
+            }
+          }: _*), cur)
+        validate(out)
+        val commit = writeCommit(out, p.buckets)
+        // The re-point carries the read-set predicate: UPDATE read every
+        // bucket, so a winner's matching rows in an untouched bucket are
+        // a real conflict (write-skew otherwise; see repoint).
+        Some(Attempt(rewritten(p, touched, commit), Some(commit), Some(touched), Some(where)))
       }
     }
-    committed
   }
 
-  /** DELETE ... WHERE — the predicate-DML delete verb (Delta's DELETE):
-    * every row satisfying `where` is removed, every other row is
-    * byte-identical. Same honest shape as [[update]]: a predicate cannot
-    * be hash-pruned, so ONE manifest-wide pass finds the buckets that
-    * actually hold matching rows, and the copy-on-write rewrite then
-    * touches ONLY those — untouched pointers carry forward, a no-match
-    * delete publishes nothing (version unchanged), a bucket whose rows
-    * all matched drops out of the manifest entirely, and a
-    * NULL-evaluating predicate does not fire (three-valued logic — the
-    * row survives). CHECK constraints are deliberately NOT re-validated:
-    * a delete introduces no rows, and every survivor already satisfied
-    * the constraints when it was written. Lost publish races take the
-    * same write-skew-guarded disjoint retry as update — the read-set is
-    * the whole table, so a winner's predicate-matching rows in an
-    * untouched bucket force a full rebase (re-pointing would publish a
-    * version that silently missed deleting them). */
   /** Row-level-operation commit (SQL UPDATE / MERGE INTO): the
     * replacement files for `affected` buckets are ALREADY on disk under
     * `data/<commit>` (written by the distributed [[graft.sources
@@ -1416,18 +1286,16 @@ final class TxTable private (spark: SparkSession, dir: String,
   private[graft] def replaceBuckets(replaced: Set[Long], commit: String,
                                     expectedVersion: Long,
                                     fileRows: Seq[(Long, String, Long)]): Long = {
-    val v = version
-    require(v == expectedVersion,
-      s"concurrent commit: table moved v$expectedVersion -> v$v while the " +
+    val p = pin(version)
+    require(p.v == expectedVersion,
+      s"concurrent commit: table moved v$expectedVersion -> v${p.v} while the " +
         "row-level operation ran — re-run the statement against the new snapshot")
-    val cur = schemaAt(v)
-    val n = bucketCountAt(v)
-    val m = manifest(v)
+    val m = p.entries
     // Post-image CHECK constraints over exactly the new rows (carryover
     // below re-serves rows that already passed their write's checks).
     validate(conform(
       FileMeta.parquet(spark, dataDir.resolve(commit).toString).drop("_b"),
-      cur, defaultsAt(v)))
+      p.schema, p.defaults))
     // A bucket the write produced WITHOUT the scan having planned it
     // holds only NOT-MATCHED insert rows (a matched bucket is always
     // scanned) — groups are buckets, so its new pointer would WIPE the
@@ -1449,7 +1317,7 @@ final class TxTable private (spark: SparkSession, dir: String,
               perFile.flatMap(_.get(f)).getOrElse(-1L)))
           }
         } else {
-          val rows = readBuckets(m, Set(b), cur, defaultsAt(v), aliasesAt(v))
+          val rows = readBuckets(p, Set(b))
           val tmp = Files.createTempDirectory(dataDir, ".carry")
           rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val fs = listNames(tmp).filter(_.endsWith(".parquet"))
@@ -1468,14 +1336,10 @@ final class TxTable private (spark: SparkSession, dir: String,
           (fs.map(_._3).sum.toString +:
             fs.map(f => s"${f._2}\t${f._3}")).mkString("\n"))
     }
-    val next = (m -- replaced -- written) ++
-      bucketsIn(commit).map(_ -> BucketRef(commit, Nil))
-    val lines = next.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
-    require(publish(v + 1, n, "replace", lines),
-      s"concurrent commit while publishing the row-level operation at v${v + 1} " +
+    require(publish(rewritten(p, replaced ++ written, commit).copy(op = "replace")),
+      s"concurrent commit while publishing the row-level operation at v${p.v + 1} " +
         "— re-run the statement against the new snapshot")
-    writeSchemaRecord(v + 1, cur.toDDL)
-    v + 1
+    p.v + 1
   }
 
   /** INSERT OVERWRITE — replace the table's entire visible content with
@@ -1491,68 +1355,52 @@ final class TxTable private (spark: SparkSession, dir: String,
   def overwriteAll(data: DataFrame): Long = {
     val batch = pinBatch(data)
     validate(batch)
-    var committed = -1L
-    while (committed < 0) {
-      val v = version
-      val n = bucketCountAt(v)
-      val cur = schemaAt(v)
-      val conformed = conform(batch, cur, defaultsAt(v))
-      val tracked = cur.fieldNames.contains(TxTable.RidCol)
-      val (out, newHwm) =
-        if (!tracked) (conformed, None)
+    // A full replacement conflicts with EVERY concurrent commit — no
+    // disjoint re-point exists; a lost claim rebases and replaces the
+    // new head.
+    commitLoop("overwrite") { p =>
+      val conformed = conform(batch, p.schema, p.defaults)
+      val (out, hwm) =
+        if (!p.schema.fieldNames.contains(TxTable.RidCol)) (conformed, p.ridHwm)
         else {
           val noExisting = batch.select(keyCols.map(col): _*).limit(0)
             .withColumn(TxTable.RidCol, lit(0L))
-          val (a, h) = assignRids(conformed, noExisting, n, ridHwmAt(v))
-          (a, Some(h))
+          assignRids(conformed, noExisting, p.buckets, p.ridHwm)
         }
-      val commit = writeCommit(out, n)
-      val lines = bucketsIn(commit).sorted
-        .map(b => fmt(b, BucketRef(commit, Nil)))
-      if (publish(v + 1, n, "overwrite", lines, newHwm)) {
-        writeSchemaRecord(v + 1, cur.toDDL)
-        committed = v + 1
-      } else {
-        // A full replacement conflicts with EVERY concurrent commit —
-        // no disjoint re-point exists; rebase and replace the new head.
-        publishRetries.incrementAndGet()
-        TxTable.drop(dataDir.resolve(commit).toString)
-      }
+      val commit = writeCommit(out, p.buckets)
+      Some(Attempt(rewritten(p, p.entries.keySet, commit).copy(ridHwm = hwm), Some(commit)))
     }
-    committed
   }
 
-  def deleteWhere(where: String): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val v = version
-      val m = manifest(v)
-      val n = bucketCountAt(v)
-      val cur = schemaAt(v)
-      val touched = distinctBuckets(
-        readBuckets(m, m.keySet, cur, defaultsAt(v), aliasesAt(v)).filter(where), n)
-        .filter(m.contains)
-      if (touched.isEmpty) return v // no matching rows: metadata no-op
-      val hit = coalesce(expr(where), lit(false))
-      val out = conform(readBuckets(m, touched, cur, defaultsAt(v), aliasesAt(v))
-        .filter(not(hit)), cur)
-      val commit = writeCommit(out, n)
-      val next = (m -- touched) ++
-        bucketsIn(commit).map(_ -> BucketRef(commit, Nil))
-      val lines = next.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
-      updatePrePublishHook()
-      if (publish(v + 1, n, "delete-where", lines)) {
-        writeSchemaRecord(v + 1, cur.toDDL)
-        committed = v + 1
-      } else { // lost the race: disjoint retry WITH the read-set predicate
-        publishRetries.incrementAndGet()
-        committed = resolveDisjointPublish(n, touched, commit,
-          "delete-where", cur.toDDL, m, cur.toDDL, readWhere = Some(where))
-        if (committed < 0) TxTable.drop(dataDir.resolve(commit).toString)
+  /** DELETE ... WHERE — the predicate-DML delete verb (Delta's DELETE):
+    * every row satisfying `where` is removed, every other row is
+    * byte-identical. Same honest shape as [[update]]: a predicate cannot
+    * be hash-pruned, so ONE manifest-wide pass finds the buckets that
+    * actually hold matching rows, and the copy-on-write rewrite then
+    * touches ONLY those — untouched pointers carry forward, a no-match
+    * delete publishes nothing (version unchanged), a bucket whose rows
+    * all matched drops out of the manifest entirely, and a
+    * NULL-evaluating predicate does not fire (three-valued logic — the
+    * row survives). CHECK constraints are deliberately NOT re-validated:
+    * a delete introduces no rows, and every survivor already satisfied
+    * the constraints when it was written. Lost publish races take the
+    * same write-skew-guarded disjoint retry as update — the read-set is
+    * the whole table, so a winner's predicate-matching rows in an
+    * untouched bucket force a full rebase (re-pointing would publish a
+    * version that silently missed deleting them). */
+  def deleteWhere(where: String): Long =
+    commitLoop("delete-where") { p =>
+      val touched = distinctBuckets(readBuckets(p, p.entries.keySet).filter(where), p.buckets)
+        .filter(p.entries.contains)
+      if (touched.isEmpty) None // no matching rows: metadata no-op
+      else {
+        val hit = coalesce(expr(where), lit(false))
+        val commit = writeCommit(conform(readBuckets(p, touched).filter(not(hit)), p.schema),
+          p.buckets)
+        // Re-pointed only WITH the read-set predicate, like update.
+        Some(Attempt(rewritten(p, touched, commit), Some(commit), Some(touched), Some(where)))
       }
     }
-    committed
-  }
 
   /** CDC APPLY — one ATOMIC commit applying `upserts` (replace-or-insert)
     * and `deleteKeys` (remove) together: the per-batch verb a
@@ -1591,11 +1439,10 @@ final class TxTable private (spark: SparkSession, dir: String,
     // empty commit dir) per such micro-batch — pointless version churn
     // for a CDC consumer replaying quiet periods.
     if (touchKeys.isEmpty) return version
-    rewriteTouched(touchKeys, "apply-changes") { (keep, cur) =>
-      val newFields = up.schema.fields.filterNot(f => cur.fieldNames.contains(f.name))
-      val widened = org.apache.spark.sql.types.StructType(cur.fields ++ newFields)
-      val dflt = defaultsAt(version)
-      conform(up, widened, dflt).unionByName(conform(keep, widened, dflt))
+    rewriteTouched(touchKeys, "apply-changes") { (keep, p) =>
+      val newFields = up.schema.fields.filterNot(f => p.schema.fieldNames.contains(f.name))
+      val widened = org.apache.spark.sql.types.StructType(p.schema.fields ++ newFields)
+      conform(up, widened, p.defaults).unionByName(conform(keep, widened, p.defaults))
     }
   }
 
@@ -1621,39 +1468,23 @@ final class TxTable private (spark: SparkSession, dir: String,
     * `dataPointers` exposes as the physical proof. */
   def deleteMergeOnRead(keys: DataFrame): Long = {
     val del = pinBatch(keys.select(keyCols.map(col): _*))
-    var committed = -1L
-    while (committed < 0) {
-      val v = version
-      val m = manifest(v)
-      val n = bucketCountAt(v)
-      val touched = distinctBuckets(del, n)
+    commitLoop("delete-mor") { p =>
       // Keys hashing into buckets the table has no data for are no-ops.
-      val affected = touched.filter(m.contains)
-      if (affected.isEmpty) return v
-      val dvName = s"dv-${UUID.randomUUID().toString.take(12)}"
-      del.withColumn("_b", bucketColFor(n))
-        .filter(col("_b").isin(affected.toSeq: _*))
-        .write.partitionBy("_b").parquet(dataDir.resolve(dvName).toString)
-      val next = m.map { case (b, r) =>
-        if (affected.contains(b)) b -> BucketRef(r.data, r.dvs :+ dvName) else b -> r }
-      if (publish(v + 1, n, "delete-mor",
-          next.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) })) {
-        // A DV delete never changes the logical schema.
-        writeSchemaRecord(v + 1, schemaAt(v).toDDL)
-        committed = v + 1
-      } else {
-        // Lost the commit race: drop the losing DV dir, rebase, retry.
-        publishRetries.incrementAndGet()
-        TxTable.drop(dataDir.resolve(dvName).toString)
+      val affected = distinctBuckets(del, p.buckets).filter(p.entries.contains)
+      if (affected.isEmpty) None
+      else {
+        val dvName = s"dv-${UUID.randomUUID().toString.take(12)}"
+        del.withColumn("_b", bucketColFor(p.buckets))
+          .filter(col("_b").isin(affected.toSeq: _*))
+          .write.partitionBy("_b").parquet(dataDir.resolve(dvName).toString)
+        // A lost claim drops the DV dir and rebases.
+        Some(Attempt(p.next(p.entries.map { case (b, r) =>
+          if (affected.contains(b)) b -> BucketRef(r.data, r.dvs :+ dvName) else b -> r
+        }), Some(dvName)))
       }
     }
-    committed
   }
 
-  /** Copy-on-write commit loop shared by merge/delete: prune to the
-    * buckets `keySource` hashes into, anti-join the matched keys out of
-    * those buckets' rows, let `build` shape the replacement rows, publish
-    * — rebasing on a fresh snapshot if another writer commits first. */
   /** Row-tracking id assignment for a rewrite's output: a row whose key
     * exists in `existing` INHERITS that key's id (stability across
     * updates — the row is the same logical row); every other row is new
@@ -1693,75 +1524,54 @@ final class TxTable private (spark: SparkSession, dir: String,
     (assigned, acc)
   }
 
+  /** Copy-on-write attempt shared by merge/delete/applyChanges: prune
+    * to the buckets `keySource` hashes into, anti-join the matched keys
+    * out of those buckets' rows, let `build` shape the replacement rows
+    * under the base pin, and hand the result to the commit loop. */
   private def rewriteTouched(keySource: DataFrame, op: String)
-      (build: (DataFrame, org.apache.spark.sql.types.StructType) => DataFrame): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val v = version
-      val m = manifest(v)
-      val n = bucketCountAt(v)
-      val curSchema = schemaAt(v)
+      (build: (DataFrame, Pin) => DataFrame): Long =
+    commitLoop(op) { p =>
       // Exact bucket pruning: only buckets a source key hashes into are
       // candidates. Bounded by the bucket count — driver-side by design.
-      val touched = distinctBuckets(keySource, n)
-      val present = touched.filter(m.contains)
-      // Conform to the LOGICAL schema of version v (touched buckets may
+      val touched = distinctBuckets(keySource, p.buckets)
+      val present = touched.filter(p.entries.contains)
+      // Conform to the LOGICAL schema of the base (touched buckets may
       // predate a widening evolution and physically lack new columns);
       // readBuckets also applies any pending deletion vectors, so a
       // copy-on-write rewrite of a DV'd bucket FOLDS its tombstones.
       val existing =
-        if (present.isEmpty) conform(keySource.limit(0), curSchema)
-        else readBuckets(m, present, curSchema, defaultsAt(v), aliasesAt(v))
+        if (present.isEmpty) conform(keySource.limit(0), p.schema)
+        else readBuckets(p, present)
       val keep = existing
         .join(keySource.select(keyCols.map(col): _*), keyCols, "left_anti")
-      val out0 = build(keep, curSchema)
+      val out0 = build(keep, p)
       // Row tracking: every rewrite verb funnels through here, so id
       // stability is enforced ONCE — rows keyed in `existing` keep their
       // ids (merge updates, kept neighbors, applyChanges upserts), new
       // keys draw fresh ids above the version's high-water mark.
-      val tracked = curSchema.fieldNames.contains(TxTable.RidCol)
-      val (out, newHwm) =
-        if (!tracked) (out0, None)
-        else {
-          val (a, h) = assignRids(out0, existing, n, ridHwmAt(v))
-          (a, Some(h))
-        }
-      val commit = writeCommit(out, n)
-      // Rewritten buckets come back CLEAN (their DVs were folded above).
-      val next = (m -- touched) ++
-        bucketsIn(commit).map(_ -> BucketRef(commit, Nil))
-      val lines = next.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
-      if (publish(v + 1, n, op, lines, newHwm)) {
-        // Record this version's logical schema (evolution is widening-only;
-        // a delete carries the current schema forward unchanged).
-        writeSchemaRecord(v + 1, out.schema.toDDL)
-        committed = v + 1
-      } else {
-        // Lost the commit race: if every winner touched only DISJOINT
-        // buckets, re-point this commit dir at the new head (metadata-only
-        // retry); a real conflict drops the dir, rebases, retries. A
-        // row-tracked commit that ALLOCATED ids must always rebase — the
-        // winner drew from the same high-water mark, so a metadata-only
-        // re-point could publish overlapping ids; the rebase re-reads the
-        // winner's mark and re-assigns. Allocation-free rewrites (keyed
-        // deletes, pure updates) keep the cheap retry.
-        publishRetries.incrementAndGet()
-        committed =
-          if (tracked && newHwm.exists(_ > ridHwmAt(v))) -1L
-          else resolveDisjointPublish(n, touched, commit, op,
-            out.schema.toDDL, m, curSchema.toDDL)
-        if (committed < 0) TxTable.drop(dataDir.resolve(commit).toString)
-      }
+      val (out, hwm) =
+        if (!p.schema.fieldNames.contains(TxTable.RidCol)) (out0, p.ridHwm)
+        else assignRids(out0, existing, p.buckets, p.ridHwm)
+      val commit = writeCommit(out, p.buckets)
+      // Rewritten buckets come back CLEAN (their DVs were folded above),
+      // and the version records the output's logical schema (evolution is
+      // widening-only; a delete carries the base schema forward). A
+      // commit that ALLOCATED row ids never re-points: the winner drew
+      // from the same high-water mark, so a metadata-only re-point could
+      // publish overlapping ids; the rebase re-reads the winner's mark
+      // and re-assigns. Allocation-free rewrites (keyed deletes, pure
+      // updates) keep the cheap retry.
+      Some(Attempt(
+        rewritten(p, touched, commit).copy(schemaDdl = out.schema.toDDL, ridHwm = hwm),
+        Some(commit), if (hwm > p.ridHwm) None else Some(touched)))
     }
-    committed
-  }
 
-  /** Spec-only fault injection: runs between an UPDATE's data write and
-    * its publish attempt, so a test can interleave a winning commit
-    * DETERMINISTICALLY (the update write-skew regression case — a race
-    * this narrow cannot be provoked reliably from outside). No-op in
-    * production use; nothing else consults it. */
-  private[graft] var updatePrePublishHook: () => Unit = () => ()
+  /** Spec-only fault injection: runs between every commit-loop attempt's
+    * data write and its first publish attempt, so a test can interleave
+    * a winning commit DETERMINISTICALLY (the write-skew regression cases
+    * — a race this narrow cannot be provoked reliably from outside). No-op
+    * in production use; nothing else consults it. */
+  private[graft] var prePublishHook: () => Unit = () => ()
 
   /** Commit-race losses this INSTANCE has rebased through (optimistic
     * concurrency observability: the write-contention probe and spec sum
@@ -1783,20 +1593,21 @@ final class TxTable private (spark: SparkSession, dir: String,
       s"need 0 <= vOld < vNew <= $version")
     require(Files.exists(logDir.resolve(f"v$vOld%08d.txt")),
       s"version $vOld has been vacuumed")
-    val mo = manifest(vOld)
-    val mn = manifest(vNew)
+    val po = pin(vOld)
+    val pn = pin(vNew)
+    val (mo, mn) = (po.entries, pn.entries)
     // A bucket is a change candidate when its base pointer OR its DV list
     // differs — a merge-on-read delete re-points no data but still changes
     // the bucket's visible rows.
     val changed = (mo.keySet ++ mn.keySet).filter(b => mo.get(b) != mn.get(b))
-    // Evolution is widening-only, so the newer version's schema is the
+    // Evolution is widening-only, so the newer version's record is the
     // superset; the older side conforms, reading absent columns as NULL.
-    val schema = schemaAt(vNew)
-    val valCols = schema.fieldNames.toSeq.filterNot(keyCols.contains)
+    // Both sides group by physical type if either version was widened.
+    val valCols = pn.schema.fieldNames.toSeq.filterNot(keyCols.contains)
     def side(m: Map[Long, BucketRef], tag: String): DataFrame =
-      readBuckets(m, changed, schema, defaultsAt(vNew), aliasesAt(vNew)).select(keyCols.map(col) ++
-        valCols.map(c => col(c).as(s"${tag}_$c")) :+
-        lit(true).as(s"_in_$tag"): _*)
+      readBuckets(pn.copy(entries = m, widened = po.widened ++ pn.widened), changed)
+        .select(keyCols.map(col) ++ valCols.map(c => col(c).as(s"${tag}_$c")) :+
+          lit(true).as(s"_in_$tag"): _*)
     val joined = side(mo, "old").join(side(mn, "new"), keyCols, "full_outer")
     val oldVals = struct(valCols.map(c => col(s"old_$c")): _*)
     val newVals = struct(valCols.map(c => col(s"new_$c")): _*)
@@ -1835,7 +1646,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     val floor = math.max(0L, head - math.max(1, keepVersions).toLong + 1)
     // Deletion-vector dirs referenced by a retained manifest are live too,
     // as is anything a live branch's manifests still reach.
-    val live = (floor to head).flatMap(v => manifest(v).values)
+    val live = (floor to head).flatMap(v => pin(v).entries.values)
       .flatMap(r => r.data +: r.dvs).toSet ++ branchLive
     val cutoff = System.currentTimeMillis() - retainMs
     val dead = listNames(dataDir).filter { name =>
@@ -2027,34 +1838,21 @@ final class TxTable private (spark: SparkSession, dir: String,
 
   private def compactClustered(newBuckets: Int, clusterCols: Seq[String],
                                clusterOf: DataFrame => Seq[org.apache.spark.sql.Column]): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val v = version
-      require(v >= 0, s"no committed version to compact at $dir")
-      val cur = schemaAt(v)
-      clusterCols.foreach(c => require(cur.fieldNames.contains(c),
-        s"cluster column '$c' not in schema at v$v"))
-      val m = manifest(v)
+    commitLoop("compact") { p =>
+      clusterCols.foreach(c => require(p.schema.fieldNames.contains(c),
+        s"cluster column '$c' not in schema at v${p.v}"))
       // Layout evolution rides the full rewrite: `newBuckets > 0` re-hashes
       // every row under the new count and the published header flips the
       // table's write-time layout — subsequent merges hash with it (and a
       // merge racing this rebucket loses the publish, rebases, re-hashes).
-      val n = if (newBuckets > 0) newBuckets else bucketCountAt(v)
+      val n = if (newBuckets > 0) newBuckets else p.buckets
       // DV-applied read: compaction FOLDS deletion vectors — the output
       // manifest is all-clean.
-      val rows = readBuckets(m, m.keySet, cur, defaultsAt(v), aliasesAt(v))
+      val rows = readBuckets(p, p.entries.keySet)
       val commit = writeCommit(rows, n, clusterOf(rows))
-      val lines = bucketsIn(commit).sorted.map(b => s"$b\t$commit")
-      val op = if (newBuckets > 0 && newBuckets != bucketCountAt(v)) "rebucket" else "compact"
-      if (publish(v + 1, n, op, lines)) {
-        writeSchemaRecord(v + 1, cur.toDDL)
-        committed = v + 1
-      } else { // lost the race
-        publishRetries.incrementAndGet()
-        TxTable.drop(dataDir.resolve(commit).toString)
-      }
+      val next = rewritten(p, p.entries.keySet, commit).copy(buckets = n)
+      Some(Attempt(if (n != p.buckets) next.copy(op = "rebucket") else next, Some(commit)))
     }
-    committed
   }
 
   /** DROP COLUMN — metadata-only schema NARROWING, the DDL counterpart
@@ -2068,45 +1866,37 @@ final class TxTable private (spark: SparkSession, dir: String,
     * by name — a production version would map columns by id. */
   def dropColumn(colName: String): Long = {
     require(!keyCols.contains(colName), s"cannot drop key column '$colName'")
-    // Dropping the declared partition source would silently flip every
-    // future commit to a FLAT layout (partitionColumn skips absent
-    // columns) — the same silent no-op class setPartitioning's
-    // declare-time validation exists to prevent. Clear the spec first.
-    partitionSpec.foreach { case (tf, c) =>
-      // Through the alias chain, like partitionColumn: a spec left
-      // naming a renamed column still protects its current name.
-      val lineage = colName +: aliasesAt(version).getOrElse(colName, Nil)
-      require(!lineage.contains(c),
-        s"cannot drop '$colName': it is the declared partition source " +
-          s"($tf($c)) — setPartitioning(\"\") first") }
-    var committed = -1L
-    while (committed < 0) {
-      val v = version
-      val cur = schemaAt(v)
-      require(cur.fieldNames.contains(colName), s"no column '$colName' at v$v")
-      val m = manifest(v)
-      val lines = m.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
-      if (publish(v + 1, bucketCountAt(v), s"drop-$colName", lines)) {
-        val narrowed = org.apache.spark.sql.types.StructType(
-          cur.fields.filterNot(_.name == colName))
-        writeSchemaRecord(v + 1, narrowed.toDDL)
-        committed = v + 1
-      }
+    commitLoop(s"drop-$colName") { p =>
+      // Dropping the declared partition source would silently flip every
+      // future commit to a FLAT layout (partitionColumn skips absent
+      // columns) — the same silent no-op class setPartitioning's
+      // declare-time validation exists to prevent. Clear the spec first.
+      partitionSpec.foreach { case (tf, c) =>
+        // Through the alias chain, like partitionColumn: a spec left
+        // naming a renamed column still protects its current name.
+        val lineage = colName +: p.aliases.getOrElse(colName, Nil)
+        require(!lineage.contains(c),
+          s"cannot drop '$colName': it is the declared partition source " +
+            s"($tf($c)) — setPartitioning(\"\") first") }
+      require(p.schema.fieldNames.contains(colName), s"no column '$colName' at v${p.v}")
+      Some(Attempt(p.next(p.entries).copy(
+        schemaDdl = org.apache.spark.sql.types.StructType(
+          p.schema.fields.filterNot(_.name == colName)).toDDL,
+        defaults = p.defaults - colName)))
     }
-    committed
   }
 
   /** ADD COLUMN ... DEFAULT — metadata-only schema WIDENING, the DDL
     * counterpart of `dropColumn`: the new version re-publishes the same
     * manifest (zero data rewritten, `dataPointers` unchanged) with a
-    * schema that appends the column and a per-version defaults record.
+    * schema that appends the column and its default in the record.
     * Rows written before the add physically lack the column and serve
     * the DEFAULT at read time (`conform`); rows written after carry
     * whatever value the writer supplied — physical presence always wins,
     * so a later explicit NULL stays NULL. This is the Iceberg
     * `initial-default` / Delta `ALTER TABLE ADD COLUMN ... DEFAULT`
-    * contract: on a 100 TB table the DDL costs one manifest + two small
-    * log files, never a rewrite; subsequent copy-on-write commits
+    * contract: on a 100 TB table the DDL costs one manifest, never a
+    * rewrite; subsequent copy-on-write commits
     * materialize the default only for the buckets they touch anyway.
     * The default must be a deterministic SQL expression over no columns
     * (a literal or literal expression) — validated eagerly so a bad
@@ -2119,55 +1909,27 @@ final class TxTable private (spark: SparkSession, dir: String,
     // Eager validation: the default must evaluate and cast to the column
     // type on a 1-row probe (also rejects column references).
     spark.range(1).select(expr(defaultSql).cast(field.dataType)).collect()
-    var committed = -1L
-    while (committed < 0) {
-      val v = version
-      val cur = schemaAt(v)
-      require(!cur.fieldNames.contains(colName),
-        s"column '$colName' already exists at v$v")
+    commitLoop(s"add-$colName") { p =>
+      require(!p.schema.fieldNames.contains(colName),
+        s"column '$colName' already exists at v${p.v}")
       // Physical names of renamed-away columns are RESERVED: old files
       // still store values under them, and name-resolved reads would
       // resurrect those values into a new same-named column (the Delta
       // column-mapping rule the dropColumn caveat documents).
-      require(!aliasesAt(v).values.flatten.toSet.contains(colName),
+      require(!p.aliases.values.flatten.toSet.contains(colName),
         s"'$colName' is a reserved physical alias of a renamed column")
-      val m = manifest(v)
-      val lines = m.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
-      if (publish(v + 1, bucketCountAt(v), s"add-$colName", lines)) {
-        val widened = org.apache.spark.sql.types.StructType(cur.fields :+ field)
-        writeSchemaRecord(v + 1, widened.toDDL)
-        val next = defaultsAt(v) + (colName -> defaultSql)
-        Files.writeString(logDir.resolve(f"defaults-v${v + 1}%08d.txt"),
-          next.toSeq.sorted.map { case (c, e) => s"$c\t$e" }.mkString("\n"))
-        committed = v + 1
-      }
+      Some(Attempt(p.next(p.entries).copy(
+        schemaDdl = org.apache.spark.sql.types.StructType(p.schema.fields :+ field).toDDL,
+        defaults = p.defaults + (colName -> defaultSql))))
     }
-    committed
   }
 
-  /** True when any widening evolution was ever recorded — flips the read
-    * path into per-commit type grouping (a cheap log listing; widen
-    * records are tiny and never deleted). */
-  private def everWidened: Boolean =
-    Files.isDirectory(logDir) && listNames(logDir).exists(_.startsWith("widen-v"))
-
-  /** Widening records as of `v`: column → the catalog types its files may
-    * PHYSICALLY carry from before each widen (most recent record ≤ v,
-    * cumulative like defaults/renames). Documentation + read-path flag;
-    * the reader's type grouping keys on actual footer schemas, so the
-    * record never has to be exhaustive to be safe. */
-  def widenedAt(v: Long): Map[String, Seq[String]] = {
-    val recorded = listNames(logDir)
-      .filter(n => n.startsWith("widen-v") && n.endsWith(".txt"))
-      .map(_.stripPrefix("widen-v").stripSuffix(".txt").toLong)
-      .filter(_ <= v)
-    if (recorded.isEmpty) Map.empty
-    else Files.readAllLines(
-        logDir.resolve(f"widen-v${recorded.max}%08d.txt"), StandardCharsets.UTF_8)
-      .asScala.filter(_.nonEmpty)
-      .map { l => val p = l.split('\t'); p(0) -> p(1).split(',').toSeq }
-      .toMap
-  }
+  /** Widening record as of `v` (`#widen=`): column → the catalog types
+    * its files may PHYSICALLY carry from before each widen, cumulative
+    * like defaults/renames. A non-empty record flips the read path into
+    * per-commit type grouping; the grouping keys on actual footer
+    * schemas, so the record never has to be exhaustive to be safe. */
+  def widenedAt(v: Long): Map[String, Seq[String]] = pin(v).widened
 
   /** WIDEN COLUMN TYPE — the remaining Delta/Iceberg schema-evolution
     * verb after add/drop/rename/default: `int → bigint` and
@@ -2175,8 +1937,8 @@ final class TxTable private (spark: SparkSession, dir: String,
     * source value round-trips exactly), METADATA-ONLY like the rest of
     * the DDL triad — the new version re-publishes the same manifest
     * (zero data rewritten, `dataPointers` unchanged; on a 100 TB table
-    * the widen costs two small log files) with the field's type widened
-    * in the recorded schema and a `widen-v*.txt` record that flips the
+    * the widen costs one manifest) with the field's type widened in the
+    * recorded schema and a `#widen=` record entry that flips the
     * read path into per-commit physical-type grouping: pre-widen files
     * keep serving their int32/float pages, cast to the logical type at
     * read (`conform`), while post-widen commits store the wide type
@@ -2197,40 +1959,27 @@ final class TxTable private (spark: SparkSession, dir: String,
     val allowed = Map(
       "int" -> Set("bigint", "double"),
       "float" -> Set("double"))
-    var committed = -1L
-    while (committed < 0) {
-      val v = version
-      val cur = schemaAt(v)
-      require(cur.fieldNames.contains(colName), s"no column '$colName' at v$v")
+    commitLoop(s"widen-$colName") { p =>
+      val cur = p.schema
+      require(cur.fieldNames.contains(colName), s"no column '$colName' at v${p.v}")
       val from = cur(colName).dataType.catalogString
       require(allowed.getOrElse(from, Set.empty).contains(to.catalogString),
         s"cannot widen $from to ${to.catalogString} — value-preserving " +
           s"promotions only: ${allowed.map { case (k, vs) => s"$k->{${vs.mkString(",")}}" }.mkString(", ")}")
-      val m = manifest(v)
-      val lines = m.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
-      if (publish(v + 1, bucketCountAt(v), s"widen-$colName", lines)) {
-        val widenedSchema = org.apache.spark.sql.types.StructType(
-          cur.fields.map(f =>
-            if (f.name == colName) f.copy(dataType = to) else f))
-        writeSchemaRecord(v + 1,
-          widenedSchema.toDDL)
-        val next = widenedAt(v) + (colName ->
-          (from +: widenedAt(v).getOrElse(colName, Nil)).distinct)
-        Files.writeString(logDir.resolve(f"widen-v${v + 1}%08d.txt"),
-          next.toSeq.sortBy(_._1)
-            .map { case (c, ts) => s"$c\t${ts.mkString(",")}" }.mkString("\n"))
-        committed = v + 1
-      }
+      Some(Attempt(p.next(p.entries).copy(
+        schemaDdl = org.apache.spark.sql.types.StructType(cur.fields.map(f =>
+          if (f.name == colName) f.copy(dataType = to) else f)).toDDL,
+        widened = p.widened +
+          (colName -> (from +: p.widened.getOrElse(colName, Nil)).distinct))))
     }
-    committed
   }
 
   /** RENAME COLUMN — metadata-only, completing the DDL triad with
     * `dropColumn` / `addColumn`: the new version re-publishes the same
     * manifest (zero data rewritten, `dataPointers` unchanged — on a
-    * 100 TB table the rename costs two small log files) with the field
-    * renamed in the schema and the old name recorded as a physical ALIAS
-    * (`renames-v*.txt`, the Delta/Iceberg column-mapping record). Reads
+    * 100 TB table the rename costs one manifest) with the field renamed
+    * in the schema and the old name recorded as a physical ALIAS
+    * (`#renames=`, the Delta/Iceberg column-mapping record). Reads
     * resolve the logical name through its alias chain per file, so
     * pre-rename files serve their stored values under the new name with
     * no rewrite, while post-rename writers store the new name physically;
@@ -2250,45 +1999,33 @@ final class TxTable private (spark: SparkSession, dir: String,
           .findFirstIn(pred).isDefined,
         s"cannot rename '$oldName': referenced by check '$ck' ($pred)")
     }
-    var committed = -1L
-    while (committed < 0) {
-      val v = version
-      val cur = schemaAt(v)
-      require(cur.fieldNames.contains(oldName), s"no column '$oldName' at v$v")
+    val committed = commitLoop(s"rename-$oldName-$newName") { p =>
+      val cur = p.schema
+      require(cur.fieldNames.contains(oldName), s"no column '$oldName' at v${p.v}")
       require(!cur.fieldNames.contains(newName),
-        s"column '$newName' already exists at v$v")
-      val aliases = aliasesAt(v)
-      require(!aliases.values.flatten.toSet.contains(newName),
+        s"column '$newName' already exists at v${p.v}")
+      require(!p.aliases.values.flatten.toSet.contains(newName),
         s"'$newName' is a reserved physical alias of a renamed column")
-      val m = manifest(v)
-      val lines = m.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
-      if (publish(v + 1, bucketCountAt(v), s"rename-$oldName-$newName", lines)) {
-        val renamed = org.apache.spark.sql.types.StructType(
-          cur.fields.map(f => if (f.name == oldName) f.copy(name = newName) else f))
-        writeSchemaRecord(v + 1, renamed.toDDL)
-        // The alias chain follows the logical column: rename a→b then b→c
-        // leaves c resolving through [b, a], in recency order.
-        val moved = (aliases - oldName) +
-          (newName -> (oldName +: aliases.getOrElse(oldName, Nil)))
-        writeAliases(v + 1, moved)
-        val defs = defaultsAt(v)
-        defs.get(oldName).foreach { d =>
-          val next = (defs - oldName) + (newName -> d)
-          Files.writeString(logDir.resolve(f"defaults-v${v + 1}%08d.txt"),
-            next.toSeq.sorted.map { case (c, e) => s"$c\t$e" }.mkString("\n"))
-        }
-        // The partition spec FOLLOWS the rename (Iceberg tracks partition
-        // fields through renames): without this, future commits would
-        // silently write FLAT — partitionColumn can't find the old name —
-        // while the operator believes the table is still day-partitioned.
-        // Already-written eras are untouched: their per-commit `_pspec`
-        // records the old name, which the read path resolves through the
-        // alias chain written above.
-        partitionSpec.foreach { case (tf, c) =>
-          if (c == oldName) setPartitioning(s"$tf($newName)") }
-        committed = v + 1
-      }
+      // The alias chain follows the logical column: rename a→b then b→c
+      // leaves c resolving through [b, a], in recency order; a DEFAULT
+      // follows the column to its new name.
+      Some(Attempt(p.next(p.entries).copy(
+        schemaDdl = org.apache.spark.sql.types.StructType(cur.fields.map(f =>
+          if (f.name == oldName) f.copy(name = newName) else f)).toDDL,
+        aliases = (p.aliases - oldName) +
+          (newName -> (oldName +: p.aliases.getOrElse(oldName, Nil))),
+        defaults = p.defaults.get(oldName)
+          .fold(p.defaults)(d => (p.defaults - oldName) + (newName -> d)))))
     }
+    // The partition spec FOLLOWS the rename (Iceberg tracks partition
+    // fields through renames): without this, future commits would
+    // silently write FLAT — partitionColumn can't find the old name —
+    // while the operator believes the table is still day-partitioned.
+    // Already-written eras are untouched: their per-commit `_pspec`
+    // records the old name, which the read path resolves through the
+    // alias chain recorded above.
+    partitionSpec.foreach { case (tf, c) =>
+      if (c == oldName) setPartitioning(s"$tf($newName)") }
     committed
   }
 
@@ -2305,41 +2042,25 @@ final class TxTable private (spark: SparkSession, dir: String,
     * (returns the current version unchanged when nothing qualifies).
     * Rewritten buckets come back clean (DVs folded) and one file per
     * cell. Same optimistic publish loop as every writer. */
-  def compactPartial(minFiles: Int = 2): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val v = version
-      require(v >= 0, s"no committed version to compact at $dir")
-      val m = manifest(v)
-      val n = bucketCountAt(v)
-      val cur = schemaAt(v)
+  def compactPartial(minFiles: Int = 2): Long =
+    commitLoop("compact-partial") { p =>
       // Files are counted per cell (leaf dir): a partitioned bucket holds
       // one file per partition value, which is not fragmentation.
-      val degraded = m.filter { case (b, r) =>
+      val degraded = p.entries.filter { case (b, r) =>
         r.dvs.nonEmpty ||
           parquetFilesUnder(Paths.get(bucketPath(r.data, b)))
             .groupBy(_.getParent).values.exists(_.size >= minFiles)
-      }
-      if (degraded.isEmpty) return v
-      // Same bucket count -> the rewrite reproduces exactly the degraded
-      // bucket ids, one file per (bucket × partition value) cell.
-      val commit = writeCommit(
-        readBuckets(m, degraded.keySet, cur, defaultsAt(v), aliasesAt(v)), n)
-      // Degraded buckets are REPLACED (a bucket whose DVs deleted every
-      // row drops out of the manifest entirely, like a full-delete merge).
-      val next = (m -- degraded.keySet) ++
-        bucketsIn(commit).map(_ -> BucketRef(commit, Nil))
-      val lines = next.toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
-      if (publish(v + 1, n, "compact-partial", lines)) {
-        writeSchemaRecord(v + 1, cur.toDDL)
-        committed = v + 1
-      } else { // lost the race
-        publishRetries.incrementAndGet()
-        TxTable.drop(dataDir.resolve(commit).toString)
+      }.keySet
+      if (degraded.isEmpty) None
+      else {
+        // Same bucket count -> the rewrite reproduces exactly the degraded
+        // bucket ids, one file per (bucket × partition value) cell.
+        // Degraded buckets are REPLACED (a bucket whose DVs deleted every
+        // row drops out of the manifest, like a full-delete merge).
+        val commit = writeCommit(readBuckets(p, degraded), p.buckets)
+        Some(Attempt(rewritten(p, degraded, commit), Some(commit)))
       }
     }
-    committed
-  }
 
   /** RESTORE (Delta's `RESTORE TABLE ... VERSION AS OF`): re-publish
     * version `v`'s manifest — and its recorded schema — as a NEW head
@@ -2357,18 +2078,9 @@ final class TxTable private (spark: SparkSession, dir: String,
     require(v >= 0 && v <= version, s"version $v not in [0, $version]")
     require(Files.exists(logDir.resolve(f"v$v%08d.txt")),
       s"version $v has been vacuumed")
-    val lines = manifest(v).toSeq.sortBy(_._1).map { case (b, r) => fmt(b, r) }
-    val ddl = schemaAt(v).toDDL
-    var committed = -1L
-    while (committed < 0) {
-      val head = version
-      // The restored version's LAYOUT travels with its manifest too.
-      if (publish(head + 1, bucketCountAt(v), s"restore-v$v", lines)) {
-        writeSchemaRecord(head + 1, ddl)
-        committed = head + 1
-      }
-    }
-    committed
+    // The restored version's layout and record travel with its entries.
+    val target = pin(v).copy(op = "")
+    commitLoop(s"restore-v$v")(_ => Some(Attempt(target)))
   }
 
   /** BRANCH (Iceberg refs / Nessie): an isolated manifest chain under
@@ -2386,13 +2098,15 @@ final class TxTable private (spark: SparkSession, dir: String,
     require(!isBranch, "cannot branch a branch")
     require(name.matches("[A-Za-z0-9_-]+"), s"bad branch name '$name'")
     val bLog = logDir.resolve("branches").resolve(name)
-    val b = new TxTable(spark, dir, keyCols, numBuckets, bLog)
+    val b = new TxTable(spark, dir, keyCols, bLog)
     if (b.version >= 0) return b // reattach to an existing branch
     val v = version
     require(v >= 0, "cannot branch an empty table")
     Files.createDirectories(bLog)
-    val lines = manifest(v).toSeq.sortBy(_._1).map { case (bk, r) => fmt(bk, r) }
-    require(b.publish(0L, bucketCountAt(v), "branch", lines),
+    // The fork point's whole record (schema, defaults, renames, widen)
+    // travels in the branch's v0, so a branch read of pre-evolution,
+    // pre-rename or pre-widen files resolves them as main does.
+    require(b.publish(pin(v).copy(v = 0L, op = "branch")),
       s"concurrent create of branch '$name'")
     // base.txt is written only AFTER winning the create-exclusive v0
     // publish: a losing concurrent creator throws above and never reaches
@@ -2400,23 +2114,9 @@ final class TxTable private (spark: SparkSession, dir: String,
     // main version (which would let a later fastForward compare against
     // the wrong base and publish over interleaved main commits).
     Files.writeString(bLog.resolve("base.txt"), v.toString)
-    Files.writeString(bLog.resolve("schema.ddl"), schemaAt(v).toDDL)
-    Files.writeString(bLog.resolve("schema-v00000000.ddl"), schemaAt(v).toDDL)
     // Branch writers enforce the same CHECK constraints as main.
     val ck = logDir.resolve("checks.txt")
     if (Files.exists(ck)) Files.copy(ck, bLog.resolve("checks.txt"))
-    // Column metadata travels with the fork: without the fork-point
-    // defaults/aliases, a branch read of pre-evolution or pre-rename
-    // files would lose served defaults and renamed values.
-    val d = defaultsAt(v)
-    if (d.nonEmpty)
-      Files.writeString(bLog.resolve("defaults-v00000000.txt"),
-        d.toSeq.sorted.map { case (c, e) => s"$c\t$e" }.mkString("\n"))
-    val al = aliasesAt(v)
-    if (al.nonEmpty)
-      Files.writeString(bLog.resolve("renames-v00000000.txt"),
-        al.toSeq.sortBy(_._1)
-          .map { case (c, as) => s"$c\t${as.mkString(",")}" }.mkString("\n"))
     b
   }
 
@@ -2438,12 +2138,12 @@ final class TxTable private (spark: SparkSession, dir: String,
     require(!isBranch, "fastForward applies to the main table")
     val bLog = logDir.resolve("branches").resolve(name)
     require(Files.isDirectory(bLog), s"no branch '$name'")
-    val b = new TxTable(spark, dir, keyCols, numBuckets, bLog)
+    val b = new TxTable(spark, dir, keyCols, bLog)
     val base = branchBase(name)
     val bv = b.version
-    val lines = b.manifest(bv).toSeq.sortBy(_._1).map { case (bk, r) => b.fmt(bk, r) }
-    val ddl = b.schemaAt(bv).toDDL
-    val n = b.bucketCountAt(bv)
+    // DDL staged on the branch (add/rename/widen) publishes with it: the
+    // branch head's whole record becomes main's.
+    val staged = b.pin(bv).copy(op = "")
     // Branches snapshot checks.txt at creation, so a CHECK constraint
     // added to MAIN after the fork was never enforced by the branch's
     // writers — re-validate the branch head against exactly those STALE
@@ -2459,25 +2159,11 @@ final class TxTable private (spark: SparkSession, dir: String,
             s"post-fork check '$ck' ($pred)")
       }
     }
-    var committed = -1L
-    while (committed < 0) {
-      val head = version
-      require(head == base,
-        s"non-fast-forward: main advanced $base -> $head since branch '$name' forked")
-      if (publish(head + 1, n, s"publish-$name", lines)) {
-        writeSchemaRecord(head + 1, ddl)
-        // DDL staged on the branch (addColumn/renameColumn) publishes
-        // with it: the branch head's column metadata becomes main's.
-        val d = b.defaultsAt(bv)
-        if (d.nonEmpty)
-          Files.writeString(logDir.resolve(f"defaults-v${head + 1}%08d.txt"),
-            d.toSeq.sorted.map { case (c, e) => s"$c\t$e" }.mkString("\n"))
-        val al = b.aliasesAt(bv)
-        if (al.nonEmpty) writeAliases(head + 1, al)
-        committed = head + 1
-      }
+    commitLoop(s"publish-$name") { p =>
+      require(p.v == base,
+        s"non-fast-forward: main advanced $base -> ${p.v} since branch '$name' forked")
+      Some(Attempt(staged))
     }
-    committed
   }
 
   /** SHALLOW CLONE (Delta's `CREATE TABLE ... SHALLOW CLONE`): a new,
@@ -2497,45 +2183,31 @@ final class TxTable private (spark: SparkSession, dir: String,
     require(!isBranch, "clone from the main table, not a branch")
     val v = version
     require(v >= 0, "cannot clone an empty table")
-    val n = bucketCountAt(v)
-    val t = new TxTable(spark, dstDir, keyCols, n)
+    val p = pin(v)
+    val t = new TxTable(spark, dstDir, keyCols)
     require(t.version < 0, s"table already exists at $dstDir")
     Files.createDirectories(t.dataDir) // stays empty until the first clone-local write
-    def abs(commit: String): String =
-      if (commit.startsWith("/")) commit // cloning a clone keeps pointers
+    // Cloning a clone keeps its absolute pointers.
+    val abs = (commit: String) =>
+      if (commit.startsWith("/")) commit
       else dataDir.resolve(commit).toAbsolutePath.toString
-    val lines = manifest(v).toSeq.sortBy(_._1).map { case (b, r) =>
-      val dvs = r.dvs.map(abs)
-      if (dvs.isEmpty) s"$b\t${abs(r.data)}"
-      else s"$b\t${abs(r.data)}\t${dvs.mkString(",")}"
-    }
-    require(t.publish(0L, n, s"clone@v$v", lines),
+    // The source version's whole record snapshots into the clone's v0,
+    // like checks: the clone reads the source's pre-evolution,
+    // pre-rename and pre-widen files as the source would.
+    require(t.publish(p.copy(v = 0L, op = s"clone@v$v", entries = p.entries.map {
+        case (b, r) => b -> BucketRef(abs(r.data), r.dvs.map(abs)) })),
       s"concurrent create at $dstDir")
-    Files.writeString(t.logDir.resolve("schema-v00000000.ddl"), schemaAt(v).toDDL)
     // Self-description travels with the clone (create writes the same
     // sidecars): the merge keys let catalog consumers and the DSv2
     // connector open the clone from its directory alone, and the declared
     // layout columns (cluster/zonemap/bloom) keep governing the clone's
     // OWN copy-on-write commits exactly as they governed the source's.
-    Files.writeString(t.logDir.resolve("schema.ddl"), schemaAt(v).toDDL)
     Files.writeString(t.logDir.resolve("keys.txt"), keyCols.mkString(","))
     Seq("checks.txt", "cluster.txt", "zonemap.txt", "bloom.txt")
       .foreach { s =>
-        val p = logDir.resolve(s)
-        if (Files.exists(p)) Files.copy(p, t.logDir.resolve(s))
+        val f = logDir.resolve(s)
+        if (Files.exists(f)) Files.copy(f, t.logDir.resolve(s))
       }
-    // Column metadata snapshots at clone time, like checks: the clone
-    // reads the source's pre-evolution/pre-rename files through the same
-    // defaults and alias records the source would use.
-    val d = defaultsAt(v)
-    if (d.nonEmpty)
-      Files.writeString(t.logDir.resolve("defaults-v00000000.txt"),
-        d.toSeq.sorted.map { case (c, e) => s"$c\t$e" }.mkString("\n"))
-    val al = aliasesAt(v)
-    if (al.nonEmpty)
-      Files.writeString(t.logDir.resolve("renames-v00000000.txt"),
-        al.toSeq.sortBy(_._1)
-          .map { case (c, as) => s"$c\t${as.mkString(",")}" }.mkString("\n"))
     t
   }
 
@@ -2551,24 +2223,14 @@ final class TxTable private (spark: SparkSession, dir: String,
     val bs = logDir.resolve("branches")
     if (!Files.isDirectory(bs)) Set.empty
     else listNames(bs).flatMap { bn =>
-      val bl = bs.resolve(bn)
-      listNames(bl).collect { case s if s.startsWith("v") && s.endsWith(".txt") =>
-        Files.readAllLines(bl.resolve(s), StandardCharsets.UTF_8).asScala
-          .filter(l => l.nonEmpty && !l.startsWith("#"))
-          .flatMap { line =>
-            val p = line.split('\t')
-            p(1) +: (if (p.length > 2 && p(2).nonEmpty) p(2).split(',').toSeq else Nil)
-          }
-      }.flatten
+      val b = new TxTable(spark, dir, keyCols, bs.resolve(bn))
+      versionsIn(bs.resolve(bn)).flatMap(v =>
+        b.pin(v).entries.values.flatMap(r => r.data +: r.dvs))
     }.toSet
   }
 
-  /** The operation that produced version `v` (`#op=` manifest header);
-    * manifests from before the header existed read as "unknown". */
-  def opAt(v: Long): String =
-    Files.readAllLines(logDir.resolve(f"v$v%08d.txt"), StandardCharsets.UTF_8)
-      .asScala.find(_.startsWith("#op=")).map(_.stripPrefix("#op="))
-      .getOrElse("unknown")
+  /** The operation that produced version `v` (`#op=` manifest header). */
+  def opAt(v: Long): String = pin(v).op
 
   /** DESCRIBE HISTORY (Delta's audit surface): one row per still-retained
     * version — the operation that produced it, the layout in effect, how
@@ -2578,17 +2240,14 @@ final class TxTable private (spark: SparkSession, dir: String,
     * versions drop out (their manifests are gone), matching time travel's
     * availability exactly. */
   def history(): DataFrame = {
-    val rows = (0L to version)
-      .filter(v => Files.exists(logDir.resolve(f"v$v%08d.txt")))
-      .map { v =>
-        val m = manifest(v)
-        val prev: Map[Long, BucketRef] =
-          if (v == 0 || !Files.exists(logDir.resolve(f"v${v - 1}%08d.txt")))
-            Map.empty
-          else manifest(v - 1)
-        val changed = (m.keySet ++ prev.keySet).count(b => m.get(b) != prev.get(b))
-        (v, opAt(v), bucketCountAt(v), changed.toLong, schemaAt(v).fields.length)
-      }
+    val pins = versionsIn(logDir).sorted.map(pin)
+    val entriesAt = pins.map(p => p.v -> p.entries).toMap
+    val rows = pins.map { p =>
+      val m = p.entries
+      val prev = entriesAt.getOrElse(p.v - 1, Map.empty[Long, BucketRef])
+      val changed = (m.keySet ++ prev.keySet).count(b => m.get(b) != prev.get(b))
+      (p.v, p.op, p.buckets, changed.toLong, p.schema.fields.length)
+    }
     spark.createDataFrame(rows)
       .toDF("version", "op", "n_buckets", "buckets_changed", "n_cols")
   }
@@ -2596,7 +2255,7 @@ final class TxTable private (spark: SparkSession, dir: String,
   /** Physical layout census for specs/monitoring: (commit dirs referenced,
     * data files) behind the CURRENT manifest. */
   def layoutStats(): (Int, Int) = {
-    val m = manifest(version)
+    val m = pin(version).entries
     val commits = m.values.map(_.data).toSet
     val files = m.toSeq.map { case (b, r) =>
       parquetFilesUnder(Paths.get(bucketPath(r.data, b))).size
@@ -2606,6 +2265,147 @@ final class TxTable private (spark: SparkSession, dir: String,
 }
 
 object TxTable {
+
+  /** A bucket's physical state in a manifest: its base data commit dir
+    * plus zero or more merge-on-read deletion-vector dirs (equality
+    * deletes — key rows anti-joined at read). `data` and `dvs` hold
+    * commit-dir NAMES; resolve with [[bucketPath]]. */
+  private[graft] final case class BucketRef(data: String, dvs: Seq[String])
+
+  /** Commit names are normally dir-relative; a SHALLOW CLONE's manifest
+    * carries absolute pointers back into its source's data directory
+    * (`shallowClone`), so path resolution branches on the leading '/'. */
+  private[graft] def bucketPath(dataDir: Path, commit: String, b: Long): String =
+    (if (commit.startsWith("/")) Paths.get(commit)
+     else dataDir.resolve(commit)).resolve(s"_b=$b").toString
+
+  /** Everything version `v` means — one manifest `_log/v*.txt`, parsed
+    * once. Its header lines hold the version RECORD:
+    *
+    *   #buckets=N      the layout's bucket count
+    *   #op=…           the operation that produced the version
+    *   #ridhwm=H       the row-tracking high-water mark
+    *   #schema=…       the logical schema (DDL)
+    *   #defaults=…     column → ADD COLUMN default expression
+    *   #renames=…      column → its earlier physical names, newest first
+    *   #widen=…        column → the types its files held before each widen
+    *
+    * and every other line is an entry `b<TAB>commit[<TAB>dv1,dv2]`. The
+    * four column headers are cumulative, carried forward by every
+    * publish, so one create-exclusive claim publishes all of a version:
+    * a reader that sees version v sees its record, with no window and no
+    * side file. Header values are escaped (see [[render]]), so a tab or
+    * newline in a DDL or a default cannot break the line format. */
+  private[graft] final case class Pin(
+      v: Long, op: String, buckets: Int, ridHwm: Long,
+      entries: Map[Long, BucketRef], schemaDdl: String,
+      defaults: Map[String, String], aliases: Map[String, Seq[String]],
+      widened: Map[String, Seq[String]], dataDir: Path) {
+
+    lazy val schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.StructType.fromDDL(schemaDdl)
+
+    /** The version's column record: two versions with equal records
+      * read the same files the same way. */
+    def record = (schemaDdl, defaults, aliases, widened)
+
+    /** Resolved physical layout for external readers (the DSv2
+      * connector): bucketId → (data bucket dir, DV bucket dirs). Paths
+      * come through [[bucketPath]], so shallow-clone absolute pointers
+      * resolve exactly as the native read path resolves them. */
+    lazy val layout: Map[Long, (String, Seq[String])] = entries.map { case (b, r) =>
+      b -> (bucketPath(dataDir, r.data, b), r.dvs.map(d => bucketPath(dataDir, d, b)))
+    }
+
+    /** The next version on this one: `entries`, this record carried
+      * forward, the op left for the commit loop to name. */
+    def next(entries: Map[Long, BucketRef]): Pin =
+      copy(v = v + 1, op = "", entries = entries)
+  }
+
+  /** One commit-loop attempt on a pinned base: the version to claim,
+    * the fresh data dir it points at (dropped when the attempt loses),
+    * and — for a verb whose read-set is its `touched` buckets, or those
+    * plus the rows matching `readWhere` — what the disjoint re-point
+    * needs; no `touched` set means a lost claim always rebases. */
+  private[graft] final case class Attempt(next: Pin, dir: Option[String] = None,
+                                          touched: Option[Set[Long]] = None,
+                                          readWhere: Option[String] = None)
+
+  /** Parse manifest `file` as version `v` of a table whose relative
+    * commit names resolve under `dataDir`. */
+  private[graft] def readPin(file: Path, v: Long, dataDir: Path): Pin = {
+    val (hdr, body) = Files.readAllLines(file, StandardCharsets.UTF_8).asScala
+      .filter(_.nonEmpty).partition(_.startsWith("#"))
+    val h = hdr.map { l => val i = l.indexOf('='); l.substring(1, i) -> l.substring(i + 1) }.toMap
+    def recs(k: String): Seq[Seq[String]] = h.get(k).map(unescRecords).getOrElse(Nil)
+    def one(k: String): Option[String] = recs(k).headOption.flatMap(_.headOption)
+    if (!h.contains("schema")) throw new IllegalStateException(
+      s"$file carries no version record: the table was written by an older log format")
+    val entries = body.map { line =>
+      val parts = line.split('\t')
+      val dvs = if (parts.length > 2 && parts(2).nonEmpty) parts(2).split(',').toSeq else Nil
+      parts(0).toLong -> BucketRef(parts(1), dvs)
+    }.toMap
+    def lists(k: String) = recs(k).map(r => r.head -> r.tail).toMap
+    Pin(v, one("op").getOrElse(""), h("buckets").toInt, h.get("ridhwm").fold(0L)(_.toLong),
+      entries, one("schema").getOrElse(""), recs("defaults").map(r => r(0) -> r(1)).toMap,
+      lists("renames"), lists("widen"), dataDir)
+  }
+
+  /** `p` as manifest text (see [[Pin]]). */
+  private[graft] def render(p: Pin): String = {
+    def lists(m: Map[String, Seq[String]]) = m.toSeq.sortBy(_._1).map { case (k, vs) => k +: vs }
+    val headers = Seq(
+      s"#buckets=${p.buckets}",
+      s"#op=${escRecords(Seq(Seq(p.op)))}",
+      s"#ridhwm=${p.ridHwm}",
+      s"#schema=${escRecords(Seq(Seq(p.schemaDdl)))}",
+      s"#defaults=${escRecords(p.defaults.toSeq.sorted.map { case (k, e) => Seq(k, e) })}",
+      s"#renames=${escRecords(lists(p.aliases))}",
+      s"#widen=${escRecords(lists(p.widened))}")
+    val lines = p.entries.toSeq.sortBy(_._1).map { case (b, r) =>
+      if (r.dvs.isEmpty) s"$b\t${r.data}" else s"$b\t${r.data}\t${r.dvs.mkString(",")}"
+    }
+    (headers ++ lines).mkString("\n")
+  }
+
+  /** A header value: records joined by TAB, each record's fields joined
+    * by ',', every field escaping backslash, tab, newline, CR and comma —
+    * so no raw separator or line break survives inside a field. */
+  private def escRecords(records: Seq[Seq[String]]): String =
+    records.map(_.map(_.flatMap {
+      case '\\' => "\\\\"
+      case '\t' => "\\t"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case ',' => "\\,"
+      case c => c.toString
+    }).mkString(",")).mkString("\t")
+
+  private def unescRecords(value: String): Seq[Seq[String]] =
+    if (value.isEmpty) Nil
+    else value.split('\t').toSeq.map { r =>
+      val fields = Seq.newBuilder[String]
+      val cur = new StringBuilder
+      var i = 0
+      while (i < r.length) {
+        r(i) match {
+          case '\\' if i + 1 < r.length =>
+            i += 1
+            cur += (r(i) match {
+              case 't' => '\t'
+              case 'n' => '\n'
+              case 'r' => '\r'
+              case c => c
+            })
+          case ',' => fields += cur.toString; cur.clear()
+          case c => cur += c
+        }
+        i += 1
+      }
+      (fields += cur.toString).result()
+    }
 
   /** Default bucket-tier bloom sidecar size: 2^20 bits = 128 KiB per
     * (bucket × column) — ~1% FPP at 100k distinct values per bucket.
@@ -3011,7 +2811,7 @@ object TxTable {
              clusterCols: Seq[String] = Nil,
              zoneMapCols: Seq[String] = Nil,
              rowTracking: Boolean = false): TxTable = {
-    val t = new TxTable(spark, dir, keyCols, numBuckets)
+    val t = new TxTable(spark, dir, keyCols)
     require(t.version < 0, s"table already exists at $dir")
     if (bloomCols.nonEmpty) t.setBloomColumns(bloomCols)
     if (clusterCols.nonEmpty) t.setClusterColumns(clusterCols)
@@ -3020,23 +2820,22 @@ object TxTable {
     // every base row its id here; from then on presence of the column in
     // the logical schema routes every rewrite through id preservation.
     val (base2, hwm) =
-      if (!rowTracking) (base, None)
+      if (!rowTracking) (base, 0L)
       else {
         require(!base.columns.contains(RidCol),
           s"$RidCol is assigned by the engine — drop it from the base frame")
         val emptyRids = base.select(keyCols.map(col): _*).limit(0)
           .withColumn(RidCol, lit(0L))
-        val (a, h) = t.assignRids(base, emptyRids, numBuckets, 0L)
-        (a, Some(h))
+        t.assignRids(base, emptyRids, numBuckets, 0L)
       }
     val commit = t.writeCommit(base2, numBuckets)
-    require(t.publish(0L, numBuckets, "create",
-      t.bucketsIn(commit).sorted.map(b => s"$b\t$commit"), hwm),
+    // v0's record starts the chain every later version carries forward;
+    // its schema lets an all-rows-deleted version still serve an empty
+    // snapshot with correct columns.
+    require(t.publish(Pin(0L, "create", numBuckets, hwm,
+        t.bucketsIn(commit).map(_ -> BucketRef(commit, Nil)).toMap,
+        base2.schema.toDDL, Map.empty, Map.empty, Map.empty, t.dataDir)),
       s"concurrent create at $dir")
-    // Persist the schema so an all-rows-deleted version can still serve an
-    // empty snapshot with correct columns.
-    Files.writeString(Paths.get(dir, "_log", "schema.ddl"), base2.schema.toDDL)
-    Files.writeString(Paths.get(dir, "_log", "schema-v00000000.ddl"), base2.schema.toDDL)
     // Persist the merge keys: the table is SELF-DESCRIBING, so catalog
     // consumers (GraftCatalog, the DSv2 connector without a keys option)
     // can open it from the directory alone. Keys are fixed at create time
@@ -3054,10 +2853,10 @@ object TxTable {
     else None
   }
 
-  /** Attach to an existing table (manifest log already present). */
-  def open(spark: SparkSession, dir: String,
-           keyCols: Seq[String], numBuckets: Int = 16): TxTable =
-    new TxTable(spark, dir, keyCols, numBuckets)
+  /** Attach to an existing table (manifest log already present; its
+    * bucket count is read from each version's manifest). */
+  def open(spark: SparkSession, dir: String, keyCols: Seq[String]): TxTable =
+    new TxTable(spark, dir, keyCols)
 
   /** Recursively delete a table directory (test/teardown helper). */
   def drop(dir: String): Unit = {

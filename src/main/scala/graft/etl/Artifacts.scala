@@ -27,9 +27,12 @@ object Artifacts {
   /** Bump when any artifact's derivation changes: artifacts outlive the
     * process, so a code change without a version bump would silently serve
     * stale tables built by the previous definition. */
-  val Version = "v4" // v4: driver fixtures regenerated 2026-08-13 (events.ts
-                     // now TIMESTAMP(MICROS)) — artifacts built from the old
-                     // fixtures must not be served against the new ones.
+  val Version = "v5" // v5: a TxTable manifest carries its version record
+                     // (schema, defaults, renames, widen) in its headers and
+                     // the per-version side files are gone; TxTable reads no
+                     // older log, so no artifact table built before is opened.
+                     // v4: driver fixtures regenerated 2026-08-13 (events.ts
+                     // now TIMESTAMP(MICROS)).
 
   def path(sfDir: String, name: String): String =
     s"$root/$Version/${new java.io.File(sfDir).getName}/$name"

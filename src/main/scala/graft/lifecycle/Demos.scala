@@ -2205,7 +2205,7 @@ object Demos {
         t.compact()
         t.restore(1L)
       }
-      val t = TxTable.open(spark, dir, Seq("name"), numBuckets = 8)
+      val t = TxTable.open(spark, dir, Seq("name"))
       val hist = t.history()
         .select("version", "op", "n_buckets", "n_cols")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getInt(3)))

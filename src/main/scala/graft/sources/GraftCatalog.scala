@@ -112,7 +112,7 @@ final class GraftCatalog extends TableCatalog with FunctionCatalog {
     if (pinned < 0)
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         (ident.namespace() :+ ident.name()).toSeq)
-    new GraftTable(dir, keys, t.schemaAt(pinned), pinned, spjCapable = true)
+    new GraftTable(dir, keys, t.pin(pinned).schema, pinned, spjCapable = true)
   }
 
   private def readOnly(verb: String): Nothing =

@@ -816,12 +816,13 @@ final class GraftScanBuilder(dir: String, keyCols: Seq[String],
   private var statsVia: String = ""
   private var limit: Int = Int.MaxValue
 
+  /** The pinned version, read once for the builder's planning work. */
+  private lazy val pin = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
+    .pin(pinnedVersion)
+
   /** One consolidated-stats read shared by the builder's planning work
     * (partition-exact acceptance, ranged count, aggregate pushdown). */
-  private lazy val builderStats: StatsView = {
-    val t = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
-    new StatsView(dir, pinnedVersion, t.layoutAt(pinnedVersion), ignoreStats)
-  }
+  private lazy val builderStats: StatsView = new StatsView(dir, pin, ignoreStats)
 
   /** LIMIT pushes PARTIALLY: each partition's reader stops after emitting
     * `limit` surviving rows (post-DV), so a `LIMIT 10` on a 100 TB table
@@ -855,8 +856,7 @@ final class GraftScanBuilder(dir: String, keyCols: Seq[String],
     // partition-exact set. Anything beyond the exact set refuses.
     if (pushed.exists(f => !exactFilters.contains(f)) ||
       dataFilters.exists(f => !exactFilters.contains(f))) return false
-    val t = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
-    val layout = t.layoutAt(pinnedVersion)
+    val layout = pin.layout
     if (!layout.values.forall(_._2.isEmpty)) return false
     if (exactFilters.nonEmpty) {
       // RANGED COUNT tier: a single COUNT(*) under partition-exact
@@ -866,7 +866,7 @@ final class GraftScanBuilder(dir: String, keyCols: Seq[String],
       // exactly-pruned scan instead.
       if (aggregation.aggregateExpressions().length == 1 &&
         aggregation.aggregateExpressions()(0).isInstanceOf[CountStar]) {
-        rangedCount(t, layout) match {
+        rangedCount(layout) match {
           case Some(cnt) =>
             statsSchema = StructType(Seq(
               StructField("count(*)", LongType, nullable = false)))
@@ -886,7 +886,7 @@ final class GraftScanBuilder(dir: String, keyCols: Seq[String],
       countStarPushed = true
       return true
     }
-    computeStats(t, layout, aggregation) match {
+    computeStats(layout, aggregation) match {
       case Some((schema, row, via)) =>
         statsSchema = schema; statsRow = row; statsVia = via; true
       case None => false
@@ -900,10 +900,8 @@ final class GraftScanBuilder(dir: String, keyCols: Seq[String],
     * line (v1 sidecar, pre-sidecar commit), refuses the pushdown and the
     * exactly-pruned scan computes the count instead. Zero footer I/O
     * either way. */
-  private def rangedCount(t: graft.core.TxTable,
-                          layout: Map[Long, (String, Seq[String])])
-      : Option[Long] = {
-    val aliases = t.aliasesAt(pinnedVersion)
+  private def rangedCount(layout: Map[Long, (String, Seq[String])]): Option[Long] = {
+    val aliases = pin.aliases
     var total = 0L
     layout.values.toSeq.foreach { case (dataDir, _) =>
       val pspec = builderStats.pspec(dataDir)
@@ -951,12 +949,11 @@ final class GraftScanBuilder(dir: String, keyCols: Seq[String],
     if (specs.exists(_.isEmpty)) None else Some(specs.map(_.get))
   }
 
-  private def computeStats(t: graft.core.TxTable,
-                           layout: Map[Long, (String, Seq[String])],
+  private def computeStats(layout: Map[Long, (String, Seq[String])],
                            aggregation: Aggregation): Option[(StructType, Array[Any], String)] = {
     val specs = classify(aggregation).getOrElse(return None)
     val cols = specs.flatten.map(_._1).distinct.toSeq
-    val aliases = t.aliasesAt(pinnedVersion)
+    val aliases = pin.aliases
     var count = 0L
     // Running extrema per column, as CATALYST values (Long/Int/Double).
     val lo = scala.collection.mutable.Map.empty[String, Any]
@@ -1166,12 +1163,12 @@ final class GraftScanBuilder(dir: String, keyCols: Seq[String],
     if (cand.isEmpty) return Array.empty
     val t = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
     if (!t.everPartitioned) return Array.empty
-    val aliases = t.aliasesAt(pinnedVersion)
+    val aliases = pin.aliases
     // (transform, pval, specCol) per file — None = undecidable file.
     // Listing and pspec come from the consolidated stats manifest when
     // the version carries one (no walk, no per-commit file reads).
     val fileParts: Seq[Option[(String, Long, String)]] =
-      t.layoutAt(pinnedVersion).values.toSeq.flatMap { case (dataDir, _) =>
+      pin.layout.values.toSeq.flatMap { case (dataDir, _) =>
         val pspec = builderStats.pspec(dataDir)
         builderStats.listing(dataDir)
           .getOrElse(GraftDataSource.parquetFiles(dataDir)).map { f =>
@@ -1338,17 +1335,16 @@ final class GraftScanBuilder(dir: String, keyCols: Seq[String],
   * immutable commit dir. At 100 TB this is the Delta-checkpoint move:
   * planning cost stops scaling with file count and becomes one
   * manifest-sized read. */
-private[sources] final class StatsView(tableDir: String, pinnedVersion: Long,
-                                       layout: Map[Long, (String, Seq[String])],
+private[sources] final class StatsView(tableDir: String, pin: graft.core.TxTable.Pin,
                                        ignore: Boolean) {
   import graft.core.TxTable
 
   private val byDir: Map[String, TxTable.BucketStats] =
     if (ignore) Map.empty
-    else TxTable.readStatsManifest(tableDir, pinnedVersion) match {
+    else TxTable.readStatsManifest(tableDir, pin.v) match {
       case None => Map.empty
       case Some(m) =>
-        layout.flatMap { case (b, (dataDir, _)) => m.get(b).map(dataDir -> _) }
+        pin.layout.flatMap { case (b, (dataDir, _)) => m.get(b).map(dataDir -> _) }
     }
 
   /** The bucket's parquet listing from metadata — None (no manifest, or
@@ -1442,21 +1438,18 @@ final class GraftCountScan(dir: String, keyCols: Seq[String],
     * with zero footer I/O (the Delta/Iceberg log-stats count). Mixed or
     * pre-sidecar layouts fall back to footer record counts per file —
     * still metadata-only, just O(files) instead of O(buckets). */
-  private lazy val statsView: StatsView = {
-    val t = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
-    new StatsView(dir, pinnedVersion, t.layoutAt(pinnedVersion), ignoreStats)
-  }
+  private lazy val pin = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
+    .pin(pinnedVersion)
 
-  private lazy val allSidecars: Boolean = {
-    val t = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
-    t.layoutAt(pinnedVersion).values.forall { case (dataDir, _) =>
+  private lazy val statsView: StatsView = new StatsView(dir, pin, ignoreStats)
+
+  private lazy val allSidecars: Boolean =
+    pin.layout.values.forall { case (dataDir, _) =>
       statsView.rowsTotal(dataDir).isDefined
     }
-  }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val t = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
-    val total = t.layoutAt(pinnedVersion).values.toSeq.map { case (dataDir, dvs) =>
+    val total = pin.layout.values.toSeq.map { case (dataDir, dvs) =>
       require(dvs.isEmpty, "metadata count planned over a DV'd bucket")
       // The sidecar is ADVISORY (the documented contract): a corrupt or
       // empty record falls back to the per-file footer counts exactly
@@ -1544,11 +1537,13 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
     * pushdown — filters stay residuals, Spark re-evaluates them. */
   private var runtimeFilters: Array[Filter] = Array.empty
 
+  /** The pinned version, read once for this scan's whole planning pass:
+    * layout, bucket count and column record. */
+  private lazy val pin = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
+    .pin(pinnedVersion)
+
   /** One consolidated-stats read for this scan's whole planning pass. */
-  private lazy val statsView: StatsView = {
-    val t = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
-    new StatsView(dir, pinnedVersion, t.layoutAt(pinnedVersion), ignoreStats)
-  }
+  private lazy val statsView: StatsView = new StatsView(dir, pin, ignoreStats)
 
   override def filterAttributes(): Array[NamedReference] = {
     // A row-level-operation scan advertises ONLY the bucket-id metadata
@@ -1592,10 +1587,9 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
     * pmod(xxhash64(keys), n) (evaluated through Catalyst's own XxHash64);
     * both present means both predicates hold, so the read is their
     * INTERSECTION. */
-  private def chosenLayout(t: graft.core.TxTable,
-                           layout: Map[Long, (String, Seq[String])])
-      : Map[Long, (String, Seq[String])] = {
-    val n = t.bucketCountAt(pinnedVersion)
+  private def chosenLayout(): Map[Long, (String, Seq[String])] = {
+    val layout = pin.layout
+    val n = pin.buckets
     // Direct predicates on the bucket-id metadata column prune without
     // hashing (the column IS the partition id by construction) — but only
     // when it IS the metadata column: a real table column named
@@ -1619,7 +1613,7 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
       val buckets = sets.reduce(_ intersect _)
       layout.filter { case (b, _) => buckets.contains(b) }
     }
-    val bloomed = bloomPrune(t, keyed)
+    val bloomed = bloomPrune(keyed)
     // Zone-map bucket refutation: a bucket EVERY file of which the range
     // sidecar refutes drops from the plan (file-level pruning inside
     // surviving buckets happens at partition build). Only consulted when
@@ -1732,10 +1726,6 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
       : Option[Map[String, Map[String, (String, String, String)]]] =
     zoneCache.getOrElseUpdate(bucketDir, statsView.zoneSidecar(bucketDir))
 
-  private lazy val zoneAliases: Map[String, Seq[String]] =
-    graft.core.TxTable.open(SparkSession.active, dir, keyCols)
-      .aliasesAt(pinnedVersion)
-
   /** Does a file's recorded (type, min, max) ADMIT the condition? True on
     * any surprise (type mismatch from widening, parse failure, NaN probe)
     * — the advisory-tier contract: read the file, never mis-refute. */
@@ -1806,7 +1796,7 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
     * on the SOURCE column, never on `_p`. True on any surprise. */
   private def partitionAdmits(tf: String, pval: Long, specCol: String,
                               cc: String, op: String, v: Any): Boolean = {
-    if (!(cc == specCol || zoneAliases.getOrElse(cc, Nil).contains(specCol)))
+    if (!(cc == specCol || pin.aliases.getOrElse(cc, Nil).contains(specCol)))
       return true // condition is on a different column
     scala.util.Try {
       val dt = tableSchema(cc).dataType
@@ -1886,7 +1876,7 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
           partOk && (byFile.isEmpty || {
             val recOf: String => Option[(String, String, String)] = c =>
               byFile.flatMap(_.get(name)).flatMap { cols =>
-                (c +: zoneAliases.getOrElse(c, Nil)).iterator
+                (c +: pin.aliases.getOrElse(c, Nil)).iterator
                   .flatMap(cols.get).nextOption()
               }
             zoneConds.forall(fileAdmits(_, recOf, None, None, None))
@@ -2038,8 +2028,7 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
     * semantics: a bucket survives if ANY non-null value might be present
     * (null literals can't match rows, so pruning on the non-null subset
     * is exact); filters stay residuals above the scan either way. */
-  private def bloomPrune(t: graft.core.TxTable,
-                         layout: Map[Long, (String, Seq[String])])
+  private def bloomPrune(layout: Map[Long, (String, Seq[String])])
       : Map[Long, (String, Seq[String])] = {
     if (changeFeed || layout.isEmpty) return layout
     val eqPreds: Seq[(String, Seq[Any])] = dataFilters.toSeq.collect {
@@ -2050,7 +2039,7 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
         vs.exists(_ != null) => a -> vs.toSeq.filter(_ != null)
     }
     if (eqPreds.isEmpty) return layout
-    val aliases = t.aliasesAt(pinnedVersion)
+    val aliases = pin.aliases
     layout.filter { case (_, (dataDir, _)) =>
       eqPreds.forall { case (c, vs) =>
         val names = c +: aliases.getOrElse(c, Nil)
@@ -2094,14 +2083,12 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
     * listing it with the merge keys, plans with zero shuffle). */
   override def outputPartitioning():
       org.apache.spark.sql.connector.read.partitioning.Partitioning = {
-    val t = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
-    val parts = chosenLayout(t, t.layoutAt(pinnedVersion)).size
+    val parts = chosenLayout().size
     if (!spjCapable)
       new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(parts)
     else if (keyCols.length == 1)
       new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-        Array(GraftDataSource.bucketTransform(
-          t.bucketCountAt(pinnedVersion), keyCols)),
+        Array(GraftDataSource.bucketTransform(pin.buckets, keyCols)),
         parts)
     else if (required.fieldNames.contains(GraftDataSource.BucketCol) &&
              !tableSchema.fieldNames.contains(GraftDataSource.BucketCol))
@@ -2124,8 +2111,7 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
     * bucket's bytes, not the table's. */
   override def estimateStatistics(): Statistics = {
     val spark = SparkSession.active
-    val t = graft.core.TxTable.open(spark, dir, keyCols)
-    val chosen = chosenLayout(t, t.layoutAt(pinnedVersion))
+    val chosen = chosenLayout()
     var bytes = 0L
     // Column bounds for the optimizer (DSv2 column statistics): fold the
     // zone-map sidecars ALREADY resident for planning into per-column
@@ -2299,13 +2285,11 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
 
   private def doPlanInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
-    val t = graft.core.TxTable.open(spark, dir, keyCols)
     val v = pinnedVersion
-    val layout = t.layoutAt(v)
-    val aliases = t.aliasesAt(v)
-    val defaults = t.defaultsAt(v)
+    val aliases = pin.aliases
+    val defaults = pin.defaults
 
-    val chosen = chosenLayout(t, layout)
+    val chosen = chosenLayout()
     // Row-level operations replace GROUPS = buckets: the scan's planned
     // set is the affected-group set the commit swaps — recorded with
     // whether this plan carried the runtime GROUP filter (the read-back
@@ -2489,7 +2473,9 @@ final class GraftMicroBatchStream(dir: String, keyCols: Seq[String],
     val s = start.asInstanceOf[GraftOffset].version
     val e = end.asInstanceOf[GraftOffset].version
     val t = table
-    val aliases = t.aliasesAt(math.max(e, 0L))
+    // Each version in (s, e] and its predecessor, pinned once.
+    val pins = (math.max(s, 0L) to e).map(v => v -> t.pin(v)).toMap
+    val aliases = if (e >= 0) pins(e).aliases else Map.empty[String, Seq[String]]
     import GraftDataSource.{parquetFiles, resolveFile}
     val noDefaults = dataSchema.fields.map(_ => null: Any)
 
@@ -2507,17 +2493,17 @@ final class GraftMicroBatchStream(dir: String, keyCols: Seq[String],
       }
 
     (s + 1 to e)
-      .filterNot(v => skipLayoutOnly && GraftDataSource.LayoutOnlyOps.contains(t.opAt(v)))
+      .filterNot(v => skipLayoutOnly && GraftDataSource.LayoutOnlyOps.contains(pins(v).op))
       .flatMap { v =>
-        val cur = t.layoutAt(v)
+        val cur = pins(v).layout
         val prev: Map[Long, (String, Seq[String])] =
-          if (v == 0) Map.empty else t.layoutAt(v - 1)
+          if (v == 0) Map.empty else pins(v - 1).layout
         val inserts = cur.toSeq.sortBy(_._1).flatMap { case (b, (dataDir, _)) =>
           if (prev.get(b).exists(_._1 == dataDir)) None
           else partition(parquetFiles(dataDir), v, "insert")
         }
-        // layoutAt resolves DV paths on both sides, so set difference on the
-        // resolved strings yields exactly the DVs this version attached.
+        // The pins' layouts resolve DV paths on both sides, so set difference
+        // on the resolved strings yields exactly the DVs this version attached.
         val deletes = cur.toSeq.sortBy(_._1).flatMap { case (b, (_, dvs)) =>
           val prevDvs = prev.get(b).map(_._2.toSet).getOrElse(Set.empty[String])
           partition(dvs.filterNot(prevDvs.contains).flatMap(parquetFiles), v, "delete")

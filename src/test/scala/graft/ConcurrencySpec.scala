@@ -188,7 +188,7 @@ class ConcurrencySpec extends AnyFunSuite {
     try {
       // Writer slices assigned by BUCKET (the table's own hash), so no
       // two writers ever touch the same bucket: every lost publish takes
-      // resolveDisjointPublish's metadata-only retry — the re-pointed
+      // the commit loop's metadata-only re-point — the re-pointed
       // commit dir must carry the loser's rows without a recompute, and
       // the winner's rows must survive untouched.
       val base = graft.core.Graph.nodes(spark, sf)
@@ -249,7 +249,7 @@ class ConcurrencySpec extends AnyFunSuite {
       // never touched must force a rebase, or the loser publishes a head
       // that silently misses those rows (write-skew / lost update). The
       // race window is a few milliseconds wide, so the spec drives it
-      // DETERMINISTICALLY through the update pre-publish hook.
+      // DETERMINISTICALLY through the pre-publish hook.
       val base = spark.range(1, 51)
         .select(concat(lit("k"), col("id")).as("id"),
           (col("id") % 10 * 10).cast("long").as("v"),
@@ -279,7 +279,7 @@ class ConcurrencySpec extends AnyFunSuite {
       // write and its publish), wins the version, and the loser's publish
       // fails — landing it exactly in the resolve path under test.
       @volatile var fired = false
-      t.updatePrePublishHook = () => if (!fired) {
+      t.prePublishHook = () => if (!fired) {
         fired = true
         graft.core.TxTable.open(spark, dir, Seq("id")).merge(winnerRow)
       }
@@ -322,7 +322,7 @@ class ConcurrencySpec extends AnyFunSuite {
       val winnerRow = spark.createDataFrame(Seq((winnerKey, 500L)))
         .toDF("id", "v") // v=500 MATCHES the delete predicate
       @volatile var fired = false
-      t.updatePrePublishHook = () => if (!fired) {
+      t.prePublishHook = () => if (!fired) {
         fired = true
         graft.core.TxTable.open(spark, dir, Seq("id")).merge(winnerRow)
       }
@@ -338,5 +338,70 @@ class ConcurrencySpec extends AnyFunSuite {
         base.filter(col("v") < 90).count(),
         "the rebase deleted rows outside the predicate")
     } finally graft.core.TxTable.drop(dir)
+  }
+
+  test("every writer verb counts a lost publish and ends in the serial-order state") {
+    import org.apache.spark.sql.DataFrame
+    import spark.implicits._
+    import graft.core.TxTable
+    // Each verb runs on a handle whose pre-publish hook first lands a
+    // winning merge through another handle, so the verb's first claim
+    // always loses. The race must end where the serial order (winner,
+    // then verb) ends — computed by running those two steps on a twin
+    // table — with a dense history and the lost claim counted.
+    def batch(rows: (String, Int, String)*): DataFrame = rows.toDF("k", "n", "s")
+    val base = batch((0 until 24).map(i => (f"k$i%02d", i, "a")): _*)
+    val winner = batch(("w01", 100, "w"))
+    def keys(ks: String*): DataFrame = ks.toDF("k")
+    // (verb, set-up run before the race, the verb itself)
+    val verbs: Seq[(String, TxTable => Unit, TxTable => Unit)] = Seq(
+      ("merge", _ => (), t => t.merge(batch(("k01", -1, "m")))),
+      ("mergeClauses", _ => (),
+        t => t.mergeClauses(batch(("k02", -2, "c"), ("x9", 9, "c")), "true", "false", "true")),
+      ("update", _ => (), t => t.update("n >= 20", Map("s" -> "'u'"))),
+      ("deleteWhere", _ => (), t => t.deleteWhere("n < 3")),
+      ("delete", _ => (), t => t.delete(keys("k04"))),
+      ("deleteMergeOnRead", _ => (), t => t.deleteMergeOnRead(keys("k05"))),
+      ("applyChanges", _ => (), t => t.applyChanges(batch(("k06", -6, "ap")), keys("k07"))),
+      ("overwriteAll", _ => (), t => t.overwriteAll(batch(("o1", 1, "o")))),
+      ("compact", _ => (), t => t.compact()),
+      ("compactPartial", t => t.deleteMergeOnRead(keys("k08")), t => t.compactPartial()),
+      ("addColumn", _ => (), t => t.addColumn("extra", "STRING", "'d'")),
+      ("dropColumn", _ => (), t => t.dropColumn("s")),
+      ("widenColumn", _ => (), t => t.widenColumn("n", "BIGINT")),
+      ("renameColumn", _ => (), t => t.renameColumn("s", "label")),
+      ("restore", t => t.merge(batch(("k09", -9, "r"))), t => t.restore(0L)),
+      ("fastForward", t => t.branch("wap").merge(batch(("k10", -10, "f"))),
+        t => t.fastForward("wap")))
+    def state(t: TxTable): Seq[String] = {
+      val df = t.snapshot()
+      df.select(df.columns.sorted.map(org.apache.spark.sql.functions.col): _*)
+        .collect().map(_.mkString("|")).sorted.toSeq
+    }
+    verbs.foreach { case (name, setUp, verb) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_conc_$name").toString
+      try {
+        val twin = TxTable.create(spark, s"$dir/twin", base, Seq("k"), numBuckets = 4)
+        setUp(twin)
+        twin.merge(winner)
+        val serialOutcome = scala.util.Try(verb(twin)).isSuccess
+
+        TxTable.create(spark, s"$dir/t", base, Seq("k"), numBuckets = 4)
+        val t = TxTable.open(spark, s"$dir/t", Seq("k"))
+        setUp(t)
+        var fired = false
+        t.prePublishHook = () => if (!fired) {
+          fired = true
+          TxTable.open(spark, s"$dir/t", Seq("k")).merge(winner)
+        }
+        val outcome = scala.util.Try(verb(t)).isSuccess
+        assert(fired, s"$name: hook never ran — the race exercised nothing")
+        assert(outcome == serialOutcome, s"$name: outcome differs from the serial order")
+        assert(t.publishRetries.get() >= 1, s"$name: the lost publish was not counted")
+        val hist = t.history().collect().map(_.getLong(0)).sorted.toSeq
+        assert(hist == (0L to t.version), s"$name: version history has gaps: $hist")
+        assert(state(t) == state(twin), s"$name: the race did not end in the serial-order state")
+      } finally TxTable.drop(dir)
+    }
   }
 }

@@ -171,4 +171,35 @@ class LintSpec extends AnyFunSuite {
     assert(sites == Seq("graft/sources/GraftDataSource.scala"),
       s"GraftTableProvider constructed at: ${sites.mkString(", ")}")
   }
+
+  test("TxTable publishes a version only from the commit loop and the single-claim verbs") {
+    // commitLoop is the one optimistic loop; create, branch, shallowClone
+    // and replaceBuckets make one claim each. A class or object member
+    // sits at two spaces, so nested helpers count as their member.
+    val tx = allSources.collect { case ("graft/core/TxTable.scala", src) => src }.head
+    val member = """(?m)^  (?:private(?:\[\w+\])?\s+|override\s+|@\S+\s+)*def\s+(\w+)""".r
+    val call = """(?<!def )\bpublish\s*\(""".r
+    val callers = call.findAllMatchIn(tx).map { m =>
+      member.findAllMatchIn(tx.substring(0, m.start)).toSeq.last.group(1)
+    }.toSeq
+    val allowed = Set("commitLoop", "create", "branch", "shallowClone", "replaceBuckets")
+    assert(callers.forall(allowed), s"publish( called from: ${callers.filterNot(allowed).mkString(", ")}")
+    // The pattern must still see every caller it allows.
+    assert(callers.toSet == allowed, s"callers seen: ${callers.distinct.mkString(", ")}")
+    // ...and no verb hand-rolls its own retry loop.
+    val loop = """\bvar\s+committed\b""".r
+    assert(loop.findFirstIn(tx).isEmpty, "TxTable holds a hand-rolled commit loop")
+    assert(loop.findFirstIn("    var committed = -1L").isDefined)
+  }
+
+  test("a version's record lives only in its manifest: no per-version side files") {
+    val side = """"[^"\n]*(?:schema-v|schema\.ddl|defaults-v|renames-v|widen-v)""".r
+    val sites = allSources.filter { case (_, src) => side.findFirstIn(src).isDefined }.map(_._1)
+    assert(sites.isEmpty, s"per-version side-file names in: ${sites.mkString(", ")}")
+    // The pattern must still see each name in a literal.
+    Seq("""f"schema-v$v%08d.ddl"""", """"schema.ddl"""", """f"defaults-v${v + 1}%08d.txt"""",
+        """f"renames-v$v%08d.txt"""", """f"widen-v${v + 1}%08d.txt"""")
+      .foreach(l => assert(side.findFirstIn(l).isDefined, l))
+    assert(side.findFirstIn("\"stats-v\"").isEmpty)
+  }
 }

@@ -889,8 +889,8 @@ class PropertySpec extends AnyFunSuite {
       // manifest — exactly the on-disk state vacuum must reclaim. (If the
       // scheduler happens to serialize the threads no orphan arises — the
       // synthetic orphan below pins the reclaim path deterministically.)
-      val h1 = graft.core.TxTable.open(spark, dir, Seq("k"), 4)
-      val h2 = graft.core.TxTable.open(spark, dir, Seq("k"), 4)
+      val h1 = graft.core.TxTable.open(spark, dir, Seq("k"))
+      val h2 = graft.core.TxTable.open(spark, dir, Seq("k"))
       val gate = new java.util.concurrent.CountDownLatch(1)
       val th = Seq(h1 -> ("K01" -> 11L), h2 -> ("K02" -> 22L)).map { case (h, kv) =>
         val th = new Thread(() => { gate.await(); h.merge(Seq(kv).toDF("k", "v")); () })
@@ -1135,6 +1135,113 @@ class PropertySpec extends AnyFunSuite {
       assert(t.vacuum(retainMs = 0L) >= 1, "dropped branch's commits reclaimed")
       assert(t.snapshot().as[(String, Long)].collect().toMap.apply("K11") == 1100L)
     } finally graft.core.TxTable.drop(dir)
+  }
+
+  test("TxTable branch, shallowClone and fastForward carry the widen record: widened eras read like main") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tx_widenfork").toString
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(df.columns.sorted.map(col): _*).collect().map(_.mkString("|")).sorted.toSeq
+    def viaGraft(path: String): Seq[String] =
+      rows(spark.read.format("graft").load(path))
+    try {
+      val base = (0 until 40).map(i => f"K$i%02d" -> i).toDF("k", "qty")
+      // Widen, then a post-widen commit (BIGINT files beside INT ones),
+      // then a defaulted add — the read takes the per-file merging path.
+      val t = graft.core.TxTable.create(spark, s"$dir/main", base, Seq("k"), numBuckets = 4)
+      t.widenColumn("qty", "BIGINT")
+      t.merge(Seq("K01" -> 5000000000L).toDF("k", "qty"))
+      t.addColumn("tier", "STRING", "'std'")
+      val expected = rows(t.snapshot())
+      assert(expected.size == 40 && expected.contains("K01|5000000000|std"))
+      assert(viaGraft(s"$dir/main") == expected)
+      val b = t.branch("audit")
+      assert(rows(b.snapshot()) == expected, "branch of a widened table reads differently")
+      val c = t.shallowClone(s"$dir/clone")
+      assert(rows(c.snapshot()) == expected, "clone of a widened table reads differently")
+      assert(viaGraft(s"$dir/clone") == expected)
+
+      // A widen staged on a branch publishes with it.
+      val t2 = graft.core.TxTable.create(spark, s"$dir/ff", base, Seq("k"), numBuckets = 4)
+      val staged = t2.branch("wid")
+      staged.widenColumn("qty", "BIGINT")
+      staged.merge(Seq("K02" -> 6000000000L).toDF("k", "qty"))
+      staged.addColumn("tier", "STRING", "'std'")
+      val branchHead = rows(staged.snapshot())
+      assert(branchHead.contains("K02|6000000000|std"))
+      t2.fastForward("wid")
+      assert(rows(t2.snapshot()) == branchHead, "fastForward dropped the branch's widen")
+      assert(viaGraft(s"$dir/ff") == branchHead)
+    } finally graft.core.TxTable.drop(dir)
+  }
+
+  test("TxTable branch and shallowClone of a row-tracked table never reissue a row id") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tx_ridfork").toString
+    try {
+      val t = graft.core.TxTable.create(spark, s"$dir/main",
+        (0 until 10).map(i => s"k$i" -> i.toLong).toDF("k", "v"), Seq("k"),
+        numBuckets = 2, rowTracking = true)
+      // The fork's v0 carries the source's high-water mark, so its first
+      // inserts draw ids above every id the source ever assigned.
+      val b = t.branch("x")
+      b.merge(Seq("new1" -> 1L, "new2" -> 2L).toDF("k", "v"))
+      val c = t.shallowClone(s"$dir/clone")
+      c.merge(Seq("new3" -> 3L).toDF("k", "v"))
+      Seq(b, c).foreach { f =>
+        val ids = f.snapshot().select(graft.core.TxTable.RidCol).as[Long].collect().toSeq
+        assert(ids.distinct.size == ids.size, s"reissued row ids: ${ids.sorted}")
+        assert(f.ridHwmAt(0L) == t.ridHwmAt(0L))
+      }
+    } finally graft.core.TxTable.drop(dir)
+  }
+
+  test("TxTable version record is readable the instant its manifest is claimed") {
+    import spark.implicits._
+    import graft.core.TxTable
+    val dir = java.nio.file.Files.createTempDirectory("graft_tx_record").toString
+    // A reader on a fresh handle, run right after each successful claim of
+    // a manifest `v*.txt` of this table: it must already see the version's
+    // schema and defaults, not an older record or none.
+    val seen = scala.collection.mutable.Map
+      .empty[Long, scala.util.Try[(org.apache.spark.sql.types.StructType, Map[String, String])]]
+    val link = TxTable.commitPrimitive
+    TxTable.commitPrimitive = new TxTable.CommitPrimitive {
+      def putIfAbsent(target: java.nio.file.Path, tmp: java.nio.file.Path): Boolean = {
+        val won = link.putIfAbsent(target, tmp)
+        val name = target.getFileName.toString
+        if (won && target.getParent == java.nio.file.Paths.get(dir, "_log") &&
+            name.matches("v\\d+\\.txt")) {
+          val v = name.stripPrefix("v").stripSuffix(".txt").toLong
+          seen(v) = scala.util.Try {
+            val r = TxTable.open(spark, dir, Seq("k"))
+            (r.schemaAt(v), r.defaultsAt(v))
+          }
+        }
+        won
+      }
+    }
+    try {
+      // A default holding a tab, a newline, a comma and a backslash must
+      // survive the manifest's line format.
+      val awkward = "'tab\there, comma\nline \\\\ end'"
+      val t = TxTable.create(spark, dir, Seq("a" -> 1, "b" -> 2).toDF("k", "n"), Seq("k"),
+        numBuckets = 2)
+      t.merge(Seq(("c", 3, "hi")).toDF("k", "n", "note")) // widening merge: v1
+      t.addColumn("tier", "STRING", awkward) // v2
+      TxTable.commitPrimitive = link
+      def fields(v: Long) = seen(v).get._1.fieldNames.toSeq
+      assert(fields(0L) == Seq("k", "n"), s"v0 at claim: ${seen(0L)}")
+      assert(fields(1L) == Seq("k", "n", "note"), s"v1 at claim: ${seen(1L)}")
+      assert(fields(2L) == Seq("k", "n", "note", "tier"), s"v2 at claim: ${seen(2L)}")
+      assert(seen(2L).get._2 == Map("tier" -> awkward))
+      (0L to 2L).foreach(v => assert(seen(v).get == ((t.schemaAt(v), t.defaultsAt(v)))))
+      assert(t.snapshot().filter($"k" === "a").select("tier").as[String].head() ==
+        "tab\there, comma\nline \\ end")
+    } finally {
+      TxTable.commitPrimitive = link
+      TxTable.drop(dir)
+    }
   }
 
   test("TxCatalog: cross-table atomicity, disjoint-race merge, same-table conflict") {

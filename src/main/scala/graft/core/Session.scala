@@ -1,6 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
 
 /** The engine's Spark session: one definition for the bench, the
   * correctness gate, the tools and the specs, and one way for an entry
@@ -50,7 +52,49 @@ object Session {
     * the next one. */
   def clearCaches(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    releaseAllBut(spark.sparkContext, Set.empty)
+  }
+
+  /** Ids of the RDDs `sc` holds persisted. */
+  private[graft] def persistedIds(sc: SparkContext): Set[Int] =
+    sc.getPersistentRDDs.keySet.toSet
+
+  /** Unpersists every RDD `sc` holds persisted whose id is not in `keep`. */
+  private[graft] def releaseAllBut(sc: SparkContext, keep: Set[Int]): Unit =
+    sc.getPersistentRDDs.values.filterNot(r => keep(r.id)).foreach(_.unpersist(blocking = false))
+
+  /** Runs `body` and returns its bounded result (a census, a cluster
+    * table) collected into a local relation, so the result outlives what
+    * computed it and pins nothing; with `orderBy` columns, the relation
+    * holds the rows in ascending order of them (nulls first, as Spark's
+    * `orderBy`), sorted on the driver: neither the sampling job and range
+    * shuffle of a global sort in the body nor a sort over the returned
+    * relation on every collect is paid. Afterwards, whether or not `body`
+    * threw, every RDD persisted since the call began is released:
+    * graphs, GraphX's shipped-vertex views, per-round sets, inner pins.
+    * What was persisted before stays. The call runs alone in its
+    * session, as the registry runs one entry at a time: RDDs another
+    * thread persists meanwhile would be released too. */
+  def released(spark: SparkSession, orderBy: String*)(body: => DataFrame): DataFrame = {
+    val sc = spark.sparkContext
+    val before = persistedIds(sc)
+    try {
+      val df = body
+      val rows = new java.util.ArrayList(df.collectAsList())
+      if (orderBy.nonEmpty) rows.sort(ascending(df.schema, orderBy))
+      spark.createDataFrame(rows, df.schema)
+    } finally releaseAllBut(sc, before)
+  }
+
+  /** Row order by the integral columns `cols`, ascending, nulls first. */
+  private def ascending(schema: StructType, cols: Seq[String]): java.util.Comparator[Row] = {
+    val idx = cols.map(schema.fieldIndex)
+    require(idx.forall(i => Seq(ByteType, ShortType, IntegerType, LongType).contains(schema(i).dataType)),
+      s"order columns must be integral: ${cols.mkString(", ")}")
+    (a, b) => idx.iterator.map { i =>
+      if (a.isNullAt(i) || b.isNullAt(i)) java.lang.Boolean.compare(!a.isNullAt(i), !b.isNullAt(i))
+      else java.lang.Long.compare(a.getAs[Number](i).longValue, b.getAs[Number](i).longValue)
+    }.find(_ != 0).getOrElse(0)
   }
 
   /** Run `body` with `settings` set on the session. Afterwards each key

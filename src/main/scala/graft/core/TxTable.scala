@@ -1644,9 +1644,13 @@ final class TxTable private (spark: SparkSession, dir: String,
     require(!isBranch, "vacuum applies to the main table (shared data dir)")
     val head = version
     val floor = math.max(0L, head - math.max(1, keepVersions).toLong + 1)
+    // The retained versions are the manifests still in the log at or
+    // above the floor: an earlier trimmed vacuum deleted those below its
+    // own floor, which may lie above this one.
+    val retained = versionsIn(logDir).filter(_ >= floor)
     // Deletion-vector dirs referenced by a retained manifest are live too,
     // as is anything a live branch's manifests still reach.
-    val live = (floor to head).flatMap(v => pin(v).entries.values)
+    val live = retained.flatMap(v => pin(v).entries.values)
       .flatMap(r => r.data +: r.dvs).toSet ++ branchLive
     val cutoff = System.currentTimeMillis() - retainMs
     val dead = listNames(dataDir).filter { name =>
@@ -1682,7 +1686,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     // not yet referenced.
     val blobDir = logDir.resolve("blobs")
     if (Files.isDirectory(blobDir)) {
-      val liveBlobs = (math.max(0L, floor) to head).flatMap(v =>
+      val liveBlobs = retained.flatMap(v =>
         TxTable.readStatsManifestAt(logDir, v).toSeq.flatMap(_.values.flatMap(
           _.blooms.collect { case (_, TxTable.StoredBlob(_, h, _)) => h })))
         .toSet

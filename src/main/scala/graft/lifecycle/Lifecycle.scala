@@ -1,7 +1,6 @@
 package graft.lifecycle
 
 import graft.core.{Graph, Session, TxTable}
-import graft.plans.GraphAnalytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,22 +12,14 @@ object Lifecycle {
 
   /** Runs one demo entry. One fresh temp dir per tag (`graft_tx_<tag>`)
     * is handed to `body`; zero tags serve the demos over frozen
-    * artifacts. The bounded result is collected into a local relation
-    * ([[GraphAnalytics.localReleasing]]), so it outlives the dirs and
-    * pins nothing. Afterwards, whether or not `body` threw, every RDD it
-    * persisted (inner pins, per-micro-batch pins) is released and the
-    * dirs are dropped. A demo runs alone in its session, as the registry
-    * runs one entry at a time: RDDs another thread persists meanwhile
-    * would be released too. */
+    * artifacts. The body runs in a [[Session.released]] scope: its bounded
+    * result is collected into a local relation, so it outlives the dirs,
+    * and every RDD it persisted (inner pins, per-micro-batch pins) is
+    * released. Then, whether or not `body` threw, the dirs are dropped. */
   def demo(spark: SparkSession, tags: String*)(body: Seq[String] => DataFrame): DataFrame = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
     val dirs = tags.map(t => java.nio.file.Files.createTempDirectory(s"graft_tx_$t").toString)
-    try GraphAnalytics.localReleasing(spark, before, body(dirs))
-    finally {
-      sc.getPersistentRDDs.values.filterNot(r => before(r.id)).foreach(_.unpersist(blocking = false))
-      dirs.foreach(TxTable.drop)
-    }
+    try Session.released(spark)(body(dirs))
+    finally dirs.foreach(TxTable.drop)
   }
 
   /** Warehouse root of the catalog demos, made once per JVM. */

@@ -253,7 +253,7 @@ object SimilarityOps {
     * persisted. */
   private def withRecallCertificate(exact: DataFrame, ann: DataFrame,
                                     k: Int, floor: Double): DataFrame = {
-    val e = graft.plans.GraphAnalytics.localReleasing(exact.sparkSession, Set.empty, exact)
+    val e = graft.core.Session.released(exact.sparkSession)(exact)
     val hits = e.select("vec_id").join(ann.select("vec_id"), "vec_id").count()
     e.withColumn("recall_ge_floor", lit(hits >= math.ceil(k * floor).toLong))
   }

@@ -1619,8 +1619,7 @@ object TextOps {
     val t = graft.core.TxTable.open(spark, dir, Seq("doc_id"))
     // Every intermediate is bounded by the 200-doc demo table: held as
     // local relations, so the call leaves nothing persisted.
-    def local(df: DataFrame): DataFrame =
-      graft.plans.GraphAnalytics.localReleasing(spark, Set.empty, df)
+    def local(df: DataFrame): DataFrame = graft.core.Session.released(spark)(df)
     val idx0 = local(postingsOf(t.snapshotAt(0L)))
     val d = local(t.diff(0L, t.version))
     val maintained = local(idx0

@@ -1,7 +1,10 @@
 package graft.plans
 
-import graft.core.Graph
+import scala.reflect.ClassTag
+
+import graft.core.{Graph, Session}
 import org.apache.spark.graphx.{Edge, Graph => XGraph, PartitionStrategy, VertexId}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -22,73 +25,141 @@ import org.apache.spark.storage.StorageLevel
   */
 object GraphAnalytics {
 
-  /** A bounded result (a census, a cluster table) collected into a local
-    * relation, then every RDD in `roots`' lineage that was persisted
-    * since `persistedBefore` (ids from `sc.getPersistentRDDs`) released:
-    * the graphs, GraphX's shipped-vertex views and any per-round sets a
-    * call cached. A caller's own persisted inputs stay. With no roots it
-    * only collects: a bounded result that persists nothing, where a
-    * `localCheckpoint` would stay in `getPersistentRDDs` after the call. */
-  private[graft] def localReleasing(spark: SparkSession, persistedBefore: Set[Int],
-                             result: DataFrame,
-                             roots: org.apache.spark.rdd.RDD[_]*): DataFrame = {
-    val out = spark.createDataFrame(result.collectAsList(), result.schema)
-    val seen = scala.collection.mutable.Set.empty[Int]
-    val stack = scala.collection.mutable.Stack[org.apache.spark.rdd.RDD[_]](roots: _*)
-    while (stack.nonEmpty) {
-      val r = stack.pop()
-      if (seen.add(r.id)) {
-        if (!persistedBefore(r.id) && r.getStorageLevel != StorageLevel.NONE)
-          r.unpersist(blocking = false)
-        r.dependencies.foreach(d => stack.push(d.rdd))
-      }
-    }
-    out
+  // ---- The runtime. Every persist, force and release of this file is
+  // here: one graph builder and one round loop. Each entry ends through
+  // Session.released, which collects its bounded result and releases
+  // every RDD the call persisted, the graphs the runtime keeps included.
+  // The scope also puts the result in the entry's order. Three entries
+  // (pageRankTop, personalizedPageRank, survivorship) end their GraphX
+  // part in a scope and finish lazily over its local relation, which
+  // persists nothing.
+
+  /** The graph of a (src, dst[, attr]) frame: ids cast to long, the edge
+    * attribute from the third column (cast to int) or 1, every vertex
+    * attribute 0. Edges and vertices are kept MEMORY_AND_DISK, and both
+    * are persisted when first computed. `parts` is the edge partition
+    * count: the bounded subgraphs take 2, since 32 shuffle-sized
+    * partitions would make every Pregel superstep pay 32-task scheduling
+    * and shuffle overhead (measured r7: 2 partitions shave ~0.2 s off
+    * staticPageRank(10)'s superstep tax vs 8); the corpus-scale relations
+    * take 8, which on a cluster would be sized to edges/128MB. */
+  private def graph(edges: DataFrame, parts: Int): XGraph[Int, Int] = {
+    val c = edges.columns
+    val e = edges.select(col(c(0)).cast("long"), col(c(1)).cast("long"),
+      (if (c.length > 2) col(c(2)) else lit(1)).cast("int"))
+    XGraph.fromEdges(e.rdd.coalesce(parts).map(r => Edge(r.getLong(0), r.getLong(1), r.getInt(2))),
+      defaultValue = 0,
+      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
+      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK).cache()
   }
 
-  private def persistedIds(spark: SparkSession): Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
+  /** Both directions of every (src, dst) pair, each reverse next to its
+    * edge in the same partition. */
+  private def undirected(edges: DataFrame): DataFrame = {
+    val Array(s, d) = edges.columns.take(2).map(col)
+    edges.select(explode(array(struct(s.as("src"), d.as("dst")),
+      struct(d.as("src"), s.as("dst")))).as("e")).select("e.*")
+  }
 
-  /** FRIEND_OF edges as GraphX Edge[String] with nid endpoints, canonical
+  /** Rounds between two lineage truncations in [[iterate]]. */
+  private val CheckpointEvery = 5
+
+  /** One round of [[iterate]]: its number (from 1), and how many live
+    * vertices the graph had before and after it. */
+  private final case class Round(n: Int, before: Long, after: Long)
+
+  /** The round loop: `step` from `g0` until `stop` holds for a round,
+    * failing if `maxRounds` rounds pass without it; a graph with no live
+    * vertex is already a fixpoint. Each round's graph is persisted and
+    * materialized by ONE job over both halves, which also counts the
+    * live vertices. Both halves, because `next.edges` is the old edge
+    * RDD with the new vertex attributes shipped LAZILY: releasing the
+    * old graph after forcing only the vertices would make every later
+    * round recompute its edge lineage back to the scan (quadratic total
+    * work — observed 66 s at sf0.1 for the corpus PageRank vs ~2 s).
+    * One job, because at 16 rounds the per-job overhead was a third of
+    * that entry's wall time. Then every RDD persisted since the loop
+    * began is released except the graph handed on; what was persisted
+    * before it (`g0`'s own graph) stays for the caller's scope. Every
+    * `CheckpointEvery` rounds the graph is checkpointed to files, which
+    * truncates lineage: without it round R's job replays all R−1 prior
+    * rounds' lineage and the serialized lineage grows with depth — a
+    * driver blow-up on a graph that peels in Θ(|V|) rounds. Nothing
+    * deletes a checkpoint's files but its writer, so the loop deletes
+    * them when it ends, as GraphX's Pregel does; the graph it returns is
+    * persisted and does not read them. */
+  private def iterate[VD: ClassTag, ED: ClassTag](g0: XGraph[VD, ED], maxRounds: Int,
+      live: VD => Boolean = (_: VD) => true)(step: XGraph[VD, ED] => XGraph[VD, ED])(
+      stop: Round => Boolean): XGraph[VD, ED] = {
+    val sc = g0.vertices.sparkContext
+    val kept = Session.persistedIds(sc)
+    def materialize(g: XGraph[VD, ED]): Long =
+      sc.union(g.edges.map(_ => 0L), g.vertices.map(v => if (live(v._2)) 1L else 0L))
+        .fold(0L)(_ + _)
+    val checkpointed = scala.collection.mutable.Buffer.empty[RDD[_]]
+    var g = g0.cache()
+    var n = materialize(g)
+    var round = 0
+    var done = n == 0
+    try {
+      while (!done && round < maxRounds) {
+        round += 1
+        val next = step(g).cache()
+        if (round % CheckpointEvery == 0) {
+          if (sc.getCheckpointDir.isEmpty)
+            sc.setCheckpointDir(java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
+          next.checkpoint()
+          checkpointed ++= Seq(next.vertices, next.edges)
+        }
+        val m = materialize(next)
+        val held = Seq(next.vertices, next.edges).flatMap(r => r.id +: r.dependencies.map(_.rdd.id))
+        Session.releaseAllBut(sc, kept ++ held)
+        done = stop(Round(round, n, m))
+        g = next
+        n = m
+      }
+    } finally checkpointed.flatMap(_.getCheckpointFile).foreach { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getFileSystem(graft.core.FileMeta.hadoopConf()).delete(p, true)
+    }
+    require(done, s"no fixpoint in $maxRounds rounds")
+    g
+  }
+
+  /** FRIEND_OF pairs (srcId, dstId) among nid < maxNid, canonical
     * direction (nid src < dst by construction in Graph.friendOf). */
-  private def friendEdges(spark: SparkSession, sfDir: String, maxNid: Long): XGraph[Int, Int] = {
+  private def friendPairs(spark: SparkSession, sfDir: String, maxNid: Long): DataFrame = {
     // Restrict the node set BEFORE the same-house self-join (the nid bound
     // reaches the parquet scans); filtering the derived pairs instead would
     // build the full clique first.
     val n = Graph.nodes(spark, sfDir).filter(col("nid") < maxNid)
-    val e = Graph.friendOfAmong(n)
+    Graph.friendOfAmong(n)
       .join(n.select(col("name").as("src"), col("nid").as("srcId")), "src")
       .join(n.select(col("name").as("dst"), col("nid").as("dstId")), "dst")
       .select(col("srcId").cast("long"), col("dstId").cast("long"))
-    // The bounded subgraph is small; 32 shuffle-sized partitions would make
-    // every Pregel superstep pay 32-task scheduling + shuffle overhead.
-    // Coalesce to a minimum — measured r7: 2 partitions shave ~0.2 s off
-    // staticPageRank(10)'s superstep tax vs 8 — on a full-corpus graph
-    // this would instead be sized to edges/128MB.
-    val edges = e.rdd.coalesce(2).map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    XGraph.fromEdges(edges, defaultValue = 0,
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
   }
+
+  /** The bounded FRIEND_OF subgraph. */
+  private def friendEdges(spark: SparkSession, sfDir: String, maxNid: Long): XGraph[Int, Int] =
+    graph(friendPairs(spark, sfDir, maxNid), 2)
 
   /** Degree histogram of the undirected FRIEND_OF graph (bounded subgraph):
     * GraphX `degrees` (aggregateMessages under the hood) → histogram.
     * Oracle: degree = |same-house peers| among nid < cap. */
-  def degreeHistogram(spark: SparkSession, sfDir: String, maxNid: Long = 500): DataFrame = {
-    val g = friendEdges(spark, sfDir, maxNid)
-    val deg = g.degrees // undirected degree: in+out over canonical edges
-    spark.createDataFrame(deg.map { case (_, d) => Tuple1(d) })
-      .toDF("degree")
-      .groupBy("degree").agg(count(lit(1)).as("n_nodes"))
-      .orderBy("degree")
-  }
+  def degreeHistogram(spark: SparkSession, sfDir: String, maxNid: Long = 500): DataFrame =
+    Session.released(spark, "degree") {
+      val deg = friendEdges(spark, sfDir, maxNid).degrees // undirected: in+out over canonical edges
+      spark.createDataFrame(deg.map { case (_, d) => Tuple1(d) })
+        .toDF("degree")
+        .groupBy("degree").agg(count(lit(1)).as("n_nodes"))
+    }
 
   /** Connected components over SAME_FAMILY (GraphX iterative CC). Family
     * classes are complete subgraphs, so the expected component of a node is
     * min(nid) of its class — exactly what CC converges to (components are
     * labeled by min vertex id). Oracle-checkable. */
   def familyComponents(spark: SparkSession, sfDir: String, maxOut: Long = 200,
-                       maxNid: Long = 1000): DataFrame = {
+                       maxNid: Long = 1000): DataFrame = Session.released(spark, "nid") {
     // Family classes are nid % FamilyMod, so every class's minimum member
     // (its eventual CC label) has nid ≤ FamilyMod: a bounded subgraph keeps
     // the labels of the reported nid < maxOut slice exactly equal to the
@@ -99,32 +170,12 @@ object GraphAnalytics {
       .join(n.select(col("name").as("src"), col("nid").as("srcId")), "src")
       .join(n.select(col("name").as("dst"), col("nid").as("dstId")), "dst")
       .select(col("srcId").cast("long"), col("dstId").cast("long"))
-    val g = XGraph.fromEdges(e.rdd.coalesce(8).map(r => Edge(r.getLong(0), r.getLong(1), 1)), 0)
-    val cc = g.connectedComponents().vertices
+    val cc = graph(e, 8).connectedComponents().vertices
     spark.createDataFrame(cc.map { case (v, c) => (v, c) })
       .toDF("nid", "component")
       .filter(col("nid") < maxOut)
-      .orderBy("nid")
   }
 
-  /** CORPUS-SCALE connected components — the gx_* entry whose input grows
-    * with sf (every other gx_* runs on a fixed-size subgraph by design).
-    * CC over the full SAME_FAMILY relation at the query's scale factor,
-    * but NOT over its clique materialization: family classes are
-    * equivalence classes (`nid % FamilyMod`), so any spanning subgraph
-    * has identical components, and the clique's |class|²/2 edges per
-    * class (quadratic in sf — the exact blow-up the header warns about)
-    * are replaced by a LOG-DEPTH SPARSIFIER: nid → nid − 25·2^j for every
-    * j with a non-negative target. Both endpoints share nid mod 25, so
-    * every edge stays inside its class; custkeys are contiguous from 0,
-    * so every target exists; each class is connected (j=0 chains it) and
-    * any member reaches the class minimum in ≤ log₂(class) greedy hops,
-    * so GraphX's hash-min label propagation converges in O(log class)
-    * supersteps instead of the chain's O(class) — at 10⁹ nodes that is
-    * ~26 rounds over n·log n edges, the textbook pointer-doubling shape.
-    * Output is the per-component census (label = class min = the residue
-    * itself, member count, max member) — 25 rows whose counts grow with
-    * sf, so the oracle hash certifies the FULL corpus was traversed. */
   /** The descent sparsifier's edge set as a DataFrame (nid, dst): nid →
     * nid − FamilyMod·2^j for every j with a non-negative target. ALL
     * constants derive from `Graph.FamilyMod` and the actual corpus max
@@ -147,23 +198,30 @@ object GraphAnalytics {
       .filter(col("dst") >= 0L)
   }
 
-  def corpusFamilyCc(spark: SparkSession, sfDir: String): DataFrame = {
-    val before = persistedIds(spark)
-    val edges = sparsifierEdges(spark, sfDir)
-    // Locally ~n·log n rows; on a real cluster this coalesce would be
-    // sized to edges/128MB like the header note for friendEdges.
-    val g = XGraph.fromEdges(
-      edges.rdd.coalesce(8).map(r => Edge(r.getLong(0), r.getLong(1), 1)), 0,
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-    val cc = g.connectedComponents()
-    localReleasing(spark, before,
-      spark.createDataFrame(cc.vertices.map { case (v, c) => (v, c) })
-        .toDF("nid", "component")
-        .groupBy("component")
-        .agg(count(lit(1)).as("n_members"), max("nid").as("max_nid"))
-        .orderBy("component"),
-      cc.vertices, cc.edges)
+  /** CORPUS-SCALE connected components — the gx_* entry whose input grows
+    * with sf (every other gx_* runs on a fixed-size subgraph by design).
+    * CC over the full SAME_FAMILY relation at the query's scale factor,
+    * but NOT over its clique materialization: family classes are
+    * equivalence classes (`nid % FamilyMod`), so any spanning subgraph
+    * has identical components, and the clique's |class|²/2 edges per
+    * class (quadratic in sf — the exact blow-up the header warns about)
+    * are replaced by a LOG-DEPTH SPARSIFIER: nid → nid − 25·2^j for every
+    * j with a non-negative target. Both endpoints share nid mod 25, so
+    * every edge stays inside its class; custkeys are contiguous from 0,
+    * so every target exists; each class is connected (j=0 chains it) and
+    * any member reaches the class minimum in ≤ log₂(class) greedy hops,
+    * so GraphX's hash-min label propagation converges in O(log class)
+    * supersteps instead of the chain's O(class) — at 10⁹ nodes that is
+    * ~26 rounds over n·log n edges, the textbook pointer-doubling shape.
+    * Output is the per-component census (label = class min = the residue
+    * itself, member count, max member) — 25 rows whose counts grow with
+    * sf, so the oracle hash certifies the FULL corpus was traversed. */
+  def corpusFamilyCc(spark: SparkSession, sfDir: String): DataFrame = Session.released(spark, "component") {
+    val cc = graph(sparsifierEdges(spark, sfDir), 8).connectedComponents()
+    spark.createDataFrame(cc.vertices.map { case (v, c) => (v, c) })
+      .toDF("nid", "component")
+      .groupBy("component")
+      .agg(count(lit(1)).as("n_members"), max("nid").as("max_nid"))
   }
 
   /** CORPUS-SCALE multi-source BFS (gx_corpus_bfs) — raw Pregel over the
@@ -178,13 +236,9 @@ object GraphAnalytics {
     * logarithmically while its input scales linearly, the shape Pregel
     * is for. Output is the per-distance census (counts grow with sf);
     * oracle = bit_count(nid // 25), both engines bit-exact. */
-  def corpusAnchorBfs(spark: SparkSession, sfDir: String): DataFrame = {
+  def corpusAnchorBfs(spark: SparkSession, sfDir: String): DataFrame = Session.released(spark, "dist") {
     val anchorBound = Graph.FamilyMod.toLong
-    val edges = sparsifierEdges(spark, sfDir)
-    val g = XGraph.fromEdges(
-      edges.rdd.coalesce(8).map(r => Edge(r.getLong(0), r.getLong(1), 1)), 0,
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
+    val g = graph(sparsifierEdges(spark, sfDir), 8)
       .mapVertices((id, _) => if (id < anchorBound) 0 else Int.MaxValue)
     val dist = g.pregel(Int.MaxValue)(
       (_, d, msg) => math.min(d, msg),
@@ -195,7 +249,6 @@ object GraphAnalytics {
     spark.createDataFrame(dist.vertices.map { case (_, d) => Tuple1(d.toLong) })
       .toDF("dist")
       .groupBy("dist").agg(count(lit(1)).as("n_nodes"))
-      .orderBy("dist")
   }
 
   /** CORPUS-SCALE weighted SSSP (gx_corpus_sssp) — min-plus Pregel
@@ -215,18 +268,13 @@ object GraphAnalytics {
     * per-cost census (counts grow with sf); the oracle replays
     * bit_count + the weighted-bit-position sum — plain integer
     * arithmetic, bit-exact in both engines. */
-  def corpusWeightedSssp(spark: SparkSession, sfDir: String): DataFrame = {
+  def corpusWeightedSssp(spark: SparkSession, sfDir: String): DataFrame = Session.released(spark, "cost") {
     val mod = Graph.FamilyMod.toLong
+    // Recover j from the descent span: src − dst = mod·2^j exactly, and
+    // 2^j − 1 has j set bits.
     val edges = sparsifierEdges(spark, sfDir)
-    val g = XGraph.fromEdges(
-      edges.rdd.coalesce(8).map { r =>
-        val src = r.getLong(0); val dst = r.getLong(1)
-        // Recover j from the descent span: src − dst = mod·2^j exactly.
-        val j = java.lang.Long.numberOfTrailingZeros((src - dst) / mod)
-        Edge(src, dst, 1L + j)
-      }, 0L,
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
+      .select(col("nid"), col("dst"), expr(s"1 + bit_count((nid - dst) DIV $mod - 1)"))
+    val g = graph(edges, 8)
       .mapVertices((id, _) => if (id < mod) 0L else Long.MaxValue)
     val dist = g.pregel(Long.MaxValue)(
       (_, d, msg) => math.min(d, msg),
@@ -237,7 +285,6 @@ object GraphAnalytics {
     spark.createDataFrame(dist.vertices.map { case (_, d) => Tuple1(d) })
       .toDF("cost")
       .groupBy("cost").agg(count(lit(1)).as("n_nodes"))
-      .orderBy("cost")
   }
 
   /** CORPUS-SCALE triangle counting (gx_corpus_triangles) — GraphX
@@ -258,18 +305,13 @@ object GraphAnalytics {
     * whole pass is n·log²n — the at-scale shape per-vertex triangle
     * counting is supposed to have. Output: per-count census (counts
     * grow with sf). */
-  def corpusTriangles(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = sparsifierEdges(spark, sfDir)
-    val g = XGraph.fromEdges(
-      edges.rdd.coalesce(8).map(r => Edge(r.getLong(0), r.getLong(1), 1)), 0,
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
+  def corpusTriangles(spark: SparkSession, sfDir: String): DataFrame = Session.released(spark, "triangles") {
+    val g = graph(sparsifierEdges(spark, sfDir), 8)
       .partitionBy(PartitionStrategy.EdgePartition2D)
     val tc = g.triangleCount().vertices
     spark.createDataFrame(tc.map { case (_, t) => Tuple1(t.toLong) })
       .toDF("triangles")
       .groupBy("triangles").agg(count(lit(1)).as("n_nodes"))
-      .orderBy("triangles")
   }
 
   /** CORPUS-SCALE neighborhood aggregation (gx_corpus_nbrsum) — ONE
@@ -284,13 +326,9 @@ object GraphAnalytics {
     * — both engines render floor-log2 as binary-string length. The
     * output is per-vertex (rows grow with sf), so the oracle certifies
     * every single message sum, not a census. */
-  def corpusNeighborKSum(spark: SparkSession, sfDir: String): DataFrame = {
+  def corpusNeighborKSum(spark: SparkSession, sfDir: String): DataFrame = Session.released(spark, "nid") {
     val mod = Graph.FamilyMod.toLong
-    val edges = sparsifierEdges(spark, sfDir)
-    val g = XGraph.fromEdges(
-      edges.rdd.coalesce(8).map(r => Edge(r.getLong(0), r.getLong(1), 1)), 0L,
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
+    val g = graph(sparsifierEdges(spark, sfDir), 8)
       .mapVertices((id, _) => id / mod)
     val sums = g.aggregateMessages[Long](
       ctx => { ctx.sendToDst(ctx.srcAttr); ctx.sendToSrc(ctx.dstAttr) },
@@ -300,7 +338,6 @@ object GraphAnalytics {
     val out = g.outerJoinVertices(sums)((_, _, s) => s.getOrElse(0L)).vertices
     spark.createDataFrame(out.map { case (v, s) => (v, s) })
       .toDF("nid", "nbr_k_sum")
-      .orderBy("nid")
   }
 
   /** CORPUS-SCALE strongly connected components (gx_corpus_scc) — the
@@ -324,36 +361,41 @@ object GraphAnalytics {
     * nid − FamilyMod·(k mod 8) (the block anchor) lets the oracle
     * certify every node via per-residue census: count, distinct SCCs,
     * and the sum/max of labels over MEMBERS (which grow with sf). */
-  def corpusScc(spark: SparkSession, sfDir: String): DataFrame = {
+  def corpusScc(spark: SparkSession, sfDir: String): DataFrame = Session.released(spark, "residue") {
     val mod = Graph.FamilyMod.toLong
-    val B = 8L
-    val n = Graph.nodes(spark, sfDir).select(col("nid").cast("long").as("nid"))
-    val maxNid = n.agg(max("nid")).head().getLong(0)
-    val k = expr(s"nid DIV $mod")
-    val isLast = (k % B === B - 1) || (col("nid") + mod > maxNid)
-    val fwd = n.filter(!isLast)
-      .select(col("nid").as("src"), (col("nid") + mod).as("dst"))
-    val wrap = n.filter(isLast)
-      .select(col("nid").as("src"), (col("nid") - lit(mod) * (k % B)).as("dst"))
-    val bridge = n.filter(k % B === 0 && k >= B)
-      .select(col("nid").as("src"), (col("nid") % mod).as("dst"))
-    val g = XGraph.fromEdges(
-      fwd.unionByName(wrap).unionByName(bridge)
-        .rdd.coalesce(8).map(r => Edge(r.getLong(0), r.getLong(1), 1)), 0,
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK).cache()
-    val scc = fwBwScc(g)
-    val out = spark.createDataFrame(scc.map { case (v, s) => (v % mod, s) })
+    val scc = fwBwScc(graph(blockRings(spark, sfDir, bridged = true), 8))
+    spark.createDataFrame(scc.map { case (v, s) => (v % mod, s) })
       .toDF("residue", "scc")
       .groupBy("residue")
       .agg(count(lit(1)).as("n_nodes"),
         countDistinct(col("scc")).as("n_sccs"),
         sum(col("scc")).as("sum_scc"),
         max(col("scc")).as("max_scc"))
-      .orderBy("residue")
-      .localCheckpoint()
-    g.unpersist(blocking = false)
-    out
+  }
+
+  /** Members per ring in [[blockRings]]. */
+  private val RingBlock = 8L
+
+  /** The block-ring relation (src, dst) of `corpusScc` and
+    * `corpusPageRank`: within each family residue, class indices k = nid
+    * div FamilyMod cut into blocks of `RingBlock`, each closed into a
+    * directed ring (k → k+1, the block's last member wrapping back to its
+    * anchor). `bridged` adds one ONE-WAY edge from every block anchor but
+    * the first to the residue's root anchor. Pure arithmetic on the
+    * contiguous nids: no window, no join. */
+  private def blockRings(spark: SparkSession, sfDir: String, bridged: Boolean): DataFrame = {
+    val (mod, b) = (Graph.FamilyMod.toLong, RingBlock)
+    val n = Graph.nodes(spark, sfDir).select(col("nid").cast("long").as("nid"))
+    val maxNid = n.agg(max("nid")).head().getLong(0)
+    val k = expr(s"nid DIV $mod")
+    val isLast = (k % b === b - 1) || (col("nid") + mod > maxNid)
+    val rings = n.filter(!isLast)
+      .select(col("nid").as("src"), (col("nid") + mod).as("dst"))
+      .unionByName(n.filter(isLast)
+        .select(col("nid").as("src"), (col("nid") - lit(mod) * (k % b)).as("dst")))
+    if (!bridged) rings
+    else rings.unionByName(n.filter(k % b === 0 && k >= b)
+      .select(col("nid").as("src"), (col("nid") % mod).as("dst")))
   }
 
   /** CORPUS-SCALE personalized PageRank power iteration
@@ -375,54 +417,20 @@ object GraphAnalytics {
     * circumference — mass depends only on (p, c), so the per-mass census
     * (counts grow with sf) certifies every vertex. Constant supersteps ×
     * linear input: 16 rounds at sf0.1 and 16 rounds at 10⁹ nodes. */
-  def corpusPageRank(spark: SparkSession, sfDir: String, iters: Int = 16): DataFrame = {
-    val before = persistedIds(spark)
-    val mod = Graph.FamilyMod.toLong
-    val B = 8L
-    val n = Graph.nodes(spark, sfDir).select(col("nid").cast("long").as("nid"))
-    val maxNid = n.agg(max("nid")).head().getLong(0)
-    val k = expr(s"nid DIV $mod")
-    val isLast = (k % B === B - 1) || (col("nid") + mod > maxNid)
-    val fwd = n.filter(!isLast)
-      .select(col("nid").as("src"), (col("nid") + mod).as("dst"))
-    val wrap = n.filter(isLast)
-      .select(col("nid").as("src"), (col("nid") - lit(mod) * (k % B)).as("dst"))
-    val hold = 1L << 39
-    var g = XGraph.fromEdges(
-      fwd.unionByName(wrap)
-        .rdd.coalesce(8).map(r => Edge(r.getLong(0), r.getLong(1), 1)), 0L,
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-      .mapVertices((_, _) => 1L << 40).cache()
-    for (_ <- 1 to iters) {
-      // Every mass is a multiple of 2^(40 - round) ≥ 2^24, so /2 is exact.
-      val msgs = g.aggregateMessages[Long](ctx => ctx.sendToDst(ctx.srcAttr / 2), _ + _)
-      val next = g.outerJoinVertices(msgs)((id, _, m) =>
-        (if ((id / mod) % B == 0L) hold else 0L) + m.getOrElse(0L)).cache()
-      // Materialize BOTH halves of the new round before dropping the old
-      // one: `next.edges` is the old edge RDD with the new vertex attrs
-      // shipped LAZILY, so unpersisting the old graph after forcing only
-      // the vertices would make every later round recompute its edge
-      // lineage all the way back to the parquet scan (quadratic total
-      // work — observed 66 s at sf0.1 vs ~2 s with the edge force).
-      // ONE union job forces both halves (computing the mapped children
-      // computes — and therefore caches — the persisted parents): 2 of
-      // the loop's 3 jobs per round were pure force, and at 16 rounds the
-      // per-job overhead was a third of the entry's wall time.
-      next.vertices.sparkContext.union(
-        next.edges.map(_ => ()), next.vertices.map(_ => ()))
-        .foreachPartition(_ => ())
-      g.unpersistVertices(blocking = false)
-      g.edges.unpersist(blocking = false)
-      g = next
-    }
-    localReleasing(spark, before,
+  def corpusPageRank(spark: SparkSession, sfDir: String, iters: Int = 16): DataFrame =
+    Session.released(spark, "mass") {
+      val (mod, hold) = (Graph.FamilyMod.toLong, 1L << 39)
+      val g0 = graph(blockRings(spark, sfDir, bridged = false), 8).mapVertices((_, _) => 1L << 40)
+      val g = iterate(g0, iters) { g =>
+        // Every mass is a multiple of 2^(40 - round) ≥ 2^24, so /2 is exact.
+        val msgs = g.aggregateMessages[Long](ctx => ctx.sendToDst(ctx.srcAttr / 2), _ + _)
+        g.outerJoinVertices(msgs)((id, _, m) =>
+          (if ((id / mod) % RingBlock == 0L) hold else 0L) + m.getOrElse(0L))
+      }(_.n == iters)
       spark.createDataFrame(g.vertices.map { case (_, m) => Tuple1(m) })
         .toDF("mass")
         .groupBy("mass").agg(count(lit(1)).as("n_nodes"))
-        .orderBy("mass"),
-      g.vertices, g.edges)
-  }
+    }
 
   /** CORPUS-SCALE coreness decomposition (gx_corpus_kcore) — the FULL
     * k-core peel (successive `peelKCore` levels, each a degree-recompute
@@ -455,93 +463,74 @@ object GraphAnalytics {
     * the peel's own degree passes. The census (≤ FamilyMod × 5 rows)
     * returns as a local relation, and every RDD the call persisted is
     * released before it returns. */
-  def corpusKCore(spark: SparkSession, sfDir: String): DataFrame = {
-    val sc = spark.sparkContext
-    val before = persistedIds(spark)
-    val mod = Graph.FamilyMod.toLong
-    val B = 4L
-    val base = Graph.nodes(spark, sfDir)
-      .select(col("nid").cast("long").as("nid"))
-      .withColumn("residue", col("nid") % mod)
-      .withColumn("k", expr(s"nid DIV $mod"))
-      .withColumn("blk", expr(s"k DIV $B"))
-      .withColumn("pos", col("k") % B)
-    val full = base.groupBy("residue", "blk")
-      .agg(count(lit(1)).as("m")).filter(col("m") === B)
-      .select("residue", "blk")
-    val mem = base.join(full, Seq("residue", "blk"))
-    val band = col("residue") % 3
-    // Canonical direction (src < dst) everywhere, and the three edge
-    // families have pairwise-distinct spans (1, 3, 2 × mod), so the
-    // undirected degree is exactly the family sum — no dedup pass needed.
-    val chain = mem.filter(col("pos") < B - 1)
-      .select(col("nid").as("src"), (col("nid") + mod).as("dst"))
-    val wrap = mem.filter(band >= 1 && col("pos") === B - 1)
-      .select((col("nid") - (B - 1) * mod).as("src"), col("nid").as("dst"))
-    val chord = mem.filter(band === 2 && col("pos") < B - 2)
-      .select(col("nid").as("src"), (col("nid") + 2 * mod).as("dst"))
-    var g = XGraph.fromEdges(
-      chain.unionByName(wrap).unionByName(chord)
-        .rdd.coalesce(8).map(r => Edge(r.getLong(0), r.getLong(1), 1)), 0,
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK).cache()
-    // Coreness = the peel level that dropped the vertex, minus one: peel
-    // at k ascending, diff the survivor sets. 4 levels suffice (max
-    // coreness 3 by construction; the guard labels any 4-core remnant).
-    var acc: org.apache.spark.rdd.RDD[(Long, Int)] = sc.emptyRDD
-    for (kk <- 1 to 4) {
-      val before = g.vertices.keys.persist(StorageLevel.MEMORY_AND_DISK)
-      before.foreachPartition(_ => ())
-      val peeled = peelKCore(g, kk)
-      // Force each level's dropped set while its survivor graph is still
-      // cached — the next peel unpersists it, and a lazy diff would replay
-      // the whole peel chain at the final census (the PageRank lesson).
-      val dropped = before.subtract(peeled.vertices.keys).map(v => (v, kk - 1))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      dropped.foreachPartition(_ => ())
-      before.unpersist(blocking = false)
-      acc = acc.union(dropped)
-      g = peeled
-    }
-    val all = acc.union(g.vertices.keys.map(v => (v, 4)))
-    // The peel's graphs and the per-level dropped sets all sit in the
-    // census' lineage.
-    localReleasing(spark, before,
-      spark.createDataFrame(all.map { case (v, c) => (v % mod, c) })
+  def corpusKCore(spark: SparkSession, sfDir: String): DataFrame =
+    Session.released(spark, "residue", "coreness") {
+      val mod = Graph.FamilyMod.toLong
+      val B = 4L
+      val base = Graph.nodes(spark, sfDir)
+        .select(col("nid").cast("long").as("nid"))
+        .withColumn("residue", col("nid") % mod)
+        .withColumn("k", expr(s"nid DIV $mod"))
+        .withColumn("blk", expr(s"k DIV $B"))
+        .withColumn("pos", col("k") % B)
+      val full = base.groupBy("residue", "blk")
+        .agg(count(lit(1)).as("m")).filter(col("m") === B)
+        .select("residue", "blk")
+      val mem = base.join(full, Seq("residue", "blk"))
+      val band = col("residue") % 3
+      // Canonical direction (src < dst) everywhere, and the three edge
+      // families have pairwise-distinct spans (1, 3, 2 × mod), so the
+      // undirected degree is exactly the family sum — no dedup pass needed.
+      val chain = mem.filter(col("pos") < B - 1)
+        .select(col("nid").as("src"), (col("nid") + mod).as("dst"))
+      val wrap = mem.filter(band >= 1 && col("pos") === B - 1)
+        .select((col("nid") - (B - 1) * mod).as("src"), col("nid").as("dst"))
+      val chord = mem.filter(band === 2 && col("pos") < B - 2)
+        .select(col("nid").as("src"), (col("nid") + 2 * mod).as("dst"))
+      var g = graph(chain.unionByName(wrap).unionByName(chord), 8)
+      // Coreness = the peel level that dropped the vertex, minus one: peel
+      // at k ascending, diff the survivor sets. 4 levels suffice (max
+      // coreness 3 by construction; the guard labels any 4-core remnant).
+      // Every level's graph stays persisted until the call ends, so the
+      // census diffs them without replaying a peel.
+      var acc: RDD[(Long, Int)] = spark.sparkContext.emptyRDD
+      for (kk <- 1 to 4) {
+        val peeled = peelKCore(g, kk)
+        acc = acc.union(g.vertices.keys.subtract(peeled.vertices.keys).map(v => (v, kk - 1)))
+        g = peeled
+      }
+      spark.createDataFrame(acc.union(g.vertices.keys.map(v => (v, 4))).map { case (v, c) => (v % mod, c) })
         .toDF("residue", "coreness")
         .groupBy("residue", "coreness")
         .agg(count(lit(1)).as("n_nodes"))
-        .orderBy("residue", "coreness"),
-      all, g.edges)
-  }
+    }
 
   /** Per-vertex triangle count on a bounded FRIEND_OF subgraph. Same-house
     * cliques make the closed form (size-1 choose 2) the oracle. GraphX
     * requires canonical partitioning for triangleCount. */
-  def triangleCounts(spark: SparkSession, sfDir: String, maxNid: Long = 300): DataFrame = {
-    val g = friendEdges(spark, sfDir, maxNid)
-      .partitionBy(PartitionStrategy.EdgePartition2D)
-    val tc = g.triangleCount().vertices
-    spark.createDataFrame(tc.map { case (v, t) => (v, t) })
-      .toDF("nid", "triangles")
-      .filter(col("triangles") > 0)
-      .orderBy("nid")
-  }
+  def triangleCounts(spark: SparkSession, sfDir: String, maxNid: Long = 300): DataFrame =
+    Session.released(spark, "nid") {
+      val g = friendEdges(spark, sfDir, maxNid)
+        .partitionBy(PartitionStrategy.EdgePartition2D)
+      val tc = g.triangleCount().vertices
+      spark.createDataFrame(tc.map { case (v, t) => (v, t) })
+        .toDF("nid", "triangles")
+        .filter(col("triangles") > 0)
+    }
 
   /** Neighborhood aggregation via aggregateMessages: sum of neighbors'
     * degrees (a 2-hop statistic — the message-passing shape Pregel/GNN
     * pipelines are built from). Undirected: messages flow both ways. */
-  def neighborDegreeSum(spark: SparkSession, sfDir: String, maxNid: Long = 300): DataFrame = {
-    val g = friendEdges(spark, sfDir, maxNid)
-    val degrees = g.degrees
-    val withDeg = g.outerJoinVertices(degrees)((_, _, d) => d.getOrElse(0))
-    val sums = withDeg.aggregateMessages[Long](
-      ctx => { ctx.sendToDst(ctx.srcAttr.toLong); ctx.sendToSrc(ctx.dstAttr.toLong) },
-      _ + _)
-    spark.createDataFrame(sums.map { case (v, s) => (v, s) })
-      .toDF("nid", "nbr_degree_sum")
-      .orderBy("nid")
-  }
+  def neighborDegreeSum(spark: SparkSession, sfDir: String, maxNid: Long = 300): DataFrame =
+    Session.released(spark, "nid") {
+      val g = friendEdges(spark, sfDir, maxNid)
+      val withDeg = g.outerJoinVertices(g.degrees)((_, _, d) => d.getOrElse(0))
+      val sums = withDeg.aggregateMessages[Long](
+        ctx => { ctx.sendToDst(ctx.srcAttr.toLong); ctx.sendToSrc(ctx.dstAttr.toLong) },
+        _ + _)
+      spark.createDataFrame(sums.map { case (v, s) => (v, s) })
+        .toDF("nid", "nbr_degree_sum")
+    }
 
   /** Near-duplicate document clustering: connected components over the
     * MinHash+LSH near-dup pair graph, canonical survivor = min doc_id per
@@ -592,18 +581,11 @@ object GraphAnalytics {
     * vertex id, so the label IS the keep id). The cluster table (one row
     * per paired id) returns as a local relation. */
   private def clustersOverPairs(spark: SparkSession, pairs: DataFrame,
-                                idName: String): DataFrame = {
-    val before = persistedIds(spark)
-    val e = pairs.select(col("src_id").cast("long"), col("dst_id").cast("long"))
-    val g = XGraph.fromEdges(
-      e.rdd.coalesce(8).map(r => Edge(r.getLong(0), r.getLong(1), 1)), 0)
-    val cc = g.connectedComponents()
-    localReleasing(spark, before,
-      spark.createDataFrame(cc.vertices.map { case (v, c) => (v, c) })
-        .toDF(idName, "keep_id")
-        .withColumn("is_kept", col(idName) === col("keep_id"))
-        .orderBy(idName),
-      cc.vertices, cc.edges)
+                                idName: String): DataFrame = Session.released(spark, idName) {
+    val cc = graph(pairs.select("src_id", "dst_id"), 8).connectedComponents()
+    spark.createDataFrame(cc.vertices.map { case (v, c) => (v, c) })
+      .toDF(idName, "keep_id")
+      .withColumn("is_kept", col(idName) === col("keep_id"))
   }
 
   /** Single-source BFS hop distances via Pregel over the FRIEND_OF ∪
@@ -616,7 +598,7 @@ object GraphAnalytics {
     * at scale. Unreached vertices are dropped (no infinite rows).
     * Oracle: DuckDB recursive-CTE BFS over the same derived edge set. */
   def shortestHops(spark: SparkSession, sfDir: String,
-                   srcNid: Long = 1, maxNid: Long = 120): DataFrame = {
+                   srcNid: Long = 1, maxNid: Long = 120): DataFrame = Session.released(spark, "nid") {
     val n = Graph.nodes(spark, sfDir).filter(col("nid") < maxNid)
       .select(col("nid"), col("house"), (col("nid") % Graph.FamilyMod).as("fam"))
     val b = n.select(col("nid").as("nid2"), col("house").as("house2"),
@@ -627,12 +609,7 @@ object GraphAnalytics {
       .union(n.join(b, col("fam") === col("fam2") && col("nid") < col("nid2"))
         .select(col("nid").as("src"), col("nid2").as("dst")))
       .distinct()
-    val edges = pairs.rdd.coalesce(8)
-      .flatMap(r => Iterator(Edge(r.getLong(0), r.getLong(1), 1),
-                             Edge(r.getLong(1), r.getLong(0), 1)))
-    val g = XGraph.fromEdges(edges, defaultValue = Int.MaxValue,
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
+    val g = graph(undirected(pairs), 8)
       .mapVertices((id, _) => if (id == srcNid) 0 else Int.MaxValue)
     val dist = g.pregel(Int.MaxValue)(
       (_, d, msg) => math.min(d, msg),
@@ -644,7 +621,6 @@ object GraphAnalytics {
         dist.vertices.filter(_._2 != Int.MaxValue)
           .map { case (v, d) => (v, d.toLong) })
       .toDF("nid", "dist")
-      .orderBy("nid")
   }
 
   /** k-core decomposition by iterative peeling over the bounded FRIEND_OF
@@ -656,51 +632,26 @@ object GraphAnalytics {
     * k-core closed form is exact — a clique of size c survives iff
     * c − 1 ≥ k — which is the oracle.
     * Output: surviving vertices with their in-core degree. */
-  def kCore(spark: SparkSession, sfDir: String, k: Int = 10, maxNid: Long = 300): DataFrame = {
-    val g = peelKCore(friendEdges(spark, sfDir, maxNid), k)
-    val result = g.degrees.map { case (v, d) => (v, d.toLong) }
-    val out = spark.createDataFrame(result).toDF("nid", "core_degree").orderBy("nid")
-      .localCheckpoint() // materialize before the peeled graph is unpersisted
-    g.unpersist(blocking = false)
-    out
-  }
+  def kCore(spark: SparkSession, sfDir: String, k: Int = 10, maxNid: Long = 300): DataFrame =
+    Session.released(spark, "nid") {
+      val g = peelKCore(friendEdges(spark, sfDir, maxNid), k)
+      spark.createDataFrame(g.degrees.map { case (v, d) => (v, d.toLong) })
+        .toDF("nid", "core_degree")
+    }
 
-  /** The k-core peel loop, lineage-bounded: each round's graph is cached
-    * and materialized with ONE action (the vertex count doubles as next
-    * round's `before`), the superseded graph is unpersisted, and every
-    * `checkpointEvery` rounds the graph is CHECKPOINTED to files —
-    * truncating lineage. Without this, round R's action replays all R−1
-    * prior subgraph/outerJoinVertices rounds (O(R²) recompute) and the
-    * serialized lineage grows with peel depth — fine on a clique union
-    * that converges in ~1 round, a driver/lineage blow-up on a graph with
-    * deep cores (a path graph peels in Θ(|V|) rounds; see GraphSpec's
-    * adversarial case). Returns the cached fixpoint graph; callers
-    * unpersist it when done. */
-  def peelKCore(g0: XGraph[Int, Int], k: Int,
-                checkpointEvery: Int = 5): XGraph[Int, Int] = {
-    val sc = g0.vertices.sparkContext
-    if (sc.getCheckpointDir.isEmpty)
-      sc.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
-    var g = g0.cache()
-    var n = g.numVertices
-    var round = 0
-    var done = n == 0
-    while (!done) {
+  /** The k-core peel: [[iterate]] until the vertex set stops shrinking
+    * or empties. Each round strictly shrinks the vertex set or ends the
+    * peel, so the vertex count bounds the rounds; a graph with deep cores
+    * peels in many of them (a path graph in Θ(|V|); see ExtOpsSpec's
+    * adversarial case), which the loop's lineage truncation keeps
+    * bounded. Returns the persisted fixpoint graph. */
+  def peelKCore(g0: XGraph[Int, Int], k: Int): XGraph[Int, Int] =
+    iterate(g0, Int.MaxValue) { g =>
       // Degree becomes the vertex attribute (vertices missing from
       // `degrees` have degree 0); the peel is a distributed subgraph
       // predicate — no driver-side vertex set, works at any graph size.
-      val withDeg = g.outerJoinVertices(g.degrees)((_, _, d) => d.getOrElse(0))
-      val g2 = withDeg.subgraph(vpred = (_, d) => d >= k).cache()
-      round += 1
-      if (round % checkpointEvery == 0) g2.checkpoint()
-      val n2 = g2.numVertices // one action: materializes g2 (+ checkpoint)
-      g.unpersist(blocking = false)
-      done = n2 == n || n2 == 0
-      g = g2; n = n2
-    }
-    g
-  }
+      g.outerJoinVertices(g.degrees)((_, _, d) => d.getOrElse(0)).subgraph(vpred = (_, d) => d >= k)
+    }(r => r.after == r.before || r.after == 0)
 
   /** PageRank over the bounded friend subgraph — the classic iterative
     * benchmark. The graph is made genuinely undirected (both edge
@@ -711,14 +662,12 @@ object GraphAnalytics {
     * misconverged or direction-biased PageRank flips the boolean and fails
     * the hash compare (rq12's tolerance-judgment trick); the spec
     * additionally asserts rank mass conservation on the raw values. */
-  def pageRankRaw(spark: SparkSession, sfDir: String, maxNid: Long = 300): DataFrame = {
-    val g = friendEdges(spark, sfDir, maxNid)
-    val und = XGraph.fromEdges(
-      g.edges.flatMap(e => Iterator(e, Edge(e.dstId, e.srcId, e.attr))), 0)
-    val pr = und.staticPageRank(10).vertices
-    spark.createDataFrame(pr.map { case (v, r) => (v, r) })
-      .toDF("nid", "rank")
-  }
+  def pageRankRaw(spark: SparkSession, sfDir: String, maxNid: Long = 300): DataFrame =
+    Session.released(spark) {
+      val pr = graph(undirected(friendPairs(spark, sfDir, maxNid)), 2).staticPageRank(10).vertices
+      spark.createDataFrame(pr.map { case (v, r) => (v, r) })
+        .toDF("nid", "rank")
+    }
 
   /** PERSONALIZED PageRank from one source — random walks that reset to
     * the SOURCE, not uniformly, so rank mass is confined to the source's
@@ -732,19 +681,17 @@ object GraphAnalytics {
     * dependent. */
   def personalizedPageRank(spark: SparkSession, sfDir: String,
                            srcKey: Int = 1, maxNid: Long = 300): DataFrame = {
-    val g = friendEdges(spark, sfDir, maxNid)
-    val und = XGraph.fromEdges(
-      g.edges.flatMap(e => Iterator(e, Edge(e.dstId, e.srcId, e.attr))), 0)
     val src = srcKey.toLong
-    val pr = und.staticPersonalizedPageRank(src, 10).vertices
-    // localCheckpoint: the 300-row rank frame is materialized ONCE and the
-    // GraphX lineage truncated, so the certificate probe and the final
-    // projection never re-walk the Pregel vertex RDD; the probe itself is
-    // a single conditional-aggregate job (was: two jobs — a peers min/max
-    // agg plus a separate head() for the source rank).
-    val ranks = spark.createDataFrame(pr.map { case (v, r) => (v, r) })
-      .toDF("nid", "rank")
-      .localCheckpoint()
+    // The 300-row rank frame is computed ONCE into a local relation, so
+    // the certificate probe and the final projection never re-walk the
+    // Pregel vertex RDD; the probe itself is a single conditional-aggregate
+    // job (was: two jobs — a peers min/max agg plus a separate head() for
+    // the source rank).
+    val ranks = Session.released(spark) {
+      val und = graph(undirected(friendPairs(spark, sfDir, maxNid)), 2)
+      spark.createDataFrame(und.staticPersonalizedPageRank(src, 10).vertices.map { case (v, r) => (v, r) })
+        .toDF("nid", "rank")
+    }
     val stats = ranks.agg(
       min(when(col("nid") =!= src && col("rank") > 0, col("rank"))),
       max(when(col("nid") =!= src && col("rank") > 0, col("rank"))),
@@ -773,14 +720,13 @@ object GraphAnalytics {
     * same-house clique graph sync LPA provably converges to each clique's
     * MIN vertex id within 3 rounds (round 1: everyone adopts the min
     * neighbor; round 2: the min vertex re-adopts its own id back from the
-    * majority), which IS the closed-form oracle. Fixed `iters` supersteps,
-    * per-round cache + unpersist like the k-core peel (lineage stays
-    * bounded at any community depth). */
+    * majority), which IS the closed-form oracle. Fixed `iters` supersteps
+    * of [[iterate]], like the k-core peel (lineage stays bounded at any
+    * community depth). */
   def labelPropagation(spark: SparkSession, sfDir: String,
-                       maxNid: Long = 300, iters: Int = 6): DataFrame = {
-    var g: XGraph[VertexId, Int] =
-      friendEdges(spark, sfDir, maxNid).mapVertices((vid, _) => vid).cache()
-    for (_ <- 1 to iters) {
+                       maxNid: Long = 300, iters: Int = 6): DataFrame = Session.released(spark, "nid") {
+    val g0: XGraph[VertexId, Int] = friendEdges(spark, sfDir, maxNid).mapVertices((vid, _) => vid)
+    val g = iterate(g0, iters) { g =>
       val votes = g.aggregateMessages[Map[VertexId, Int]](
         ctx => {
           ctx.sendToDst(Map(ctx.srcAttr -> 1))
@@ -788,19 +734,12 @@ object GraphAnalytics {
         },
         (a, b) => (a.keySet ++ b.keySet).iterator
           .map(k => k -> (a.getOrElse(k, 0) + b.getOrElse(k, 0))).toMap)
-      val g2 = g.outerJoinVertices(votes) { (_, old, opt) =>
+      g.outerJoinVertices(votes) { (_, old, opt) =>
         opt.fold(old)(m => m.minBy { case (l, c) => (-c, l) }._1)
-      }.cache()
-      g2.vertices.count() // materialize before dropping the old graph
-      g.unpersist(blocking = false)
-      g = g2
-    }
-    val out = spark.createDataFrame(
-        g.vertices.map { case (v, l) => (v, l) })
-      .toDF("nid", "label").orderBy("nid")
-      .localCheckpoint()
-    g.unpersist(blocking = false)
-    out
+      }
+    }(_.n == iters)
+    spark.createDataFrame(g.vertices.map { case (v, l) => (v, l) })
+      .toDF("nid", "label")
   }
 
   /** Strongly connected components vs weakly connected, on a graph where
@@ -816,7 +755,7 @@ object GraphAnalytics {
     * a chain finalizes one ring per iteration, its topological depth.
     * Bounded subgraph: constant work at any sf, the gx_* rule. */
   def stronglyConnected(spark: SparkSession, sfDir: String,
-                        maxNid: Long = 100): DataFrame = {
+                        maxNid: Long = 100): DataFrame = Session.released(spark, "nid") {
     import org.apache.spark.sql.expressions.Window
     val n = Graph.nodes(spark, sfDir).filter(col("nid") < maxNid)
       .select(col("nid").cast("long").as("nid"),
@@ -830,19 +769,11 @@ object GraphAnalytics {
     val hub = ends.filter(col("fam") === 0).select(col("mn").as("hub"))
     val bridges = ends.filter(col("fam") =!= 0).crossJoin(broadcast(hub))
       .select(col("hub").as("src"), col("mn").as("dst"))
-    val edges = ring.unionByName(wrap).unionByName(bridges)
-      .rdd.coalesce(2).map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    val g = XGraph.fromEdges(edges, defaultValue = 0,
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK).cache()
+    val g = graph(ring.unionByName(wrap).unionByName(bridges), 2)
     val scc = fwBwScc(g)
     val wcc = g.connectedComponents().vertices
-    val out = spark.createDataFrame(
-        scc.join(wcc).map { case (v, (s, c)) => (v, s, c) })
-      .toDF("nid", "scc", "wcc").orderBy("nid")
-      .localCheckpoint()
-    g.unpersist(blocking = false)
-    out
+    spark.createDataFrame(scc.join(wcc).map { case (v, (s, c)) => (v, s, c) })
+      .toDF("nid", "scc", "wcc")
   }
 
   /** Forward-backward SCC (the FW-BW algorithm, Pregel-ized): per round,
@@ -859,14 +790,11 @@ object GraphAnalytics {
     * measured in color collisions (1 for the star construction, pinned by
     * the spec on chains too). At 100 TB the same trade holds: supersteps
     * are diameter-bounded, state is one (color, flag, done) triple per
-    * vertex. */
-  private[graft] def fwBwScc(g0: XGraph[Int, Int],
-                             maxRounds: Int = 50): org.apache.spark.rdd.RDD[(VertexId, Long)] = {
+    * vertex. Each round is one [[iterate]] round, live = unfinished. */
+  private[graft] def fwBwScc(g0: XGraph[Int, Int], maxRounds: Int = 50): RDD[(VertexId, Long)] = {
     // state: (color, inScc, done, sccId)
-    var work = g0.mapVertices((_, _) => (Long.MaxValue, false, false, -1L)).cache()
-    var remaining = work.vertices.filter(!_._2._3).count()
-    var rounds = 0
-    while (remaining > 0 && rounds < maxRounds) {
+    val work0 = g0.mapVertices((_, _) => (Long.MaxValue, false, false, -1L))
+    iterate(work0, maxRounds, live = (st: (Long, Boolean, Boolean, Long)) => !st._3) { work =>
       // (1) forward min-color flood among unfinished vertices.
       val colored = work.pregel(Long.MaxValue,
           activeDirection = org.apache.spark.graphx.EdgeDirection.Out)(
@@ -875,7 +803,7 @@ object GraphAnalytics {
         t => if (t.srcAttr._3 || t.dstAttr._3) Iterator.empty
              else if (t.srcAttr._1 < t.dstAttr._1) Iterator((t.dstId, t.srcAttr._1))
              else Iterator.empty,
-        (a, b) => math.min(a, b)).cache()
+        (a, b) => math.min(a, b))
       // (2) backward reach-the-root flood along same-color edges: roots
       // seed themselves; the flag crosses an edge only if both endpoints
       // share the color.
@@ -888,18 +816,14 @@ object GraphAnalytics {
                  t.srcAttr._1 == t.dstAttr._1 && t.dstAttr._2 && !t.srcAttr._2)
                Iterator((t.srcId, true))
              else Iterator.empty,
-        (a, b) => a || b).cache()
+        (a, b) => a || b)
       // Finalize: in-SCC vertices take their color as scc id; survivors
       // reset their color for the next round.
-      work = marked.mapVertices { (_, st) =>
+      marked.mapVertices { (_, st) =>
         if (st._3) st
         else if (st._2) (st._1, false, true, st._1)
         else (Long.MaxValue, false, false, -1L)
-      }.cache()
-      remaining = work.vertices.filter(!_._2._3).count()
-      rounds += 1
-    }
-    require(remaining == 0, s"SCC did not converge in $maxRounds rounds")
-    work.vertices.mapValues(_._4)
+      }
+    }(_.after == 0).vertices.mapValues(_._4)
   }
 }

@@ -4,6 +4,7 @@ import graft.ops.{RelOps, SimilarityOps, TextOps}
 import graft.plans.GraphAnalytics
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Specs for the extension surface (text/dedup/similarity/relational/graph
   * analytics). Oracle-checkable entries are already covered by the DuckDB
@@ -944,12 +945,21 @@ class ExtOpsSpec extends AnyFunSuite {
     val pathEdges = (1L until 60L).map(i => Edge(i, i + 1, 1))
     val cycleEdges = (0 until 20).map(i => Edge(100L + i, 100L + (i + 1) % 20, 1))
     val g = XGraph.fromEdges(sc.parallelize(pathEdges ++ cycleEdges, 4), 0)
-    val core = GraphAnalytics.peelKCore(g, k = 2, checkpointEvery = 5)
+    // The checkpoints that truncate the lineage, as files under the
+    // session's checkpoint dir (set on the first checkpoint).
+    def checkpoints: Set[String] = sc.getCheckpointDir.toSet.flatMap { (d: String) =>
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(new java.net.URI(d)))
+      try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+    }
+    val before = checkpoints
+    val core = GraphAnalytics.peelKCore(g, k = 2)
     val verts = core.degrees.collect().toMap
     core.unpersist(blocking = false)
     assert(verts.keySet == (0 until 20).map(100L + _).toSet,
       "2-core must be exactly the cycle (path fully peeled)")
     assert(verts.values.forall(_ == 2), "every cycle vertex keeps in-core degree 2")
+    assert(sc.getCheckpointDir.isDefined, "a ~30-round peel must truncate its lineage")
+    assert(checkpoints == before, s"the peel left checkpoint files: ${(checkpoints -- before).mkString(", ")}")
   }
 
   test("contamination: one row per eval doc, oriented eval->train, bounded score") {

@@ -147,7 +147,7 @@ class LintSpec extends AnyFunSuite {
       f.startsWith("graft/lifecycle/") || f == "graft/streaming/StreamingOps.scala"
     }
     val owner = "graft/lifecycle/Lifecycle.scala"
-    val makes = """createTempDirectory|localReleasing""".r
+    val makes = """createTempDirectory|Session\s*\.\s*released\b""".r
     val makers = scoped.filter { case (_, src) => makes.findFirstIn(src).isDefined }.map(_._1)
     assert(makers == Seq(owner), s"temp dirs or results made outside Lifecycle: ${makers.mkString(", ")}")
     val pin = """(?m)^\s*val \w+ = [^\n]*\.localCheckpoint\(\)\s*$""".r
@@ -161,6 +161,50 @@ class LintSpec extends AnyFunSuite {
       f == "graft/streaming/StreamingOps.scala" && l.contains("val batch = batch0.localCheckpoint()") })
     assert(checkpoints.exists(_._1 == "graft/lifecycle/Demos.scala"))
     assert(pin.findFirstIn("        .localCheckpoint()").isEmpty)
+  }
+
+  test("GraphAnalytics persists, forces and releases only in its runtime") {
+    // The graph builder `graph` and the round loop `iterate` own every
+    // persist and build; an entry ends through Session.released, which
+    // releases what they kept. A member sits at two spaces, so nested
+    // helpers count as their member.
+    val ga = allSources.collect { case ("graft/plans/GraphAnalytics.scala", src) => src }.head
+    val member = """(?m)^  (?:private(?:\[\w+\])?\s+)*def\s+(\w+)""".r
+    val held = """\.cache\(\)|\.persist\(|unpersist|XGraph\s*\.\s*fromEdges""".r
+    val sites = held.findAllMatchIn(ga).map { m =>
+      member.findAllMatchIn(ga.substring(0, m.start)).toSeq.last.group(1) -> m.matched
+    }.toSeq
+    val runtime = Set("graph", "iterate")
+    assert(sites.forall(s => runtime(s._1)),
+      s"persisted or built outside the runtime in: ${sites.filterNot(s => runtime(s._1)).distinct.mkString(", ")}")
+    // The pattern must still see what it allows.
+    assert(sites.contains("graph" -> "XGraph.fromEdges") && sites.contains("graph" -> ".cache()"))
+    assert(sites.contains("iterate" -> ".cache()"))
+    Seq("g.unpersist(blocking = false)", "x.persist(StorageLevel.MEMORY_AND_DISK)")
+      .foreach(l => assert(held.findFirstIn(l).isDefined, l))
+  }
+
+  test("no localReleasing, and no localCheckpoint in GraphAnalytics") {
+    // Session.released is the one collect-and-release scope.
+    val gone = """localReleasing""".r
+    val pin = """\.localCheckpoint\s*\(""".r
+    val named = allSources.filter { case (_, src) => gone.findFirstIn(src).isDefined }.map(_._1)
+    assert(named.isEmpty, s"localReleasing in: ${named.mkString(", ")}")
+    val pinned = allSources.filter { case (_, src) => pin.findFirstIn(src).isDefined }.map(_._1)
+    assert(!pinned.contains("graft/plans/GraphAnalytics.scala"), "GraphAnalytics pins with localCheckpoint")
+    // The patterns must still see what they look for.
+    assert(pinned.contains("graft/core/TxTable.scala"))
+    assert(gone.findFirstIn("GraphAnalytics.localReleasing(spark, before, df)").isDefined)
+  }
+
+  test("only Session reads the persisted-RDD registry") {
+    // Session.released and Session.releaseAllBut are the one way to see
+    // and release what a call persisted.
+    val registry = """\bgetPersistentRDDs\b""".r
+    val sites = allSources.filter { case (_, src) => registry.findFirstIn(src).isDefined }.map(_._1)
+    // The pattern must still see the site it allows.
+    assert(sites == Seq("graft/core/Session.scala"),
+      s"getPersistentRDDs read outside Session: ${sites.filterNot(_ == "graft/core/Session.scala").mkString(", ")}")
   }
 
   test("src/main constructs GraftTableProvider in one place") {

@@ -868,6 +868,24 @@ class PropertySpec extends AnyFunSuite {
     } finally graft.core.TxTable.drop(dir)
   }
 
+  test("TxTable vacuum at the default horizon after a trimmed vacuum keeps the snapshot") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tx_vac_trim").toString
+    try {
+      val t = graft.core.TxTable.create(spark, dir,
+        Seq("K01" -> 1L, "K02" -> 2L).toDF("k", "v"), Seq("k"))
+      t.merge(Seq("K02" -> 20L, "K03" -> 3L).toDF("k", "v"))
+      t.merge(Seq("K04" -> 4L).toDF("k", "v"))
+      def rows = t.snapshot().collect().map(_.mkString("|")).sorted.toSeq
+      val before = rows
+      // The trimmed call deletes the manifests below the head; the
+      // default horizon must fold over the ones left, not from version 0.
+      t.vacuum(retainMs = 0L, keepVersions = 1)
+      t.vacuum(retainMs = 0L)
+      assert(rows == before, "a vacuum changed the snapshot")
+    } finally graft.core.TxTable.drop(dir)
+  }
+
   test("TxTable vacuum reclaims loser/orphan dirs by manifest reachability; every retained version replays") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_vac").toString

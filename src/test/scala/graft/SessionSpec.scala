@@ -16,9 +16,11 @@ class SessionSpec extends AnyFunSuite {
     "s67_sql_insert", "s68_sql_update_merge", "s14_stream_file_sink", "st_user_stats_tws",
     "st_window_counts", "rq100_sql_script", "rq9_event_window")
 
-  /** The storage-lifecycle demos: every `graft.lifecycle.Demos` entry and
-    * the three streaming entries that run through `Lifecycle.demo`. */
-  private val lifecycle = Seq(
+  /** The entries that end through `Session.released`: every
+    * `graft.lifecycle.Demos` entry and the three streaming entries that
+    * run through `Lifecycle.demo`, then the GraphX entries
+    * (`graft.plans.GraphAnalytics`). */
+  private val released = Seq(
     "s12_merge_visible", "s13_stream_merge", "s14_stream_file_sink", "s15_time_travel",
     "s17_cdc_diff", "s18_cdc_incremental", "s19_tx_schema_evolution", "s20_tx_compaction",
     "s21_mor_delete", "s25_tx_constraints", "s26_restore", "s27_rebucket",
@@ -32,7 +34,12 @@ class SessionSpec extends AnyFunSuite {
     "s57_zorder_nway", "s58_date_partition", "s59_hilbert_compact", "s60_stats_manifest",
     "s61_delete_where", "s62_ranged_count", "s63_string_zonemap", "s64_sql_delete",
     "s65_row_lineage", "s66_column_stats", "s67_sql_insert", "s68_sql_update_merge",
-    "st_user_stats_tws")
+    "st_user_stats_tws",
+    "gx_degree_hist", "gx_family_cc", "gx_corpus_cc", "gx_corpus_scc", "gx_corpus_pagerank",
+    "gx_corpus_bfs", "gx_corpus_sssp", "gx_corpus_triangles", "gx_corpus_nbrsum",
+    "gx_corpus_kcore", "gx_triangles", "gx_nbr_degree_sum", "gx_pagerank", "gx_shortest_paths",
+    "gx_kcore", "gx_lpa", "gx_scc", "gx_ppr",
+    "dd_cluster_canonical", "dd_survivorship", "dd_semantic_cluster")
 
   /** Build-once entries that change a setting only while they build their
     * artifact, with the artifact's name: deleting it makes the entry build
@@ -69,7 +76,7 @@ class SessionSpec extends AnyFunSuite {
     assert(changed.isEmpty, s"$name changed: ${changed.mkString("; ")}")
   }
 
-  for (name <- lifecycle) test(s"$name leaves settings, persisted RDDs and catalogs as it found them") {
+  for (name <- released) test(s"$name leaves settings, persisted RDDs and catalogs as it found them") {
     def run(): Unit =
       assert(SparkEntry.queries(name)(spark, sf).collect().nonEmpty, s"$name returned no rows")
     val (conf, rdds) = (settings(), persisted())

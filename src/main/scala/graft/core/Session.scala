@@ -47,6 +47,20 @@ object Session {
     spark
   }
 
+  /** This JVM's scratch root: a temp dir made on first use and removed,
+    * with everything under it, when the JVM exits. The per-JVM working
+    * dirs (GraphX checkpoints, the catalog demos' warehouses) live under
+    * it, so a run leaves nothing behind in the system temp dir. */
+  private lazy val scratch: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_jvm")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => TxTable.drop(root.toString)))
+    root
+  }
+
+  /** The dir `name` under this JVM's scratch root, made if absent. */
+  def scratchDir(name: String): String =
+    java.nio.file.Files.createDirectories(scratch.resolve(name)).toString
+
   /** Drop what an entry cached (ML feature frames, GraphX vertex and edge
     * RDDs, local checkpoints), so its memory pressure does not bleed into
     * the next one. */

@@ -130,119 +130,23 @@ final class TxTable private (spark: SparkSession, dir: String,
   def dvPointers(v: Long): Map[Long, Seq[String]] =
     pin(v).entries.view.mapValues(_.dvs).toMap
 
-  /** The rows of `buckets` as of pin `p` under its record (schema,
-    * defaults, aliases, widen), with each bucket's deletion vectors
-    * applied. Buckets WITHOUT DVs stream straight from their base files;
-    * only DV'd buckets pay the anti-join — at 100 TB the merge-on-read
-    * tax is proportional to deleted-against buckets, never the table. */
-  private def readBuckets(p: Pin, buckets: Set[Long]): DataFrame = {
-    val schema = p.schema
-    val defaults = p.defaults
-    val aliases = p.aliases
-    val refs = p.entries.filter { case (b, _) => buckets.contains(b) }
-    // Per-commit-dir WRITE-TIME schema — the Iceberg initial-default rule
-    // (absent vs explicit-NULL) and the type-widening evolution both need
-    // per-FILE schema knowledge, and since every file in one commit
-    // shares its write-time schema, one probe per distinct commit dir
-    // settles all its buckets. Commits are bounded by history length,
-    // never data size.
-    // Commit dirs are IMMUTABLE once published (copy-on-write: rewrites
-    // mint new, randomly named dirs; vacuum deletes unreferenced ones) —
-    // their write-time schema lives in the per-JVM metadata cache instead
-    // of being re-probed by a driver footer read on EVERY snapshot/merge
-    // of an evolved table (measured: ~50-100 ms per distinct commit dir
-    // per read on the defaults/widen path).
-    def commitSchema(path: String): org.apache.spark.sql.types.StructType =
-      FileMeta.cached[org.apache.spark.sql.types.StructType](
-        "s:" + Paths.get(path).getParent, s => 256L + 128L * s.length)(
-        Some(FileMeta.parquetSchema(spark, path))).get
-    // Which defaulted columns a commit dir's files physically LACK. A
-    // column counts as present if ANY of its physical names (current or
-    // pre-rename alias) is in the footer.
-    def missingIn(path: String): Set[String] = {
-      val phys = commitSchema(path).fieldNames.toSet
-      defaults.keySet.filter(c =>
-        !phys.contains(c) && !aliases.getOrElse(c, Nil).exists(phys.contains))
-    }
-    // Widened tables hold files of MIXED physical types (int32 files from
-    // before a widen next to int64 files after) — Spark's mergeSchema
-    // refuses to merge those, so reads group by the commit's full
-    // physical-type signature and each group casts to the logical schema
-    // before unionByName. Only consulted when the version's record
-    // carries a widen: the common table keeps its single-read path.
-    def typeSig(path: String): String =
-      commitSchema(path).fields
-        .map(f => s"${f.name}:${f.dataType.catalogString}").sorted.mkString(";")
-    // PARTITIONED commits nest files in `_p=` dirs; reading their bucket
-    // dirs as roots would drag Spark's partition DISCOVERY in (and its
-    // "conflicting directory structures" refusal across mixed eras), so
-    // the native path expands each bucket dir to its `_p=` LEAF dirs —
-    // plain parquet dirs, no discovery, no synthetic `_p` column (the
-    // value is derived from the source column, which the files store).
-    def leafDirs(path: String): Seq[String] = {
-      val subs = listNames(Paths.get(path)).filter(_.startsWith("_p="))
-      if (subs.isEmpty) Seq(path)
-      else subs.sorted.map(s => Paths.get(path).resolve(s).toString)
-    }
-    val expand: Seq[String] => Seq[String] =
-      if (everPartitioned) _.flatMap(leafDirs) else identity
-    // Widened tables hold mixed physical types — group by the commit's
-    // schema signature so each mergeSchema read is type-homogeneous.
-    val sigGrouped = p.widened.nonEmpty
-    def read(paths0: Seq[String]): DataFrame = {
-      val paths = expand(paths0)
-      if (paths.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else if (defaults.isEmpty && aliases.isEmpty && !sigGrouped)
-        // FAST PATH (the common table: no defaults, no renames, no type
-        // widening): every file resolves by name against the version's
-        // recorded logical schema — columns a pre-evolution file lacks
-        // read as typed NULLs, extra (dropped) physical columns are
-        // ignored, exactly what mergeSchema+conform produced. The
-        // version's recorded schema is passed EXPLICITLY, so no footer is
-        // read at all — not even the cached one `FileMeta.parquet` takes
-        // its schema from for every other plain parquet read. The merging
-        // reads below cannot take either: they need every file's schema.
-        spark.read.schema(schema).parquet(paths: _*)
-      else if (defaults.isEmpty && !sigGrouped)
-        conform(spark.read.option("mergeSchema", "true").parquet(paths: _*),
-          schema, Map.empty, aliases)
-      else
-        // Group by which defaults apply (files written BEFORE an add serve
-        // the default; files written after serve their stored value, so an
-        // explicit NULL stays NULL — physical presence wins) and, for
-        // widened/partitioned tables, by physical signature.
-        paths.groupBy(p => (missingIn(p), if (sigGrouped) typeSig(p) else ""))
-          .map { case ((missing, _), ps) =>
-            conform(spark.read.option("mergeSchema", "true").parquet(ps: _*),
-              schema, defaults.view.filterKeys(missing.contains).toMap, aliases)
-          }.reduce(_ unionByName _)
-    }
-    val (dirty, clean) = refs.partition(_._2.dvs.nonEmpty)
-    val cleanDf = read(clean.toSeq.sortBy(_._1).map { case (b, r) => bucketPath(r.data, b) })
-    if (dirty.isEmpty) cleanDf
-    else {
-      val dvPaths = dirty.toSeq.sortBy(_._1)
-        .flatMap { case (b, r) => r.dvs.map(d => bucketPath(d, b)) }
-      // DV files physically carry exactly the key columns (written by
-      // deleteMergeOnRead from a keyCols projection) — the same explicit-
-      // schema fast path applies unless a type widen makes physical key
-      // types era-dependent.
-      val dvSchema = org.apache.spark.sql.types.StructType(
-        schema.fields.filter(f => keyCols.contains(f.name)))
-      val dvKeys =
-        (if (!sigGrouped) spark.read.schema(dvSchema).parquet(dvPaths: _*)
-         else FileMeta.parquet(spark, dvPaths: _*))
-          .select(keyCols.map(col): _*)
-      val dirtyDf = read(dirty.toSeq.sortBy(_._1).map { case (b, r) => bucketPath(r.data, b) })
-        .join(dvKeys, keyCols, "left_anti")
-      cleanDf.unionByName(dirtyDf)
-    }
-  }
+  /** The rows of pin `p` under its record, read by the graft connector's
+    * scan over that pin: per-file alias and widen resolution, evaluated
+    * defaults, `_p=` layouts, deletion vectors dropped reader-side, and
+    * the hash, bloom, zone and DPP pruning tiers. Every reader of a
+    * committed version goes through here, so a pinned version reads
+    * the same way whoever asks. */
+  private[graft] def read(p: Pin): DataFrame =
+    graft.sources.GraftDataSource.read(spark, dir, keyCols, p)
 
-  /** The table as of the latest committed version. Bucket dirs are read as
-    * leaf parquet directories, so the physical `_b` layout never leaks
-    * into the schema. */
+  /** The rows of `buckets` as of pin `p`: the pin narrowed to those
+    * manifest entries, read through [[read]]. */
+  private[graft] def read(p: Pin, buckets: Set[Long]): DataFrame =
+    read(p.copy(entries = p.entries.filter(e => buckets(e._1))))
+
+  /** The table as of the latest committed version, read through the
+    * graft connector ([[read]]), so the physical `_b` layout never leaks
+    * into the schema and the scan's plan carries its metrics. */
   def snapshot(): DataFrame = snapshotAt(version)
 
   /** The table schema AS OF version `v` — recorded in every manifest
@@ -251,28 +155,16 @@ final class TxTable private (spark: SparkSession, dir: String,
     * per-version record in its log). */
   def schemaAt(v: Long): org.apache.spark.sql.types.StructType = pin(v).schema
 
-  /** Project `df` onto `schema`: absent columns (rows written before a
-    * widening evolution) surface as typed NULLs — or, when the column
-    * was added with `addColumn(..., defaultSql)`, as that version's
-    * DEFAULT expression — the no-rewrite schema-drift contract (s16's
-    * mergeSchema read, applied to the bucket log). Physical presence
-    * always wins: a default never overrides a written value. Renamed
-    * columns resolve through their recorded physical ALIASES: a merged
-    * scan spanning pre- and post-rename commits carries both names, each
-    * file populating exactly one, so coalescing (current, aliases…)
-    * serves every row's stored value under the logical name — and an
-    * explicit NULL stays NULL, because the file that owns the row has
-    * the column physically (under whichever name) as NULL while the
-    * other variants are mergeSchema-absent for that row. */
+  /** Project an incoming batch `df` onto `schema` before a write:
+    * columns the batch lacks take the version's DEFAULT expression when
+    * the column has one, else a typed NULL, and every column casts to
+    * its logical type. Reads never need this: the connector resolves
+    * each file against the pin's record. */
   private def conform(df: DataFrame,
                       schema: org.apache.spark.sql.types.StructType,
-                      defaults: Map[String, String] = Map.empty,
-                      aliases: Map[String, Seq[String]] = Map.empty): DataFrame =
+                      defaults: Map[String, String] = Map.empty): DataFrame =
     df.select(schema.fields.toSeq.map { f =>
-      val variants = (f.name +: aliases.getOrElse(f.name, Nil))
-        .filter(df.columns.contains)
-      if (variants.nonEmpty)
-        coalesce(variants.map(col): _*).cast(f.dataType).as(f.name)
+      if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else defaults.get(f.name)
         .map(d => expr(d).cast(f.dataType).as(f.name))
         .getOrElse(lit(null).cast(f.dataType).as(f.name))
@@ -305,12 +197,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     require(v >= 0 && v <= version, s"version $v not in [0, $version]")
     require(Files.exists(logDir.resolve(f"v$v%08d.txt")),
       s"version $v has been vacuumed")
-    val p = pin(v)
-    // mergeSchema inside readBuckets: buckets written before a widening
-    // evolution lack the new columns; the merged footer schema carries
-    // them as NULL and `conform` pins the column set to the version's
-    // recorded schema. Deletion vectors are applied per DV'd bucket.
-    readBuckets(p, p.entries.keySet)
+    read(pin(v))
   }
 
   /** The bucket ids of the HEAD manifest a `lookup(keys)` must read —
@@ -390,15 +277,26 @@ final class TxTable private (spark: SparkSession, dir: String,
   /** Primary-key point read — the O(k) serving path a keyed table owes
     * its users: each key tuple's hash names its bucket exactly, so a
     * k-key probe opens AT MOST k bucket dirs of the head manifest (DVs
-    * applied), never scanning the table. At 100 TB this is the difference
-    * between a point query and a job: the bucket map is exact (no
-    * min/max-range false positives), and absent keys cost nothing beyond
-    * their hashed bucket. The same pruning serves every layout the table
-    * has evolved through, because the count is read from the manifest. */
+    * applied), never scanning the table. Driver-local keys (every
+    * `Seq(...).toDF` probe) push into the connector's scan as `IN`
+    * filters, where the hash tier prunes to their buckets and the bloom
+    * and row-group tiers refute further, with no probe job; a composite
+    * key's per-column lists name a superset of its tuples, so a semi
+    * join with the local keys keeps the answer exact. A distributed
+    * probe prunes by the buckets its keys hash into ([[lookupBuckets]],
+    * one job), then semi-joins. The count is read from the manifest, so
+    * the same pruning serves every layout the table has evolved through. */
   def lookup(keys: DataFrame): DataFrame = {
     val p = pin(version)
-    val probe = keys.select(keyCols.map(col): _*).dropDuplicates(keyCols)
-    readBuckets(p, lookupBuckets(probe, p)).join(probe, keyCols, "left_semi")
+    val probe = keys.select(keyCols.map(col): _*)
+    localRows(probe) match {
+      case Some(rows) =>
+        val pushed = read(p).filter(keyCols.zipWithIndex.map { case (k, i) =>
+          col(k).isin(rows.map(_.get(i)).distinct.toSeq: _*) }.reduce(_ && _))
+        if (keyCols.length == 1) pushed
+        else pushed.join(probe, keyCols, "left_semi")
+      case None => read(p, lookupBuckets(probe, p)).join(probe, keyCols, "left_semi")
+    }
   }
 
   /** CHECK constraints (Delta's `ALTER TABLE ADD CONSTRAINT` shape):
@@ -631,9 +529,6 @@ final class TxTable private (spark: SparkSession, dir: String,
     Files.createDirectories(logDir)
     Files.writeString(logDir.resolve("partition.txt"), spec)
   }
-
-  private[graft] def everPartitioned: Boolean =
-    Files.exists(logDir.resolve("partition.txt"))
 
   /** The `_p` derivation for the declared transform over `df`, or None
     * when no transform applies (undeclared, source column absent from
@@ -1014,9 +909,8 @@ final class TxTable private (spark: SparkSession, dir: String,
     * don't fire (the update's own contract), and the LIMIT 1 under the
     * count keeps the probe O(first match). */
   private def predicateMatchesIn(where: String, p: Pin, buckets: Set[Long]): Boolean = {
-    val present = buckets.filter(p.entries.contains)
-    present.nonEmpty &&
-      readBuckets(p, present).filter(coalesce(expr(where), lit(false))).limit(1).count() > 0
+    buckets.exists(p.entries.contains) &&
+      read(p, buckets).filter(coalesce(expr(where), lit(false))).limit(1).count() > 0
   }
 
   /** `p` with the buckets in `replaced` re-pointed at `commit`'s freshly
@@ -1157,18 +1051,24 @@ final class TxTable private (spark: SparkSession, dir: String,
     val upd = pinBatch(updates)
     validate(upd) // CHECK constraints: reject BEFORE any write or publish.
     rewriteTouched(upd, "merge") { (keep, p) =>
-      // Widening schema evolution: columns the updates carry that the
-      // table lacks join the schema (existing rows read them as NULL);
-      // a replaced row's absent columns become NULL — the whole-row
-      // MERGE contract. Order: current schema first, new columns appended.
-      val cur = p.schema
-      val newFields = upd.schema.fields.filterNot(f => cur.fieldNames.contains(f.name))
-      val widened = org.apache.spark.sql.types.StructType(cur.fields ++ newFields)
       // A batch that omits a defaulted column gets the base version's
       // default on its inserted/replaced rows (Delta's write-default
       // contract).
+      val widened = widenedBy(upd, p)
       conform(upd, widened, p.defaults).unionByName(conform(keep, widened, p.defaults))
     }
+  }
+
+  /** Widening schema evolution: columns `batch` carries that pin `p`
+    * lacks join the schema (existing rows read them as NULL); a replaced
+    * row's absent columns become NULL — the whole-row MERGE contract.
+    * Order: current schema first, new columns appended. A new column of
+    * a type the connector cannot read is refused before anything is
+    * written. */
+  private def widenedBy(batch: DataFrame, p: Pin): org.apache.spark.sql.types.StructType = {
+    val newFields = batch.schema.fields.filterNot(f => p.schema.fieldNames.contains(f.name))
+    newFields.foreach(graft.sources.GraftDataSource.requireSupported)
+    org.apache.spark.sql.types.StructType(p.schema.fields ++ newFields)
   }
 
   /** Full MERGE grammar (Delta's conditional clauses): WHEN MATCHED AND
@@ -1193,10 +1093,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       require(upd.columns.sorted.sameElements(cur.fieldNames.sorted),
         s"mergeClauses batch schema must match table schema ${cur.toDDL}")
       val touched = distinctBuckets(upd, p.buckets)
-      val present = touched.filter(p.entries.contains)
-      val existing =
-        if (present.isEmpty) conform(upd.limit(0), cur)
-        else readBuckets(p, present)
+      val existing = read(p, touched)
       val keep = existing.join(upd.select(keyCols.map(col): _*), keyCols, "left_anti")
       val valCols = cur.fieldNames.toSeq.filterNot(keyCols.contains)
       val matched = existing.join(
@@ -1246,12 +1143,12 @@ final class TxTable private (spark: SparkSession, dir: String,
       val cur = p.schema
       require(set.keys.forall(cur.fieldNames.contains),
         s"SET column absent from schema ${cur.toDDL}")
-      val touched = distinctBuckets(readBuckets(p, p.entries.keySet).filter(where), p.buckets)
+      val touched = distinctBuckets(read(p).filter(where), p.buckets)
         .filter(p.entries.contains)
       if (touched.isEmpty) None // no matching rows: metadata no-op
       else {
         val hit = coalesce(expr(where), lit(false))
-        val out = conform(readBuckets(p, touched)
+        val out = conform(read(p, touched)
           .select(cur.fieldNames.toSeq.map { c =>
             set.get(c) match {
               case Some(e) => when(hit, expr(e)).otherwise(col(c)).as(c)
@@ -1317,7 +1214,7 @@ final class TxTable private (spark: SparkSession, dir: String,
               perFile.flatMap(_.get(f)).getOrElse(-1L)))
           }
         } else {
-          val rows = readBuckets(p, Set(b))
+          val rows = read(p, Set(b))
           val tmp = Files.createTempDirectory(dataDir, ".carry")
           rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val fs = listNames(tmp).filter(_.endsWith(".parquet"))
@@ -1390,13 +1287,12 @@ final class TxTable private (spark: SparkSession, dir: String,
     * version that silently missed deleting them). */
   def deleteWhere(where: String): Long =
     commitLoop("delete-where") { p =>
-      val touched = distinctBuckets(readBuckets(p, p.entries.keySet).filter(where), p.buckets)
+      val touched = distinctBuckets(read(p).filter(where), p.buckets)
         .filter(p.entries.contains)
       if (touched.isEmpty) None // no matching rows: metadata no-op
       else {
         val hit = coalesce(expr(where), lit(false))
-        val commit = writeCommit(conform(readBuckets(p, touched).filter(not(hit)), p.schema),
-          p.buckets)
+        val commit = writeCommit(read(p, touched).filter(not(hit)), p.buckets)
         // Re-pointed only WITH the read-set predicate, like update.
         Some(Attempt(rewritten(p, touched, commit), Some(commit), Some(touched), Some(where)))
       }
@@ -1440,8 +1336,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     // for a CDC consumer replaying quiet periods.
     if (touchKeys.isEmpty) return version
     rewriteTouched(touchKeys, "apply-changes") { (keep, p) =>
-      val newFields = up.schema.fields.filterNot(f => p.schema.fieldNames.contains(f.name))
-      val widened = org.apache.spark.sql.types.StructType(p.schema.fields ++ newFields)
+      val widened = widenedBy(up, p)
       conform(up, widened, p.defaults).unionByName(conform(keep, widened, p.defaults))
     }
   }
@@ -1460,8 +1355,8 @@ final class TxTable private (spark: SparkSession, dir: String,
     * rewrite to drop one row — at 100 TB that is gigabytes of IO for a
     * GDPR-delete of a handful of keys), the delete writes only the KEY
     * rows as a deletion-vector commit and appends that DV to the touched
-    * buckets' manifest entries. Readers anti-join a bucket's DV keys at
-    * scan time (`readBuckets`), so read amplification is confined to
+    * buckets' manifest entries. The connector's readers drop a bucket's
+    * DV keys at scan time ([[read]]), so read amplification is confined to
     * DV'd buckets; any later copy-on-write MERGE of a bucket — and
     * `compact()` — folds its tombstones back into a clean base. Write
     * cost: O(deleted keys). The base data pointers are untouched, which
@@ -1534,14 +1429,11 @@ final class TxTable private (spark: SparkSession, dir: String,
       // Exact bucket pruning: only buckets a source key hashes into are
       // candidates. Bounded by the bucket count — driver-side by design.
       val touched = distinctBuckets(keySource, p.buckets)
-      val present = touched.filter(p.entries.contains)
-      // Conform to the LOGICAL schema of the base (touched buckets may
-      // predate a widening evolution and physically lack new columns);
-      // readBuckets also applies any pending deletion vectors, so a
-      // copy-on-write rewrite of a DV'd bucket FOLDS its tombstones.
-      val existing =
-        if (present.isEmpty) conform(keySource.limit(0), p.schema)
-        else readBuckets(p, present)
+      // The read serves the base's LOGICAL schema (touched buckets may
+      // predate a widening evolution and physically lack new columns)
+      // and drops pending deletion vectors, so a copy-on-write rewrite
+      // of a DV'd bucket FOLDS its tombstones.
+      val existing = read(p, touched)
       val keep = existing
         .join(keySource.select(keyCols.map(col): _*), keyCols, "left_anti")
       val out0 = build(keep, p)
@@ -1601,11 +1493,11 @@ final class TxTable private (spark: SparkSession, dir: String,
     // the bucket's visible rows.
     val changed = (mo.keySet ++ mn.keySet).filter(b => mo.get(b) != mn.get(b))
     // Evolution is widening-only, so the newer version's record is the
-    // superset; the older side conforms, reading absent columns as NULL.
-    // Both sides group by physical type if either version was widened.
+    // superset: both sides read under it, the older side's files serving
+    // absent columns as NULL or their default and pre-widen types widened.
     val valCols = pn.schema.fieldNames.toSeq.filterNot(keyCols.contains)
     def side(m: Map[Long, BucketRef], tag: String): DataFrame =
-      readBuckets(pn.copy(entries = m, widened = po.widened ++ pn.widened), changed)
+      read(pn.copy(entries = m), changed)
         .select(keyCols.map(col) ++ valCols.map(c => col(c).as(s"${tag}_$c")) :+
           lit(true).as(s"_in_$tag"): _*)
     val joined = side(mo, "old").join(side(mn, "new"), keyCols, "full_outer")
@@ -1852,7 +1744,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       val n = if (newBuckets > 0) newBuckets else p.buckets
       // DV-applied read: compaction FOLDS deletion vectors — the output
       // manifest is all-clean.
-      val rows = readBuckets(p, p.entries.keySet)
+      val rows = read(p)
       val commit = writeCommit(rows, n, clusterOf(rows))
       val next = rewritten(p, p.entries.keySet, commit).copy(buckets = n)
       Some(Attempt(if (n != p.buckets) next.copy(op = "rebucket") else next, Some(commit)))
@@ -1862,8 +1754,8 @@ final class TxTable private (spark: SparkSession, dir: String,
   /** DROP COLUMN — metadata-only schema NARROWING, the DDL counterpart
     * of the widening MERGE evolution: the new version re-publishes the
     * same manifest (zero data rewritten, `dataPointers` unchanged) with
-    * a schema that omits the column; `conform` projects it away at read
-    * time, and time travel still serves it at pre-drop versions from
+    * a schema that omits the column; the connector's read projects it
+    * away ([[read]]), and time travel still serves it at pre-drop versions from
     * the untouched files. Caveat (documented, the Delta column-mapping
     * problem): re-ADDING a same-named column later would resurrect the
     * physical values for never-rewritten rows, because columns resolve
@@ -1895,7 +1787,8 @@ final class TxTable private (spark: SparkSession, dir: String,
     * manifest (zero data rewritten, `dataPointers` unchanged) with a
     * schema that appends the column and its default in the record.
     * Rows written before the add physically lack the column and serve
-    * the DEFAULT at read time (`conform`); rows written after carry
+    * the DEFAULT at read time (the connector evaluates it once at
+    * planning, [[read]]); rows written after carry
     * whatever value the writer supplied — physical presence always wins,
     * so a later explicit NULL stays NULL. This is the Iceberg
     * `initial-default` / Delta `ALTER TABLE ADD COLUMN ... DEFAULT`
@@ -1910,6 +1803,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       s"column name '$colName' is reserved for the physical layout")
     val field = org.apache.spark.sql.types.StructType
       .fromDDL(s"`$colName` $ddlType").fields.head
+    graft.sources.GraftDataSource.requireSupported(field)
     // Eager validation: the default must evaluate and cast to the column
     // type on a 1-row probe (also rejects column references).
     spark.range(1).select(expr(defaultSql).cast(field.dataType)).collect()
@@ -1930,9 +1824,8 @@ final class TxTable private (spark: SparkSession, dir: String,
 
   /** Widening record as of `v` (`#widen=`): column → the catalog types
     * its files may PHYSICALLY carry from before each widen, cumulative
-    * like defaults/renames. A non-empty record flips the read path into
-    * per-commit type grouping; the grouping keys on actual footer
-    * schemas, so the record never has to be exhaustive to be safe. */
+    * like defaults/renames. Reads never consult it: the connector
+    * resolves every file's physical type from its own footer. */
   def widenedAt(v: Long): Map[String, Seq[String]] = pin(v).widened
 
   /** WIDEN COLUMN TYPE — the remaining Delta/Iceberg schema-evolution
@@ -1942,10 +1835,10 @@ final class TxTable private (spark: SparkSession, dir: String,
     * the DDL triad — the new version re-publishes the same manifest
     * (zero data rewritten, `dataPointers` unchanged; on a 100 TB table
     * the widen costs one manifest) with the field's type widened in the
-    * recorded schema and a `#widen=` record entry that flips the
-    * read path into per-commit physical-type grouping: pre-widen files
-    * keep serving their int32/float pages, cast to the logical type at
-    * read (`conform`), while post-widen commits store the wide type
+    * recorded schema and a `#widen=` record entry: pre-widen files
+    * keep serving their int32/float pages, which the connector's readers
+    * widen to the logical type per file ([[read]]), while post-widen
+    * commits store the wide type
     * physically. Every skipping tier REFUSES the widened column by its
     * write-time-type guard (bucket blooms hash differently, zone maps
     * and row-group stats are in file units — GraftDataSource's
@@ -2061,7 +1954,7 @@ final class TxTable private (spark: SparkSession, dir: String,
         // bucket ids, one file per (bucket × partition value) cell.
         // Degraded buckets are REPLACED (a bucket whose DVs deleted every
         // row drops out of the manifest, like a full-delete merge).
-        val commit = writeCommit(readBuckets(p, degraded), p.buckets)
+        val commit = writeCommit(read(p, degraded), p.buckets)
         Some(Attempt(rewritten(p, degraded, commit), Some(commit)))
       }
     }
@@ -2304,10 +2197,18 @@ object TxTable {
       v: Long, op: String, buckets: Int, ridHwm: Long,
       entries: Map[Long, BucketRef], schemaDdl: String,
       defaults: Map[String, String], aliases: Map[String, Seq[String]],
-      widened: Map[String, Seq[String]], dataDir: Path) {
+      widened: Map[String, Seq[String]], dataDir: Path, logDir: Path) {
 
+    /** The logical schema. Every column reads nullable: no writer
+      * enforces NOT NULL, and a column added after a file was written
+      * reads NULL from it. */
     lazy val schema: org.apache.spark.sql.types.StructType =
-      org.apache.spark.sql.types.StructType.fromDDL(schemaDdl)
+      org.apache.spark.sql.types.StructType(
+        org.apache.spark.sql.types.StructType.fromDDL(schemaDdl).fields.map(_.copy(nullable = true)))
+
+    /** True once the table has declared a partition transform: only then
+      * can a commit dir nest its files in `_p=` dirs. */
+    def everPartitioned: Boolean = Files.exists(logDir.resolve("partition.txt"))
 
     /** The version's column record: two versions with equal records
       * read the same files the same way. */
@@ -2316,7 +2217,7 @@ object TxTable {
     /** Resolved physical layout for external readers (the DSv2
       * connector): bucketId → (data bucket dir, DV bucket dirs). Paths
       * come through [[bucketPath]], so shallow-clone absolute pointers
-      * resolve exactly as the native read path resolves them. */
+      * resolve against their source's data dir. */
     lazy val layout: Map[Long, (String, Seq[String])] = entries.map { case (b, r) =>
       b -> (bucketPath(dataDir, r.data, b), r.dvs.map(d => bucketPath(dataDir, d, b)))
     }
@@ -2354,7 +2255,7 @@ object TxTable {
     def lists(k: String) = recs(k).map(r => r.head -> r.tail).toMap
     Pin(v, one("op").getOrElse(""), h("buckets").toInt, h.get("ridhwm").fold(0L)(_.toLong),
       entries, one("schema").getOrElse(""), recs("defaults").map(r => r(0) -> r(1)).toMap,
-      lists("renames"), lists("widen"), dataDir)
+      lists("renames"), lists("widen"), dataDir, file.getParent)
   }
 
   /** `p` as manifest text (see [[Pin]]). */
@@ -2817,6 +2718,7 @@ object TxTable {
              rowTracking: Boolean = false): TxTable = {
     val t = new TxTable(spark, dir, keyCols)
     require(t.version < 0, s"table already exists at $dir")
+    base.schema.fields.foreach(graft.sources.GraftDataSource.requireSupported)
     if (bloomCols.nonEmpty) t.setBloomColumns(bloomCols)
     if (clusterCols.nonEmpty) t.setClusterColumns(clusterCols)
     if (zoneMapCols.nonEmpty) t.setZoneMapColumns(zoneMapCols)
@@ -2838,7 +2740,7 @@ object TxTable {
     // snapshot with correct columns.
     require(t.publish(Pin(0L, "create", numBuckets, hwm,
         t.bucketsIn(commit).map(_ -> BucketRef(commit, Nil)).toMap,
-        base2.schema.toDDL, Map.empty, Map.empty, Map.empty, t.dataDir)),
+        base2.schema.toDDL, Map.empty, Map.empty, Map.empty, t.dataDir, t.logDir)),
       s"concurrent create at $dir")
     // Persist the merge keys: the table is SELF-DESCRIBING, so catalog
     // consumers (GraftCatalog, the DSv2 connector without a keys option)

@@ -232,8 +232,9 @@ object Demos {
     * merge-on-read delete (v2, DV'd bucket), read back through the
     * connector. Three certificates ride the hash channel:
     * `conn_full_match` — the connector's full-table read equals the
-    * native snapshot row-for-row (including the DV anti-join, applied
-    * reader-side from planning-shipped key sets); `pruned_plan` — a key
+    * rows written (the input with the merge and delete applied as
+    * DataFrame algebra) row-for-row, the DV applied reader-side from
+    * planning-shipped key sets; `pruned_plan` — a key
     * equality pushed through SupportsPushDownFilters plans exactly ONE
     * input partition out of the manifest's buckets (the connector
     * re-derives the bucket with Catalyst's own XxHash64, so hash
@@ -256,7 +257,14 @@ object Demos {
         Seq(Tuple1("Customer#000000013"))).toDF("name"))
 
       def conn = spark.read.format("graft").option("keys", "name").load(dir)
-      val fullMatch = sameRows(conn, t.snapshot())
+      // The reference is the rows written, as plain DataFrame algebra:
+      // the merge's promotions applied to the input, the deleted key gone.
+      val promoted = col("name").endsWith("7")
+      val written = base
+        .select(col("name"), when(promoted, lit("PROMOTED")).otherwise(col("house")).as("house"),
+          when(promoted, col("acctbal") + 1000).otherwise(col("acctbal")).as("acctbal"))
+        .filter(col("name") =!= "Customer#000000013")
+      val fullMatch = sameRows(conn, written)
       // Plan-level probe: the pushed key equality must prune the batch to
       // one bucket of the manifest's eight.
       val planned = GraftDataSource.plannedPartitions(dir,
@@ -423,7 +431,7 @@ object Demos {
     * wants), while the same count after a merge-on-read delete REFUSES
     * the shortcut (an equality delete only retires keys that exist;
     * footers cannot know) and scans — both counts certified against the
-    * native snapshot, both PLANS certified from executedPlan. Lifecycle
+    * rows written, both PLANS certified from executedPlan. Lifecycle
     * class like s40. */
   def txCountPushdown(spark: SparkSession, sfDir: String): DataFrame =
     Lifecycle.demo(spark, "s42") { case Seq(dir) =>
@@ -453,7 +461,8 @@ object Demos {
           ("clean", cleanCount, cleanMeta && cleanCount == base.count(),
             manifestCounted),
           ("after_mor_delete", dvdCount,
-            dvdScans && dvdCount == t.snapshot().count(), manifestCounted)))
+            dvdScans && dvdCount == base.filter(col("name") =!= "Customer#000000013").count(),
+            manifestCounted)))
         .toDF("phase", "n_rows", "plan_and_count_ok", "manifest_counted")
         .orderBy("phase")
     }
@@ -484,7 +493,7 @@ object Demos {
         .contains("GraftStatsScan")
       val cleanRow = clean.head()
       val cleanOk = cleanStats &&
-        (cleanRow.getDouble(0), cleanRow.getDouble(1)) == scanned(t.snapshot())
+        (cleanRow.getDouble(0), cleanRow.getDouble(1)) == scanned(base)
       // Strings must always scan: binary footer stats may be truncated.
       val strRefused = !conn.agg(min("name")).queryExecution.executedPlan
         .toString.contains("GraftStatsScan")
@@ -496,7 +505,8 @@ object Demos {
         .contains("GraftStatsScan")
       val dvdRow = dvd.head()
       val dvdOk = dvdScans &&
-        (dvdRow.getDouble(0), dvdRow.getDouble(1)) == scanned(t.snapshot())
+        (dvdRow.getDouble(0), dvdRow.getDouble(1)) ==
+          scanned(base.filter(col("name") =!= "Customer#000000013"))
 
       spark.createDataFrame(Seq(
           ("clean",
@@ -565,7 +575,7 @@ object Demos {
     * min/max admit it, not every page of every surviving bucket). Two
     * engine-side certificates ride the hash channel:
     * `skip_hash_match` — the same predicate evaluated through the
-    * skipping connector and through the native snapshot returns identical
+    * skipping connector and over the rows written returns identical
     * rows (skipping never changes results); `rowgroups_skipped` — a point
     * predicate on a column that is constant per bucket by construction
     * (`pmod(xxhash64(name), 8)` = the write path's own bucket id, so
@@ -583,12 +593,12 @@ object Demos {
 
       // Certificate 1: with-skipping == without-skipping, row for row.
       val pred = col("acctbal") > 1000.0
-      val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
+      val hashMatch = sameRows(conn.filter(pred), base.filter(pred))
 
       // Certificate 2: scan-level output shrinks to the one bucket whose
       // footer stats admit the point predicate (vb == bucket id).
-      val matching = t.snapshot().filter(col("vb") === 3).count()
-      val total = t.snapshot().count()
+      val matching = base.filter(col("vb") === 3).count()
+      val total = base.count()
       val emitted = scanRowsEmitted(conn.filter(col("vb") === 3))
       val skipped = emitted == matching && emitted < total
 
@@ -612,7 +622,7 @@ object Demos {
     * absent" row groups WITHOUT decoding them — on a RANDOM layout where
     * stats admit everything. Two certificates ride the hash channel:
     * `bloom_hash_match` — the bloom-skipping connector returns exactly
-    * the native snapshot's rows (skipping never changes results; bloom
+    * the rows written (skipping never changes results; bloom
     * false positives only admit extra row groups, the residual filter
     * still applies); `bloom_skip_effective` — the same 3-value In probe
     * emits strictly fewer scan rows through the bloom'd table than
@@ -641,7 +651,7 @@ object Demos {
       val targets = Seq(7, 34, 121).map(k => hex(Graph.fullName(k)))
       def pred = col("token").isin(targets: _*)
 
-      val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
+      val hashMatch = sameRows(conn.filter(pred), base.filter(pred))
 
       val withBloom = scanRowsEmitted(conn.filter(pred))
       val without = scanRowsEmitted(twin.filter(pred))
@@ -679,7 +689,7 @@ object Demos {
     * refute AFTER a footer read per file — with 4096 buckets the sidecar
     * plans ~1 bucket instead of opening 4096 footers. Certificates on the
     * hash channel: `idx_hash_match` — the pruned connector returns
-    * exactly the native snapshot's rows (bloom membership has no false
+    * exactly the rows written (bloom membership has no false
     * negatives under the identical hash, and the write-time-type header
     * refuses a widened column rather than mis-hash); `idx_prune_effective`
     * — the 3-value In probe plans ≤6 of 16 buckets (3 + false positives)
@@ -708,7 +718,7 @@ object Demos {
 
       def conn = spark.read.format("graft").option("keys", "name").load(dir)
       def pred = col("token").isin(targets: _*)
-      val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
+      val hashMatch = sameRows(conn.filter(pred), base.filter(pred))
 
       conn.filter(pred)
         .select(col("name"), col("house"),
@@ -1024,11 +1034,11 @@ object Demos {
     * flat era, both eras readable in one scan and each pruned by
     * exactly its own recorded transform (the s27 rebucket discipline
     * applied to partitioning). Certificates on the hash channel:
-    * `dp_hash_match` (pruned band == native snapshot band),
+    * `dp_hash_match` (pruned band == band of the rows written),
     * `dp_prune_effective` (the 3-of-30-day probe plans ≤ half the
     * files), `dp_evolution_ok` (flat-era and day-era commits BOTH
     * present in the final manifest, and the full unpruned read equals
-    * the native snapshot row-for-row). */
+    * the rows written row-for-row). */
   def txDatePartition(spark: SparkSession, sfDir: String): DataFrame =
     Lifecycle.demo(spark) { _ =>
       // The two-era layout (flat create, declared days(ts), one migrating
@@ -1037,27 +1047,31 @@ object Demos {
       // READING against the frozen eras, which is the behavior the entry
       // exists for. Partition-declared WRITES stay covered per-invocation
       // by s62 (same setPartitioning→merge path).
+      val events0 = Tables.events(spark, sfDir)
+        .select("event_id", "ts", "event_type", "value")
+      val era1 = events0.filter(col("event_id") % 3 === 0)
+      // Three literal keys (present at every SF) — the merge rewrites
+      // only their buckets, migrating those to day layout; the rest of
+      // the table keeps its flat-era commit.
+      val migrated = events0.filter(col("event_id").isin(1L, 4L, 7L))
+        .withColumn("value", col("value") + 1000.0)
       val dir = Artifacts.frozen(sfDir, "tx_demo_s58") { d =>
-        val events0 = Tables.events(spark, sfDir)
-          .select("event_id", "ts", "event_type", "value")
-        val era1 = events0.filter(col("event_id") % 3 === 0)
         val tb = TxTable.create(spark, d, era1, Seq("event_id"),
           numBuckets = 16) // created FLAT — the pre-partitioning era
         tb.setPartitioning("days(ts)")
-        // Three literal keys (present at every SF) — the merge rewrites
-        // only their buckets, migrating those to day layout; the rest of
-        // the table keeps its flat-era commit.
-        tb.merge(events0.filter(col("event_id").isin(1L, 4L, 7L))
-          .withColumn("value", col("value") + 1000.0))
+        tb.merge(migrated)
       }
       val t = TxTable.open(spark, dir, Seq("event_id"))
       val commits = t.dataPointers(t.version).values.toSet
       val (dayEra, flatEra) = commits.partition(c => java.nio.file.Files.exists(
         java.nio.file.Paths.get(dir, "data", c, "_pspec.txt")))
       def conn = spark.read.format("graft").load(dir)
-      val native = t.snapshot()
+      // The reference is the rows written: the flat era with the merge
+      // applied as DataFrame algebra.
+      val written = era1.join(migrated.select("event_id"), Seq("event_id"), "left_anti")
+        .unionByName(migrated)
       val evolutionOk = dayEra.nonEmpty && flatEra.nonEmpty &&
-        sameRows(conn, native)
+        sameRows(conn, written)
 
       def plannedFiles(preds: Array[Filter]): Int =
         GraftDataSource.plannedPartitions(dir, preds).map(_.files.length).sum
@@ -1071,7 +1085,7 @@ object Demos {
 
       val pred = col("ts") >= lit("2024-01-10 00:00:00").cast("timestamp") &&
         col("ts") < lit("2024-01-13 00:00:00").cast("timestamp")
-      val hashMatch = sameRows(conn.filter(pred), native.filter(pred))
+      val hashMatch = sameRows(conn.filter(pred), written.filter(pred))
 
       conn.filter(pred)
         .groupBy("event_type")
@@ -1114,9 +1128,9 @@ object Demos {
     * date-partition entry. */
   def txRangedCount(spark: SparkSession, sfDir: String): DataFrame =
     Lifecycle.demo(spark, "s62") { case Seq(work) =>
+      val events = Tables.events(spark, sfDir)
+        .select("event_id", "ts", "event_type", "value")
       val dir = Artifacts.frozen(sfDir, "tx_demo_s62") { d =>
-        val events = Tables.events(spark, sfDir)
-          .select("event_id", "ts", "event_type", "value")
         // 4 buckets: a day-partitioned table's file floor is buckets × days
         // (the optimized write caps it there at ANY data size), and this
         // entry's cost is that floor — wider bucketing buys the demo
@@ -1125,7 +1139,6 @@ object Demos {
         t.setPartitioning("days(ts)")
         t.merge(events)
       }
-      val t = TxTable.open(spark, dir, Seq("event_id"))
       def conn(d: String) = spark.read.format("graft").load(d)
       val lo = lit("2024-01-10 00:00:00").cast("timestamp")
       val hi = lit("2024-01-13 00:00:00").cast("timestamp")
@@ -1138,11 +1151,11 @@ object Demos {
         .contains("partition-covered")
       val straddleFellBack = !straddle.queryExecution.executedPlan.toString
         .contains("partition-covered")
-      val native = t.snapshot()
-      // Two independent pre-poison reads of the same frozen layout —
-      // overlap them (guide §2.6).
+      // Two independent pre-poison reads — the covered count's reference
+      // from the rows written, and the straddle count — overlap them
+      // (guide §2.6).
       val (nativeCovered, straddleN) = par2(
-        native.filter(col("ts") >= lo && col("ts") < hi).count(),
+        events.filter(col("ts") >= lo && col("ts") < hi).count(),
         straddle.head().getLong(0)) // needs real data: pre-poison
       // Zero-data-I/O proof: on a private copy of the table whose EVERY
       // parquet file is poison (log and sidecars copied), the covered
@@ -1173,14 +1186,12 @@ object Demos {
     * column's type widened and ZERO data rewritten (`dataPointers`
     * unchanged — on a 100 TB table the DDL costs two small log files).
     * Pre-widen files keep serving int32 pages cast at read; post-widen
-    * commits store int64 physically; the read path groups commits by
-    * physical-type signature (Spark's mergeSchema refuses int/long
-    * merges) and the DSv2 connector serves the mixed layout through its
-    * per-file type codes. Every skipping tier refuses the widened
+    * commits store int64 physically; the connector serves the mixed
+    * layout through its per-file type codes. Every skipping tier refuses the widened
     * column by its write-time-type guard (conservative no-skip, never
     * wrong — Dsv2Spec pins it). Certificates on the hash channel:
     * `widen_metadata_only` (the widen commit re-points nothing),
-    * `widen_conn_match` (connector == native over the mixed-type
+    * `widen_conn_match` (connector == the rows written over the mixed-type
     * layout), `widen_range_real` (post-widen values exceed Int.MaxValue
     * — the wide path carries real wide values, not just a type label). */
   def txWidenColumn(spark: SparkSession, sfDir: String): DataFrame =
@@ -1203,13 +1214,18 @@ object Demos {
       t.merge(t.snapshot().filter(col("name").endsWith("3"))
         .withColumn("qty", col("qty") + lit(3000000000L)))
 
-      val native = t.snapshot()
+      // The reference is the rows written: both merges applied to the
+      // input as DataFrame algebra, under the widened type.
+      val written = base.select(col("name"),
+        when(col("name").endsWith("7"), lit("PROMOTED")).otherwise(col("house")).as("house"),
+        (col("qty").cast("long") +
+          when(col("name").endsWith("3"), lit(3000000000L)).otherwise(lit(0L))).as("qty"))
       def conn = spark.read.format("graft").load(dir)
       // Independent reads of the same frozen head: hash-fold compare
       // (sameRows overlaps the two sides) and the range probe.
       val (connMatch, rangeReal) = par2(
-        sameRows(conn, native),
-        native.agg(max("qty")).head.getLong(0) > Int.MaxValue.toLong)
+        sameRows(conn, written),
+        conn.agg(max("qty")).head.getLong(0) > Int.MaxValue.toLong)
 
       conn.filter(col("name") <= "Customer#000000059")
         .select(col("name"), col("house"), col("qty"))
@@ -1240,7 +1256,7 @@ object Demos {
     * bucket-correlated case where whole buckets refute, plus the
     * poisoned-file proof that refuted files see zero I/O). Certificates
     * on the hash channel: `zm_hash_match` (pruned connector result ==
-    * native snapshot), `zm_file_prune` (the band probe plans ≤ half the
+    * rows written), `zm_file_prune` (the band probe plans ≤ half the
     * files), `zm_bucket_prune` (a below-domain probe refutes EVERY
     * bucket at planning — 0 partitions). The clustered layout is
     * deterministic, so it freezes as a build-once artifact (the
@@ -1251,7 +1267,6 @@ object Demos {
   def txZonemapRange(spark: SparkSession, sfDir: String): DataFrame =
     Lifecycle.demo(spark) { _ =>
       val (dir, globalMin) = zonemapLayout(spark, sfDir)
-      val t = TxTable.open(spark, dir, Seq("k"))
       def conn = spark.read.format("graft").load(dir)
       // Filters arrive as TOP-LEVEL conjuncts (Spark splits And before
       // pushdown), so the helper passes them the same way.
@@ -1269,7 +1284,7 @@ object Demos {
       val bucketPrune = noneParts == 0
 
       val pred = col("price_cents").between(lo, hi)
-      val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
+      val hashMatch = sameRows(conn.filter(pred), lineitemPrices(spark, sfDir).filter(pred))
 
       conn.filter(pred)
         .groupBy("flag")
@@ -1280,14 +1295,20 @@ object Demos {
         .orderBy("flag")
     }
 
+  /** The keyed lineitem price projection the zone-map and stats-manifest
+    * layouts are written from — and the reference their certificates
+    * compare the connector against. */
+  private def lineitemPrices(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.lineitem(spark, sfDir).select(
+      (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
+      round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
+      col("l_returnflag").as("flag"))
+
   /** s55's range-clustered, zone-mapped layout (read by s55 and s66) and
     * its below-domain probe bound (the minimum `price_cents`). */
   private def zonemapLayout(spark: SparkSession, sfDir: String): (String, Long) = {
     val (dir, globalMin) = Artifacts.frozenValue(sfDir, "tx_demo_s55") { d =>
-      val base = Tables.lineitem(spark, sfDir).select(
-        (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
-        round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
-        col("l_returnflag").as("flag"))
+      val base = lineitemPrices(spark, sfDir)
       val nRows = base.count()
       val tb = TxTable.create(spark, d, base, Seq("k"),
         numBuckets = 8, zoneMapCols = Seq("price_cents"))
@@ -1317,7 +1338,7 @@ object Demos {
     * — `ignoreStatsManifest` — costs >8 reads, so the contrast is real),
     * `sm_same_decisions` (both paths plan the IDENTICAL file set — the
     * manifest changes WHERE metadata is read, never what is decided),
-    * `sm_hash_match` (pruned band == native). Advisory end to end: a
+    * `sm_hash_match` (pruned band == band of the rows written). Advisory end to end: a
     * version without the file (pre-manifest, crash before the stats
     * write) falls back per bucket, mixed per bucket. */
   def txStatsManifest(spark: SparkSession, sfDir: String): DataFrame =
@@ -1329,12 +1350,9 @@ object Demos {
       // certificates by PLANNING both paths and READING against the
       // frozen layout. The harvest-at-publish write path stays covered
       // per-invocation by s54's clustered write.
+      val base = lineitemPrices(spark, sfDir)
+        .withColumn("token", md5(col("k").cast("string")))
       val dir = Artifacts.frozen(sfDir, "tx_demo_s60") { d =>
-        val base = Tables.lineitem(spark, sfDir).select(
-          (col("l_orderkey") * 8 + col("l_linenumber")).as("k"),
-          round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
-          col("l_returnflag").as("flag"))
-          .withColumn("token", md5(col("k").cast("string")))
         val nRows = base.count()
         val tb = TxTable.create(spark, d, base, Seq("k"),
           numBuckets = 8, zoneMapCols = Seq("price_cents"),
@@ -1343,7 +1361,6 @@ object Demos {
           tb.compact(0, Seq("price_cents"))
         }
       }
-      val t = TxTable.open(spark, dir, Seq("k"))
       import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
       val band: Array[Filter] = Array(
         GreaterThanOrEqual("price_cents", 2000000L),
@@ -1365,7 +1382,7 @@ object Demos {
 
       def conn = spark.read.format("graft").load(dir)
       val pred = col("price_cents").between(2000000L, 2100000L)
-      val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
+      val hashMatch = sameRows(conn.filter(pred), base.filter(pred))
 
       conn.filter(pred)
         .groupBy("flag")
@@ -1389,7 +1406,7 @@ object Demos {
     * Spark compares strings by. Bounds, not extrema — sound under any
     * writer-side statistics truncation, which is why MIN/MAX pushdown
     * still refuses strings. Certificates on the hash channel:
-    * `sz_hash_match` (pruned band == native band), `sz_file_prune` (the
+    * `sz_hash_match` (pruned band == band of the rows written), `sz_file_prune` (the
     * one-adjective band plans ≤ half the files of the sorted layout),
     * `sz_bucket_prune` (a below-domain probe plans ZERO partitions).
     * PropertySpec adds the no-misrefute battery: values sharing a
@@ -1402,10 +1419,10 @@ object Demos {
     * s54's clustered write. */
   def txStringZonemap(spark: SparkSession, sfDir: String): DataFrame =
     Lifecycle.demo(spark) { _ =>
+      val base = Tables.part(spark, sfDir).select(
+        col("p_partkey").as("k"), col("p_name").as("name"),
+        round(col("p_retailprice") * 100).cast("long").as("price_cents"))
       val dir = Artifacts.frozen(sfDir, "tx_demo_s63") { d =>
-        val base = Tables.part(spark, sfDir).select(
-          col("p_partkey").as("k"), col("p_name").as("name"),
-          round(col("p_retailprice") * 100).cast("long").as("price_cents"))
         val nRows = base.count()
         val tb = TxTable.create(spark, d, base, Seq("k"), numBuckets = 8, zoneMapCols = Seq("name"))
         // Sorted rewrite into ~6 range-disjoint files per bucket — the
@@ -1414,7 +1431,6 @@ object Demos {
           tb.compact(0, Seq("name"))
         }
       }
-      val t = TxTable.open(spark, dir, Seq("k"))
       def conn = spark.read.format("graft").load(dir)
       def plannedFiles(preds: Array[Filter]): (Int, Int) = {
         val parts = GraftDataSource.plannedPartitions(dir, preds)
@@ -1429,7 +1445,7 @@ object Demos {
       val bucketPrune = noneParts == 0
 
       val pred = col("name") >= "c" && col("name") < "h"
-      val hashMatch = sameRows(conn.filter(pred), t.snapshot().filter(pred))
+      val hashMatch = sameRows(conn.filter(pred), base.filter(pred))
 
       conn.filter(pred)
         .groupBy("name")

@@ -23,8 +23,7 @@ object Lifecycle {
   }
 
   /** Warehouse root of the catalog demos, made once per JVM. */
-  private lazy val warehouses =
-    java.nio.file.Files.createTempDirectory("graft_gcat").toString
+  private lazy val warehouses = Session.scratchDir("gcat")
 
   /** A [[demo]] with GraftCatalog registered as `gcat_<tag>` over the
     * warehouse `<root>/<tag>`: `body` gets the catalog name and the

@@ -107,7 +107,7 @@ object GraphAnalytics {
         val next = step(g).cache()
         if (round % CheckpointEvery == 0) {
           if (sc.getCheckpointDir.isEmpty)
-            sc.setCheckpointDir(java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
+            sc.setCheckpointDir(Session.scratchDir("checkpoints"))
           next.checkpoint()
           checkpointed ++= Seq(next.vertices, next.edges)
         }

@@ -71,13 +71,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *    CATALYST values per key type (UTF8String / days / micros — so
   *    DATE and TIMESTAMP keys compare correctly against what the reader
   *    materializes), and ship with the bucket's partition; readers drop
-  *    matching rows, which is exactly the native path's anti-join
-  *    semantics for the equality-delete case;
+  *    matching rows — the equality-delete semantics;
   *  - schema evolution: per-file footers are probed once at planning and
   *    each file ships its logical→physical column resolution (rename
   *    ALIASES, ADD-COLUMN DEFAULTS evaluated driver-side to literals,
-  *    absent columns as typed NULL) — the `conform` rules, applied
-  *    per file inside the reader. TIMESTAMP columns honor the parquet
+  *    absent columns as typed NULL), applied per file inside the
+  *    reader. TIMESTAMP columns honor the parquet
   *    logical-type annotation (MICROS native, MILLIS converted, legacy
   *    INT96 — the Spark writer's default — decoded from its Julian-day
   *    layout, NANOS rejected eagerly at planning with a clear message);
@@ -90,9 +89,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Data plane (measured — BASELINE.md notes 64/68):
   * bulk scans read COLUMNAR through Spark's own vectorized parquet
-  * reader (ColumnarBatch straight into whole-stage codegen) — 1.30× the
-  * native `TxTable.snapshot()` path on a data-dominated 4.8M-row scan at
-  * equal parallelism, vs 5.25× for the original Group-per-row reader,
+  * reader (ColumnarBatch straight into whole-stage codegen) — 1.30× a
+  * Spark parquet-source read of the same files on a data-dominated
+  * 4.8M-row scan at equal parallelism (measured when TxTable still read
+  * that way), vs 5.25× for the original Group-per-row reader,
   * which remains the exact-fallback row path for DV'd buckets (the
   * anti-join drops individual rows), change-feed partitions (synthesized
   * metadata columns), empty projections, and any file/type pairing the
@@ -106,6 +106,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `footers read` and `footer cache hits` as SQL plan metrics. The scan
   * parallelism unit is the BUCKET, by design — size bucket counts to the
   * cluster, as the write path's layout intends.
+  *
+  * The one reader of a committed TxTable version: `snapshot()`,
+  * `lookup` and every rewrite read go through [[GraftDataSource.read]],
+  * which builds the relation over a pin the caller passes in.
   *
   * Read-only by design: writes go through the library's transactional
   * protocol (optimistic publish, rebase) — a connector write path that
@@ -124,7 +128,7 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister {
     * re-resolution of the same table re-pins instead of silently serving
     * a stale version (the pin is removed once consumed). */
   private val pinned =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    new java.util.concurrent.ConcurrentHashMap[String, graft.core.TxTable.Pin]()
 
   private def pinKey(options: CaseInsensitiveStringMap): String =
     s"${GraftDataSource.localPath(options.get("path"))}|${options.get("keys")}|" +
@@ -136,18 +140,16 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister {
     graft.core.TxTable.open(SparkSession.active, dir, GraftDataSource.keysFor(dir, options))
   }
 
-  private def versionOf(t: graft.core.TxTable, options: CaseInsensitiveStringMap): Long =
-    Option(options.get("versionAsOf")).map(_.toLong).getOrElse(t.version)
+  private def pinOf(options: CaseInsensitiveStringMap): graft.core.TxTable.Pin = {
+    val t = open(options)
+    t.pin(Option(options.get("versionAsOf")).map(_.toLong).getOrElse(t.version))
+  }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val t = open(options)
-    val v = versionOf(t, options)
-    pinned.put(pinKey(options), v)
-    val schema = t.schemaAt(v)
-    schema.fields.foreach { f =>
-      require(GraftDataSource.supported(f.dataType),
-        s"graft connector does not support column type ${f.dataType.sql} (${f.name})")
-    }
+    val p = pinOf(options)
+    pinned.put(pinKey(options), p)
+    val schema = p.schema
+    schema.fields.foreach(f => GraftDataSource.requireSupported(f))
     if (options.getBoolean("changeFeed", false))
       StructType(schema.fields ++ GraftDataSource.FeedMeta.fields)
     else schema
@@ -157,12 +159,9 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister {
                         properties: JMap[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
     val cached = pinned.remove(pinKey(opts)) // consume: next resolution re-pins
-    val version =
-      if (cached != null) cached.longValue()
-      else versionOf(open(opts), opts) // catalog path without a fresh inferSchema
+    val pin = if (cached != null) cached else pinOf(opts) // catalog path without a fresh inferSchema
     val dir = GraftDataSource.localPath(opts.get("path"))
-    new GraftTable(dir, GraftDataSource.keysFor(dir, opts),
-      schema, version,
+    new GraftTable(dir, GraftDataSource.keysFor(dir, opts), pin,
       opts.getBoolean("changeFeed", false),
       opts.getBoolean("skipLayoutOnly", false))
   }
@@ -186,6 +185,16 @@ private[graft] object GraftDataSource {
     sb.asInstanceOf[SupportsPushDownFilters].pushFilters(filters)
     sb.build()
   }
+
+  /** The rows of pin `p` of the table at `dir` as a DataFrame over the
+    * connector's relation — the read [[graft.core.TxTable]] serves every
+    * snapshot, lookup and rewrite through. The pin is passed in, never
+    * re-read, so a narrowed or synthetic pin reads exactly its entries. */
+  def read(spark: SparkSession, dir: String, keyCols: Seq[String],
+           p: graft.core.TxTable.Pin): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.graftbridge.Bridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new GraftTable(dir, keyCols, p), None, None))
 
   /** The input partitions a [[scanOf]] scan plans. */
   def plannedPartitions(dir: String, filters: Array[Filter] = Array.empty,
@@ -214,10 +223,17 @@ private[graft] object GraftDataSource {
     * partition pushdown): their value conversions are written for
     * TIMESTAMP instants only, so NTZ predicates and aggregates scan. */
   def supported(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | DoubleType | StringType | BooleanType |
+    case LongType | IntegerType | DoubleType | FloatType | StringType | BooleanType |
          DateType | TimestampType | TimestampNTZType => true
     case _ => false
   }
+
+  /** The one type contract for write and read: a table refuses at write
+    * time (create, addColumn, a widening merge) any column the connector
+    * cannot read, with the message the connector gives. */
+  def requireSupported(f: StructField): Unit =
+    require(supported(f.dataType),
+      s"graft connector does not support column type ${f.dataType.sql} (${f.name})")
 
   /** Physical-type codes shipped to readers (per file × logical field). */
   val Absent = 0; val I32 = 1; val I64 = 2; val F64 = 3; val Utf8 = 4
@@ -637,8 +653,8 @@ private[graft] object GraftDataSource {
   }
 }
 
-final class GraftTable(dir: String, keyCols: Seq[String], schema0: StructType,
-                       pinnedVersion: Long, changeFeed: Boolean = false,
+final class GraftTable(dir: String, keyCols: Seq[String], pin: graft.core.TxTable.Pin,
+                       changeFeed: Boolean = false,
                        skipLayoutOnly: Boolean = false,
                        spjCapable: Boolean = false)
   extends Table with SupportsRead
@@ -646,6 +662,10 @@ final class GraftTable(dir: String, keyCols: Seq[String], schema0: StructType,
   with org.apache.spark.sql.connector.catalog.SupportsDelete
   with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
   with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
+
+  private val schema0: StructType =
+    if (changeFeed) StructType(pin.schema.fields ++ GraftDataSource.FeedMeta.fields)
+    else pin.schema
 
   /** SQL `UPDATE` / `MERGE INTO`: the group-based row-level-operation
     * contract with the storage BUCKET as the replacement group — see
@@ -665,8 +685,7 @@ final class GraftTable(dir: String, keyCols: Seq[String], schema0: StructType,
       "MERGE INTO is not supported on row-tracked tables (NOT MATCHED " +
         "inserts cannot draw engine row ids on this path) — UPDATE, or " +
         "the native merge verb, preserve ids and stay available")
-    () => new GraftRowLevelOperation(dir, keyCols, schema0, pinnedVersion,
-      info.command())
+    () => new GraftRowLevelOperation(dir, keyCols, schema0, pin, info.command())
   }
 
   override def name(): String = s"graft.`$dir`"
@@ -758,9 +777,7 @@ final class GraftTable(dir: String, keyCols: Seq[String], schema0: StructType,
     * [[GraftDataSource.bucketTransform]]). */
   override def partitioning(): Array[Transform] =
     if (!spjCapable || changeFeed) Array.empty
-    else Array(GraftDataSource.bucketTransform(
-      graft.core.TxTable.open(SparkSession.active, dir, keyCols)
-        .bucketCountAt(pinnedVersion), keyCols))
+    else Array(GraftDataSource.bucketTransform(pin.buckets, keyCols))
 
   /** Layout metadata as table properties (`SHOW TBLPROPERTIES` through
     * [[GraftCatalog]]): how the table is keyed, bucketed, bloom-indexed
@@ -772,8 +789,8 @@ final class GraftTable(dir: String, keyCols: Seq[String], schema0: StructType,
     val m = new java.util.HashMap[String, String]()
     m.put("format", "graft")
     m.put("merge-keys", keyCols.mkString(","))
-    m.put("version", pinnedVersion.toString)
-    m.put("buckets", t.bucketCountAt(pinnedVersion).toString)
+    m.put("version", pin.v.toString)
+    m.put("buckets", pin.buckets.toString)
     if (t.bloomColumns.nonEmpty) {
       m.put("bloom-columns", t.bloomColumns.mkString(","))
       m.put("bloom-index-bits", t.bloomIndexBits.toString)
@@ -788,14 +805,14 @@ final class GraftTable(dir: String, keyCols: Seq[String], schema0: StructType,
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(dir, keyCols, schema0, pinnedVersion, changeFeed,
+    new GraftScanBuilder(dir, keyCols, schema0, pin, changeFeed,
       skipLayoutOnly, spjCapable,
       startingVersion = Option(options.get("startingVersion")).map(_.toLong).getOrElse(0L),
       ignoreStats = options.getBoolean("ignoreStatsManifest", false))
 }
 
 final class GraftScanBuilder(dir: String, keyCols: Seq[String],
-                             tableSchema: StructType, pinnedVersion: Long,
+                             tableSchema: StructType, pin: graft.core.TxTable.Pin,
                              changeFeed: Boolean = false,
                              skipLayoutOnly: Boolean = false,
                              spjCapable: Boolean = false,
@@ -815,10 +832,6 @@ final class GraftScanBuilder(dir: String, keyCols: Seq[String],
   private var statsRow: Array[Any] = null
   private var statsVia: String = ""
   private var limit: Int = Int.MaxValue
-
-  /** The pinned version, read once for the builder's planning work. */
-  private lazy val pin = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
-    .pin(pinnedVersion)
 
   /** One consolidated-stats read shared by the builder's planning work
     * (partition-exact acceptance, ranged count, aggregate pushdown). */
@@ -1161,8 +1174,7 @@ final class GraftScanBuilder(dir: String, keyCols: Seq[String],
           case _ => false
         })))
     if (cand.isEmpty) return Array.empty
-    val t = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
-    if (!t.everPartitioned) return Array.empty
+    if (!pin.everPartitioned) return Array.empty
     val aliases = pin.aliases
     // (transform, pval, specCol) per file — None = undecidable file.
     // Listing and pspec come from the consolidated stats manifest when
@@ -1317,8 +1329,8 @@ final class GraftScanBuilder(dir: String, keyCols: Seq[String],
   override def build(): Scan =
     if (statsRow != null) new GraftStatsScan(dir, statsSchema, statsRow, statsVia)
     else if (countStarPushed)
-      new GraftCountScan(dir, keyCols, pinnedVersion, ignoreStats)
-    else new GraftScan(dir, keyCols, tableSchema, required, pushed, pinnedVersion,
+      new GraftCountScan(dir, pin, ignoreStats)
+    else new GraftScan(dir, keyCols, tableSchema, required, pushed, pin,
       changeFeed, skipLayoutOnly, spjCapable, limit, startingVersion, dataFilters,
       ignoreStats, rowLevelOp)
 }
@@ -1341,10 +1353,15 @@ private[sources] final class StatsView(tableDir: String, pin: graft.core.TxTable
 
   private val byDir: Map[String, TxTable.BucketStats] =
     if (ignore) Map.empty
-    else TxTable.readStatsManifest(tableDir, pin.v) match {
+    else TxTable.readStatsManifestAt(pin.logDir, pin.v) match {
       case None => Map.empty
       case Some(m) =>
-        pin.layout.flatMap { case (b, (dataDir, _)) => m.get(b).map(dataDir -> _) }
+        // A narrowed or synthetic pin (a rewrite's bucket subset, a diff
+        // side) keeps its version number but not every entry of it, so an
+        // entry is served only when it names the same commit and DVs.
+        pin.layout.flatMap { case (b, (dataDir, _)) =>
+          m.get(b).filter(st => st.commit == pin.entries(b).data && st.dvs == pin.entries(b).dvs)
+            .map(dataDir -> _) }
     }
 
   /** The bucket's parquet listing from metadata — None (no manifest, or
@@ -1423,8 +1440,7 @@ private[sources] final class StatsView(tableDir: String, pin: graft.core.TxTable
 /** Metadata-only COUNT(*): the driver sums footer record counts at
   * planning and ships ONE literal row; Spark's final aggregate folds it
   * (partial-pushdown contract — supportCompletePushDown stays false). */
-final class GraftCountScan(dir: String, keyCols: Seq[String],
-                           pinnedVersion: Long,
+final class GraftCountScan(dir: String, pin: graft.core.TxTable.Pin,
                            ignoreStats: Boolean = false) extends Scan with Batch {
   override def readSchema(): StructType =
     StructType(Seq(StructField("count(*)", LongType, nullable = false)))
@@ -1438,9 +1454,6 @@ final class GraftCountScan(dir: String, keyCols: Seq[String],
     * with zero footer I/O (the Delta/Iceberg log-stats count). Mixed or
     * pre-sidecar layouts fall back to footer record counts per file —
     * still metadata-only, just O(files) instead of O(buckets). */
-  private lazy val pin = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
-    .pin(pinnedVersion)
-
   private lazy val statsView: StatsView = new StatsView(dir, pin, ignoreStats)
 
   private lazy val allSidecars: Boolean =
@@ -1503,7 +1516,7 @@ final class GraftStatsReader(values: Array[Any]) extends PartitionReader[Interna
 
 final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType,
                       required: StructType, pushed: Array[Filter],
-                      pinnedVersion: Long, changeFeed: Boolean = false,
+                      pin: graft.core.TxTable.Pin, changeFeed: Boolean = false,
                       skipLayoutOnly: Boolean = false,
                       spjCapable: Boolean = false,
                       limit: Int = Int.MaxValue,
@@ -1537,11 +1550,6 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
     * pushdown — filters stay residuals, Spark re-evaluates them. */
   private var runtimeFilters: Array[Filter] = Array.empty
 
-  /** The pinned version, read once for this scan's whole planning pass:
-    * layout, bucket count and column record. */
-  private lazy val pin = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
-    .pin(pinnedVersion)
-
   /** One consolidated-stats read for this scan's whole planning pass. */
   private lazy val statsView: StatsView = new StatsView(dir, pin, ignoreStats)
 
@@ -1557,7 +1565,9 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
         Array(org.apache.spark.sql.connector.expressions.Expressions
           .column(GraftDataSource.BucketCol))
       else Array.empty
-    else if (keyCols.length == 1 && !changeFeed)
+    // Only a column the scan outputs: Spark resolves the advertised
+    // attributes against the pruned relation and fails on any other.
+    else if (keyCols.length == 1 && !changeFeed && required.fieldNames.contains(keyCols.head))
       Array(org.apache.spark.sql.connector.expressions.Expressions.column(keyCols.head))
     else Array.empty
   }
@@ -2236,7 +2246,7 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
       skipLayoutOnly, startingVersion)
   }
   override def description(): String =
-    s"GraftScan(dir=$dir, keys=${keyCols.mkString(",")}, version=$pinnedVersion, " +
+    s"GraftScan(dir=$dir, keys=${keyCols.mkString(",")}, version=${pin.v}, " +
       s"pushed=[${pushed.mkString(", ")}], columns=[${required.fieldNames.mkString(",")}]" +
       (if (limit != Int.MaxValue) s", PushedLimit=$limit" else "") +
       (if (dataFilters.nonEmpty)
@@ -2285,7 +2295,6 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
 
   private def doPlanInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
-    val v = pinnedVersion
     val aliases = pin.aliases
     val defaults = pin.defaults
 
@@ -2572,6 +2581,7 @@ private[graft] object GraftVectorReader {
     case (GraftDataSource.I64Ms, TimestampType) => true
     case (GraftDataSource.I96, TimestampType) => true
     case (GraftDataSource.F64, DoubleType) => true
+    case (GraftDataSource.F32, FloatType) => true
     case (GraftDataSource.Utf8, StringType) => true
     case (GraftDataSource.Bool, BooleanType) => true
     case _ => false
@@ -2833,6 +2843,8 @@ final class GraftPartitionReader(p: GraftInputPartition)
         (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
       case (GraftDataSource.F64, DoubleType) => g.getDouble(idx, 0)
       case (GraftDataSource.F32, DoubleType) => g.getFloat(idx, 0).toDouble
+      case (GraftDataSource.F32, FloatType) => g.getFloat(idx, 0)
+      case (GraftDataSource.I32, DoubleType) => g.getInteger(idx, 0).toDouble
       case (GraftDataSource.Utf8, StringType) =>
         UTF8String.fromBytes(g.getBinary(idx, 0).getBytes)
       case (GraftDataSource.Bool, BooleanType) => g.getBoolean(idx, 0)

@@ -51,7 +51,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * passes `_rid` through untouched and stays allowed). */
 final class GraftRowLevelOperation(dir: String, keyCols: Seq[String],
                                    tableSchema: StructType,
-                                   pinnedVersion: Long,
+                                   pin: graft.core.TxTable.Pin,
                                    cmd: RowLevelOperation.Command)
   extends RowLevelOperation {
 
@@ -75,13 +75,12 @@ final class GraftRowLevelOperation(dir: String, keyCols: Seq[String],
   override def command(): RowLevelOperation.Command = cmd
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(dir, keyCols, tableSchema, pinnedVersion,
-      rowLevelOp = this)
+    new GraftScanBuilder(dir, keyCols, tableSchema, pin, rowLevelOp = this)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write =
-        new GraftReplaceWrite(dir, keyCols, info.schema(), pinnedVersion,
+        new GraftReplaceWrite(dir, keyCols, info.schema(), pin,
           GraftRowLevelOperation.this)
     }
 
@@ -93,10 +92,10 @@ final class GraftRowLevelOperation(dir: String, keyCols: Seq[String],
 /** The replacement write: distributed per-bucket parquet files under one
   * fresh commit dir, then a single manifest swap of the affected buckets. */
 final class GraftReplaceWrite(dir: String, keyCols: Seq[String],
-                              writeSchema: StructType, pinnedVersion: Long,
+                              writeSchema: StructType, pin: graft.core.TxTable.Pin,
                               op: GraftRowLevelOperation) extends Write {
   override def toBatch: BatchWrite =
-    new GraftReplaceBatchWrite(dir, keyCols, writeSchema, pinnedVersion, op)
+    new GraftReplaceBatchWrite(dir, keyCols, writeSchema, pin, op)
 }
 
 /** One written file: its bucket, bucket-relative name, and row count
@@ -107,18 +106,16 @@ final case class GraftReplaceCommitMessage(files: Seq[GraftWrittenFile])
 
 final class GraftReplaceBatchWrite(dir: String, keyCols: Seq[String],
                                    writeSchema: StructType,
-                                   pinnedVersion: Long,
+                                   pin: graft.core.TxTable.Pin,
                                    op: GraftRowLevelOperation)
   extends BatchWrite {
 
   private val commitName = s"t-${UUID.randomUUID().toString.take(12)}"
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val t = graft.core.TxTable.open(SparkSession.active, dir, keyCols)
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     GraftBucketWriterFactory(
       java.nio.file.Paths.get(dir, "data", commitName).toString,
-      keyCols.toArray, writeSchema.toDDL, t.bucketCountAt(pinnedVersion))
-  }
+      keyCols.toArray, writeSchema.toDDL, pin.buckets)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.flatMap {
@@ -130,7 +127,7 @@ final class GraftReplaceBatchWrite(dir: String, keyCols: Seq[String],
     // content was read back and rewritten). Buckets the write produced
     // BEYOND that set hold only NOT-MATCHED inserts — replaceBuckets
     // carries their existing content into the commit before the swap.
-    t.replaceBuckets(op.plannedBuckets, commitName, pinnedVersion,
+    t.replaceBuckets(op.plannedBuckets, commitName, pin.v,
       files.map(f => (f.bucket, f.name, f.rows)))
   }
 

@@ -94,7 +94,7 @@ class CatalogSpec extends AnyFunSuite {
           e.getMessage.contains("escapes the warehouse root") ||
           e.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"),
           s"traversal was not rejected: ${e.getMessage}")
-      } finally TxTable.drop(s"$outside/victim")
+      } finally TxTable.drop(outside.toString)
     }
   }
 

@@ -16,13 +16,24 @@ import org.scalatest.funsuite.AnyFunSuite
 class Dsv2Spec extends AnyFunSuite {
   import TestSpark._
 
+  /** The rows every [[freshTable]] is created from. Since `snapshot()`
+    * reads through the connector, the checks below compare the connector
+    * with these rows, with the spec's writes applied as DataFrame
+    * algebra, never with another connector read. */
+  private def nodesBase = Graph.nodes(spark, sf)
+    .filter(col("name") <= "Customer#000000199")
+    .select("name", "house", "acctbal")
+
   private def freshTable(prefix: String): (String, TxTable) = {
     val dir = java.nio.file.Files.createTempDirectory(prefix).toString
-    val base = Graph.nodes(spark, sf)
-      .filter(col("name") <= "Customer#000000199")
-      .select("name", "house", "acctbal")
-    (dir, TxTable.create(spark, dir, base, Seq("name"), numBuckets = 8))
+    (dir, TxTable.create(spark, dir, nodesBase, Seq("name"), numBuckets = 8))
   }
+
+  /** `nodesBase` with `house` set to `to` for names ending in `suffix` —
+    * the rows a promoting merge leaves. */
+  private def promoted(suffix: String, to: String) = nodesBase.select(col("name"),
+    when(col("name").endsWith(suffix), lit(to)).otherwise(col("house")).as("house"),
+    col("acctbal"))
 
   private def connRead(dir: String, extra: (String, String)*) = {
     val r = spark.read.format("graft").option("keys", "name")
@@ -46,13 +57,16 @@ class Dsv2Spec extends AnyFunSuite {
       import spark.implicits._
       t.deleteMergeOnRead(Seq("Customer#000000013").toDF("name"))
 
-      val native = t.snapshot()
+      val written = promoted("7", "PROMOTED")
+        .filter(col("name") =!= "Customer#000000013")
+        .select(col("name"), col("house").as("segment"), col("acctbal"), lit(3).as("tier"))
       val conn = connRead(dir)
-      assert(conn.schema.fieldNames.toSeq == native.schema.fieldNames.toSeq,
+      assert(conn.schema.fieldNames.toSeq == written.schema.fieldNames.toSeq,
         "connector schema must match the evolved logical schema")
+      assert(t.snapshot().schema == conn.schema)
       assert(asSet(conn.select("name", "segment", "tier")) ==
-        asSet(native.select("name", "segment", "tier")),
-        "connector disagrees with the native read path")
+        asSet(written.select("name", "segment", "tier")),
+        "connector disagrees with the rows written")
       assert(!asSet(conn.select("name")).contains("Customer#000000013"),
         "merge-on-read delete not applied by the connector")
     } finally TxTable.drop(dir)
@@ -63,8 +77,12 @@ class Dsv2Spec extends AnyFunSuite {
     try {
       t.merge(t.snapshot().filter(col("name").endsWith("2"))
         .withColumn("acctbal", col("acctbal") + 1000))
-      assert(asSet(connRead(dir, "versionAsOf" -> "0")) == asSet(t.snapshotAt(0)))
-      assert(asSet(connRead(dir)) == asSet(t.snapshotAt(1)))
+      val v1 = nodesBase.withColumn("acctbal",
+        when(col("name").endsWith("2"), col("acctbal") + 1000).otherwise(col("acctbal")))
+      assert(asSet(connRead(dir, "versionAsOf" -> "0")) == asSet(nodesBase))
+      assert(asSet(t.snapshotAt(0)) == asSet(nodesBase))
+      assert(asSet(connRead(dir)) == asSet(v1))
+      assert(asSet(t.snapshotAt(1)) == asSet(v1))
     } finally TxTable.drop(dir)
   }
 
@@ -100,7 +118,7 @@ class Dsv2Spec extends AnyFunSuite {
       t.deleteMergeOnRead(Seq("Customer#000000002").toDF("name"))
       val houses = connRead(dir).select("house") // key column pruned away
       assert(houses.schema.fieldNames.toSeq == Seq("house"))
-      assert(houses.count() == t.snapshot().count(),
+      assert(houses.count() == nodesBase.count() - 1,
         "DV must still apply when the key column is pruned from the output")
     } finally TxTable.drop(dir)
   }
@@ -117,7 +135,7 @@ class Dsv2Spec extends AnyFunSuite {
         assert(viaSql.collect().map(_.getString(1)).length == 1,
           "catalog-registered connector table must serve SQL point reads")
         assert(spark.sql("SELECT count(*) FROM graft_sql_tx").head().getLong(0) ==
-          t.snapshot().count())
+          nodesBase.count())
       } finally spark.sql("DROP TABLE IF EXISTS graft_sql_tx")
     } finally TxTable.drop(dir)
   }
@@ -160,7 +178,7 @@ class Dsv2Spec extends AnyFunSuite {
     try {
       // Clean table: the count scan must be the metadata path.
       val df = connRead(dir).groupBy().count()
-      assert(df.head().getLong(0) == t.snapshot().count())
+      assert(df.head().getLong(0) == nodesBase.count())
       assert(df.queryExecution.executedPlan.toString.contains("GraftCountScan"),
         "clean-table count(*) must plan the footer-metadata scan")
       // DV'd table: pushdown must REFUSE (equality deletes only retire
@@ -171,7 +189,7 @@ class Dsv2Spec extends AnyFunSuite {
       val df2 = connRead(dir).groupBy().count()
       assert(!df2.queryExecution.executedPlan.toString.contains("GraftCountScan"),
         "DV'd count(*) must fall back to scanning")
-      assert(df2.head().getLong(0) == t.snapshot().count())
+      assert(df2.head().getLong(0) == nodesBase.count() - 1)
     } finally TxTable.drop(dir)
   }
 
@@ -184,7 +202,7 @@ class Dsv2Spec extends AnyFunSuite {
       val cmap = new CaseInsensitiveStringMap(opts)
       // Resolve the schema (this pins the version)…
       val schema = provider.inferSchema(cmap)
-      val before = t.snapshot().agg(sum("acctbal")).head().getDouble(0)
+      val before = nodesBase.agg(sum("acctbal")).head().getDouble(0)
       // …then land a commit BETWEEN schema resolution and scan planning.
       t.merge(t.snapshot().withColumn("acctbal", col("acctbal") + 1000))
       val table = provider.getTable(schema, Array.empty, opts)
@@ -217,8 +235,8 @@ class Dsv2Spec extends AnyFunSuite {
         "date-keyed DV must retire exactly the deleted day (Catalyst-to-Catalyst compare)")
       assert(conn.filter(col("day") === lit("2024-01-05").cast("date")).count() == 0,
         "the DV'd date key must be absent from the connector read")
-      assert(asSet(conn) == asSet(t.snapshot()),
-        "connector must agree with the native snapshot on a date-keyed table")
+      assert(asSet(conn) == asSet(base.filter(col("day") =!= lit("2024-01-05").cast("date"))),
+        "connector must serve the rows written, less the deleted day")
     } finally TxTable.drop(dir)
   }
 
@@ -231,7 +249,7 @@ class Dsv2Spec extends AnyFunSuite {
           "FROM range(20)")
       val t = TxTable.create(spark, dir, base, Seq("k"), numBuckets = 4)
       val conn = spark.read.format("graft").option("keys", "k").load(dir)
-      assert(asSet(conn.select("k", "ts")) == asSet(t.snapshot().select("k", "ts")),
+      assert(asSet(conn.select("k", "ts")) == asSet(base.select("k", "ts")),
         "timestamp values must round-trip exactly (INT96 / micros decode)")
     } finally TxTable.drop(dir)
   }
@@ -247,15 +265,16 @@ class Dsv2Spec extends AnyFunSuite {
       val conn = spark.read.format("graft").option("keys", "at").load(dir)
       assert(conn.count() == 23,
         "timestamp-keyed DV must retire exactly the deleted instant")
-      assert(asSet(conn) == asSet(t.snapshot()),
-        "connector must agree with the native snapshot on a timestamp-keyed table")
+      assert(asSet(conn) == asSet(base.filter(
+          col("at") =!= lit("2024-01-01 05:00:00").cast("timestamp"))),
+        "connector must serve the rows written, less the deleted instant")
     } finally TxTable.drop(dir)
   }
 
   test("min/max push to footer statistics; DVs and string columns refuse") {
     val (dir, t) = freshTable("graft_dsv2_minmax")
     try {
-      val native = t.snapshot().agg(min("acctbal"), max("acctbal")).head()
+      val native = nodesBase.agg(min("acctbal"), max("acctbal")).head()
       // Clean table, numeric column: the stats scan must answer.
       val df = connRead(dir).agg(min("acctbal").as("lo"), max("acctbal").as("hi"))
       assert(df.queryExecution.executedPlan.toString.contains("GraftStatsScan"),
@@ -269,18 +288,19 @@ class Dsv2Spec extends AnyFunSuite {
       assert(!s.queryExecution.executedPlan.toString.contains("GraftStatsScan"),
         "string min/max must refuse the stats pushdown")
       assert(s.head().getString(0) ==
-        t.snapshot().agg(min("name")).head().getString(0))
+        nodesBase.agg(min("name")).head().getString(0))
       // Mixed with count(*): still correct whether or not the mix pushes.
       val m2 = connRead(dir).groupBy().agg(
         min("acctbal"), max("acctbal"), count(lit(1)))
-      assert(m2.head().getLong(2) == t.snapshot().count())
+      assert(m2.head().getLong(2) == nodesBase.count())
       // DV'd table: pushdown must refuse and the scan stays exact.
       import spark.implicits._
       t.deleteMergeOnRead(Seq("Customer#000000013").toDF("name"))
       val dvd = connRead(dir).agg(min("acctbal"), max("acctbal"))
       assert(!dvd.queryExecution.executedPlan.toString.contains("GraftStatsScan"),
         "DV'd min/max must fall back to scanning")
-      val nat2 = t.snapshot().agg(min("acctbal"), max("acctbal")).head()
+      val nat2 = nodesBase.filter(col("name") =!= "Customer#000000013")
+        .agg(min("acctbal"), max("acctbal")).head()
       val got2 = dvd.head()
       assert(got2.getDouble(0) == nat2.getDouble(0) &&
         got2.getDouble(1) == nat2.getDouble(1))
@@ -440,7 +460,7 @@ class Dsv2Spec extends AnyFunSuite {
       val joined = fact.join(connRead(dir), "name")
       assert(joined.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
         "a small graft table with reported stats must auto-broadcast")
-      assert(joined.count() == t.snapshot().count(),
+      assert(joined.count() == nodesBase.count(),
         "broadcast-joined read lost rows")
     } finally TxTable.drop(dir)
   }
@@ -485,7 +505,7 @@ class Dsv2Spec extends AnyFunSuite {
     try {
       // Tables are SELF-DESCRIBING since the keys sidecar: a keys-less
       // read resolves the merge keys from keys.txt.
-      assert(spark.read.format("graft").load(dir).count() == t.snapshot().count(),
+      assert(spark.read.format("graft").load(dir).count() == nodesBase.count(),
         "sidecar tables must serve keys-less reads")
       // A pre-sidecar (legacy) table still refuses without explicit keys.
       java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "_log", "keys.txt"))
@@ -494,6 +514,34 @@ class Dsv2Spec extends AnyFunSuite {
       }
       val bad = StructType.fromDDL("a ARRAY<INT>")
       assert(!graft.sources.GraftDataSource.supported(bad.fields.head.dataType))
+    } finally TxTable.drop(dir)
+  }
+
+  test("one type contract: a table refuses at write time any column the connector cannot read") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_types").toString
+    try {
+      val arrays = spark.sql("SELECT CAST(id AS STRING) AS k, array(CAST(id AS INT)) AS xs FROM range(4)")
+      val e = intercept[IllegalArgumentException] {
+        TxTable.create(spark, s"$dir/arr", arrays, Seq("k"), numBuckets = 2)
+      }
+      assert(e.getMessage.contains("xs") && e.getMessage.contains("ARRAY<INT>"), e.getMessage)
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "arr", "_log")),
+        "a refused create must publish nothing")
+      // FLOAT is in the contract: it reads on the vectorized path and, after
+      // a merge-on-read delete, on the row path.
+      val floats = spark.sql("SELECT CAST(id AS STRING) AS k, CAST(id / 4 AS FLOAT) AS f FROM range(8)")
+      val t = TxTable.create(spark, s"$dir/flt", floats, Seq("k"), numBuckets = 2)
+      assert(t.snapshot().schema("f").dataType == org.apache.spark.sql.types.FloatType)
+      assert(asSet(t.snapshot()) == asSet(floats))
+      import spark.implicits._
+      t.deleteMergeOnRead(Seq("3").toDF("k"))
+      assert(asSet(t.snapshot()) == asSet(floats.filter(col("k") =!= "3")))
+      // addColumn and a widening merge refuse an unreadable type too.
+      intercept[IllegalArgumentException](t.addColumn("m", "MAP<STRING,INT>", "map('a', 1)"))
+      val v = t.version
+      intercept[IllegalArgumentException](
+        t.merge(spark.sql("SELECT '9' AS k, CAST(2.5 AS FLOAT) AS f, array(1) AS ys")))
+      assert(t.version == v, "a refused merge must publish nothing")
     } finally TxTable.drop(dir)
   }
 
@@ -506,14 +554,14 @@ class Dsv2Spec extends AnyFunSuite {
       val t = TxTable.create(spark, dir, base, Seq("k"), numBuckets = 4)
       // No DVs → the scan vectorizes; Bool must be a supported code.
       val conn = spark.read.format("graft").load(dir)
-      assert(asSet(conn) == asSet(t.snapshot()),
-        "boolean table disagrees with the native snapshot (vectorized path)")
+      assert(asSet(conn) == asSet(base),
+        "boolean table disagrees with the rows written (vectorized path)")
       assert(conn.filter(col("flag")).count() == 22)
       // A DV forces the row path — Bool must convert there too.
       t.deleteMergeOnRead(Seq("k0").toDF("k"))
       val rowPath = spark.read.format("graft").load(dir)
-      assert(asSet(rowPath) == asSet(t.snapshot()),
-        "boolean table disagrees with the native snapshot (row path)")
+      assert(asSet(rowPath) == asSet(base.filter(col("k") =!= "k0")),
+        "boolean table disagrees with the rows written (row path)")
       assert(rowPath.filter(col("flag")).count() == 21)
     } finally TxTable.drop(dir)
   }
@@ -596,12 +644,12 @@ class Dsv2Spec extends AnyFunSuite {
           "row-group skipping not applied")
 
       // Row path (DV present): same skipping through the filtered
-      // ParquetReader; result must still agree with the native snapshot.
+      // ParquetReader; result must still agree with the rows written.
       val victim = base.filter(col("v") === 3).select("k").head().getString(0)
       t.deleteMergeOnRead(Seq(victim).toDF("k"))
       val row = spark.read.format("graft").load(dir).filter(col("v") === 3)
-      assert(asSet(row) == asSet(t.snapshot().filter(col("v") === 3)),
-        "row-path filtered result disagrees with the native snapshot")
+      assert(asSet(row) == asSet(base.filter(col("v") === 3 && col("k") =!= victim)),
+        "row-path filtered result disagrees with the rows written")
       val rowEmitted = scanRows(spark.read.format("graft").load(dir)
         .filter(col("v") === 3))
       assert(rowEmitted == expected - 1,
@@ -854,10 +902,10 @@ class Dsv2Spec extends AnyFunSuite {
           .select("v").collect()).isFailure, "poison had no teeth")
       } finally backups.foreach { case (p, orig) => java.nio.file.Files.write(p, orig) }
 
-      // Native read path (leaf-dir expansion) agrees with the connector,
-      // and the pre-partitioning v0 era remains time-travelable.
+      // The unpruned read serves every row written, and the
+      // pre-partitioning v0 era remains time-travelable.
       assert(t.snapshot().count() == 2000)
-      assert(asSet(spark.read.format("graft").load(dir)) == asSet(t.snapshot()))
+      assert(asSet(spark.read.format("graft").load(dir)) == asSet(base))
       assert(t.snapshotAt(0).count() == 0)
 
       // EVOLUTION: clear the spec — the next merge writes flat; both
@@ -1609,7 +1657,7 @@ class Dsv2Spec extends AnyFunSuite {
       val cnt = connNoStats.groupBy().count()
       assert(cnt.queryExecution.executedPlan.toString.contains("manifest row counts"),
         "clean COUNT(*) should plan the sidecar-count path")
-      val native = t.snapshot().count()
+      val native = nodesBase.count()
       assert(cnt.head().getLong(0) == native, "metadata count wrong")
 
       // Poison one sidecar: the metadata count must REFLECT the poke —
@@ -1960,7 +2008,7 @@ class Dsv2Spec extends AnyFunSuite {
         "the first plan after a commit must find its files cached")
       // The same counts reach Spark's SQL plan metrics.
       val df = connRead(dir)
-      assert(asSet(df) == asSet(t.snapshot()))
+      assert(asSet(df) == asSet(promoted("7", "PROMOTED")))
       val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
         .collect(df.queryExecution.executedPlan) {
           case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }

@@ -232,12 +232,14 @@ class EtlSpec extends AnyFunSuite {
 
   test("S3 writeCanonical: overwrite produces partitioned edges readable back") {
     val out = java.nio.file.Files.createTempDirectory("graft_canon").toString
-    GraphBuilder.writeCanonical(spark, sf, out)
-    GraphBuilder.writeCanonical(spark, sf, out) // S3: overwrite, not append
-    val edges = spark.read.parquet(s"$out/edges")
-    val expected = graft.core.Graph.allEdges(spark, sf).count()
-    assert(edges.count() == expected)
-    assert(edges.filter(col("relType") === "BELONGS_TO").count() ==
-      graft.core.Graph.nodes(spark, sf).count())
+    try {
+      GraphBuilder.writeCanonical(spark, sf, out)
+      GraphBuilder.writeCanonical(spark, sf, out) // S3: overwrite, not append
+      val edges = spark.read.parquet(s"$out/edges")
+      val expected = graft.core.Graph.allEdges(spark, sf).count()
+      assert(edges.count() == expected)
+      assert(edges.filter(col("relType") === "BELONGS_TO").count() ==
+        graft.core.Graph.nodes(spark, sf).count())
+    } finally graft.core.TxTable.drop(out)
   }
 }

@@ -60,8 +60,24 @@ class LintSpec extends AnyFunSuite {
       s"plain spark.read.parquet outside FileMeta: ${offending.map(_._1).distinct.mkString(", ")}")
     // The pattern must still see the reads it allows, or it checks nothing.
     assert(plain.exists(_._1 == "graft/core/FileMeta.scala"))
-    assert(plain.exists { case (f, c) => f == "graft/core/TxTable.scala" && c.contains("mergeSchema") })
+    assert(plain.exists { case (f, c) => f == "graft/sources/FileFormats.scala" && c.contains("mergeSchema") })
     assert(reads.exists(_._2.contains(".schema")))
+  }
+
+  test("TxTable reads a committed version only through the graft connector") {
+    // One engine reads a pinned version: snapshots, lookups and every
+    // rewrite go through TxTable.read, the connector's scan over the pin.
+    // The only parquet reads left are of the table's own unpublished
+    // commit dirs (the bloom build and the row-level commit's checks),
+    // through FileMeta.parquet.
+    val sparkRead = """\bread\s*\.\s*(?:parquet|format|schema|options?|load|table)\b""".r
+    val tx = sources.toMap.apply("graft/core/TxTable.scala")
+    assert(!tx.contains("spark.read") && sparkRead.findFirstIn(tx).isEmpty,
+      "TxTable reads through Spark's reader")
+    assert(!tx.contains("mergeSchema"), "TxTable merges footer schemas")
+    assert("""FileMeta\s*\.\s*parquet\s*\(""".r.findAllMatchIn(tx).size == 2)
+    // The pattern must still see the reads it forbids here.
+    assert(sources.exists { case (_, src) => sparkRead.findFirstIn(src).isDefined })
   }
 
   test("only FileMeta builds a Hadoop Configuration from the defaults") {

@@ -33,14 +33,17 @@ class MlSpec extends AnyFunSuite {
   }
 
   test("model save/load round-trips predictions (S8)") {
-    val dir = Files.createTempDirectory("graft_model").toString + "/rf"
-    model.write.overwrite().save(dir)
-    val loaded = PipelineModel.load(dir)
-    val a = model.transform(features).select("name", "predicted_house")
-      .collect().map(_.toString).sorted
-    val b = loaded.transform(features).select("name", "predicted_house")
-      .collect().map(_.toString).sorted
-    assert(a.sameElements(b))
+    val root = Files.createTempDirectory("graft_model").toString
+    try {
+      val dir = root + "/rf"
+      model.write.overwrite().save(dir)
+      val loaded = PipelineModel.load(dir)
+      val a = model.transform(features).select("name", "predicted_house")
+        .collect().map(_.toString).sorted
+      val b = loaded.transform(features).select("name", "predicted_house")
+        .collect().map(_.toString).sorted
+      assert(a.sameElements(b))
+    } finally graft.core.TxTable.drop(root)
   }
 
   test("survival: output schema and value domain") {

@@ -3,12 +3,25 @@ package graft
 import graft.sources.FileFormats
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Interchange sources/sinks: properties the DuckDB oracle can't see —
   * the physical pruning and the per-value exactness of round-trips. */
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   import TestSpark._
+
+  /** The temp dirs this spec made, dropped once it is done. */
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  private def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    made.add(d)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try made.forEach(d => graft.core.TxTable.drop(d)) finally super.afterAll()
 
   test("CSV round-trip preserves every nation row exactly") {
     val back = FileFormats.csvRoundTrip(spark, sf)
@@ -36,13 +49,13 @@ class SourcesSpec extends AnyFunSuite {
 
   test("PERMISSIVE JSON read quarantines corrupt lines, drops none") {
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft_bad_records")
-    Files.writeString(Paths.get(dir.toString, "part.json"),
+    val dir = tempDir("graft_bad_records")
+    Files.writeString(Paths.get(dir, "part.json"),
       """{"id": 1, "v": 1.5}
         |{"id": 2 "v": BROKEN
         |{"id": 3, "v": 3.0}
         |""".stripMargin)
-    val df = FileFormats.readJsonlPermissive(spark, dir.toString,
+    val df = FileFormats.readJsonlPermissive(spark, dir,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.DoubleType))))
@@ -88,7 +101,7 @@ class SourcesSpec extends AnyFunSuite {
     // DPP needs a real (file-backed) filtered dim — a LocalRelation's
     // filter constant-folds away and leaves no selective predicate to
     // derive the pruning subquery from.
-    val dimPath = java.nio.file.Files.createTempDirectory("graft_dpp_dim").toString
+    val dimPath = tempDir("graft_dpp_dim")
     Seq(("click", 1), ("view", 0), ("error", 0), ("signup", 0), ("purchase", 0))
       .toDF("etype", "flag").write.mode("overwrite").parquet(dimPath)
     val dim = spark.read.parquet(dimPath).filter(col("flag") === 1)
@@ -221,9 +234,6 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   // ------------------------------------------- schema from the footer cache
-
-  private def tempDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   /** The footer-cache read's schema equals Spark's inferred one; the
     * schema-only probe equals its data part (`partitionCols` excluded). */

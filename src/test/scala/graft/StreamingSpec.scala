@@ -146,21 +146,23 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sc = spark.sqlContext
     val base = Files.createTempDirectory("graft_upsert").toString
-    val dir = base + "/nodes"
-    val ckpt = base + "/ckpt"
-    val mem = MemoryStream[(String, String)]
-    val updates = mem.toDF().toDF("name", "house")
-    mem.addData(("alice", "BUILDING"), ("bob", "MACHINERY"))
-    StreamingOps.foreachBatchUpsert(spark, updates, dir, ckpt)
-    mem.addData(("alice", "FURNITURE")) // second batch overwrites alice
-    StreamingOps.foreachBatchUpsert(spark, updates, dir, ckpt)
-    val t = graft.core.TxTable.open(spark, dir, Seq("name"))
-    val state = t.snapshot().collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(state == Map("alice" -> "FURNITURE", "bob" -> "MACHINERY"))
-    // batch 1 = create (v0), batch 2 = one MERGE commit (v1); the
-    // checkpoint guarantees a batch is merged exactly once.
-    assert(t.version == 1L)
+    try {
+      val dir = base + "/nodes"
+      val ckpt = base + "/ckpt"
+      val mem = MemoryStream[(String, String)]
+      val updates = mem.toDF().toDF("name", "house")
+      mem.addData(("alice", "BUILDING"), ("bob", "MACHINERY"))
+      StreamingOps.foreachBatchUpsert(spark, updates, dir, ckpt)
+      mem.addData(("alice", "FURNITURE")) // second batch overwrites alice
+      StreamingOps.foreachBatchUpsert(spark, updates, dir, ckpt)
+      val t = graft.core.TxTable.open(spark, dir, Seq("name"))
+      val state = t.snapshot().collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(state == Map("alice" -> "FURNITURE", "bob" -> "MACHINERY"))
+      // batch 1 = create (v0), batch 2 = one MERGE commit (v1); the
+      // checkpoint guarantees a batch is merged exactly once.
+      assert(t.version == 1L)
+    } finally graft.core.TxTable.drop(base)
   }
 
   test("medallion hop kill-and-resume: no duplicated and no lost upstream commits") {

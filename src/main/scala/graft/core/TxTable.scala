@@ -277,26 +277,16 @@ final class TxTable private (spark: SparkSession, dir: String,
   /** Primary-key point read — the O(k) serving path a keyed table owes
     * its users: each key tuple's hash names its bucket exactly, so a
     * k-key probe opens AT MOST k bucket dirs of the head manifest (DVs
-    * applied), never scanning the table. Driver-local keys (every
-    * `Seq(...).toDF` probe) push into the connector's scan as `IN`
-    * filters, where the hash tier prunes to their buckets and the bloom
-    * and row-group tiers refute further, with no probe job; a composite
-    * key's per-column lists name a superset of its tuples, so a semi
-    * join with the local keys keeps the answer exact. A distributed
-    * probe prunes by the buckets its keys hash into ([[lookupBuckets]],
-    * one job), then semi-joins. The count is read from the manifest, so
-    * the same pruning serves every layout the table has evolved through. */
+    * applied), never scanning the table. The buckets come from
+    * [[lookupBuckets]] under the same pin (no job for a driver-local
+    * probe), the connector reads only those, and a semi join with the
+    * probe keeps the answer exact. The count is read from the
+    * manifest, so the same pruning serves every layout the table has
+    * evolved through. */
   def lookup(keys: DataFrame): DataFrame = {
     val p = pin(version)
     val probe = keys.select(keyCols.map(col): _*)
-    localRows(probe) match {
-      case Some(rows) =>
-        val pushed = read(p).filter(keyCols.zipWithIndex.map { case (k, i) =>
-          col(k).isin(rows.map(_.get(i)).distinct.toSeq: _*) }.reduce(_ && _))
-        if (keyCols.length == 1) pushed
-        else pushed.join(probe, keyCols, "left_semi")
-      case None => read(p, lookupBuckets(probe, p)).join(probe, keyCols, "left_semi")
-    }
+    read(p, lookupBuckets(probe, p)).join(probe, keyCols, "left_semi")
   }
 
   /** CHECK constraints (Delta's `ALTER TABLE ADD CONSTRAINT` shape):

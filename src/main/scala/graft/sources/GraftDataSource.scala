@@ -148,11 +148,8 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val p = pinOf(options)
     pinned.put(pinKey(options), p)
-    val schema = p.schema
-    schema.fields.foreach(f => GraftDataSource.requireSupported(f))
-    if (options.getBoolean("changeFeed", false))
-      StructType(schema.fields ++ GraftDataSource.FeedMeta.fields)
-    else schema
+    p.schema.fields.foreach(f => GraftDataSource.requireSupported(f))
+    GraftDataSource.tableSchema(p, options.getBoolean("changeFeed", false))
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -302,6 +299,11 @@ private[graft] object GraftDataSource {
   val FeedMeta: StructType = StructType(Seq(
     StructField("_commit_version", LongType, nullable = false),
     StructField("_change_type", StringType, nullable = false)))
+
+  /** The schema a scan of `pin` serves: the pin's record, plus the
+    * change feed's metadata columns when it reads the feed. */
+  def tableSchema(pin: graft.core.TxTable.Pin, changeFeed: Boolean): StructType =
+    if (changeFeed) StructType(pin.schema.fields ++ FeedMeta.fields) else pin.schema
 
   /** All parquet files under a bucket dir, ANY depth — commits written
     * under a declared partition transform nest them in `_p=` dirs. */
@@ -663,9 +665,7 @@ final class GraftTable(dir: String, keyCols: Seq[String], pin: graft.core.TxTabl
   with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
   with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
 
-  private val schema0: StructType =
-    if (changeFeed) StructType(pin.schema.fields ++ GraftDataSource.FeedMeta.fields)
-    else pin.schema
+  private val schema0: StructType = GraftDataSource.tableSchema(pin, changeFeed)
 
   /** SQL `UPDATE` / `MERGE INTO`: the group-based row-level-operation
     * contract with the storage BUCKET as the replacement group — see
@@ -685,7 +685,7 @@ final class GraftTable(dir: String, keyCols: Seq[String], pin: graft.core.TxTabl
       "MERGE INTO is not supported on row-tracked tables (NOT MATCHED " +
         "inserts cannot draw engine row ids on this path) — UPDATE, or " +
         "the native merge verb, preserve ids and stay available")
-    () => new GraftRowLevelOperation(dir, keyCols, schema0, pin, info.command())
+    () => new GraftRowLevelOperation(dir, keyCols, pin, info.command())
   }
 
   override def name(): String = s"graft.`$dir`"
@@ -805,14 +805,14 @@ final class GraftTable(dir: String, keyCols: Seq[String], pin: graft.core.TxTabl
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(dir, keyCols, schema0, pin, changeFeed,
+    new GraftScanBuilder(dir, keyCols, pin, changeFeed,
       skipLayoutOnly, spjCapable,
       startingVersion = Option(options.get("startingVersion")).map(_.toLong).getOrElse(0L),
       ignoreStats = options.getBoolean("ignoreStatsManifest", false))
 }
 
 final class GraftScanBuilder(dir: String, keyCols: Seq[String],
-                             tableSchema: StructType, pin: graft.core.TxTable.Pin,
+                             pin: graft.core.TxTable.Pin,
                              changeFeed: Boolean = false,
                              skipLayoutOnly: Boolean = false,
                              spjCapable: Boolean = false,
@@ -823,6 +823,7 @@ final class GraftScanBuilder(dir: String, keyCols: Seq[String],
   with SupportsPushDownRequiredColumns with SupportsPushDownAggregates
   with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
 
+  private val tableSchema = GraftDataSource.tableSchema(pin, changeFeed)
   private var required: StructType = tableSchema
   private var pushed: Array[Filter] = Array.empty
   private var dataFilters: Array[Filter] = Array.empty
@@ -1330,7 +1331,7 @@ final class GraftScanBuilder(dir: String, keyCols: Seq[String],
     if (statsRow != null) new GraftStatsScan(dir, statsSchema, statsRow, statsVia)
     else if (countStarPushed)
       new GraftCountScan(dir, pin, ignoreStats)
-    else new GraftScan(dir, keyCols, tableSchema, required, pushed, pin,
+    else new GraftScan(dir, keyCols, required, pushed, pin,
       changeFeed, skipLayoutOnly, spjCapable, limit, startingVersion, dataFilters,
       ignoreStats, rowLevelOp)
 }
@@ -1514,7 +1515,7 @@ final class GraftStatsReader(values: Array[Any]) extends PartitionReader[Interna
   override def close(): Unit = ()
 }
 
-final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType,
+final class GraftScan(dir: String, keyCols: Seq[String],
                       required: StructType, pushed: Array[Filter],
                       pin: graft.core.TxTable.Pin, changeFeed: Boolean = false,
                       skipLayoutOnly: Boolean = false,
@@ -1528,6 +1529,8 @@ final class GraftScan(dir: String, keyCols: Seq[String], tableSchema: StructType
   with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
   with SupportsReportStatistics
   with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
+
+  private val tableSchema = GraftDataSource.tableSchema(pin, changeFeed)
 
   /** V2 runtime filtering — the variant Spark's row-level-operation
     * GROUP filter requires (`RowLevelOperationRuntimeGroupFiltering`

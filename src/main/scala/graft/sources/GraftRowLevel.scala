@@ -50,7 +50,6 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * NOT-MATCHED inserts cannot draw engine ids on this path — UPDATE
   * passes `_rid` through untouched and stays allowed). */
 final class GraftRowLevelOperation(dir: String, keyCols: Seq[String],
-                                   tableSchema: StructType,
                                    pin: graft.core.TxTable.Pin,
                                    cmd: RowLevelOperation.Command)
   extends RowLevelOperation {
@@ -75,7 +74,7 @@ final class GraftRowLevelOperation(dir: String, keyCols: Seq[String],
   override def command(): RowLevelOperation.Command = cmd
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(dir, keyCols, tableSchema, pin, rowLevelOp = this)
+    new GraftScanBuilder(dir, keyCols, pin, rowLevelOp = this)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {

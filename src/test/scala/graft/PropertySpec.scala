@@ -800,7 +800,11 @@ class PropertySpec extends AnyFunSuite {
         (0 until 20).map(i => f"K$i%02d" -> i.toLong).toDF("k", "v"),
         Seq("k"), numBuckets = 4)
       t.merge(Seq("K03" -> 30L).toDF("k", "v")) // v1
-      val cleanRows = t.snapshot().collect().map(_.mkString("|")).sorted.toSeq
+      // The rows written so far, kept on the driver: every read below is
+      // a connector read, so each compares with this model.
+      var written = (0 until 20).map(i => f"K$i%02d" -> i.toLong).toMap + ("K03" -> 30L)
+      def model: Seq[String] = written.toSeq.map { case (k, v) => s"$k|$v" }.sorted
+      val cleanRows = model
 
       // (1) ORPHAN COMMIT DIR — a writer died after writing data, before
       // publishing. Readers must not see its rows; vacuum reclaims it.
@@ -823,6 +827,7 @@ class PropertySpec extends AnyFunSuite {
       F.writeString(tmp, "#buckets=4\n#op=merge\n0\tt-deadbeef0002")
       assert(t.version == headBefore, "a temp manifest must never resolve as a version")
       val v2 = t.merge(Seq("K04" -> 40L).toDF("k", "v"))
+      written += "K04" -> 40L
       assert(v2 == headBefore + 1, "publish blocked by a stale temp manifest")
       F.setLastModifiedTime(tmp, java.nio.file.attribute.FileTime.fromMillis(1L))
       t.vacuum(retainMs = 0L)
@@ -846,7 +851,7 @@ class PropertySpec extends AnyFunSuite {
           s"sidecar-less table must refuse with a clear message, got: ${err.getMessage}")
         val viaOption = spark.read.format("graft")
           .option("keys", "k").load(dir)
-        assert(viaOption.count() == t.snapshot().count(),
+        assert(viaOption.collect().map(_.mkString("|")).sorted.toSeq == model,
           "explicit keys option must still read a sidecar-less table")
       } finally F.writeString(sidecar, sidecarText)
 
@@ -859,9 +864,8 @@ class PropertySpec extends AnyFunSuite {
       assert(gone.getMessage.contains("vacuumed"),
         s"retired version must fail fast as vacuumed, got: ${gone.getMessage}")
       assert(t.version == head, "vacuum must never move the head")
-      val survivors = t.snapshot().collect().map(_.mkString("|")).sorted
-      assert(survivors.length == 20 && survivors.exists(_.startsWith("K04|40")),
-        "head snapshot must replay fully after aggressive vacuum")
+      val survivors = t.snapshot().collect().map(_.mkString("|")).sorted.toSeq
+      assert(survivors == model, "head snapshot must replay fully after aggressive vacuum")
       // And the table stays WRITABLE: the protocol resumes cleanly.
       t.merge(Seq("K06" -> 60L).toDF("k", "v"))
       assert(t.snapshot().filter(col("k") === "K06").head().getLong(1) == 60L)
@@ -1170,8 +1174,14 @@ class PropertySpec extends AnyFunSuite {
       t.widenColumn("qty", "BIGINT")
       t.merge(Seq("K01" -> 5000000000L).toDF("k", "qty"))
       t.addColumn("tier", "STRING", "'std'")
-      val expected = rows(t.snapshot())
+      // The rows written, as DataFrame algebra over `base`: every read
+      // below is a connector read, so each compares with this.
+      def widened(k: String, qty: Long): Seq[String] = rows(base.select($"k",
+        when($"k" === k, lit(qty)).otherwise($"qty".cast("bigint")).as("qty"),
+        lit("std").as("tier")))
+      val expected = widened("K01", 5000000000L)
       assert(expected.size == 40 && expected.contains("K01|5000000000|std"))
+      assert(rows(t.snapshot()) == expected, "widened table reads differently")
       assert(viaGraft(s"$dir/main") == expected)
       val b = t.branch("audit")
       assert(rows(b.snapshot()) == expected, "branch of a widened table reads differently")
@@ -1185,8 +1195,8 @@ class PropertySpec extends AnyFunSuite {
       staged.widenColumn("qty", "BIGINT")
       staged.merge(Seq("K02" -> 6000000000L).toDF("k", "qty"))
       staged.addColumn("tier", "STRING", "'std'")
-      val branchHead = rows(staged.snapshot())
-      assert(branchHead.contains("K02|6000000000|std"))
+      val branchHead = widened("K02", 6000000000L)
+      assert(rows(staged.snapshot()) == branchHead, "widen staged on a branch reads differently")
       t2.fastForward("wid")
       assert(rows(t2.snapshot()) == branchHead, "fastForward dropped the branch's widen")
       assert(viaGraft(s"$dir/ff") == branchHead)

@@ -25,13 +25,18 @@ import org.apache.spark.sql.functions._
   *
   * The derivations here are *lazy plans*: filters on downstream queries
   * push through the unions into the self-joins, so a one-person expansion
-  * never builds the full clique. Person↔person edge READS — single-person
-  * lookups, the house subgraph (`src ∈ prefix`, `dst ∈ house set`),
-  * full-scan aggregations — go to `personEdgesU`: the undirected closure
-  * written ONCE per scale factor as a bucketed-by-src table (the 100 TB
-  * layout this header always promised), so no repeated query pays the
-  * clique expansion, src lookups prune the bucket listing, and src-keyed
-  * aggregations shuffle nothing. The consumers that still derive edges
+  * never builds the full clique. Every rule but ROMANTIC_WITH is a
+  * predicate on the endpoints' (house, family) pair, so the two Winder
+  * endpoints read no edge at all: they answer from the node table's
+  * (house, family) cells and the romance list (`GraphOps.winderTopK`,
+  * `GraphOps.winderDepth2`). The other person↔person edge READS —
+  * single-person lookups, the house subgraph (`src ∈ prefix`,
+  * `dst ∈ house set`), full-scan aggregations — go to `personEdgesU`:
+  * the undirected closure written ONCE per scale factor as a
+  * bucketed-by-src table (the 100 TB layout this header always
+  * promised), so no repeated query pays the clique expansion, src
+  * lookups prune the bucket listing, and src-keyed aggregations shuffle
+  * nothing. The consumers that still derive edges
   * live: the artifact's own build; node-predicate restricted rules the
   * artifact cannot prune on (the nid-bounded FRIEND_OF / SAME_FAMILY
   * graphs of the GraphX analytics, the one-family sample); single-rule
@@ -218,19 +223,12 @@ object Graph {
     * int node id (`nid` — names are `Customer#%09d(nid)`, so id order ==
     * name order) and deduplicated to DISTINCT (src_id, dst_id) pairs,
     * materialized once per scale factor as a graft TxTable keyed by
-    * `src_id` (32 buckets, sorted-compacted on src_id). This is the
-    * ADJACENCY-INDEX twin of [[personEdgesU]] for multi-hop traversals:
-    *  - the DSv2 connector serves it with static AND RUNTIME
-    *    (join-derived, SupportsRuntimeFiltering) bucket pruning — a
-    *    broadcast frontier prunes the next hop's scan to the buckets the
-    *    frontier ids hash into, the index-complete distance-2 plan;
-    *  - int pairs decode ~5× cheaper than the string-pair artifact and
-    *    hash-aggregate without string comparisons — the same
-    *    dictionary-encode step every graph engine (incl. GraphX) performs
-    *    at ingest;
-    *  - pairs are pre-deduplicated across relTypes, so "distinct
-    *    neighbors" aggregates become plain counts (no per-group distinct
-    *    state).
+    * `src_id` (32 buckets, sorted-compacted on src_id): an adjacency
+    * index whose scans the DSv2 connector prunes statically and at
+    * runtime (a join-derived `In` on `src_id` plans only the buckets the
+    * ids hash into). No engine query reads it (the depth-2 winder
+    * answers from the node table's cells); PlanSpec's runtime-pruning
+    * certificate and perfbench's `graph_serve` set-up build it.
     * Returns the table directory for `spark.read.format("graft")`. */
   def personEdgeIds(spark: SparkSession, sfDir: String): String =
     graft.etl.Artifacts.ensureTx(spark, sfDir, "edges_und_ids",

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.core.{FileMeta, Graph}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's query surface (`app.py`), re-expressed as declarative
@@ -15,40 +15,34 @@ object GraphOps {
     * (app.py:206-245): given a friend set, score candidates by shared
     * FRIEND_OF neighbors, exclude the friends themselves, top-k.
     *
-    * Physical shape at scale: the friend set is a literal → broadcast to the
-    * edge scan; aggregation is partial+final hash agg keyed by candidate;
-    * the top-k is `TakeOrderedAndProject` (no global sort).
+    * FRIEND_OF is the house clique, so a candidate's common friends are
+    * the friends in its house: their count and sorted names are per-house
+    * driver literals from [[houseIndex]]. The endpoint is one node scan:
+    * the members of the friends' houses (an `In` pushed into the scan)
+    * minus the friends, with the top-k a `TakeOrderedAndProject`. No edge
+    * is read, and a warm call runs no job before execution.
     */
   def winderTopK(spark: SparkSession, sfDir: String, friendKeys: Seq[Int], k: Int = 3): DataFrame = {
-    // Friend names are literals (P6 exact lookups): an `isin` literal filter
-    // pushes THROUGH the undirected union into both sides of the same-house
-    // self-join and down to the parquet scan, so the expansion is
-    // |friends| × house-size, never the full clique. (A friends-DF join
-    // could not push: Catalyst won't infer scan filters from a join side.)
-    val friendNames = friendKeys.map(Graph.fullName)
-    // The artifact read replaces the live FRIEND_OF derivation: an `isin`
-    // on the bucket column prunes to |friends| bucket files, and relType
-    // filtering rides the dictionary — same pushed shape, no expansion.
-    val fu = Graph.personEdgesU(spark, sfDir)
-      .filter(col("relType") === "FRIEND_OF")
-      .filter(col("src").isin(friendNames: _*))        // J1 expand 1-hop typed
-    val topk = fu.select(col("src").as("f_name"), col("dst").as("candidate"))
-      .filter(!col("candidate").isin(friendNames: _*)) // P2 anti-filter
-      .groupBy("candidate")
-      .agg(count(lit(1)).as("common_friends"),         // A2 score
-           array_join(array_sort(collect_list("f_name")), ",").as("shared_with")) // A4
-      .withColumn("likelihood", col("common_friends") * 10) // U6 display transform (index.html:149)
-      .orderBy(desc("common_friends"), asc("candidate")) // T1 top-k
-      .limit(k)
-    // Payload parity (app.py:222-227): the reference returns the candidate's
-    // house and image with each match card. Joined AFTER the top-k so the
-    // k-row result broadcasts against nodes — the expansion is unchanged.
-    val n = Graph.nodes(spark, sfDir)
+    val idx = houseIndex(spark, sfDir)
+    val friendNames = friendKeys.map(Graph.fullName).distinct
+    val isFriend = friendNames.toSet
+    // Index order is Spark's string order: each house's friends come out
+    // as `array_sort` sorts them.
+    val byHouse = idx.names.indices
+      .filter(i => isFriend(idx.names(i)) && idx.houses(i) != null)
+      .groupMap(idx.houses)(idx.names)
+    val common = typedLit(byHouse.map { case (h, fs) => h -> fs.size.toLong })
+    val shared = typedLit(byHouse.map { case (h, fs) => h -> fs.mkString(",") })
+    Graph.nodes(spark, sfDir)
+      .filter(col("house").isin(byHouse.keys.toSeq: _*) &&    // J1: the friends' houses
+        !col("name").isin(friendNames: _*))                    // P2 anti-filter
       .select(col("name").as("candidate"), col("house"),
-        Graph.imageUrl(col("name")).as("image"))
-    broadcast(topk).join(n, "candidate")
-      .select("candidate", "house", "image", "common_friends", "shared_with", "likelihood")
-      .orderBy(desc("common_friends"), asc("candidate"))
+        Graph.imageUrl(col("name")).as("image"),              // payload parity (app.py:222-227)
+        element_at(common, col("house")).as("common_friends"), // A2 score
+        element_at(shared, col("house")).as("shared_with"))    // A4
+      .withColumn("likelihood", col("common_friends") * 10)    // U6 display transform (index.html:149)
+      .orderBy(desc("common_friends"), asc("candidate"))       // T1 top-k
+      .limit(k)
   }
 
   /** Depth-2 winder (j1_winder_depth2) — the extension SURVEY §2.9 names:
@@ -58,63 +52,65 @@ object GraphOps {
     * distinct any-type neighbors (connectors; friends themselves
     * excluded); a candidate is a node at distance EXACTLY 2 — reached
     * through some connector, itself outside F ∪ D1 — scored by the
-    * number of DISTINCT connectors, tie-broken by name, top-k, with the
-    * flagship's payload join and ×10 display transform.
+    * number of DISTINCT connectors, tie-broken by id, top-k, with the
+    * flagship's payload and ×10 display transform. `via_first` is the
+    * connector of least id (id order == name order: names are
+    * `Customer#%09d(nid)`).
     *
-    * Physical shape at scale — two probes of the DICTIONARY-ENCODED
-    * adjacency index ([[Graph.personEdgeIds]]: distinct int (src_id,
-    * dst_id) pairs as a graft TxTable, src_id-keyed, 32 buckets), NO
-    * clique expansion and no driver-side collect:
-    *  - hop 1 is a literal-pruned connector probe — the `isin` on the
-    *    merge key pushes as an In filter and the scan plans |F| of 32
-    *    buckets;
-    *  - hop 2 joins the D1 frontier back to the index as a BROADCAST
-    *    hash join, and because the frontier plan carries a selective
-    *    predicate, Spark injects a dynamic-pruning subquery
-    *    (SupportsRuntimeFiltering): the build side's ids are handed to
-    *    the scan BEFORE partitions are planned, so the hop-2 read plans
-    *    only the buckets the frontier hashes into — the index-complete
-    *    distance-2 plan (PlanSpec pins the dynamicpruning expression on
-    *    the hop-2 scan). At the test SFs the flagship's D1 covers ~65%
-    *    of all nodes (same-house clique data), so the prune admits every
-    *    bucket; on a sparse 100 TB graph the same plan reads |D1|-of-N
-    *    buckets. The exactly-distance-2 exclusion is a broadcast ANTI
-    *    join on the same bounded frontier.
-    *  - pairs are pre-deduplicated, so the connector score is a plain
-    *    codegen'd count over int ids (the r13 string-pair
-    *    `countDistinct` dominated the entry's wall time: 7-9 s → ~2 s),
-    *    partial+final agg, TakeOrderedAndProject top-k; names/payload
-    *    join AFTER the top-k against the k-row broadcast (id order ==
-    *    name order — names are Customer#%09d(nid) — so ordering and
-    *    min-connector semantics survive encoding). */
+    * Group algebra over the node table; no edge is read. Every rule but
+    * the curated romances is a predicate on the endpoints' (house,
+    * family) [[Cell]]s, so the driver computes from [[houseIndex]]:
+    *  - D1 per cell, as its count and least id: in a cell adjacent to one
+    *    of F's cells every member outside F, elsewhere only F's romance
+    *    partners;
+    *  - each candidate cell's score, the sum of D1's counts over the cells
+    *    adjacent to it, and its `via`, the least of their least ids. The
+    *    candidate cells are the index's cells adjacent to none of F's:
+    *    every member of an adjacent cell is in F ∪ D1;
+    *  - a correction for the persons the romance list matches (≤ 24):
+    *    members of F ∪ D1 drop out, the others add their D1 partners that
+    *    no rule already makes neighbors.
+    * These reach one node scan as map literals keyed by cell and by nid
+    * (the same generated code for every friend set), which keeps the
+    * persons scoring above 0 and takes the top-k by
+    * `TakeOrderedAndProject`. A warm call runs no job before execution. */
   def winderDepth2(spark: SparkSession, sfDir: String, friendKeys: Seq[Int], k: Int = 3): DataFrame = {
-    val dir = Graph.personEdgeIds(spark, sfDir)
-    def art = spark.read.format("graft").load(dir)
-    // No materialization: keeping D1 a live plan (selective isin → In) is
-    // what lets PartitionPruning inject the runtime-filter subquery on the
-    // hop-2 scan; the broadcast exchange evaluates it once and the DPP
-    // subquery REUSES that broadcast (reuseBroadcastOnly default).
-    val d1 = art.filter(col("src_id").isin(friendKeys: _*))  // hop-1 pruned probe
-      .select(col("dst_id").as("b")).distinct()
-      .filter(!col("b").isin(friendKeys: _*))                // connectors strictly new
-    val topk = art.join(broadcast(d1), col("src_id") === col("b")) // hop-2 runtime-pruned pass
-      .filter(!col("dst_id").isin(friendKeys: _*))
-      .join(broadcast(d1.select(col("b").as("dst_id"))), Seq("dst_id"), "left_anti")
-      .groupBy(col("dst_id"))
-      .agg(count(lit(1)).as("common_connectors"),  // distinct pairs → count == countDistinct
-        min("src_id").as("via_id"))
-      .withColumn("likelihood", col("common_connectors") * 10)
-      .orderBy(desc("common_connectors"), asc("dst_id"))
+    val idx = houseIndex(spark, sfDir)
+    val f = friendKeys.flatMap(key => idx.at(key.toLong)).toSet
+    val fCells = f.map(idx.cell)
+    val near = idx.cells.keySet.filter(c => fCells.exists(c.adjacent))
+    val romF = f.flatMap(idx.romance.getOrElse(_, Nil)) -- f
+    def inD1(i: Int): Boolean = !f(i) && (near(idx.cell(i)) || romF(i))
+    def least(is: Iterable[Int]): Option[Int] = is.minByOption(idx.nids)
+    val d1 = idx.cells.flatMap { case (c, ms) =>
+      val in = if (near(c)) ms.filterNot(f) else ms.filter(romF)
+      in.headOption.map(first => c -> (in.length.toLong, first))
+    }
+    val scores = (idx.cells.keySet -- near).flatMap { c =>
+      val via = d1.filter(_._1.adjacent(c)).values
+      least(via.map(_._2)).map(v => c -> (via.map(_._1).sum, v))
+    }.toMap
+    val romance = idx.romance.map { case (i, ps) =>
+      val base = scores.get(idx.cell(i))
+      val extra = ps.filter(p => inD1(p) && !idx.cell(p).adjacent(idx.cell(i)))
+      val score = if (f(i) || inD1(i)) 0L else base.fold(0L)(_._1) + extra.size
+      idx.nids(i) -> (score, least(base.map(_._2) ++ extra))
+    }
+    def lookup[V: scala.reflect.runtime.universe.TypeTag](byNid: Map[Long, V], byCell: Map[Long, V]): Column =
+      coalesce(element_at(typedLit(byNid), col("nid")), element_at(typedLit(byCell), idx.cellKey))
+    val score = lookup(romance.map { case (n, (s, _)) => n -> s },
+      scores.map { case (c, (s, _)) => idx.key(c) -> s })
+    val via = lookup(romance.collect { case (n, (s, Some(v))) if s > 0 => n -> idx.names(v) },
+      scores.map { case (c, (_, v)) => idx.key(c) -> idx.names(v) })
+    Graph.nodes(spark, sfDir)
+      .select(col("nid"), col("name").as("candidate"), col("house"),
+        Graph.imageUrl(col("name")).as("image"),
+        score.as("common_connectors"), via.as("via_first"))
+      .filter(col("common_connectors") > 0)
+      .orderBy(desc("common_connectors"), asc("nid"))
       .limit(k)
-    // Payload decode: two passes of the (column-pruned) node table against
-    // the k-row broadcast — the small side broadcasts at any scale.
-    val n = Graph.nodes(spark, sfDir)
-    val withCand = broadcast(topk)
-      .join(n.select(col("nid").as("dst_id"), col("name").as("candidate"),
-        col("house"), Graph.imageUrl(col("name")).as("image")), "dst_id")
-    broadcast(withCand)
-      .join(n.select(col("nid").as("via_id"), col("name").as("via_first")), "via_id")
-      .select("candidate", "house", "image", "common_connectors", "via_first", "likelihood")
+      .select(col("candidate"), col("house"), col("image"), col("common_connectors"),
+        col("via_first"), (col("common_connectors") * 10).as("likelihood"))
       .orderBy(desc("common_connectors"), asc("candidate"))
   }
 
@@ -265,30 +261,70 @@ object GraphOps {
   private[graft] def housePrefix(spark: SparkSession, sfDir: String, houses: Seq[String],
                                  limit: Int): (Seq[String], Seq[String]) = {
     val idx = houseIndex(spark, sfDir)
-    val set = houses.toSet
+    val set = houses.toSet - null // the index holds null-house persons too
     val inSet = idx.names.indices.filter(i => set(idx.houses(i)))
     val members = inSet.map(idx.names)
     val acc = inSet.scanLeft(0L)((a, i) => a + math.max(idx.sizes(idx.houses(i)) - 1, 1))
     (members.indices.takeWhile(acc(_) < limit).map(members), members)
   }
 
-  /** Every person name in Spark's (binary) string order with its house,
-    * and each house's size: the driver-side input of [[houseSubgraph]]'s
-    * prefix rule. */
-  private final class HouseIndex(val names: Array[String], val houses: Array[String]) {
-    val sizes: Map[String, Int] = houses.groupMapReduce(identity)(_ => 1)(_ + _)
+  /** A person's (house, family = nid % FamilyMod) cell. Every
+    * person↔person rule but the curated romances is a predicate on the
+    * two endpoints' cells. */
+  private final case class Cell(house: String, family: Long) {
+    /** Whether two distinct persons in these cells are neighbors:
+      * FRIEND_OF joins equal non-null houses, SAME_FAMILY equal families,
+      * ENEMY_OF the two enemy houses. */
+    def adjacent(o: Cell): Boolean =
+      (house != null && house == o.house) || family == o.family ||
+        (house == Graph.EnemyHouseA && o.house == Graph.EnemyHouseB) ||
+        (house == Graph.EnemyHouseB && o.house == Graph.EnemyHouseA)
+  }
+
+  /** Every person in Spark's (binary) string order of name, with house
+    * (null for none) and nid, and what the driver-side plans read from
+    * it: each house's size ([[houseSubgraph]]'s prefix rule), and each
+    * [[Cell]]'s members and the romance partners (the Winder endpoints).
+    * Persons are named by their position in `names`. */
+  private final class HouseIndex(val names: Array[String], val houses: Array[String],
+                                 val nids: Array[Long]) {
+    val sizes: Map[String, Int] = houses.filter(_ != null).groupMapReduce(identity)(_ => 1)(_ + _)
+    private val byNid: Array[Int] = names.indices.sortBy(nids).toArray
+    private val sortedNids: Array[Long] = byNid.map(nids)
+    def cell(i: Int): Cell = Cell(houses(i), nids(i) % Graph.FamilyMod)
+    /** The person of id `nid`, if any. */
+    def at(nid: Long): Option[Int] =
+      Some(java.util.Arrays.binarySearch(sortedNids, nid)).filter(_ >= 0).map(byNid)
+    /** Each cell's members, ascending by nid. */
+    val cells: Map[Cell, Array[Int]] = byNid.groupBy(cell)
+    /** ROMANTIC_WITH partners, matched on the names as
+      * [[Graph.romanticWithAmong]] matches them (equality-or-contains). */
+    val romance: Map[Int, Seq[Int]] = {
+      def matching(k: Int) =
+        names.indices.filter(i => names(i).contains(Graph.keyPat(k)))
+      Graph.Romances.flatMap { case (x, y) =>
+        for (a <- matching(x); b <- matching(y); e <- Seq(a -> b, b -> a)) yield e
+      }.groupMap(_._1)(_._2).map { case (i, ps) => i -> ps.distinct }
+    }
+    /** The non-null houses; house i's ordinal in a cell key is i + 1, no house's 0. */
+    private val houseNames: Array[String] = sizes.keys.toArray.sorted
+    /** `c`'s key: ordinal × 2·FamilyMod + family, distinct per cell as
+      * |family| < FamilyMod. */
+    def key(c: Cell): Long = (houseNames.indexOf(c.house) + 1) * 2L * Graph.FamilyMod + c.family
+    /** The same key as a column of the node table. */
+    def cellKey: Column =
+      coalesce(array_position(typedLit(houseNames), col("house")), lit(0L)) * (2L * Graph.FamilyMod) +
+        col("nid") % Graph.FamilyMod
   }
 
   /** [[HouseIndex]] of the corpus, derived once per `customer.parquet`
     * identity ([[FileMeta.derived]]): one collect on a miss, none after. */
   private def houseIndex(spark: SparkSession, sfDir: String): HouseIndex =
     FileMeta.derived[HouseIndex]("houseIndex", Seq(s"$sfDir/customer.parquet"),
-      i => 64L + i.names.iterator.map(n => 96L + 2L * n.length).sum) {
-      val rows = Graph.nodes(spark, sfDir).filter(col("house").isNotNull)
-        .select("name", "house").collect()
-        .map(r => (r.getString(0), r.getString(1)))
-        .sortBy(r => org.apache.spark.unsafe.types.UTF8String.fromString(r._1))
-      new HouseIndex(rows.map(_._1), rows.map(_._2))
+      i => 64L + i.names.iterator.map(n => 128L + 2L * n.length).sum) {
+      val rows = Graph.nodes(spark, sfDir).select("name", "house", "nid").collect()
+        .sortBy(r => org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)))
+      new HouseIndex(rows.map(_.getString(0)), rows.map(_.getString(1)), rows.map(_.getLong(2)))
     }
 
   /** J5 — houses LEFT JOIN members, preserving empty houses

@@ -23,7 +23,7 @@ class ConcurrencySpec extends AnyFunSuite {
   }
 
   test("concurrent identical interactive queries return identical results") {
-    val names = Seq("j1_winder_topk", "j2_expand_1hop", "p3_search_ci")
+    val names = Seq("j1_winder_topk", "j1_winder_depth2", "j2_expand_1hop", "p3_search_ci")
     def run(name: String): Seq[String] =
       SparkEntry.queries(name)(spark, sf)
         .collect().map(_.mkString("|")).sorted.toSeq

@@ -38,10 +38,13 @@ class PlanSpec extends AnyFunSuite {
       s"bucketed sides re-shuffled:\n$p")
   }
 
-  test("j4 house subgraph: warm build runs no job; prefix prunes node scan and edge buckets") {
+  /** `body`'s result and the Spark jobs it started. Listener events are
+    * async: the bus is drained before `body` (late events of earlier work
+    * are dropped) and after it, each time polling until the job count is
+    * stable for 500 ms (bounded at 5 s), instead of hoping one fixed sleep
+    * drains the bus on a loaded machine. */
+  private def withJobs[T](body: => T): (T, Seq[String]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val houses = Seq("BUILDING", "AUTOMOBILE")
-    graft.ops.GraphOps.houseSubgraph(spark, sf, houses) // warm: artifact + driver index
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val l = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
@@ -49,12 +52,7 @@ class PlanSpec extends AnyFunSuite {
         ()
       }
     }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val df = graft.ops.GraphOps.houseSubgraph(spark, sf, houses)
-      // Listener events are async: poll until the job count is stable for
-      // 500 ms (bounded at 5 s) instead of hoping one fixed sleep drains
-      // the bus on a loaded machine.
+    def settle(): Unit = {
       var last = -1
       var stableMs = 0
       var waited = 0
@@ -62,46 +60,71 @@ class PlanSpec extends AnyFunSuite {
         Thread.sleep(250); waited += 250
         if (jobs.size == last) stableMs += 250 else { stableMs = 0; last = jobs.size }
       }
-      // The prefix comes from the cached driver index and the edges from
-      // the build-once artifact: nothing runs before execution.
-      assert(jobs.isEmpty,
-        s"houseSubgraph ran ${jobs.size} jobs during a warm construction: ${jobs.toArray.toSeq}")
-      // The prefix-name literals are pushed into the node scan…
-      val p = plan(df)
-      assert(p.contains("PushedFilters: [In(c_name") || p.contains("In(c_name,"),
-        s"prefix literals not pushed into the scan:\n$p")
-      // …and into the bucketed edges_und scan, whose listing they prune.
-      val edgeScans = df.queryExecution.sparkPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec
-          if f.tableIdentifier.exists(_.table.contains("edges_und")) => f
-      }
-      assert(edgeScans.size == 1, s"expected one edges_und scan:\n$p")
-      val scan = edgeScans.head
-      assert(scan.metadata("PushedFilters").contains("In(src,"), s"src not pushed: ${scan.metadata}")
-      val selected = scan.optionalBucketSet.map(_.cardinality()).getOrElse(32)
-      assert(selected < 32, s"edges_und scan selected $selected of 32 buckets")
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      settle(); jobs.clear()
+      val r = body
+      settle()
+      (r, jobs.toArray.toSeq.map(_.toString))
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  test("j1 depth-2 winder: runtime-pruned hop 2 over the id index, broadcast joins only") {
-    val df = graft.ops.GraphOps.winderDepth2(spark, sf, SparkEntry.WinderFriends)
-    df.collect() // executedPlan: DPP subqueries materialize at execution
+  test("j4 house subgraph: warm build runs no job; prefix prunes node scan and edge buckets") {
+    val houses = Seq("BUILDING", "AUTOMOBILE")
+    graft.ops.GraphOps.houseSubgraph(spark, sf, houses) // warm: artifact + driver index
+    val (df, jobs) = withJobs(graft.ops.GraphOps.houseSubgraph(spark, sf, houses))
+    // The prefix comes from the cached driver index and the edges from
+    // the build-once artifact: nothing runs before execution.
+    assert(jobs.isEmpty,
+      s"houseSubgraph ran ${jobs.size} jobs during a warm construction: $jobs")
+    // The prefix-name literals are pushed into the node scan…
+    val p = plan(df)
+    assert(p.contains("PushedFilters: [In(c_name") || p.contains("In(c_name,"),
+      s"prefix literals not pushed into the scan:\n$p")
+    // …and into the bucketed edges_und scan, whose listing they prune.
+    val edgeScans = df.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+        if f.tableIdentifier.exists(_.table.contains("edges_und")) => f
+    }
+    assert(edgeScans.size == 1, s"expected one edges_und scan:\n$p")
+    val scan = edgeScans.head
+    assert(scan.metadata("PushedFilters").contains("In(src,"), s"src not pushed: ${scan.metadata}")
+    val selected = scan.optionalBucketSet.map(_.cardinality()).getOrElse(32)
+    assert(selected < 32, s"edges_und scan selected $selected of 32 buckets")
+  }
+
+  /** The Winder endpoints' plan: a warm construction runs no job; the
+    * only scan is the node table's (no edge artifact); no shuffle join or
+    * cross join; the top-k is a TakeOrderedAndProject; execution runs at
+    * most `maxJobs` jobs. */
+  private def nodeTablePlan(maxJobs: Int)(build: => DataFrame): Unit = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    build.collect() // warm: the driver index
+    val (df, built) = withJobs(build)
+    assert(built.isEmpty, s"a warm construction ran ${built.size} jobs: $built")
+    val (_, ran) = withJobs(df.collect())
     val p = df.queryExecution.executedPlan.toString
-    // Hop 1 probes the dictionary-encoded adjacency index with the friend
-    // ids PUSHED (In on the merge key → |F|-of-32 bucket listing).
-    assert(p.contains("tx_edges_und_ids"), s"id-index scan missing:\n$p")
-    assert(p.contains("In(src_id"), s"hop-1 friend ids not pushed:\n$p")
-    // Hop 2 is a broadcast hash join whose D1 frontier Spark hands to the
-    // scan as a dynamic-pruning subquery (SupportsRuntimeFiltering) — the
-    // index-complete distance-2 plan: on a sparse graph the hop-2 read
-    // plans |D1|-of-32 buckets instead of the full artifact.
-    assert(p.contains("dynamicpruning"),
-      s"hop-2 scan not runtime-pruned (no DPP subquery):\n$p")
-    assert(p.contains("BroadcastHashJoin"), s"hop-2 join not broadcast:\n$p")
+    assert(ran.size <= maxJobs, s"execution ran ${ran.size} jobs (at most $maxJobs): $ran\n$p")
+    val scans = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.getName).mkString(",")
+      case s: SparkPlan if s.nodeName.contains("Scan") && !s.nodeName.contains("LocalTableScan") =>
+        s.nodeName
+    }
+    assert(scans == Seq("customer.parquet"), s"expected the customer scan alone, got $scans:\n$p")
+    assert(!p.contains("edges_und"), s"an edge artifact is read:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct") &&
-      !p.contains("BroadcastNestedLoopJoin"),
-      s"depth-2 winder must not shuffle or cross-join:\n$p")
+      !p.contains("BroadcastNestedLoopJoin"), s"shuffle join or cross join:\n$p")
     assert(p.contains("TakeOrderedAndProject"), s"top-k not TakeOrdered:\n$p")
+  }
+
+  test("j1 winder: one node scan, no edge artifact, one job") {
+    nodeTablePlan(maxJobs = 1)(graft.ops.GraphOps.winderTopK(spark, sf, SparkEntry.WinderFriends))
+  }
+
+  test("j1 depth-2 winder: one node scan, no edge artifact, two jobs at most") {
+    nodeTablePlan(maxJobs = 2)(graft.ops.GraphOps.winderDepth2(spark, sf, SparkEntry.WinderFriends))
   }
 
   test("j1 depth-2 winder: a sparse frontier ACTUALLY prunes hop-2 buckets at runtime") {
